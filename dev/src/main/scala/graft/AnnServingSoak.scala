@@ -19,7 +19,7 @@ import graft.operators.Similarity
   *     — the "what the index buys" numbers, exact-recall@5 of both
   *     compressed paths alongside.
   *
-  * `sbt "runMain graft.AnnServingSoak [nVecs]"` — one JSON line.
+  * `sbt "dev/runMain graft.AnnServingSoak [nVecs]"` — one JSON line.
   */
 object AnnServingSoak {
   def main(args: Array[String]): Unit = {

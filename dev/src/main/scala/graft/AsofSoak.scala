@@ -11,7 +11,7 @@ import graft.operators.Windows
   * superlinear at 100× is exactly the one task sorting the hot key's
   * entire history (the q53/session soak finding, replayed for as-of).
   *
-  * `sbt "runMain graft.AsofSoak [nRows]"` — one JSON line.
+  * `sbt "dev/runMain graft.AsofSoak [nRows]"` — one JSON line.
   */
 object AsofSoak {
   def main(args: Array[String]): Unit = {

@@ -32,7 +32,7 @@ import org.apache.spark.sql.expressions.Window
   *  - a replayed batch is skipped (returns false) and changes
   *    nothing.
   *
-  * `sbt "runMain graft.BoilerplateStreamSoak"` — one JSON line.
+  * `sbt "dev/runMain graft.BoilerplateStreamSoak"` — one JSON line.
   */
 object BoilerplateStreamSoak {
   def main(args: Array[String]): Unit = {

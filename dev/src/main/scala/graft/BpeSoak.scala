@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *    boundaries must agree token-for-token.
   *
   * Deterministic fixture (md5 of id arithmetic, no RNG).
-  * `sbt "runMain graft.BpeSoak"` — one JSON line.
+  * `sbt "dev/runMain graft.BpeSoak"` — one JSON line.
   */
 object BpeSoak {
   def main(args: Array[String]): Unit = {

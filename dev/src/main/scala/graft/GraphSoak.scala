@@ -20,7 +20,7 @@ import graft.operators.Graph
   *     full rebuild over base ∪ batch (BIGINT recurrence — exceptAll
   *     in both directions over all 1 M+ nodes).
   *
-  * `sbt "runMain graft.GraphSoak [nNodes] [degree]"` — one JSON line.
+  * `sbt "dev/runMain graft.GraphSoak [nNodes] [degree]"` — one JSON line.
   */
 object GraphSoak {
   def main(args: Array[String]): Unit = {

@@ -27,7 +27,7 @@ import graft.operators.{Dedup, HeavyHitters, Sampling}
   *   - priority sample: 20M docs over 100 groups, batch = 100k docs
   *     with 1000× weights that genuinely evict stored winners.
   *
-  * `sbt "runMain graft.IncrementalSoak"` — one JSON line.
+  * `sbt "dev/runMain graft.IncrementalSoak"` — one JSON line.
   */
 object IncrementalSoak {
   def main(args: Array[String]): Unit = {

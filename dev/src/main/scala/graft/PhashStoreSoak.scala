@@ -22,7 +22,7 @@ import graft.operators.{DedupSuite, Multimodal, StoreCompaction}
   * variants 0–5 of each 8-image family are corpus, 6–7 are batch, so
   * cross pairs are guaranteed in every batch).
   *
-  * `sbt "runMain graft.PhashStoreSoak [nTotal]"` — one JSON line.
+  * `sbt "dev/runMain graft.PhashStoreSoak [nTotal]"` — one JSON line.
   */
 object PhashStoreSoak {
   def main(args: Array[String]): Unit = {

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump the optimized physical plan of every contract query
   * to PLANS.md — reviewable evidence that filters push down, small
-  * sides broadcast, and aggregates are partial (`sbt "runMain
+  * sides broadcast, and aggregates are partial (`sbt "dev/runMain
   * graft.PlanDump"`). */
 object PlanDump {
   def main(args: Array[String]): Unit = {

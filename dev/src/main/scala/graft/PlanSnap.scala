@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * frame (the gate's output side) — the eager phases are profiled with
   * QueryProfile instead.
   *
-  * `sbt "runMain graft.PlanSnap <tag> <q1,q2,...> [sfDir] [outDir]"`
+  * `sbt "dev/runMain graft.PlanSnap <tag> <q1,q2,...> [sfDir] [outDir]"`
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {

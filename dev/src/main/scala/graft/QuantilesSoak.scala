@@ -19,7 +19,7 @@ import graft.operators.Quantiles.Quantile
   *     skewed group's 45M rows sorted by ONE task.
   *
   * Deterministic fixture (id arithmetic, no RNG).
-  * `sbt "runMain graft.QuantilesSoak"` — one JSON line.
+  * `sbt "dev/runMain graft.QuantilesSoak"` — one JSON line.
   */
 object QuantilesSoak {
   def main(args: Array[String]): Unit = {
@@ -150,7 +150,7 @@ object QuantilesSoak {
   *     measured, not hidden.
   *
   * Deterministic fixture (id arithmetic, no RNG).
-  * `sbt "runMain graft.ManyGroupsQuantilesSoak"` — one JSON line.
+  * `sbt "dev/runMain graft.ManyGroupsQuantilesSoak"` — one JSON line.
   */
 object ManyGroupsQuantilesSoak {
   def main(args: Array[String]): Unit = {

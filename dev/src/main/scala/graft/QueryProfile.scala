@@ -2,24 +2,20 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
-/** Dev profiling harness for the c5 boilerplate-ingest gate (judge
-  * r15 item 5): runs the gate body once warm and prints PER-JOB wall
-  * times with their job descriptions, so the gate's cost decomposes
-  * into build / fold / vacuum / compaction and fixed-latency tax.
-  * `sbt "runMain graft.C5Profile [sfDir]"`. */
-object C5Profile {
+/** Dev profiling harness for ANY gated query: runs the named query
+  * once warm and prints PER-JOB wall times with their job
+  * descriptions / call sites, so a gate's cost decomposes into named
+  * phases and fixed-latency tax.
+  * `sbt "dev/runMain graft.QueryProfile <query> [sfDir]"`. */
+object QueryProfile {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    require(args.nonEmpty, "usage: QueryProfile <queryName> [sfDir]")
+    val name = args(0)
+    val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = Sessions.local(32)
     spark.sparkContext.setLogLevel("WARN")
-    // group key = job description, falling back to the CALL SITE
-    // when no description is set (not "?": undescribed jobs would
-    // all collapse into one bucket). Held as a (group, callSite)
-    // tuple — a delimited string would fragment any group whose
-    // description happened to contain the delimiter.
-    final case class JobKey(group: String, callSite: String)
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, JobKey)]()
-    val done = new scala.collection.mutable.ArrayBuffer[(Int, Double, JobKey)]()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+    val done = new scala.collection.mutable.ArrayBuffer[(Int, Double, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val callSite =
@@ -29,7 +25,7 @@ object C5Profile {
         val group =
           Option(js.properties.getProperty("spark.job.description"))
             .getOrElse(callSite)
-        jobs.put(js.jobId, (js.time, JobKey(group, callSite)))
+        jobs.put(js.jobId, (js.time, group))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val st = jobs.get(je.jobId)
@@ -41,21 +37,21 @@ object C5Profile {
     def runOnce(tag: String): Double = {
       done.synchronized(done.clear())
       val t0 = System.nanoTime()
-      SparkEntry.queries("c5_boilerplate_ingest")(spark, dir).count()
+      SparkEntry.queries(name)(spark, dir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(400) // listener bus drain
       val snap = done.synchronized(done.toList)
-      println(f"== $tag: ${sec}%.2f s wall, ${snap.size} jobs, " +
+      println(f"== $name $tag: ${sec}%.2f s wall, ${snap.size} jobs, " +
         f"${snap.map(_._2).sum}%.2f s summed job time ==")
-      snap.groupBy(_._3.group).toSeq
+      snap.groupBy(_._3).toSeq
         .map { case (d, js) => (d, js.size, js.map(_._2).sum) }
         .sortBy(-_._3)
         .foreach { case (d, n, s) =>
           println(f"  ${s}%6.2f s  $n%3d jobs  $d")
         }
-      if (sys.env.contains("C5_PROFILE_JOBS"))
-        snap.sortBy(_._1).foreach { case (id, s, k) =>
-          println(f"    job $id%4d  ${s}%6.3f s  ${k.group} @ ${k.callSite}")
+      if (sys.env.contains("QUERY_PROFILE_JOBS"))
+        snap.sortBy(_._1).foreach { case (id, s, d) =>
+          println(f"    job $id%4d  ${s}%6.3f s  $d")
         }
       sec
     }

@@ -16,7 +16,7 @@ import graft.operators.RangeJoin
   *   bin), so total pairs = 3·n − 3·P (the first bin's events see 1
   *   range, the second bin's 2).
   *
-  * `sbt "runMain graft.RangeJoinSoak [nRanges] [perBin]"`.
+  * `sbt "dev/runMain graft.RangeJoinSoak [nRanges] [perBin]"`.
   */
 object RangeJoinSoak {
   def main(args: Array[String]): Unit = {

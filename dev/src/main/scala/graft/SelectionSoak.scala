@@ -29,7 +29,7 @@ import graft.operators.{Sampling, Similarity}
   *     64 weight rows); the final top-k plans as
   *     TakeOrderedAndProject, never a global Sort.
   *
-  * `sbt "runMain graft.SelectionSoak [nDocs] [nVecs]"` — one JSON line.
+  * `sbt "dev/runMain graft.SelectionSoak [nDocs] [nVecs]"` — one JSON line.
   */
 object SelectionSoak {
   def main(args: Array[String]): Unit = {

@@ -18,7 +18,7 @@ import graft.operators.{Marts, Merge, Skew, TopK, Windows}
   * groupBy/window plans at cluster scale and the reason Skew.saltedAgg
   * and AQE skew handling exist).
   *
-  * `sbt "runMain graft.Soak [nRows]"` — prints one JSON line with
+  * `sbt "dev/runMain graft.Soak [nRows]"` — prints one JSON line with
   * per-operator seconds.
   */
 object Soak {

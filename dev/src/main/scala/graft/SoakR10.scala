@@ -39,7 +39,7 @@ import graft.operators.{Marts, Sampling}
   *     (no state store — the property that makes the shape viable at
   *     100 TB/day), and the micro-batch plans must broadcast the dim.
   *
-  * `sbt "runMain graft.RoundTenSoak [nRows]"` — one JSON line.
+  * `sbt "dev/runMain graft.RoundTenSoak [nRows]"` — one JSON line.
   */
 object RoundTenSoak {
   def main(args: Array[String]): Unit = {

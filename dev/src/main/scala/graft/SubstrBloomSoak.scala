@@ -12,7 +12,7 @@ import graft.operators.{BloomSide, DedupSuite}
   * full store scan (batch keys cover all buckets); the bloom store's
   * fold cost should DROP with batch size as the sidecar skips
   * buckets none of the batch's keys can touch.
-  * `sbt "runMain graft.SubstrBloomSoak [nDocs]"` — one JSON line. */
+  * `sbt "dev/runMain graft.SubstrBloomSoak [nDocs]"` — one JSON line. */
 object SubstrBloomSoak {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(32)

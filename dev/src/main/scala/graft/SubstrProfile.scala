@@ -9,7 +9,7 @@ import graft.operators.DedupSuite
   * (1M-doc corpus, 10k-doc batch) and prints PER-JOB wall times for
   * the fold vs the full recompute, so the fold's cost can be
   * attributed to corpus-proportional vs batch-proportional vs
-  * fixed-latency jobs. `sbt "runMain graft.SubstrProfile [nDocs]"`.
+  * fixed-latency jobs. `sbt "dev/runMain graft.SubstrProfile [nDocs]"`.
   */
 object SubstrProfile {
   def main(args: Array[String]): Unit = {

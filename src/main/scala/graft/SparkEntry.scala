@@ -4299,9 +4299,9 @@ object SparkEntry {
         val store = s"$tmp/state"
         // 16 buckets: fixture-scale (the default 64 is a corpus-scale
         // layout; maintenance cost is per-partition jobs)
-        // phase descriptions: C5Profile attributes per-job cost to
-        // build / fold / maintenance (thread-local, queries here run
-        // sequentially)
+        // phase descriptions: `QueryProfile c5_boilerplate_ingest`
+        // attributes per-job cost to build / fold / maintenance
+        // (thread-local, queries here run sequentially)
         def desc[A](d: String)(body: => A): A = {
           val prev = s.sparkContext.getLocalProperty("spark.job.description")
           s.sparkContext.setJobDescription(s"c5: $d")

@@ -144,15 +144,9 @@ object BloomFilter {
   def mightContain(key: Column,
                    bc: org.apache.spark.broadcast.Broadcast[Array[Long]],
                    k: Int): Column =
-    // The Column wraps the expression DIRECTLY — no function-registry
-    // round trip. The registry form used elsewhere is safe only for
-    // STATELESS builders (cosine, shingles); here the builder would
-    // capture this call's (bc, k) under a fixed name, so two probe
-    // Columns built before either is analyzed would both resolve to
-    // the LAST broadcast — silently wrong membership — and concurrent
-    // sessions would race on the shared registry. Direct construction
-    // pins (bc, k) into the Column at build time and needs no session
-    // at all.
+    // Direct construction pins this call's (bc, k) into the Column at
+    // build time: two probe Columns built before either is analyzed
+    // each keep their own broadcast, and no session is involved.
     org.apache.spark.sql.GraftColumnBridge.column(
       graft.plans.BloomMightContain(
         org.apache.spark.sql.GraftColumnBridge.expression(h1(key)),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
@@ -70,12 +70,9 @@ object DedupSuite {
     * `transform(tokens(c), t => xxhash64(t) & 0xFFFFFFFF)` with zero
     * per-token string allocation. Unicode lowercasing stays Spark's
     * `lower`. */
-  def tokenHashesNative(text: Column): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_token_hashes",
-        exprs => graft.plans.TokenHashes32(exprs(0)), "built-in")
-    call_function("graft_token_hashes", lower(text))
-  }
+  def tokenHashesNative(text: Column): Column =
+    GraftColumnBridge.column(graft.plans.TokenHashes32(
+      GraftColumnBridge.expression(lower(text))))
 
   /** Engine-portable shingle hashes (md5-derived hash32 of each n-gram
     * string) in ONE fused pass via
@@ -83,22 +80,16 @@ object DedupSuite {
     * `transform(shinglesFromTokens(toks, n), s => hash32(s))` and to
     * the DuckDB oracle's reproduction, without the per-shingle
     * interpreted slice/concat/md5-hex/conv tree. */
-  def shingleHashesPortableNative(toks: Column, n: Int): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction(s"graft_pshingles_$n",
-        exprs => graft.plans.PortableShingleHashes(exprs(0), n), "built-in")
-    call_function(s"graft_pshingles_$n", toks)
-  }
+  def shingleHashesPortableNative(toks: Column, n: Int): Column =
+    GraftColumnBridge.column(graft.plans.PortableShingleHashes(
+      GraftColumnBridge.expression(toks), n))
 
   /** [[shingleHashesFromTokenHashes]] via the codegen'd native
     * expression [[graft.plans.ShingleHashes]] — one fused loop, no
     * boxed inner fold; bit-identical output. */
-  def shingleHashesNative(th: Column, n: Int): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction(s"graft_shingles_$n",
-        exprs => graft.plans.ShingleHashes(exprs(0), n), "built-in")
-    call_function(s"graft_shingles_$n", th)
-  }
+  def shingleHashesNative(th: Column, n: Int): Column =
+    GraftColumnBridge.column(graft.plans.ShingleHashes(
+      GraftColumnBridge.expression(th), n))
 
   /** MinHash hash family: ONE md5 per shingle (the expensive part),
     * then k affine variants h_i(x) = (a_i·x + b_i) mod p — the standard
@@ -134,12 +125,9 @@ object DedupSuite {
     * array instead of k interpreted walks; bit-identical signatures
     * (same fixed-seed affine family), so d5's DuckDB oracle still
     * reproduces them. Use on hot paths. */
-  def minhashSignatureNative(hashCol: Column, k: Int): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction(s"graft_minhash_$k",
-        exprs => graft.plans.MinhashSignature(exprs(0), k), "built-in")
-    call_function(s"graft_minhash_$k", hashCol)
-  }
+  def minhashSignatureNative(hashCol: Column, k: Int): Column =
+    GraftColumnBridge.column(graft.plans.MinhashSignature(
+      GraftColumnBridge.expression(hashCol), k))
 
   /** LSH banding: docs×bands rows of (id, band, band_hash). b bands of
     * width r must satisfy b*r == signature length. */
@@ -650,7 +638,7 @@ object DedupSuite {
     // AQE-off clone: batch-sized actions, fixed-latency tax otherwise
     val spark = StoreCompaction.quietSession(spark0)
     val (delta, pairs) = computeHammingFold(spark, path,
-      org.apache.spark.sql.GraftColumnBridge.onSession(spark, batch),
+      GraftColumnBridge.onSession(spark, batch),
       idCol, hashCol, maxHamming, maxBucket)
     // delta append (mapper-only — clustered by bucket) ∥ pair-set
     // materialization (reads the pinned pre-append file snapshot)
@@ -727,12 +715,9 @@ object DedupSuite {
     * hash array 60 times through interpreted HOFs per document
     * (bit-identical results; r19 optimization, d12 ~2.0 → measured
     * below). */
-  def simhash60(text: Column): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_simhash60",
-        exprs => graft.plans.SimhashFold(exprs(0)), "built-in")
-    call_function("graft_simhash60", transform(tokens(text), t => hash60(t)))
-  }
+  def simhash60(text: Column): Column =
+    GraftColumnBridge.column(graft.plans.SimhashFold(
+      GraftColumnBridge.expression(transform(tokens(text), t => hash60(t)))))
 
   /** SimHash near-dup PAIRS, exact within `maxHamming` bits, by
     * pigeonhole banding: the 60-bit simhash is split into `bands`
@@ -949,21 +934,17 @@ object DedupSuite {
     * at least one token (posexplode semantics preserved). */
   private def substrClean(tk: DataFrame, marked: DataFrame,
                           l: Int): DataFrame = {
-    val fr = org.apache.spark.sql.SparkSession.active
-      .sessionState.functionRegistry
-    fr.createOrReplaceTempFunction(s"graft_span_clean_$l",
-      exprs => graft.plans.SpanRemoveClean(exprs(0), exprs(1), l), "built-in")
-    fr.createOrReplaceTempFunction(s"graft_span_count_$l",
-      exprs => graft.plans.SpanRemoveCount(exprs(0), exprs(1), l), "built-in")
     val starts = marked.groupBy(col("m_doc"))
       .agg(sort_array(collect_list(col("wpos"))).as("starts"))
-    val sts = coalesce(col("starts"), array().cast("array<int>"))
+    val toks = GraftColumnBridge.expression(col("toks"))
+    val sts = GraftColumnBridge.expression(
+      coalesce(col("starts"), array().cast("array<int>")))
     tk.filter(size(col("toks")) > 0)
       .join(starts, col("doc_id") === col("m_doc"), "left")
       .select(col("doc_id"),
-        call_function(s"graft_span_clean_$l", col("toks"), sts)
+        GraftColumnBridge.column(graft.plans.SpanRemoveClean(toks, sts, l))
           .as("clean_text"),
-        call_function(s"graft_span_count_$l", col("toks"), sts)
+        GraftColumnBridge.column(graft.plans.SpanRemoveCount(toks, sts, l))
           .as("n_removed"))
   }
 
@@ -1205,7 +1186,7 @@ object DedupSuite {
     // StoreCompaction.quietSession)
     val spark = StoreCompaction.quietSession(spark0)
     val (delta, out, newMax) = computeSubstrFold(spark, path,
-      org.apache.spark.sql.GraftColumnBridge.onSession(spark, batch),
+      GraftColumnBridge.onSession(spark, batch),
       idCol, textCol, l, nBuckets, hashKeys)
     // the delta append (mapper-only — delta is already clustered by
     // bucket) and the output materialization are independent: the

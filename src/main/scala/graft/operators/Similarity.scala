@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.hash32
 
@@ -34,13 +34,10 @@ object Similarity {
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
   /** Codegen'd cosine via the custom Catalyst expression
-    * [[graft.plans.CosineSimilarity]] (registered lazily per session). */
-  def cosineNative(a: Column, b: Column): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_cosine",
-        exprs => graft.plans.CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    call_function("graft_cosine", a, b)
-  }
+    * [[graft.plans.CosineSimilarity]]. */
+  def cosineNative(a: Column, b: Column): Column =
+    GraftColumnBridge.column(graft.plans.CosineSimilarity(
+      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 
   /** Brute-force top-k cosine neighbors of `queries` within `candidates`
     * (self-pairs excluded). Output: query_id, neighbor_id, rnk, sim. */
@@ -82,12 +79,9 @@ object Similarity {
     * [[graft.plans.HyperplaneBucket]] — one primitive loop instead of
     * nPlanes interpreted zip_with/aggregate trees per row; bit-identical
     * buckets (same weights, same left-fold accumulation order). */
-  def hyperplaneBucket(vec: Column, nPlanes: Int, dims: Int): Column = {
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction(s"graft_hplane_${nPlanes}_$dims",
-        exprs => graft.plans.HyperplaneBucket(exprs(0), nPlanes, dims), "built-in")
-    call_function(s"graft_hplane_${nPlanes}_$dims", vec)
-  }
+  def hyperplaneBucket(vec: Column, nPlanes: Int, dims: Int): Column =
+    GraftColumnBridge.column(graft.plans.HyperplaneBucket(
+      GraftColumnBridge.expression(vec), nPlanes, dims))
 
   /** IVF (inverted-file) ANN: assign every vector to its nearest of
     * `nCentroids` centroids (one scored pass against a broadcast
@@ -688,10 +682,8 @@ object Similarity {
     // zipped intermediate allocation, no interpreted HOF per row. The
     // PQ encode pass evaluates this corpus × m × nCodes times — the
     // family's hottest loop (r19 optimization).
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_l2fixed",
-        exprs => graft.plans.L2Fixed(exprs(0), exprs(1)), "built-in")
-    call_function("graft_l2fixed", a, b)
+    GraftColumnBridge.column(graft.plans.L2Fixed(
+      GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
   }
 
   /** IVF + PQ composition (the FAISS IVFPQ serving shape, minus

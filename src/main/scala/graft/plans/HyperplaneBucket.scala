@@ -51,7 +51,8 @@ case class HyperplaneBucket(child: Expression, nPlanes: Int, dims: Int)
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_hyperplane_bucket"
 
-  private val isFloat = child.dataType match {
+  // lazy: the Column is built before its child is resolved
+  private lazy val isFloat = child.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
@@ -77,10 +78,11 @@ case class HyperplaneBucket(child: Expression, nPlanes: Int, dims: Int)
     val len = arr.numElements()
     if (len != dims) return 0L // zip_with length-mismatch pads null -> no bit
     val v = new Array[Double](dims)
+    val float = isFloat // one lazy-val read per row, not per element
     var d = 0
     while (d < dims) {
       if (arr.isNullAt(d)) return 0L // null element -> null proj -> no bit
-      v(d) = if (isFloat) arr.getFloat(d).toDouble else arr.getDouble(d)
+      v(d) = if (float) arr.getFloat(d).toDouble else arr.getDouble(d)
       d += 1
     }
     var bucket = 0L

@@ -5,17 +5,16 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Minimal `private[sql]` bridge: wrap a Catalyst [[Expression]] in a
   * [[Column]] (and back) without a function-registry round trip.
   *
-  * Why it exists: most of the engine's native expressions are exposed
-  * through stateless registry builders (`createOrReplaceTempFunction` +
-  * `call_function`), which is safe because the builder closes over
-  * nothing per-call. Expressions that capture PER-CALL state — the
-  * bloom probe's `Broadcast[Array[Long]]` handle — cannot use a fixed
-  * registry name without a lost-update hazard (two Columns built before
-  * either is analyzed both resolve to the last registration), so they
-  * construct the Column directly here. Spark 4 hides the
-  * expression↔column conversion behind `private[sql]`
-  * (`classic.ExpressionUtils`); this object is the one sanctioned
-  * crossing point, kept deliberately tiny.
+  * Why it exists: every native kernel under `graft.plans` becomes a
+  * Column here, built directly as `column(Kernel(expression(c), …))`
+  * with its parameters and any per-call state (the bloom probe's
+  * `Broadcast[Array[Long]]` handle) pinned into the expression at build
+  * time. Such a Column needs no session, so it resolves on whichever
+  * session's DataFrame it is used with. The function registry is for
+  * SQL only: [[graft.plans.GraftExtensions]] injects the SQL-facing
+  * functions once per session. Spark 4 hides the expression↔column
+  * conversion behind `private[sql]` (`classic.ExpressionUtils`); this
+  * object is the one sanctioned crossing point, kept deliberately tiny.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

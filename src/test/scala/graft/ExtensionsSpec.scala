@@ -37,6 +37,51 @@ class ExtensionsSpec extends SparkSpec {
     assert(rows.forall(r => math.abs(r.getDouble(1) - 1.0) < 1e-12))
   }
 
+  test("native kernel helpers resolve on any session and register no functions") {
+    import graft.functions.TextFunctions.tokens
+    import graft.operators.{DedupSuite, Similarity}
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    def docs(s: SparkSession) = Tables.documents(s, sf)
+      .filter(col("doc_id") < 300).select(col("doc_id"), col("text"))
+    def pairs(s: SparkSession) = {
+      val e = Tables.embeddings(s, sf).filter(col("vec_id") < 20)
+        .select(col("vec_id"), col("embedding"))
+      e.crossJoin(e.select(col("vec_id").as("vid2"), col("embedding").as("e2")))
+    }
+    def th = DedupSuite.tokenHashesNative(col("text"))
+    val helpers: Seq[(String, SparkSession => DataFrame)] = Seq(
+      "tokenHashesNative" -> (s => docs(s).select(col("doc_id"), th)),
+      "shingleHashesPortableNative" -> (s => docs(s).select(col("doc_id"),
+        DedupSuite.shingleHashesPortableNative(tokens(col("text")), 3))),
+      "shingleHashesNative" -> (s => docs(s).select(col("doc_id"),
+        DedupSuite.shingleHashesNative(th, 3))),
+      "minhashSignatureNative" -> (s => docs(s).select(col("doc_id"),
+        DedupSuite.minhashSignatureNative(DedupSuite.shingleHashesNative(th, 3), 8))),
+      "simhash60" -> (s => docs(s).select(col("doc_id"),
+        DedupSuite.simhash60(col("text")))),
+      "exactSubstrDedup" -> (s =>
+        DedupSuite.exactSubstrDedup(docs(s), "doc_id", "text", 8)),
+      "cosineNative" -> (s => pairs(s).select(col("vec_id"), col("vid2"),
+        Similarity.cosineNative(col("embedding"), col("e2")))),
+      "hyperplaneBucket" -> (s => pairs(s).select(col("vec_id"), col("vid2"),
+        Similarity.hyperplaneBucket(col("embedding"), 8, 64))),
+      "l2Fixed" -> (s => pairs(s).select(col("vec_id"), col("vid2"),
+        Similarity.l2Fixed(col("embedding"), col("e2")))))
+    val other = spark.newSession()
+    helpers.foreach { case (name, build) =>
+      def rows(s: SparkSession) = build(s).collect().map(_.toString).sorted.toSeq
+      val expected = rows(spark)
+      assert(expected.nonEmpty, name)
+      assert(rows(other) == expected, s"$name differs on a new session")
+    }
+    // graft_cosine is registered on purpose by the SQL test above
+    Seq(spark, other).foreach { s =>
+      val registered = s.sessionState.functionRegistry.listFunction()
+        .map(_.funcName).filter(_.startsWith("graft_")).filterNot(_ == "graft_cosine")
+      assert(registered.isEmpty, s"helpers registered $registered")
+    }
+  }
+
   test("partition pruning: date-partitioned scan reads strictly fewer files") {
     val dir = java.nio.file.Files.createTempDirectory("part").toString
     Tables.events(spark, sf)
