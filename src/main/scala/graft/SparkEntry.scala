@@ -1029,7 +1029,7 @@ object SparkEntry {
           () => phase("seed_s5") {
             trackAs("s5")(graft.streaming.StreamingJobs.streamingIncrementalMart(
               s, stagedEventsSplitDir(s, dir), eventsStreamSchema(s, dir),
-              martRoot, trackCk("s5_ck").toString, maxFilesPerTrigger = Some(1)))
+              martRoot, trackCk("s5_ck").toString))
           },
           // s9: foreachBatch CDC apply — state root seeded with the q77
           // OLD snapshot, the diff stream converges it to the NEW one
@@ -1038,8 +1038,7 @@ object SparkEntry {
               q77Fixture(s, dir)._1)
             trackAs("s9")(graft.streaming.StreamingJobs.applyCdcStream(
               s, stagedCdcSplitDir(s, dir), cdcStreamSchema, s9Root,
-              Seq("doc_id"), trackCk("s9_ck").toString,
-              maxFilesPerTrigger = Some(1)))
+              Seq("doc_id"), trackCk("s9_ck").toString))
           },
           // s11: foreachBatch incremental near-dup — index root seeded
           // with the corpus MinHash index, the clone stream probes AND
@@ -1051,8 +1050,7 @@ object SparkEntry {
                 "doc_id", "text", n = 3, k = 16, bands = 4))
             trackAs("s11")(graft.streaming.StreamingJobs.streamingIncrementalNearDup(
               s, stagedNearDupSplitDir(s, dir), nearDupStreamSchema, s11Index,
-              s11Pairs, trackCk("s11_ck").toString,
-              maxFilesPerTrigger = Some(1)))
+              s11Pairs, trackCk("s11_ck").toString))
           },
           // s12: foreachBatch ANN serving — query stream scored against
           // a STATIC PQ index precomputed from the corpus (the e9
@@ -1067,7 +1065,7 @@ object SparkEntry {
             trackAs("s12")(graft.streaming.StreamingJobs.streamingAnnServe(
               s, stagedAnnQuerySplitDir(s, dir), annStreamSchema, s12cb,
               s12codes, s12Out, trackCk("s12_ck").toString, k = 5, m = 8,
-              dims = 64, maxFilesPerTrigger = Some(1)))
+              dims = 64))
           },
           // s13: foreachBatch incremental IVF ingest — index seeded from
           // the corpus with FROZEN centroids, the clone stream appends
@@ -1086,7 +1084,7 @@ object SparkEntry {
               s, stagedIvfIngestSplitDir(s, dir), annStreamSchema,
               s"$s13Index/index",
               s.read.parquet(s"$s13Index/centroids"),
-              trackCk("s13_ck").toString, maxFilesPerTrigger = Some(1)))
+              trackCk("s13_ck").toString))
           },
           // s14: foreachBatch incremental ExactSubstr ingest — the
           // window-key store is seeded from the corpus's first id
@@ -1127,7 +1125,7 @@ object SparkEntry {
             trackAs("s14")(graft.streaming.StreamingJobs.streamingSubstrIngest(
               s, s14split, nearDupStreamSchema, s14store, s14out,
               trackCk("s14_ck").toString, l = 8, nBuckets = 64,
-              hashKeys = true, maxFilesPerTrigger = Some(1)))
+              hashKeys = true))
           },
           // s15: foreachBatch incremental quantile-store ingest — the
           // store is seeded with the fixture's event_id%3=0 third,
@@ -1143,8 +1141,7 @@ object SparkEntry {
               col("event_type"), col("xl"), s15store, cellBits = 8)
             trackAs("s15")(graft.streaming.StreamingJobs.streamingQuantileIngest(
               s, s15split, quantileStreamSchema, s15store,
-              trackCk("s15_ck").toString, "event_type", "xl",
-              maxFilesPerTrigger = Some(1)))
+              trackCk("s15_ck").toString, "event_type", "xl"))
           },
           // s16: foreachBatch incremental boilerplate ingest — the
           // store is seeded with the ticker corpus's lower half (its
@@ -1185,7 +1182,7 @@ object SparkEntry {
             trackAs("s16")(graft.streaming.StreamingJobs.streamingBoilerplateIngest(
               s, s16split, nearDupStreamSchema, s16store, s16out,
               trackCk("s16_ck").toString, m, nBuckets = 16,
-              nDocBuckets = 16, maxFilesPerTrigger = Some(1)))
+              nDocBuckets = 16))
           },
           // s17: foreachBatch incremental sequence packing — the span
           // store is seeded with the first id tercile (its spans are
@@ -1206,7 +1203,7 @@ object SparkEntry {
             trackAs("s17")(graft.streaming.StreamingJobs.streamingPackIngest(
               s, s17split, packStreamSchema, s17store, s17out,
               trackCk("s17_ck").toString, seqLen = 128,
-              docsPerShard = 100, maxFilesPerTrigger = Some(1)))
+              docsPerShard = 100))
           },
           // s18: foreachBatch streaming MULTIMODAL ingest — the d30
           // fold under the committed-staging exactly-once protocol.
@@ -1266,8 +1263,7 @@ object SparkEntry {
                       (id, Multimodal.synthBmpPerceptual(id))))
                     .toDF("doc_id", "content"), "doc_id", "content")
               },
-              idCol = "doc_id", hashCol = "ph", maxHamming = 3,
-              maxFilesPerTrigger = Some(1)))
+              idCol = "doc_id", hashCol = "ph", maxHamming = 3))
           }))
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prevShuffle)

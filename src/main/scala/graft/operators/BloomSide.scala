@@ -107,35 +107,15 @@ object BloomSide {
       .parquet(root(path).toString)
 
   /** Stage one fold's bloom rows under an arbitrary dir (the live
-    * sidecar's layout) WITHOUT touching the store — the streaming
-    * twin's committed-staging step. [[promoteStaged]] copies a
-    * committed staging into the live sidecar. */
+    * sidecar's layout) WITHOUT touching the store — the bloom artifact
+    * of the streaming substr fold's staged commit
+    * ([[graft.streaming.StreamingJobs.substrCommit]]), which promotes
+    * it into the live sidecar. */
   def stageDelta(keyed: DataFrame, stagedDir: String, bucketCol: String,
                  keyCol: String): Unit =
     bloomRows(keyed, bucketCol, keyCol)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(stagedDir)
-
-  /** Promote a staged bloom-delta dir ([[stageDelta]] output) into
-    * `path`'s live sidecar under deterministic `<stamp>-` names with
-    * REPLACE_EXISTING — a partial-crash re-copy overwrites the same
-    * targets byte-identically, so the caller's replay protocol makes
-    * the append exactly-once. No-op when the staging has no bloom dir
-    * (a store that wasn't bloom-maintained when staged). */
-  def promoteStaged(stagedDir: java.nio.file.Path, path: String,
-                    stamp: String): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (!Files.isDirectory(stagedDir)) return
-    val s = Files.list(stagedDir)
-    val parts = try s.iterator().asScala.toList finally s.close()
-    parts.filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("bucket="))
-      .foreach { bdir =>
-        StoreFiles.promoteFiles(bdir,
-          root(path).resolve(bdir.getFileName.toString), stamp)
-      }
-  }
 
   /** Stage a FRESH sidecar from an in-memory keyed frame (the build's
     * checkpointed aggregation) into the SIBLING dir

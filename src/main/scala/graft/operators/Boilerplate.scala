@@ -685,13 +685,10 @@ object Boilerplate {
     import java.nio.file.Files
     val spark = StoreCompaction.quietSession(spark0)
     val root = java.nio.file.Paths.get(path)
-    val pendingStaging = StoreFiles.listDir(root).filter { p =>
-      val n = p.getFileName.toString
-      // the batch fold's staging AND the streaming twin's (s16) — a
-      // replay of either re-promotes delta files a vacuum would have
-      // collapsed into the store already
-      n.startsWith(".boiler_fold_staging_") || n.startsWith(".boiler_staging_")
-    }
+    // the batch fold's staging AND the streaming twin's (s16) — a
+    // replay of either re-promotes delta files a vacuum would have
+    // collapsed into the store already
+    val pendingStaging = StoreFiles.listDir(root).filter(isFoldStaging)
     require(pendingStaging.isEmpty,
       s"crashed fold staging ${pendingStaging.headOption.map(_.getFileName).getOrElse("")} " +
         "survives under the store — replay that fold (re-call fold with " +
@@ -749,100 +746,80 @@ object Boilerplate {
     // replay markers of cleanly completed folds (no staging survives —
     // checked above): the monotonic guard subsumes them
     StoreFiles.listDir(root)
-      .filter(_.getFileName.toString.startsWith("_boiler_fold_"))
+      .filter(_.getFileName.toString.startsWith(FoldNames.marker))
       .foreach(p => Files.deleteIfExists(p))
   }
 
-  /** Stage one fold's SIX artifacts under `staging` WITHOUT touching
-    * the live store — the [[StoreFiles.applyBatchIdempotent]] stage
-    * step shared by the batch [[fold]] and the streaming twin (s16):
-    * pair/counts/docs deltas, the dictionary append, the `_meta`
-    * high-water row, and the changelog (stamped `seq`). `_SUCCESS`
-    * is written strictly last — its presence freezes the staging, so
-    * a crash-replay reuses it verbatim and never recomputes against
-    * a half-promoted store. Returns the changelog frame (derived only
-    * from checkpointed inputs, so it stays valid after the staging is
-    * swept) — the batch [[fold]] returns it directly instead of
-    * re-reading its own staged copy. */
-  private[graft] def stageFold(spark: SparkSession, path: String,
-                               staging: java.nio.file.Path,
-                               batch: DataFrame, idCol: String,
-                               textCol: String, minDocs: Long,
-                               nBuckets: Int, nDocBuckets: Int,
-                               seq: Long,
-                               prepped: Option[(DataFrame, org.apache.spark.sql.Row)] = None,
-                               checkpointChangelog: Boolean = false): DataFrame = {
-    StoreFiles.deleteRecursively(staging)
+  /** The batch [[fold]]'s on-disk names; keyed by the batch's doc
+    * high-water (monotone, so unique per fold). */
+  private[graft] val FoldNames =
+    StoreFiles.CommitNames("_boiler_fold_", ".boiler_fold_staging_", "bfold")
+  /** The streaming twin's (s16) names, keyed by micro-batch id. */
+  private[graft] val StreamNames =
+    StoreFiles.CommitNames("_boiler_batch_", ".boiler_staging_", "bbatch")
+
+  private def isFoldStaging(p: java.nio.file.Path): Boolean =
+    Seq(FoldNames, StreamNames)
+      .exists(n => p.getFileName.toString.startsWith(n.staging))
+
+  /** One fold's declaration: the pair/counts/docs deltas, the
+    * dictionary append, the `_meta` high-water row, and the changelog
+    * — promoted into `outPath`, or, with `outPath` None, staged only
+    * (the batch [[fold]] returns it instead). */
+  private[graft] def foldCommit(names: StoreFiles.CommitNames, path: String,
+                                id: Long,
+                                outPath: Option[String]): StoreFiles.StagedCommit =
+    names.at(path, id, Seq("pairs", "counts", "docs", "dict")
+      .map(sub => StoreFiles.Artifact(sub, Some(s"$path/$sub"))) ++ Seq(
+        StoreFiles.Artifact("meta", Some(s"${path}_meta")),
+        StoreFiles.Artifact("out", outPath)))
+
+  /** One fold's writers, computed against the LIVE store
+    * ([[computeFold]] reads nothing from the store after it returns),
+    * the changelog stamped `seq`. With `changelogTo`, the changelog
+    * writer checkpoints the changelog first and hands the checkpoint
+    * over: the batch [[fold]]'s caller MATERIALIZES the returned
+    * changelog later (the gate's resolution), and without the
+    * checkpoint that second execution would re-run the whole
+    * cleanWithDict chain (line explode + digest mark join + per-doc
+    * reassembly) SERIALIZED behind the fold. Inside the staged-write
+    * wave it runs on cores the other writes don't saturate, and the
+    * staged copy is written from it. The checkpoint derives only from
+    * checkpointed inputs, so it stays valid after the staging is
+    * swept. */
+  private[graft] def foldWriters(spark: SparkSession, path: String,
+                                 batch: DataFrame, idCol: String,
+                                 textCol: String, minDocs: Long,
+                                 nBuckets: Int, nDocBuckets: Int,
+                                 seq: Long,
+                                 prepped: Option[(DataFrame, org.apache.spark.sql.Row)] = None,
+                                 changelogTo: Option[DataFrame => Unit] = None): Map[String, String => Unit] = {
     val a = computeFold(spark, path, batch, idCol, textCol, minDocs,
       nBuckets, nDocBuckets, prepped)
-    // the batch fold's caller MATERIALIZES the returned changelog
-    // later (the gate's resolution) — without a checkpoint that
-    // second execution re-runs the whole cleanWithDict chain
-    // (line explode + digest mark join + per-doc reassembly) a second
-    // time, SERIALIZED behind the fold. Checkpointing it as a sixth
-    // CONCURRENT action moves that execution inside the staged-write
-    // wave (cores the wave's write tasks don't saturate), so the
-    // caller's materialization becomes a checkpoint scan. The
-    // streaming twin never consumes the return — it skips the extra
-    // materialization entirely.
-    var changelogCp: DataFrame = a.changelog
-    // independent staged artifacts fan out as concurrent jobs
-    Par.run(Seq(
+    Map(
       // pairs/counts deltas arrive CLUSTERED by bucket (the fold's one
       // bucket-keyed exchange) — partitionBy writes directly
-      () => desc(spark, "staged pairs write") {
-        a.pairsDelta
-          .write.partitionBy("bucket").parquet(staging.resolve("pairs").toString) },
-      () => desc(spark, "staged counts write") {
-        a.countsDelta
-          .write.partitionBy("bucket").parquet(staging.resolve("counts").toString) },
-      () => desc(spark, "staged docs write") {
+      "pairs" -> (dir => desc(spark, "staged pairs write") {
+        a.pairsDelta.write.partitionBy("bucket").parquet(dir) }),
+      "counts" -> (dir => desc(spark, "staged counts write") {
+        a.countsDelta.write.partitionBy("bucket").parquet(dir) }),
+      "docs" -> (dir => desc(spark, "staged docs write") {
         a.docsApp.repartition(col("dbucket"))
-          .write.partitionBy("dbucket").parquet(staging.resolve("docs").toString) },
-      () => desc(spark, "staged dict write") {
-        a.dictApp.write.parquet(staging.resolve("dict").toString) },
-      () => desc(spark, "staged changelog write") {
-        a.changelog.withColumn("seq", lit(seq))
-          .write.parquet(staging.resolve("out").toString) })
-      ++ (if (checkpointChangelog)
-            Seq[() => Unit](() => changelogCp = desc(spark,
-              "changelog checkpoint") { a.changelog.localCheckpoint() })
-          else Nil))
-    StoreMeta.writeFile(spark, staging.resolve("meta").toString,
-      boilerMetaFields(a.newMax, minDocs, nBuckets, nDocBuckets, a.eps))
-    java.nio.file.Files.createFile(staging.resolve("_SUCCESS"))
-    changelogCp
-  }
-
-  /** Promote a committed staging into the live sub-stores under
-    * DETERMINISTIC `<stamp>-` names with REPLACE_EXISTING — a
-    * partial-crash re-copy overwrites the same targets
-    * byte-identically. `outPath` None = the caller consumes the
-    * staged changelog itself (the batch [[fold]]). */
-  private[graft] def promoteFold(storePath: String,
-                                 staging: java.nio.file.Path,
-                                 stamp: String,
-                                 outPath: Option[String]): Unit = {
-    import java.nio.file.{Files, Paths}
-    require(Files.exists(staging.resolve("_SUCCESS")),
-      s"boilerplate staging $staging is not committed")
-    Seq("pairs" -> "bucket=", "counts" -> "bucket=",
-        "docs" -> "dbucket=").foreach {
-      case (sub, prefix) =>
-        StoreFiles.listDir(staging.resolve(sub))
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith(prefix))
-          .foreach { bdir =>
-            StoreFiles.promoteFiles(bdir,
-              Paths.get(storePath, sub, bdir.getFileName.toString), stamp)
-          }
-    }
-    StoreFiles.promoteFiles(staging.resolve("dict"),
-      Paths.get(storePath, "dict"), stamp)
-    StoreFiles.promoteFiles(staging.resolve("meta"),
-      Paths.get(s"${storePath}_meta"), stamp)
-    outPath.foreach(o =>
-      StoreFiles.promoteFiles(staging.resolve("out"), Paths.get(o), stamp))
+          .write.partitionBy("dbucket").parquet(dir) }),
+      "dict" -> (dir => desc(spark, "staged dict write") {
+        a.dictApp.write.parquet(dir) }),
+      "meta" -> (dir => StoreMeta.writeFile(spark, dir,
+        boilerMetaFields(a.newMax, minDocs, nBuckets, nDocBuckets, a.eps))),
+      "out" -> (dir => {
+        val changelog = changelogTo.fold(a.changelog) { to =>
+          val cp = desc(spark, "changelog checkpoint") {
+            a.changelog.localCheckpoint() }
+          to(cp)
+          cp
+        }
+        desc(spark, "staged changelog write") {
+          changelog.withColumn("seq", lit(seq)).write.parquet(dir) }
+      }))
   }
 
   /** Fold a monotonic document batch into a [[buildStore]] layout and
@@ -857,25 +834,19 @@ object Boilerplate {
     * (< minDocs rows per line by the store invariant), and the doc
     * store only for the bounded invalidated-id set.
     *
-    * ATOMIC-BY-REPLAY: the fold publishes its five store artifacts
-    * through the same committed-staging protocol as the streaming
-    * twin — stage everything + `_SUCCESS`, promote under
-    * deterministic names, marker, sweep — keyed by the batch's doc
-    * high-water (monotone, so unique per fold). A crash anywhere
-    * re-runs exactly: before `_SUCCESS` the store is unmutated and
-    * the fold recomputes; after it, the frozen staging re-promotes
-    * byte-identically. A fold whose marker exists was FULLY applied;
-    * if its committed staging survives, the crash hit the window
-    * between the marker and the sweep — the staged changelog was
-    * never delivered, so the replay returns it (then sweeps) instead
-    * of stranding the only copy behind an error. With no surviving
-    * staging the changelog WAS returned, and replaying is the same
-    * caller error the monotonic-ingest guard rejects — as loud. */
+    * The fold publishes its store artifacts exactly once through
+    * [[foldCommit]] under [[FoldNames]]. A fold whose marker exists
+    * was FULLY applied; if its committed staging survives, the crash
+    * hit the window between the marker and the sweep — the staged
+    * changelog was never delivered, so the replay returns it (then
+    * sweeps) instead of stranding the only copy behind an error. With
+    * no surviving staging the changelog WAS returned, and replaying is
+    * the same caller error the monotonic-ingest guard rejects — as
+    * loud. */
   def fold(spark: SparkSession, path: String, batch: DataFrame,
            idCol: String, textCol: String, minDocs: Long,
            nBuckets: Int = 64, nDocBuckets: Int = 64,
            autoVacuumTrigger: Int = 24): DataFrame = {
-    import java.nio.file.{Files, Paths}
     // the fold's ~15 tiny actions run on an AQE-off session clone:
     // under AQE each action's 1-3 exchanges schedule as separate
     // stage-jobs (~40 jobs per fold measured — pure fixed-latency tax
@@ -894,34 +865,26 @@ object Boilerplate {
     require(!mm.isNullAt(1),
       "monotonic-ingest contract: batch is empty")
     val foldId = mm.getLong(1)
-    val marker = Paths.get(path, s"_boiler_fold_$foldId")
-    val staging = Paths.get(path, s".boiler_fold_staging_$foldId")
+    val commit = foldCommit(FoldNames, path, foldId, None)
     // a crash-replay has no in-memory frame, so it secures the frozen
-    // staged copy BEFORE sweeping the staging
+    // staged copy BEFORE the staging is swept
     def stagedChangelog(): DataFrame =
-      qs.read.parquet(staging.resolve("out").toString)
+      qs.read.parquet(commit.stagedDir("out"))
         .select(col(idCol), col("clean_text"), col("n_removed"))
         .localCheckpoint()
-    if (Files.exists(marker)) {
-      require(Files.exists(staging.resolve("_SUCCESS")),
+    if (commit.applied) {
+      require(commit.committed,
         s"fold $foldId was already applied (its changelog was returned " +
           "then) — replaying a completed fold violates the " +
           "monotonic-ingest contract")
       val changelog = stagedChangelog()
-      StoreFiles.deleteRecursively(staging)
+      commit.sweep()
       changelog
     } else {
-      val fresh =
-        if (Files.exists(staging.resolve("_SUCCESS"))) None
-        else Some(stageFold(qs, path, staging, qBatch, idCol, textCol,
-          minDocs, nBuckets, nDocBuckets, seq = foldId,
-          prepped = Some(prep), checkpointChangelog = true))
-      promoteFold(path, staging, s"bfold$foldId", None)
-      // the freshly staged changelog derives only from checkpointed
-      // inputs (valid after the sweep below)
-      val changelog = fresh.getOrElse(stagedChangelog())
-      Files.createFile(marker)
-      StoreFiles.deleteRecursively(staging)
+      var changelog = if (commit.committed) stagedChangelog() else null
+      commit.applyIdempotent(foldWriters(qs, path, qBatch, idCol, textCol,
+        minDocs, nBuckets, nDocBuckets, seq = foldId, prepped = Some(prep),
+        changelogTo = Some((cp: DataFrame) => changelog = cp)))
       // self-scheduled maintenance: each fold appends one delta file
       // set per touched counts bucket, so bucket file count IS the
       // uncollapsed-fold count. When it reaches the trigger
@@ -933,11 +896,8 @@ object Boilerplate {
       if (autoVacuumTrigger > 0 &&
           StoreCompaction.needsMaintenance(s"$path/counts",
             autoVacuumTrigger) &&
-          !StoreFiles.listDir(Paths.get(path)).exists { p =>
-            val n = p.getFileName.toString
-            n.startsWith(".boiler_fold_staging_") ||
-              n.startsWith(".boiler_staging_")
-          })
+          !StoreFiles.listDir(java.nio.file.Paths.get(path))
+            .exists(isFoldStaging))
         vacuumStore(spark, path)
       changelog
     }

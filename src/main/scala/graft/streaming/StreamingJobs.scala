@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
+import graft.operators.StoreFiles.{Artifact, CommitNames, StagedCommit}
 
 /** Structured Streaming forms of the engine's batch operators.
   *
@@ -17,6 +18,12 @@ import org.apache.spark.sql.types.StructType
   * log, giving the same exactly-once, idempotent-rerun behavior the
   * reference gets from its PK merge; watermarks bound the window state
   * so the aggregation state store stays O(open windows), not O(stream).
+  *
+  * The persisted-store ingest twins (s13–s18) each fold a micro-batch
+  * exactly once through a declared
+  * [[graft.operators.StoreFiles.StagedCommit]]: a family is its
+  * on-disk names, its artifact list, and the writers that compute the
+  * fold (protocol in [[graft.operators.StoreFiles]]).
   */
 object StreamingJobs {
 
@@ -32,6 +39,20 @@ object StreamingJobs {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("decimal(18,2)").as("total"))
 
+  /** The parquet file source every `foreachBatch` job here reads: one
+    * file per micro-batch, each handed to `f` with its batch id. */
+  private def eachFile(spark: SparkSession, srcDir: String,
+                       schema: StructType, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(srcDir)
+      .writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        f(batch.toDF(), batchId)
+      }
+      .start()
+
   /** Streaming keyed merge: each arriving file micro-batch is upserted
     * into versioned staging via the shared
     * [[graft.operators.VersionedStaging]] protocol inside `foreachBatch`
@@ -43,17 +64,13 @@ object StreamingJobs {
     * await/stop it. */
   def streamingMerge(spark: SparkSession, srcDir: String, schema: StructType,
                      stagingRoot: String, keys: Seq[String], versionCol: String,
-                     checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.VersionedStaging.mergeInto(
-          batch.sparkSession, stagingRoot, batch.toDF(),
-          keys, versionCol, batchId = Some(batchId))
-        ()
-      }
-      .start()
+                     checkpoint: String): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      graft.operators.VersionedStaging.mergeInto(
+        batch.sparkSession, stagingRoot, batch,
+        keys, versionCol, batchId = Some(batchId))
+      ()
+    }
 
   /** Streaming incremental mart maintenance: each micro-batch is
     * partially aggregated ([[graft.operators.Marts.dailyPartial]]) and
@@ -64,25 +81,18 @@ object StreamingJobs {
     * protocol as the staging merge. */
   def streamingIncrementalMart(spark: SparkSession, srcDir: String,
                                schema: StructType, martRoot: String,
-                               checkpoint: String,
-                               maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    graft.Tables.normalizeNanos(reader.parquet(srcDir))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val newPartial = graft.operators.Marts.dailyPartial(batch.toDF())
-        val combined = graft.operators.VersionedStaging.latestComplete(s, martRoot)
-          .map(c => graft.operators.Marts.combinePartials(s.read.parquet(c), newPartial))
-          .getOrElse(newPartial)
-        graft.operators.VersionedStaging.publish(s, martRoot, combined,
-          batchId = Some(batchId))
-        ()
-      }
-      .start()
-  }
+                               checkpoint: String): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val newPartial = graft.operators.Marts.dailyPartial(
+        graft.Tables.normalizeNanos(batch))
+      val combined = graft.operators.VersionedStaging.latestComplete(s, martRoot)
+        .map(c => graft.operators.Marts.combinePartials(s.read.parquet(c), newPartial))
+        .getOrElse(newPartial)
+      graft.operators.VersionedStaging.publish(s, martRoot, combined,
+        batchId = Some(batchId))
+      ()
+    }
 
   /** Streaming CDC APPLY — the consumer half of the q77/q81 snapshot
     * diff: a stream of change rows (key cols + payload cols + `op` ∈
@@ -110,25 +120,17 @@ object StreamingJobs {
     * unpartitioned form for oracle exactness. */
   def applyCdcStream(spark: SparkSession, srcDir: String, schema: StructType,
                      stateRoot: String, keys: Seq[String],
-                     checkpoint: String,
-                     maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val current = graft.operators.VersionedStaging.latestComplete(s, stateRoot)
-          .map(p => s.read.parquet(p))
-          .getOrElse(sys.error(s"applyCdcStream: $stateRoot not seeded"))
-        graft.operators.VersionedStaging.publish(s, stateRoot,
-          graft.operators.SnapshotDiff.applyChanges(current, batch.toDF(), keys),
-          batchId = Some(batchId))
-        ()
-      }
-      .start()
-  }
+                     checkpoint: String): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val current = graft.operators.VersionedStaging.latestComplete(s, stateRoot)
+        .map(p => s.read.parquet(p))
+        .getOrElse(sys.error(s"applyCdcStream: $stateRoot not seeded"))
+      graft.operators.VersionedStaging.publish(s, stateRoot,
+        graft.operators.SnapshotDiff.applyChanges(current, batch, keys),
+        batchId = Some(batchId))
+      ()
+    }
 
   /** Streaming incremental MinHash-LSH near-dup — the ingest-dedup
     * production shape (r9 verdict item 6): a persisted
@@ -163,33 +165,24 @@ object StreamingJobs {
   def streamingIncrementalNearDup(spark: SparkSession, srcDir: String,
                                   schema: StructType, indexRoot: String,
                                   pairsDir: String, checkpoint: String,
-                                  maxFilesPerTrigger: Option[Int] = None,
                                   n: Int = 3, k: Int = 16, bands: Int = 4,
-                                  threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val current = graft.operators.VersionedStaging.latestComplete(s, indexRoot)
-          .getOrElse(sys.error(s"streamingIncrementalNearDup: $indexRoot not seeded"))
-        if (!graft.operators.VersionedStaging.batchIdOf(s, current).contains(batchId)) {
-          val index = s.read.parquet(current)
-          val b = batch.toDF()
-          graft.operators.DedupSuite.incrementalMinhashNearDups(
-            index, b, "doc_id", "text", n, k, bands, threshold)
-            .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-          graft.operators.VersionedStaging.publish(s, indexRoot,
-            index.unionByName(
-              graft.operators.DedupSuite.minhashIndex(b, "doc_id", "text", n, k, bands)),
-            batchId = Some(batchId))
-        }
-        ()
+                                  threshold: Double = 0.5): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (b, batchId) =>
+      val s = b.sparkSession
+      val current = graft.operators.VersionedStaging.latestComplete(s, indexRoot)
+        .getOrElse(sys.error(s"streamingIncrementalNearDup: $indexRoot not seeded"))
+      if (!graft.operators.VersionedStaging.batchIdOf(s, current).contains(batchId)) {
+        val index = s.read.parquet(current)
+        graft.operators.DedupSuite.incrementalMinhashNearDups(
+          index, b, "doc_id", "text", n, k, bands, threshold)
+          .write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+        graft.operators.VersionedStaging.publish(s, indexRoot,
+          index.unionByName(
+            graft.operators.DedupSuite.minhashIndex(b, "doc_id", "text", n, k, bands)),
+          batchId = Some(batchId))
       }
-      .start()
-  }
+      ()
+    }
 
   /** Streaming ANN serving (s12): a stream of query vectors scored
     * per micro-batch against a STATIC precomputed PQ index (codebook
@@ -202,64 +195,42 @@ object StreamingJobs {
     * vector index; index refresh is a VersionedStaging republish,
     * orthogonal to the stream. */
   def streamingAnnServe(spark: SparkSession, srcDir: String,
-                        schema: StructType, codebook: org.apache.spark.sql.DataFrame,
-                        codes: org.apache.spark.sql.DataFrame, outDir: String,
-                        checkpoint: String, k: Int, m: Int, dims: Int,
-                        maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val qtab = graft.operators.Similarity.pqQueryTable(
-          batch.toDF(), codebook, "vec_id", "embedding", m, dims)
-        graft.operators.Similarity.pqScore(codes, qtab, k)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
-  }
+                        schema: StructType, codebook: DataFrame,
+                        codes: DataFrame, outDir: String,
+                        checkpoint: String, k: Int, m: Int,
+                        dims: Int): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      val qtab = graft.operators.Similarity.pqQueryTable(
+        batch, codebook, "vec_id", "embedding", m, dims)
+      graft.operators.Similarity.pqScore(codes, qtab, k)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      ()
+    }
+
+  private val IvfNames = CommitNames("_batch_", ".staging_batch_", "batch")
+
+  /** s13's declaration: the assigned batch is the staging root itself
+    * (one centroid-partitioned write, whose own `_SUCCESS` commits
+    * it), promoted into the live index's centroid partitions. */
+  private[graft] def ivfCommit(indexPath: String, batchId: Long): StagedCommit =
+    IvfNames.at(indexPath, batchId, Seq(Artifact("", Some(indexPath))))
+
+  private[graft] def ivfWriters(centroids: DataFrame,
+                                batch: DataFrame): Map[String, String => Unit] =
+    Map("" -> (dir => graft.operators.Similarity.stageIvfBatch(
+      batch, dir, centroids, "vec_id", "embedding")))
 
   /** Apply one vector micro-batch to a persisted IVF index (the
     * [[graft.operators.Similarity.buildIvfIndex]] layout) exactly
-    * once, CRASH-SAFE AT EVERY STEP — parquet append has no natural
-    * idempotency and a bare marker-after-append leaves a window
-    * (append committed, marker not yet written) where a replayed
-    * micro-batch double-appends. The protocol closes every window:
-    *
-    *  1. `_batch_<id>` marker exists → already applied, skip.
-    *  2. Stage the assigned batch under `.staging_batch_<id>` with
-    *     mode=overwrite. Spark commits `_SUCCESS` LAST, so a staging
-    *     dir without `_SUCCESS` is a crashed attempt and is simply
-    *     overwritten; one WITH `_SUCCESS` is frozen and REUSED on
-    *     replay (never rewritten — its file names are now the
-    *     batch's identity).
-    *  3. Copy each staged data file into its centroid partition under
-    *     the DETERMINISTIC name `batch<id>-<stagedFileName>` with
-    *     REPLACE_EXISTING: a re-copy after a partial crash overwrites
-    *     the same targets byte-identically — no orphans, no
-    *     duplicates, because the name set is fixed by the committed
-    *     staging.
-    *  4. Create the marker (the commit point), THEN delete staging.
-    *
-    * Any crash replays to the same final state: before staging
-    * `_SUCCESS` → clean restage; between staging and marker →
-    * idempotent re-copy; after marker → step 1 skips (and leaked
-    * staging is swept). Returns whether the batch was applied
-    * (false = replay skip). */
+    * once through [[ivfCommit]]. Returns whether the batch was
+    * applied (false = replay skip). */
   def appendIvfBatchIdempotent(indexPath: String,
-                               centroids: org.apache.spark.sql.DataFrame,
-                               batch: org.apache.spark.sql.DataFrame,
+                               centroids: DataFrame,
+                               batch: DataFrame,
                                batchId: Long,
                                autoCompactTrigger: Int = 24): Boolean = {
-    import java.nio.file.Paths
-    val staging = Paths.get(indexPath, s".staging_batch_$batchId")
-    val applied = applyBatchIdempotent(
-        Paths.get(indexPath, s"_batch_$batchId"), staging) { () =>
-      graft.operators.Similarity.stageIvfBatch(
-        batch, staging.toString, centroids, "vec_id", "embedding")
-    } { () => promoteStagedIvfBatch(indexPath, batchId) }
+    val applied = ivfCommit(indexPath, batchId)
+      .applyIdempotent(ivfWriters(centroids, batch))
     // self-scheduled maintenance AFTER the batch's marker is durable:
     // a compaction can then never interleave a promoted-but-markerless
     // replay window (batch N replays before N+1 ever runs, and the
@@ -276,177 +247,73 @@ object StreamingJobs {
     applied
   }
 
-  /** Step 3 of [[appendIvfBatchIdempotent]]'s protocol, exposed so
-    * the spec can replay it against a crashed (marker-less) apply:
-    * copy every staged `centroid_id=X/part-*.parquet` into the live
-    * index partition under `batch<id>-<name>` with REPLACE_EXISTING. */
-  private[graft] def promoteStagedIvfBatch(indexPath: String,
-                                           batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val staging = Paths.get(indexPath, s".staging_batch_$batchId")
-    require(Files.exists(staging.resolve("_SUCCESS")),
-      s"staging for batch $batchId is not committed")
-    // Files.list mandates a close (javadoc) — an unclosed stream
-    // leaks a directory fd until GC
-    val s = Files.list(staging)
-    val parts = try s.iterator().asScala.toList finally s.close()
-    parts.filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("centroid_id="))
-      .foreach { partDir =>
-        promoteFiles(partDir, Paths.get(indexPath, partDir.getFileName.toString),
-          s"batch$batchId")
-      }
-  }
+  private val SubstrNames =
+    CommitNames("_substr_batch_", ".substr_staging_", "sbatch")
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.operators.StoreFiles.deleteRecursively(p)
+  /** s14's declaration: the store delta (bucket partitions), the
+    * append-only `_meta` high-water row (readers max over rows), the
+    * batch's cleaned output (accumulated under `outPath`) — and, on a
+    * bloom-maintained store, the delta's bloom-sidecar rows. The
+    * sidecar's coverage contract survives every crash window because
+    * the batch is not marked applied until the promote copied BOTH
+    * the delta and its blooms, and the stream replays the batch
+    * (single-maintainer) before any later fold could consult the
+    * sidecar against the new keys. */
+  private[graft] def substrCommit(storePath: String, outPath: String,
+                                  batchId: Long): StagedCommit =
+    SubstrNames.at(storePath, batchId, Seq(
+        Artifact("delta", Some(storePath)),
+        Artifact("meta", Some(s"${storePath}_meta")),
+        Artifact("out", Some(outPath)))
+      ++ (if (graft.operators.BloomSide.maintained(storePath))
+            Seq(Artifact("bloom",
+              Some(s"$storePath/${graft.operators.BloomSide.DirName}")))
+          else Nil))
 
-  /** The committed-staging exactly-once protocol, shared by every
-    * streaming ingest twin (IVF s13, ExactSubstr s14, quantile store
-    * s15, boilerplate s16) AND the batch store folds — implementation
-    * and full protocol notes in
-    * [[graft.operators.StoreFiles.applyBatchIdempotent]]. */
-  private[graft] def applyBatchIdempotent(
-      marker: java.nio.file.Path, staging: java.nio.file.Path)(
-      stage: () => Unit)(promote: () => Unit): Boolean =
-    graft.operators.StoreFiles.applyBatchIdempotent(marker, staging)(
-      stage)(promote)
-
-  /** Copy every `*.parquet` under `srcDir` into `dstDir` under the
-    * deterministic name `<stamp>-<file>` with REPLACE_EXISTING — the
-    * promote step's shared file move
-    * ([[graft.operators.StoreFiles.promoteFiles]]). */
-  private[graft] def promoteFiles(srcDir: java.nio.file.Path,
-                                  dstDir: java.nio.file.Path,
-                                  stamp: String): Unit =
-    graft.operators.StoreFiles.promoteFiles(srcDir, dstDir, stamp)
-
-  /** Fold one document micro-batch into a persisted ExactSubstr
-    * window-key store (the [[graft.operators.DedupSuite.exactSubstrBuildStore]]
-    * layout) exactly once — [[appendIvfBatchIdempotent]]'s
-    * committed-staging protocol applied to a fold that must publish
-    * THREE artifacts atomically-by-replay: the store delta (bucket
-    * partitions), the append-only `_meta` high-water row, and the
-    * batch's cleaned output (accumulated under `outPath`) — plus, on
-    * a bloom-maintained store, the delta's bloom-sidecar rows as a
-    * fourth staged-and-promoted artifact (see [[stageSubstrFold]]'s
-    * coverage argument). The plain
-    * [[graft.operators.DedupSuite.exactSubstrFold]] is crash-redo —
-    * a replayed fold double-appends its delta (counts are not
-    * idempotent); here every window closes:
-    *
-    *  1. `_substr_batch_<id>` marker in the store → applied, skip.
-    *  2. Staging without its commit file is a crashed attempt —
-    *     recompute from the LIVE store (never touched before step 3)
-    *     and stage delta/out/meta; then create `_SUCCESS` (written
-    *     last, so its presence freezes the staging — replay reuses
-    *     it verbatim, never recomputes against a half-promoted
-    *     store).
-    *  3. Promote with DETERMINISTIC names `sbatch<id>-<file>` +
-    *     REPLACE_EXISTING into the store's bucket partitions, the
-    *     meta dir (append-only — readers max over rows), and
-    *     `outPath`: a partial-crash re-copy overwrites the same
-    *     targets byte-identically.
-    *  4. Marker (the commit point), then sweep staging.
-    *
-    * Returns whether the batch was applied (false = replay skip). */
-  def foldSubstrBatchIdempotent(spark: SparkSession, storePath: String,
-                                outPath: String, batch: org.apache.spark.sql.DataFrame,
-                                batchId: Long, l: Int, nBuckets: Int,
-                                hashKeys: Boolean): Boolean = {
-    import java.nio.file.Paths
-    val staging = Paths.get(storePath, s".substr_staging_$batchId")
-    applyBatchIdempotent(
-        Paths.get(storePath, s"_substr_batch_$batchId"), staging) { () =>
-      stageSubstrFold(spark, storePath, staging, batch, l, nBuckets,
-        hashKeys)
-    } { () => promoteStagedSubstrFold(storePath, outPath, batchId) }
-  }
-
-  /** Step 2 of [[foldSubstrBatchIdempotent]]: compute the fold against
-    * the LIVE (not-yet-mutated) store and stage all three artifacts,
-    * committing with a hand-written `_SUCCESS` LAST — a staging dir
-    * without it is a crashed attempt and is restaged from scratch.
-    * Exposed for the spec's crash-window replays. */
-  private[graft] def stageSubstrFold(spark: SparkSession, storePath: String,
-                                     staging: java.nio.file.Path,
-                                     batch: org.apache.spark.sql.DataFrame,
-                                     l: Int, nBuckets: Int,
-                                     hashKeys: Boolean): Unit = {
-    deleteRecursively(staging)
-    // AQE-off clone: the staged fold is a handful of batch-sized
-    // actions whose per-exchange stage-jobs are fixed-latency tax
-    // (StoreCompaction.quietSession); clone-local, so concurrent
-    // streams on the caller's session are untouched
+  /** s14's fold, computed against the LIVE store on an AQE-off clone:
+    * the staged fold is a handful of batch-sized actions whose
+    * per-exchange stage-jobs are fixed-latency tax
+    * (StoreCompaction.quietSession); clone-local, so concurrent
+    * streams on the caller's session are untouched. Delta, out and
+    * bloom derive from the fold's checkpointed join. */
+  private[graft] def substrWriters(spark: SparkSession, storePath: String,
+                                   batch: DataFrame, l: Int, nBuckets: Int,
+                                   hashKeys: Boolean): Map[String, String => Unit] = {
     val qs = graft.operators.StoreCompaction.quietSession(spark)
     val (delta, out, newMax) = graft.operators.DedupSuite
       .computeSubstrFold(qs, storePath,
         org.apache.spark.sql.GraftColumnBridge.onSession(qs, batch),
         "doc_id", "text", l, nBuckets, hashKeys)
-    // delta and out derive from the fold's checkpointed join — fan
-    // out as concurrent jobs; `_SUCCESS` is written strictly last.
-    // Bloom-maintained stores get this fold's delta blooms STAGED as
-    // a third concurrent action and promoted with the delta: the
-    // sidecar's coverage contract survives every crash window because
-    // the batch isn't marked applied until the promote step copied
-    // BOTH the delta and its blooms, and the stream replays the batch
-    // (single-maintainer) before any later fold could consult the
-    // sidecar against the new keys.
-    graft.operators.Par.run(Seq(
-      () => delta.write.partitionBy("bucket") // pre-clustered by bucket
-        .parquet(staging.resolve("delta").toString),
-      () => out.write.parquet(staging.resolve("out").toString))
-      ++ (if (graft.operators.BloomSide.maintained(storePath))
-            Seq[() => Unit](() => graft.operators.BloomSide.stageDelta(
-              delta.select(org.apache.spark.sql.functions.col("bucket"),
-                org.apache.spark.sql.functions.col("wkey")),
-              staging.resolve("bloom").toString, "bucket", "wkey"))
-          else Nil))
-    graft.operators.StoreMeta.writeFile(spark,
-      staging.resolve("meta").toString,
-      graft.operators.DedupSuite.substrMetaFields(newMax, l, nBuckets,
-        hashKeys))
-    java.nio.file.Files.createFile(staging.resolve("_SUCCESS"))
+    Map(
+      // pre-clustered by bucket
+      "delta" -> (dir => delta.write.partitionBy("bucket").parquet(dir)),
+      "out" -> (dir => out.write.parquet(dir)),
+      "meta" -> (dir => graft.operators.StoreMeta.writeFile(spark, dir,
+        graft.operators.DedupSuite.substrMetaFields(newMax, l, nBuckets,
+          hashKeys))),
+      "bloom" -> (dir => graft.operators.BloomSide.stageDelta(
+        delta.select(col("bucket"), col("wkey")), dir, "bucket", "wkey")))
   }
 
-  /** Step 3 of [[foldSubstrBatchIdempotent]]: copy the committed
-    * staging's files into the live store's bucket partitions, the
-    * `_meta` dir, and the accumulated output dir under DETERMINISTIC
-    * `sbatch<id>-<name>` names with REPLACE_EXISTING — a partial-crash
-    * re-copy overwrites the same targets byte-identically. Exposed for
-    * the spec's crash-window replays. */
-  private[graft] def promoteStagedSubstrFold(storePath: String,
-                                             outPath: String,
-                                             batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val staging = Paths.get(storePath, s".substr_staging_$batchId")
-    require(Files.exists(staging.resolve("_SUCCESS")),
-      s"substr staging for batch $batchId is not committed")
-    val stamp = s"sbatch$batchId"
-    val s = Files.list(staging.resolve("delta"))
-    val parts = try s.iterator().asScala.toList finally s.close()
-    parts.filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("bucket="))
-      .foreach { bdir =>
-        promoteFiles(bdir, Paths.get(storePath, bdir.getFileName.toString),
-          stamp)
-      }
-    promoteFiles(staging.resolve("meta"), Paths.get(s"${storePath}_meta"),
-      stamp)
-    promoteFiles(staging.resolve("out"), Paths.get(outPath), stamp)
-    // staged bloom deltas (present iff the store is bloom-maintained)
-    // land in the live sidecar under the same stamp discipline
-    graft.operators.BloomSide.promoteStaged(staging.resolve("bloom"),
-      storePath, stamp)
-  }
+  /** Fold one document micro-batch into a persisted ExactSubstr
+    * window-key store (the [[graft.operators.DedupSuite.exactSubstrBuildStore]]
+    * layout) exactly once through [[substrCommit]]. The plain
+    * [[graft.operators.DedupSuite.exactSubstrFold]] is crash-redo — a
+    * replayed fold double-appends its delta (counts are not
+    * idempotent). Returns whether the batch was applied (false =
+    * replay skip). */
+  def foldSubstrBatchIdempotent(spark: SparkSession, storePath: String,
+                                outPath: String, batch: DataFrame,
+                                batchId: Long, l: Int, nBuckets: Int,
+                                hashKeys: Boolean): Boolean =
+    substrCommit(storePath, outPath, batchId).applyIdempotent(
+      substrWriters(spark, storePath, batch, l, nBuckets, hashKeys))
 
   /** Streaming incremental ExactSubstr ingest (s14): a stream of
     * MONOTONICALLY-ID'd document batches folds into the persisted
     * window-key store, each micro-batch emitting its own cleaned
-    * output — the d26 fold with [[foldSubstrBatchIdempotent]]'s
-    * exactly-once replay protocol. The corpus is never re-windowed:
+    * output — the d26 fold made exactly-once by
+    * [[foldSubstrBatchIdempotent]]. The corpus is never re-windowed:
     * per batch the store join touches only the batch's own crc32
     * buckets, and because ids are monotone the accumulated outputs
     * ∪-equal a full ExactSubstr recompute over corpus ∪ batches —
@@ -455,95 +322,59 @@ object StreamingJobs {
   def streamingSubstrIngest(spark: SparkSession, srcDir: String,
                             schema: StructType, storePath: String,
                             outPath: String, checkpoint: String,
-                            l: Int, nBuckets: Int, hashKeys: Boolean,
-                            maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldSubstrBatchIdempotent(spark, storePath, outPath,
-          batch.toDF(), batchId, l, nBuckets, hashKeys)
-        ()
-      }
-      .start()
-  }
+                            l: Int, nBuckets: Int,
+                            hashKeys: Boolean): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      foldSubstrBatchIdempotent(spark, storePath, outPath,
+        batch, batchId, l, nBuckets, hashKeys)
+      ()
+    }
 
-  /** Fold one micro-batch of (id, 60-bit perceptual hash) rows into a
-    * persisted Hamming band index
-    * ([[graft.operators.DedupSuite.hammingIndexBuild]] layout) exactly
-    * once — the committed-staging protocol around TWO artifacts: the
-    * store delta (bucket partitions — the batch's band rows, so later
-    * batches dedupe against corpus ∪ every earlier batch) and the
-    * batch's NEW-PAIR emission (accumulated under `outPath`; pairs
-    * are final on emission — a pair's hamming distance never changes,
-    * so segments are disjoint and need no latest-wins resolution).
-    * The fold's store read is bucket-pruned
+  private val HammingNames = CommitNames("_ham_batch_", ".ham_staging_", "hbatch")
+
+  /** s18's declaration: the store delta (bucket partitions — the
+    * batch's band rows, so later batches dedupe against corpus ∪
+    * every earlier batch) and the batch's NEW-PAIR emission
+    * (accumulated under `outPath`; pairs are final on emission — a
+    * pair's hamming distance never changes, so segments are disjoint
+    * and need no latest-wins resolution). */
+  private[graft] def hammingCommit(storePath: String, outPath: String,
+                                   batchId: Long): StagedCommit =
+    HammingNames.at(storePath, batchId, Seq(
+      Artifact("delta", Some(storePath)), Artifact("out", Some(outPath))))
+
+  /** s18's fold, on the AQE-off clone (see [[substrWriters]]). The
+    * store read is bucket-pruned
     * ([[graft.operators.DedupSuite.computeHammingFold]]); the corpus
-    * is never re-decoded or re-banded. Returns whether the batch was
-    * applied (false = replay skip). */
-  def foldHammingBatchIdempotent(spark: SparkSession, storePath: String,
-                                 outPath: String,
-                                 batchHashes: org.apache.spark.sql.DataFrame,
-                                 batchId: Long, idCol: String,
-                                 hashCol: String, maxHamming: Int,
-                                 maxBucket: Int = 1000): Boolean = {
-    import java.nio.file.Paths
-    val staging = Paths.get(storePath, s".ham_staging_$batchId")
-    applyBatchIdempotent(
-        Paths.get(storePath, s"_ham_batch_$batchId"), staging) { () =>
-      stageHammingFold(spark, storePath, staging, batchHashes, idCol,
-        hashCol, maxHamming, maxBucket)
-    } { () => promoteStagedHammingFold(storePath, outPath, batchId) }
-  }
-
-  /** Stage step of [[foldHammingBatchIdempotent]]: compute the fold
-    * against the LIVE (not-yet-mutated) store and stage both
-    * artifacts, `_SUCCESS` strictly last. Exposed for the spec's
-    * crash-window replays. */
-  private[graft] def stageHammingFold(spark: SparkSession,
-                                      storePath: String,
-                                      staging: java.nio.file.Path,
-                                      batchHashes: org.apache.spark.sql.DataFrame,
-                                      idCol: String, hashCol: String,
-                                      maxHamming: Int,
-                                      maxBucket: Int): Unit = {
-    deleteRecursively(staging)
+    * is never re-decoded or re-banded. */
+  private[graft] def hammingWriters(spark: SparkSession, storePath: String,
+                                    batchHashes: DataFrame, idCol: String,
+                                    hashCol: String, maxHamming: Int,
+                                    maxBucket: Int): Map[String, String => Unit] = {
     val qs = graft.operators.StoreCompaction.quietSession(spark)
     val (delta, pairs) = graft.operators.DedupSuite.computeHammingFold(
       qs, storePath,
       org.apache.spark.sql.GraftColumnBridge.onSession(qs, batchHashes),
       idCol, hashCol, maxHamming, maxBucket)
-    // delta arrives CLUSTERED by bucket (the fold's one checkpoint);
-    // both staged writes fan out as concurrent jobs
-    graft.operators.Par.run(Seq(
-      () => delta.write.partitionBy("bucket")
-        .parquet(staging.resolve("delta").toString),
-      () => pairs.write.parquet(staging.resolve("out").toString)))
-    java.nio.file.Files.createFile(staging.resolve("_SUCCESS"))
+    // delta arrives CLUSTERED by bucket (the fold's one checkpoint)
+    Map("delta" -> (dir => delta.write.partitionBy("bucket").parquet(dir)),
+      "out" -> (dir => pairs.write.parquet(dir)))
   }
 
-  /** Promote step of [[foldHammingBatchIdempotent]] — deterministic
-    * `hbatch<id>-<name>` names, REPLACE_EXISTING. Exposed for the
-    * spec's crash-window replays. */
-  private[graft] def promoteStagedHammingFold(storePath: String,
-                                              outPath: String,
-                                              batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val staging = Paths.get(storePath, s".ham_staging_$batchId")
-    require(Files.exists(staging.resolve("_SUCCESS")),
-      s"hamming staging for batch $batchId is not committed")
-    val stamp = s"hbatch$batchId"
-    graft.operators.StoreFiles.listDir(staging.resolve("delta"))
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("bucket="))
-      .foreach { bdir =>
-        promoteFiles(bdir, Paths.get(storePath, bdir.getFileName.toString),
-          stamp)
-      }
-    promoteFiles(staging.resolve("out"), Paths.get(outPath), stamp)
-  }
+  /** Fold one micro-batch of (id, 60-bit perceptual hash) rows into a
+    * persisted Hamming band index
+    * ([[graft.operators.DedupSuite.hammingIndexBuild]] layout) exactly
+    * once through [[hammingCommit]]. Returns whether the batch was
+    * applied (false = replay skip). */
+  def foldHammingBatchIdempotent(spark: SparkSession, storePath: String,
+                                 outPath: String,
+                                 batchHashes: DataFrame,
+                                 batchId: Long, idCol: String,
+                                 hashCol: String, maxHamming: Int,
+                                 maxBucket: Int = 1000): Boolean =
+    hammingCommit(storePath, outPath, batchId).applyIdempotent(
+      hammingWriters(spark, storePath, batchHashes, idCol, hashCol,
+        maxHamming, maxBucket))
 
   /** Streaming multimodal ingest (s18): a stream of media batches
     * folds into the persisted Hamming band index, each micro-batch
@@ -564,50 +395,44 @@ object StreamingJobs {
                              outPath: String, checkpoint: String,
                              hashesOf: DataFrame => DataFrame,
                              idCol: String, hashCol: String,
-                             maxHamming: Int = 3, maxBucket: Int = 1000,
-                             maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldHammingBatchIdempotent(spark, storePath, outPath,
-          hashesOf(batch.toDF()), batchId, idCol, hashCol, maxHamming,
-          maxBucket)
-        ()
-      }
-      .start()
-  }
+                             maxHamming: Int = 3,
+                             maxBucket: Int = 1000): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      foldHammingBatchIdempotent(spark, storePath, outPath,
+        hashesOf(batch), batchId, idCol, hashCol, maxHamming, maxBucket)
+      ()
+    }
+
+  private val QuantileNames = CommitNames("_qbatch_", ".qstore_staging_", "qbatch")
+
+  /** s15's declaration: one delta of additive cell counts, promoted
+    * into the store root. */
+  private[graft] def quantileCommit(storePath: String,
+                                    batchId: Long): StagedCommit =
+    QuantileNames.at(storePath, batchId,
+      Seq(Artifact("delta", Some(storePath))))
+
+  private[graft] def quantileWriters(spark: SparkSession, storePath: String,
+                                     batch: DataFrame,
+                                     grp: org.apache.spark.sql.Column,
+                                     value: org.apache.spark.sql.Column): Map[String, String => Unit] =
+    Map("delta" -> (dir => graft.operators.Quantiles.stageQuantileDelta(
+      spark, storePath, batch, grp, value, dir)))
 
   /** Fold one micro-batch's cell counts into a persisted quantile
     * store ([[graft.operators.Quantiles.buildQuantileStore]] layout)
-    * exactly once — the committed-staging protocol around a
-    * single-artifact delta. Counts are associative and
-    * order-independent, so batches commute and need no ordering
+    * exactly once through [[quantileCommit]]. Counts are associative
+    * and order-independent, so batches commute and need no ordering
     * contract; what the protocol buys is REPLAY safety (a re-run
     * batch must not double-count). Returns whether the batch was
     * applied. */
   def foldQuantileBatchIdempotent(spark: SparkSession, storePath: String,
-                                  batch: org.apache.spark.sql.DataFrame,
+                                  batch: DataFrame,
                                   grp: org.apache.spark.sql.Column,
                                   value: org.apache.spark.sql.Column,
-                                  batchId: Long): Boolean = {
-    import java.nio.file.{Files, Paths}
-    val staging = Paths.get(storePath, s".qstore_staging_$batchId")
-    applyBatchIdempotent(
-        Paths.get(storePath, s"_qbatch_$batchId"), staging) { () =>
-      deleteRecursively(staging)
-      graft.operators.Quantiles.stageQuantileDelta(spark, storePath,
-        batch, grp, value, staging.resolve("delta").toString)
-      Files.createFile(staging.resolve("_SUCCESS"))
-    } { () =>
-      require(Files.exists(staging.resolve("_SUCCESS")),
-        s"quantile staging for batch $batchId is not committed")
-      promoteFiles(staging.resolve("delta"), Paths.get(storePath),
-        s"qbatch$batchId")
-    }
-  }
+                                  batchId: Long): Boolean =
+    quantileCommit(storePath, batchId).applyIdempotent(
+      quantileWriters(spark, storePath, batch, grp, value))
 
   /** Streaming incremental quantile-store ingest (s15): a stream of
     * (group, value) batches folds additive cell-count deltas into the
@@ -619,83 +444,51 @@ object StreamingJobs {
   def streamingQuantileIngest(spark: SparkSession, srcDir: String,
                               schema: StructType, storePath: String,
                               checkpoint: String, grpCol: String,
-                              valueCol: String,
-                              maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldQuantileBatchIdempotent(spark, storePath, batch.toDF(),
-          org.apache.spark.sql.functions.col(grpCol),
-          org.apache.spark.sql.functions.col(valueCol), batchId)
-        ()
-      }
-      .start()
+                              valueCol: String): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      foldQuantileBatchIdempotent(spark, storePath, batch,
+        col(grpCol), col(valueCol), batchId)
+      ()
+    }
+
+  /** s16's declaration ([[graft.operators.Boilerplate.foldCommit]]
+    * under the streaming names), with the changelog promoted into
+    * `outPath`. */
+  private[graft] def boilerplateCommit(storePath: String, outPath: String,
+                                       batchId: Long): StagedCommit =
+    graft.operators.Boilerplate.foldCommit(
+      graft.operators.Boilerplate.StreamNames, storePath, batchId,
+      Some(outPath))
+
+  /** s16's fold on the AQE-off clone (see [[substrWriters]]), its
+    * changelog stamped `seq = batchId`. */
+  private[graft] def boilerplateWriters(spark: SparkSession, storePath: String,
+                                        batch: DataFrame, batchId: Long,
+                                        minDocs: Long, nBuckets: Int,
+                                        nDocBuckets: Int): Map[String, String => Unit] = {
+    val qs = graft.operators.StoreCompaction.quietSession(spark)
+    graft.operators.Boilerplate.foldWriters(qs, storePath,
+      org.apache.spark.sql.GraftColumnBridge.onSession(qs, batch),
+      "doc_id", "text", minDocs, nBuckets, nDocBuckets, seq = batchId)
   }
 
   /** Fold one document micro-batch into a persisted boilerplate store
-    * ([[graft.operators.Boilerplate.buildStore]] layout) exactly once —
-    * the committed-staging protocol around the fold's SIX artifacts:
-    * the pair-store delta (bucket partitions), the counts-store delta
-    * (bucket partitions), the doc-store append (dbucket partitions),
-    * the crossed-lines dictionary append, the `_meta` high-water row,
-    * and the batch's CHANGELOG emission
-    * (cleaned batch + re-emissions of stored docs a threshold crossing
-    * invalidated) accumulated under `outPath` with `seq = batchId` —
+    * ([[graft.operators.Boilerplate.buildStore]] layout) exactly once
+    * through [[boilerplateCommit]]. The batch's CHANGELOG (cleaned
+    * batch + re-emissions of stored docs a threshold crossing
+    * invalidated) accumulates under `outPath` with `seq = batchId` —
     * boilerplate cleaning is RETROACTIVE, so unlike s14's disjoint
     * outputs the accumulated changelog overlaps and readers resolve
     * latest-seq-per-doc. Returns whether the batch was applied. */
   def foldBoilerplateBatchIdempotent(spark: SparkSession, storePath: String,
                                      outPath: String,
-                                     batch: org.apache.spark.sql.DataFrame,
+                                     batch: DataFrame,
                                      batchId: Long, minDocs: Long,
                                      nBuckets: Int,
-                                     nDocBuckets: Int): Boolean = {
-    import java.nio.file.Paths
-    val staging = Paths.get(storePath, s".boiler_staging_$batchId")
-    applyBatchIdempotent(
-        Paths.get(storePath, s"_boiler_batch_$batchId"), staging) { () =>
-      stageBoilerplateFold(spark, storePath, staging, batch, batchId,
-        minDocs, nBuckets, nDocBuckets)
-    } { () => promoteStagedBoilerplateFold(storePath, outPath, batchId) }
-  }
-
-  /** Stage step of [[foldBoilerplateBatchIdempotent]]: compute the fold
-    * against the LIVE (not-yet-mutated) store
-    * ([[graft.operators.Boilerplate.computeFold]] — reads nothing from
-    * the store after it returns) and stage all five artifacts, with a
-    * hand-written `_SUCCESS` LAST. Exposed for the spec's crash-window
-    * replays. */
-  private[graft] def stageBoilerplateFold(spark: SparkSession,
-                                          storePath: String,
-                                          staging: java.nio.file.Path,
-                                          batch: org.apache.spark.sql.DataFrame,
-                                          batchId: Long, minDocs: Long,
-                                          nBuckets: Int,
-                                          nDocBuckets: Int): Unit = {
-    // AQE-off clone (StoreCompaction.quietSession): same rationale as
-    // the substr twin above
-    val qs = graft.operators.StoreCompaction.quietSession(spark)
-    graft.operators.Boilerplate.stageFold(qs, storePath, staging,
-      org.apache.spark.sql.GraftColumnBridge.onSession(qs, batch),
-      "doc_id", "text", minDocs, nBuckets, nDocBuckets,
-      seq = batchId)
-    ()
-  }
-
-  /** Promote step of [[foldBoilerplateBatchIdempotent]]: copy the
-    * committed staging into the live sub-stores under DETERMINISTIC
-    * `bbatch<id>-<name>` names with REPLACE_EXISTING — a partial-crash
-    * re-copy overwrites the same targets byte-identically. Exposed for
-    * the spec's crash-window replays. */
-  private[graft] def promoteStagedBoilerplateFold(storePath: String,
-                                                  outPath: String,
-                                                  batchId: Long): Unit =
-    graft.operators.Boilerplate.promoteFold(storePath,
-      java.nio.file.Paths.get(storePath, s".boiler_staging_$batchId"),
-      s"bbatch$batchId", Some(outPath))
+                                     nDocBuckets: Int): Boolean =
+    boilerplateCommit(storePath, outPath, batchId).applyIdempotent(
+      boilerplateWriters(spark, storePath, batch, batchId, minDocs,
+        nBuckets, nDocBuckets))
 
   /** Streaming incremental boilerplate ingest (s16): a stream of
     * MONOTONICALLY-ID'd document batches folds into the persisted
@@ -711,77 +504,46 @@ object StreamingJobs {
                                  schema: StructType, storePath: String,
                                  outPath: String, checkpoint: String,
                                  minDocs: Long, nBuckets: Int,
-                                 nDocBuckets: Int,
-                                 maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldBoilerplateBatchIdempotent(spark, storePath, outPath,
-          batch.toDF(), batchId, minDocs, nBuckets, nDocBuckets)
-        ()
-      }
-      .start()
+                                 nDocBuckets: Int): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      foldBoilerplateBatchIdempotent(spark, storePath, outPath,
+        batch, batchId, minDocs, nBuckets, nDocBuckets)
+      ()
+    }
+
+  private val PackNames = CommitNames("_pack_batch_", ".pack_staging_", "pbatch")
+
+  /** s17's declaration: the batch's span emission (accumulated under
+    * `outPath`; spans are final on emission — the stream only grows
+    * at the end, so segments are disjoint and no latest-wins
+    * resolution is needed) and the additive `_meta` high-water row. */
+  private[graft] def packCommit(storePath: String, outPath: String,
+                                batchId: Long): StagedCommit =
+    PackNames.at(storePath, batchId, Seq(
+      Artifact("out", Some(outPath)),
+      Artifact("meta", Some(s"${storePath}_meta"))))
+
+  private[graft] def packWriters(spark: SparkSession, storePath: String,
+                                 batch: DataFrame, seqLen: Long,
+                                 docsPerShard: Long): Map[String, String => Unit] = {
+    val (spans, newMax, delta) = graft.operators.Pack.computeSpanFold(
+      spark, storePath, batch, "doc_id", col("n"), seqLen, docsPerShard)
+    Map("out" -> (dir => spans.write.parquet(dir)),
+      "meta" -> (dir => graft.operators.StoreMeta.writeFile(spark, dir,
+        graft.operators.Pack.spanMetaFields(newMax, delta, seqLen))))
   }
 
   /** Fold one (doc_id, n) token-count micro-batch into a persisted
     * sequence-packing span store
-    * ([[graft.operators.Pack.buildSpanStore]] layout) exactly once —
-    * the committed-staging protocol around TWO artifacts: the batch's
-    * span emission (accumulated under `outPath`; spans are final on
-    * emission — the stream only grows at the end, so segments are
-    * disjoint and no latest-wins resolution is needed) and the
-    * additive `_meta` high-water row. Returns whether the batch was
-    * applied. */
+    * ([[graft.operators.Pack.buildSpanStore]] layout) exactly once
+    * through [[packCommit]]. Returns whether the batch was applied. */
   def foldPackBatchIdempotent(spark: SparkSession, storePath: String,
                               outPath: String,
-                              batch: org.apache.spark.sql.DataFrame,
+                              batch: DataFrame,
                               batchId: Long, seqLen: Long,
-                              docsPerShard: Long): Boolean = {
-    import java.nio.file.Paths
-    val staging = Paths.get(storePath, s".pack_staging_$batchId")
-    applyBatchIdempotent(
-        Paths.get(storePath, s"_pack_batch_$batchId"), staging) { () =>
-      stagePackFold(spark, storePath, staging, batch, seqLen, docsPerShard)
-    } { () => promoteStagedPackFold(storePath, outPath, batchId) }
-  }
-
-  /** Stage step of [[foldPackBatchIdempotent]] — compute against the
-    * LIVE (not-yet-mutated) meta, stage spans + the additive meta
-    * row, `_SUCCESS` last. Exposed for the spec's crash-window
-    * replays. */
-  private[graft] def stagePackFold(spark: SparkSession, storePath: String,
-                                   staging: java.nio.file.Path,
-                                   batch: org.apache.spark.sql.DataFrame,
-                                   seqLen: Long,
-                                   docsPerShard: Long): Unit = {
-    deleteRecursively(staging)
-    val (spans, newMax, delta) = graft.operators.Pack.computeSpanFold(
-      spark, storePath, batch, "doc_id", col("n"), seqLen, docsPerShard)
-    spans.write.parquet(staging.resolve("out").toString)
-    graft.operators.StoreMeta.writeFile(spark,
-      staging.resolve("meta").toString,
-      graft.operators.Pack.spanMetaFields(newMax, delta, seqLen))
-    java.nio.file.Files.createFile(staging.resolve("_SUCCESS"))
-  }
-
-  /** Promote step of [[foldPackBatchIdempotent]] — deterministic
-    * `pbatch<id>-<name>` names, REPLACE_EXISTING. Exposed for the
-    * spec's crash-window replays. */
-  private[graft] def promoteStagedPackFold(storePath: String,
-                                           outPath: String,
-                                           batchId: Long): Unit = {
-    import java.nio.file.{Files, Paths}
-    val staging = Paths.get(storePath, s".pack_staging_$batchId")
-    require(Files.exists(staging.resolve("_SUCCESS")),
-      s"pack staging for batch $batchId is not committed")
-    promoteFiles(staging.resolve("out"), Paths.get(outPath),
-      s"pbatch$batchId")
-    promoteFiles(staging.resolve("meta"),
-      Paths.get(s"${storePath}_meta"), s"pbatch$batchId")
-  }
+                              docsPerShard: Long): Boolean =
+    packCommit(storePath, outPath, batchId).applyIdempotent(
+      packWriters(spark, storePath, batch, seqLen, docsPerShard))
 
   /** Streaming incremental sequence packing (s17): a stream of
     * MONOTONICALLY-ID'd (doc_id, n_tokens) batches extends the global
@@ -793,20 +555,12 @@ object StreamingJobs {
   def streamingPackIngest(spark: SparkSession, srcDir: String,
                           schema: StructType, storePath: String,
                           outPath: String, checkpoint: String,
-                          seqLen: Long, docsPerShard: Long,
-                          maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        foldPackBatchIdempotent(spark, storePath, outPath, batch.toDF(),
-          batchId, seqLen, docsPerShard)
-        ()
-      }
-      .start()
-  }
+                          seqLen: Long, docsPerShard: Long): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      foldPackBatchIdempotent(spark, storePath, outPath, batch,
+        batchId, seqLen, docsPerShard)
+      ()
+    }
 
   /** Streaming incremental IVF ingest (s13): a stream of vector
     * batches grows a persisted, centroid-partitioned IVF index —
@@ -822,20 +576,12 @@ object StreamingJobs {
     * from the grown index against e10's full-pipeline oracle. */
   def streamingIvfIngest(spark: SparkSession, srcDir: String,
                          schema: StructType, indexPath: String,
-                         centroids: org.apache.spark.sql.DataFrame,
-                         checkpoint: String,
-                         maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(nf => reader.option("maxFilesPerTrigger", nf))
-    reader.parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        appendIvfBatchIdempotent(indexPath, centroids, batch.toDF(), batchId)
-        ()
-      }
-      .start()
-  }
+                         centroids: DataFrame,
+                         checkpoint: String): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      appendIvfBatchIdempotent(indexPath, centroids, batch, batchId)
+      ()
+    }
 
   final case class Keyed(id: Long, version: Long, payload: String)
 

@@ -222,9 +222,12 @@ class BoilerplateStoreSpec extends SparkSpec {
     // but the staging never swept and the changelog never delivered
     val foldId = 6L // batch1's doc high-water
     val staging = Paths.get(store, s".boiler_fold_staging_$foldId")
-    Boilerplate.stageFold(spark, store, staging, batch1, "doc_id", "text",
-      m, nB, 8, seq = foldId)
-    Boilerplate.promoteFold(store, staging, s"bfold$foldId", None)
+    val commit = Boilerplate.foldCommit(Boilerplate.FoldNames, store,
+      foldId, None)
+    commit.stage(Boilerplate.foldWriters(spark, store, batch1, "doc_id",
+      "text", m, nB, 8, seq = foldId))
+    commit.promote()
+    assert(Files.exists(staging.resolve("_SUCCESS")))
     Files.createFile(Paths.get(store, s"_boiler_fold_$foldId"))
     // the replay must recover the staged changelog instead of
     // stranding it behind an 'already applied' error

@@ -67,7 +67,7 @@ class StreamingMergeSpec extends SparkSpec {
       raw.filter($"event_id" % 3 === i).write.parquet(s"$src/b$i")
     }
     val q = graft.streaming.StreamingJobs.streamingIncrementalMart(
-      spark, s"$src/*", raw.schema, mart, ckpt, maxFilesPerTrigger = Some(1))
+      spark, s"$src/*", raw.schema, mart, ckpt)
     try q.processAllAvailable() finally q.stop()
     // one versioned publish per micro-batch, at least one per source
     // file's worth of data (files may produce >1 part each)

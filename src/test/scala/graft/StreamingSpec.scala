@@ -300,6 +300,93 @@ class StreamingSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  test("staged commit converges across every crash window with plain file writers") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.operators.StoreFiles.{Artifact, StagedCommit}
+    def put(dir: Path, rel: String, body: String): Unit = {
+      val p = dir.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, body.getBytes("UTF-8"))
+    }
+    // two promoted artifacts (one with top-level AND k=v files) and
+    // one staged-only artifact
+    def commitAt(root: Path) = StagedCommit(root.toString, "_m_1", ".st_1",
+      "b1", Seq(Artifact("delta", Some(root.resolve("live").toString)),
+        Artifact("out", Some(root.resolve("out").toString)),
+        Artifact("log", None)))
+    val writers: Map[String, String => Unit] = Map(
+      "delta" -> { d =>
+        put(Paths.get(d), "part-0.parquet", "d0")
+        put(Paths.get(d), "k=1/part-1.parquet", "d1")
+        put(Paths.get(d), "k=2/part-2.parquet", "d2")
+        put(Paths.get(d), "k=2/_SUCCESS", "")
+      },
+      "out" -> (d => put(Paths.get(d), "part-0.parquet", "o0")),
+      "log" -> (d => put(Paths.get(d), "part-0.parquet", "l0")))
+    // the live tree (marker included, staging excluded): name -> bytes
+    def live(root: Path): Map[String, Seq[Byte]] = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString)
+        .filterNot(_.startsWith("."))
+        .map(n => n -> Files.readAllBytes(root.resolve(n)).toSeq).toMap
+      finally w.close()
+    }
+    def fresh(): Path = {
+      val r = Files.createTempDirectory("staged_commit")
+      put(r, "live/seed.parquet", "seed")
+      put(r, "out/seed.parquet", "seed")
+      r
+    }
+
+    val clean = fresh()
+    assert(commitAt(clean).applyIdempotent(writers))
+    val want = live(clean)
+    assert(want.keySet == Set("_m_1", "live/seed.parquet",
+      "out/seed.parquet", "live/b1-part-0.parquet",
+      "live/k=1/b1-part-1.parquet", "live/k=2/b1-part-2.parquet",
+      "out/b1-part-0.parquet"))
+
+    // marker present with a leaked staging: skip, sweep, live untouched
+    commitAt(clean).stage(writers)
+    assert(Files.exists(clean.resolve(".st_1/_SUCCESS")))
+    assert(!commitAt(clean).applyIdempotent(writers))
+    assert(!Files.exists(clean.resolve(".st_1")), "leaked staging is swept")
+    assert(live(clean) == want)
+
+    // crash mid-promote: one file copied, one torn; the replay reuses
+    // the committed staging and converges to the clean run's names
+    // and bytes
+    val torn = fresh()
+    commitAt(torn).stage(writers)
+    Files.createDirectories(torn.resolve("live/k=1"))
+    Files.copy(torn.resolve(".st_1/delta/k=1/part-1.parquet"),
+      torn.resolve("live/k=1/b1-part-1.parquet"))
+    Files.write(torn.resolve("live/b1-part-0.parquet"), "d".getBytes("UTF-8"))
+    var restaged = 0
+    assert(commitAt(torn).applyIdempotent { restaged += 1; writers })
+    assert(restaged == 0, "a committed staging is reused, never restaged")
+    assert(live(torn) == want)
+    assert(!Files.exists(torn.resolve(".st_1")))
+
+    // promote on a staging without _SUCCESS throws
+    val bare = fresh()
+    put(bare, ".st_1/delta/part-0.parquet", "half")
+    intercept[IllegalArgumentException](commitAt(bare).promote())
+
+    // a committed staging missing a declared artifact throws before
+    // any file moves, and writes no marker
+    val partial = fresh()
+    val before = live(partial)
+    put(partial, ".st_1/delta/part-0.parquet", "d0")
+    put(partial, ".st_1/_SUCCESS", "")
+    intercept[IllegalStateException](
+      commitAt(partial).applyIdempotent(writers))
+    assert(!Files.exists(partial.resolve("_m_1")))
+    assert(live(partial) == before)
+  }
+
   test("s13 IVF ingest batches are replay-idempotent and grow the index exactly once") {
     import graft.operators.Similarity
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
@@ -333,9 +420,11 @@ class StreamingSpec extends SparkSpec {
     val batch3 = emb.filter($"vec_id" % 10 === 7)
       .select(($"vec_id" + 3000000L).as("vec_id"), $"embedding")
     val b3n = batch3.count()
-    Similarity.stageIvfBatch(batch3, s"$root/.staging_batch_9", cent,
-      "vec_id", "embedding")
-    StreamingJobs.promoteStagedIvfBatch(root, 9L)
+    val commit9 = StreamingJobs.ivfCommit(root, 9L)
+    commit9.stage(StreamingJobs.ivfWriters(cent, batch3))
+    commit9.promote()
+    assert(Files.exists(
+      java.nio.file.Paths.get(s"$root/.staging_batch_9", "_SUCCESS")))
     assert(spark.read.parquet(root).count() == preCrash + b3n,
       "the crashed attempt had already applied the batch")
     assert(StreamingJobs.appendIvfBatchIdempotent(root, cent, batch3, 9L))
@@ -396,9 +485,11 @@ class StreamingSpec extends SparkSpec {
     // file names, write the marker, and sweep
     val b1 = mkDocs(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".substr_staging_1")
-    StreamingJobs.stageSubstrFold(spark, store, staging1, b1, 8, 8,
-      hashKeys = true)
-    StreamingJobs.promoteStagedSubstrFold(store, out, 1L)
+    val commit1 = StreamingJobs.substrCommit(store, out, 1L)
+    commit1.stage(StreamingJobs.substrWriters(spark, store, b1, 8, 8,
+      hashKeys = true))
+    commit1.promote()
+    assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (sr1, or1, mr1) = (storeRows, outRows, metaRows)
     assert(StreamingJobs.foldSubstrBatchIdempotent(
       spark, store, out, b1, 1L, 8, 8, hashKeys = true))
@@ -467,9 +558,11 @@ class StreamingSpec extends SparkSpec {
     // deterministic file names
     val b1 = df.filter($"doc_id" % 3 === 2 && $"doc_id" % 2 === 0)
     val staging1 = java.nio.file.Paths.get(store, ".ham_staging_1")
-    StreamingJobs.stageHammingFold(spark, store, staging1, b1,
-      "doc_id", "ph", maxHamming = 3, maxBucket = 1000)
-    StreamingJobs.promoteStagedHammingFold(store, out, 1L)
+    val commit1 = StreamingJobs.hammingCommit(store, out, 1L)
+    commit1.stage(StreamingJobs.hammingWriters(spark, store, b1,
+      "doc_id", "ph", maxHamming = 3, maxBucket = 1000))
+    commit1.promote()
+    assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (sr1, or1) = (storeRows, outRows)
     assert(StreamingJobs.foldHammingBatchIdempotent(
       spark, store, out, b1, 1L, "doc_id", "ph", maxHamming = 3))
@@ -540,11 +633,11 @@ class StreamingSpec extends SparkSpec {
     // crash window: staged + promoted, marker missing — replay
     // converges to the same deterministic file names
     val staging = java.nio.file.Paths.get(store, ".qstore_staging_1")
-    Quantiles.stageQuantileDelta(spark, store, b2, col("g"), col("x"),
-      staging.resolve("delta").toString)
-    Files.createFile(staging.resolve("_SUCCESS"))
-    StreamingJobs.promoteFiles(staging.resolve("delta"),
-      java.nio.file.Paths.get(store), "qbatch1")
+    val commit1 = StreamingJobs.quantileCommit(store, 1L)
+    commit1.stage(StreamingJobs.quantileWriters(spark, store, b2,
+      col("g"), col("x")))
+    commit1.promote()
+    assert(Files.exists(staging.resolve("_SUCCESS")))
     val sr1 = storeRows
     assert(StreamingJobs.foldQuantileBatchIdempotent(
       spark, store, b2, col("g"), col("x"), 1L))
@@ -613,8 +706,11 @@ class StreamingSpec extends SparkSpec {
     // the half-promoted store
     val b1 = mkDocs(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".boiler_staging_1")
-    StreamingJobs.stageBoilerplateFold(spark, store, staging1, b1, 1L, m, 8, 4)
-    StreamingJobs.promoteStagedBoilerplateFold(store, out, 1L)
+    val commit1 = StreamingJobs.boilerplateCommit(store, out, 1L)
+    commit1.stage(StreamingJobs.boilerplateWriters(spark, store, b1, 1L,
+      m, 8, 4))
+    commit1.promote()
+    assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (or1, mr1) = (outRows, metaRows)
     assert(StreamingJobs.foldBoilerplateBatchIdempotent(
       spark, store, out, b1, 1L, m, 8, 4))
@@ -683,8 +779,10 @@ class StreamingSpec extends SparkSpec {
     // promoted meta would shift the stream and fail the guard)
     val b1 = mkCounts(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".pack_staging_1")
-    StreamingJobs.stagePackFold(spark, store, staging1, b1, 64, 7)
-    StreamingJobs.promoteStagedPackFold(store, out, 1L)
+    val commit1 = StreamingJobs.packCommit(store, out, 1L)
+    commit1.stage(StreamingJobs.packWriters(spark, store, b1, 64, 7))
+    commit1.promote()
+    assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (or1, mr1) = (outRows, metaRows)
     assert(StreamingJobs.foldPackBatchIdempotent(
       spark, store, out, b1, 1L, 64, 7))
