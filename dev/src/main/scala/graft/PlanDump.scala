@@ -15,55 +15,28 @@ object PlanDump {
     sb.append("Key properties to check per plan: `PushedFilters` at the scan,\n")
     sb.append("pruned `ReadSchema`, partial `HashAggregate` before `Exchange`,\n")
     sb.append("`BroadcastHashJoin` for small sides, `WholeStageCodegen` spans.\n")
-    // The streaming entries start a real stream inside the query
-    // function (start/processAllAvailable/stop), so asking for their
-    // plan would EXECUTE them and dump the post-hoc batch plan of the
-    // memory sink table — not reviewable evidence. Annotated instead.
-    val streaming = Map(
-      "s1_stream_tumbling" ->
-        "streaming: watermarked tumbling agg; state-store HashAggregate, complete mode",
-      "s2_stream_sliding" ->
-        "streaming: watermarked sliding agg (1h/30m); state-store HashAggregate, complete mode",
-      "s3_stream_dedup" ->
-        "streaming: StreamingDeduplicate over (user_id, event_type); append mode",
-      "s4_stream_sessions" ->
-        "streaming: native session_window agg (merging session state); complete mode, batch-q25 oracle parity",
-      "s5_stream_mart" ->
-        "streaming: foreachBatch incremental mart (3 micro-batches, versioned-staging publish per batch); batch-q24 oracle parity",
-      "s6_stream_interval_join" ->
-        "streaming: stream-stream watermarked interval join (state bounded by the join range); append mode, batch-q38 oracle parity",
-      "s7_stream_dedup_watermark" ->
-        "streaming: dropDuplicatesWithinWatermark over ordered single-file micro-batches (deterministic watermark schedule); state bounded by the watermark horizon, DuckDB batch-simulation oracle",
-      "s8_stream_heavy_hitters" ->
-        "streaming: Misra-Gries sketch in mapGroupsWithState across 3 ordered micro-batches, finalized by the q76 two-pass exact recheck; update mode, batch-q76 oracle parity",
-      "s9_stream_cdc_apply" ->
-        "streaming: foreachBatch CDC apply (upsert+delete per micro-batch into versioned staging, state broadcast-probed, never shuffled); roundtrip oracle apply(old, diff(old,new)) == new",
-      "s10_stream_enrich" ->
-        "streaming: stream-static broadcast enrichment (per-event dim lookup; stateless, shuffle-free stream side - no state store, no watermark); append mode, batch join+rollup oracle parity",
-      "s11_stream_near_dup" ->
-        "streaming: foreachBatch incremental MinHash-LSH near-dup (persisted corpus band index probed AND grown per micro-batch; corpus never re-shingled); oracle = three chained d19 pipelines with index_i = corpus + batches<i",
-      "s12_stream_ann_serve" ->
-        "streaming: foreachBatch ANN serving — per-batch pqScore of the query stream against a STATIC precomputed PQ code table (stateless, index never reshuffled); oracle = batch e9 over all queries",
-      "s13_stream_ivf_ingest" ->
-        "streaming: foreachBatch incremental IVF ingest — vector batches appended into the persisted centroid-partitioned index against FROZEN centroids (corpus never re-read, per-batch replay markers); post-drain serve from the grown index, oracle = e10's full IVF pipeline over corpus + clone batches")
+    // The streaming entries read the materialized result of the shared
+    // stream pass, so asking for their plan would RUN the pass and
+    // dump the post-hoc read of its output — not reviewable evidence.
+    // Annotated instead; each stream's design notes sit on its
+    // declaration in SparkEntry.streams.
+    val streaming = SparkEntry.streams.map(_.entry).toSet
     sb.append(s"\n${SparkEntry.queries.size} declared queries: " +
       s"${SparkEntry.queries.size - streaming.size} batch plans below + " +
       s"${streaming.size} streaming " +
       "entries (annotated, not planned — they execute eagerly).\n")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      streaming.get(name) match {
-        case Some(note) =>
-          sb.append(s"\n## $name\n\n(executes eagerly — $note; " +
-            "see SparkEntry.runEventStream and StreamingSpec)\n")
-        case None =>
-          try {
-            val plan = fn(spark, dir).queryExecution.executedPlan.toString
-            sb.append(s"\n## $name\n\n```\n${plan.take(4000)}\n```\n")
-          } catch {
-            case e: Throwable =>
-              sb.append(s"\n## $name\n\n(plan unavailable: ${e.getMessage})\n")
-          }
-      }
+      if (streaming(name))
+        sb.append(s"\n## $name\n\n(executes eagerly — a stream of the " +
+          "shared pass, graft.streaming.StreamPass; see StreamingSpec)\n")
+      else
+        try {
+          val plan = fn(spark, dir).queryExecution.executedPlan.toString
+          sb.append(s"\n## $name\n\n```\n${plan.take(4000)}\n```\n")
+        } catch {
+          case e: Throwable =>
+            sb.append(s"\n## $name\n\n(plan unavailable: ${e.getMessage})\n")
+        }
     }
     // q101's store-served dispatcher: the claim is the OBSERVATION
     // SCAN over the row source is absent — seeds (n, lo, hi per
@@ -294,12 +267,7 @@ object PlanDump {
       import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit}
       import spark.implicits._
       val qtmp = Files.createTempDirectory("plandump_q95")
-      sys.addShutdownHook {
-        val w = Files.walk(qtmp)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        finally w.close()
-      }
+      sys.addShutdownHook(graft.operators.StoreFiles.deleteRecursively(qtmp))
       spark.range(100000).select(
           (col("id") % 7).cast("string").as("g"), col("id").as("x"))
         .write.parquet(s"$qtmp/rows")

@@ -190,23 +190,10 @@ object BloomSide {
   def pruneBuckets(spark: SparkSession, path: String, buckets: Seq[Long],
                    hashesByBucket: Map[Long, Array[Long]],
                    maxBytes: Long = 64L << 20): Seq[Long] = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val r = root(path)
-    if (!Files.isDirectory(r)) return buckets
-    val dirs = buckets.map(b => b -> r.resolve(s"bucket=$b"))
-      .filter { case (_, d) => Files.isDirectory(d) }
-    if (dirs.isEmpty) return buckets
-    val files = dirs.map { case (b, d) =>
-      val s = Files.list(d)
-      try b -> s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }.toList
-      finally s.close()
-    }
+    val files = StoreFiles.bucketFiles(root(path), buckets)
+    if (files.isEmpty) return buckets
     val bytes = files.iterator.flatMap(_._2).map(p =>
-      try Files.size(p) catch { case _: Throwable => 0L }).sum
+      try java.nio.file.Files.size(p) catch { case _: Throwable => 0L }).sum
     if (bytes > maxBytes) return buckets
     // (items, bloom) rows per bucket, read driver-direct. Reader
     // setup dominates (tens of ms per file open), so the per-file

@@ -516,23 +516,8 @@ object DedupSuite {
     * output from its own delta append. `private[graft]` so the spec
     * asserts the inventory on exactly the production selection. */
   private[graft] def hammingStoreFiles(path: String,
-                                       buckets: Seq[Long]): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    buckets.flatMap { b =>
-      val d = Paths.get(path, s"bucket=$b")
-      if (Files.isDirectory(d)) {
-        val s = Files.list(d)
-        try s.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .map(_.toString).toList
-        finally s.close()
-      } else Nil
-    }
-  }
+                                       buckets: Seq[Long]): Seq[String] =
+    StoreFiles.bucketFilePaths(path, buckets)
 
   /** The Hamming fold's pure computation — everything
     * [[hammingIndexFold]] does except touching the store: reads the
@@ -1005,23 +990,8 @@ object DedupSuite {
     *    fold's delta), which closes the exchange-reuse duplicate-keep
     *    regression the previous checkpoint existed to prevent. */
   private[graft] def substrStoreFiles(path: String,
-                                      buckets: Seq[Long]): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    buckets.flatMap { b =>
-      val d = Paths.get(path, s"bucket=$b")
-      if (Files.isDirectory(d)) {
-        val s = Files.list(d)
-        try s.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .map(_.toString).toList
-        finally s.close()
-      } else Nil
-    }
-  }
+                                      buckets: Seq[Long]): Seq[String] =
+    StoreFiles.bucketFilePaths(path, buckets)
 
   /** Initialize a persisted window-key store for incremental
     * ExactSubstr ingest AND return the corpus's cleaned output (the

@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** Small-files maintenance for the persisted serving stores (q91
@@ -45,21 +44,10 @@ import org.apache.spark.sql.SparkSession
   * oracle gates over post-compaction stores.
   */
 object StoreCompaction {
+  import StoreFiles.{deleteRecursively, isDataFile, listDir}
 
   final case class CompactionReport(partitionsCompacted: Int,
                                     filesBefore: Long, filesAfter: Long)
-
-  private def isDataFile(p: Path): Boolean = {
-    val n = p.getFileName.toString
-    n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-  }
-
-  /** `Files.list` with the mandated close (its javadoc requires it;
-    * an unclosed stream leaks a directory fd until GC). */
-  private def listDir(p: Path): Seq[Path] = {
-    val s = Files.list(p)
-    try s.iterator().asScala.toList finally s.close()
-  }
 
   private def partitionDirs(root: Path): Seq[Path] =
     listDir(root)
@@ -67,14 +55,6 @@ object StoreCompaction {
         p.getFileName.toString.contains("=") &&
         !p.getFileName.toString.startsWith("."))
       .sortBy(_.getFileName.toString)
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      finally walk.close()
-    }
 
   /** Converge a store out of any crashed [[compactStore]] state:
     * committed staged partitions missing from the root are moved

@@ -44,6 +44,8 @@ object StoreFiles {
     try s.iterator().asScala.toList finally s.close()
   }
 
+  /** The one tree removal: children before parents; a missing tree is
+    * a no-op. */
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       val walk = Files.walk(p)
@@ -51,6 +53,24 @@ object StoreFiles {
         .forEach(f => Files.deleteIfExists(f))
       finally walk.close()
     }
+
+  /** A parquet data file, not a hidden or `_`-prefixed marker. */
+  def isDataFile(p: Path): Boolean = {
+    val n = p.getFileName.toString
+    n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+  }
+
+  /** The data files of each existing `bucket=<b>` directory under
+    * `root`, in `buckets` order; a bucket with no directory is left
+    * out. A store read pinned to these files lists no other directory. */
+  def bucketFiles(root: Path, buckets: Seq[Long]): Seq[(Long, Seq[Path])] =
+    buckets.map(b => b -> root.resolve(s"bucket=$b"))
+      .filter { case (_, d) => Files.isDirectory(d) }
+      .map { case (b, d) => b -> listDir(d).filter(isDataFile) }
+
+  /** [[bucketFiles]] flattened to path strings. */
+  def bucketFilePaths(root: String, buckets: Seq[Long]): Seq[String] =
+    bucketFiles(Paths.get(root), buckets).flatMap(_._2).map(_.toString)
 
   /** Copy every `*.parquet` directly under `srcDir` into `dstDir` as
     * `<stamp>-<file>` with REPLACE_EXISTING. */

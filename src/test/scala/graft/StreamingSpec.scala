@@ -806,4 +806,18 @@ class StreamingSpec extends SparkSpec {
     // the mega-doc proves splitting: it spans many sequences
     assert(got.filter($"doc_id" === 12L).count() >= 500 / 64)
   }
+
+  test("the shared pass records the phase keys the benchmark reads") {
+    // runs the one pass for the fixture dir, or reuses it: suites share
+    // the JVM, so DeterminismSpec may have run it already
+    SparkEntry.queries("s1_stream_tumbling")(spark, sf).count()
+    val keys = SparkEntry.streamSharedPassPhases.keySet.collect {
+      case k if k.startsWith(s"$sf|") => k.stripPrefix(s"$sf|")
+    }
+    val memorySinks = Seq(1, 2, 3, 4, 6, 7, 8, 10).map(i => s"s${i}_stream_out")
+    val seeded = (Seq(5, 9) ++ (11 to 18)).map(i => s"s$i")
+    assert(keys == Set("start_mem", "drain", "materialize") ++
+      seeded.map("seed_" + _) ++
+      (memorySinks ++ seeded).map("drain_at_" + _))
+  }
 }
