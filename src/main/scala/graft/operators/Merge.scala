@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Keyed upsert (merge) — SURVEY §2.E J1+J2.
@@ -17,15 +18,23 @@ import org.apache.spark.sql.functions._
   * keep-newest-per-key with target-wins tie-break ([[Dedup.keepNewest]]).
   * One union (no shuffle) + one hash-partitioned window — strictly less
   * data movement than the join-then-union alternative, and AQE handles
-  * the exchange sizing. Counts are a separate single-aggregate plan
-  * ([[Merge.countsPlan]]: batch left-joined to a two-column projection
-  * of target), so `merge` runs two jobs: the window merge and the
-  * counts join. At cluster scale the target side would be a bucketed
-  * table on the key, making its exchange a no-op in both plans.
+  * the exchange sizing. The counts come from one of two places:
+  *   - [[observedMerged]] computes them in that same window and
+  *     observes them on the relation, so the action that consumes it
+  *     (the staging write) reports them at no job of its own;
+  *   - [[countsPlan]] is a separate single-aggregate plan (batch
+  *     left-joined to a two-column projection of target), the q5 gate;
+  *     [[merge]] collects it, one job on top of the merged relation's.
+  * At cluster scale the target side would be a bucketed table on the
+  * key, making its exchange a no-op in every plan.
   */
 object Merge {
 
   final case class MergeResult(merged: DataFrame, inserted: Long, updated: Long)
+
+  /** Counts observed on a merged relation; `batchRows` is the number of
+    * canonical (one per key) batch rows, 0 iff the batch was empty. */
+  final case class MergeCounts(inserted: Long, updated: Long, batchRows: Long)
 
   private val SRC = "__src" // 0 = target (wins ties), 1 = batch
 
@@ -40,12 +49,55 @@ object Merge {
     Dedup.keepNewest(batch, keys, col(versionCol),
       xxhash64(struct(batch.columns.toIndexedSeq.map(col): _*)))
 
+  private def tagged(target: DataFrame, batch: DataFrame, keys: Seq[String],
+                     versionCol: String): DataFrame =
+    target.withColumn(SRC, lit(0))
+      .unionByName(canonBatch(batch, keys, versionCol).withColumn(SRC, lit(1)))
+
   /** Merged relation only (no counts) — single lazy plan, no actions. */
   def merged(target: DataFrame, batch: DataFrame, keys: Seq[String],
-             versionCol: String): DataFrame = {
-    val tagged = target.withColumn(SRC, lit(0))
-      .unionByName(canonBatch(batch, keys, versionCol).withColumn(SRC, lit(1)))
-    Dedup.keepNewest(tagged, keys, col(versionCol), col(SRC)).drop(SRC)
+             versionCol: String): DataFrame =
+    Dedup.keepNewest(tagged(target, batch, keys, versionCol), keys,
+      col(versionCol), col(SRC)).drop(SRC)
+
+  /** [[merged]] with its counts riding the plan as observed metrics.
+    * `min(__src)` over the whole key partition shares the keep-newest
+    * window (same partitioning and order, so no extra exchange or sort)
+    * and says whether the key had a target row. A winning batch row
+    * (`rn = 1`, `__src = 1`) is then an insert without one and an
+    * update with one: ties keep the target row, so a batch row wins a
+    * target key only when strictly newer. This equals [[countsPlan]]
+    * whenever the target's keys are unique and its versions non-null,
+    * which holds for every published staging version.
+    *
+    * Lazy like [[merged]]: the Observation is filled by the one action
+    * that consumes the returned relation, and [[countsOf]] may be called
+    * only after that action has returned. A new Observation per call
+    * (one Observation serves one Dataset). */
+  def observedMerged(target: DataFrame, batch: DataFrame, keys: Seq[String],
+                     versionCol: String): (DataFrame, Observation) = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col(versionCol).desc, col(SRC).asc)
+    val won = col("__rn") === 1 && col(SRC) === 1
+    val obs = Observation()
+    val ranked = tagged(target, batch, keys, versionCol)
+      .withColumns(Map(
+        "__rn" -> row_number().over(w),
+        "__tsrc" -> min(col(SRC)).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))))
+      .observe(obs, // count(), unlike sum(), is 0 (not null) over no rows
+        count(when(won && col("__tsrc") === 1, 1)).as("inserted"),
+        count(when(won && col("__tsrc") === 0, 1)).as("updated"),
+        count(when(col(SRC) === 1, 1)).as("batch_rows"))
+    (ranked.filter(col("__rn") === 1).drop("__rn", "__tsrc", SRC), obs)
+  }
+
+  /** The counts of an [[observedMerged]] relation, once its consuming
+    * action has returned. */
+  def countsOf(obs: Observation): MergeCounts = {
+    val m = obs.get
+    MergeCounts(m("inserted").asInstanceOf[Long], m("updated").asInstanceOf[Long],
+      m("batch_rows").asInstanceOf[Long])
   }
 
   /** Lazy one-row (inserted, updated) counts plan — same semantics as

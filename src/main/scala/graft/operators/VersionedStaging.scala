@@ -64,16 +64,28 @@ object VersionedStaging {
 
   /** [[publish]] with the current-version listing already computed —
     * callers that listed for their own read (mergeInto) pass it in so a
-    * long-lived stream doesn't pay two O(versions) listings per batch. */
+    * long-lived stream doesn't pay two O(versions) listings per batch.
+    * `beforeRename` runs once the write has returned and before the
+    * version becomes visible: it may read the write's observed metrics,
+    * and if it throws, the staged dir is deleted and nothing is
+    * published. */
   private def publishFrom(spark: SparkSession, root: String,
                           current: Option[String], df: DataFrame,
-                          batchId: Option[Long]): Option[String] = {
+                          batchId: Option[Long],
+                          beforeRename: () => Unit = () => ()): Option[String] = {
     if (batchId.isDefined && current.exists(c => batchIdOf(spark, c) == batchId))
       return None
     val next = current.flatMap(versionOf).getOrElse(0) + 1
     val dest = f"$root/v$next%06d"
     val tmp = f"$root/.tmp-v$next%06d"
     df.write.mode("overwrite").parquet(tmp)
+    try beforeRename()
+    catch {
+      case e: Throwable =>
+        if (!fs(spark, tmp).delete(new Path(tmp), true))
+          e.addSuppressed(new java.io.IOException(s"failed to delete $tmp"))
+        throw e
+    }
     batchId.foreach { id =>
       fs(spark, tmp).create(new Path(tmp, s"_BATCH-$id"), true).close()
     }
@@ -137,16 +149,24 @@ object VersionedStaging {
 
   /** Merge `batch` into the staging at `root`: read the newest complete
     * version as target, keep-newest merge, publish the next version.
-    * Returns the new version path, or None on batch-id replay. */
+    * Returns the new version path, or None on batch-id replay.
+    *
+    * One Spark action, the merged write: the counts ride it as observed
+    * metrics ([[Merge.observedMerged]]), and `guard` sees them before
+    * the rename, so a guard that throws publishes nothing. The target
+    * is read with the batch's schema (it must union with the batch), so
+    * opening it infers no schema either. */
   def mergeInto(spark: SparkSession, root: String, batch: DataFrame,
                 keys: Seq[String], versionCol: String,
-                batchId: Option[Long] = None): Option[(String, Merge.MergeResult)] = {
+                batchId: Option[Long] = None,
+                guard: Merge.MergeCounts => Unit = _ => ()
+               ): Option[(String, Merge.MergeResult)] = {
     val current = latestComplete(spark, root)
-    if (batchId.isDefined && current.exists(c => batchIdOf(spark, c) == batchId))
-      return None // checked here too: Merge.merge below runs an eager count
-    val target = current.map(spark.read.parquet(_)).getOrElse(batch.limit(0))
-    val result = Merge.merge(target, batch, keys, versionCol)
-    publishFrom(spark, root, current, result.merged, batchId)
-      .map(dest => (dest, result))
+    val target = current.map(spark.read.schema(batch.schema).parquet(_))
+      .getOrElse(batch.limit(0))
+    val (merged, obs) = Merge.observedMerged(target, batch, keys, versionCol)
+    lazy val counts = Merge.countsOf(obs) // filled once the write returns
+    publishFrom(spark, root, current, merged, batchId, () => guard(counts))
+      .map(dest => (dest, Merge.MergeResult(merged, counts.inserted, counts.updated)))
   }
 }

@@ -79,36 +79,31 @@ object HnPipeline {
     * shared versioned-staging protocol (newest COMPLETE version as
     * target, keep-newest merge, new version dir — never
     * overwrite-while-reading, SURVEY §7.4). See
-    * [[graft.operators.VersionedStaging]]. */
+    * [[graft.operators.VersionedStaging]]. The K5 non-empty guard reads
+    * the batch row count the merged write observed, before the new
+    * version is renamed into place: an empty batch publishes nothing. */
   def mergeIntoStaging(spark: SparkSession, stagingRoot: String,
                        batch: DataFrame): (String, Merge.MergeResult) =
     VersionedStaging.mergeInto(spark, stagingRoot, batch,
-      Seq("id"), "extracted_at").get // no batchId -> never skips
+      Seq("id"), "extracted_at",
+      guard = c => require(c.batchRows > 0, "empty transform result") // K5
+    ).get // no batchId -> never skips
 
   /** Mart phase (`02_marts.sql`): shared filtered base (the reference's
     * repeated CTE), three grouped marts, full-refresh semantics =
-    * overwrite write by the caller. This uncached form never leaks;
-    * [[martsWithBase]] additionally caches the shared base and hands it
-    * to the caller, who must unpersist after materializing the marts. */
-  def marts(staging: DataFrame): Map[String, DataFrame] =
-    martsFrom(martBase(staging))
-
-  def martsWithBase(staging: DataFrame): (Map[String, DataFrame], DataFrame) = {
-    val base = martBase(staging).cache()
-    (martsFrom(base), base)
-  }
-
-  private def martBase(staging: DataFrame): DataFrame = staging
-    .filter(col("type") === "story" && col("time_utc").isNotNull) // B3
-    .select(
-      to_date(col("time_utc")).as("metric_date"), // C6
-      Enrich.domainOf(col("url")).as("domain"), // C8+C9
-      coalesce(col("by"), lit("(unknown)")).as("author"), // C7
-      coalesce(col("score"), lit(0L)).as("score"),
-      coalesce(col("descendants"), lit(0L)).as("comments"),
-      col("extracted_at"))
-
-  private def martsFrom(base: DataFrame): Map[String, DataFrame] = {
+    * overwrite write by the caller. The base is not cached: the caller
+    * writes the marts after the checks, so its writes rescan staging
+    * either way, and a cache measured as a wash that cost one job. */
+  def marts(staging: DataFrame): Map[String, DataFrame] = {
+    val base = staging
+      .filter(col("type") === "story" && col("time_utc").isNotNull) // B3
+      .select(
+        to_date(col("time_utc")).as("metric_date"), // C6
+        Enrich.domainOf(col("url")).as("domain"), // C8+C9
+        coalesce(col("by"), lit("(unknown)")).as("author"), // C7
+        coalesce(col("score"), lit(0L)).as("score"),
+        coalesce(col("descendants"), lit(0L)).as("comments"),
+        col("extracted_at"))
     val daily = base.groupBy("metric_date").agg(
       count(lit(1)).cast("int").as("stories_count"),
       sum(col("score")).cast("bigint").as("total_score"),
@@ -160,21 +155,17 @@ object HnPipeline {
         new java.text.SimpleDateFormat("yyyyMMdd_HHmmss") { setTimeZone(java.util.TimeZone.getTimeZone("UTC")) }
           .parse(s).getTime))
       .getOrElse(new java.sql.Timestamp(0L))
-    // cache the transformed batch: the count guard, the merge-counts
-    // join, and the merged write would otherwise each re-read and
-    // re-transform the raw file (3 full passes)
-    var staged: DataFrame = null
     try {
       // inside the try: a read/transform-construction failure must
-      // still produce the K4 'failed' audit row
-      staged = transform(readRaw(spark, file), ts).cache()
-      require(staged.count() > 0, "empty transform result") // K5
+      // still produce the K4 'failed' audit row. The transformed batch
+      // is not cached: the merged write is its one consumer, and the
+      // merge counts and the K5 guard ride that write.
+      val staged = transform(readRaw(spark, file), ts)
       val (newPath, res) = mergeIntoStaging(spark, stagingRoot, staged)
-      val staging = spark.read.parquet(newPath)
-      val (m, base) = martsWithBase(staging)
-      try runChecks(staging, m)
-      finally base.unpersist() // marts are materialized by the checks;
-      // without this, every run leaks one cached base for the session
+      // read back with the merged schema: no schema-inference job
+      val staging = spark.read.schema(res.merged.schema).parquet(newPath)
+      val m = marts(staging)
+      runChecks(staging, m)
       auditRow(spark, auditDir, "load", file, "success", res.inserted, res.updated, None)
       m
     } catch {
@@ -182,6 +173,6 @@ object HnPipeline {
         auditRow(spark, auditDir, "load", file, "failed", 0, 0,
           Option(e.getMessage)) // K4: failure leaves prior staging version intact
         throw e
-    } finally { if (staged != null) staged.unpersist() }
+    }
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftColumnBridge, Row}
 import org.apache.spark.sql.functions._
+import graft.operators.VersionedStaging
 import graft.pipeline.HnPipeline
 
 class HnPipelineSpec extends SparkSpec {
@@ -81,6 +84,71 @@ class HnPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$staging/v000003").count() == 4)
   }
 
+  test("K5: an empty batch fails before any version or tmp dir is published") {
+    Seq("[]", "[null, null]").foreach { empty =>
+      val root = Files.createTempDirectory("hnpipe_empty").toString
+      val rawDir = s"$root/raw"; Files.createDirectories(Paths.get(rawDir))
+      val staging = s"$root/staging"; val audit = s"$root/audit"
+      def runEmpty(name: String): Unit = {
+        val before = VersionedStaging.latestComplete(spark, staging)
+        writeRaw(rawDir, name, empty)
+        val ex = intercept[IllegalArgumentException] {
+          HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit)
+        }
+        assert(ex.getMessage.contains("empty transform result"), empty)
+        val last = spark.read.parquet(audit).orderBy(desc("finished_at"))
+          .select("status", "rows_inserted", "rows_updated").head()
+        assert(last == Row("failed", 0L, 0L), empty)
+        assert(VersionedStaging.latestComplete(spark, staging) == before, empty)
+        val tmps = Option(new java.io.File(staging).list()).toSeq.flatten
+          .filter(_.startsWith(".tmp-v"))
+        assert(tmps.isEmpty, s"$empty left $tmps")
+      }
+      runEmpty("hn_raw_20240101_000000.json") // first batch: empty target
+      writeRaw(rawDir, "hn_raw_20240102_000000.json", batch1)
+      HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit)
+      runEmpty("hn_raw_20240103_000000.json")
+    }
+  }
+
+  /** Spark jobs that `body` starts from this thread (tagged by a local
+    * property, so other threads' jobs are not counted). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.jobsOf") == tag))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.jobsOf", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.jobsOf", null)
+      GraftColumnBridge.drainListenerBus(spark)
+      sc.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  // Job budget of one non-first batch, measured in this suite's session:
+  // 12 jobs. The merge counts and the K5 guard ride the merged write,
+  // and neither the target nor the read-back infers a schema; with a
+  // cached batch and mart base, a count guard and a counts join, it
+  // was 21.
+  test("one non-first batch runs at most 12 Spark jobs") {
+    val root = Files.createTempDirectory("hnpipe_jobs").toString
+    val rawDir = s"$root/raw"; Files.createDirectories(Paths.get(rawDir))
+    val staging = s"$root/staging"; val audit = s"$root/audit"
+    writeRaw(rawDir, "hn_raw_20240102_000000.json", batch1)
+    HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit)
+    writeRaw(rawDir, "hn_raw_20240103_000000.json", batch2)
+    val jobs = jobsOf(HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit))
+    assert(jobs <= 12, s"$jobs Spark jobs")
+  }
+
   test("pipeline ingests a 10k-record JSON batch (moderate-scale smoke)") {
     val root = Files.createTempDirectory("hnbig").toString
     val rawDir = s"$root/raw"; Files.createDirectories(Paths.get(rawDir))
@@ -100,6 +168,26 @@ class HnPipelineSpec extends SparkSpec {
     assert(m("top_domains_daily").select("domain").distinct().count() == 31)
     assert(m("user_activity_daily").select("author").distinct().count() == 97)
     assert(secs < 120, s"10k-record pipeline run took ${secs}s")
+  }
+
+  test("duplicate-key checks fail on a planted duplicate in staging or a mart") {
+    val root = Files.createTempDirectory("hnpipe_dup").toString
+    writeRaw(root, "hn_raw_20240102_000000.json", batch1)
+    val staging = HnPipeline.transform(
+      HnPipeline.readRaw(spark, s"$root/hn_raw_20240102_000000.json"),
+      new java.sql.Timestamp(0))
+    val marts = HnPipeline.marts(staging)
+    HnPipeline.runChecks(staging, marts) // clean
+    val dupStaging = intercept[IllegalArgumentException] {
+      HnPipeline.runChecks(staging.unionByName(staging.filter(col("id") === 2)), marts)
+    }
+    assert(dupStaging.getMessage.contains("duplicate ids in staging"))
+    val domains = marts("top_domains_daily")
+    val dupMart = intercept[IllegalArgumentException] {
+      HnPipeline.runChecks(staging,
+        marts.updated("top_domains_daily", domains.unionByName(domains)))
+    }
+    assert(dupMart.getMessage.contains("duplicate PK in top_domains_daily"))
   }
 
   test("missing required column fails fast") {

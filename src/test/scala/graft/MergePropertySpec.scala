@@ -65,6 +65,46 @@ class MergePropertySpec extends SparkSpec {
     }
   }
 
+  private val payloadGen = Gen.alphaStr.map(_.take(4))
+
+  // a unique-key target (ids sorted so the case is the same every run)
+  private val targetGen = Gen.listOfN(10, rowGen)
+    .map(_.groupBy(_._1).values.map(_.head).toList.sortBy(_._1))
+
+  // a batch against that target: per target key, maybe a strictly
+  // older, equal-version or strictly newer row; plus rows over random
+  // keys (fresh, repeated, or the target's) and one same-version
+  // duplicate of one of them with another payload
+  private def batchAgainst(target: List[(Long, Long, String)]) = for {
+    edits <- Gen.sequence[List[Option[(Long, Long, String)]], Option[(Long, Long, String)]](
+      target.map { case (id, v, _) =>
+        Gen.option(for { d <- Gen.oneOf(-1L, 0L, 1L); p <- payloadGen } yield (id, v + d, p))
+      })
+    loose <- Gen.listOfN(8, rowGen)
+    dup <- Gen.oneOf(loose).map { case (id, v, p) => (id, v, p + "x") }
+  } yield edits.flatten ++ loose :+ dup
+
+  test("observed merge counts equal countsPlan, rows equal merged (16 random cases)") {
+    (0 until 16).foreach { i =>
+      val seed = Seed(500L + i)
+      // every fourth case merges into an empty target, the first-batch
+      // shape (`batch.limit(0)`)
+      val t = if (i % 4 == 0) Nil else targetGen.apply(Gen.Parameters.default, seed).get
+      val b = batchAgainst(t).apply(Gen.Parameters.default, seed.next).get
+      val batch = df(b)
+      val target = if (t.isEmpty) batch.limit(0) else df(t)
+      val (observed, obs) = Merge.observedMerged(target, batch, Seq("id"), "extracted_at")
+      val got = observed.as[(Long, Long, String)].collect().sorted.toSeq
+      val c = Merge.countsOf(obs)
+      val want = Merge.countsPlan(target, batch, Seq("id"), "extracted_at").head()
+      assert((c.inserted, c.updated) == ((want.getLong(0), want.getLong(1))), s"case $i: counts")
+      assert(c.batchRows == b.map(_._1).distinct.size, s"case $i: batch rows")
+      val merged = Merge.merged(target, batch, Seq("id"), "extracted_at")
+        .as[(Long, Long, String)].collect().sorted.toSeq
+      assert(got == merged, s"case $i: rows")
+    }
+  }
+
   test("merge: PK-unique, version-monotone, idempotent on re-merge (15 random cases)") {
     (0 until 15).foreach { i =>
       val seed = Seed(42L + i)
