@@ -19,7 +19,7 @@ object PlanDump {
     // stream pass, so asking for their plan would RUN the pass and
     // dump the post-hoc read of its output — not reviewable evidence.
     // Annotated instead; each stream's design notes sit on its
-    // declaration in SparkEntry.streams.
+    // declaration in graft.catalog.StreamGates.
     val streaming = SparkEntry.streams.map(_.entry).toSet
     sb.append(s"\n${SparkEntry.queries.size} declared queries: " +
       s"${SparkEntry.queries.size - streaming.size} batch plans below + " +

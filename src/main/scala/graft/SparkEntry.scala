@@ -1,638 +1,36 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.functions.Enrich
-import graft.operators._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.catalog.{Catalog, StreamGates}
+import graft.operators.Marts
 import graft.streaming.{PassStream, StreamPass}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * Every key in `queries` is one operator row from SURVEY.md §2 (or a
-  * scale extension); `oracleSql` holds the DuckDB-runnable ANSI twin.
-  * Conventions keeping the exact-hash compare stable:
-  *   - column names and final types cast explicitly on BOTH sides;
-  *   - doubles aggregated as DECIMAL(18,2) (order-independent), then
-  *     the FINAL column is cast decimal→double on both sides — the
-  *     conversion is correctly rounded in both engines (verified), so
-  *     bits match, and the driver's typed hash sees double==double
-  *     (a raw DECIMAL output column hash-mismatches the oracle even
-  *     when values stringify identically — round-1 ADVICE.md);
-  *   - timestamps output as epoch micros BIGINT (`unix_micros` /
-  *     `epoch_us`) — raw timestamp columns differ in UTC adjustment
-  *     between Spark parquet and DuckDB;
-  *   - ranking windows use row_number over a total order.
-  */
+/** Driver contract — see SURVEY.md §7. Every view below is derived once
+  * from the gate catalog ([[graft.catalog]]), where each query is
+  * declared with its builder and its DuckDB oracle; every key in
+  * `queries` is one operator row from SURVEY.md §2 (or a scale
+  * extension). */
 object SparkEntry {
-
-  import Marts.{avgDec2, dec2}
-
-  /** Typed row for the Dataset-API query (q23). */
-  final case class Ev(event_id: Long, event_type: String, user_id: Long)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Marts.dailyMetrics(Tables.events(spark, "/root/testdata/sf0.001"))
 
-  /** Merge fixture: two overlapping keyed batches derived from `events`
-    * (target = even ids at ts, batch = ids divisible by 3 at ts+1h) —
-    * reproduces the reference's staging-vs-new-batch shape
-    * (`/root/reference/sql/load/03_merge.sql`). */
-  private def mergeFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val ev = Tables.events(s, dir)
-      .select(col("event_id"), col("event_type"), dec2(col("value")).as("val"),
-        col("ts"))
-    val target = ev.filter(col("event_id") % 2 === 0)
-      .withColumn("extracted_at", col("ts")).drop("ts")
-    val batch = ev.filter(col("event_id") % 3 === 0)
-      .withColumn("extracted_at", col("ts") + expr("interval 1 hour")).drop("ts")
-    (target, batch)
-  }
+  /** The gated queries' builders, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.gates.collect { case g if g.oracle.isDefined => g.name -> g.build }.toMap
 
-  private val mergeFixtureSql =
-    """target AS (
-      |  SELECT event_id, event_type, CAST(value AS DECIMAL(18,2)) AS val,
-      |         CAST(ts AS TIMESTAMP) AS extracted_at
-      |  FROM events WHERE event_id % 2 = 0),
-      |batch AS (
-      |  SELECT event_id, event_type, CAST(value AS DECIMAL(18,2)) AS val,
-      |         CAST(ts AS TIMESTAMP) + INTERVAL 1 HOUR AS extracted_at
-      |  FROM events WHERE event_id % 3 = 0)""".stripMargin
+  /** The DuckDB-runnable ANSI twin of every gated query, by name. */
+  lazy val oracleSql: Map[String, String] =
+    Catalog.gates.flatMap(g => Catalog.sql(g).map(g.name -> _)).toMap
 
-  /** Clone-id shift for the planted-duplicate fixtures, ENFORCING the
-    * no-collision invariant in-plan: a source id at or above the offset
-    * would collide with a clone id, and the d11/d13-style oracles then
-    * fan out over the colliding id where Spark's groupBy merges it —
-    * a silent hash mismatch (round-5 ADVICE). raise_error makes the
-    * assumption loud instead of implicit, at the cost of one per-row
-    * comparison inside the same stage (no extra job). */
-  private def cloneId(c: Column, offset: Long = 1000000L): Column =
-    when(c >= offset || c < 0,
-      raise_error(concat(lit(s"fixture id outside [0, $offset): "), c.cast("string"))))
-      .otherwise(c + offset)
+  /** Timed by Bench, NOT part of the declared/gated query surface: the
+    * gates declared with no oracle. */
+  lazy val benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] =
+    Catalog.gates.collect { case g if g.oracle.isEmpty => g.name -> g.build }.toMap
 
-  /** Planted-duplicate corpora for the dedup operators: exact copies
-    * (every 5th doc) and near-copies with a suffix (every 7th doc), ids
-    * offset by 1e6. Guarantees the dedup queries have hits at any sf. */
-  private def corpusExact(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    d.unionByName(d.filter(col("doc_id") % 5 === 0)
-      .select(cloneId(col("doc_id")).as("doc_id"), col("text")))
-  }
-
-  /** The d5/d7 corpus: doc_id < 200 (fixed size at every sf) plus
-    * near-copies of every 7th doc at id+1e6. */
-  private def corpusD5(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.documents(s, dir)
-      .filter(col("doc_id") < 200).select(col("doc_id"), col("text"))
-    base.unionByName(base.filter(col("doc_id") % 7 === 0)
-      .select(cloneId(col("doc_id")).as("doc_id"),
-        concat(col("text"), lit(" nearly duplicate suffix")).as("text")))
-  }
-
-  private def corpusNear(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    d.unionByName(d.filter(col("doc_id") % 7 === 0)
-      .select(cloneId(col("doc_id")).as("doc_id"),
-        concat(col("text"), lit(" nearly duplicate suffix")).as("text")))
-  }
-
-  /** The d7 corpus: plants 3-CHAINS A≈B≈C with A̸≈C, so a single-step
-    * min-id representative is provably wrong and only a transitive
-    * clustering (connected components) matches the oracle.
-    *
-    * Construction per planted doc A (doc_id % 7 == 0, doc_id < 200),
-    * with s = |distinct 3-gram shingles of A|:
-    *   B (id+1e6) = A ++ p unique marker tokens,  p = max(⌊s/3⌋, 3)
-    *   C (id+2e6) = last r tokens of A ++ the SAME markers,
-    *                r = min(⌊3s/5⌋ + 2, |tokens(A)|)
-    * Shingle-set arithmetic (C ⊆ B by construction):
-    *   j(A,B) = s/(s+p)        ≈ 0.75  → pair
-    *   j(B,C) = (r-2+p)/(s+p)  ≈ 0.70  → pair
-    *   j(A,C) = (r-2)/(s+p)    ≈ 0.45  → NOT a pair (verify filter)
-    * so C's only sub-threshold neighbor is B: single-step rep puts C
-    * under B, the true component label is A. Markers embed the doc_id,
-    * so chains of different docs never cross-collide. */
-  private[graft] def corpusD7(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions.tokens
-    val base = Tables.documents(s, dir)
-      .filter(col("doc_id") < 200).select(col("doc_id"), col("text"))
-    val st = base.select(col("doc_id"), col("text"),
-      graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-        struct(toks.as("toks"), size(toks).as("n"),
-          size(array_distinct(DedupSuite.shinglesFromTokens(toks, 3))).as("s"))
-      }.as("t"))
-      .select(col("doc_id"), col("text"), col("t.toks").as("toks"),
-        col("t.n").as("n"), col("t.s").as("s"))
-    val mk = st.filter(col("doc_id") % 7 === 0)
-      .withColumn("p", greatest(floor(col("s") / 3).cast("int"), lit(3)))
-      .withColumn("r", least((floor(col("s") * 3 / 5) + 2).cast("int"), col("n")))
-      .withColumn("markers", concat_ws(" ",
-        transform(sequence(lit(1), col("p")),
-          i => concat(lit("zz"), col("doc_id").cast("string"), lit("x"),
-            i.cast("string")))))
-    val b = mk.select(cloneId(col("doc_id")).as("doc_id"),
-      concat(col("text"), lit(" "), col("markers")).as("text"))
-    val c = mk.select(cloneId(col("doc_id"), 2000000L).as("doc_id"),
-      concat(concat_ws(" ",
-          slice(col("toks"), col("n") - col("r") + 1, col("r"))),
-        lit(" "), col("markers")).as("text"))
-    base.unionByName(b).unionByName(c)
-  }
-
-  /** Paragraph-structured corpus for d11: every doc's tokens re-joined
-    * into 15-token paragraphs separated by '\n'; every 4th doc gets a
-    * shared banner paragraph prepended and every 3rd a shared footer
-    * appended (guaranteed cross-document duplicate paragraphs — the
-    * C4-style boilerplate shape), and every 5th doc is duplicated whole
-    * at id+1e6 (all of its paragraphs are second occurrences). The
-    * oracle rebuilds the identical corpus in SQL ([[corpusParaSql]]). */
-  private def corpusPara(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.TextFunctions.tokens
-    val body = Tables.documents(s, dir).select(col("doc_id"),
-      graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-        array_join(transform(
-          sequence(lit(0),
-            greatest(floor((size(toks) - 1) / lit(15.0)), lit(0L)).cast("int")),
-          i => concat_ws(" ", slice(toks, i * 15 + 1, lit(15)))), "\n")
-      }.as("body"))
-    val base = body.select(col("doc_id"), concat(
-      when(col("doc_id") % 4 === 0,
-        lit("accept the cookie policy to continue reading\n")).otherwise(lit("")),
-      col("body"),
-      when(col("doc_id") % 3 === 0,
-        lit("\nsubscribe to the newsletter for weekly updates")).otherwise(lit(""))
-    ).as("text"))
-    base.unionByName(base.filter(col("doc_id") % 5 === 0)
-      .select(cloneId(col("doc_id")).as("doc_id"), col("text")))
-  }
-
-  /** The c5 fixture: [[corpusPara]] plus a ticker line planted on
-    * every 20th doc (clone ids are ≡ base ids mod 20, so clones
-    * carry it consistently). With minDocs = nDocs/25, the ticker
-    * crosses the threshold ~76% through the base id range at every
-    * sf — inside c5's fold 1 — forcing the re-emission path. */
-  private def corpusTicker(s: SparkSession, dir: String): DataFrame =
-    corpusPara(s, dir).select(col("doc_id"),
-      when(pmod(col("doc_id"), lit(20)) === 0,
-        concat(col("text"),
-          lit("\nbreaking news ticker updates every minute")))
-        .otherwise(col("text")).as("text"))
-
-  /** A fixture staged once per (JVM, sf dir) by `build` into a fresh
-    * directory named after `name`; returns that directory. */
-  private def stagedDir(name: String, dir: String)(
-      build: java.nio.file.Path => Unit): String =
-    PerJvm.once(s"$name|$dir") {
-      val tmp = PerJvm.tempDir(name)
-      build(tmp)
-      tmp.toString
-    }
-
-  /** JSONL staging with PLANTED CORRUPTION for q75: each document
-    * becomes `{"id":N,"text":"<tokens>"}` (token-joined text, so no
-    * JSON escaping ambiguity between engines), and every 7th line drops
-    * its closing brace. Exercises Spark's real PERMISSIVE-mode JSON
-    * parser + `_corrupt_record` quarantine; the oracle reconstructs the
-    * same deterministic corruption rule from the documents table. */
-  private def corruptJsonDir(s: SparkSession, dir: String): String =
-    stagedDir("q75_jsonl", dir) { tmp =>
-      val line = concat(lit("{\"id\":"), col("doc_id").cast("string"),
-        lit(",\"text\":\""),
-        concat_ws(" ", graft.functions.TextFunctions.tokens(col("text"))),
-        lit("\"}"))
-      Tables.documents(s, dir).withColumn("line", line)
-        .select(when(col("doc_id") % 7 === 0,
-          expr("substring(line, 1, length(line) - 1)"))
-          .otherwise(col("line")).as("value"))
-        .write.mode("overwrite").text(tmp.toString)
-    }
-
-  /** Two-generation corpus staging for q84: generation v1 (even doc
-    * ids) was "written before the `lang`/`n_chars` columns existed";
-    * v2 (odd ids) carries the full schema. A corpus accumulated over
-    * months of pipeline evolution ALWAYS has this shape at 100 TB —
-    * re-writing history on every schema change is a full-corpus
-    * rewrite, so the reader must take the union. */
-  private def evolvedCorpusDir(s: SparkSession, dir: String): String =
-    stagedDir("q84_evol", dir) { tmp =>
-      val docs = Tables.documents(s, dir)
-      docs.filter(col("doc_id") % 2 === 0)
-        .select(col("doc_id"), col("text"))
-        .write.parquet(tmp.resolve("gen=v1").toString)
-      docs.filter(col("doc_id") % 2 === 1)
-        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
-        .write.parquet(tmp.resolve("gen=v2").toString)
-    }
-
-  /** Hive-partitioned copy of `events` (partitionBy event_type) — the
-    * q74 fixture. The raw sf fixtures are single parquet files, so no
-    * scan in the suite could demonstrate PARTITION pruning
-    * (`PartitionFilters` was `[]` in every plan); this staging gives the
-    * layout a real 100-TB table would have. */
-  private def partitionedEventsDir(s: SparkSession, dir: String): String =
-    stagedDir("q74_part", dir) { tmp =>
-      Tables.events(s, dir).write.mode("overwrite")
-        .partitionBy("event_type").parquet(tmp.toString)
-    }
-
-  /** Verbatim copy of `events.parquet`: the memory-sink streams' file
-    * source. */
-  private def stagedEventsDir(dir: String): String =
-    stagedDir("s1_stream", dir) { tmp =>
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
-        tmp.resolve("events.parquet"))
-    }
-
-  /** The e10 persisted IVF index — the build-once/query-many serving
-    * split (an inline build left one full index copy per invocation
-    * and re-paid the build on every bench run). Layout under the root:
-    * `index/` = the centroid-partitioned inverted lists over corpus ∪
-    * clone batch (appendToIvfIndex against FROZEN centroids — the
-    * corpus is never re-read on ingest), `centroids/` = the frozen
-    * centroid set (float arrays roundtrip parquet bit-exactly). The
-    * gated query serves from this persisted state, which is exactly
-    * the shape a 100 TB index runs. */
-  private def e10IvfIndexDir(s: SparkSession, dir: String): String =
-    stagedDir("e10_ivf", dir) { tmp =>
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val batch = emb.filter(col("vec_id") % 10 === 0)
-        .select(cloneId(col("vec_id")).as("vec_id"), col("embedding"))
-      val cent = Similarity.buildIvfIndex(
-        emb, s"$tmp/index", "vec_id", "embedding", 16)
-      Similarity.appendToIvfIndex(batch, s"$tmp/index", cent,
-        "vec_id", "embedding")
-      cent.write.mode("overwrite").parquet(s"$tmp/centroids")
-    }
-
-  /** The q82 bipartite order graph: customer↔supplier co-purchase
-    * edges, symmetrized (node ids: custkey·2 even, suppkey·2+1 odd —
-    * disjoint by parity). Shared by q82 (full recompute) and q91's
-    * base store. */
-  private def q82Edges(s: SparkSession, dir: String): DataFrame = {
-    val edges0 = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    edges0.unionByName(
-      edges0.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** The q91 ingest batch: supplier → part edges with part nodes
-    * offset to 2e6+ — disjoint from every base edge (all base node
-    * ids sit far below 2e6) and DANGLING (part nodes have no
-    * out-edges), so the append genuinely changes existing suppliers'
-    * out-degrees while exercising the lost-mass decay path. */
-  private def q91BatchEdges(s: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(s, dir)
-      .filter(col("l_orderkey") % 13 === 0)
-      .select((col("l_suppkey") * 2 + 1).as("src"),
-        (col("l_partkey") * 2 + 2000000L).as("dst"))
-      .distinct()
-
-  /** The q91 persisted contribution-edge store, built from the base
-    * graph + one batch append — the e10 lifecycle for graph state. */
-  private def q91ContribStoreDir(s: SparkSession, dir: String): String =
-    stagedDir("q91_graph", dir) { tmp =>
-      val store = s"$tmp/contrib"
-      Graph.buildContribStore(q82Edges(s, dir), store, "src", "dst", 32)
-      Graph.appendToContribStore(s, store, q91BatchEdges(s, dir),
-        "src", "dst", 32)
-      // maintenance pass: squash the append's file accumulation; the
-      // q91 gate then serves ranks from the COMPACTED store — the
-      // row-identity contract is oracle-checked, not assumed
-      StoreCompaction.compactStoreFused(s, store, "bucket")
-    } + "/contrib"
-
-  /** The q92 persisted heavy-hitter state: the corpus MG summary (one
-    * row: counts map + n + k — the sketch an incremental pipeline
-    * folds between ingests) AND the key-bucketed corpus store
-    * (`bucket = crc32(k) mod 32` partitions — the q91 store discipline,
-    * so each fold's exact recheck reads only candidate buckets instead
-    * of rescanning the corpus). */
-  private def q92SummaryDir(s: SparkSession, dir: String): String =
-    stagedDir("q92_mg", dir) { tmp =>
-      HeavyHitters.summarize(Tables.events(s, dir), plantedSkewKey, 64)
-        .write.mode("overwrite").parquet(s"$tmp/summary")
-      HeavyHitters.buildKeyStore(Tables.events(s, dir), plantedSkewKey,
-        s"$tmp/store", 32)
-      // maintenance pass (the q91/s13 discipline): collapse the
-      // build's count deltas + squash the per-task file fan-out; the
-      // q92 gate then serves its exact recheck from the
-      // VACUUMED+COMPACTED store — summed counts oracle-checked
-      HeavyHitters.vacuumKeyStore(s, s"$tmp/store")
-      StoreCompaction.compactStore(s, s"$tmp/store")
-    }
-
-  /** The d23/d24 persisted SemDeDup state (one store per keep-rule):
-    * built ONCE over the CORPUS (embeddings without the planted clones)
-    * against frozen lowest-id centroids, then the gated query folds the
-    * clone batch in — the ingest twin of d20/d21, matching their
-    * oracles bit-for-bit because fold == full recompute over corpus ∪
-    * batch. */
-  private def semDedupStateDir(s: SparkSession, dir: String,
-                               keepFarthest: Boolean): String =
-    stagedDir(if (keepFarthest) "d24_sem" else "d23_sem", dir) { tmp =>
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val cent = emb.orderBy(col("vec_id").asc).limit(16)
-        .select(col("vec_id").as("centroid_id"),
-          col("embedding").as("centroid_vec"))
-      Similarity.buildSemDedupState(emb, s"$tmp/state", "vec_id",
-        "embedding", tau = 0.98, centroids = cent,
-        keepFarthest = keepFarthest)
-      // the ingest: d20's exact clones / d21's perturbed clones fold in
-      val batch =
-        if (keepFarthest)
-          emb.filter(col("vec_id") % 10 === 0)
-            .select(cloneId(col("vec_id")).as("vec_id"),
-              concat(
-                array((element_at(col("embedding"), 1).cast("double") + 0.125)
-                  .cast("float")),
-                slice(col("embedding"), 2, 63)).as("embedding"))
-        else
-          emb.filter(col("vec_id") % 10 === 0)
-            .select(cloneId(col("vec_id")).as("vec_id"), col("embedding"))
-      Similarity.foldSemDedupState(s, s"$tmp/state", batch, "vec_id",
-        "embedding", tau = 0.98, centroids = cent,
-        keepFarthest = keepFarthest)
-    } + "/state"
-
-  /** The e13/e14 persisted PQ serving state (one store per variant, the
-    * e10 lifecycle): a centroid-partitioned code table + codebook +
-    * coarse set written ONCE by [[Similarity.buildIvfPqIndex]]; the
-    * gated queries only ever read it — the serving claim
-    * (build-once/query-many, probe prunes partitions) is oracle-gated. */
-  private def pqIndexDir(s: SparkSession, dir: String,
-                         residual: Boolean): String =
-    stagedDir(if (residual) "e14_ivfadc" else "e13_ivfpq", dir) { tmp =>
-      Similarity.buildIvfPqIndex(
-        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding")),
-        tmp.toString, "vec_id", "embedding", residual = residual)
-    }
-
-  /** Stage `df` into `tmp` as THREE ordered single-file parquet batches
-    * (split by `key` mod 3) with strictly increasing modification
-    * times, so a maxFilesPerTrigger=1 file source delivers batches
-    * 0,1,2 as deterministic micro-batches: the file source orders
-    * pending files by mod time, and same-millisecond copies would make
-    * batch ORDER nondeterministic (s7's watermark-eviction oracle
-    * simulates batches 0,1,2 IN ORDER). Shared by every staged stream
-    * source (s5/s7/s8/s9/s11–s18). */
-  private def stageOrderedSplit(tmp: java.nio.file.Path,
-                                df: DataFrame, key: Column): Unit = {
-    val mtBase = System.currentTimeMillis() - 60000
-    (0 to 2).foreach { i =>
-      val slice = tmp.resolve(s"slice$i")
-      df.filter(pmod(key, lit(3)) === i)
-        .coalesce(1).write.parquet(slice.toString)
-      val part = StoreFiles.listDir(slice).find(p =>
-        p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet")).get
-      val dst = tmp.resolve(s"batch$i.parquet")
-      java.nio.file.Files.move(part, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtBase + i * 2000L))
-      StoreFiles.deleteRecursively(slice)
-    }
-  }
-
-  /** Events staged as three ordered batches (event_id mod 3): s5 must
-    * exercise the combine-with-previous path, not just a single
-    * publish, and s7's watermark simulation and s8's carried MG state
-    * need batch IDENTITY. */
-  private def stagedEventsSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s5_stream", dir)(stageOrderedSplit(_,
-      s.read.parquet(s"$dir/events.parquet"), col("event_id")))
-
-  /** The q77 snapshot-diff change set staged as three ordered batches
-    * (doc_id mod 3) — the s9 CDC stream source. Each diff row is one
-    * key's change, so the mod-3 split keeps every key's changes in a
-    * single micro-batch and the applies commute (see
-    * [[graft.streaming.StreamingJobs.applyCdcStream]]). */
-  private def stagedCdcSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s9_cdc", dir) { tmp =>
-      val (oldSnap, newSnap) = q77Fixture(s, dir)
-      stageOrderedSplit(tmp, SnapshotDiff.diff(oldSnap, newSnap, Seq("doc_id")),
-        col("doc_id"))
-    }
-
-  /** The s11 ingest stream staged as three ordered batches: two clone
-    * families of the documents corpus — every doc_id % 7 = 0 as
-    * id+1e6 with a near-dup suffix, every doc_id % 14 = 0 AGAIN as
-    * id+2e6 with a different near-dup suffix — split by clone id mod 3.
-    * The two clones of the same doc land in DIFFERENT micro-batches by
-    * construction ((d+1e6) % 3 != (d+2e6) % 3 always), so their pair is
-    * discoverable ONLY if the index genuinely grew between batches —
-    * the invariant that separates s11 from a fixed-index probe (d19). */
-  private def stagedNearDupSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s11_docs", dir) { tmp =>
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val clones = docs.filter(col("doc_id") % 7 === 0)
-        .select(cloneId(col("doc_id")).as("doc_id"),
-          concat(col("text"), lit(" nearly duplicate suffix")).as("text"))
-        .unionByName(docs.filter(col("doc_id") % 14 === 0)
-          .select(cloneId(col("doc_id"), 2000000L).as("doc_id"),
-            concat(col("text"), lit(" v2 nearly duplicate suffix")).as("text")))
-      stageOrderedSplit(tmp, clones, col("doc_id"))
-    }
-
-  /** s12 query stream: the 24 lowest-id embedding vectors staged as
-    * three ordered batches (vec_id mod 3, 8 queries per micro-batch)
-    * — each query arrives whole in one batch, so per-batch top-k is
-    * the batch answer and the accumulated stream output equals the
-    * one-shot batch run (the oracle). */
-  private def stagedAnnQuerySplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s12_queries", dir)(stageOrderedSplit(_,
-      Tables.embeddings(s, dir).filter(col("vec_id") < 24)
-        .select(col("vec_id"), col("embedding")), col("vec_id")))
-
-  /** The s13 ingest stream: e10's clone batch (every vec_id % 10 = 0
-    * at id+1e6) staged as three ordered batches (clone id mod 3), so
-    * the persisted IVF index genuinely grows across three
-    * micro-batches; the union of the batches is EXACTLY e10's planted
-    * set, which is why the stream-grown index serves e10's oracle
-    * bit-for-bit. */
-  private def stagedIvfIngestSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s13_vecs", dir)(stageOrderedSplit(_,
-      Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 0)
-        .select(cloneId(col("vec_id")).as("vec_id"), col("embedding")),
-      col("vec_id")))
-
-  /** The s14 ingest stream: the d25 corpus's docs at or above the
-    * first-tercile id boundary `t1`, staged as three ordered batches
-    * split by id TERCILE — not mod 3: the substr fold's monotonicity
-    * contract (`exactSubstrFold` requires every batch id strictly above
-    * the stored high-water mark) needs batch i's ids wholly below batch
-    * i+1's, which `(doc_id - t1) * 3 div span` with strictly-increasing
-    * file mod times delivers and a mod split never can. Docs below `t1`
-    * seed the persisted window-key store before the stream starts. */
-  private def stagedSubstrIngestSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s14_docs", dir) { tmp =>
-      val docs = substrCorpus(s, dir)
-      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-      val t1 = maxId / 3
-      val span = maxId - t1 + 1
-      stageOrderedSplit(tmp, docs.filter(col("doc_id") >= t1),
-        expr(s"(doc_id - $t1) * 3 div $span"))
-    }
-
-  /** The s17 ingest stream: precomputed (doc_id, n_tokens) rows for
-    * docs at or above the first-tercile boundary `t1`, staged as three
-    * ordered MONOTONE batches (the s14 tercile formula — the span
-    * fold's monotonicity contract rejects interleaved ids). Counts are
-    * staged instead of text: the packing fold needs only counts, and
-    * staging them exercises the 'precompute expensive token counts'
-    * path the packSpans scaladoc recommends. Returns (stagingDir, t1). */
-  private def stagedPackIngestSplit(s: SparkSession,
-                                    dir: String): (String, Long) =
-    PerJvm.once(s"s17_counts|$dir") {
-      import graft.functions.TextFunctions.tokens
-      val counts = Tables.documents(s, dir).select(col("doc_id"),
-        size(tokens(col("text"))).cast("long").as("n"))
-      val maxId = counts.agg(max(col("doc_id")).cast("long"))
-        .head().getLong(0)
-      val t1 = maxId / 3
-      val span = maxId - t1 + 1
-      val tmp = PerJvm.tempDir("s17_counts")
-      stageOrderedSplit(tmp, counts.filter(col("doc_id") >= t1),
-        expr(s"(doc_id - $t1) * 3 div $span"))
-      (tmp.toString, t1)
-    }
-
-  /** The s18 ingest stream: the d30 batch ids (doc_id % 3 = 0) staged
-    * as three ordered batches split by (doc_id div 3) mod 3 — the
-    * component fold has no monotonicity contract, only per-batch id
-    * freshness, which a mod split of disjoint ids gives. */
-  private def stagedPhashIngestSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s18_ids", dir)(stageOrderedSplit(_,
-      Tables.documents(s, dir).select(col("doc_id"))
-        .filter(col("doc_id") % 3 === 0),
-      pmod(expr("doc_id div 3"), lit(3))))
-
-  /** The s16 ingest stream: the c5 ticker corpus's docs above the
-    * half-range boundary `cut`, staged as three ordered MONOTONE
-    * batches — (cut, 90% of base], (90%, maxBase], clones (> maxBase).
-    * Boundaries are explicit id cuts rather than a tercile formula
-    * because clone ids sit 1e6 above the base range: value terciles
-    * would leave the middle slice empty, and the boilerplate fold's
-    * monotonicity contract rejects empty batches. The ticker line
-    * crosses minDocs ~76% through the base range — inside batch 0 —
-    * so seed-phase docs are re-emitted THROUGH the streaming
-    * changelog protocol. */
-  private def stagedBoilerIngestSplitDir(s: SparkSession, dir: String): String =
-    stagedDir("s16_docs", dir) { tmp =>
-      val maxBase = Tables.documents(s, dir)
-        .agg(max(col("doc_id")).cast("long")).head().getLong(0)
-      val cut = maxBase / 2
-      val c2 = maxBase * 9 / 10
-      stageOrderedSplit(tmp, corpusTicker(s, dir).filter(col("doc_id") > cut),
-        when(col("doc_id") <= c2, lit(0L))
-          .when(col("doc_id") <= maxBase, lit(1L))
-          .otherwise(lit(2L)))
-    }
-
-  /** The q95/q96/s15 fixture: events as (event_id, event_type,
-    * xl = value ×100 fixed-point BIGINT — the q64 discipline), null
-    * values excluded. Shared so the direct computation, the batch
-    * store folds, and the streaming ingest all rank EXACTLY the same
-    * multiset (their oracle is q95's). */
-  private def quantileEvents(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir)
-      .filter(col("value").isNotNull)
-      .select(col("event_id"), col("event_type"),
-        (dec2(col("value")) * 100).cast("long").as("xl"))
-
-  /** The s15 ingest stream: the quantile fixture's event_id % 3 ∈
-    * {1, 2} rows staged as three ordered batches split by
-    * `event_id div 3` mod 3 (NOT event_id mod 3 — that would leave
-    * one slice empty after excluding the seed third). Cell-count
-    * folds are associative and order-independent, so ANY assignment
-    * of rows to batches serves; the split just has to cover the
-    * non-seed rows exactly once. */
-  private def stagedQuantileIngestSplitDir(s: SparkSession,
-                                           dir: String): String =
-    stagedDir("s15_events", dir)(stageOrderedSplit(_,
-      quantileEvents(s, dir).filter(col("event_id") % 3 =!= 0),
-      expr("event_id div 3")))
-
-  /** The q77 old/new snapshot pair — shared by the q77 diff gate and
-    * the s9 CDC-apply roundtrip (whose source stream IS q77's diff). */
-  private def q77Fixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    (docs.filter(col("doc_id") % 5 =!= 1),
-      docs.filter(col("doc_id") % 7 =!= 3)
-        .withColumn("text",
-          when(col("doc_id") % 11 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text"))))
-  }
-
-  // Stream-source schemas of the staged splits. Docs (s11/s14/s16; what
-  // minhashIndex and the incremental folds consume), vectors (s12/s13),
-  // CDC change rows (the SnapshotDiff.diff output shape for q77; s9),
-  // token counts (s17), quantile rows (s15), and ids only (s18: the
-  // media bytes are synthesized from the id inside the fold's decode
-  // stage — the d27/d29/d30 fixture discipline; a production stream
-  // would carry the binary column itself).
-  private lazy val nearDupStreamSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, text STRING")
-  private lazy val annStreamSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "vec_id BIGINT, embedding ARRAY<FLOAT>")
-  private lazy val cdcStreamSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "doc_id BIGINT, text STRING, op STRING")
-  private lazy val packStreamSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT, n BIGINT")
-  private lazy val quantileStreamSchema = org.apache.spark.sql.types.StructType
-    .fromDDL("event_id BIGINT, event_type STRING, xl BIGINT")
-  private lazy val idStreamSchema =
-    org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT")
-
-  /** Raw events schema as the file stream source sees it — derived from
-    * the fixture's own parquet footer (one read per dir), NOT
-    * hardcoded: the driver has shipped `ts` as both TIMESTAMP(NANOS)
-    * (arrives long under `nanosAsLong`) and TIMESTAMP(MICROS) (arrives
-    * TIMESTAMP_NTZ), and a hardcoded LongType broke every stream for a
-    * round when the encoding flipped. [[Tables.normalizeNanos]]
-    * dispatches on whichever dtype this reports. The staged copies
-    * (verbatim file copy; Spark re-write of the same read) preserve the
-    * source encoding, so one footer read covers both staging shapes. */
-  private def eventsStreamSchema(s: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
-    PerJvm.once(s"events_schema|$dir") {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      // Validate at cache-fill (the single guard point) instead of
-      // letting a fourth ts encoding surface later inside
-      // normalizeNanos per-stream: ts must be one of the three
-      // encodings the dispatch accepts, and the contract columns the
-      // stream jobs select must be present (additive extras are fine —
-      // Tables.assertContract's discipline).
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val tsType = schema.fields.find(_.name == "ts").map(_.dataType)
-        .getOrElse(throw new IllegalStateException(
-          s"events stream schema under $dir has no ts column"))
-      if (!Set[org.apache.spark.sql.types.DataType](
-          LongType, TimestampType, TimestampNTZType).contains(tsType))
-        throw new IllegalStateException(
-          s"events.ts footer dtype $tsType under $dir; expected long nanos, " +
-            "timestamp_ntz, or timestamp - did the fixture change encoding again?")
-      val missing = Seq("event_id", "user_id", "event_type", "value")
-        .filterNot(schema.fieldNames.contains)
-      if (missing.nonEmpty) throw new IllegalStateException(
-        s"events stream schema under $dir is missing ${missing.mkString(", ")}")
-      schema
-    }
-
-  /** Planted-skew heavy-hitter key shared by q76 / q79 / s8: the
-    * corpus's own user keys are uniform (TESTDATA degeneracy), so 70%
-    * of events land on 3 hot keys and the rest churn ~1500 cold user
-    * keys through the 64 MG counters. Null user_id ⇒ null key,
-    * excluded by the operators' documented non-null contract (and by
-    * the oracles' IS NOT NULL filters). */
-  private def plantedSkewKey: Column =
-    when(col("user_id") % 10 < 7,
-      concat(lit("hot_"), (col("user_id") % 3).cast("string")))
-      .otherwise(concat(lit("u"), col("user_id").cast("string")))
+  /** The 18 graded streams of the shared pass ([[StreamPass]]). */
+  private[graft] lazy val streams: Seq[PassStream] = StreamGates.streams
 
   /** Per-phase wall seconds of the last shared stream pass, keyed
     * "dir|phase" (see [[StreamPass.phaseSeconds]]). */
@@ -641,6690 +39,4 @@ object SparkEntry {
   /** Wall seconds the shared streaming pass took, keyed by sf dir —
     * reported by Bench as stream_shared_pass_sec. */
   def streamSharedPassSeconds: Map[String, Double] = StreamPass.passSeconds
-
-  /** The events file stream over the verbatim staged copy. */
-  private def eventsStream(c: PassStream.Ctx): DataFrame = Tables.normalizeNanos(
-    c.s.readStream.schema(eventsStreamSchema(c.s, c.dir)).parquet(stagedEventsDir(c.dir)))
-
-  /** The events file stream over the ordered 3-batch staging. */
-  private def eventsSplitStream(c: PassStream.Ctx): DataFrame =
-    c.s.readStream.schema(eventsStreamSchema(c.s, c.dir))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(stagedEventsSplitDir(c.s, c.dir))
-
-  /** The 18 graded streams of the shared pass ([[StreamPass]]), one
-    * declaration each; their `extensionQueries` entries are derived
-    * from this list. */
-  private[graft] val streams: Seq[PassStream] = Seq(
-    // Watermarked tumbling window aggregation; same oracle as q18.
-    PassStream.memory("s1_stream_tumbling", "s1_stream_out", "complete")(c =>
-      eventsStream(c).withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).cast("bigint").as("n"),
-          sum(dec2(col("value"))).cast("decimal(18,2)").as("total")))((_, t) =>
-      t.select(unix_micros(col("window.start")).as("win_start_us"),
-        col("event_type"), col("n"), col("total").cast("double").as("total"))),
-
-    // Sliding windows (1h window / 30min slide).
-    PassStream.memory("s2_stream_sliding", "s2_stream_out", "complete")(c =>
-      eventsStream(c).withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-        .agg(count(lit(1)).cast("bigint").as("n"),
-          sum(dec2(col("value"))).cast("decimal(18,2)").as("total")))((_, t) =>
-      t.select(unix_micros(col("window.start")).as("win_start_us"),
-        col("event_type"), col("n"), col("total").cast("double").as("total"))),
-
-    // Streaming stateful dedup — the streaming twin of d1/D1: a
-    // dropDuplicates over the key columns holds the seen-key set in
-    // the state store and emits each key's first arrival. The output
-    // here is the KEY SET (which row "won" is arrival-order-dependent
-    // and so not oracle-able; the set of keys is exact), making the
-    // DuckDB twin a plain DISTINCT. Production at 100 TB bounds the
-    // state with the implemented watermark form
-    // (StreamingJobs.dedupWithinWatermark, spec-tested: in-horizon
-    // dups dropped, state stays O(horizon), keys recur after it);
-    // exact unbounded-state semantics keep the gate deterministic.
-    // (the bounded production form is gated separately as s7)
-    PassStream.memory("s3_stream_dedup", "s3_stream_out", "append")(c =>
-      eventsStream(c).select(col("user_id"), col("event_type"))
-        .dropDuplicates(Seq("user_id", "event_type")))((_, t) =>
-      t.select(col("user_id"), col("event_type"))),
-
-    // Native session_window aggregation as a STREAM — the fourth
-    // streaming state shape (merging session state, distinct from
-    // s1/s2's fixed windows and s3's keyed dedup set): arriving
-    // events extend or merge open sessions in the state store. Same
-    // semantics and SAME ORACLE as batch q25 — the batch/stream
-    // parity the engine promises everywhere. Complete mode keeps
-    // gate determinism (every session emitted at the end); the
-    // watermarked append form is what production would run, shown in
-    // StreamingSpec with statefulSessions as the custom-state twin.
-    PassStream.memory("s4_stream_sessions", "s4_stream_out", "complete")(c =>
-      eventsStream(c)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).cast("bigint").as("n_events")))((_, t) =>
-      t.select(col("user_id"),
-        unix_micros(col("session_window.start")).as("start_us"),
-        col("n_events"))),
-
-    // Streaming incremental mart maintenance IN the graded surface:
-    // three forced micro-batches (maxFilesPerTrigger=1 over a
-    // 3-file staging) each publish combine(previous, new partial)
-    // through the versioned-staging protocol inside foreachBatch —
-    // the K4 atomic-publish + G-partials machinery as a stream. The
-    // finalize of the LAST version must equal the full batch
-    // recompute: gated by q24's oracle (combine associativity means
-    // file->batch assignment order cannot change the result).
-    PassStream("s5_stream_mart", "s5",
-      start = c =>
-        graft.streaming.StreamingJobs.streamingIncrementalMart(
-          c.s, stagedEventsSplitDir(c.s, c.dir), eventsStreamSchema(c.s, c.dir),
-          c.root, c.ck),
-      materialize = { c =>
-        val latest = VersionedStaging.latestComplete(c.s, c.root)
-          .getOrElse(sys.error("stream pass: no mart version published"))
-        Marts.finalizeDaily(c.s.read.parquet(latest))
-      }),
-
-    // Stream-stream watermarked interval join IN the graded surface
-    // (promoted from StreamingSpec): signup and purchase streams
-    // joined on user within (0, 1h], both sides watermarked so the
-    // join RANGE bounds state retention — without the watermark a
-    // stream-stream join buffers both sides forever, the unbounded-
-    // state failure mode. Inner joins emit on match (append mode);
-    // the post-hoc per-user pair count must equal batch q38, which
-    // is the oracle. Same discipline as s4 (batch-q25) and s5
-    // (batch-q24): the streaming path is gated by its batch twin.
-    PassStream.memory("s6_stream_interval_join", "s6_stream_out", "append") { c =>
-      def side(t: String) = eventsStream(c).filter(col("event_type") === t)
-      val signups = side("signup").withWatermark("ts", "2 hours")
-        .select(col("user_id"), col("ts").as("s_ts"))
-      val purchases = side("purchase").withWatermark("ts", "2 hours")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"))
-      signups.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") > col("s_ts") &&
-          col("p_ts") <= col("s_ts") + expr("interval 1 hour"))
-    }((_, t) => t.groupBy(col("user_id"))
-      .agg(count(lit(1)).cast("bigint").as("n_pairs"))),
-
-    // Watermark-BOUNDED streaming dedup, gated. The unbounded s3 form
-    // is gate-exact but its state grows with every key ever seen; this
-    // is the production form whose state plateaus at O(keys per
-    // horizon), made DETERMINISTIC so a batch oracle can reproduce it:
-    //  - the source is the ordered 3-file staging (event_id mod 3,
-    //    strictly increasing file mod times, maxFilesPerTrigger=1)
-    //    — batch membership and order are data, not scheduling;
-    //  - event time is synthesized CONSTANT per (key, batch): batch
-    //    b on day b, key k at hour (k mod 12) — so the stored
-    //    expiry (first arrival's ts + horizon) cannot depend on
-    //    within-batch arrival order, and the watermark after each
-    //    batch (max ts - 2h) is a pure function of the data.
-    // The oracle simulates the exact engine semantics, pinned by
-    // experiment on this Spark build and re-pinned by the gate
-    // itself every round: lookups in batch b see state as of the
-    // end of batch b-1; eviction at the end of batch b uses the
-    // watermark that ENTERED batch b (i.e. from batches < b); a
-    // deduped re-arrival does NOT refresh the stored expiry; and a
-    // state row whose expiry EQUALS the watermark is EVICTED
-    // (survive iff expiry > wm — the fixture lands exactly on this
-    // boundary at hour offset maxOffset-4, so a Spark build that
-    // flipped it to ≥ would hash-mismatch here, not silently
-    // drift). Keys with hour offsets near the batch max survive
-    // into the next day's batch (in-horizon dedup) while early-hour
-    // keys are evicted and RE-EMITTED on recurrence — both paths of
-    // the horizon rule are exercised and hash-gated.
-    PassStream.memory("s7_stream_dedup_watermark", "s7_stream_out", "append")(c =>
-      eventsSplitStream(c)
-        .select(pmod(coalesce(col("user_id"), lit(0L)), lit(40)).as("k"),
-          pmod(col("event_id"), lit(3)).as("b"))
-        .withColumn("ts7", timestamp_seconds(
-          lit(1704067200L) + // 2024-01-01 00:00:00 UTC
-            (col("b") * 86400L + pmod(col("k"), lit(12)) * 3600L)))
-        .withWatermark("ts7", "2 hours")
-        .dropDuplicatesWithinWatermark(Seq("k")))((_, t) =>
-      t.select(col("k"), unix_micros(col("ts7")).as("ts_us"))),
-
-    // Streaming heavy hitters: the q76 Misra–Gries sketch maintained
-    // incrementally in mapGroupsWithState (state = 8 hash groups ×
-    // ≤ 2k counters — NEVER the key space) over the 3 ordered
-    // micro-batches, so the MG state genuinely carries across batch
-    // boundaries; candidates exact-rechecked against cold storage at
-    // finalization. The output is exact and deterministic even though
-    // in-flight candidate sets vary with arrival order: candidates ⊇
-    // the true heavy hitters in every run (per-group undercount ≤
-    // n_g/(k+1); a key lives in exactly one hash group), and the
-    // integer threshold prunes them to the same set the batch q76 plan
-    // — and the same oracle — produce. StreamingMergeSpec gates the
-    // sketch across 1×/8× shuffle parallelism against the batch twin.
-    PassStream.memory("s8_stream_heavy_hitters", "s8_stream_out", "update") { c =>
-      import c.s.implicits._
-      graft.streaming.StreamingJobs.streamingHeavyHitterSketch(
-        eventsSplitStream(c).select(plantedSkewKey.as("k"))
-          .filter(col("k").isNotNull).as[String],
-        k = 64, nGroups = 8).toDF()
-    }((c, t) =>
-      // identical two-pass contract to q76, with pass 1 replaced by
-      // the continuously-maintained stream state
-      graft.streaming.StreamingJobs.finalizeHeavyHitters(
-        t, Tables.events(c.s, c.dir).select(plantedSkewKey.as("k"))
-          .filter(col("k").isNotNull), 64)),
-
-    // Streaming CDC apply — the consumer half of q77/q81: the q77
-    // diff staged as three micro-batches and applied (upsert +
-    // DELETE, the op the reference's merge lacks) to a versioned-
-    // staging state seeded with the OLD snapshot. The gate checks
-    // the roundtrip identity apply(old, diff(old,new)) == new: the
-    // oracle is the new snapshot computed directly, no diff at all.
-    // Deterministic under any batch split: diff emits ≤ 1 row per
-    // key, so per-batch applies commute. Per batch the state table
-    // is broadcast-probed (anti-join + union), never shuffled — see
-    // StreamingJobs.applyCdcStream for the 100-TB notes.
-    PassStream("s9_stream_cdc_apply", "s9",
-      start = { c =>
-        VersionedStaging.publish(c.s, c.root, q77Fixture(c.s, c.dir)._1)
-        graft.streaming.StreamingJobs.applyCdcStream(
-          c.s, stagedCdcSplitDir(c.s, c.dir), cdcStreamSchema, c.root,
-          Seq("doc_id"), c.ck)
-      },
-      materialize = { c =>
-        c.s.read.parquet(VersionedStaging.latestComplete(c.s, c.root)
-          .getOrElse(sys.error("stream pass: no s9 CDC state published")))
-      }),
-
-    // Stream-STATIC broadcast enrichment — the most common production
-    // streaming shape (per-event dimension lookup), distinct from s6's
-    // stream-stream join, gated against the equivalent batch
-    // join+rollup. The dim side is a bounded static table broadcast to
-    // every task, so the stream side stays stateless and shuffle-free:
-    // no state store, no watermark, each micro-batch joins map-side.
-    // That is exactly the 100 TB/day shape — enrichment never rekeys
-    // the stream. Null user_id ⇒ null key dropped by the inner join
-    // (mirrored by the oracle's IS NOT NULL).
-    PassStream.memory("s10_stream_enrich", "s10_stream_out", "append") { c =>
-      val dim = broadcast(Tables.nation(c.s, c.dir)
-        .select(col("n_nationkey").cast("long").as("nk"), col("n_name")))
-      eventsStream(c).withColumn("nk", pmod(col("user_id"), lit(25L)))
-        .join(dim, "nk")
-    }((_, t) => t.groupBy(col("n_name"), col("event_type"))
-      .agg(count(lit(1)).cast("bigint").as("n"),
-        sum(dec2(col("value"))).cast("decimal(18,2)").as("total"))
-      .select(col("n_name"), col("event_type"), col("n"),
-        col("total").cast("double").as("total"))),
-
-    // Streaming incremental near-dup (the d19 index maintained FROM
-    // a stream): the index is seeded with the corpus MinHash index,
-    // then three clone micro-batches probe it and grow it batch over
-    // batch — the same-doc clone pairs planted in different batches
-    // are found ONLY via the grown index, so a broken index append
-    // fails the hash. Oracle: three chained instances of the d19
-    // pipeline with index_i = corpus ∪ batches<i, exactly the
-    // engine's sequential semantics (including the per-probe union
-    // bucket cap).
-    PassStream("s11_stream_near_dup", "s11",
-      start = { c =>
-        VersionedStaging.publish(c.s, s"${c.root}/index",
-          DedupSuite.minhashIndex(
-            Tables.documents(c.s, c.dir).select(col("doc_id"), col("text")),
-            "doc_id", "text", n = 3, k = 16, bands = 4))
-        graft.streaming.StreamingJobs.streamingIncrementalNearDup(
-          c.s, stagedNearDupSplitDir(c.s, c.dir), nearDupStreamSchema,
-          s"${c.root}/index", s"${c.root}/pairs", c.ck)
-      },
-      materialize = { c =>
-        // the accumulated pair output across the three probes (the
-        // partition column `batch` is harness plumbing, not output)
-        c.s.read.parquet(s"${c.root}/pairs")
-          .select(col("id_a"), col("id_b"), col("jaccard"))
-      }),
-
-    // Streaming ANN serving: micro-batched query vectors scored
-    // against a STATIC PQ index precomputed from the corpus (the e9
-    // codebook/encoder; StreamingJobs.streamingAnnServe — the s10
-    // broadcast-enrichment shape pointed at a vector index). Oracle =
-    // the e9 pipeline with the stream's 24-query set; the stream holds
-    // no state, so accumulated per-batch top-k must equal the one-shot
-    // batch.
-    PassStream("s12_stream_ann_serve", "s12",
-      start = { c =>
-        val emb = Tables.embeddings(c.s, c.dir)
-          .select(col("vec_id"), col("embedding"))
-        val cb = Similarity.pqCodebook(
-          emb, "vec_id", "embedding", m = 8, dims = 64, nCodes = 16)
-        val codes = Similarity.pqEncode(
-          emb, cb, "vec_id", "embedding", m = 8, dims = 64)
-        graft.streaming.StreamingJobs.streamingAnnServe(
-          c.s, stagedAnnQuerySplitDir(c.s, c.dir), annStreamSchema, cb,
-          codes, c.root, c.ck, k = 5, m = 8, dims = 64)
-      },
-      materialize = { c =>
-        // accumulated per-batch top-k (batch partition = plumbing)
-        c.s.read.parquet(c.root)
-          .select(col("query_id"), col("neighbor_id"), col("adist"), col("rnk"))
-      }),
-
-    // Streaming incremental IVF ingest: foreachBatch grows the
-    // persisted centroid-partitioned index, seeded from the corpus
-    // with FROZEN centroids, from a vector stream (corpus never
-    // re-read, replay-safe via per-batch markers); queries are then
-    // served from the grown index — the s11 grow-persisted-state move
-    // applied to ANN. Shares e10's oracle: the streamed batches union
-    // to exactly e10's planted clone set, and frozen centroids make
-    // stream-grown == batch-rebuilt bit-for-bit.
-    PassStream("s13_stream_ivf_ingest", "s13",
-      start = { c =>
-        val cent = Similarity.buildIvfIndex(
-          Tables.embeddings(c.s, c.dir).select(col("vec_id"), col("embedding")),
-          s"${c.root}/index", "vec_id", "embedding", 16)
-        // persist the frozen centroids beside the index (floats
-        // roundtrip parquet exactly) — the post-drain serve reads
-        // them back, the e10 store layout
-        cent.write.mode("overwrite").parquet(s"${c.root}/centroids")
-        graft.streaming.StreamingJobs.streamingIvfIngest(
-          c.s, stagedIvfIngestSplitDir(c.s, c.dir), annStreamSchema,
-          s"${c.root}/index", c.s.read.parquet(s"${c.root}/centroids"), c.ck)
-      },
-      materialize = { c =>
-        // the index is COMPACTED first (each streamed batch appended its
-        // own file set per centroid partition): the gate proves
-        // post-compaction serving is hash-identical
-        StoreCompaction.compactStoreFused(c.s, s"${c.root}/index", "centroid_id")
-        Similarity.queryIvfIndex(c.s, s"${c.root}/index",
-          c.s.read.parquet(s"${c.root}/centroids"),
-          Tables.embeddings(c.s, c.dir).filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5, nProbe = 4)
-      }),
-
-    // Streaming incremental ExactSubstr ingest: the d26 fold under
-    // foreachBatch with an exactly-once replay protocol (committed
-    // staging + deterministic promote + marker — three artifacts per
-    // batch: store delta, _meta high-water row, the batch's cleaned
-    // output). The window-key store is seeded from the corpus's first
-    // id tercile (its cleaned output becomes the accumulated output's
-    // first segment), then the upper terciles fold in as three
-    // MONOTONE micro-batches, each emitting its own cleaned text
-    // exactly once. The corpus is never re-windowed: each batch's
-    // store join reads only its own crc32 buckets. Shares d25's
-    // oracle: the seed segment plus the per-batch emissions ∪-equal
-    // the full recompute bit-for-bit (monotone ids freeze earlier
-    // emissions). Production mode: hashKeys=true (16-byte digest keys).
-    PassStream("s14_stream_substr_ingest", "s14",
-      start = { c =>
-        val (store, out) = (s"${c.root}/store", s"${c.root}/out")
-        // the split staging (the stream's input files) and the store
-        // build are INDEPENDENT — overlap them; the build thunk
-        // re-derives the tercile boundary itself (one cheap max probe,
-        // hidden inside the overlap; identical arithmetic to the split
-        // helper's). The build's outWrite fan-out shares the ONE window
-        // aggregation between the store write and the seed-output write.
-        var split: String = null
-        Par.run(Seq(
-          () => { split = stagedSubstrIngestSplitDir(c.s, c.dir) },
-          () => {
-            val docsAll = substrCorpus(c.s, c.dir)
-            val t1 = docsAll.agg(max(col("doc_id"))).head().getLong(0) / 3
-            // bloomSide: the streamed folds stage + promote bloom
-            // deltas (exactly-once with the store delta), and each
-            // fold's store read is bucket-pruned by the sidecar
-            DedupSuite.exactSubstrBuildStore(
-              docsAll.filter(col("doc_id") < t1),
-              "doc_id", "text", 8, store, nBuckets = 64, hashKeys = true,
-              outWrite = Some(_.write.parquet(out)), bloomSide = true)
-            ()
-          }))
-        graft.streaming.StreamingJobs.streamingSubstrIngest(
-          c.s, split, nearDupStreamSchema, store, out, c.ck, l = 8,
-          nBuckets = 64, hashKeys = true)
-      },
-      materialize = { c =>
-        c.s.read.parquet(s"${c.root}/out")
-          .select(col("doc_id"), col("clean_text"), col("n_removed"))
-      }),
-
-    // Streaming incremental quantile-store ingest: the q96 fold under
-    // foreachBatch — the store is seeded with the fixture's
-    // event_id%3=0 third, then the other two thirds fold in as
-    // additive cell-count deltas (exactly-once via the committed-
-    // staging protocol; order irrelevant — counts commute). The
-    // post-drain serve ranks from the stream-grown store alone, the
-    // full fixture being the row source for the in-cell refinement
-    // (and its coverage cross-check); shares q95's oracle (served ==
-    // direct computation IS the gate).
-    PassStream("s15_stream_quantile_ingest", "s15",
-      start = { c =>
-        val split = stagedQuantileIngestSplitDir(c.s, c.dir)
-        Quantiles.buildQuantileStore(
-          quantileEvents(c.s, c.dir).filter(col("event_id") % 3 === 0),
-          col("event_type"), col("xl"), s"${c.root}/store", cellBits = 8)
-        graft.streaming.StreamingJobs.streamingQuantileIngest(
-          c.s, split, quantileStreamSchema, s"${c.root}/store", c.ck,
-          "event_type", "xl")
-      },
-      materialize = { c =>
-        Quantiles.quantilesFromStore(c.s, s"${c.root}/store",
-            quantileEvents(c.s, c.dir), col("event_type"), col("xl"),
-            Seq(Quantiles.Quantile("p25", 25, 100),
-              Quantiles.Quantile("p50", 50, 100),
-              Quantiles.Quantile("p90", 90, 100)))
-          .select(col("grp").as("event_type"),
-            (col("p25") / 100.0).as("p25"),
-            (col("p50") / 100.0).as("p50"),
-            (col("p90") / 100.0).as("p90"))
-      }),
-
-    // Streaming incremental boilerplate ingest: the c5 changelog store
-    // grown through foreachBatch with the committed-staging
-    // exactly-once protocol. The store is seeded with the ticker
-    // corpus's lower half (its cleaned output = changelog seq -1),
-    // then three monotone batches fold in, each emitting a changelog
-    // segment (cleaned batch + re-emissions of stored docs invalidated
-    // by a threshold crossing) exactly once. The crossing lands in
-    // batch 0, so seed docs re-emit THROUGH the stream; the post-drain
-    // latest-seq-per-doc resolution must equal the full
-    // removeCommonLines recompute (c5's oracle).
-    PassStream("s16_stream_boilerplate_ingest", "s16",
-      start = { c =>
-        val (store, out) = (s"${c.root}/store", s"${c.root}/out")
-        // split staging ∥ store build (independent artifacts — the s14
-        // move); the build thunk derives the doc cut and the threshold
-        // from ONE fused max+count probe (identical arithmetic to the
-        // split helper's own). The build's outWrite writes the seed
-        // output from the build's in-memory dictionary.
-        var split: String = null
-        var m = 0L
-        Par.run(Seq(
-          () => { split = stagedBoilerIngestSplitDir(c.s, c.dir) },
-          () => {
-            val probe = Tables.documents(c.s, c.dir)
-              .agg(max(col("doc_id")).cast("long"), count(lit(1))).head()
-            val cut = probe.getLong(0) / 2
-            m = probe.getLong(1) / 25
-            Boilerplate.buildStore(
-              corpusTicker(c.s, c.dir).filter(col("doc_id") <= cut),
-              "doc_id", "text", m, store, nBuckets = 16, nDocBuckets = 16,
-              outWrite = Some(_.withColumn("seq", lit(-1L)).write.parquet(out)))
-            ()
-          }))
-        graft.streaming.StreamingJobs.streamingBoilerplateIngest(
-          c.s, split, nearDupStreamSchema, store, out, c.ck, m,
-          nBuckets = 16, nDocBuckets = 16)
-      },
-      materialize = { c =>
-        // boilerplate cleaning is retroactive, so later re-emissions
-        // supersede earlier segments (seed = seq -1, folds = batch id)
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("seq").desc)
-        c.s.read.parquet(s"${c.root}/out")
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("doc_id"), col("clean_text"), col("n_removed"))
-      }),
-
-    // Streaming incremental sequence packing: q97's span store grown
-    // through foreachBatch with the committed-staging exactly-once
-    // protocol. The store is seeded with the first id tercile (its
-    // spans are the output's first segment; state = two high-water
-    // numbers), then (doc_id, n_tokens) batches extend the token
-    // stream at its high-water, each emitting FINAL spans exactly
-    // once — disjoint and final on emission, so the accumulated
-    // segments ∪-equal the one-shot q97 recompute (q97's oracle).
-    PassStream("s17_stream_pack_spans", "s17",
-      start = { c =>
-        import graft.functions.TextFunctions.tokens
-        val (split, t1) = stagedPackIngestSplit(c.s, c.dir)
-        val (store, out) = (s"${c.root}/store", s"${c.root}/out")
-        Pack.buildSpanStore(
-            Tables.documents(c.s, c.dir).filter(col("doc_id") < t1),
-            "doc_id", size(tokens(col("text"))), 128, store, 100)
-          .write.parquet(out)
-        graft.streaming.StreamingJobs.streamingPackIngest(
-          c.s, split, packStreamSchema, store, out, c.ck, seqLen = 128,
-          docsPerShard = 100)
-      },
-      materialize = { c =>
-        c.s.read.parquet(s"${c.root}/out")
-          .select(col("seq_id"), col("doc_id"), col("tok_start"), col("tok_end"))
-      }),
-
-    // Streaming MULTIMODAL ingest: d30's fold under foreachBatch with
-    // the committed-staging exactly-once protocol. The persisted
-    // Hamming band index is seeded from the corpus (non-multiples of
-    // 3, decoded ONCE) with the seed component labels persisted beside
-    // it; each streamed media batch decodes once, folds against the
-    // bucket-pruned store, and emits its new batch-touching pairs
-    // exactly once. The post-drain resolution (one component fold of
-    // the accumulated pairs into the seed labels — the pair union over
-    // batches is the full run's batch-touching set) must equal the
-    // full d29 recompute (d29's oracle).
-    PassStream("s18_stream_phash_ingest", "s18",
-      start = { c =>
-        import c.s.implicits._
-        val store = s"${c.root}/index"
-        // split staging ∥ (decode → store build ∥ labels0) — the
-        // s14/s16 overlap move; build and labels0 both read only
-        // the checkpointed corpus hash frame (decode runs once)
-        var split: String = null
-        Par.run(Seq(
-          () => { split = stagedPhashIngestSplitDir(c.s, c.dir) },
-          () => {
-            val corpusHashes = Multimodal.bmpDHashes(
-              Tables.documents(c.s, c.dir).select(col("doc_id"))
-                .filter(col("doc_id") % 3 =!= 0).as[Long]
-                .mapPartitions(_.map(id => (id, Multimodal.synthBmpPerceptual(id))))
-                .toDF("doc_id", "content"),
-              "doc_id", "content").localCheckpoint()
-            Par.run(Seq(
-              // nBuckets = 4: fixture-scale layout (the d30 gate note)
-              () => DedupSuite.hammingIndexBuild(corpusHashes,
-                "doc_id", "ph", store, bands = 4, nBuckets = 4),
-              () => Dedup.connectedComponents(
-                  DedupSuite.hammingPairs(corpusHashes, "doc_id", "ph",
-                    maxHamming = 3, bands = 4)
-                    .select(col("id_a"), col("id_b")))
-                .write.parquet(s"${c.root}/labels0")))
-          }))
-        graft.streaming.StreamingJobs.streamingHammingIngest(
-          c.s, split, idStreamSchema, store, s"${c.root}/out", c.ck,
-          hashesOf = df => {
-            val ss = df.sparkSession
-            import ss.implicits._
-            Multimodal.bmpDHashes(
-              df.select(col("doc_id")).as[Long]
-                .mapPartitions(_.map(id => (id, Multimodal.synthBmpPerceptual(id))))
-                .toDF("doc_id", "content"), "doc_id", "content")
-          },
-          idCol = "doc_id", hashCol = "ph", maxHamming = 3)
-      },
-      materialize = { c =>
-        val labels = Dedup.foldComponents(
-          c.s.read.parquet(s"${c.root}/labels0"),
-          c.s.read.parquet(s"${c.root}/out").select(col("id_a"), col("id_b")))
-        Tables.documents(c.s, c.dir).select(col("doc_id"))
-          .join(labels, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("component"), col("doc_id")).as("keep_id"))
-          .withColumn("kept", (col("doc_id") === col("keep_id")).cast("boolean"))
-      }))
-
-  /** The s-entries: each reads its stream's materialized result from
-    * the one shared pass per (JVM, sf dir). */
-  private def streamQueries: Map[String, (SparkSession, String) => DataFrame] =
-    streams.map(st => st.entry -> ((s: SparkSession, dir: String) =>
-      s.read.parquet(StreamPass.results(s, dir, streams)(st.entry)))).toMap
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = parityQueries ++ extensionQueries
-
-  def oracleSql: Map[String, String] = {
-    val base = parityOracles ++ extensionOracles
-    // e13/e14 serve from the PERSISTED PQ index (buildIvfPqIndex);
-    // frozen seeds + exact BIGINT ADC make the served results
-    // bit-identical to the inline e11/e12 pipelines, so the served
-    // entries share their oracles — that equality IS the gate.
-    base ++ Map(
-      "e13_ivfpq_served" -> base("e11_ivfpq"),
-      "e14_ivfadc_served" -> base("e12_ivfpq_residual"),
-      // s13's streamed batches union to exactly e10's planted clone
-      // set, and frozen centroids make the stream-grown index
-      // bit-identical to the batch rebuild the e10 oracle computes
-      "s13_stream_ivf_ingest" -> base("e10_incremental_ivf"),
-      // d23/d24 fold d20/d21's clone batches into the persisted
-      // member state; fold == full recompute over corpus ∪ batch
-      // bit-exact (frozen centroids, all-member witness set), so the
-      // served survivors share the inline pipelines' oracles — that
-      // equality IS the gate, exactly the e13/e14 move.
-      "d23_semdedup_ingest" -> base("d20_semdedup"),
-      // d26 folds the d25 corpus through the persisted window-key
-      // store in monotonic batches; per-batch emission ∪-equals the
-      // full recompute, so it shares d25's relational oracle — that
-      // equality IS the gate
-      "d26_incremental_substr" -> base("d25_exact_substr"),
-      // s14 streams the same corpus through the same store discipline
-      // (seed tercile + three monotone batches); accumulated output ==
-      // full recompute, so it shares d25's oracle like d26
-      "s14_stream_substr_ingest" -> base("d25_exact_substr"),
-      // d30 folds a batch's perceptual pairs into the corpus's
-      // component labels; cumulative labels == the full d29 recompute,
-      // so it shares d29's recursive-CTE oracle — that equality IS
-      // the gate
-      "d30_incremental_phash_dedup" -> base("d29_phash_dedup"),
-      // s18 streams the same batch through the same persisted band
-      // index in three exactly-once micro-batches; the post-drain
-      // component fold == the full d29 recompute — d29's oracle again
-      "s18_stream_phash_ingest" -> base("d29_phash_dedup"),
-      // q96 serves exact quantiles from the additive cell-count store
-      // (build third + two folds over all events); served == the
-      // direct q95 computation, so it shares q95's oracle
-      "q96_quantile_store" -> base("q95_radix_quantiles"),
-      // s15 streams the same folds (exactly-once, commuting deltas)
-      // and serves from the stream-grown store — q95's oracle again
-      "s15_stream_quantile_ingest" -> base("q95_radix_quantiles"),
-      // s16 streams the c5 ticker corpus through the boilerplate
-      // changelog store (seed half + three monotone batches); the
-      // accumulated output resolved latest-seq-per-doc == the full
-      // recompute, so it shares c5's oracle — that equality IS the
-      // gate, and it can only hold if the mid-stream threshold
-      // crossing actually re-emitted the seed's ticker docs
-      "s16_stream_boilerplate_ingest" -> base("c5_boilerplate_ingest"),
-      // q98 folds monotone batches through the span store (state =
-      // two high-water numbers); spans are a pure function of order,
-      // counts, and seqLen, so build ∪ folds == the one-shot q97
-      // computation — its oracle gates both, and s17 streams the
-      // same folds under the exactly-once protocol
-      "q98_pack_spans_ingest" -> base("q97_pack_spans"),
-      "s17_stream_pack_spans" -> base("q97_pack_spans"),
-      "d24_semdedup_ingest_farthest" -> base("d21_semdedup_farthest"))
-  }
-
-  /** Timed by Bench, NOT part of the declared/gated query surface: the
-    * xxhash64 base hash has no DuckDB twin, so no oracle is possible.
-    * Pair-set equivalence with the gated portable pipeline (d2) on the
-    * same fixture is spec-tested instead (DedupSuiteSpec). */
-  def benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x1_minhash_fast" -> ((s, dir) =>
-      DedupSuite.minhashNearDups(corpusNear(s, dir), "doc_id", "text",
-        n = 3, k = 16, bands = 4, threshold = 0.5)),
-    // e7's corpus-scale twin at FULL table width: the banded form e8
-    // gates on the sample (recall oracle-exact there), timed here over
-    // every vector — same params, so the benched plan is exactly the
-    // gated operator.
-    "x2_knn_bucketed" -> ((s, dir) =>
-      Similarity.knnGraphBanded(Tables.embeddings(s, dir),
-        "vec_id", "embedding", k = 4, planesPerTable = 3, nTables = 4)))
-
-  def parityQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- marts (G1-G3, B3, C6-C11) ----
-    "q1_daily_metrics" -> ((s, dir) => Marts.dailyMetrics(Tables.events(s, dir))),
-
-    "q2_domain_daily" -> ((s, dir) =>
-      Marts.groupedDaily(
-        Tables.documents(s, dir)
-          .select(col("lang"), Enrich.domainOf(col("source")).as("domain"),
-            col("n_chars")),
-        Seq("lang", "domain"), "n_chars")),
-
-    "q3_user_activity" -> ((s, dir) =>
-      Marts.groupedDaily(
-        Tables.events(s, dir)
-          .filter(col("event_type") === "purchase" && col("ts").isNotNull)
-          .select(to_date(col("ts")).as("metric_date"),
-            coalesce(col("user_id").cast("string"), lit("(unknown)")).as("author"),
-            col("value")),
-        Seq("metric_date", "author"), "value")),
-
-    // ---- merge / dedup (D1, D2, J1, J2) ----
-    "q4_merge_upsert" -> ((s, dir) => {
-      val (target, batch) = mergeFixture(s, dir)
-      Merge.merged(target, batch, Seq("event_id"), "extracted_at")
-        .select(col("event_id"), col("event_type"),
-          col("val").cast("double").as("val"),
-          unix_micros(col("extracted_at")).as("extracted_at_us"))
-    }),
-
-    "q5_merge_counts" -> ((s, dir) => {
-      val (target, batch) = mergeFixture(s, dir)
-      Merge.countsPlan(target, batch, Seq("event_id"), "extracted_at")
-    }),
-
-    "q6_dedup_keep_last" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val b = ev.filter(col("event_id") % 5 === 0)
-        .select(col("event_id"), dec2(col("value")).as("val"), lit(1).as("ord"))
-        .unionByName(ev.filter(col("event_id") % 10 === 0)
-          .select(col("event_id"), (dec2(col("value")) + 1).cast("decimal(18,2)").as("val"),
-            lit(2).as("ord")))
-      Dedup.keepLast(b, Seq("event_id"), col("ord")).drop("ord")
-        .withColumn("val", col("val").cast("double"))
-    }),
-
-    "q12_anti_join_new" -> ((s, dir) => {
-      val (target, batch) = mergeFixture(s, dir)
-      batch.join(target, Seq("event_id"), "left_anti")
-        .select(col("event_id"), col("event_type"))
-    }),
-
-    // ---- checks (B5, G4-G7, S1, J3) ----
-    "q7_dup_check" -> ((s, dir) =>
-      Checks.duplicateKeys(Tables.lineitem(s, dir), Seq("l_orderkey"))),
-
-    "q8_summary_union" -> ((s, dir) =>
-      Checks.summaryUnion(Seq(
-        ("orders", Tables.orders(s, dir), "o_orderdate"),
-        ("lineitem", Tables.lineitem(s, dir), "l_shipdate"),
-        ("events", Tables.events(s, dir), "ts")))),
-
-    "q9_last_day_count" -> ((s, dir) =>
-      Checks.lastDayCount(Tables.events(s, dir), "ts")),
-
-    // ---- ranking (T2, T4) ----
-    "q10_topk_per_group" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("metric_date"), col("event_type"))
-        .agg(count(lit(1)).cast("bigint").as("n"))
-      TopK.perGroup(daily, Seq("metric_date"),
-        Seq(col("n").desc, col("event_type").asc), 3)
-    }),
-
-    "q11_order_limit" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("metric_date"))
-        .agg(sum(dec2(col("value"))).cast("decimal(18,2)").cast("double").as("total"))
-        .orderBy(col("total").desc, col("metric_date").asc)
-        .limit(5)),
-
-    // ---- enrichment (C2-C5, C7, C14) ----
-    "q13_enrich_contract" -> ((s, dir) =>
-      Tables.events(s, dir).select(
-        col("event_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        to_date(col("ts")).as("event_date"),
-        coalesce(dec2(col("value")), lit(0).cast("decimal(18,2)")).cast("double").as("val"),
-        Enrich.lenientLong(get_json_object(col("props"), "$.k")).as("prop_k"),
-        Enrich.truncate(col("event_type"), 3).as("type3"))),
-
-    "q14_array_len" -> ((s, dir) =>
-      Tables.embeddings(s, dir).select(
-        col("vec_id"),
-        Enrich.arrayLen(col("embedding")).as("dim"),
-        col("label"))),
-
-    // ---- joins (J2, J3 shapes at scale) ----
-    "q15_join_agg_nation" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).cast("bigint").as("n_orders"),
-          sum(dec2(col("o_totalprice"))).cast("decimal(18,2)").cast("double").as("total"))),
-
-    "q16_semi_join" -> ((s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir).filter(col("o_orderstatus") === "F")
-          .select(col("o_custkey")),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select(col("c_custkey"), col("c_name"))),
-
-    // ---- windows (T4 extension, §2.I) ----
-    "q17_running_total" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("metric_date"), col("event_type"))
-        .agg(sum(dec2(col("value"))).cast("decimal(18,2)").as("daily"))
-      Windows.runningSum(daily, Seq("event_type"), col("metric_date"),
-        col("daily"), "running")
-        .withColumn("daily", col("daily").cast("double"))
-        .withColumn("running", col("running").cast("decimal(18,2)").cast("double"))
-    }),
-
-    "q18_tumbling_hour" -> ((s, dir) =>
-      Windows.tumbling(Tables.events(s, dir), "ts", "1 hour", Seq("event_type"),
-        Seq(count(lit(1)).cast("bigint").as("n"),
-          sum(dec2(col("value"))).cast("decimal(18,2)").cast("double").as("total")))
-        .select(col("win_start_us"), col("event_type"), col("n"), col("total"))),
-
-    // ---- rollup + distinct aggregation (extension beyond §2.F) ----
-    "q19_rollup" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .rollup(col("event_type"))
-        .agg(count(lit(1)).cast("bigint").as("n"),
-          sum(dec2(col("value"))).cast("decimal(18,2)").cast("double").as("total"),
-          countDistinct(col("user_id")).cast("bigint").as("n_users"))
-        .select(coalesce(col("event_type"), lit("(all)")).as("event_type"),
-          col("n"), col("total"), col("n_users"))),
-
-    // ---- as-of join by composition (carry latest prior signup) ----
-    "q20_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      Windows.asOfCarry(ev, Seq("user_id"),
-          Seq(col("ts").asc, col("event_id").asc),
-          when(col("event_type") === "signup", unix_micros(col("ts"))),
-          "last_signup_us")
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          coalesce(col("last_signup_us"), lit(-1L)).as("last_signup_us"))
-    }),
-
-    // ---- gap sessionization (batch twin of streaming session windows) ----
-    "q21_sessionize" -> ((s, dir) =>
-      Windows.sessionize(Tables.events(s, dir), Seq("user_id"), "ts",
-          30L * 60 * 1000000, col("event_id"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).cast("bigint").as("n_events"),
-          min(col("ts_us")).as("start_us"),
-          max(col("ts_us")).as("end_us"))
-        .select(col("user_id"), col("session_id"), col("n_events"),
-          col("start_us"), col("end_us")))
-  )
-
-  def extensionQueries: Map[String, (SparkSession, String) => DataFrame] = {
-    import graft.functions.TextFunctions._
-    Map[String, (SparkSession, String) => DataFrame](
-      // ---- text analysis ----
-      "t1_token_stats" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"),
-          tokenCount(col("text")).as("n_tokens"),
-          bpeTokenCount(col("text")).as("n_bpe"))),
-
-      "t2_quality" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"),
-          graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-            graft.functions.ColUtil.bindOnce(
-              struct(size(toks).cast("int").as("n"),
-                hitCount(toks, stopwords("en")).as("s"))) { c =>
-              struct(
-                c.getField("n").as("n_tokens"),
-                c.getField("s").as("stop_hits"),
-                qualityScoreFromCounts(c.getField("n").cast("long"),
-                  c.getField("s").cast("long")).as("quality"))
-            }
-          }.as("q"))
-          .select(col("doc_id"), col("q.n_tokens").as("n_tokens"),
-            col("q.stop_hits").as("stop_hits"),
-            col("q.quality").cast("double").as("quality"))),
-
-      "t3_langid" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"),
-          graft.functions.ColUtil.bindOnce(tokens(col("text")))(langId)
-            .as("lang_pred"))),
-
-      "t4_fingerprint" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"), fingerprint(col("text")).as("fp"))),
-
-      // Gopher/C4-style repetition signals: top-token fraction, distinct
-      // ratio, top-bigram fraction — the cheap statistical filters that
-      // catch boilerplate/spam before expensive dedup. Explode + two
-      // hash aggregations; no windows, fully partial-aggregable, so the
-      // plan is shuffle-on-doc_id at any corpus size. All fractions are
-      // double quotients of exact counts (bit-identical cross-engine).
-      "t7_repetition" -> ((s, dir) => {
-        val toks = Tables.documents(s, dir).select(col("doc_id"),
-          tokens(col("text")).as("toks"))
-        val tokCounts = toks
-          .select(col("doc_id"), explode(col("toks")).as("tok"))
-          .groupBy(col("doc_id"), col("tok"))
-          .agg(count(lit(1)).as("c"))
-        val perDoc = tokCounts.groupBy(col("doc_id")).agg(
-          sum(col("c")).cast("bigint").as("n_tokens"),
-          max(col("c")).as("top_tok"),
-          count(lit(1)).as("n_distinct"))
-        val bgDoc = toks
-          .select(col("doc_id"),
-            explode(DedupSuite.shinglesFromTokens(col("toks"), 2)).as("bg"))
-          .groupBy(col("doc_id"), col("bg"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy(col("doc_id"))
-          .agg(sum(col("c")).as("nb"), max(col("c")).as("top_bg"))
-        perDoc.join(bgDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_tokens"),
-            (col("top_tok").cast("double") / col("n_tokens").cast("double"))
-              .as("top_token_frac"),
-            (col("n_distinct").cast("double") / col("n_tokens").cast("double"))
-              .as("distinct_frac"),
-            coalesce(col("top_bg").cast("double") / col("nb").cast("double"),
-              lit(0.0)).as("top_bigram_frac"))
-      }),
-
-      // PII scrubbing (C4-style): count and redact email/phone shapes.
-      // The fixture plants deterministic PII (no real data has any);
-      // patterns stay in the RE2-compatible subset both engines share.
-      "t8_redact" -> ((s, dir) => {
-        val email = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-        val phone = "[0-9]{3}-[0-9]{4,6}"
-        val withPii = Tables.documents(s, dir).select(col("doc_id"),
-          concat(col("text"),
-            when(col("doc_id") % 5 === 0,
-              concat(lit(" contact user"), col("doc_id").cast("string"),
-                lit("@example.com now"))).otherwise(lit("")),
-            when(col("doc_id") % 7 === 0,
-              concat(lit(" call 555-01"),
-                lpad(pmod(col("doc_id"), lit(100)).cast("string"), 2, "0")))
-              .otherwise(lit(""))).as("text"))
-        withPii.select(col("doc_id"),
-          regexp_count(col("text"), lit(email)).cast("int").as("n_emails"),
-          regexp_count(col("text"), lit(phone)).cast("int").as("n_phones"),
-          length(regexp_replace(regexp_replace(col("text"), email, "<EMAIL>"),
-            phone, "<PHONE>")).cast("int").as("clean_len"))
-      }),
-
-      // ---- dedup ----
-      "d1_exact_dedup" -> ((s, dir) =>
-        DedupSuite.exact(corpusExact(s, dir), "doc_id", "text")),
-
-      // Gated via the engine-portable pipeline (md5-derived base hashes
-      // reproduce bit-for-bit in DuckDB) on the FULL planted corpus —
-      // r3 VERDICT item 1: d2 was the one declared query without an
-      // oracle. The xxhash64 fast path keeps identical semantics and
-      // stays timed as bench-only entry x1 (spec-tested equivalent on
-      // this fixture, DedupSuiteSpec).
-      "d2_minhash_pairs" -> ((s, dir) =>
-        DedupSuite.minhashNearDupsPortable(corpusNear(s, dir), "doc_id", "text",
-          n = 3, k = 16, bands = 4, threshold = 0.5)),
-
-      "d3_simhash" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"), DedupSuite.simhash60(col("text")).as("simhash"))),
-
-      "d4_ngram_jaccard" -> ((s, dir) => {
-        val sh = Tables.documents(s, dir)
-          .select(col("doc_id"), DedupSuite.shingles(col("text"), 3).as("sh"))
-        sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
-          .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
-            col("id_b") === col("id_a") + 1)
-          .select(col("id_a"), col("id_b"),
-            DedupSuite.jaccard(col("sh_a"), col("sh_b")).cast("double").as("jaccard"))
-      }),
-
-      // ---- embedding similarity ----
-      "e1_cosine_topk" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") < 8), emb, "vec_id", "embedding", 5)
-      }),
-
-      "e2_ann_lsh" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val planted = emb.unionByName(emb.filter(col("vec_id") % 10 === 0)
-          .select(cloneId(col("vec_id")).as("vec_id"), col("embedding")))
-        Similarity.lshNearDups(planted, "vec_id", "embedding",
-          nPlanes = 8, threshold = 0.95)
-      }),
-
-      // ---- typed Dataset API (case-class Encoder + groupByKey) ----
-      "q23_typed_agg" -> ((s, dir) => {
-        import s.implicits._
-        val ds = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("user_id")).as[Ev]
-        ds.groupByKey(_.event_type)
-          .mapGroups { (k, it) =>
-            var n = 0L; var minId = Long.MaxValue; var users = Set.empty[Long]
-            it.foreach { e =>
-              n += 1; if (e.event_id < minId) minId = e.event_id
-              if (users.size <= 64) users += e.user_id
-            }
-            (k, n, minId, math.min(users.size, 64).toLong)
-          }
-          .toDF("event_type", "n", "min_event_id", "n_users_capped")
-      }),
-
-      // ---- reproducible sampling / splits (training-set construction) ----
-      "q36_hash_sample" -> ((s, dir) => {
-        // deterministic stratified sample: hash-mod gate per stratum
-        // (reproducible across runs/engines, unlike Bernoulli sample())
-        val rate = when(col("event_type") === "purchase", 50).otherwise(5)
-        Tables.events(s, dir)
-          .filter(hash32(col("event_id").cast("string")) % 100 < rate)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n_sampled"))
-      }),
-
-      // Train/test n-gram contamination check — the leakage audit that
-      // must follow any hash split: test docs sharing 5-gram shingle
-      // hashes with ANY train doc. One shuffle on the shingle hash
-      // (semi join against the distinct train-shingle set); at 100 TB
-      // the train side is the big one and stays shuffle-partitioned,
-      // never collected. The planted near-dup corpus guarantees
-      // contaminated docs exist (source and its +1e6 copy can land in
-      // different splits).
-      "d10_contamination" -> ((s, dir) => {
-        val corpus = corpusNear(s, dir)
-        val sh = corpus.select(col("doc_id"),
-            explode(array_distinct(
-              DedupSuite.shingleHashesPortableNative(tokens(col("text")), 5)))
-              .as("h"))
-          .withColumn("is_train",
-            pmod(hash32(col("doc_id").cast("string"), 1), lit(10)) < 8)
-        val trainSh = sh.filter(col("is_train")).select(col("h")).distinct()
-        val testSh = sh.filter(!col("is_train"))
-        val totals = testSh.groupBy(col("doc_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_shingles"))
-        val hits = testSh.join(trainSh, Seq("h"), "left_semi")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_contaminated"))
-        totals.join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_shingles"),
-            coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-            (coalesce(col("n_contaminated"), lit(0L)).cast("double")
-              / col("n_shingles").cast("double")).as("contamination_frac"))
-      }),
-
-      // Per-domain cap — deterministic downsampling of over-represented
-      // domains (hash-ordered row_number ≤ K per domain). The window
-      // partitions by domain: skewed mega-domains are exactly the
-      // hot-key shape sessionization's bucketed path handles; at this
-      // cap size the partial TopK would also do.
-      "q66_domain_cap" -> ((s, dir) => {
-        val d = Tables.documents(s, dir).select(col("doc_id"),
-          Enrich.domainOf(col("source")).as("domain"))
-        val w = Window.partitionBy(col("domain"))
-          .orderBy(hash32(col("doc_id").cast("string"), 2).asc, col("doc_id").asc)
-        d.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 50)
-          .groupBy(col("domain"))
-          .agg(count(lit(1)).cast("bigint").as("n_kept"),
-            min(col("doc_id")).as("sample_min_id"))
-      }),
-
-      // Token-budget sequence packing: docs stream into 4096-token bins
-      // per hash shard, and the SHARD COUNT IS DERIVED from the input
-      // size in-plan (ceil(n_docs / target), integer arithmetic both
-      // engines reproduce) — parallelism grows with the corpus instead
-      // of a fixed-k serializing into k ever-growing single-task sorts.
-      // The gate target (64 docs/shard) scales the sf fixtures: 500
-      // docs -> 8 shards, 5000 -> 79; production default is 1M
-      // (Pack.packBins).
-      "q68_pack" -> ((s, dir) =>
-        Pack.packBins(Tables.documents(s, dir), "doc_id",
-          size(tokens(col("text"))), binTokens = 4096,
-          targetDocsPerShard = 64)),
-
-      // ---- GPT-style sequence packing with document SPLITTING
-      // (q97): the global token stream chunked into fixed 128-token
-      // training sequences, emitted as a per-doc span map. Exact
-      // global order via a two-phase distributed prefix sum —
-      // arithmetic shards cumsum locally, one-row-per-shard offsets
-      // cumsum on a bounded frame and broadcast back; the corpus
-      // pays one exchange and no global sort. docsPerShard = 100
-      // exercises multiple shards at every sf. ----
-      "q97_pack_spans" -> ((s, dir) =>
-        Pack.packSpans(Tables.documents(s, dir), "doc_id",
-          size(tokens(col("text"))), seqLen = 128, docsPerShard = 100)),
-
-      // ---- length-bucketed inference batching (q99): sort by token
-      // count within derived hash shards, batch each consecutive 16,
-      // account the padding waste (n_docs·max_len − batch_tokens) —
-      // the serving-cost lever length bucketing exists for. Same
-      // bounded-shard-sort economics as q68. ----
-      "q99_length_batches" -> ((s, dir) =>
-        Pack.lengthBatches(Tables.documents(s, dir), "doc_id",
-          size(tokens(col("text"))), batchSize = 16,
-          targetDocsPerShard = 64)),
-
-      // ---- incremental sequence packing (q98): the cheapest ingest
-      // family — the persisted state is two numbers (token and doc-id
-      // high-water marks, additive meta rows), because spans are a
-      // pure function of (doc order, counts, seqLen) and the stream
-      // only grows at the end: emitted spans never change, so the
-      // union of build + fold emissions equals the one-shot q97
-      // recompute bit-exactly, which is this gate. ----
-      "q98_pack_spans_ingest" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val nTok = size(tokens(col("text")))
-        val maxId = docs.agg(max(col("doc_id")).cast("long"))
-          .head().getLong(0)
-        val (c1, c2) = (maxId / 2, maxId * 9 / 10)
-        val tmp = PerJvm.tempDir("q98_pack")
-        val store = s"$tmp/state"
-        Pack.buildSpanStore(docs.filter(col("doc_id") <= c1),
-            "doc_id", nTok, 128, store, 100)
-          .unionByName(Pack.foldSpans(s, store,
-            docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-            "doc_id", nTok, 128, 100))
-          .unionByName(Pack.foldSpans(s, store,
-            docs.filter(col("doc_id") > c2), "doc_id", nTok, 128, 100))
-      }),
-
-      // C4-style paragraph-level exact dedup: removes cross-document
-      // boilerplate whole-doc dedup can't see. Winner per paragraph is
-      // a partial-aggregable groupBy-min (map-side combined, so a hot
-      // banner never lands in one task), marked via an AQE-skew-
-      // splittable join-back — see DedupSuite.dedupParagraphs.
-      "d11_paragraph_dedup" -> ((s, dir) =>
-        DedupSuite.dedupParagraphs(corpusPara(s, dir), "doc_id", "text")),
-
-      // SimHash Hamming-distance pairing over the d1 planted corpus
-      // (exact copies guarantee hamming-0 pairs at every sf; organic
-      // near-dups surface on top). Banding makes the pair set EXACT at
-      // the threshold — pigeonhole over 4×15-bit slices — so the DuckDB
-      // oracle reproduces it bit-for-bit by mirroring the bands.
-      "d12_simhash_pairs" -> ((s, dir) =>
-        DedupSuite.simhashHammingPairs(corpusExact(s, dir), "doc_id", "text",
-          maxHamming = 3, bands = 4)),
-
-      // Multimodal near-dup: perceptual dHash over DECODED BMP pixels,
-      // Hamming-banded through the same pigeonhole machinery as d12
-      // (DedupSuite.hammingPairs). Every blob is synthesized from
-      // doc_id alone in 8-variant families whose dHash is closed-form
-      // (Multimodal.synthBmpPerceptual: ph = md5-family bits XOR
-      // variant flips, in-family Hamming 1-4 so the threshold-3
-      // boundary is exercised from both sides); the decoder sees only
-      // the bytes — variable bfOffBits, stride padding, bottom-up vs
-      // top-down rows, m-row blocks forcing the 61-point resample —
-      // so a pixel-path bug breaks the pair set. Scale: decode is
-      // per-partition and everything after ships (id, 8-byte long);
-      // one shuffle on (band, 15-bit key), hot buckets capped with
-      // observed accounting — never all-pairs.
-      "d27_phash_near_dup" -> ((s, dir) => {
-        import s.implicits._
-        val media = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id => (id, Multimodal.synthBmpPerceptual(id))))
-          .toDF("doc_id", "content")
-        Multimodal.bmpNearDups(media, "doc_id", "content",
-          maxHamming = 3, bands = 4)
-      }),
-
-      // d27's AUDIO twin: perceptual hash over decoded PCM — a
-      // 61-segment energy profile from the real RIFF/WAVE byte walk
-      // (raw-sample squares, integer-exact), dHashed and banded
-      // through the same hammingPairs machinery. Families use an
-      // independent md5 salt, so the pair structure is fresh while
-      // the oracle stays the same closed form.
-      "d28_phash_audio" -> ((s, dir) => {
-        import s.implicits._
-        val media = Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map(id => (id, Multimodal.synthWavPerceptual(id))))
-          .toDF("doc_id", "content")
-        Multimodal.wavNearDups(media, "doc_id", "content",
-          maxHamming = 3, bands = 4)
-      }),
-
-      // The multimodal DEDUP composition (d27 emits PAIRS; training
-      // pipelines keep one image per perceptual cluster): pairs →
-      // connected components (transitive — Hamming ≤ 3 is not) →
-      // keep-lowest-id, every unpaired image keeping itself. Same
-      // d7 canonical-selection discipline over the image column.
-      "d29_phash_dedup" -> ((s, dir) => {
-        import s.implicits._
-        val idsDf = Tables.documents(s, dir).select(col("doc_id"))
-        val media = idsDf.as[Long]
-          .mapPartitions(_.map(id => (id, Multimodal.synthBmpPerceptual(id))))
-          .toDF("doc_id", "content")
-        val pairs = Multimodal.bmpNearDups(media, "doc_id", "content",
-          maxHamming = 3, bands = 4).select(col("id_a"), col("id_b"))
-        val comps = Dedup.connectedComponents(pairs)
-        idsDf // ids only — media's mapPartitions is opaque to pruning,
-          // so selecting doc_id THROUGH it re-synthesized every image
-          .join(comps, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("component"), col("doc_id")).as("keep_id"))
-          .withColumn("kept", (col("doc_id") === col("keep_id")).cast("boolean"))
-      }),
-
-      // d29's INGEST twin (the d22 incremental-components pattern
-      // applied to d27's pair stream), served from a PERSISTED band
-      // index (r18 verdict item 2): the corpus's perceptual hashes
-      // live in an ON-DISK bucket-partitioned store
-      // (DedupSuite.hammingIndexBuild — the d19/d23/q92 maintenance
-      // discipline applied to the dHash family), a new media batch
-      // decodes ONCE and folds against it (hammingIndexFold: store
-      // read bucket-pruned + broadcast-semi-restricted; the corpus is
-      // never re-decoded or re-banded), and the new pairs fold into
-      // the component labels (foldComponents — bit-identical to a
-      // full recompute). The gate output is the cumulative d29 shape
-      // and shares d29's recursive-CTE oracle: fold == full
-      // recompute, hash-exact.
-      "d30_incremental_phash_dedup" -> ((s, dir) => {
-        import s.implicits._
-        val idsDf = Tables.documents(s, dir).select(col("doc_id"))
-        // corpus = non-multiples of 3; batch = the rest — the split
-        // crosses dHash families (families are id/8 blocks), so folded
-        // pairs include batch-batch AND batch-corpus edges that BRIDGE
-        // existing components (the fold's hard case).
-        // ONE decode pass covers corpus AND batch (r19 optimization —
-        // two separate decode checkpoints before; the split is now a
-        // cheap filter over the checkpointed 16-byte hash frame), and
-        // the checkpoint makes "decode ONCE" true in EXECUTION, not
-        // just in the plan text: the components machinery evaluates
-        // its edge frames several times (count probe + collect / the
-        // fold's node and edge derivations), and without the
-        // checkpoint each evaluation would re-synthesize and re-decode
-        // every image. The fold's pairs come back already checkpointed
-        // (hammingIndexFold), stable against the store's own append.
-        val tmp = PerJvm.tempDir("d30_phash")
-        val store = s"$tmp/index"
-        val allHashes = Multimodal.bmpDHashes(
-          idsDf.as[Long].mapPartitions(_.map(id =>
-            (id, Multimodal.synthBmpPerceptual(id))))
-            .toDF("doc_id", "content"), "doc_id", "content")
-          .localCheckpoint()
-        val index = allHashes.filter(col("doc_id") % 3 =!= 0)
-        val batchHashes = allHashes.filter(col("doc_id") % 3 === 0)
-        // store build ∥ corpus-internal pairs + seed labels (guide
-        // §2.6 overlap): both chains read only the checkpointed hash
-        // frame, and the fold below is the store's first consumer —
-        // so the write's commit tail back-fills with the pair run
-        var labels0: DataFrame = null
-        // nBuckets = 4 (16 bucket dirs): fixture-scale — the default
-        // corpus-scale layout's file-commit count dominates a
-        // 5k-image gate (the c5 "16 buckets" discipline; the 1M-image
-        // soak keeps the wide layout)
-        Par.run(Seq(
-          () => DedupSuite.hammingIndexBuild(index, "doc_id", "ph", store,
-            bands = 4, nBuckets = 4),
-          () => {
-            val basePairs = DedupSuite.hammingPairs(index, "doc_id", "ph",
-              maxHamming = 3, bands = 4)
-              .select(col("id_a"), col("id_b")).localCheckpoint()
-            labels0 = Dedup.connectedComponents(basePairs)
-          }))
-        val newPairs = DedupSuite.hammingIndexFold(s, store,
-          batchHashes, "doc_id", "ph", maxHamming = 3)
-          .select(col("id_a"), col("id_b"))
-        val labels = Dedup.foldComponents(labels0, newPairs)
-        idsDf // ids only — never re-synthesizes pixels for the output
-          .join(labels, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("component"), col("doc_id")).as("keep_id"))
-          .withColumn("kept", (col("doc_id") === col("keep_id")).cast("boolean"))
-      }),
-
-      // d30's AUDIO twin (r18 verdict item 3): the d28 WAV dHashes
-      // through the SAME persisted-band-index fold — hammingIndexBuild
-      // / hammingIndexFold are hash-family-generic, so the only
-      // modality-specific stage is the decode (real RIFF/WAVE byte
-      // walk → 61-segment energy dHash). Same corpus/batch split,
-      // same component composition; the oracle is d29's recursive CTE
-      // under the d28 salt (fold == full recompute, hash-exact).
-      "d31_incremental_phash_audio" -> ((s, dir) => {
-        import s.implicits._
-        val idsDf = Tables.documents(s, dir).select(col("doc_id"))
-        // same shape as d30: ONE decode pass for corpus and batch,
-        // store build ∥ corpus pairs + seed labels (guide §2.6)
-        val tmp = PerJvm.tempDir("d31_phash")
-        val store = s"$tmp/index"
-        val allHashes = Multimodal.wavDHashes(
-          idsDf.as[Long].mapPartitions(_.map(id =>
-            (id, Multimodal.synthWavPerceptual(id))))
-            .toDF("doc_id", "content"), "doc_id", "content")
-          .localCheckpoint()
-        val index = allHashes.filter(col("doc_id") % 3 =!= 0)
-        val batchHashes = allHashes.filter(col("doc_id") % 3 === 0)
-        var labels0: DataFrame = null
-        // nBuckets = 4 (16 bucket dirs): fixture-scale — the default
-        // corpus-scale layout's file-commit count dominates a
-        // 5k-image gate (the c5 "16 buckets" discipline; the 1M-image
-        // soak keeps the wide layout)
-        Par.run(Seq(
-          () => DedupSuite.hammingIndexBuild(index, "doc_id", "ph", store,
-            bands = 4, nBuckets = 4),
-          () => {
-            val basePairs = DedupSuite.hammingPairs(index, "doc_id", "ph",
-              maxHamming = 3, bands = 4)
-              .select(col("id_a"), col("id_b")).localCheckpoint()
-            labels0 = Dedup.connectedComponents(basePairs)
-          }))
-        val newPairs = DedupSuite.hammingIndexFold(s, store,
-          batchHashes, "doc_id", "ph", maxHamming = 3)
-          .select(col("id_a"), col("id_b"))
-        val labels = Dedup.foldComponents(labels0, newPairs)
-        idsDf
-          .join(labels, col("doc_id") === col("id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("component"), col("doc_id")).as("keep_id"))
-          .withColumn("kept", (col("doc_id") === col("keep_id")).cast("boolean"))
-      }),
-
-      // TF-IDF top terms per document. idf is the RAW ratio N/df rather
-      // than log(N/df): log is monotone, so top-k ranking is identical,
-      // and the ratio form stays bit-portable to the DuckDB oracle
-      // (ln() is not guaranteed correctly-rounded across libm builds;
-      // N/df double division + one IEEE multiply are).
-      // Scale: tf shuffles on (doc, term) with map-side combine, df on
-      // term; the tf⋈df join shuffles on term (the dictionary is NOT
-      // broadcast-sized at 100 TB); N is one broadcast scalar row.
-      "t9_tfidf" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val tf = docs.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-          .groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).cast("bigint").as("tf"))
-        val df_ = tf.groupBy(col("term"))
-          .agg(count(lit(1)).cast("bigint").as("df"))
-        val n = docs.agg(count(lit(1)).cast("bigint").as("n_docs"))
-        val w = Window.partitionBy(col("doc_id"))
-          .orderBy(col("score").desc, col("term").asc)
-        tf.join(df_, "term").crossJoin(broadcast(n))
-          .withColumn("score", col("tf").cast("double")
-            * (col("n_docs").cast("double") / col("df").cast("double")))
-          .withColumn("rnk", row_number().over(w).cast("int"))
-          .filter(col("rnk") <= 3)
-          .select(col("doc_id"), col("term"), col("tf"), col("df"),
-            col("score"), col("rnk"))
-      }),
-
-      // SCD2 change history (slowly-changing dimension, type 2): per
-      // user, collapse the event stream into versioned
-      // [valid_from, valid_to) intervals that change whenever the
-      // tracked attribute (event_type) changes — the warehouse-side
-      // twin of the reference's keyed upsert (J2/J4), keeping history
-      // instead of overwriting. valid_to is NULL on the current row.
-      // Scale: two windows over the same (user, time) partitioning —
-      // one shuffle, both window passes reuse it.
-      "q69_scd2" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-          .filter(col("user_id") % 20 === 0)
-          .select(col("user_id"), col("event_id"),
-            unix_micros(col("ts")).as("ts_us"), col("event_type"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts_us").asc, col("event_id").asc)
-        ev.withColumn("prev", lag(col("event_type"), 1).over(w))
-          .filter(col("prev").isNull || col("prev") =!= col("event_type"))
-          .withColumn("version", row_number().over(w).cast("int"))
-          .withColumn("valid_to_us", lead(col("ts_us"), 1).over(w) - 1)
-          .select(col("user_id"), col("version"), col("event_type"),
-            col("ts_us").as("valid_from_us"), col("valid_to_us"))
-      }),
-
-      // Fixed-size token windows with overlap (training-example prep):
-      // 32-token chunks at stride 24. Chunk starts are computed
-      // arithmetically and exploded — no self-join, no window; embar-
-      // rassingly parallel per doc, the right 100 TB shape. Chunk
-      // content is fingerprinted (md5 over the joined tokens) so
-      // downstream chunk-level dedup can run without re-tokenizing.
-      "q70_chunk" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-              struct(toks.as("toks"), size(toks).as("n"))
-            }.as("t"))
-          .select(col("doc_id"), col("t.toks").as("toks"), col("t.n").as("n"))
-          .select(col("doc_id"), col("toks"),
-            explode(sequence(lit(0),
-              greatest(floor((col("n") - 9) / lit(24.0)), lit(0L)).cast("int")))
-              .as("chunk_idx"))
-          .select(col("doc_id"), col("chunk_idx").cast("int").as("chunk_idx"),
-            (col("chunk_idx") * 24).cast("int").as("start_pos"),
-            graft.functions.ColUtil.bindOnce(
-              slice(col("toks"), col("chunk_idx") * 24 + 1, lit(32))) { chunk =>
-              struct(size(chunk).cast("int").as("chunk_len"),
-                md5(concat_ws(" ", chunk)).as("chunk_md5"))
-            }.as("c"))
-          .select(col("doc_id"), col("chunk_idx"), col("start_pos"),
-            col("c.chunk_len").as("chunk_len"), col("c.chunk_md5").as("chunk_md5"))),
-
-      // Weighted dataset mixture: per-language epoch factors (fr ×3,
-      // de ×2, rest ×1) materialized via explode(sequence(1, factor)),
-      // plus a deterministic hash-gate downsample of the dominant
-      // language (en kept at 60%) — the Dolma/Llama-style mix recipe.
-      // Scale: narrow ops only (filter + explode), one final agg.
-      "q71_mixture" -> ((s, dir) => {
-        val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
-          size(tokens(col("text"))).cast("long").as("n_tok"))
-        d.filter(col("lang") =!= "en" ||
-            hash32(col("doc_id").cast("string"), 4) % 100 < 60)
-          .withColumn("epoch", explode(sequence(lit(1),
-            when(col("lang") === "fr", 3)
-              .when(col("lang") === "de", 2).otherwise(1))))
-          .groupBy(col("lang"))
-          .agg(countDistinct(col("doc_id")).cast("bigint").as("n_src_docs"),
-            count(lit(1)).cast("bigint").as("n_examples"),
-            sum(col("n_tok")).cast("bigint").as("n_tokens"))
-      }),
-
-      // Temperature (alpha=0.5) domain rebalancing — rate-based, not
-      // rank-based: quotas derived on the domain-count frame, broadcast
-      // back, membership by hash threshold. The corpus is scanned once
-      // and never key-shuffled (contrast q66's exact-k rank cap).
-      "q72_temperature_sample" -> ((s, dir) =>
-        Sampling.temperatureSample(
-          Tables.documents(s, dir), "doc_id",
-          Enrich.domainOf(col("source")), targetTotal = 250)),
-
-      // Deterministic per-epoch training shuffle: reproducible order +
-      // derived-shard parallelism (the q68 discipline; gate target 64
-      // docs/shard so the sf fixtures exercise multi-shard paths).
-      "q73_epoch_shuffle" -> ((s, dir) =>
-        Sampling.epochShuffle(Tables.documents(s, dir), "doc_id",
-          epochs = 2, targetDocsPerShard = 64)),
-
-      // Priority sampling (Duffield–Lunde–Thorup): k docs per language
-      // with the largest priority n_chars/u — weighted stratum
-      // sampling with deterministic Lehmer-hash uniforms. Ranking is
-      // integer arithmetic plus ONE IEEE division, so it is
-      // bit-portable to the oracle; the per-group rank plans as
-      // WindowGroupLimit (≤k rows per group per mapper reach the
-      // shuffle — the exchange never carries the corpus).
-      "q83_priority_sample" -> ((s, dir) =>
-        Sampling.prioritySample(
-          Tables.documents(s, dir)
-            .select(col("lang"), col("doc_id"), col("n_chars")),
-          Seq("lang"), col("doc_id"), col("n_chars"), k = 5)),
-
-      // ---- incremental priority sample (the d13/q90 ingest shape
-      // for weighted sampling): top-k is k-mergeable, so the fold
-      // touches only the O(groups·k) stored sample + the batch — the
-      // corpus is never rescanned (Sampling.prioritySampleFold).
-      // Batch = every 11th doc cloned at +1e6 with n_chars·1000 —
-      // weights big enough that batch rows genuinely WIN slots
-      // (SamplingSpec pins that), so the fold is tested under real
-      // contention, not as a no-op union. Oracle: q83's
-      // pipeline recomputed in FULL over corpus ∪ batch —
-      // deterministic Lehmer priorities make fold == recompute
-      // bit-exact, which is the gate.
-      "q93_incremental_priority_sample" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir)
-          .select(col("lang"), col("doc_id"), col("n_chars"))
-        val state = Sampling.prioritySample(docs, Seq("lang"),
-          col("doc_id"), col("n_chars"), k = 5)
-        val batch = Tables.documents(s, dir)
-          .filter(col("doc_id") % 11 === 0)
-          .select(col("lang"), cloneId(col("doc_id")).as("doc_id"),
-            (col("n_chars") * 1000).as("n_chars"))
-        Sampling.prioritySampleFold(state, batch, Seq("lang"),
-          col("doc_id"), col("n_chars"), k = 5)
-      }),
-
-      // DSIR-style target-conditioned data selection (hashed n-gram
-      // importance weights, integer-exact surrogate score — scale
-      // analysis and the log-free portability argument in
-      // Sampling.dsirSelect's scaladoc). Target = English docs; the
-      // top-100 most target-like documents of the raw pool win.
-      "q86_dsir_select" -> ((s, dir) =>
-        Sampling.dsirSelect(Tables.documents(s, dir),
-          "doc_id", col("text"), col("lang") === "en", k = 100)),
-
-      // Incremental DSIR (the d13/d19 discipline for data selection):
-      // bucket stats are ADDITIVE, so an ingest batch folds into the
-      // persisted corpus stats without rescanning the corpus. The
-      // oracle recomputes the full pipeline over corpus ∪ batch —
-      // additivity makes incremental and full bit-identical, which
-      // is the gate. Batch = every 7th doc cloned with extra text
-      // (ids +1e6, lang preserved), so the weights genuinely move.
-      "q90_incremental_dsir" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"), col("lang"))
-        val batch = docs.filter(col("doc_id") % 7 === 0)
-          .select(cloneId(col("doc_id")).as("doc_id"),
-            concat(col("text"), lit(" freshly ingested alpha text")).as("text"),
-            col("lang"))
-        val corpusStats = Sampling.dsirStats(docs, col("text"),
-          col("lang") === "en")
-        val batchStats = Sampling.dsirStats(batch, col("text"),
-          col("lang") === "en")
-        Sampling.dsirSelectWithStats(docs.unionByName(batch), "doc_id",
-          col("text"), Sampling.combineDsirStats(corpusStats, batchStats),
-          k = 100)
-      }),
-
-      // Corrupt-record quarantine (ingestion robustness, the B1
-      // null-filter discipline applied to malformed input): a JSONL
-      // staging with every 7th line truncated is read through Spark's
-      // PERMISSIVE mode — bad lines land in _corrupt_record with all
-      // data fields null, good lines parse — and the query accounts
-      // both sides. At 100 TB this is the difference between one bad
-      // crawl shard failing the job (FAILFAST) and a quarantine table
-      // plus an accounted drop rate. The oracle reconstructs the same
-      // deterministic corruption rule from the documents table.
-      "q75_corrupt_quarantine" -> ((s, dir) => {
-        import org.apache.spark.sql.types._
-        val schema = StructType(Seq(
-          StructField("id", LongType), StructField("text", StringType),
-          StructField("_corrupt_record", StringType)))
-        s.read.schema(schema).option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_corrupt_record")
-          .json(corruptJsonDir(s, dir))
-          // `|| id.isNull` is load-bearing: under an outer count() the
-          // grouping key is the only surviving reference, and a scan
-          // whose required schema is ONLY the corrupt column is
-          // disallowed (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_
-          // COLUMN). Referencing id keeps the scan legal under any
-          // downstream pruning; every planted line has an id, so the
-          // disjunct never changes the value.
-          .select(col("id"), col("text"),
-            (col("_corrupt_record").isNotNull || col("id").isNull)
-              .as("is_corrupt"))
-          .groupBy(col("is_corrupt"))
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum(when(col("is_corrupt"), lit(0L))
-              .otherwise(length(col("text")))).cast("bigint").as("text_chars"),
-            // min over non-corrupt ids ONLY, mirroring the oracle's
-            // CASE: with partial-result JSON parsing
-            // (spark.sql.json.enablePartialResults, default-on in
-            // newer Sparks) a truncated record can retain its
-            // already-parsed id, so min(id) over the corrupt group
-            // would depend on the parser build, not the data
-            min(when(col("is_corrupt"), lit(null)).otherwise(col("id")))
-              .as("min_id"))
-      }),
-
-      // Per-group heavy hitters (per-domain/lang token-stats shape):
-      // one MG summary per event_type via the udaf form, candidates
-      // joined back in-plan (no driver fetch), exact per-group
-      // threshold. Same planted-skew key as q76; each group's ~1500
-      // cold keys churn its own 64 counters.
-      "q79_group_heavy_hitters" -> ((s, dir) =>
-        HeavyHitters.frequentItemsByGroup(Tables.events(s, dir),
-          col("event_type"), plantedSkewKey, 64, "grp", "k")),
-
-      // Multi-field entity resolution: per-field blocking (PassJoin
-      // segments for the fuzzy name/city fields, a hash join on the
-      // value for the exact code field), union of candidate sets,
-      // weighted per-field score verify — the corpus-scale form of
-      // the reference merge's exact-id identity. Fields derive from
-      // documents with planted mutations (doc_id%13 rewrites the
-      // name's first char; doc_id%19 appends to the city), so pairs
-      // qualify through every combination: exact name alone (0.5),
-      // code+city without the name (0.3+0.2), fuzzy name+code
-      // (0.333+0.3). Oracle is the naive all-pairs scored join — the
-      // same fixed-order double expression, so scores match
-      // bit-for-bit.
-      "q80_entity_resolution" -> ((s, dir) => {
-        val baseName = lower(substring(col("text"), 1, 20))
-        val baseCity = substring(lower(col("text")), 30, 12)
-        val recs = Tables.documents(s, dir).select(
-          col("doc_id").as("id"),
-          when(col("doc_id") % 13 === 0,
-            concat(lit("z"), substring(baseName, 2, 19)))
-            .otherwise(baseName).as("name"),
-          concat(lit("c"), (col("doc_id") % 50).cast("string")).as("code"),
-          when(col("doc_id") % 19 === 0, concat(baseCity, lit("q")))
-            .otherwise(baseCity).as("city"))
-        EntityResolution.entityPairs(recs, "id",
-          Seq(EntityResolution.ErField("name", 2, 0.5),
-            EntityResolution.ErField("code", 0, 0.3),
-            EntityResolution.ErField("city", 1, 0.2)),
-          minScore = 0.4)
-      }),
-
-      // Edit-distance fuzzy self-match WITHOUT the all-pairs compare:
-      // PassJoin segment blocking (pigeonhole: a <= d partner shares
-      // an untouched segment at a +-d shifted position) generates a
-      // complete candidate superset from one composite-key hash join;
-      // exact levenshtein verifies. Planted dist-1 mutations
-      // (doc_id % 17 = 0 rewrites the first char) give the gate
-      // non-trivial distances on top of the corpus's duplicate
-      // prefixes.
-      "q78_fuzzy_match" -> ((s, dir) => {
-        val prefix = Tables.documents(s, dir)
-          .select(col("doc_id"),
-            lower(substring(col("text"), 1, 24)).as("s0"))
-        val keyed = prefix.select(col("doc_id"),
-          when(col("doc_id") % 17 === 0,
-            concat(lit("z"), substring(col("s0"), 2, 24)))
-            .otherwise(col("s0")).as("s"))
-        FuzzyJoin.editDistancePairs(keyed, "doc_id", "s", 2)
-      }),
-
-      // Snapshot diff / CDC derivation: classify insert/update/delete
-      // on narrow (key, md5-digest) frames so the unchanged majority
-      // never shuffles its payload, then join row images back only
-      // for changed keys. Snapshots are derived deterministically
-      // from `documents` (the d13 discipline): old drops ids %5=1,
-      // new drops ids %7=3 and rewrites text for ids %11=0.
-      "q77_snapshot_diff" -> ((s, dir) => {
-        val (oldSnap, newSnap) = q77Fixture(s, dir)
-        SnapshotDiff.diff(oldSnap, newSnap, Seq("doc_id"))
-      }),
-
-      // q77 with the partition short-circuit: per-partition rollup
-      // signatures (count + order-independent digest sums) eliminate
-      // unchanged partitions BEFORE the row-level classification
-      // join. Mutations are confined to partitions {3, 7, 11} of 16,
-      // so 13 of 16 partitions skip even the narrow digest join —
-      // the daily-snapshot regime where a 100-TB diff touches only
-      // the dates that moved. Output is identical to a full diff
-      // (SnapshotDiffSpec proves the identity; the oracle here is
-      // the same naive full-outer value compare as q77's).
-      "q81_snapshot_diff_partitioned" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), (col("doc_id") % 16).as("p"), col("text"))
-        val oldSnap = docs
-          .filter(!(col("p") === 7 && col("doc_id") % 3 === 0))
-        val newSnap = docs
-          .filter(!(col("p") === 3 && col("doc_id") % 5 === 0))
-          .withColumn("text",
-            when(col("p") === 11 && col("doc_id") % 3 === 0,
-              concat(col("text"), lit(" v2")))
-              .otherwise(col("text")))
-        SnapshotDiff.diffPartitioned(oldSnap, newSnap,
-          Seq("doc_id"), Seq("p"))
-      }),
-
-      // Link-graph centrality (operators/Graph.scala): integer-exact
-      // damped PageRank, 4 fixed iterations, over the symmetrized
-      // customer↔supplier interaction graph (distinct trade edges from
-      // orders⋈lineitem; node ids disambiguated as custkey*2 /
-      // suppkey*2+1). Corpus curation gates on exactly this signal
-      // family — host-graph centrality decides which crawl segments
-      // are worth text-filtering at all. BIGINT recurrence end to end
-      // (rank div outdeg, (85*m) div 100), so the unrolled-CTE oracle
-      // matches hash-exactly with no float-sum-order hazard, and the
-      // per-iteration work is one edges⋈ranks shuffle + one
-      // partial-aggregable sum — the edge list is persisted once and
-      // never recomputed (see Graph.pageRank scale notes).
-      "q82_pagerank" -> ((s, dir) =>
-        Graph.pageRank(q82Edges(s, dir), "src", "dst", iters = 4)
-          .select(col("node_id").cast("bigint").as("node_id"),
-            col("pr").cast("bigint").as("pr"))),
-
-      // ---- incremental PageRank (r10 verdict item 2: the last
-      // iterative family without an ingest twin). The contribution-
-      // edge store (src, dst, outd) is persisted partitioned by
-      // src-bucket; the batch append recomputes out-degrees ONLY for
-      // its own sources and rewrites ONLY the buckets holding them
-      // (dynamic partition overwrite behind a partition-pruned read)
-      // — the old edge list is never rescanned. Ranks are then
-      // refreshed from the store. The oracle recomputes the full
-      // unrolled recurrence over base ∪ batch — the folded store is
-      // row-identical to a fresh build over the union, and the
-      // recurrence is BIGINT-exact, so incremental == rebuild
-      // bit-for-bit, which is the gate (the e10/q90 discipline).
-      // Batch edges (supplier → part+2e6 offset) are disjoint from
-      // the base graph by id-range construction, and dangle (new dst
-      // nodes have no out-edges) — exercising the lost-mass path the
-      // symmetric q82 graph cannot.
-      "q91_incremental_pagerank" -> ((s, dir) =>
-        Graph.pageRankFromStore(s, q91ContribStoreDir(s, dir), iters = 4)
-          .select(col("node_id").cast("bigint").as("node_id"),
-            col("pr").cast("bigint").as("pr"))),
-
-      // Exact heavy hitters via bounded Misra-Gries summary + exact
-      // recheck — NO full key-space shuffle (pass 1 shuffles only
-      // k-counter buffers, pass 2 only candidate-key rows). The gate
-      // derives a planted-skew key (70% of events into 3 hot keys,
-      // ~1500 cold user keys churning the 64 counters — the corpus's
-      // own keys are uniform, so skew is planted the d12-soak way);
-      // the oracle is the naive GROUP BY + HAVING cnt*64 > n plan,
-      // which the sketch-then-verify result matches bit-for-bit.
-      "q76_heavy_hitters" -> ((s, dir) =>
-        HeavyHitters.frequentItems(Tables.events(s, dir),
-          plantedSkewKey, 64, "k")),
-
-      // ---- incremental heavy hitters (the d13/q90 ingest discipline
-      // for the sketch family): the corpus MG summary is PERSISTED
-      // once (q92SummaryDir) and folded with the batch's summary —
-      // mergeable with the n/(k+1) bound intact over any merge tree
-      // (Agarwal et al.), so the corpus is never rescanned to sketch.
-      // The exact recheck is served from the PERSISTED key-bucketed
-      // corpus store — candidate keys map to their crc32 buckets
-      // driver-side and the scan carries a static `PartitionFilters:
-      // [bucket IN (…)]` (PLANS.md evidence), so a fold reads
-      // O(batch + candidate-bucket rows), never the corpus (the last
-      // full-corpus-scan-per-fold in the incremental family, gone).
-      // Oracle: naive GROUP BY + HAVING over the union, which the
-      // folded result matches bit-for-bit.
-      "q92_incremental_heavy_hitters" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-        val batch = ev.filter(col("event_id") % 9 === 0)
-        val state = q92SummaryDir(s, dir)
-        HeavyHitters.frequentItemsFoldedFromStore(
-          s, s.read.parquet(s"$state/summary"), s"$state/store",
-          batch, plantedSkewKey, 64, 32, "k")
-      }),
-
-      // Partition pruning on a hive-partitioned staging: the scan must
-      // show `PartitionFilters: [event_type IN (...)]` and touch 2 of
-      // 5 directories (PLANS.md evidence) — at 100 TB this is the
-      // difference between reading 40% and 100% of the table before
-      // the first filter runs. The fixture is partitioned once per JVM
-      // by partitionedEventsDir.
-      "q74_partition_prune" -> ((s, dir) =>
-        s.read.parquet(partitionedEventsDir(s, dir))
-          .filter(col("event_type").isin("signup", "purchase"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum(col("value").cast("decimal(18,2)")).cast("double")
-              .as("total_value"))),
-
-      // Time-slice scan: a ts-range predicate that must reach the
-      // parquet reader as PushedFilters [GreaterThanOrEqual(ts,...),
-      // LessThan(ts,...)] — row-group min/max pruning, the dominant
-      // pruning axis for a time-ordered 100 TB events table (a day's
-      // slice touches ~1/30 of the row groups WITHOUT partition
-      // columns). This works ONLY because Sessions.tune reads
-      // MICROS-NTZ parquet as TIMESTAMP (inferTimestampNTZ=false):
-      // an NTZ read would put a cast above the scan that no predicate
-      // can push through. PlanShapeSpec pins the PushedFilters line;
-      // PLANS.md carries the scan as evidence.
-      "q85_time_slice" -> ((s, dir) => {
-        import graft.operators.Marts.dec2
-        Tables.events(s, dir)
-          .filter(col("ts") >= lit("2024-01-10 00:00:00").cast("timestamp") &&
-            col("ts") < lit("2024-01-20 00:00:00").cast("timestamp"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum(dec2(col("value"))).cast("decimal(18,2)").as("total"))
-          .select(col("event_type"), col("n"),
-            col("total").cast("double").as("total"))
-      }),
-
-      // N-gram novelty score (dataset-diversity signal): the fraction
-      // of a doc's distinct 3-gram shingles whose globally FIRST
-      // occurrence (by doc id) is this doc — boilerplate-heavy or
-      // near-duplicate docs score near 0, fresh content near 1. The
-      // deduped-corpus growth curve is the running sum of n_novel.
-      // Scale — SINGLE-PASS shape (r6 verdict; the d16 spanCoverage
-      // family): the exploded shingle frame feeds exactly ONE
-      // consumer, the min-doc aggregation; per-doc novelty falls out
-      // of regrouping those winners by their winning doc (each (doc,h)
-      // is distinct, so "#shingles whose first_doc is d" IS d's novel
-      // count) — a second, tiny shuffle over one row per DISTINCT
-      // shingle, not a join that re-runs the explode pipeline and
-      // re-shuffles the full exploded frame (the old plan). The
-      // per-doc denominator needs no explode at all: it is the narrow
-      // expression size(array_distinct(...)) on the document scan —
-      // recomputing that projection is far cheaper at any scale than
-      // shipping the exploded frame through a second exchange.
-      "t11_novelty" -> ((s, dir) => {
-        val withShingles = Tables.documents(s, dir).select(col("doc_id"),
-          array_distinct(
-            DedupSuite.shingleHashesPortableNative(tokens(col("text")), 3))
-            .as("shs"))
-        val first = withShingles
-          .select(col("doc_id"), explode(col("shs")).as("h"))
-          .groupBy(col("h")).agg(min(col("doc_id")).as("first_doc"))
-        val novel = first.groupBy(col("first_doc"))
-          .agg(count(lit(1)).cast("bigint").as("n_novel"))
-        withShingles
-          .select(col("doc_id"), size(col("shs")).cast("bigint").as("n_shingles"))
-          // docs too short to have a shingle produce no exploded rows,
-          // so the old join-based plan (and the oracle) omit them
-          .filter(col("n_shingles") > 0)
-          .join(novel, col("doc_id") === col("first_doc"), "left")
-          .select(col("doc_id"), col("n_shingles"),
-            coalesce(col("n_novel"), lit(0L)).cast("bigint").as("n_novel"),
-            (coalesce(col("n_novel"), lit(0L)).cast("double") /
-              col("n_shingles").cast("double")).as("novelty_frac"))
-      }),
-
-      // Tokenizer vocabulary construction: top-20 tokens by corpus
-      // frequency with cumulative coverage (the fraction of all token
-      // occurrences a vocab prefix explains — the BPE/vocab-size
-      // planning curve). Scale: the corpus-sized work is the hash
-      // groupBy; top-K is TakeOrderedAndProject (no global sort of the
-      // dictionary), and the rank/cumsum window runs over K rows only.
-      "t12_vocab" -> ((s, dir) => {
-        val counts = Tables.documents(s, dir)
-          .select(explode(tokens(col("text"))).as("token"))
-          .groupBy(col("token")).agg(count(lit(1)).cast("bigint").as("n"))
-        val total = counts.agg(sum(col("n")).cast("bigint").as("total"))
-        val ord = Window.orderBy(col("n").desc, col("token").asc)
-        counts.orderBy(col("n").desc, col("token").asc).limit(20)
-          .withColumn("rank", row_number().over(ord).cast("int"))
-          .withColumn("cum_n", sum(col("n"))
-            .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("bigint"))
-          .crossJoin(broadcast(total))
-          .select(col("token"), col("n"), col("rank"), col("cum_n"),
-            (col("cum_n").cast("double") / col("total").cast("double"))
-              .as("coverage"))
-      }),
-
-      // Corpus bigram language-model scoring (the KenLM-style quality
-      // signal, CCNet-fashion: docs whose bigrams are common in the
-      // corpus score high, gibberish scores low). Per-bigram add-V
-      // probability p = c(w1w2) / (c(w1) + V) is computed in FIXED
-      // POINT — (c(w1w2) * 10^6) div (c(w1) + V), pure integer
-      // arithmetic — because ln/exp are libm-dependent and a double
-      // SUM is addition-order-dependent: neither survives a bit-exact
-      // cross-engine hash gate. The doc score sums exact fixed-point
-      // longs and divides ONCE at the end.
-      // Scale: three term-keyed shuffles (bigram counts, unigram
-      // counts, join-back) + one doc-keyed agg, all partial-
-      // aggregable. The count-table joins carry no broadcast hint (the
-      // t9 stance): Catalyst broadcasts them at gate scale where they
-      // are KB-sized and falls back to shuffle joins at corpus scale
-      // where the term dictionary is corpus-sized. V is a one-row
-      // exact distinct count, explicitly broadcast.
-      "t14_lm_score" -> ((s, dir) => {
-        val tk = Tables.documents(s, dir).select(col("doc_id"),
-          tokens(col("text")).as("toks"))
-        val uni = tk.select(explode(col("toks")).as("w"))
-        val vocab = uni.agg(countDistinct(col("w")).cast("long").as("v"))
-        val cu = uni.groupBy(col("w")).agg(count(lit(1)).cast("long").as("cw"))
-        val bg = tk.filter(size(col("toks")) > 1)
-          .select(col("doc_id"), col("toks"), posexplode(slice(col("toks"),
-            lit(1), size(col("toks")) - 1)))
-          .withColumnRenamed("col", "w1")
-          .select(col("doc_id"), col("w1"),
-            concat(col("w1"), lit(" "),
-              element_at(col("toks"), col("pos") + 2)).as("b"))
-        val cb = bg.groupBy(col("b")).agg(count(lit(1)).cast("long").as("cbg"))
-        bg.join(cb, "b").join(cu, col("w1") === col("w"))
-          .crossJoin(broadcast(vocab))
-          .select(col("doc_id"),
-            expr("(cbg * 1000000) div (cw + v)").as("p_fp"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_bigrams"),
-            sum(col("p_fp")).cast("bigint").as("score_fp"))
-          .select(col("doc_id"), col("n_bigrams"), col("score_fp"),
-            (col("score_fp").cast("double") / col("n_bigrams").cast("double") /
-              1000000.0).as("lm_score"))
-      }),
-
-      // ---- BPE merge training (t15; functions/Bpe.scala) — the
-      // tokenizer-training half of the pipeline: the top-k merge
-      // rules learned exactly (pair counts weighted by word
-      // frequency, greedy left-to-right application, pinned
-      // tie-breaks). ONE corpus-sized pass (word frequencies); every
-      // iteration is vocabulary-sized. Oracle: the same k iterations
-      // as chained CTEs — the delimited-string literal replace IS
-      // greedy BPE in both engines, making the merge table
-      // hash-exact. The gate runs the INCREMENTAL trainer (pair-count
-      // delta maintenance — the real-vocab scale path; BpeSpec pins
-      // it equal to the recount form, BpeSoak measures the k=512
-      // crossover), so the oracle proves the delta bookkeeping exact.
-      "t15_bpe_merges" -> ((s, dir) =>
-        graft.functions.Bpe.bpeTrainIncremental(
-          Tables.documents(s, dir).select(col("text")), "text", k = 6)),
-
-      // ---- BPE encoding under the learned merges (t16): the serving
-      // half of the tokenizer — k chained literal replaces (all
-      // codegen'd, map-only; no shuffle besides the final count agg),
-      // applied per WORD so every post-corpus step is
-      // vocabulary-sized with frequency-weighted counts
-      // (bit-identical to encoding each occurrence). Output: the
-      // corpus token frequency table under the k=6 tokenizer.
-      "t16_bpe_encode" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir).select(col("text"))
-        val merges = graft.functions.Bpe.bpeTrainIncremental(docs, "text", k = 6)
-          .orderBy(col("mrank")).collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-        graft.functions.Bpe.encodeTokenCounts(docs, "text", merges)
-      }),
-
-      // ---- BPE training over a NON-ASCII (CJK) alphabet under a
-      // hard-truncated driver pair table (t18): every document's
-      // tokens map deterministically to 3-char words over a 96-char
-      // CJK alphabet (md5-derived characters both engines compute
-      // identically), the trainer runs with a whitespace tokenizer
-      // override and maxPairs = 8 against thousands of distinct
-      // pairs — so every merge selection exercises the truncated
-      // table's floor/refill machinery (BpeDiversitySoak's soak-only
-      // guarantee, now hash-gated). Tie-breaks stay exact: the
-      // alphabet lives in the BMP, where UTF-16, codepoint, and
-      // UTF-8-byte orderings all agree.
-      "t18_bpe_cjk" -> ((s, dir) => {
-        def cjkChar(salt: Int, t: Column): Column =
-          call_function("substr", lit(cjkAlpha),
-            (conv(substring(md5(concat(lit(s"$salt:"), t)), 1, 8),
-              16, 10).cast("long") % 96 + 1).cast("int"), lit(1))
-        val cjk = Tables.documents(s, dir).select(
-          array_join(transform(tokens(col("text")), t =>
-            concat(cjkChar(0, t), cjkChar(1, t), cjkChar(2, t))), " ")
-            .as("text"))
-        graft.functions.Bpe.bpeTrainIncremental(cjk, "text", k = 6,
-          rewriteEvery = 4, maxPairs = 8, batchMerges = 2,
-          tokenize = c => filter(split(c, " "), x => x =!= ""))
-      }),
-
-      // ---- Gopher-style within-doc line repetition signals (t17;
-      // operators/Boilerplate.scala): fraction of lines (and of
-      // characters) belonging to a line duplicated within its own
-      // document — the repetition quality filter. Fixture: the d11
-      // multi-line corpus with the first line re-appended to every
-      // 7th doc (planted within-doc duplicates at every sf). Two
-      // partial-aggregated shuffles: (doc,line), then doc.
-      "t17_line_repetition" -> ((s, dir) => {
-        val rep = corpusPara(s, dir).select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(col("text"), lit("\n"),
-              element_at(split(col("text"), "\n"), 1)))
-            .otherwise(col("text")).as("text"))
-        Boilerplate.lineRepetition(rep, "doc_id", "text")
-      }),
-
-      // URL canonicalization + dedup (crawl-corpus source dedup): the
-      // fixture synthesizes each logical page under messy surface
-      // variants — case-shifted scheme/host, explicit :443, tracking
-      // params, shuffled param order, trailing slash, fragment — and
-      // canonicalization (functions/TextFunctions.canonicalizeUrl)
-      // must collapse them. Narrow codegen'd regexp/array ops + ONE
-      // hash agg on the canonical key; no join, no window — scales as
-      // a single shuffle keyed by canonical URL.
-      "t13_url_canonical" -> ((s, dir) => {
-        val d = col("doc_id")
-        val u = Tables.documents(s, dir).select(col("doc_id"),
-          concat(
-            when(d % 2 === 0, lit("HTTPS")).otherwise(lit("https")),
-            lit("://"),
-            when(d % 3 === 0,
-              concat(lit("WWW."), upper(col("source")), lit(".Example.COM:443")))
-              .otherwise(concat(lit("www."), col("source"), lit(".example.com"))),
-            lit("/articles/"), (d % 40).cast("string"),
-            when(d % 4 === 0, lit("/")).otherwise(lit("")),
-            when(d % 2 === 0,
-              concat(lit("?utm_source=feed&utm_campaign=fall&ref="),
-                (d % 5).cast("string"), lit("&b=2&a=1")))
-              .otherwise(concat(lit("?a=1&b=2&ref="), (d % 5).cast("string"))),
-            when(d % 6 === 0, lit("#section-2")).otherwise(lit(""))).as("url"))
-        u.select(col("doc_id"), col("url"),
-            graft.functions.TextFunctions.canonicalizeUrl(col("url"))
-              .as("canonical_url"))
-          .groupBy(col("canonical_url"))
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            countDistinct(col("url")).cast("bigint").as("n_variants"),
-            min(col("doc_id")).as("first_doc"))
-      }),
-
-      // Incremental corpus ingestion: dedup a NEW batch against the
-      // already-ingested corpus by content hash (anti join on md5 —
-      // J1's insert-only merge lifted to content identity), then
-      // exact-dedup within the surviving batch. The fixture ships a
-      // batch where every 4th base doc reappears under a new id — all
-      // of those must be anti-joined away. Scale: the existing-corpus
-      // side stays a distinct hash set, shuffle-partitioned, never
-      // collected; one shuffle per side on the 16-byte digest.
-      // Repeated-span coverage (substring-level dedup signal): see
-      // DedupSuite.spanCoverage. Planted exact clones score 1.0 by
-      // construction.
-      "d16_span_coverage" -> ((s, dir) =>
-        DedupSuite.spanCoverage(corpusExact(s, dir), "doc_id", "text", 5)),
-
-      // ---- ExactSubstr-style duplicate-span REMOVAL (d25): the one
-      // standard public LLM-dedup modality d11 (paragraph) and d16
-      // (coverage scoring) do not provide — cross-document repeated
-      // token windows (length 8) are cut from every occurrence but
-      // the lexicographically first, and the cleaned text re-emitted.
-      // Planted: every 7th doc carries a shared 12-token boilerplate
-      // suffix, so its windows duplicate corpus-wide and exactly one
-      // doc keeps them. Oracle: the same window/keep-first/coverage
-      // relational pipeline in DuckDB SQL, matched bit-for-bit
-      // (clean_text is compared as a STRING — token order proof).
-      "d25_exact_substr" -> ((s, dir) =>
-        DedupSuite.exactSubstrDedup(
-          substrCorpus(s, dir), "doc_id", "text", l = 8)),
-
-      // ---- incremental ExactSubstr ingest (the d13/d19/d23/q91
-      // discipline closing the LAST corpus-sized-state family without
-      // a gated ingest twin): the window-key store is built on the
-      // first third of the corpus, the rest folds in two monotonic
-      // batches, and per-batch cleaned output ∪-equals the full d25
-      // recompute BIT-EXACT (monotone ids ⇒ a stored keep is the
-      // global keep, so earlier emissions never change) — the corpus
-      // is never rescanned: each fold joins only its own buckets of
-      // the store (static PartitionFilters, spec-proved unread
-      // elsewhere). Oracle: d25's relational twin — that equality IS
-      // the gate, the e13/d23 shared-oracle move. ----
-      "d26_incremental_substr" -> ((s, dir) => {
-        val docs = substrCorpus(s, dir)
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-        val tmp = PerJvm.tempDir("d26_substr")
-        val store = s"$tmp/state"
-        val out1 = DedupSuite.exactSubstrBuildStore(
-          docs.filter(col("doc_id") < t1), "doc_id", "text", 8, store)
-        val out2 = DedupSuite.exactSubstrFold(s, store,
-          docs.filter(col("doc_id") >= t1 && col("doc_id") < t2),
-          "doc_id", "text", 8)
-        // maintenance between folds (the q91/s13 discipline): collapse
-        // each key's build+delta rows to its merged row, then squash
-        // each bucket partition's files in place — the gate below then
-        // PROVES fold 3 reads the vacuumed+compacted store identically
-        // (post-maintenance output still oracle-exact)
-        DedupSuite.vacuumSubstrStore(s, store)
-        graft.operators.StoreCompaction.compactStoreFused(s, store,
-          "bucket")
-        val out3 = DedupSuite.exactSubstrFold(s, store,
-          docs.filter(col("doc_id") >= t2), "doc_id", "text", 8)
-        out1.unionByName(out2).unionByName(out3)
-      }),
-
-      // All-pairs cosine ≥ 0.9 over sparse tf vectors WITHOUT the
-      // naive all-pairs join: Bayardo prefix filtering + partial-score
-      // pruning bound the candidate set, then an integer-exact verify
-      // (100·dot² ≥ 81·‖a‖²·‖b‖²) makes the result — and the naive
-      // DuckDB oracle — bit-identical. The sparse-text sibling of
-      // d6's dense-embedding near-dup. Gate input is a deterministic
-      // bounded slice (doc_id % 3 = 0 AND doc_id < 2500 — the
-      // q36/q67 gate-bounding discipline, with the cap keeping the
-      // gate's pair count SF-independent): the synthetic corpus has a
-      // 31-term vocabulary, so EVERY doc pair shares indexed terms
-      // and no exact algorithm beats Θ(|pairs|) on it — a full-corpus
-      // run is quadratic by data shape, not by plan (see Apss
-      // scaladoc).
-      "d17_apss_cosine" -> ((s, dir) =>
-        Apss.cosinePairs(
-          Tables.documents(s, dir)
-            .filter(col("doc_id") % 3 === 0 && col("doc_id") < 2500),
-          "doc_id", "text", 9, 10)),
-
-      // Incremental APSS (the d13 ingest shape for d17): a persisted
-      // open-world index over the corpus — flagged by the
-      // partner-independent ℓ²-prefix bound ONLY, because the Bayardo
-      // Σw·maxw bound is relative to corpus weights and a future
-      // batch doc can exceed them — probed by a new batch's postings.
-      // The corpus is never re-tokenized. Gate plants guaranteed
-      // cross pairs the d13 way: the batch carries near-dup clones
-      // (text + ' v2') of every corpus doc with doc_id % 4 = 0, so
-      // the oracle's naive corpus × batch join is non-empty at every
-      // SF. Same bounded slice + integer-exact verify as d17.
-      "d18_incremental_apss" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"))
-          .filter(col("doc_id") % 3 === 0 && col("doc_id") < 2500)
-        val corpus = docs.filter(col("doc_id") % 2 === 0)
-        val batch = docs.filter(col("doc_id") % 2 === 1)
-          .unionByName(corpus.filter(col("doc_id") % 4 === 0)
-            .select((col("doc_id") + 1000000L).as("doc_id"),
-              concat(col("text"), lit(" v2")).as("text")))
-        // materialized: incrementalPairs' contract is a PERSISTED
-        // index (it fans out into idx/prefix/prefixUb/na branches —
-        // unmaterialized, the whole corpus index pipeline re-ran per
-        // branch; r19 optimization)
-        val index = Apss.buildIndex(corpus, "doc_id", "text", 9, 10)
-          .localCheckpoint()
-        Apss.incrementalPairs(index, batch, "doc_id", "text", 9, 10)
-      }),
-
-      // Incremental MinHash-LSH near-dup (the d18 ingest shape for
-      // the near-dup family): the corpus's shingle hashes + band
-      // hashes are a persisted index (minhashIndex), and a new batch
-      // — the corpusNear clones, arriving as an ingest delta — probes
-      // it via shared (band, band_hash) buckets + exact-Jaccard
-      // verify. The corpus is never re-shingled or re-signed. The
-      // hot-bucket cap counts the union bucket population, so the
-      // result equals the full d2 pipeline over corpus ∪ batch
-      // restricted to cross pairs (DedupSuiteSpec proves it); the
-      // oracle replicates both sides' portable pipelines in SQL.
-      "d19_incremental_minhash" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val batch = docs.filter(col("doc_id") % 7 === 0)
-          .select(cloneId(col("doc_id")).as("doc_id"),
-            concat(col("text"), lit(" nearly duplicate suffix")).as("text"))
-        val index = DedupSuite.minhashIndex(docs, "doc_id", "text",
-          n = 3, k = 16, bands = 4)
-        DedupSuite.incrementalMinhashNearDups(index, batch, "doc_id", "text",
-          n = 3, k = 16, bands = 4, threshold = 0.5)
-      }),
-
-      // ---- semantic dedup (SemDeDup, arXiv:2303.09540: cluster the
-      // embedding corpus, then dedup ONLY within clusters — the
-      // quadratic pairwise step is bounded per cluster, never corpus-
-      // wide; scale analysis in Similarity.semDedup's scaladoc). The
-      // d6 planting (exact clones of every 10th vector, ids +1e6)
-      // guarantees tau-passing pairs at any sf; keep-lowest-id drops
-      // each clone while natural vectors survive.
-      "d20_semdedup" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val planted = emb.unionByName(emb.filter(col("vec_id") % 10 === 0)
-          .select(cloneId(col("vec_id")).as("vec_id"), col("embedding")))
-        Similarity.semDedup(planted, "vec_id", "embedding", tau = 0.98)
-      }),
-
-      // SemDeDup with the PAPER's keep rule (r10 verdict item 3):
-      // within a tau-pair, keep the member FARTHEST from its centroid
-      // (lowest centroid-cosine), id tie-break — only the ORDER inside
-      // the pair filter changes vs d20. The planted clones are
-      // PERTURBED (first component +0.125, cosine to base ~0.992 ≥
-      // tau at every SF — measured, not assumed), so base and clone
-      // genuinely differ in centroid distance and the two rules keep
-      // DIFFERENT representatives; exact clones would tie and hide
-      // the rule. 0.125 is a power-of-two literal: the float add
-      // rounds identically in both engines.
-      "d21_semdedup_farthest" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val planted = emb.unionByName(emb.filter(col("vec_id") % 10 === 0)
-          .select(cloneId(col("vec_id")).as("vec_id"),
-            concat(
-              array((element_at(col("embedding"), 1).cast("double") + 0.125)
-                .cast("float")),
-              slice(col("embedding"), 2, 63)).as("embedding")))
-        Similarity.semDedup(planted, "vec_id", "embedding", tau = 0.98,
-          keepFarthest = true)
-      }),
-
-      // ---- incremental SemDeDup ingest (the d13/d19/q91 discipline
-      // for the semantic-dedup family — the last corpus-sized-state
-      // family without an ingest twin): the corpus member state
-      // (vid, v, csim, kept — dropped members too: similarity is not
-      // transitive, a dropped member can still be the witness that
-      // drops a newcomer) is PERSISTED cluster-partitioned, and the
-      // clone batch FOLDS in — batch assigned against frozen
-      // centroids, only receiving clusters read back (static
-      // centroid_id IN partition filter), only those rewritten. The
-      // gated read serves survivors from the folded state; oracle:
-      // d20's full recompute over corpus ∪ batch, matched bit-exact.
-      "d23_semdedup_ingest" -> ((s, dir) =>
-        Similarity.semDedupKept(s, semDedupStateDir(s, dir, keepFarthest = false))),
-
-      // same fold, the PAPER's keep-farthest rule (d21's oracle)
-      "d24_semdedup_ingest_farthest" -> ((s, dir) =>
-        Similarity.semDedupKept(s, semDedupStateDir(s, dir, keepFarthest = true))),
-
-      "d13_incremental_ingest" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val base = docs.filter(col("doc_id") % 2 === 0)
-        val batch = docs.filter(col("doc_id") % 2 === 1)
-          .unionByName(base.filter(col("doc_id") % 4 === 0)
-            .select(cloneId(col("doc_id")).as("doc_id"), col("text")))
-        val fresh = batch.join(
-          base.select(md5(col("text")).as("h")).distinct(),
-          md5(col("text")) === col("h"), "left_anti")
-        DedupSuite.exact(fresh, "doc_id", "text")
-      }),
-
-      // d13's ingest dedup with the anti join's big side BLOOM-PRUNED
-      // (operators/BloomFilter.scala): a bitmap built over the batch's
-      // content digests in one partial-aggregable pass drops every
-      // seen-corpus row that provably matches nothing BEFORE the
-      // exchange — at 100 TB the seen side's shuffle is the whole cost
-      // of d13, and the bloom turns it into a shuffle of candidates
-      // only. Output is bit-identical to the plain anti join (false
-      // positives survive to the exact join and match nothing), so the
-      // oracle is d13's plain NOT IN; pruning effectiveness is an
-      // observe() metric, not a guess.
-      "d14_bloom_prefilter" -> ((s, dir) => {
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val base = docs.filter(col("doc_id") % 2 === 0)
-        val batch = docs.filter(col("doc_id") % 2 === 1)
-          .unionByName(base.filter(col("doc_id") % 4 === 0)
-            .select(cloneId(col("doc_id")).as("doc_id"), col("text")))
-        // NO distinct on the seen side (d13 needs it to shrink the
-        // join input; anti-join semantics don't) — the bloom filter is
-        // the shrink here, and it applies AT THE SCAN, before any
-        // exchange. Post-filter the survivors are broadcast-sized, so
-        // AQE turns the whole anti join into a broadcast join: the
-        // 100-TB seen side never shuffles at all.
-        val seen = base.select(md5(col("text")).as("h"))
-        // size the filter from the build side's PLAN STATISTICS, not a
-        // constant and not a count(): a fixed-4096 filter saturates as
-        // sf grows (fpp -> 1) and silently stops pruning, while a
-        // batch.count() is a full extra scan of the build side per run
-        // (ADVICE r6). sizedFor reads the optimizer's row estimate —
-        // a few-x estimation error only moves fpp, never correctness.
-        val fresh = BloomFilter.prunedLeftAnti(batch, seen,
-          md5(col("text")), col("h"),
-          BloomFilter.sizedFor(batch, fpp = 0.01))
-        DedupSuite.exact(fresh, "doc_id", "text")
-      }),
-
-      // Rare-token ratio (quality signal): fraction of a doc's tokens
-      // whose document frequency across the corpus is < 3. The fixture
-      // plants a unique token in every 11th doc so the signal is
-      // non-degenerate on the synthetic 31-token vocabulary.
-      // Scale: df is a distinct+groupBy on term; the term⋈rare join
-      // shuffles on term (rare set = the long tail, NOT broadcastable
-      // at 100 TB, though AQE will broadcast it at test sf).
-      "t10_rare_tokens" -> ((s, dir) => {
-        val d = Tables.documents(s, dir).select(col("doc_id"),
-          concat(col("text"), when(col("doc_id") % 11 === 0,
-            concat(lit(" zq"), col("doc_id").cast("string")))
-            .otherwise(lit(""))).as("text"))
-        val term = d.select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-        val rare = term.select(col("doc_id"), col("term")).distinct()
-          .groupBy(col("term")).agg(count(lit(1)).cast("bigint").as("df"))
-          .filter(col("df") < 3)
-          .select(col("term"), lit(1L).as("is_rare"))
-        term.join(rare, Seq("term"), "left")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_tokens"),
-            sum(coalesce(col("is_rare"), lit(0L))).cast("bigint").as("n_rare"))
-          .select(col("doc_id"), col("n_tokens"), col("n_rare"),
-            (col("n_rare").cast("double") / col("n_tokens").cast("double"))
-              .as("rare_frac"))
-      }),
-
-      "q37_leakage_safe_split" -> ((s, dir) =>
-        // group-stable 80/20 split: the split key is the USER hash, so
-        // all of a user's events land on one side (no train/test leakage
-        // through correlated rows — the split discipline near-dup dedup
-        // exists to protect)
-        Tables.events(s, dir)
-          .withColumn("split",
-            when(hash32(col("user_id").cast("string"), 1) % 10 < 8, "train")
-              .otherwise("test"))
-          .groupBy(col("split"))
-          .agg(count(lit(1)).cast("bigint").as("n_events"),
-            countDistinct(col("user_id")).cast("bigint").as("n_users"))),
-
-      "q38_interval_join" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-        val signups = ev.filter(col("event_type") === "signup")
-          .select(col("user_id"), unix_micros(col("ts")).as("s_us"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), unix_micros(col("ts")).as("p_us"))
-        signups.join(purchases, Seq("user_id"))
-          .filter(col("p_us") > col("s_us") &&
-            col("p_us") <= col("s_us") + 3600L * 1000000)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).cast("bigint").as("n_pairs"))
-      }),
-
-      // ---- binned PURE range join (q38 has a user_id equi-key; this
-      // is the keyless case Spark plans as a nested loop — binning
-      // turns it into a bucket equi-join; see RangeJoin scaladoc).
-      // Ranges: 25 overlapping 3h windows spaced 2h from the corpus
-      // min ts (derived, so any fixture regeneration still overlaps).
-      "q88_binned_range_join" -> ((s, dir) => {
-        val ev = Tables.events(s, dir).filter(col("ts").isNotNull)
-          .select(unix_micros(col("ts")).as("ts_us"),
-            Marts.dec2(col("value")).as("val"))
-        val ranges = Tables.nation(s, dir)
-          .select(col("n_nationkey").cast("long").as("range_id"))
-          .crossJoin(broadcast(ev.agg(min(col("ts_us")).as("t0"))))
-          .select(col("range_id"),
-            (col("t0") + col("range_id") * 7200000000L).as("start_us"),
-            (col("t0") + col("range_id") * 7200000000L + 10800000000L)
-              .as("end_us"))
-        RangeJoin.binnedRangeJoin(ev, "ts_us", ranges,
-            "start_us", "end_us", binUs = 3600000000L)
-          .groupBy(col("range_id"))
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum(col("val")).cast("decimal(18,2)").cast("double").as("total"))
-      }),
-
-      // ---- funnel + cohort retention (event-analytics staples) ----
-      "q34_funnel" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-        val firstSignup = ev.filter(col("event_type") === "signup")
-          .groupBy(col("user_id"))
-          .agg(min(unix_micros(col("ts"))).as("first_signup_us"))
-        ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), unix_micros(col("ts")).as("p_us"))
-          .join(firstSignup, "user_id")
-          .filter(col("p_us") > col("first_signup_us"))
-          .groupBy(col("user_id"), col("first_signup_us"))
-          .agg(count(lit(1)).cast("bigint").as("n_purchases_after"))
-      }),
-
-      "q35_retention" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-          .select(col("user_id"), to_date(col("ts")).as("d"))
-        val cohort = ev.groupBy(col("user_id")).agg(min(col("d")).as("cohort_date"))
-        val active = ev.distinct()
-        cohort.join(active, "user_id")
-          .groupBy(col("cohort_date"))
-          .agg(
-            countDistinct(col("user_id")).cast("bigint").as("cohort_size"),
-            countDistinct(when(col("d") === date_add(col("cohort_date"), 7),
-              col("user_id"))).cast("bigint").as("retained_d7"))
-      }),
-
-      // ---- set operations (INTERSECT / EXCEPT; beyond the reference's S1) ----
-      "q32_setops" -> ((s, dir) => {
-        val ev = Tables.events(s, dir).select(col("event_id"))
-        val a = ev.filter(col("event_id") % 2 === 0)
-        val b = ev.filter(col("event_id") % 3 === 0)
-        a.intersect(b).withColumn("op", lit("both"))
-          .unionByName(a.exceptAll(b).withColumn("op", lit("only_even")))
-      }),
-
-      // ---- edit distance (fuzzy matching over type labels) ----
-      "q33_edit_distance" -> ((s, dir) =>
-        Tables.events(s, dir).select(col("event_type")).distinct()
-          .select(col("event_type"),
-            levenshtein(col("event_type"), lit("purchase")).cast("int").as("dist"))),
-
-      // ---- z-order clustering key + table checksum (scale utilities) ----
-      "q30_zorder_key" -> ((s, dir) =>
-        Tables.part(s, dir).select(
-          col("p_partkey"),
-          Enrich.zorderKey(col("p_size"),
-            pmod(col("p_partkey"), lit(1024)).cast("int"), 10).as("zkey"))),
-
-      "q31_table_checksum" -> ((s, dir) =>
-        Checks.tableChecksum(Tables.nation(s, dir),
-          Seq("n_nationkey", "n_name", "n_regionkey"))),
-
-      // ---- cube / pivot / explode (relational surface beyond rollup) ----
-      "q27_cube" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .withColumn("metric_month", date_trunc("month", col("ts")).cast("date"))
-          .cube(col("event_type"), col("metric_month"))
-          .agg(count(lit(1)).cast("bigint").as("n"))
-          .select(coalesce(col("event_type"), lit("(all)")).as("event_type"),
-            coalesce(col("metric_month"), lit(java.sql.Date.valueOf("1970-01-01"))).as("metric_month"),
-            col("n"))),
-
-      "q28_pivot" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .withColumn("metric_date", to_date(col("ts")))
-          .groupBy(col("metric_date"))
-          .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-          .agg(sum(dec2(col("value"))))
-          .select(col("metric_date") +:
-            Seq("click", "error", "purchase", "signup", "view").map(c =>
-              coalesce(col(c), lit(0)).cast("decimal(18,2)").cast("double").as(c)): _*)),
-
-      "q29_wordcount" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .select(explode(tokens(col("text"))).as("token"))
-          .groupBy(col("token"))
-          .agg(count(lit(1)).cast("bigint").as("n"))
-          .orderBy(col("n").desc, col("token").asc)
-          .limit(20)),
-
-      // ---- exact percentiles (sort-based; interpolation parity w/ oracle) ----
-      "q26_percentiles" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .groupBy(col("event_type"))
-          .agg(percentile(col("value"), array(lit(0.25), lit(0.5), lit(0.9)))
-            .as("qs"))
-          .select(col("event_type"),
-            element_at(col("qs"), 1).cast("decimal(18,6)").cast("double").as("p25"),
-            element_at(col("qs"), 2).cast("decimal(18,6)").cast("double").as("p50"),
-            element_at(col("qs"), 3).cast("decimal(18,6)").cast("double").as("p90"))),
-
-      // Sketch-accuracy gate (e5's recall-gate discipline applied to
-      // cardinality/quantile sketches): the 100-TB profile pass runs
-      // HLL++ (approx_count_distinct) and the quantile sketch
-      // (percentile_approx) — one partial-aggregable pass, no
-      // exact-distinct shuffle. DuckDB cannot reproduce Spark's sketch
-      // internals, so the sketches are validated IN-PLAN against their
-      // exact twins via Checks.gated (job fails if either drifts out
-      // of tolerance) while the oracle gates the exact values.
-      //
-      // BOUNDED exact twins (r6 verdict): the exact percentile's
-      // ObjectHashAggregate buffers the whole per-group value multiset
-      // — under this ~5-value grouping key at 100 TB that is 5 reduce
-      // tasks each holding ~n/5 doubles, an OOM by construction. So:
-      // HLL is gated IN FULL (exact countDistinct partial-aggregates
-      // over (type, user) with O(distinct) state spread across
-      // partitions — scale-safe), and the percentile is gated ON A
-      // DETERMINISTIC HASH-SAMPLE (hash32(event_id) mod 8 == 0 — the
-      // q36 discipline, bit-reproducible by the oracle): BOTH the
-      // sketch and its exact twin aggregate the SAME sampled rows via
-      // percentile's null-skipping `when`, so the gate sees pure
-      // sketch error (tolerance stays tight, no sampling-noise slack)
-      // and only sampled values ever enter the exact buffer — one
-      // scan, the buffer bounded by the sample. At corpus scale the
-      // mod-K keeps a fixed sample-size target by growing K with n;
-      // a q36-style sample is the only place an exact quantile can
-      // exist at 100 TB at all.
-      "q67_sketch_gate" -> ((s, dir) => {
-        val sampled = pmod(hash32(col("event_id").cast("string"), 3), lit(8)) === 0
-        val agg = Tables.events(s, dir).groupBy(col("event_type")).agg(
-          countDistinct(col("user_id")).cast("bigint").as("n_users"),
-          approx_count_distinct(col("user_id")).as("hll_users"),
-          percentile(when(sampled, col("value")), lit(0.5)).as("p50x"),
-          percentile_approx(when(sampled, col("value")), lit(0.5), lit(10000))
-            .as("p50s"))
-        val g1 = Checks.gated(agg, "hll_rel_err",
-          abs(col("hll_users") - col("n_users")).cast("double")
-            <= col("n_users").cast("double") * 0.1,
-          concat(lit("hll="), col("hll_users"), lit(" exact="), col("n_users")))
-        Checks.gated(g1, "p50_abs_err",
-          abs(col("p50s") - col("p50x")) <= abs(col("p50x")) * 0.05 + 0.01,
-          concat(lit("sketch="), col("p50s"), lit(" exact="), col("p50x")))
-          .select(col("event_type"), col("n_users"),
-            col("p50x").cast("decimal(18,6)").cast("double").as("p50"))
-      }),
-
-      // ---- native session windows (same semantics as composed q21) ----
-      "q25_session_window" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(count(lit(1)).cast("bigint").as("n_events"))
-          .select(col("user_id"),
-            unix_micros(col("session_window.start")).as("start_us"),
-            col("n_events"))),
-
-      // ---- incremental mart maintenance (combine partials == recompute) ----
-      "q24_incremental_mart" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-        val partA = Marts.dailyPartial(ev.filter(col("event_id") % 2 === 0))
-        val partB = Marts.dailyPartial(ev.filter(col("event_id") % 2 =!= 0))
-        Marts.finalizeDaily(Marts.combinePartials(partA, partB))
-      }),
-
-      "d5_minhash_portable" -> ((s, dir) =>
-        DedupSuite.minhashNearDupsPortable(corpusD5(s, dir), "doc_id", "text",
-          n = 3, k = 16, bands = 4, threshold = 0.5)),
-
-      // ---- near-dup canonical selection (keep best-quality member) ----
-      "d7_canonical_near_dup" -> ((s, dir) => {
-        import graft.functions.TextFunctions.{tokens, qualityScoreFromTokens}
-        val corpus = corpusD7(s, dir)
-        // TRANSITIVE clusters (r3 VERDICT item 3): pairs → connected
-        // components (min-id label). The old single-step min-id rep was
-        // wrong on chains A≈B≈C with A̸≈C (it put C under B); corpusD7
-        // plants exactly those chains, and the oracle computes the true
-        // closure via a recursive CTE.
-        val pairs = DedupSuite.minhashNearDupsPortable(corpus, "doc_id", "text",
-            n = 3, k = 16, bands = 4, threshold = 0.5)
-          .select(col("id_a"), col("id_b"))
-        val comp = Dedup.connectedComponents(pairs)
-          .select(col("id").as("doc_id"), col("component"))
-        val mem = corpus.join(comp, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("cluster"))
-        val q = corpus.select(col("doc_id"),
-          graft.functions.ColUtil.bindOnce(tokens(col("text")))(
-            qualityScoreFromTokens).as("quality"))
-        val w = Window.partitionBy(col("cluster"))
-          .orderBy(col("quality").desc, col("doc_id").asc)
-        mem.join(q, "doc_id")
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("cluster"), col("doc_id"),
-            col("quality").cast("double").as("quality"))
-      }),
-
-      // ---- IVF ANN (scale path beside LSH) ----
-      "e3_ann_ivf" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5, nCentroids = 16, nProbe = 4)
-      }),
-
-      // ---- incremental IVF ingest (the d13/d19 incremental family
-      // applied to ANN serving): build the partitioned index from the
-      // BASE corpus, append a clone batch against the frozen
-      // centroids WITHOUT touching the corpus, then serve from the
-      // grown index. The oracle is a full IVF pipeline over
-      // corpus ∪ batch with the same centroid seed — frozen centroids
-      // make append and rebuild bit-identical, which is the gate.
-      "e10_incremental_ivf" -> ((s, dir) => {
-        val root = e10IvfIndexDir(s, dir)
-        val cent = s.read.parquet(s"$root/centroids")
-        Similarity.queryIvfIndex(s, s"$root/index", cent,
-          Tables.embeddings(s, dir).filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5, nProbe = 4)
-      }),
-
-      // ---- residual IVFPQ (the paper's IVFADC: codes quantize the
-      // vector MINUS its coarse centroid, closing the recall gap
-      // e11's scaladoc defers — per-cell query lookup tables, shared
-      // residual codebook; see Similarity.ivfPqResidualTopK) ----
-      "e12_ivfpq_residual" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        Similarity.ivfPqResidualTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5)
-      }),
-
-      // ---- product quantization ANN (the compressed-codes serving
-      // layout: vectors become m subspace codes; queries score via an
-      // ADC lookup table — scale analysis and the fixed-point BIGINT
-      // distance discipline in Similarity.pqTopK's scaladoc) ----
-      "e9_pq" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        Similarity.pqTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5)
-      }),
-
-      // ---- IVF+PQ composition (coarse probe layer over compressed
-      // codes — the billion-vector serving shape; scale analysis and
-      // the residual-encoding caveat in Similarity.ivfPqTopK) ----
-      "e11_ivfpq" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5)
-      }),
-
-      // ---- persisted-index IVFPQ / IVFADC serving (r10 verdict item
-      // 1): the gated queries serve from a WRITTEN, centroid-
-      // partitioned code store — coarse probes prune the code scan via
-      // dynamic partition pruning (PLANS.md shows the dynamicpruning
-      // subquery on centroid_id) — instead of rebuilding coarse
-      // assignment, codebook, and codes inline on every run. Frozen
-      // seeds + exact BIGINT ADC make served == inline bit-for-bit,
-      // so e13/e14 share e11/e12's oracles; the store is built once
-      // per (JVM, dir) by pqIndexDir. ----
-      "e13_ivfpq_served" -> ((s, dir) =>
-        Similarity.queryIvfPqIndex(s, pqIndexDir(s, dir, residual = false),
-          Tables.embeddings(s, dir).filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5)),
-
-      "e14_ivfadc_served" -> ((s, dir) =>
-        Similarity.queryIvfPqIndex(s, pqIndexDir(s, dir, residual = true),
-          Tables.embeddings(s, dir).filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 5, residual = true)),
-
-      // Int8 embedding quantization (min/max affine, the storage layout
-      // for vectors at corpus scale): per-vector range stats + the
-      // quantized-value checksum. Exact float min/max and correctly-
-      // rounded double affine math — bit-identical cross-engine, no
-      // epsilon. Explode + two hash aggs; partial-aggregable.
-      "e6_quantize" -> ((s, dir) => {
-        val e = Tables.embeddings(s, dir)
-          .select(col("vec_id"), explode(col("embedding")).as("x"))
-        val stats = e.groupBy(col("vec_id")).agg(
-          min(col("x")).as("mn"), max(col("x")).as("mx"),
-          count(lit(1)).cast("int").as("n_dims"))
-        val scale = (col("mx").cast("double") - col("mn").cast("double")) / 255.0
-        e.join(stats, "vec_id")
-          .select(col("vec_id"), col("n_dims"),
-            col("mn").cast("double").as("mn"), col("mx").cast("double").as("mx"),
-            when(col("mx") > col("mn"),
-              floor((col("x").cast("double") - col("mn").cast("double")) / scale
-                + 0.5).cast("long"))
-              .otherwise(0L).as("qi"))
-          .groupBy(col("vec_id"), col("n_dims"), col("mn"), col("mx"))
-          .agg(sum(col("qi")).cast("bigint").as("checksum"))
-      }),
-
-      // ANN quality measured, not asserted (r3 VERDICT item 6): recall@5
-      // of the IVF path against brute-force ground truth, per query.
-      // Deterministic (seed centroids + total-order ranking), so the
-      // recall numbers themselves are oracle-gated.
-      "e5_recall" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir)
-        val q = emb.filter(col("vec_id") < 8)
-        val truth = Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", 5)
-        val approx = Similarity.ivfTopK(emb, q, "vec_id", "embedding",
-          k = 5, nCentroids = 16, nProbe = 4)
-        Similarity.recallAtK(truth, approx, 5)
-      }),
-
-      // Mutual k-NN graph over a sampled vector set (the clustering
-      // input for embedding dedup: mutual edges + components = tight
-      // clusters). Sample side is contract-bounded like e1's queries;
-      // the corpus-scale candidate generation is the bucketed twin
-      // benchmarked as x2_knn_bucketed.
-      "e7_knn_graph" -> ((s, dir) =>
-        Similarity.knnGraph(
-          Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 0),
-          "vec_id", "embedding", k = 4)),
-
-      // Recall of the banded-LSH k-NN twin against the exact e7 graph,
-      // GATED (r6 verdict item 5 — the bucketed twin was bench-only
-      // with a spec-level recall check; this makes the recall numbers
-      // oracle-exact and the floor an in-plan assertion, the e5/q67
-      // discipline). Same contract-bounded sample as e7: recall
-      // MEASUREMENT needs the exact graph, which only exists on a
-      // sample at corpus scale. Single-table LSH on these near-uniform
-      // synthetic vectors keeps only ~1/2^planes of true neighbors
-      // (measured 0.095 at 4 planes — chance level, by construction of
-      // the fixture, not a bug), which is exactly why the corpus form
-      // is MULTI-TABLE (knnGraphBanded): 4 independent 3-plane tables
-      // union candidates. The one-row avg broadcast-joins back (t12's
-      // total pattern — no single-partition window); the floor catches
-      // recall collapse (broken slicing/union/dedup), not a tuning
-      // constant.
-      "e8_bucketed_recall" -> ((s, dir) => {
-        val sample = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 0)
-        val exact = Similarity.knnGraph(sample, "vec_id", "embedding", k = 4)
-        val approx = Similarity.knnGraphBanded(sample, "vec_id", "embedding",
-          k = 4, planesPerTable = 3, nTables = 4)
-        val rec = Similarity.recallAtK(
-          exact.select(col("src_id").as("query_id"),
-            col("dst_id").as("neighbor_id")),
-          approx.select(col("src_id").as("query_id"),
-            col("dst_id").as("neighbor_id")), 4)
-        val overall = rec.agg(avg(col("recall_at_4")).as("avg_recall"))
-        Checks.gated(rec.crossJoin(broadcast(overall)), "knn_recall_floor",
-          col("avg_recall") >= 0.3,
-          concat(lit("avg recall@4="), col("avg_recall")))
-          .select(col("query_id"), col("n_hits"), col("recall_at_4"))
-      }),
-
-      // ---- salted aggregation (skew path; must equal the plain agg) ----
-      "q22_salted_agg" -> ((s, dir) =>
-        Skew.saltedAgg(
-          Tables.events(s, dir).withColumn("val", Marts.dec2(col("value"))),
-          Seq("event_type"),
-          scala.collection.immutable.ListMap(
-            "n" -> Skew.AlgebraicAgg.countAll,
-            "total" -> Skew.AlgebraicAgg.sumOf(col("val")),
-            "first_us" -> Skew.AlgebraicAgg.minOf(unix_micros(col("ts"))),
-            "last_us" -> Skew.AlgebraicAgg.maxOf(unix_micros(col("ts")))),
-          saltBuckets = 8)
-          .select(col("event_type"), col("n").cast("bigint").as("n"),
-            col("total").cast("decimal(18,2)").cast("double").as("total"),
-            col("first_us"), col("last_us"))),
-
-      // ---- salted fact-dim join (the join-side skew path beside
-      // q22's agg salting: hot fact keys spread over saltBuckets
-      // reducers, dim rows replicate — cost model and the
-      // when-not-to-use-this note in Skew.saltedJoin's scaladoc).
-      // events.user_id is 150 distinct keys over 10k+ rows — every
-      // key is hot relative to the reducer count, the exact shape a
-      // plain shuffle join serializes on. Result must equal the
-      // plain join bit-for-bit, which is the oracle.
-      "q87_salted_join" -> ((s, dir) =>
-        Skew.saltedJoin(
-          Tables.events(s, dir)
-            .filter(col("user_id").isNotNull)
-            .select(col("user_id").cast("long").as("c_custkey"),
-              col("event_type"), Marts.dec2(col("value")).as("val")),
-          Tables.customer(s, dir)
-            .select(col("c_custkey").cast("long").as("c_custkey"),
-              col("c_mktsegment")),
-          "c_custkey", saltBuckets = 8)
-          .groupBy(col("c_mktsegment"), col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum(col("val")).cast("decimal(18,2)").cast("double").as("total"))),
-
-      // ---- bucketed as-of carry (q20's mega-key mitigation: the
-      // same two-pass bucket trick q53 applies to sessions — see
-      // Windows.asOfCarryBucketed). Semantics are bit-identical to
-      // q20, so it shares q20's oracle; AsofSoak holds the equality
-      // at 20M rows under a planted 10% hot user.
-      "q89_bucketed_asof" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-        Windows.asOfCarryBucketed(ev, Seq("user_id"),
-            unix_micros(col("ts")), col("event_id"),
-            when(col("event_type") === "signup", unix_micros(col("ts"))),
-            "last_signup_us", bucketUs = 6L * 3600 * 1000000)
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            coalesce(col("last_signup_us"), lit(-1L)).as("last_signup_us"))
-      }),
-
-      // ---- as-of AUTO-DISPATCH (q94): the sessionSummariesHybrid
-      // routing applied to the as-of family — users with ≥ 70 events
-      // ride the bucketed two-pass form (q89's), the tail the plain
-      // window (q20's), so neither the mega-key ceiling nor the
-      // sparse-key overhead needs a manual operator choice. 70 splits
-      // the fixture both ways at BOTH SFs (54/96 users at sf0.01,
-      // 526/974 at sf0.1 — measured); production default is 100k.
-      // Oracle: q20's — the union of routes is bit-identical.
-      "q94_asof_hybrid" -> ((s, dir) => {
-        val ev = Tables.events(s, dir)
-        Windows.asOfCarryHybrid(ev, Seq("user_id"),
-            unix_micros(col("ts")), col("event_id"),
-            when(col("event_type") === "signup", unix_micros(col("ts"))),
-            "last_signup_us", bucketUs = 6L * 3600 * 1000000,
-            hotThreshold = 70L)
-          .filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            coalesce(col("last_signup_us"), lit(-1L)).as("last_signup_us"))
-      }),
-
-      // ---- sort-free exact quantiles (distributed radix selection;
-      // operators/Quantiles.scala) — q26's answers by COUNTING, never
-      // sorting: each pass is a partial-aggregated bucket count whose
-      // shuffle is (groups × quantiles × fanout)-sized, and the
-      // interval narrows ×fanout per pass, so ⌈log_fanout(range)⌉
-      // scans replace either a per-group value buffer (q26's
-      // `percentile`, OOM at 100-TB group sizes) or a global sort.
-      // Values are ×100 fixed-point BIGINTs (the q64 discipline); the
-      // rank is the pinned type-1 order statistic r = (n−1)·φ + 1 in
-      // integer arithmetic, which the oracle reproduces as a
-      // ROW_NUMBER filter — no interpolation, no libm.
-      "q95_radix_quantiles" -> ((s, dir) => {
-        import graft.operators.Quantiles
-        val e = Tables.events(s, dir)
-          .filter(col("value").isNotNull)
-          .select(col("event_type"),
-            (dec2(col("value")) * 100).cast("long").as("xl"))
-        Quantiles.radixQuantiles(e, col("event_type"), col("xl"),
-            Seq(Quantiles.Quantile("p25", 25, 100),
-              Quantiles.Quantile("p50", 50, 100),
-              Quantiles.Quantile("p90", 90, 100)))
-          .select(col("grp").as("event_type"),
-            (col("p25") / 100.0).as("p25"),
-            (col("p50") / 100.0).as("p50"),
-            (col("p90") / 100.0).as("p90"))
-      }),
-
-      // ---- incremental quantile store (q96): the q91/q92 persisted-
-      // state discipline applied to order statistics. Counts are
-      // associative, so a per-(group, cell = x >> cellBits) count
-      // table builds once, FOLDS by pure append (corpus never
-      // rescanned, nothing rewritten), and serves EXACT quantiles:
-      // global ranks from the tiny store alone, rows touched only for
-      // the in-cell refinement (pushed-down range read, row-group
-      // skip) — q95's answers without q95's per-serve full scans. The
-      // serve cross-checks its in-cell row totals against the store's
-      // claims (loud on divergence). Gate: build on an event_id third,
-      // fold the other two thirds, serve over all events — shares
-      // q95's oracle; that equality IS the gate (the d26/e13 move).
-      "q96_quantile_store" -> ((s, dir) => {
-        import graft.operators.Quantiles
-        val e = quantileEvents(s, dir)
-        val tmp = PerJvm.tempDir("q96_qstore")
-        val store = s"$tmp/store"
-        Quantiles.buildQuantileStore(
-          e.filter(col("event_id") % 3 === 0), col("event_type"),
-          col("xl"), store, cellBits = 8)
-        Quantiles.foldQuantileStore(s, store,
-          e.filter(col("event_id") % 3 === 1), col("event_type"), col("xl"))
-        Quantiles.foldQuantileStore(s, store,
-          e.filter(col("event_id") % 3 === 2), col("event_type"), col("xl"))
-        // maintenance: collapse the build+fold delta files/rows into
-        // one summed file set — the serve below then PROVES the
-        // vacuumed store ranks identically (oracle-exact)
-        Quantiles.vacuumQuantileStore(s, store)
-        Quantiles.quantilesFromStore(s, store, e, col("event_type"),
-            col("xl"), Seq(Quantiles.Quantile("p25", 25, 100),
-              Quantiles.Quantile("p50", 50, 100),
-              Quantiles.Quantile("p90", 90, 100)))
-          .select(col("grp").as("event_type"),
-            (col("p25") / 100.0).as("p25"),
-            (col("p50") / 100.0).as("p50"),
-            (col("p90") / 100.0).as("p90"))
-      }),
-
-      // ---- many-groups exact quantiles (q100): q95's radix descent
-      // with the per-(group, quantile) interval/rank state IN THE
-      // PLAN (a joined DataFrame) instead of on the driver — the
-      // variant that removes q95's bounded-groups contract. ~15 k
-      // lineitem orders here; 10⁹ groups cost the same driver
-      // footprint (per-pass driver actions are one emptiness probe
-      // and a 2-value bounds fetch). Same pinned type-1 rank, same
-      // ROW_NUMBER oracle shape as q95; ×100 fixed-point cents via
-      // the q64 floor(x·s + 0.5) discipline.
-      "q100_manygroup_quantiles" -> ((s, dir) => {
-        import graft.operators.Quantiles
-        val li = Tables.lineitem(s, dir)
-          .select(col("l_orderkey"),
-            floor(col("l_extendedprice") * 100 + 0.5).cast("long").as("xl"))
-        // fanout 2^24 ≥ the value DOMAIN width (cents of a bounded
-        // price metric, ≤ ~10.5 M), so every per-group interval
-        // narrows to width 1 in ONE counting pass instead of two —
-        // one full descent chain (join+count+window+checkpoint)
-        // saved. Domain-derived, not fixture-derived: the cents
-        // domain is fixed by the schema, not the scale factor, and
-        // the count frame stays bounded by distinct (group, value)
-        // pairs at ANY fanout (only non-empty buckets ever
-        // materialize); the per-interval window stays ≤ the group's
-        // distinct values (≤ its row count, ~7 here). Results are
-        // fanout-invariant (QuantilesSpec pins fanout 2/7/4096
-        // identical; the oracle re-confirms).
-        Quantiles.radixQuantilesManyGroups(li, col("l_orderkey"),
-            col("xl"), Seq(Quantiles.Quantile("p50", 50, 100),
-              Quantiles.Quantile("p95", 95, 100)), fanout = 1 << 24)
-          .select(col("grp").cast("bigint").as("l_orderkey"),
-            (col("p50") / 100.0).as("p50"),
-            (col("p95") / 100.0).as("p95"))
-      }),
-
-      // ---- auto-dispatched exact quantiles (q101): the prose cost
-      // model of the three exact forms made EXECUTABLE
-      // (Quantiles.chooseQuantileForm) — one cheap stats pass routes
-      // each input to sort (small sortable spread groups), the
-      // driver-state descent (duplicate-heavy, few groups), or the
-      // in-plan descent (duplicate-heavy, ~2k groups). Three inputs,
-      // one per regime at this SF, all against ONE ROW_NUMBER oracle:
-      // the dispatch must be invisible in the results.
-      "q101_auto_quantiles" -> ((s, dir) => {
-        import graft.operators.Quantiles
-        val qs2 = Seq(Quantiles.Quantile("p50", 50, 100),
-          Quantiles.Quantile("p90", 90, 100))
-        // minSelectionRows = 0: at fixture SFs the default floor would
-        // (correctly) sort everything — zeroing it pins all three
-        // regime ENGINES under one oracle, which is what this gate buys
-        def shaped(df: DataFrame, src: String, g: Column): DataFrame =
-          Quantiles.exactQuantilesAuto(df, g, col("xl"), qs2,
-              minSelectionRows = 0L)
-            .select(lit(src).as("src"), col("grp"),
-              col("p50").cast("bigint").as("p50"),
-              col("p90").cast("bigint").as("p90"))
-        val ev = Tables.events(s, dir).filter(col("value").isNotNull)
-          .select(col("event_type"),
-            (dec2(col("value")) * 100).cast("long").as("xl"))
-        val evDup = ev.select(col("event_type"),
-          pmod(col("xl"), lit(100L)).as("xl"))
-        // a 1-in-7 part slice keeps the many-groups regime (>256
-        // groups from sf0.01 up) at a seventh of the descent's row
-        // volume — the gate buys regime coverage, not bench weight
-        val li = Tables.lineitem(s, dir)
-          .filter(col("l_partkey") % 7 === 0)
-          .select(col("l_partkey"),
-            (col("l_quantity").cast("long") % 5).as("xl"))
-        // the three regime chains are INDEPENDENT (distinct inputs,
-        // distinct state), but each one is a serial driver sequence
-        // (stats checkpoint, then descent passes / seed collect) —
-        // profiled at 24 strictly serial jobs across the three.
-        // Overlap them as concurrent jobs (guide §2.6, the Par.run
-        // fan-out idiom): each thunk builds its own frame, the union
-        // of the SAME three frames in the SAME order is returned, so
-        // results are bit-identical by construction.
-        val parts = new Array[DataFrame](3)
-        graft.operators.Par.run(Seq(
-          () => parts(0) = shaped(ev, "spread", col("event_type")),
-          () => parts(1) = shaped(evDup, "dup_few", col("event_type")),
-          () => parts(2) = shaped(li, "dup_many", col("l_partkey"))))
-        parts(0).unionByName(parts(1)).unionByName(parts(2))
-      }),
-
-      // ---- bucketed two-pass sessionization (mega-key skew path) ----
-      "q53_bucketed_sessions" -> ((s, dir) =>
-        Windows.sessionSummariesBucketed(
-          Tables.events(s, dir).filter(col("ts").isNotNull),
-          Seq("user_id"), "ts",
-          gapMicros = 30L * 60 * 1000000, bucketMicros = 6L * 3600 * 1000000)),
-
-      // ---- near-dup clusters via iterative connected components ----
-      "d8_components" -> ((s, dir) => {
-        val pairs = DedupSuite.minhashNearDupsPortable(corpusD5(s, dir),
-            "doc_id", "text", n = 3, k = 16, bands = 4, threshold = 0.5)
-          .select(col("id_a"), col("id_b"))
-        Dedup.connectedComponents(pairs)
-      }),
-
-      // Same input and oracle as d8, but localThreshold=0 FORCES the
-      // distributed label-propagation + pointer-jumping path — r3
-      // VERDICT item 2: the code that must be right at 100× scale was
-      // only ever spec-tested; now the driver gate exercises it too.
-      "d9_components_distributed" -> ((s, dir) => {
-        val pairs = DedupSuite.minhashNearDupsPortable(corpusD5(s, dir),
-            "doc_id", "text", n = 3, k = 16, bands = 4, threshold = 0.5)
-          .select(col("id_a"), col("id_b"))
-        Dedup.connectedComponents(pairs, localThreshold = 0L)
-      }),
-
-      // ---- incremental connected components (the ingest twin of
-      // d8/d9 — the last iterative family without one): a batch of
-      // new pairs maps through the EXISTING labels into a
-      // component-level edge list, CC runs on that tiny graph, and
-      // the mapping relabels the O(V) store — the old pair list is
-      // never re-derived or re-walked (Dedup.foldComponents). Batch
-      // pairs here are arithmetic bridges (doc, doc+3) over every 6th
-      // base doc, so they genuinely MERGE existing minhash clusters
-      // and introduce unseen nodes. Oracle: full recursive-closure CC
-      // over oldPairs ∪ batch — min-id labels make fold == recompute
-      // bit-exact, which is the gate.
-      "d22_incremental_components" -> ((s, dir) => {
-        val pairs = DedupSuite.minhashNearDupsPortable(corpusD5(s, dir),
-            "doc_id", "text", n = 3, k = 16, bands = 4, threshold = 0.5)
-          .select(col("id_a"), col("id_b"))
-        val labels = Dedup.connectedComponents(pairs)
-        val batch = Tables.documents(s, dir)
-          .filter(col("doc_id") < 200 && col("doc_id") % 6 === 0)
-          .select(col("doc_id").as("id_a"), (col("doc_id") + 3).as("id_b"))
-        Dedup.foldComponents(labels, batch)
-      }),
-
-      // Embedding-cluster dedup capstone: mutual k-NN graph (e7) →
-      // connected components → per-cluster membership stats. The
-      // mutual restriction is what makes components usable here — raw
-      // threshold pairs chain hub vectors into mega-clusters, while
-      // reciprocal top-k edges keep clusters tight. Every stage is the
-      // already-gated operator (knnGraph, connectedComponents); the
-      // oracle recomputes the whole chain incl. the transitive closure.
-      "d15_embedding_clusters" -> ((s, dir) => {
-        val sample = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 0)
-        val g = Similarity.knnGraph(sample, "vec_id", "embedding", k = 4)
-        val comp = Dedup.connectedComponents(
-          g.filter(col("mutual"))
-            .select(col("src_id").as("id_a"), col("dst_id").as("id_b")))
-        sample.select(col("vec_id"))
-          .join(comp.select(col("id").as("vec_id"), col("component")),
-            Seq("vec_id"), "left")
-          .select(col("vec_id"),
-            coalesce(col("component"), col("vec_id")).as("cluster"))
-          .groupBy(col("cluster"))
-          .agg(count(lit(1)).cast("bigint").as("n_members"),
-            max(col("vec_id")).as("max_member"))
-      }),
-
-      // ---- NULL-semantics suite (coalesce/nullif/null-safe compare) ----
-      "q54_null_semantics" -> ((s, dir) =>
-        Tables.events(s, dir).select(
-          col("event_id"),
-          coalesce(dec2(col("value")), lit(-1).cast("decimal(18,2)"))
-            .cast("double").as("v_or_neg1"),
-          nullif(col("event_type"), lit("view")).as("type_nonview"),
-          col("value").isNull.as("v_missing"),
-          // null-safe equality: NULL <=> NULL is TRUE, never NULL
-          (col("value") <=> lit(null).cast("double"))
-            .as("v_null_safe_eq_null"),
-          when(col("ts").isNull, "no").otherwise("yes").as("has_ts"))),
-
-      // ---- relative-rank windows (percent_rank / cume_dist) ----
-      "q52_relative_rank" -> ((s, dir) => {
-        val daily = Tables.events(s, dir)
-          .groupBy(to_date(col("ts")).as("metric_date"), col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n"))
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("n").asc, col("metric_date").asc)
-        daily.select(col("event_type"), col("metric_date"), col("n"),
-          percent_rank().over(w).as("pct_rank"),
-          cume_dist().over(w).as("cume"))
-      }),
-
-      // ---- positional explode (UNNEST WITH ORDINALITY parity) ----
-      "q51_token_positions" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .select(col("doc_id"), posexplode(tokens(col("text"))))
-          .filter(col("col") === "the")
-          .groupBy(col("doc_id"))
-          .agg(min(col("pos")).cast("int").as("first_the_pos"),
-            count(lit(1)).cast("bigint").as("n_the"))),
-
-      // ---- FILTER-clause aggregates (conditional agg without CASE) ----
-      "q49_filtered_agg" -> ((s, dir) => {
-        Sql.registerTables(s, dir)
-        s.sql(
-          """SELECT CAST(ts AS DATE) AS metric_date,
-            |       CAST(COUNT(*) AS BIGINT) AS n_all,
-            |       CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS n_purchase,
-            |       CAST(COUNT(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS n_error,
-            |       CAST(COUNT(DISTINCT user_id) FILTER (WHERE event_type = 'signup') AS BIGINT) AS n_signup_users
-            |FROM events WHERE ts IS NOT NULL
-            |GROUP BY 1""".stripMargin)
-      }),
-
-      // ---- outer-join shapes (left/full with null-side accounting) ----
-      "q50_outer_join" -> ((s, dir) => {
-        val custOrders = Tables.orders(s, dir)
-          .groupBy(col("o_custkey")).agg(count(lit(1)).cast("bigint").as("n_orders"))
-        Tables.customer(s, dir)
-          .join(custOrders, col("c_custkey") === col("o_custkey"), "full_outer")
-          .select(
-            coalesce(col("c_custkey"), lit(-1L)).as("custkey"),
-            when(col("c_custkey").isNull, "order_only")
-              .when(col("o_custkey").isNull, "customer_only")
-              .otherwise("matched").as("side"),
-            coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-      }),
-
-      // ---- multimodal resize + frame-sample plan (oracle-checked) ----
-      // fake media dims derive from the content hash (same generator as
-      // m1); the resize and frame-sample arithmetic is the real
-      // metadata plan a codec stage would execute
-      "m3_media_plan" -> ((s, dir) => {
-        import graft.functions.TextFunctions.hash32
-        Tables.documents(s, dir).select(
-            col("doc_id"),
-            (lit(1) + hash32(col("text")) % 1024).cast("int").as("w"),
-            (lit(1) + hash32(col("text"), 1) % 1024).cast("int").as("h"),
-            (lit(1) + hash32(col("text"), 2) % 240).cast("int").as("frames"))
-          .select(col("doc_id"), col("w"), col("h"), col("frames"),
-            Multimodal.resizeDims(col("w"), col("h"), 256).as("r"),
-            Multimodal.sampleFrameIndices(col("frames"), 8).as("idx"))
-          .select(col("doc_id"), col("w"), col("h"), col("frames"),
-            col("r.new_w").as("new_w"), col("r.new_h").as("new_h"),
-            // final-column convention: array outputs serialize to a CSV
-            // string — the driver's comparer sorts rows in pandas, and
-            // ndarray cells are unhashable/unsortable there (r2 gate)
-            array_join(col("idx"), ",").as("idx"))
-      }),
-
-      // ---- one-pass column profile (data-quality staple) ----
-      "q48_profile" -> ((s, dir) =>
-        Tables.events(s, dir).agg(
-          count(lit(1)).cast("bigint").as("n_rows"),
-          count(col("value")).cast("bigint").as("value_nonnull"),
-          count(col("ts")).cast("bigint").as("ts_nonnull"),
-          countDistinct(col("event_type")).cast("bigint").as("type_card"),
-          countDistinct(col("user_id")).cast("bigint").as("user_card"),
-          min(col("event_id")).cast("bigint").as("min_id"),
-          max(col("event_id")).cast("bigint").as("max_id"),
-          min(col("value")).as("min_value"),
-          max(col("value")).as("max_value"))),
-
-      // ---- document length histogram (500-char buckets) ----
-      "t6_len_histogram" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .groupBy(floor(length(col("text")) / 500).cast("int").as("bucket"))
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            min(length(col("text"))).cast("int").as("min_len"),
-            max(length(col("text"))).cast("int").as("max_len"))),
-
-      // ---- typed Aggregator UDAF (the §2.J extension point) ----
-      "q46_typed_udaf" -> ((s, dir) => {
-        import s.implicits._
-        val prof = Tables.events(s, dir)
-          .filter(col("value").isNotNull)
-          .select(col("event_type"), col("value")).as[(String, Double)]
-          .groupByKey(_._1)
-          .agg(new TypedAggs.ProfileAgg[(String, Double)](_._2)
-            .toColumn.name("p"))
-          .toDF("event_type", "p")
-        prof.select(col("event_type"),
-          col("p.n").cast("bigint").as("n"),
-          col("p.sum").cast("decimal(18,2)").cast("double").as("total"),
-          col("p.min").as("min_v"), col("p.max").as("max_v"))
-      }),
-
-      // ---- correlated subquery (Catalyst decorrelation) ----
-      "q47_correlated" -> ((s, dir) => {
-        Sql.registerTables(s, dir)
-        s.sql(
-          """SELECT c1.c_nationkey AS nationkey,
-            |       CAST(COUNT(*) AS BIGINT) AS n_above_avg
-            |FROM customer c1
-            |WHERE c1.c_acctbal > (SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-            |                             / CAST(COUNT(*) AS DOUBLE)
-            |                      FROM customer c2
-            |                      WHERE c2.c_nationkey = c1.c_nationkey)
-            |GROUP BY c1.c_nationkey""".stripMargin)
-      }),
-
-      // ---- array-function suite (int arrays: engine-portable output) ----
-      "q44_array_ops" -> ((s, dir) =>
-        Tables.embeddings(s, dir)
-          .select(col("vec_id"),
-            sequence(lit(1), (col("vec_id") % 5 + 2).cast("int")).as("base"))
-          .select(col("vec_id"), col("base"),
-            transform(col("base"), x => x * ((col("vec_id") % 3 + 1))).as("arr"))
-          .select(col("vec_id"),
-            // arrays computed natively; serialized to CSV strings at the
-            // output boundary (driver comparer can't sort ndarray cells)
-            array_join(sort_array(col("arr"), asc = false), ",").as("sorted_desc"),
-            array_join(slice(col("arr"), 2, 2), ",").as("mid2"),
-            array_position(col("arr"), col("vec_id") % 3 + 1).cast("int").as("pos_first"),
-            array_contains(col("arr"), lit(2L)).as("has_two"),
-            array_join(col("arr"), ",").as("joined"),
-            array_join(array_sort(array_distinct(concat(col("base"), col("base")))), ",").as("dedup"),
-            array_join(flatten(array(col("base"), col("arr"))), ",").as("flat"))),
-
-      // ---- JSON-function suite (deterministic doc built by concat) ----
-      "q45_json_ops" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .select(col("event_id"),
-            concat(lit("{\"id\":"), col("event_id"),
-              lit(",\"tags\":[\""), col("event_type"), lit("\",\"x\"]"),
-              lit(",\"meta\":{\"k\":"),
-              coalesce(get_json_object(col("props"), "$.k"), lit("0")),
-              lit("}}")).as("j"))
-          .select(col("event_id"),
-            get_json_object(col("j"), "$.id").cast("bigint").as("id_back"),
-            get_json_object(col("j"), "$.tags[0]").as("tag0"),
-            json_array_length(get_json_object(col("j"), "$.tags"))
-              .cast("int").as("n_tags"),
-            get_json_object(col("j"), "$.meta.k").cast("bigint").as("k_meta"),
-            array_join(array_sort(json_object_keys(col("j"))), ",").as("keys_sorted"))),
-
-      // ---- string-function suite (C9-family breadth) ----
-      "q42_string_ops" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"),
-          upper(substring(col("text"), 1, 20)).as("head_upper"),
-          lpad(col("doc_id").cast("string"), 8, "0").as("id_pad"),
-          reverse(lower(substring(col("text"), 1, 10))).as("head_rev"),
-          translate(lower(substring(col("text"), 1, 30)), "aeiou", "01234").as("head_tr"),
-          regexp_extract(coalesce(col("source"), lit("")),
-            "//([^/]+)", 1).as("host"),
-          length(regexp_replace(col("text"), "[^0-9]", "")).cast("int").as("n_digits"),
-          instr(lower(col("text")), "the").cast("int").as("first_the"),
-          split_part(coalesce(col("source"), lit("-")), lit("/"), lit(-1)).as("last_seg"))),
-
-      // ---- date/time-function suite ----
-      "q43_date_ops" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .filter(col("ts").isNotNull)
-          .select(to_date(col("ts")).as("d")).distinct()
-          .select(col("d"),
-            date_add(col("d"), 7).as("plus7"),
-            date_sub(col("d"), 1).as("minus1"),
-            datediff(col("d"), lit(java.sql.Date.valueOf("2000-01-01")))
-              .cast("int").as("since_y2k"),
-            last_day(col("d")).as("month_end"),
-            (dayofweek(col("d")) - 1).cast("int").as("dow_sun0"),
-            weekofyear(col("d")).cast("int").as("iso_week"),
-            quarter(col("d")).cast("int").as("qtr"),
-            dayofyear(col("d")).cast("int").as("doy"),
-            date_trunc("week", col("d")).cast("date").as("week_start"))),
-
-      // ---- exact algebraic moments (mean/stddev from integer sums) ----
-      // variance from EXACT integer moments (value scaled ×100): the
-      // three sums (n, Σx, Σx²) are the canonical mergeable "moment
-      // sketch" — partials combine associatively at any scale, and the
-      // single double conversion at the end is correctly rounded in
-      // both engines, so even stddev hash-matches the oracle
-      "q41_exact_stats" -> ((s, dir) => {
-        val xi = (dec2(col("value")) * 100).cast("decimal(38,0)")
-        Tables.events(s, dir)
-          .filter(col("value").isNotNull)
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n"),
-            sum(xi).cast("decimal(38,0)").as("sx"),
-            sum((xi * xi).cast("decimal(38,0)")).cast("decimal(38,0)").as("sx2"))
-          .select(col("event_type"), col("n"),
-            (col("sx").cast("double") / col("n").cast("double") / lit(100.0))
-              .as("mean"),
-            sqrt(
-              (col("n").cast("decimal(38,0)") * col("sx2") - col("sx") * col("sx"))
-                .cast("decimal(38,0)").cast("double")
-                / (col("n") * (col("n") - 1)).cast("double") / lit(10000.0))
-              .as("stddev"))
-      }),
-
-      // ---- bigram frequency (n-gram counting over shingles) ----
-      // shingles() let-binds its token array internally: an inline
-      // tokens(text) tree re-ran the regex split O(tokens²) times here
-      // (measured 4.2 s → 0.7 s at sf0.1)
-      "t5_bigrams" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .select(explode(DedupSuite.shingles(col("text"), 2)).as("bigram"))
-          .groupBy(col("bigram"))
-          .agg(count(lit(1)).cast("bigint").as("n"))
-          .orderBy(col("n").desc, col("bigram").asc)
-          .limit(20)),
-
-      // ---- window-function suite (lag/lead/dense_rank/ntile/first_value) ----
-      "q39_window_suite" -> ((s, dir) => {
-        val daily = Tables.events(s, dir)
-          .groupBy(to_date(col("ts")).as("metric_date"), col("event_type"))
-          .agg(count(lit(1)).cast("bigint").as("n"))
-        val wOrd = Window.partitionBy(col("event_type"))
-          .orderBy(col("metric_date").asc)
-        val wRank = Window.partitionBy(col("event_type"))
-          .orderBy(col("n").desc, col("metric_date").asc)
-        // both windows share one partitioning (event_type): a single
-        // shuffle; Spark evaluates the two sort orders in two in-memory
-        // window stages over the same exchange
-        daily.select(
-          col("event_type"), col("metric_date"), col("n"),
-          coalesce(lag(col("n"), 1).over(wOrd), lit(-1L)).as("prev_n"),
-          coalesce(lead(col("n"), 1).over(wOrd), lit(-1L)).as("next_n"),
-          dense_rank().over(wRank).cast("int").as("rk"),
-          ntile(4).over(wRank).cast("int").as("quartile"),
-          first(col("n")).over(wOrd).as("first_n"))
-      }),
-
-      // ---- grouping sets with grouping() disambiguation ----
-      "q40_grouping_sets" -> ((s, dir) => {
-        val base = Tables.events(s, dir)
-          .withColumn("metric_month", date_trunc("month", col("ts")).cast("date"))
-        base.groupingSets(
-            Seq(Seq(col("event_type")), Seq(col("metric_month")), Seq.empty),
-            col("event_type"), col("metric_month"))
-          .agg(grouping(col("event_type")).cast("int").as("g_type"),
-            grouping(col("metric_month")).cast("int").as("g_month"),
-            count(lit(1)).cast("bigint").as("n"),
-            sum(dec2(col("value"))).cast("decimal(18,2)").cast("double").as("total"))
-          .select(
-            coalesce(col("event_type"), lit("(all)")).as("event_type"),
-            coalesce(col("metric_month"),
-              lit(java.sql.Date.valueOf("1970-01-01"))).as("metric_month"),
-            col("g_type"), col("g_month"), col("n"), col("total"))
-      }),
-
-      // ---- per-label embedding norm statistics ----
-      "e4_vector_stats" -> ((s, dir) => {
-        val withNorm = Tables.embeddings(s, dir)
-          .select(col("label"), col("embedding"),
-            sqrt(Similarity.dot(col("embedding"), col("embedding"))).as("norm"))
-        withNorm.groupBy(col("label"))
-          .agg(count(lit(1)).cast("bigint").as("n_vecs"),
-            max(size(col("embedding"))).cast("int").as("dim"),
-            min(col("norm")).as("min_norm"),
-            max(col("norm")).as("max_norm"),
-            // exact decimal sum, then DOUBLE division — rounding the
-            // quotient to decimal diverges cross-engine on exact halves
-            (sum(col("norm").cast("decimal(20,8)")).cast("double")
-              / count(lit(1)).cast("double")).as("avg_norm"))
-      }),
-
-      // ---- embedding-cosine near-dup dedup (fifth dedup mode) ----
-      "d6_embedding_dedup" -> ((s, dir) => {
-        val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-        val planted = emb.unionByName(emb.filter(col("vec_id") % 10 === 0)
-          .select(cloneId(col("vec_id")).as("vec_id"), col("embedding")))
-        Similarity.lshDedup(planted, "vec_id", "embedding",
-          nPlanes = 8, threshold = 0.99)
-      }),
-
-      // ---- binary-column feature extraction (multimodal plumbing) ----
-      // the "decode" is a deterministic stand-in (no image/audio libs in
-      // this container) but the binary column, byte-level features, and
-      // fingerprint are real — see operators.Multimodal for batch shape
-      "m2_binary_features" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-          .select(col("doc_id"),
-            length(col("bin")).cast("int").as("byte_len"),
-            graft.functions.ColUtil.bindOnce(hex(col("bin"))) { h =>
-              struct(
-                substring(h, 1, 16).as("head_hex"),
-                call_function("right", h, lit(16)).as("tail_hex"),
-                md5(h).as("hex_md5"))
-            }.as("f"))
-          .select(col("doc_id"), col("byte_len"),
-            col("f.head_hex").as("head_hex"),
-            col("f.tail_hex").as("tail_hex"),
-            col("f.hex_md5").as("hex_md5"),
-            (col("byte_len") % 3 + 1).cast("int").as("fake_channels"))),
-
-      // ---- end-to-end corpus prep: quality -> langid -> dedup -> split ----
-      // the full training-set construction pass as ONE declarative plan:
-      // every stage pipelines inside the same job, no intermediate
-      // materialization
-      "c2_corpus_prep" -> ((s, dir) => {
-        val docs = corpusExact(s, dir)
-        val scored = docs.select(col("doc_id"), col("text"),
-          graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-            struct(size(toks).cast("long").as("ntok"),
-              qualityScoreFromTokens(toks).as("q"),
-              langId(toks).as("lang"))
-          }.as("s"))
-          .select(col("doc_id"), col("text"), col("s.ntok").as("ntok"),
-            col("s.q").as("q"), col("s.lang").as("lang"))
-        val kept = scored.filter(col("q") >= 0.2 && col("lang") === "en")
-        val w = Window.partitionBy(col("content_hash"))
-          .orderBy(col("doc_id").asc)
-        val canon = kept.withColumn("content_hash", md5(col("text")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-        canon
-          .withColumn("split",
-            when(hash32(col("doc_id").cast("string"), 2) % 10 < 9, "train")
-              .otherwise("holdout"))
-          // quality is now a double: quantize by FLOOR (no rounding
-          // ambiguity) to an exact integer before summing, so the
-          // aggregate stays partition-order independent
-          .withColumn("qs", floor(col("q") * 100000000L).cast("long"))
-          .groupBy(col("split"))
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum(col("ntok")).cast("bigint").as("n_tokens"),
-            (sum(col("qs")).cast("double") / count(lit(1)).cast("double")
-              / lit(100000000.0)).as("avg_quality"))
-      }),
-
-      // Full curation funnel capstone: score -> filter (quality, lang,
-      // repetition) -> exact dedup -> domain cap -> per-domain
-      // accounting of what actually ships in the training set. One
-      // linear pipeline over a scan with planted dups (source column
-      // carried for domain attribution).
-      // Scale: the repetition signal is a doc-keyed explode/agg/join
-      // (uniform key, partial-aggregable); BOTH row_number windows keep
-      // only rn=1 / rn<=50 with no other window aggregate, so Spark
-      // pushes a partial WindowGroupLimit below each exchange — mapper
-      // output is capped pre-shuffle and a mega-duplicate content hash
-      // or mega-domain cannot straggle (the q66/d7 discipline; contrast
-      // c1, which pays the full window because it also needs n_copies).
-      "c3_training_corpus" -> ((s, dir) => {
-        val d0 = Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"), col("source"))
-        val docs = d0.unionByName(d0.filter(col("doc_id") % 5 === 0)
-          .select(cloneId(col("doc_id")).as("doc_id"), col("text"),
-            col("source")))
-        val scored = docs.select(col("doc_id"), col("text"), col("source"),
-          graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-            struct(size(toks).cast("long").as("ntok"),
-              qualityScoreFromTokens(toks).as("q"),
-              langId(toks).as("lang"))
-          }.as("s"))
-          .select(col("doc_id"), col("text"), col("source"),
-            col("s.ntok").as("ntok"), col("s.q").as("q"),
-            col("s.lang").as("lang"))
-        // t7's top-token fraction; zero-token docs drop at the inner
-        // join, which is the same fate the quality filter deals them
-        val rep = docs.select(col("doc_id"),
-          explode(tokens(col("text"))).as("tok"))
-          .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
-          .groupBy(col("doc_id"))
-          .agg((max(col("c")).cast("double") /
-            sum(col("c")).cast("double")).as("top_frac"))
-        val kept = scored.join(rep, "doc_id")
-          .filter(col("lang") === "en" && col("q") >= 0.2 &&
-            col("top_frac") <= 0.3)
-        val wDedup = Window.partitionBy(md5(col("text")))
-          .orderBy(col("doc_id").asc)
-        val wCap = Window.partitionBy(col("domain"))
-          .orderBy(hash32(col("doc_id").cast("string"), 7).asc,
-            col("doc_id").asc)
-        kept.withColumn("rn", row_number().over(wDedup))
-          .filter(col("rn") === 1)
-          .withColumn("domain", Enrich.domainOf(col("source")))
-          .withColumn("rn2", row_number().over(wCap))
-          .filter(col("rn2") <= 50)
-          .groupBy(col("domain"))
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum(col("ntok")).cast("bigint").as("n_tokens"),
-            (sum(floor(col("q") * 100000000L).cast("long")).cast("double") /
-              count(lit(1)).cast("double") / 100000000.0).as("avg_quality"),
-            min(col("doc_id")).as("min_doc"))
-      }),
-
-      // ---- CCNet-style cross-document boilerplate line removal (c4;
-      // operators/Boilerplate.scala): a line appearing in ≥10 DISTINCT
-      // docs is cut from EVERY doc (the corpusPara fixture plants
-      // cookie-banner/subscribe-footer lines in 1/4 and 1/3 of docs;
-      // organic body lines recur only via whole-doc clones, 2 < 10).
-      // Distinct from d11: paragraph dedup KEEPS first occurrence;
-      // boilerplate is removed everywhere. Broadcast dictionary — one
-      // corpus shuffle on the line key, one on doc_id to reassemble.
-      "c4_boilerplate_lines" -> ((s, dir) =>
-        Boilerplate.removeCommonLines(corpusPara(s, dir), "doc_id", "text",
-          minDocs = 10)),
-
-      // ---- incremental boilerplate ingest (c5): the first ingest
-      // family whose predicate is RETROACTIVE — a line crossing the
-      // threshold in a later batch invalidates earlier cleaned
-      // output. The store answers with a changelog: each fold emits
-      // its batch cleaned under the updated dictionary PLUS
-      // re-emissions of the stored docs the crossing invalidated
-      // (read back id-pruned from the doc store), and latest-emission
-      // -per-doc across build+folds equals the full c4-style
-      // recompute BIT-EXACT — that equality is this gate. The
-      // fixture plants a ticker line on every 20th doc with
-      // minDocs = nDocs/25, so the crossing lands mid-fold-1 at
-      // EVERY sf (both scale linearly) and the build's ticker docs
-      // must be re-emitted. Pair store holds only sub-threshold
-      // lines (< minDocs rows per line — crossed lines never rejoin
-      // the candidate path), so fold reads are batch-bounded, never
-      // corpus-sized. The store is vacuumed AND compacted between
-      // folds; the gate proves maintenance preserves exactness.
-      "c5_boilerplate_ingest" -> ((s, dir) => {
-        val all = corpusTicker(s, dir)
-        val base = Tables.documents(s, dir)
-        // one agg job for both gate parameters, not two
-        val baseStats = base.agg(count(lit(1)).cast("long"),
-          max(col("doc_id")).cast("long")).head()
-        val m = baseStats.getLong(0) / 25
-        val maxBase = baseStats.getLong(1)
-        val (cut1, cut2) = (maxBase / 2, maxBase * 9 / 10)
-        val tmp = PerJvm.tempDir("c5_boiler")
-        val store = s"$tmp/state"
-        // 16 buckets: fixture-scale (the default 64 is a corpus-scale
-        // layout; maintenance cost is per-partition jobs)
-        // phase descriptions: `QueryProfile c5_boilerplate_ingest`
-        // attributes per-job cost to build / fold / maintenance
-        // (thread-local, queries here run sequentially)
-        def desc[A](d: String)(body: => A): A = {
-          val prev = s.sparkContext.getLocalProperty("spark.job.description")
-          s.sparkContext.setJobDescription(s"c5: $d")
-          try body finally s.sparkContext.setJobDescription(prev)
-        }
-        val e0 = desc("build") { Boilerplate.buildStore(
-          all.filter(col("doc_id") <= cut1), "doc_id", "text", m, store,
-          nBuckets = 16, nDocBuckets = 16) }
-        val e1 = desc("fold1") { Boilerplate.fold(s, store,
-          all.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
-          "doc_id", "text", m, nBuckets = 16, nDocBuckets = 16) }
-        // maintenance mid-gate: vacuum (drop the fold-1 crossing's
-        // dead rows, collapse count deltas) + compact — fold 2 then
-        // runs over the vacuumed+compacted store, so this oracle
-        // proves maintenance preserves exactness
-        desc("vacuum") { Boilerplate.vacuumStore(s, store) }
-        // independent sub-stores compact concurrently (the vacuum just
-        // left pairs/counts at one file per partition, so those two
-        // are listing-only)
-        desc("compact") { graft.operators.Par.run(Seq(
-          () => { StoreCompaction.compactStoreFused(s, s"$store/pairs",
-            "bucket"); () },
-          () => { StoreCompaction.compactStoreFused(s, s"$store/counts",
-            "bucket"); () },
-          () => { StoreCompaction.compactStoreFused(s, s"$store/docs",
-            "dbucket"); () })) }
-        val e2 = desc("fold2") { Boilerplate.fold(s, store,
-          all.filter(col("doc_id") > cut2), "doc_id", "text", m,
-          nBuckets = 16, nDocBuckets = 16) }
-        val w = Window.partitionBy(col("doc_id")).orderBy(col("seq").desc)
-        e0.withColumn("seq", lit(0))
-          .unionByName(e1.withColumn("seq", lit(1)))
-          .unionByName(e2.withColumn("seq", lit(2)))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("doc_id"), col("clean_text"), col("n_removed"))
-      }),
-
-      // ---- composite corpus cleaning (quality -> langid -> exact dedup) ----
-      "c1_clean_corpus" -> ((s, dir) => {
-        val docs = corpusExact(s, dir) // includes planted exact dups
-        // let-bind the token array: quality + langid share one tokenizer
-        // run even after filter pushdown substitutes the projection
-        val scored = docs.select(col("doc_id"), col("text"),
-          graft.functions.ColUtil.bindOnce(tokens(col("text"))) { toks =>
-            struct(qualityScoreFromTokens(toks).as("quality"),
-              langId(toks).as("lang_pred"))
-          }.as("s"))
-          .select(col("doc_id"), col("text"),
-            col("s.quality").as("quality"), col("s.lang_pred").as("lang_pred"))
-        val kept = scored
-          .filter(col("quality") >= 0.2 && col("lang_pred") === "en")
-        // single-pass dedup: rank + count over one content_hash window
-        // instead of groupBy + join-back — the join form evaluates the
-        // whole tokenizer/score subtree TWICE (no common-subplan reuse
-        // across join branches), measured 1.26 s vs 0.6 s at sf0.1
-        val w = Window.partitionBy(col("content_hash"))
-        kept.withColumn("content_hash", md5(col("text")))
-          .withColumn("rn", row_number().over(w.orderBy(col("doc_id").asc)))
-          .withColumn("n_copies", count(lit(1)).over(w).cast("bigint"))
-          .filter(col("rn") === 1)
-          .select(col("doc_id"), col("content_hash"), col("n_copies"),
-            col("quality").cast("double").as("quality"))
-      }),
-
-      // ---- multimodal (binary column plumbing; see operators.Multimodal) ----
-      "m1_media_features" -> ((s, dir) =>
-        Tables.documents(s, dir).select(
-          col("doc_id"),
-          length(encode(col("text"), "UTF-8")).cast("int").as("byte_len"),
-          md5(col("text")).as("content_md5"),
-          (lit(1) + hash32(col("text")) % 1024).cast("int").as("fake_width"),
-          (lit(1) + hash32(col("text"), 1) % 30).cast("int").as("fake_frames"))),
-
-      // ---- REAL codec through the Decoder boundary, oracle-gated ----
-      // m1-m3 gate the binary *plumbing* with a stub codec; m4 gates an
-      // actual byte-stream parser: each doc gets a RIFF/WAVE PCM blob
-      // synthesized from doc_id alone (Multimodal.synthWavPcm), decoded
-      // by WavPcmDecoder (chunk walk + little-endian sample decode —
-      // it sees only the bytes), and the oracle recomputes every output
-      // in closed form from doc_id. A header-offset or sample-sign bug
-      // anywhere in the codec breaks the hash. All features are exact
-      // (power-of-two denominators, even frame counts), so the float
-      // compare is bit-for-bit, no tolerance. Scale shape: synth+decode
-      // run in one mapPartitions pass — the archetypal CPU-bound
-      // embarrassingly-parallel decode stage; nothing shuffles.
-      "m4_wav_features" -> ((s, dir) => {
-        import s.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            val bytes = Multimodal.synthWavPcm(id)
-            val (sr, ch, nf, feat) =
-              Multimodal.WavPcmDecoder.decode("audio", bytes)
-            (id, bytes.length, sr, ch, nf, feat(0).toDouble,
-              feat(1).toDouble, feat(2).toDouble, feat(3).toDouble,
-              feat(5).toDouble)
-          })
-          .toDF("doc_id", "byte_len", "sr", "channels", "n_frames",
-            "rms", "peak", "zcr", "dc", "q2_rms")
-          .select(col("doc_id"), col("byte_len").cast("int").as("byte_len"),
-            col("sr").cast("int").as("sr"),
-            col("channels").cast("int").as("channels"),
-            col("n_frames").cast("int").as("n_frames"),
-            col("rms"), col("peak"), col("zcr"), col("dc"), col("q2_rms"))
-      }),
-
-      // ---- second real codec: variable-offset BMP (m5) ----
-      // m4's WAV prelude is fixed-44-byte; BMP's pixel data sits at a
-      // VARIABLE offset (DIB header 40/108/124 + junk gap, bfOffBits
-      // honored, 4-byte row stride padding, bottom-up vs top-down
-      // rows) — the codec-boundary generality the r10 verdict asked
-      // for. Every blob is synthesized from doc_id alone
-      // (Multimodal.synthBmp) and decoded by BmpDecoder, which sees
-      // only the bytes; the oracle recomputes width/height/byte_len
-      // and every feature in closed form (range() folds over the
-      // per-row color recurrence), so any header-offset, stride, or
-      // orientation bug breaks the hash. Same mapPartitions shape as
-      // m4: embarrassingly parallel, nothing shuffles.
-      "m5_bmp_features" -> ((s, dir) => {
-        import s.implicits._
-        Tables.documents(s, dir).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            val bytes = Multimodal.synthBmp(id)
-            val (w, h, _, feat) =
-              Multimodal.BmpDecoder.decode("image", bytes)
-            (id, bytes.length, w, h, feat(0).toDouble, feat(1).toDouble,
-              feat(2).toDouble, feat(3).toDouble, feat(4).toDouble,
-              feat(5).toDouble, feat(6).toDouble, feat(7).toDouble)
-          })
-          .toDF("doc_id", "byte_len", "width", "height", "mean_r", "mean_g",
-            "mean_b", "luma", "top_luma", "bot_luma", "max_c", "min_c")
-          .select(col("doc_id"), col("byte_len").cast("int").as("byte_len"),
-            col("width").cast("int").as("width"),
-            col("height").cast("int").as("height"),
-            col("mean_r"), col("mean_g"), col("mean_b"), col("luma"),
-            col("top_luma"), col("bot_luma"), col("max_c"), col("min_c"))
-      }),
-
-      // ---- map-typed column suite (map build/lookup/filter/fold) ----
-      "q55_map_ops" -> ((s, dir) => {
-        val daily = Tables.events(s, dir).filter(col("ts").isNotNull)
-          .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-        daily.groupBy(col("d"))
-          .agg(map_from_entries(
-            array_sort(collect_list(struct(col("event_type"), col("n")))))
-            .as("m"))
-          .select(col("d"),
-            size(col("m")).cast("int").as("n_types"),
-            array_join(array_sort(map_keys(col("m"))), ",").as("types_csv"),
-            coalesce(try_element_at(col("m"), lit("purchase")), lit(0L))
-              .cast("bigint").as("n_purchase"),
-            array_join(array_sort(map_keys(
-              map_filter(col("m"), (_, v) => v >= 50))), ",").as("hot_types"),
-            aggregate(map_values(col("m")), lit(0L), (a, b) => a + b)
-              .cast("bigint").as("n_total"))
-      }),
-
-      // ---- unpivot / melt (wide->long; Dataset.unpivot) ----
-      "q56_unpivot" -> ((s, dir) => {
-        val wide = Tables.events(s, dir).filter(col("ts").isNotNull)
-          .groupBy(to_date(col("ts")).as("d"))
-          .agg(
-            count(when(col("event_type") === "view", 1)).as("view"),
-            count(when(col("event_type") === "click", 1)).as("click"),
-            count(when(col("event_type") === "purchase", 1)).as("purchase"))
-        wide.unpivot(Array(col("d")),
-            Array(col("view"), col("click"), col("purchase")), "metric", "n")
-          .select(col("d"), col("metric"), col("n").cast("bigint").as("n"))
-      }),
-
-      // ---- lateral join (correlated top-n subquery per outer row) ----
-      "q57_lateral_topn" -> ((s, dir) => {
-        Sql.registerTables(s, dir)
-        s.sql(
-          """SELECT n.n_nationkey AS nationkey, t.custkey, t.bal
-            |FROM nation n JOIN LATERAL (
-            |  SELECT c_custkey AS custkey,
-            |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
-            |  FROM customer
-            |  WHERE c_nationkey = n.n_nationkey
-            |  ORDER BY CAST(c_acctbal AS DECIMAL(18,2)) DESC, c_custkey ASC
-            |  LIMIT 2) t""".stripMargin)
-      }),
-
-      // ---- regression/correlation stats from EXACT integer moments ----
-      // (built-in corr/regr_* fold doubles in partition order — not
-      // reproducible across engines; exact decimal sums then one final
-      // double formula are, same recipe as q41)
-      "q58_regr_stats" -> ((s, dir) => {
-        val e = Tables.events(s, dir).filter(col("value").isNotNull)
-          .select(col("event_type"),
-            (dec2(col("value")) * 100).cast("long").as("x"),
-            (col("event_id") % 97).as("y"))
-        val m = e.groupBy(col("event_type")).agg(
-          count(lit(1)).cast("decimal(38,0)").as("n"),
-          sum(col("x").cast("decimal(38,0)")).as("sx"),
-          sum(col("y").cast("decimal(38,0)")).as("sy"),
-          sum((col("x") * col("y")).cast("decimal(38,0)")).as("sxy"),
-          sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"),
-          sum((col("y") * col("y")).cast("decimal(38,0)")).as("syy"))
-        val (nD, sxD, syD, sxyD, sxxD, syyD) =
-          (col("n").cast("double"), col("sx").cast("double"),
-            col("sy").cast("double"), col("sxy").cast("double"),
-            col("sxx").cast("double"), col("syy").cast("double"))
-        val num = nD * sxyD - sxD * syD
-        val slope = num / (nD * sxxD - sxD * sxD)
-        val corr = num / (sqrt(nD * sxxD - sxD * sxD) * sqrt(nD * syyD - syD * syD))
-        m.select(col("event_type"), col("n").cast("bigint").as("n"),
-          slope.as("slope"),
-          (syD / nD - slope * (sxD / nD)).as("intercept"),
-          corr.as("corr"), (corr * corr).as("r2"))
-      }),
-
-      // ---- bitwise aggregates + scalar bit ops ----
-      "q59_bitwise_agg" -> ((s, dir) =>
-        Tables.events(s, dir)
-          .select(col("event_type"), col("event_id"),
-            col("event_id").bitwiseAND(255).as("lo"),
-            shiftright(col("event_id"), 4).as("hi"),
-            col("event_id").bitwiseXOR(col("user_id")).as("x"))
-          .groupBy(col("event_type"))
-          .agg(expr("bit_and(event_id)").as("band"),
-            expr("bit_or(lo)").as("bor"),
-            expr("bit_xor(x)").as("bxor"),
-            max(col("hi")).cast("bigint").as("hi_max"))),
-
-      // ---- higher-order function suite (exists/forall/aggregate/zip_with) ----
-      "q60_hof_suite" -> ((s, dir) =>
-        Tables.embeddings(s, dir)
-          .select(col("vec_id"),
-            sequence(lit(1L), col("vec_id") % 7 + 3).as("base"))
-          .select(col("vec_id"),
-            exists(col("base"), x => x * x > 20).as("any_big"),
-            forall(col("base"), x => x <= 8).as("all_small"),
-            aggregate(col("base"), lit(0L), (a, b) => a + b)
-              .cast("bigint").as("total"),
-            aggregate(zip_with(col("base"), reverse(col("base")), (a, b) => a * b),
-              lit(0L), (a, b) => a + b).cast("bigint").as("dot_rev"),
-            size(filter(col("base"), x => x % 3 === 0)).cast("int").as("n_div3"))),
-
-      // ---- RANGE-frame window (7-day rolling totals; value-based frame) ----
-      "q61_range_frame" -> ((s, dir) => {
-        val daily = Tables.events(s, dir).filter(col("ts").isNotNull)
-          .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-          .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("total"))
-          .withColumn("day_n",
-            datediff(col("d"), lit(java.sql.Date.valueOf("2000-01-01"))))
-        val w = Window.partitionBy(col("event_type"))
-          .orderBy(col("day_n")).rangeBetween(-6, 0)
-        daily.select(col("event_type"), col("d"),
-          sum(col("n")).over(w).cast("bigint").as("roll7_n"),
-          sum(col("total")).over(w).cast("decimal(18,2)").cast("double")
-            .as("roll7_total"))
-      }),
-
-      // ---- regexp_extract_all + array reductions over the matches ----
-      "q62_regex_extract_all" -> ((s, dir) =>
-        Tables.documents(s, dir)
-          .select(col("doc_id"),
-            expr("regexp_extract_all(text, '[0-9]+', 0)").as("nums"),
-            expr("regexp_extract_all(text, '[A-Z][a-z]+', 0)").as("caps"))
-          .select(col("doc_id"),
-            size(col("nums")).cast("int").as("n_nums"),
-            size(array_distinct(col("nums"))).cast("int").as("n_uniq_nums"),
-            coalesce(try_element_at(col("nums"), lit(1)), lit("")).as("first_num"),
-            size(col("caps")).cast("int").as("n_caps"),
-            coalesce(aggregate(col("caps"), lit(0),
-              (a, c) => greatest(a, length(c))), lit(0))
-              .cast("int").as("max_cap_len"))),
-
-      // ---- generator source + calendar zero-fill (sequence/explode) ----
-      "q63_calendar_fill" -> ((s, dir) => {
-        val ev = Tables.events(s, dir).filter(col("ts").isNotNull)
-        val cal = ev.agg(min(to_date(col("ts"))).as("mn"),
-            max(to_date(col("ts"))).as("mx"))
-          .select(explode(sequence(col("mn"), col("mx"))).as("d"))
-        val errDaily = ev.filter(col("event_type") === "error")
-          .groupBy(to_date(col("ts")).as("d"))
-          .agg(count(lit(1)).as("n"))
-        cal.join(errDaily, Seq("d"), "left")
-          .select(col("d"), coalesce(col("n"), lit(0L)).cast("bigint")
-            .as("n_errors"))
-      }),
-
-      // ---- exact median + deterministic mode (min key among max count) ----
-      "q64_median_mode" -> ((s, dir) => {
-        val e = Tables.events(s, dir)
-          .filter(col("value").isNotNull && col("ts").isNotNull)
-          .select(col("event_type"), to_date(col("ts")).as("d"),
-            (dec2(col("value")) * 100).cast("long").as("xl"))
-        // median over exact ×100 ints: odd n hits an integer, even n an
-        // exact .5 — both representable, so the interpolation formula
-        // difference between engines cannot round differently
-        val med = e.groupBy(col("event_type"))
-          .agg((expr("median(xl)") / 100.0).as("med_value"))
-        val cnt = e.groupBy(col("event_type"), col("d")).agg(count(lit(1)).as("n"))
-        val mode = cnt.withColumn("rn", row_number().over(
-            Window.partitionBy(col("event_type"))
-              .orderBy(col("n").desc, col("d").asc)))
-          .filter(col("rn") === 1)
-          .select(col("event_type"), col("d").as("mode_day"),
-            col("n").cast("bigint").as("mode_n"))
-        med.join(mode, "event_type")
-      }),
-
-      // ---- try_* error-safe arithmetic (ANSI mode stays on) ----
-      "q65_try_ops" -> ((s, dir) =>
-        Tables.events(s, dir).select(
-          col("event_id"),
-          // long÷long: Spark's `/` promotes to double and ANSI raises on
-          // zero → try_divide yields NULL, matching DuckDB's x/0 = NULL
-          // (double÷0.0 would give Infinity in Spark vs NULL in DuckDB)
-          try_divide(col("event_id"), col("user_id") % 5).as("div_or_null"),
-          expr("try_cast(get_json_object(props, '$.k') AS BIGINT)").as("k_json"),
-          expr("try_cast(event_type AS BIGINT)").as("bad_int"),
-          expr("try_cast(concat(cast(event_id AS STRING), '9999999999999999999') AS BIGINT)")
-            .as("overflow_null"))),
-
-      // Schema-evolution read: mergeSchema=true unions the column sets
-      // of the v1/v2 generations (v1 rows surface NULL for columns that
-      // postdate them; `gen` is the inferred partition column), and the
-      // accounting rollup makes the missing-data boundary explicit.
-      // Schema union happens at FOOTER level — no rewrite of v1 bytes,
-      // the only evolution shape that scales. The oracle reconstructs
-      // the generation split from doc_id parity on the raw fixture.
-      "q84_schema_evolution" -> ((s, dir) =>
-        s.read.option("mergeSchema", "true")
-          .parquet(evolvedCorpusDir(s, dir))
-          .groupBy(col("gen").cast("string").as("gen"),
-            coalesce(col("lang"), lit("(pre_schema)")).as("lang_bucket"))
-          .agg(count(lit(1)).cast("bigint").as("n_docs"),
-            sum(coalesce(col("n_chars"), lit(0L))).cast("bigint").as("chars_known"),
-            sum(length(col("text"))).cast("bigint").as("text_chars")))
-    ) ++ streamQueries
-  }
-
-  /** Incremental-mart oracle shared by batch q24 (two-partial combine)
-    * and streaming s5 (three-micro-batch combine): both must equal the
-    * full recompute. */
-  private val incrementalMartOracle =
-    """SELECT CAST(ts AS DATE) AS metric_date,
-      |       CAST(COUNT(*) AS INT) AS events_count,
-      |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value,
-      |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_value
-      |FROM events
-      |WHERE event_type = 'purchase' AND ts IS NOT NULL
-      |GROUP BY 1""".stripMargin
-
-  /** Session-window summary oracle shared by batch q25 and streaming
-    * s4 (identical semantics, two execution paths). */
-  private val sessionWindowOracle =
-    """WITH t AS (
-      |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-      |         lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-      |           (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_us
-      |  FROM events),
-      |-- strict >: verified on this Spark build — session_window MERGES an
-      |-- event at exactly prev+gap into the same session (same boundary
-      |-- rule as the composed q21 operator)
-      |f AS (SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000
-      |                     THEN 1 ELSE 0 END AS new_sess FROM t),
-      |s AS (SELECT user_id, ts_us,
-      |        SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us ASC, event_id ASC
-      |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      |      FROM f)
-      |SELECT user_id, MIN(ts_us) AS start_us, CAST(COUNT(*) AS BIGINT) AS n_events
-      |FROM s GROUP BY user_id, session_id""".stripMargin
-
-  // Shared oracle fragments (DuckDB SQL twins of TextFunctions).
-  private val toksSql =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-  /** The d25 planted boilerplate: 12 tokens (> the window length 8),
-    * appended to every 7th doc on BOTH the Spark and oracle side. */
-  private val exactSubstrBoiler =
-    " shared license boilerplate alpha beta gamma delta epsilon zeta eta theta iota"
-
-  /** The d25/d26/s14 fixture: documents with the planted boilerplate
-    * suffix on every 7th doc — shared so the batch pipeline, the
-    * incremental fold, and the streaming ingest all clean EXACTLY the
-    * same corpus (their oracle is shared too). */
-  private def substrCorpus(s: SparkSession, dir: String): DataFrame =
-    Tables.documents(s, dir).select(col("doc_id"),
-      when(col("doc_id") % 7 === 0,
-        concat(col("text"), lit(exactSubstrBoiler)))
-        .otherwise(col("text")).as("text"))
-  private def hash32Sql(salt: Int, v: String): String =
-    s"CAST(('0x' || substr(md5('$salt:' || $v), 1, 8)) AS BIGINT)"
-  /** 96 consecutive BMP CJK ideographs (U+4E00…U+4E5F) — the t18
-    * non-ASCII BPE alphabet, generated (not a literal) so the Spark
-    * gate and the DuckDB oracle embed the identical string. BMP-only
-    * keeps UTF-16, codepoint, and UTF-8-byte orderings in agreement,
-    * which is what pins the trainer's lhs/rhs tie-break cross-engine. */
-  private val cjkAlpha: String =
-    (0x4E00 until 0x4E60).map(_.toChar).mkString
-  private val shinglesSql =
-    "list_transform(range(len(toks) - 2), i -> array_to_string(toks[i+1:i+3], ' '))"
-  /** SQL twin of [[corpusPara]] — ends defining CTE `corpus(doc_id, text)`. */
-  private val corpusParaSql =
-    s"""tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-       |bodied AS (SELECT doc_id,
-       |  array_to_string(list_transform(
-       |    range(CAST(greatest(floor((len(toks) - 1) / 15.0), 0) AS BIGINT) + 1),
-       |    i -> array_to_string(toks[i*15+1 : i*15+15], ' ')), chr(10)) AS body
-       |  FROM tk),
-       |parabase AS (SELECT doc_id,
-       |  concat(
-       |    CASE WHEN doc_id % 4 = 0
-       |         THEN 'accept the cookie policy to continue reading' || chr(10)
-       |         ELSE '' END,
-       |    body,
-       |    CASE WHEN doc_id % 3 = 0
-       |         THEN chr(10) || 'subscribe to the newsletter for weekly updates'
-       |         ELSE '' END) AS text
-       |  FROM bodied),
-       |corpus AS (SELECT doc_id, text FROM parabase UNION ALL
-       |           SELECT doc_id + 1000000, text FROM parabase WHERE doc_id % 5 = 0)""".stripMargin
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), " +
-      "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), (a, b) -> a + b)"
-
-  /** DuckDB twin of [[Similarity.l2Fixed]]: 10-bit fixed-point
-    * component quantization, then a BIGINT sum of squared diffs —
-    * order-independent, so engine fold order cannot perturb it. */
-  private def l2FixSql(a: String, b: String): String = {
-    def q(x: String) =
-      s"CAST(floor(CAST($x AS DOUBLE) * 1024 + 0.5) AS BIGINT)"
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(list_zip($a, $b), " +
-      s"p -> (${q("p[1]")} - ${q("p[2]")}) * (${q("p[1]")} - ${q("p[2]")}))), " +
-      "(a, b) -> a + b)"
-  }
-
-  /** PQ CTE fragment shared by the e9 and e11 oracles: subspace index
-    * `js`, codebook `cent`, per-vector codes `codes`, and the
-    * per-query ADC lookup table `qt`. */
-  private def pqCodeCtes: String = pqCodeCtes("e.vec_id < 8")
-  private def pqCodeCtes(queryPred: String): String =
-    s"""js AS (SELECT unnest(range(8)) AS j),
-       |cent AS (SELECT c.vec_id AS cid, js.j,
-       |           list_slice(c.embedding, js.j*8+1, js.j*8+8) AS csub
-       |         FROM (SELECT vec_id, embedding FROM embeddings
-       |               ORDER BY vec_id ASC LIMIT 16) c CROSS JOIN js),
-       |sv AS (SELECT e.vec_id AS neighbor_id, js.j,
-       |         list_slice(e.embedding, js.j*8+1, js.j*8+8) AS sv
-       |       FROM embeddings e CROSS JOIN js),
-       |cd AS (SELECT sv.neighbor_id, sv.j, cent.cid,
-       |         ${l2FixSql("sv.sv", "cent.csub")} AS d
-       |       FROM sv JOIN cent ON sv.j = cent.j),
-       |codes AS (SELECT neighbor_id, j, cid AS code FROM (
-       |            SELECT neighbor_id, j, cid,
-       |              ROW_NUMBER() OVER (PARTITION BY neighbor_id, j
-       |                ORDER BY d ASC, cid ASC) AS rn FROM cd) WHERE rn = 1),
-       |qs AS (SELECT e.vec_id AS query_id, js.j,
-       |         list_slice(e.embedding, js.j*8+1, js.j*8+8) AS qsv
-       |       FROM embeddings e CROSS JOIN js WHERE $queryPred),
-       |qt AS (SELECT qs.query_id, qs.j, cent.cid,
-       |         ${l2FixSql("qs.qsv", "cent.csub")} AS qd
-       |       FROM qs JOIN cent ON qs.j = cent.j)""".stripMargin
-
-  /** Corpus CTE chains for the minhash oracles (each ends defining
-    * `corpus(doc_id, text)`), mirroring the Spark fixtures above. */
-  private val corpusD5Ctes =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id < 200
-      |  UNION ALL
-      |  SELECT doc_id + 1000000, text || ' nearly duplicate suffix'
-      |  FROM documents WHERE doc_id < 200 AND doc_id % 7 = 0)""".stripMargin
-
-  private val corpusNearCtes =
-    """corpus AS (
-      |  SELECT doc_id, text FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 1000000, text || ' nearly duplicate suffix'
-      |  FROM documents WHERE doc_id % 7 = 0)""".stripMargin
-
-  /** DuckDB mirror of [[corpusD7]]: B = A ++ markers, C = tail(A) ++
-    * markers (see the Spark fixture's Scaladoc for the shingle-set
-    * arithmetic that makes A≈B≈C a chain with A̸≈C). */
-  private val corpusD7Ctes =
-    s"""d7base AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
-       |d7tk AS (SELECT doc_id, text, $toksSql AS toks FROM d7base),
-       |d7st AS (SELECT doc_id, text, toks, len(toks) AS n,
-       |    len(list_distinct(list_transform(range(len(toks) - 2),
-       |      i -> array_to_string(toks[i+1:i+3], ' ')))) AS s
-       |  FROM d7tk WHERE doc_id % 7 = 0),
-       |d7mk AS (SELECT doc_id, text, toks, n,
-       |    least(CAST(floor(s * 3 / 5) AS INT) + 2, n) AS r,
-       |    array_to_string(list_transform(
-       |      range(1, greatest(CAST(floor(s / 3) AS INT), 3) + 1),
-       |      i -> 'zz' || doc_id || 'x' || i), ' ') AS markers
-       |  FROM d7st),
-       |corpus AS (
-       |  SELECT doc_id, text FROM d7base
-       |  UNION ALL
-       |  SELECT doc_id + 1000000, text || ' ' || markers FROM d7mk
-       |  UNION ALL
-       |  SELECT doc_id + 2000000,
-       |         array_to_string(toks[n - r + 1 : n], ' ') || ' ' || markers
-       |  FROM d7mk)""".stripMargin
-
-  /** MinHash+LSH oracle prefix: the ENTIRE pipeline in DuckDB SQL over
-    * the given corpus CTE chain, with the engine's affine hash
-    * constants inlined — signatures, band hashes, bucket capping,
-    * candidate pairs, and Jaccard verify all reproduce the Spark plan
-    * bit-for-bit. Ends with `j` = (id_a, id_b, jaccard). */
-  private def minhashPairsPrefixSql(corpusCtes: String): String = {
-    val sigList = DedupSuite.affineConsts(16).map { case (a, b) =>
-      s"list_min(list_transform(hs, x -> (x * $a + $b) % ${DedupSuite.MinhashP}))"
-    }.mkString("[", ",\n    ", "]")
-    s"""WITH $corpusCtes,
-       |tk AS (SELECT doc_id, $toksSql AS toks FROM corpus),
-       |filt AS (SELECT * FROM tk WHERE len(toks) >= 3),
-       |shs AS (SELECT doc_id, $shinglesSql AS sh FROM filt),
-       |h AS (SELECT doc_id, list_transform(sh, s -> ${hash32Sql(0, "s")}) AS hs FROM shs),
-       |sig AS (SELECT doc_id, hs, $sigList AS sig FROM h),
-       |bnd AS (SELECT doc_id, j AS band,
-       |          md5(array_to_string(sig[j*4+1 : j*4+4], ',')) AS band_hash
-       |        FROM sig CROSS JOIN (SELECT unnest(range(4)) AS j)),
-       |sized AS (SELECT *, COUNT(*) OVER (PARTITION BY band, band_hash) AS bucket_n FROM bnd),
-       |capped AS (SELECT * FROM sized WHERE bucket_n <= 1000),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |          FROM capped a JOIN capped b
-       |            ON a.band = b.band AND a.band_hash = b.band_hash
-       |           AND a.doc_id < b.doc_id),
-       |j AS (SELECT p.id_a, p.id_b,
-       |        CASE WHEN len(list_distinct(list_concat(ha.hs, hb.hs))) > 0
-       |             THEN CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
-       |                  / CAST(len(list_distinct(list_concat(ha.hs, hb.hs))) AS DOUBLE)
-       |             ELSE 0.0 END AS jaccard
-       |      FROM pairs p
-       |      JOIN h ha ON ha.doc_id = p.id_a
-       |      JOIN h hb ON hb.doc_id = p.id_b)""".stripMargin
-  }
-
-  private def d5OracleSql: String =
-    s"""${minhashPairsPrefixSql(corpusD5Ctes)}
-       |SELECT id_a, id_b, jaccard
-       |FROM j WHERE jaccard >= 0.5""".stripMargin
-
-  /** d2 oracle: same pipeline as d5 over the FULL planted corpus. */
-  private def d2OracleSql: String =
-    s"""${minhashPairsPrefixSql(corpusNearCtes)}
-       |SELECT id_a, id_b, jaccard
-       |FROM j WHERE jaccard >= 0.5""".stripMargin
-
-  /** d19 oracle: the portable pipeline run on EACH side (corpus,
-    * ingest batch), candidates from shared (band, band_hash) buckets
-    * capped on the union population, exact-Jaccard verify — the SQL
-    * mirror of minhashIndex + incrementalMinhashNearDups. */
-  private def d19OracleSql: String = {
-    val sigList = DedupSuite.affineConsts(16).map { case (a, b) =>
-      s"list_min(list_transform(hs, x -> (x * $a + $b) % ${DedupSuite.MinhashP}))"
-    }.mkString("[", ",\n    ", "]")
-    def side(src: String, sfx: String): String =
-      s"""tk$sfx AS (SELECT doc_id, $toksSql AS toks FROM $src),
-         |f$sfx AS (SELECT * FROM tk$sfx WHERE len(toks) >= 3),
-         |sh$sfx AS (SELECT doc_id, $shinglesSql AS sh FROM f$sfx),
-         |h$sfx AS (SELECT doc_id, list_transform(sh, s -> ${hash32Sql(0, "s")}) AS hs FROM sh$sfx),
-         |sig$sfx AS (SELECT doc_id, hs, $sigList AS sig FROM h$sfx),
-         |bnd$sfx AS (SELECT doc_id, j AS band,
-         |    md5(array_to_string(sig[j*4+1 : j*4+4], ',')) AS band_hash
-         |  FROM sig$sfx CROSS JOIN (SELECT unnest(range(4)) AS j))""".stripMargin
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |batchd AS (SELECT doc_id + 1000000 AS doc_id,
-       |             text || ' nearly duplicate suffix' AS text
-       |           FROM documents WHERE doc_id % 7 = 0),
-       |${side("corpus", "a")},
-       |${side("batchd", "b")},
-       |sized AS (SELECT band, band_hash, COUNT(*) AS bucket_n
-       |          FROM (SELECT band, band_hash FROM bnda
-       |                UNION ALL SELECT band, band_hash FROM bndb)
-       |          GROUP BY 1, 2),
-       |ok AS (SELECT band, band_hash FROM sized WHERE bucket_n <= 1000),
-       |pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       |          FROM bnda a
-       |          JOIN ok o ON a.band = o.band AND a.band_hash = o.band_hash
-       |          JOIN bndb b ON a.band = b.band AND a.band_hash = b.band_hash),
-       |j AS (SELECT p.id_a, p.id_b,
-       |        CASE WHEN len(list_distinct(list_concat(x.hs, y.hs))) > 0
-       |             THEN CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)
-       |                  / CAST(len(list_distinct(list_concat(x.hs, y.hs))) AS DOUBLE)
-       |             ELSE 0.0 END AS jaccard
-       |      FROM pairs p
-       |      JOIN ha x ON x.doc_id = p.id_a
-       |      JOIN hb y ON y.doc_id = p.id_b)
-       |SELECT id_a, id_b, jaccard
-       |FROM j WHERE jaccard >= 0.5""".stripMargin
-  }
-
-  /** s11 oracle: the d19 pipeline applied SEQUENTIALLY — batch i (clone
-    * ids ≡ i mod 3) probes index_i = corpus ∪ batches<i, with the
-    * union-population bucket cap evaluated per probe exactly as the
-    * engine's growing persisted index sees it. Three suffixed CTE
-    * blocks, one per micro-batch, unioned. */
-  private def s11OracleSql: String = {
-    val sigList = DedupSuite.affineConsts(16).map { case (a, b) =>
-      s"list_min(list_transform(hs, x -> (x * $a + $b) % ${DedupSuite.MinhashP}))"
-    }.mkString("[", ",\n    ", "]")
-    def side(src: String, sfx: String): String =
-      s"""tk$sfx AS (SELECT doc_id, $toksSql AS toks FROM $src),
-         |f$sfx AS (SELECT * FROM tk$sfx WHERE len(toks) >= 3),
-         |sh$sfx AS (SELECT doc_id, $shinglesSql AS sh FROM f$sfx),
-         |h$sfx AS (SELECT doc_id, list_transform(sh, s -> ${hash32Sql(0, "s")}) AS hs FROM sh$sfx),
-         |sig$sfx AS (SELECT doc_id, hs, $sigList AS sig FROM h$sfx),
-         |bnd$sfx AS (SELECT doc_id, j AS band,
-         |    md5(array_to_string(sig[j*4+1 : j*4+4], ',')) AS band_hash
-         |  FROM sig$sfx CROSS JOIN (SELECT unnest(range(4)) AS j))""".stripMargin
-    def block(i: Int): String =
-      s"""${side(s"(SELECT doc_id, text FROM corpus UNION ALL SELECT doc_id, text FROM allb WHERE doc_id % 3 < $i)", s"a$i")},
-         |${side(s"(SELECT doc_id, text FROM allb WHERE doc_id % 3 = $i)", s"b$i")},
-         |sized$i AS (SELECT band, band_hash, COUNT(*) AS bucket_n
-         |          FROM (SELECT band, band_hash FROM bnda$i
-         |                UNION ALL SELECT band, band_hash FROM bndb$i)
-         |          GROUP BY 1, 2),
-         |ok$i AS (SELECT band, band_hash FROM sized$i WHERE bucket_n <= 1000),
-         |pairs$i AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |          FROM bnda$i a
-         |          JOIN ok$i o ON a.band = o.band AND a.band_hash = o.band_hash
-         |          JOIN bndb$i b ON a.band = b.band AND a.band_hash = b.band_hash),
-         |j$i AS (SELECT p.id_a, p.id_b,
-         |        CASE WHEN len(list_distinct(list_concat(x.hs, y.hs))) > 0
-         |             THEN CAST(len(list_intersect(x.hs, y.hs)) AS DOUBLE)
-         |                  / CAST(len(list_distinct(list_concat(x.hs, y.hs))) AS DOUBLE)
-         |             ELSE 0.0 END AS jaccard
-         |      FROM pairs$i p
-         |      JOIN ha$i x ON x.doc_id = p.id_a
-         |      JOIN hb$i y ON y.doc_id = p.id_b)""".stripMargin
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents),
-       |allb AS (SELECT doc_id + 1000000 AS doc_id,
-       |           text || ' nearly duplicate suffix' AS text
-       |         FROM documents WHERE doc_id % 7 = 0
-       |         UNION ALL
-       |         SELECT doc_id + 2000000 AS doc_id,
-       |           text || ' v2 nearly duplicate suffix' AS text
-       |         FROM documents WHERE doc_id % 14 = 0),
-       |${block(0)},
-       |${block(1)},
-       |${block(2)}
-       |SELECT id_a, id_b, jaccard FROM j0 WHERE jaccard >= 0.5
-       |UNION ALL SELECT id_a, id_b, jaccard FROM j1 WHERE jaccard >= 0.5
-       |UNION ALL SELECT id_a, id_b, jaccard FROM j2 WHERE jaccard >= 0.5""".stripMargin
-  }
-
-  /** Recursive-CTE transitive closure of the near-dup pairs, appended
-    * after a [[minhashPairsPrefixSql]] — ends with `comp(doc_id,
-    * component)` = ground-truth connected-component labels. */
-  private val componentsCtesSql =
-    """pr AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.5),
-      |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-      |          UNION SELECT id_b, id_a FROM pr),
-      |reach(src, dst) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-      |comp AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-      |         FROM reach GROUP BY src)""".stripMargin
-
-  /** d7 oracle: near-dup canonical selection — TRANSITIVE clusters via
-    * the recursive closure (matches the engine's connected-components
-    * labeling), then keep the best-quality member per cluster (quality
-    * formula identical to t2's). The chain corpus [[corpusD7Ctes]]
-    * makes the closure observable: a single-step min-id representative
-    * would put each chain's C under B instead of A. */
-  private def d7OracleSql: String =
-    s"""${minhashPairsPrefixSql(corpusD7Ctes).replaceFirst("^WITH ", "WITH RECURSIVE ")},
-       |$componentsCtesSql,
-       |mem AS (SELECT c.doc_id, COALESCE(k.component, c.doc_id) AS cluster
-       |        FROM corpus c LEFT JOIN comp k USING (doc_id)),
-       |qc AS (SELECT doc_id, len(toks) AS n,
-       |         len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS sh
-       |       FROM (SELECT doc_id, $toksSql AS toks FROM corpus)),
-       |q AS (SELECT doc_id,
-       |  (CAST(LEAST(n, 200) AS DOUBLE) / 200.0
-       |   + LEAST(CASE WHEN n > 0 THEN CAST(sh AS DOUBLE) / CAST(n AS DOUBLE)
-       |                ELSE 0.0 END, 0.5) * 2.0) / 2.0 AS quality
-       |  FROM qc),
-       |ranked AS (SELECT m.cluster, m.doc_id, q.quality,
-       |             ROW_NUMBER() OVER (PARTITION BY m.cluster
-       |               ORDER BY q.quality DESC, m.doc_id ASC) AS rn
-       |           FROM mem m JOIN q USING (doc_id))
-       |SELECT cluster, doc_id, quality
-       |FROM ranked WHERE rn = 1""".stripMargin
-
-  /** d8/d9 oracle: exact transitive closure of the near-dup pairs via a
-    * recursive CTE — grades BOTH component engines (driver union-find
-    * fast path in d8, distributed label propagation in d9) against a
-    * ground-truth assignment. The WITH RECURSIVE wraps the shared pairs
-    * prefix (DuckDB allows RECURSIVE on the first WITH even when later
-    * CTEs are non-recursive). */
-  private def d8OracleSql: String =
-    s"""${minhashPairsPrefixSql(corpusD5Ctes).replaceFirst("^WITH ", "WITH RECURSIVE ")},
-       |$componentsCtesSql
-       |SELECT doc_id AS id, component FROM comp""".stripMargin
-
-  /** Shared WITH-prefix for the hyperplane-LSH oracles (e2, d6): the
-    * 8×64 plane weights inlined from the engine's own deterministic
-    * generator, the dot-product fold in the same order, so buckets and
-    * pairs match bit-for-bit. Ends with `p` = scored same-bucket pairs. */
-  private def lshPairsPrefixSql: String = {
-    def planeArr(p: Int): String =
-      (0 until 64).map(d => Similarity.planeWeight(p, d)).mkString("[", ",", "]")
-    val bucketExpr = (0 until 8).map { p =>
-      s"""CASE WHEN list_reduce(list_prepend(0.0,
-         |  list_transform(list_zip(embedding, ${planeArr(p)}),
-         |    pr -> CAST(pr[1] AS DOUBLE) * pr[2])), (a, b) -> a + b) >= 0
-         |THEN ${1L << p} ELSE 0 END""".stripMargin
-    }.mkString(" + ")
-    s"""WITH emb AS (SELECT vec_id, embedding FROM embeddings),
-       |planted AS (SELECT vec_id, embedding FROM emb
-       |            UNION ALL
-       |            SELECT vec_id + 1000000, embedding FROM emb WHERE vec_id % 10 = 0),
-       |b AS (SELECT vec_id, embedding, $bucketExpr AS bucket FROM planted),
-       |p AS (SELECT x.bucket, x.vec_id AS id_a, y.vec_id AS id_b,
-       |        ${dotSql("x.embedding", "y.embedding")}
-       |        / (sqrt(${dotSql("x.embedding", "x.embedding")})
-       |           * sqrt(${dotSql("y.embedding", "y.embedding")})) AS simd
-       |      FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id)""".stripMargin
-  }
-
-  /** e8 oracle: recall@4 of the banded (4 tables × 3 planes) k-NN graph
-    * against the exact graph on the e7 sample. The 12 sign bits come
-    * from the same inlined plane weights as the engine (the e2/d6
-    * mechanism); table keys are the same `(allb >> 3t) & 7` integer
-    * bit-slices; both edge sets ranked (simd DESC, dst ASC) like e7,
-    * so the hit counts are bit-reproducible. */
-  private def e8OracleSql: String = {
-    def planeArr(p: Int): String =
-      (0 until 64).map(d => Similarity.planeWeight(p, d)).mkString("[", ",", "]")
-    val bucketExpr = (0 until 12).map { p =>
-      s"""CASE WHEN list_reduce(list_prepend(0.0,
-         |  list_transform(list_zip(embedding, ${planeArr(p)}),
-         |    pr -> CAST(pr[1] AS DOUBLE) * pr[2])), (a, b) -> a + b) >= 0
-         |THEN ${1L << p} ELSE 0 END""".stripMargin
-    }.mkString(" + ")
-    def simd(a: String, b: String): String =
-      s"""${dotSql(s"$a.embedding", s"$b.embedding")}
-         | / (sqrt(${dotSql(s"$a.embedding", s"$a.embedding")})
-         |    * sqrt(${dotSql(s"$b.embedding", s"$b.embedding")}))""".stripMargin
-    s"""WITH v AS (SELECT vec_id, embedding, $bucketExpr AS allb
-       |           FROM embeddings WHERE vec_id % 10 = 0),
-       |sc AS (SELECT a.vec_id AS src_id, b.vec_id AS dst_id, ${simd("a", "b")} AS simd
-       |       FROM v a CROSS JOIN v b WHERE a.vec_id <> b.vec_id),
-       |er AS (SELECT src_id, dst_id, ROW_NUMBER() OVER (PARTITION BY src_id
-       |         ORDER BY simd DESC, dst_id ASC) AS rnk FROM sc),
-       |truth AS (SELECT src_id, dst_id FROM er WHERE rnk <= 4),
-       |bt AS (SELECT vec_id, (allb >> (u.t * 3)) & 7 AS bk, u.t
-       |       FROM v CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS t) u),
-       |cand AS (SELECT DISTINCT x.vec_id AS src_id, y.vec_id AS dst_id
-       |         FROM bt x JOIN bt y ON x.t = y.t AND x.bk = y.bk
-       |         WHERE x.vec_id <> y.vec_id),
-       |bsc AS (SELECT c.src_id, c.dst_id, ${simd("a", "b")} AS simd
-       |        FROM cand c JOIN v a ON a.vec_id = c.src_id
-       |                    JOIN v b ON b.vec_id = c.dst_id),
-       |br AS (SELECT src_id, dst_id, ROW_NUMBER() OVER (PARTITION BY src_id
-       |         ORDER BY simd DESC, dst_id ASC) AS rnk FROM bsc),
-       |appx AS (SELECT src_id, dst_id FROM br WHERE rnk <= 4)
-       |SELECT t.src_id AS query_id,
-       |       CAST(COUNT(ax.src_id) AS BIGINT) AS n_hits,
-       |       CAST(COUNT(ax.src_id) AS DOUBLE) / 4.0 AS recall_at_4
-       |FROM truth t LEFT JOIN appx ax
-       |  ON t.src_id = ax.src_id AND t.dst_id = ax.dst_id
-       |GROUP BY 1""".stripMargin
-  }
-
-  /** e2 oracle: LSH near-dup pairs ≥ 0.95. */
-  private def e2OracleSql: String =
-    s"""$lshPairsPrefixSql
-       |SELECT id_a, id_b, simd AS sim
-       |FROM p WHERE simd >= 0.95""".stripMargin
-
-  /** d6 oracle: embedding near-dup DEDUP — drop the higher id of every
-    * ≥ 0.99 same-bucket pair, keep the rest. */
-  private def d6OracleSql: String =
-    s"""$lshPairsPrefixSql,
-       |dropped AS (SELECT DISTINCT id_b FROM p WHERE simd >= 0.99)
-       |SELECT vec_id FROM planted
-       |WHERE vec_id NOT IN (SELECT id_b FROM dropped)""".stripMargin
-
-  /** IVF pipeline CTE chain (assignment, probe selection, list scoring,
-    * ranking) shared by the e3/e5/e10 oracles — ends with `r` =
-    * (query_id, neighbor_id, sim, rnk). `corpus` is the relation the
-    * index covers (queries always come from the base `embeddings`
-    * table, so an e10-planted corpus reuses the e3 query set). */
-  private def ivfCtes(corpus: String): String =
-    s"""cent AS (SELECT vec_id AS centroid_id, embedding AS cvec
-       |              FROM $corpus ORDER BY vec_id ASC LIMIT 16),
-       |assign AS (SELECT e.vec_id AS neighbor_id, e.embedding AS cv, c.centroid_id,
-       |             ROW_NUMBER() OVER (PARTITION BY e.vec_id
-       |               ORDER BY ${dotSql("e.embedding", "c.cvec")}
-       |                 / (sqrt(${dotSql("e.embedding", "e.embedding")})
-       |                    * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-       |               c.centroid_id ASC) AS rn
-       |           FROM $corpus e CROSS JOIN cent c),
-       |lists AS (SELECT neighbor_id, cv, centroid_id FROM assign WHERE rn = 1),
-       |q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-       |probes AS (SELECT query_id, qv, centroid_id FROM (
-       |             SELECT q.query_id, q.qv, c.centroid_id,
-       |               ROW_NUMBER() OVER (PARTITION BY q.query_id
-       |                 ORDER BY ${dotSql("q.qv", "c.cvec")}
-       |                   / (sqrt(${dotSql("q.qv", "q.qv")})
-       |                      * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-       |                 c.centroid_id ASC) AS rn
-       |             FROM q CROSS JOIN cent c)
-       |           WHERE rn <= 4),
-       |scored AS (SELECT DISTINCT p.query_id, l.neighbor_id,
-       |             ${dotSql("p.qv", "l.cv")}
-       |             / (sqrt(${dotSql("p.qv", "p.qv")})
-       |                * sqrt(${dotSql("l.cv", "l.cv")})) AS simd
-       |           FROM probes p JOIN lists l ON p.centroid_id = l.centroid_id
-       |           WHERE p.query_id <> l.neighbor_id),
-       |r AS (SELECT query_id, neighbor_id, simd AS sim,
-       |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-       |             ORDER BY simd DESC, neighbor_id ASC) AS INT) AS rnk
-       |      FROM scored)""".stripMargin
-
-  private val ivfCtesSql: String = ivfCtes("embeddings")
-
-  /** e3 oracle: the full IVF pipeline (assignment, probe selection,
-    * list scoring, final top-k) as window queries. */
-  private def e3OracleSql: String =
-    s"""WITH $ivfCtesSql
-       |SELECT query_id, neighbor_id, sim, rnk
-       |FROM r WHERE rnk <= 5""".stripMargin
-
-  /** e5 oracle: recall@5 of the IVF result against brute-force ground
-    * truth (e1's ranking), per query. */
-  private def e5OracleSql: String =
-    s"""WITH $ivfCtesSql,
-       |iv AS (SELECT query_id, neighbor_id FROM r WHERE rnk <= 5),
-       |bfr AS (SELECT qq.vec_id AS query_id, cc.vec_id AS neighbor_id,
-       |          ROW_NUMBER() OVER (PARTITION BY qq.vec_id
-       |            ORDER BY ${dotSql("qq.embedding", "cc.embedding")}
-       |              / (sqrt(${dotSql("qq.embedding", "qq.embedding")})
-       |                 * sqrt(${dotSql("cc.embedding", "cc.embedding")})) DESC,
-       |            cc.vec_id ASC) AS rn
-       |        FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 8) qq
-       |        JOIN embeddings cc ON cc.vec_id <> qq.vec_id),
-       |bf AS (SELECT query_id, neighbor_id FROM bfr WHERE rn <= 5)
-       |SELECT b.query_id, CAST(COUNT(i.query_id) AS BIGINT) AS n_hits,
-       |       CAST(COUNT(i.query_id) AS DOUBLE) / 5.0 AS recall_at_5
-       |FROM bf b LEFT JOIN iv i
-       |  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
-       |GROUP BY b.query_id""".stripMargin
-
-  /** q82's unrolled-iteration oracle: r{t+1} from r{t} as one CTE per
-    * round, all-BIGINT (`//` floor division == Spark DIV on the
-    * non-negative ranks). */
-  /** The q82 edge set as oracle CTEs ending in `edges`. */
-  private val q82EdgesCtes: String =
-    """e0 AS (SELECT DISTINCT o_custkey * 2 AS src,
-      |              l_suppkey * 2 + 1 AS dst
-      |            FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-      |edges AS (SELECT src, dst FROM e0
-      |          UNION SELECT dst AS src, src AS dst FROM e0)""".stripMargin
-
-  private def pageRankOracleSql(iters: Int): String =
-    pageRankOracleSqlOver(q82EdgesCtes, iters)
-
-  /** Unrolled BIGINT PageRank recurrence over any edge set supplied
-    * as CTEs whose last member is `edges (src, dst)` — shared by the
-    * q82 full-graph oracle and the q91 incremental oracle (which runs
-    * it over base ∪ batch: incremental must equal full recompute). */
-  private def pageRankOracleSqlOver(edgesCtes: String, iters: Int): String = {
-    val iterCtes = (1 to iters).map { t =>
-      s"""m$t AS (SELECT e.dst AS node_id, SUM(r.pr // d.outd) AS m
-         |        FROM r${t - 1} r
-         |        JOIN edges e ON r.node_id = e.src
-         |        JOIN deg d ON d.src = e.src
-         |        GROUP BY e.dst),
-         |r$t AS (SELECT r.node_id,
-         |          150000000000 + (85 * COALESCE(m.m, 0)) // 100 AS pr
-         |        FROM r${t - 1} r LEFT JOIN m$t m USING (node_id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $edgesCtes,
-       |deg AS (SELECT src, COUNT(*) AS outd FROM edges GROUP BY src),
-       |nodes AS (SELECT src AS node_id FROM edges
-       |          UNION SELECT dst AS node_id FROM edges),
-       |r0 AS (SELECT node_id, CAST(1000000000000 AS BIGINT) AS pr FROM nodes),
-       |$iterCtes
-       |SELECT CAST(node_id AS BIGINT) AS node_id, CAST(pr AS BIGINT) AS pr
-       |FROM r$iters""".stripMargin
-  }
-
-  def extensionOracles: Map[String, String] = Map(
-    // q89 is q20 computed the bucketed way — same contract, same oracle
-    "q89_bucketed_asof" -> parityOracles("q20_asof_join"),
-    "q94_asof_hybrid" -> parityOracles("q20_asof_join"),
-
-    // q95: the pinned type-1 order statistic — r-th smallest with
-    // r = (n-1)*num/den + 1 in integer arithmetic — reproduced as a
-    // ROW_NUMBER filter (ranks are unique, so exactly one row matches
-    // each target rank per group). Values are the q64 ×100 fixed
-    // point; the final /100.0 is the same correctly-rounded BIGINT→
-    // DOUBLE division in both engines.
-    "q95_radix_quantiles" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xl
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |r AS (
-        |  SELECT event_type, xl,
-        |         ROW_NUMBER() OVER (PARTITION BY event_type
-        |                            ORDER BY xl ASC) AS rn,
-        |         COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM e)
-        |SELECT event_type,
-        |       MAX(CASE WHEN rn = ((n-1)*25)//100 + 1 THEN xl END) / 100.0 AS p25,
-        |       MAX(CASE WHEN rn = ((n-1)*50)//100 + 1 THEN xl END) / 100.0 AS p50,
-        |       MAX(CASE WHEN rn = ((n-1)*90)//100 + 1 THEN xl END) / 100.0 AS p90
-        |FROM r GROUP BY event_type""".stripMargin,
-
-    // q100: q95's rank discipline over ~15 k groups — the many-groups
-    // in-plan descent must agree with the same ROW_NUMBER filter
-    "q100_manygroup_quantiles" ->
-      """WITH e AS (
-        |  SELECT l_orderkey,
-        |         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS xl
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND l_orderkey IS NOT NULL),
-        |r AS (
-        |  SELECT l_orderkey, xl,
-        |         ROW_NUMBER() OVER (PARTITION BY l_orderkey
-        |                            ORDER BY xl ASC) AS rn,
-        |         COUNT(*) OVER (PARTITION BY l_orderkey) AS n
-        |  FROM e)
-        |SELECT CAST(l_orderkey AS BIGINT) AS l_orderkey,
-        |       MAX(CASE WHEN rn = ((n-1)*50)//100 + 1 THEN xl END) / 100.0 AS p50,
-        |       MAX(CASE WHEN rn = ((n-1)*95)//100 + 1 THEN xl END) / 100.0 AS p95
-        |FROM r GROUP BY 1""".stripMargin,
-
-    // q101: three regime-shaped inputs through the auto dispatcher,
-    // one ROW_NUMBER rank oracle — the form choice must be invisible
-    "q101_auto_quantiles" ->
-      """WITH ea AS (
-        |  SELECT CAST(event_type AS VARCHAR) AS grp,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xl
-        |  FROM events
-        |  WHERE value IS NOT NULL AND event_type IS NOT NULL),
-        |eb AS (SELECT grp, ((xl % 100) + 100) % 100 AS xl FROM ea),
-        |lc AS (
-        |  SELECT CAST(l_partkey AS VARCHAR) AS grp,
-        |         CAST(l_quantity AS BIGINT) % 5 AS xl
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_partkey IS NOT NULL
-        |    AND l_partkey % 7 = 0),
-        |u AS (
-        |  SELECT 'spread' AS src, grp, xl FROM ea
-        |  UNION ALL SELECT 'dup_few' AS src, grp, xl FROM eb
-        |  UNION ALL SELECT 'dup_many' AS src, grp, xl FROM lc),
-        |r AS (
-        |  SELECT src, grp, xl,
-        |         ROW_NUMBER() OVER (PARTITION BY src, grp
-        |                            ORDER BY xl ASC) AS rn,
-        |         COUNT(*) OVER (PARTITION BY src, grp) AS n
-        |  FROM u)
-        |SELECT src, grp,
-        |       MAX(CASE WHEN rn = ((n-1)*50)//100 + 1 THEN xl END) AS p50,
-        |       MAX(CASE WHEN rn = ((n-1)*90)//100 + 1 THEN xl END) AS p90
-        |FROM r GROUP BY 1, 2""".stripMargin,
-
-    "t7_repetition" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |t AS (SELECT doc_id, unnest(toks) AS tok FROM tk),
-         |tc AS (SELECT doc_id, tok, COUNT(*) AS c FROM t GROUP BY 1, 2),
-         |pd AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         |              MAX(c) AS top_tok, COUNT(*) AS n_distinct
-         |       FROM tc GROUP BY 1),
-         |bg AS (SELECT doc_id, unnest(list_transform(range(len(toks) - 1),
-         |         i -> array_to_string(toks[i+1:i+2], ' '))) AS b FROM tk),
-         |bc AS (SELECT doc_id, b, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-         |bd AS (SELECT doc_id, SUM(c) AS nb, MAX(c) AS top_bg FROM bc GROUP BY 1)
-         |SELECT pd.doc_id, pd.n_tokens,
-         |       CAST(pd.top_tok AS DOUBLE) / CAST(pd.n_tokens AS DOUBLE) AS top_token_frac,
-         |       CAST(pd.n_distinct AS DOUBLE) / CAST(pd.n_tokens AS DOUBLE) AS distinct_frac,
-         |       COALESCE(CAST(bd.top_bg AS DOUBLE) / CAST(bd.nb AS DOUBLE), 0.0) AS top_bigram_frac
-         |FROM pd LEFT JOIN bd USING (doc_id)""".stripMargin,
-
-    "t8_redact" ->
-      """WITH p AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 5 = 0 THEN ' contact user' || doc_id || '@example.com now' ELSE '' END ||
-        |    CASE WHEN doc_id % 7 = 0 THEN ' call 555-01' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') ELSE '' END AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |       CAST(len(regexp_extract_all(text, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS INT) AS n_emails,
-        |       CAST(len(regexp_extract_all(text, '[0-9]{3}-[0-9]{4,6}')) AS INT) AS n_phones,
-        |       CAST(length(regexp_replace(regexp_replace(text,
-        |         '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |         '[0-9]{3}-[0-9]{4,6}', '<PHONE>', 'g')) AS INT) AS clean_len
-        |FROM p""".stripMargin,
-
-    "d10_contamination" ->
-      s"""WITH $corpusNearCtes,
-         |tk AS (SELECT doc_id, $toksSql AS toks FROM corpus),
-         |shl AS (SELECT doc_id, list_distinct(list_transform(
-         |          list_transform(range(len(toks) - 4),
-         |            i -> array_to_string(toks[i+1:i+5], ' ')),
-         |          s -> ${hash32Sql(0, "s")})) AS hs FROM tk),
-         |sh AS (SELECT doc_id, unnest(hs) AS h,
-         |         ${hash32Sql(1, "CAST(doc_id AS VARCHAR)")} % 10 < 8 AS is_train
-         |       FROM shl),
-         |tr AS (SELECT DISTINCT h FROM sh WHERE is_train),
-         |te AS (SELECT doc_id, h FROM sh WHERE NOT is_train),
-         |tot AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles FROM te GROUP BY 1),
-         |hit AS (SELECT te.doc_id, CAST(COUNT(*) AS BIGINT) AS n_contaminated
-         |        FROM te JOIN tr USING (h) GROUP BY 1)
-         |SELECT tot.doc_id, tot.n_shingles,
-         |       CAST(COALESCE(hit.n_contaminated, 0) AS BIGINT) AS n_contaminated,
-         |       CAST(COALESCE(hit.n_contaminated, 0) AS DOUBLE)
-         |         / CAST(tot.n_shingles AS DOUBLE) AS contamination_frac
-         |FROM tot LEFT JOIN hit USING (doc_id)""".stripMargin,
-
-    "q66_domain_cap" ->
-      s"""WITH d AS (SELECT doc_id,
-         |    CASE WHEN source IS NULL OR source = '' THEN '(no_domain)'
-         |         ELSE lower(split_part(replace(replace(source,'https://',''),'http://',''),'/',1))
-         |    END AS domain
-         |  FROM documents),
-         |r AS (SELECT doc_id, domain,
-         |        ROW_NUMBER() OVER (PARTITION BY domain
-         |          ORDER BY ${hash32Sql(2, "CAST(doc_id AS VARCHAR)")} ASC, doc_id ASC) AS rn
-         |      FROM d)
-         |SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_kept, MIN(doc_id) AS sample_min_id
-         |FROM r WHERE rn <= 50 GROUP BY 1""".stripMargin,
-
-    "q68_pack" ->
-      s"""WITH nn AS (SELECT greatest((COUNT(*) + 63) // 64, 1) AS n_shards
-         |            FROM documents),
-         |t AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |    ${hash32Sql(3, "CAST(doc_id AS VARCHAR)")} % (SELECT n_shards FROM nn) AS shard
-         |  FROM documents),
-         |c AS (SELECT doc_id, n_tokens, shard,
-         |        COALESCE(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id ASC
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-         |      FROM t),
-         |b AS (SELECT shard, CAST(floor(cum_before / 4096.0) AS BIGINT) AS bin,
-         |             doc_id, n_tokens FROM c)
-         |SELECT shard, bin, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |       CAST(SUM(n_tokens) AS BIGINT) AS bin_tokens, MIN(doc_id) AS first_doc
-         |FROM b GROUP BY 1, 2""".stripMargin,
-
-    // q99: same derived-shard arithmetic as q68, ROW_NUMBER over
-    // (n, doc_id) within shard, consecutive-16 batches, padding =
-    // n_docs*max_len - batch_tokens
-    "q99_length_batches" ->
-      s"""WITH nn AS (SELECT greatest((COUNT(*) + 63) // 64, 1) AS n_shards
-         |            FROM documents),
-         |t AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n,
-         |    ${hash32Sql(3, "CAST(doc_id AS VARCHAR)")} % (SELECT n_shards FROM nn) AS shard
-         |  FROM documents),
-         |r AS (SELECT doc_id, n, shard,
-         |        ROW_NUMBER() OVER (PARTITION BY shard
-         |          ORDER BY n ASC, doc_id ASC) AS rn
-         |      FROM t),
-         |b AS (SELECT shard, CAST((rn - 1) // 16 AS BIGINT) AS batch_id,
-         |             doc_id, n FROM r)
-         |SELECT shard, batch_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(MAX(n) AS BIGINT) AS max_len,
-         |  CAST(SUM(n) AS BIGINT) AS batch_tokens,
-         |  CAST(COUNT(*) * MAX(n) - SUM(n) AS BIGINT) AS padding,
-         |  MIN(doc_id) AS first_doc
-         |FROM b GROUP BY 1, 2""".stripMargin,
-
-    // q97: the same two-level cumsum (shard-local + shard offsets);
-    // DuckDB could cumsum globally in one window, but mirroring the
-    // sharded arithmetic keeps the oracle a line-for-line twin
-    "q97_pack_spans" ->
-      s"""WITH t AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n,
-         |             doc_id // 100 AS shard
-         |           FROM documents WHERE len($toksSql) > 0),
-         |c AS (SELECT doc_id, n, shard,
-         |        COALESCE(SUM(n) OVER (PARTITION BY shard ORDER BY doc_id ASC
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |          AS local_start
-         |      FROM t),
-         |o AS (SELECT shard,
-         |        COALESCE(SUM(stot) OVER (ORDER BY shard ASC
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |          AS off
-         |      FROM (SELECT shard, SUM(n) AS stot FROM t GROUP BY 1)),
-         |p AS (SELECT c.doc_id, o.off + c.local_start AS strt,
-         |             o.off + c.local_start + c.n AS fin
-         |      FROM c JOIN o USING (shard))
-         |SELECT CAST(u.seq_id AS BIGINT) AS seq_id, doc_id,
-         |  CAST(greatest(u.seq_id * 128, strt) - strt AS BIGINT) AS tok_start,
-         |  CAST(least((u.seq_id + 1) * 128, fin) - strt AS BIGINT) AS tok_end
-         |FROM p, unnest(range(CAST(strt // 128 AS BIGINT),
-         |  CAST((fin - 1) // 128 + 1 AS BIGINT))) AS u(seq_id)""".stripMargin,
-
-    "d11_paragraph_dedup" ->
-      s"""WITH $corpusParaSql,
-         |t AS (SELECT doc_id, string_split(text, chr(10)) AS parts FROM corpus),
-         |p AS (SELECT doc_id, unnest(range(len(parts))) AS pos FROM t),
-         |l AS (SELECT p.doc_id, p.pos, t.parts[p.pos + 1] AS para
-         |      FROM p JOIN t USING (doc_id)),
-         |r AS (SELECT doc_id, pos, para,
-         |        row_number() OVER (PARTITION BY para
-         |          ORDER BY doc_id ASC, pos ASC) AS rn FROM l)
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_paras,
-         |       CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |       COALESCE(string_agg(CASE WHEN rn = 1 THEN para END,
-         |                           chr(10) ORDER BY pos), '') AS clean_text
-         |FROM r GROUP BY doc_id""".stripMargin,
-
-    // Mirrors the banding exactly: pigeonhole over 4×15-bit slices makes
-    // the pair set EXACT at hamming<=3, so oracle and engine agree
-    // bit-for-bit without an all-pairs join on either side.
-    "d12_simhash_pairs" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 5 = 0),
-         |hsrc AS (SELECT doc_id,
-         |  list_transform($toksSql, tk -> CAST(('0x' || substr(md5(tk), 1, 15)) AS BIGINT)) AS hs
-         |  FROM corpus),
-         |t AS (SELECT doc_id,
-         |  CAST(list_sum(list_transform(range(60), i ->
-         |    CASE WHEN list_sum(list_transform(hs, h ->
-         |           CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-         |         THEN (CAST(1 AS BIGINT) << i) ELSE 0 END)) AS BIGINT) AS sim
-         |  FROM hsrc),
-         |b AS (SELECT doc_id, sim, j AS band, (sim >> (CAST(j AS INT) * 15)) & 32767 AS band_key
-         |      FROM t, range(4) r(j)),
-         |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-         |                a.sim AS sim_a, c.sim AS sim_b
-         |         FROM b a JOIN b c ON a.band = c.band AND a.band_key = c.band_key
-         |                          AND a.doc_id < c.doc_id)
-         |SELECT id_a, id_b, CAST(bit_count(xor(sim_a, sim_b)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3""".stripMargin,
-
-    // d27: closed-form inverse of Multimodal.synthBmpPerceptual — the
-    // perceptual hash is family-md5 bits XOR variant flip bits, so the
-    // oracle never touches a pixel; the Spark side must recover the
-    // same 60 bits from the real byte stream. Pair generation mirrors
-    // the pigeonhole band join (recall-1-equivalent to all-pairs at
-    // Hamming <= 3 with 4 bands — the d12 oracle's formulation).
-    "d27_phash_near_dup" ->
-      """WITH p AS (
-        |  SELECT doc_id, doc_id // 8 AS f, doc_id % 8 AS v FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    xor(xor(
-        |      CAST(('0x' || substr(md5('d27:' || CAST(f AS VARCHAR)), 1, 15)) AS BIGINT),
-        |      CASE WHEN v >= 1 THEN (CAST(1 AS BIGINT) << ((7 * v) % 60)) ELSE 0 END),
-        |      CASE WHEN v >= 4 THEN (CAST(1 AS BIGINT) << ((11 * v + 3) % 60)) ELSE 0 END)
-        |      AS ph
-        |  FROM p),
-        |b AS (SELECT doc_id, ph, j AS band,
-        |             (ph >> (CAST(j AS INT) * 15)) & 32767 AS band_key
-        |      FROM h, range(4) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-        |                a.ph AS ph_a, c.ph AS ph_b
-        |         FROM b a JOIN b c ON a.band = c.band AND a.band_key = c.band_key
-        |                          AND a.doc_id < c.doc_id)
-        |SELECT id_a, id_b, CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(ph_a, ph_b)) <= 3""".stripMargin,
-
-    // d29: keeps from the d27 pair set — recursive transitive closure
-    // (the d22 CC formulation) over the closed-form pairs, min-id
-    // labels, unpaired docs keep themselves.
-    "d29_phash_dedup" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT doc_id, doc_id // 8 AS f, doc_id % 8 AS v FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    xor(xor(
-        |      CAST(('0x' || substr(md5('d27:' || CAST(f AS VARCHAR)), 1, 15)) AS BIGINT),
-        |      CASE WHEN v >= 1 THEN (CAST(1 AS BIGINT) << ((7 * v) % 60)) ELSE 0 END),
-        |      CASE WHEN v >= 4 THEN (CAST(1 AS BIGINT) << ((11 * v + 3) % 60)) ELSE 0 END)
-        |      AS ph
-        |  FROM p),
-        |b AS (SELECT doc_id, ph, j AS band,
-        |             (ph >> (CAST(j AS INT) * 15)) & 32767 AS band_key
-        |      FROM h, range(4) r(j)),
-        |pr AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-        |       FROM b a JOIN b c ON a.band = c.band AND a.band_key = c.band_key
-        |                        AND a.doc_id < c.doc_id
-        |       WHERE bit_count(xor(a.ph, c.ph)) <= 3),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |          UNION SELECT id_b, id_a FROM pr),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        |comp AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-        |         FROM reach GROUP BY src)
-        |SELECT d.doc_id,
-        |       COALESCE(c.component, d.doc_id) AS keep_id,
-        |       d.doc_id = COALESCE(c.component, d.doc_id) AS kept
-        |FROM documents d LEFT JOIN comp c USING (doc_id)""".stripMargin,
-
-    // d31: the audio INGEST twin — d29's recursive transitive closure
-    // under the 'd28:' salt (the Spark side folds WAV dHashes through
-    // the persisted band index; the oracle only knows the closed-form
-    // hashes).
-    "d31_incremental_phash_audio" ->
-      """WITH RECURSIVE p AS (
-        |  SELECT doc_id, doc_id // 8 AS f, doc_id % 8 AS v FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    xor(xor(
-        |      CAST(('0x' || substr(md5('d28:' || CAST(f AS VARCHAR)), 1, 15)) AS BIGINT),
-        |      CASE WHEN v >= 1 THEN (CAST(1 AS BIGINT) << ((7 * v) % 60)) ELSE 0 END),
-        |      CASE WHEN v >= 4 THEN (CAST(1 AS BIGINT) << ((11 * v + 3) % 60)) ELSE 0 END)
-        |      AS ph
-        |  FROM p),
-        |b AS (SELECT doc_id, ph, j AS band,
-        |             (ph >> (CAST(j AS INT) * 15)) & 32767 AS band_key
-        |      FROM h, range(4) r(j)),
-        |pr AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b
-        |       FROM b a JOIN b c ON a.band = c.band AND a.band_key = c.band_key
-        |                        AND a.doc_id < c.doc_id
-        |       WHERE bit_count(xor(a.ph, c.ph)) <= 3),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |          UNION SELECT id_b, id_a FROM pr),
-        |reach(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        |comp AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-        |         FROM reach GROUP BY src)
-        |SELECT d.doc_id,
-        |       COALESCE(c.component, d.doc_id) AS keep_id,
-        |       d.doc_id = COALESCE(c.component, d.doc_id) AS kept
-        |FROM documents d LEFT JOIN comp c USING (doc_id)""".stripMargin,
-
-    // d28: the audio twin — identical closed form under the 'd28:'
-    // salt (the Spark side must recover the bits from PCM energies).
-    "d28_phash_audio" ->
-      """WITH p AS (
-        |  SELECT doc_id, doc_id // 8 AS f, doc_id % 8 AS v FROM documents),
-        |h AS (
-        |  SELECT doc_id,
-        |    xor(xor(
-        |      CAST(('0x' || substr(md5('d28:' || CAST(f AS VARCHAR)), 1, 15)) AS BIGINT),
-        |      CASE WHEN v >= 1 THEN (CAST(1 AS BIGINT) << ((7 * v) % 60)) ELSE 0 END),
-        |      CASE WHEN v >= 4 THEN (CAST(1 AS BIGINT) << ((11 * v + 3) % 60)) ELSE 0 END)
-        |      AS ph
-        |  FROM p),
-        |b AS (SELECT doc_id, ph, j AS band,
-        |             (ph >> (CAST(j AS INT) * 15)) & 32767 AS band_key
-        |      FROM h, range(4) r(j)),
-        |cand AS (SELECT DISTINCT a.doc_id AS id_a, c.doc_id AS id_b,
-        |                a.ph AS ph_a, c.ph AS ph_b
-        |         FROM b a JOIN b c ON a.band = c.band AND a.band_key = c.band_key
-        |                          AND a.doc_id < c.doc_id)
-        |SELECT id_a, id_b, CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(ph_a, ph_b)) <= 3""".stripMargin,
-
-    "t9_tfidf" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |term AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-         |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-         |       FROM term GROUP BY 1, 2),
-         |df AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
-         |s AS (SELECT doc_id, term, tf, df,
-         |        CAST(tf AS DOUBLE) * (CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)) AS score
-         |      FROM tf JOIN df USING (term) CROSS JOIN n),
-         |r AS (SELECT doc_id, term, tf, df, score,
-         |        CAST(row_number() OVER (PARTITION BY doc_id
-         |          ORDER BY score DESC, term ASC) AS INT) AS rnk FROM s)
-         |SELECT doc_id, term, tf, df, score, rnk FROM r WHERE rnk <= 3""".stripMargin,
-
-    "q69_scd2" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |             epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_type
-        |           FROM events WHERE user_id % 20 = 0),
-        |c AS (SELECT *, lag(event_type) OVER (PARTITION BY user_id
-        |        ORDER BY ts_us ASC, event_id ASC) AS prev FROM e),
-        |v AS (SELECT user_id, event_id, ts_us, event_type FROM c
-        |      WHERE prev IS NULL OR prev <> event_type)
-        |SELECT user_id,
-        |       CAST(row_number() OVER (PARTITION BY user_id
-        |         ORDER BY ts_us ASC, event_id ASC) AS INT) AS version,
-        |       event_type, ts_us AS valid_from_us,
-        |       lead(ts_us) OVER (PARTITION BY user_id
-        |         ORDER BY ts_us ASC, event_id ASC) - 1 AS valid_to_us
-        |FROM v""".stripMargin,
-
-    "q70_chunk" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |c AS (SELECT doc_id,
-         |        unnest(range(CAST(greatest(floor((len(toks) - 9) / 24.0), 0)
-         |          AS BIGINT) + 1)) AS chunk_idx
-         |      FROM tk),
-         |ch AS (SELECT c.doc_id, c.chunk_idx,
-         |         tk.toks[c.chunk_idx*24+1 : c.chunk_idx*24+32] AS chunk
-         |       FROM c JOIN tk USING (doc_id))
-         |SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-         |       CAST(chunk_idx * 24 AS INT) AS start_pos,
-         |       CAST(len(chunk) AS INT) AS chunk_len,
-         |       md5(array_to_string(chunk, ' ')) AS chunk_md5
-         |FROM ch""".stripMargin,
-
-    "q71_mixture" ->
-      s"""WITH d AS (SELECT doc_id, lang, CAST(len($toksSql) AS BIGINT) AS n_tok
-         |           FROM documents),
-         |g AS (SELECT * FROM d WHERE lang <> 'en'
-         |        OR ${hash32Sql(4, "CAST(doc_id AS VARCHAR)")} % 100 < 60),
-         |x AS (SELECT doc_id, lang, n_tok,
-         |        unnest(range(CASE WHEN lang = 'fr' THEN 3
-         |                          WHEN lang = 'de' THEN 2 ELSE 1 END)) AS e
-         |      FROM g)
-         |SELECT lang, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_src_docs,
-         |       CAST(COUNT(*) AS BIGINT) AS n_examples,
-         |       CAST(SUM(n_tok) AS BIGINT) AS n_tokens
-         |FROM x GROUP BY 1""".stripMargin,
-
-    // Priority-sampling oracle: the Lehmer step is BIGINT-exact
-    // (intermediates < 2^48) and the priority is one correctly-rounded
-    // IEEE division of integer-exact doubles, so both engines rank
-    // identically; doc_id breaks ties into a total order.
-    // q93: the q83 pipeline in FULL over corpus ∪ batch — the
-    // k-mergeable fold must reproduce this recompute bit-exactly
-    // (priorities are deterministic Lehmer uniforms on the id).
-    "q93_incremental_priority_sample" ->
-      """WITH src AS (SELECT lang, doc_id, n_chars FROM documents
-        |             UNION ALL
-        |             SELECT lang, doc_id + 1000000, n_chars * 1000
-        |             FROM documents WHERE doc_id % 11 = 0),
-        |d AS (SELECT lang, doc_id, n_chars,
-        |    1 + ((doc_id % 2147483646) * 48271) % 2147483647 AS u
-        |  FROM src WHERE n_chars > 0),
-        |p AS (SELECT lang, doc_id, n_chars,
-        |    CAST(n_chars AS DOUBLE) / CAST(u AS DOUBLE) AS priority FROM d),
-        |r AS (SELECT lang, doc_id, n_chars, priority,
-        |    CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY priority DESC, doc_id ASC) AS INT) AS rnk FROM p)
-        |SELECT lang, doc_id, n_chars, priority, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    // q92: naive GROUP BY + HAVING over events ∪ the batch slice —
-    // the folded-summary + candidate-bounded recheck must match it
-    // bit-for-bit (mergeable MG keeps the n/(k+1) bound).
-    "q92_incremental_heavy_hitters" ->
-      """WITH keyed AS (
-        |  SELECT CASE WHEN user_id % 10 < 7
-        |              THEN 'hot_' || CAST(user_id % 3 AS VARCHAR)
-        |              ELSE 'u' || CAST(user_id AS VARCHAR) END AS k
-        |  FROM events
-        |  UNION ALL
-        |  SELECT CASE WHEN user_id % 10 < 7
-        |              THEN 'hot_' || CAST(user_id % 3 AS VARCHAR)
-        |              ELSE 'u' || CAST(user_id AS VARCHAR) END AS k
-        |  FROM events WHERE event_id % 9 = 0),
-        |nn AS (SELECT k FROM keyed WHERE k IS NOT NULL),
-        |c AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS cnt
-        |      FROM nn GROUP BY 1)
-        |SELECT k, cnt FROM c
-        |WHERE cnt * 64 > (SELECT COUNT(*) FROM nn)""".stripMargin,
-
-    "q83_priority_sample" ->
-      """WITH d AS (SELECT lang, doc_id, n_chars,
-        |    1 + ((doc_id % 2147483646) * 48271) % 2147483647 AS u
-        |  FROM documents WHERE n_chars > 0),
-        |p AS (SELECT lang, doc_id, n_chars,
-        |    CAST(n_chars AS DOUBLE) / CAST(u AS DOUBLE) AS priority FROM d),
-        |r AS (SELECT lang, doc_id, n_chars, priority,
-        |    CAST(row_number() OVER (PARTITION BY lang
-        |      ORDER BY priority DESC, doc_id ASC) AS INT) AS rnk FROM p)
-        |SELECT lang, doc_id, n_chars, priority, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    // DSIR surrogate: identical hashed-bucket features (md5-based
-    // hash32 twin), identical integer weight algebra, same top-k
-    // tiebreak. SUM over BIGINT products stays within int64 (DuckDB
-    // widens to HUGEINT internally; the final CAST pins the schema).
-    "q86_dsir_select" ->
-      s"""WITH tk AS (SELECT doc_id, lang = 'en' AS tgt,
-         |              unnest($toksSql) AS tok FROM documents),
-         |tb AS (SELECT doc_id, tgt, ${hash32Sql(0, "tok")} % 64 AS b FROM tk),
-         |st AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS rc,
-         |         CAST(SUM(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS tc
-         |       FROM tb GROUP BY 1),
-         |tot AS (SELECT CAST(SUM(rc) AS BIGINT) AS n_raw,
-         |               CAST(SUM(tc) AS BIGINT) AS n_tgt FROM st),
-         |w AS (SELECT st.b, st.tc * tot.n_raw - st.rc * tot.n_tgt AS w
-         |      FROM st CROSS JOIN tot),
-         |sc AS (SELECT tb.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-         |       FROM tb JOIN w USING (b) GROUP BY 1)
-         |SELECT doc_id, score FROM sc
-         |ORDER BY score DESC, doc_id ASC LIMIT 100""".stripMargin,
-
-    // q90: the q86 pipeline recomputed in FULL over corpus ∪ batch —
-    // stat additivity makes the Spark side's incremental fold equal
-    // this bit-for-bit
-    "q90_incremental_dsir" ->
-      s"""WITH corpus AS (SELECT doc_id, text, lang FROM documents
-         |                UNION ALL
-         |                SELECT doc_id + 1000000,
-         |                  text || ' freshly ingested alpha text', lang
-         |                FROM documents WHERE doc_id % 7 = 0),
-         |tk AS (SELECT doc_id, lang = 'en' AS tgt,
-         |              unnest($toksSql) AS tok FROM corpus),
-         |tb AS (SELECT doc_id, tgt, ${hash32Sql(0, "tok")} % 64 AS b FROM tk),
-         |st AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS rc,
-         |         CAST(SUM(CASE WHEN tgt THEN 1 ELSE 0 END) AS BIGINT) AS tc
-         |       FROM tb GROUP BY 1),
-         |tot AS (SELECT CAST(SUM(rc) AS BIGINT) AS n_raw,
-         |               CAST(SUM(tc) AS BIGINT) AS n_tgt FROM st),
-         |w AS (SELECT st.b, st.tc * tot.n_raw - st.rc * tot.n_tgt AS w
-         |      FROM st CROSS JOIN tot),
-         |sc AS (SELECT tb.doc_id, CAST(SUM(w.w) AS BIGINT) AS score
-         |       FROM tb JOIN w USING (b) GROUP BY 1)
-         |SELECT doc_id, score FROM sc
-         |ORDER BY score DESC, doc_id ASC LIMIT 100""".stripMargin,
-
-    "q72_temperature_sample" ->
-      s"""WITH d AS (SELECT doc_id,
-         |    CASE WHEN source IS NULL OR source = '' THEN '(no_domain)'
-         |         ELSE lower(split_part(replace(replace(source,'https://',''),'http://',''),'/',1))
-         |    END AS domain
-         |  FROM documents),
-         |c AS (SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_total,
-         |        CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE)) * 1048576) AS BIGINT) AS f
-         |      FROM d GROUP BY 1),
-         |s AS (SELECT SUM(f) AS f_sum FROM c),
-         |q AS (SELECT domain, n_total,
-         |        LEAST(1048576, CAST(floor(CAST(f AS DOUBLE) * 250.0 * 1048576.0 /
-         |          (CAST(f_sum AS DOUBLE) * CAST(n_total AS DOUBLE))) AS BIGINT)) AS threshold
-         |      FROM c, s),
-         |k AS (SELECT d.domain, CAST(COUNT(*) AS BIGINT) AS n_kept,
-         |             MIN(d.doc_id) AS min_kept_id
-         |      FROM d JOIN q USING (domain)
-         |      WHERE ${hash32Sql(5, "CAST(doc_id AS VARCHAR)")} % 1048576 < threshold
-         |      GROUP BY 1)
-         |SELECT q.domain, q.n_total, q.threshold,
-         |       CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept, k.min_kept_id
-         |FROM q LEFT JOIN k USING (domain)""".stripMargin,
-
-    "q75_corrupt_quarantine" ->
-      s"""WITH t AS (SELECT doc_id, array_to_string($toksSql, ' ') AS clean
-         |           FROM documents),
-         |j AS (SELECT doc_id, doc_id % 7 = 0 AS is_corrupt, clean FROM t)
-         |SELECT is_corrupt, CAST(COUNT(*) AS BIGINT) AS n,
-         |       CAST(SUM(CASE WHEN is_corrupt THEN 0
-         |                     ELSE length(clean) END) AS BIGINT) AS text_chars,
-         |       MIN(CASE WHEN is_corrupt THEN NULL ELSE doc_id END) AS min_id
-         |FROM j GROUP BY 1""".stripMargin,
-
-    // Naive per-group GROUP BY + HAVING — the per-group sketch plan
-    // must reproduce it exactly (per-group MG candidates ⊇ each
-    // group's HAVING set; integer threshold on both sides).
-    "q79_group_heavy_hitters" ->
-      """WITH keyed AS (
-        |  SELECT event_type AS grp,
-        |         CASE WHEN user_id % 10 < 7
-        |              THEN 'hot_' || CAST(user_id % 3 AS VARCHAR)
-        |              ELSE 'u' || CAST(user_id AS VARCHAR) END AS k
-        |  FROM events
-        |  WHERE event_type IS NOT NULL),
-        |nn AS (SELECT grp, k FROM keyed WHERE k IS NOT NULL),
-        |c AS (SELECT grp, k, CAST(COUNT(*) AS BIGINT) AS cnt
-        |      FROM nn GROUP BY 1, 2),
-        |t AS (SELECT grp, SUM(cnt) AS n FROM c GROUP BY 1)
-        |SELECT c.grp, c.k, c.cnt FROM c JOIN t USING (grp)
-        |WHERE c.cnt * 64 > t.n""".stripMargin,
-
-    // Naive all-pairs weighted-score join — the per-field-blocked
-    // Spark plan must reproduce it exactly (the candidate union is
-    // complete for score > 0; both engines evaluate the SAME
-    // fixed-order double expression from integer distances, so the
-    // score column matches bit-for-bit).
-    "q80_entity_resolution" ->
-      """WITH r AS (
-        |  SELECT doc_id AS id,
-        |    CASE WHEN doc_id % 13 = 0
-        |         THEN 'z' || substr(lower(substr(text, 1, 20)), 2)
-        |         ELSE lower(substr(text, 1, 20)) END AS name,
-        |    'c' || CAST(doc_id % 50 AS VARCHAR) AS code,
-        |    CASE WHEN doc_id % 19 = 0
-        |         THEN substr(lower(text), 30, 12) || 'q'
-        |         ELSE substr(lower(text), 30, 12) END AS city
-        |  FROM documents),
-        |p AS (SELECT a.id AS id_a, b.id AS id_b,
-        |        levenshtein(a.name, b.name) AS dn,
-        |        CASE WHEN a.code IS NOT NULL AND a.code = b.code
-        |             THEN 1 ELSE 0 END AS mc,
-        |        levenshtein(a.city, b.city) AS dc
-        |      FROM r a JOIN r b ON a.id < b.id),
-        |s AS (SELECT id_a, id_b,
-        |        (CASE WHEN dn <= 2 THEN 0.5 * (1 - CAST(dn AS DOUBLE) / 3.0)
-        |              ELSE 0.0 END)
-        |      + (CASE WHEN mc = 1 THEN 0.3 ELSE 0.0 END)
-        |      + (CASE WHEN dc <= 1 THEN 0.2 * (1 - CAST(dc AS DOUBLE) / 2.0)
-        |              ELSE 0.0 END) AS score
-        |      FROM p)
-        |SELECT id_a, id_b, score FROM s WHERE score >= 0.4""".stripMargin,
-
-    // Naive all-pairs levenshtein — the segment-blocked Spark plan
-    // must reproduce it exactly (blocking only prunes pairs that
-    // provably exceed d; both engines use unit-cost Levenshtein).
-    "q78_fuzzy_match" ->
-      """WITH s0 AS (SELECT doc_id, lower(substr(text, 1, 24)) AS s0
-        |            FROM documents),
-        |s AS (SELECT doc_id,
-        |        CASE WHEN doc_id % 17 = 0 THEN 'z' || substr(s0, 2)
-        |             ELSE s0 END AS s
-        |      FROM s0),
-        |p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |             levenshtein(a.s, b.s) AS dist
-        |      FROM s a JOIN s b ON a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, CAST(dist AS INT) AS dist
-        |FROM p WHERE dist <= 2""".stripMargin,
-
-    // Naive value-compare full outer join — the digest-first Spark
-    // plan must reproduce it exactly (digests are compared only
-    // within Spark; the oracle compares the values themselves).
-    "q77_snapshot_diff" ->
-      """WITH old AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 != 1),
-        |new AS (SELECT doc_id,
-        |          CASE WHEN doc_id % 11 = 0 THEN text || ' v2' ELSE text END AS text
-        |        FROM documents WHERE doc_id % 7 != 3),
-        |j AS (SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-        |             o.text AS ot, n.text AS nt,
-        |             CASE WHEN o.doc_id IS NULL THEN 'insert'
-        |                  WHEN n.doc_id IS NULL THEN 'delete'
-        |                  WHEN o.text IS DISTINCT FROM n.text THEN 'update' END AS op
-        |      FROM old o FULL OUTER JOIN new n ON o.doc_id = n.doc_id)
-        |SELECT doc_id, CASE WHEN op = 'delete' THEN ot ELSE nt END AS text, op
-        |FROM j WHERE op IS NOT NULL""".stripMargin,
-
-    // The same BIGINT recurrence unrolled as one CTE per iteration:
-    // DuckDB's `//` is floor division and every operand is
-    // non-negative, so it coincides with Spark's truncating DIV and
-    // the comparison is hash-exact — no float tolerance anywhere.
-    "q82_pagerank" -> pageRankOracleSql(iters = 4),
-
-    // q91: the SAME recurrence over base ∪ batch — the folded store
-    // is row-identical to a fresh build over the union, so the
-    // incremental path must reproduce the full recompute bit-exactly.
-    // Batch edges are disjoint from base by the +2e6 dst offset, so
-    // UNION ALL is exact.
-    "q91_incremental_pagerank" -> pageRankOracleSqlOver(
-      """e0 AS (SELECT DISTINCT o_custkey * 2 AS src,
-        |              l_suppkey * 2 + 1 AS dst
-        |            FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-        |base AS (SELECT src, dst FROM e0
-        |         UNION SELECT dst AS src, src AS dst FROM e0),
-        |batch AS (SELECT DISTINCT l_suppkey * 2 + 1 AS src,
-        |            l_partkey * 2 + 2000000 AS dst
-        |          FROM lineitem WHERE l_orderkey % 13 = 0),
-        |edges AS (SELECT src, dst FROM base
-        |          UNION ALL SELECT src, dst FROM batch)""".stripMargin,
-      iters = 4),
-
-    // Same naive value-compare oracle as q77 — the partition
-    // short-circuit is a physical pruning whose exactness the oracle
-    // verifies (one oracle, two execution paths, the d13/d14
-    // discipline).
-    "q81_snapshot_diff_partitioned" ->
-      """WITH docs AS (SELECT doc_id, doc_id % 16 AS p, text FROM documents),
-        |old AS (SELECT * FROM docs WHERE NOT (p = 7 AND doc_id % 3 = 0)),
-        |new AS (SELECT doc_id, p,
-        |          CASE WHEN p = 11 AND doc_id % 3 = 0 THEN text || ' v2'
-        |               ELSE text END AS text
-        |        FROM docs WHERE NOT (p = 3 AND doc_id % 5 = 0)),
-        |j AS (SELECT COALESCE(o.doc_id, n.doc_id) AS doc_id,
-        |             COALESCE(o.p, n.p) AS p,
-        |             o.text AS ot, n.text AS nt,
-        |             CASE WHEN o.doc_id IS NULL THEN 'insert'
-        |                  WHEN n.doc_id IS NULL THEN 'delete'
-        |                  WHEN o.text IS DISTINCT FROM n.text THEN 'update' END AS op
-        |      FROM old o FULL OUTER JOIN new n ON o.doc_id = n.doc_id)
-        |SELECT doc_id, p, CASE WHEN op = 'delete' THEN ot ELSE nt END AS text, op
-        |FROM j WHERE op IS NOT NULL""".stripMargin,
-
-    // Naive full-shuffle plan — the two-pass sketch+recheck must
-    // reproduce it exactly (MG guarantees candidates ⊇ the HAVING
-    // set; the final threshold is integer arithmetic on both sides).
-    "q76_heavy_hitters" ->
-      """WITH keyed AS (
-        |  SELECT CASE WHEN user_id % 10 < 7
-        |              THEN 'hot_' || CAST(user_id % 3 AS VARCHAR)
-        |              ELSE 'u' || CAST(user_id AS VARCHAR) END AS k
-        |  FROM events),
-        |nn AS (SELECT k FROM keyed WHERE k IS NOT NULL),
-        |c AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS cnt
-        |      FROM nn GROUP BY 1)
-        |SELECT k, cnt FROM c
-        |WHERE cnt * 64 > (SELECT COUNT(*) FROM nn)""".stripMargin,
-
-    "q74_partition_prune" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value
-        |FROM events WHERE event_type IN ('signup', 'purchase')
-        |GROUP BY 1""".stripMargin,
-
-    "q85_time_slice" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-        |  AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |GROUP BY 1""".stripMargin,
-
-    "q73_epoch_shuffle" ->
-      s"""WITH nn AS (SELECT greatest((COUNT(*) + 63) // 64, 1) AS n_shards
-         |            FROM documents),
-         |e AS (SELECT doc_id, unnest([1, 2]) AS epoch FROM documents),
-         |t AS (SELECT epoch, doc_id,
-         |        ${hash32Sql(6, "CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)")} AS key
-         |      FROM e)
-         |SELECT epoch, key % (SELECT n_shards FROM nn) AS shard, doc_id,
-         |       CAST(ROW_NUMBER() OVER (PARTITION BY epoch, key % (SELECT n_shards FROM nn)
-         |         ORDER BY key ASC, doc_id ASC) AS BIGINT) AS pos
-         |FROM t""".stripMargin,
-
-    "t14_lm_score" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |u AS (SELECT doc_id, unnest(toks) AS w FROM tk),
-         |vocab AS (SELECT CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM u),
-         |cu AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS cw FROM u GROUP BY 1),
-         |bg AS (SELECT doc_id,
-         |         unnest(toks[1:len(toks)-1]) AS w1,
-         |         unnest(list_transform(range(len(toks) - 1),
-         |           i -> toks[i+1] || ' ' || toks[i+2])) AS b
-         |       FROM tk WHERE len(toks) > 1),
-         |cb AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cbg FROM bg GROUP BY 1),
-         |j AS (SELECT bg.doc_id,
-         |        (cb.cbg * 1000000) // (cu.cw + (SELECT v FROM vocab)) AS p_fp
-         |      FROM bg JOIN cb USING (b) JOIN cu ON bg.w1 = cu.w),
-         |a AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-         |             CAST(SUM(p_fp) AS BIGINT) AS score_fp FROM j GROUP BY 1)
-         |SELECT doc_id, n_bigrams, score_fp,
-         |       CAST(score_fp AS DOUBLE) / CAST(n_bigrams AS DOUBLE) / 1000000.0
-         |         AS lm_score
-         |FROM a""".stripMargin,
-
-    // t15: the same k BPE iterations as chained CTEs. Symbol state is
-    // the chr(31)-delimited string; literal replace (left-to-right
-    // non-overlapping in both engines) applies each merge greedily;
-    // the argmax tie-break is ORDER BY cnt DESC, l ASC, r ASC in both.
-    "t15_bpe_merges" -> {
-      val k = 6
-      def iter(i: Int): String = {
-        val prev = if (i == 1) "s0" else s"s${i - 1}"
-        s"""sy$i AS (SELECT freq,
-           |  list_filter(string_split(s, chr(31)), x -> x <> '') AS sy FROM $prev),
-           |p$i AS (SELECT sy[j+1] AS l, sy[j+2] AS r, CAST(SUM(freq) AS BIGINT) AS cnt
-           |        FROM (SELECT sy, freq, unnest(range(len(sy) - 1)) AS j FROM sy$i)
-           |        GROUP BY 1, 2),
-           |b$i AS MATERIALIZED (SELECT CAST($i AS INTEGER) AS mrank, l AS lhs, r AS rhs, cnt
-           |        FROM p$i ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-           |s$i AS MATERIALIZED (SELECT w, freq, replace(s,
-           |          chr(31) || (SELECT lhs FROM b$i) || chr(31) || chr(31) ||
-           |            (SELECT rhs FROM b$i) || chr(31),
-           |          chr(31) || (SELECT lhs FROM b$i) ||
-           |            (SELECT rhs FROM b$i) || chr(31)) AS s FROM $prev)"""
-          .stripMargin
-      }
-      s"""WITH tk AS (SELECT $toksSql AS toks FROM documents),
-         |words AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq
-         |          FROM (SELECT unnest(toks) AS w FROM tk) GROUP BY 1),
-         |s0 AS MATERIALIZED (SELECT w, freq, chr(31) || array_to_string(
-         |          list_transform(range(1, len(w) + 1), i -> substr(w, i, 1)),
-         |          chr(31) || chr(31)) || chr(31) AS s FROM words),
-         |${(1 to k).map(iter).mkString(",\n")}
-         |${(1 to k).map(i => s"SELECT * FROM b$i").mkString(" UNION ALL ")}"""
-        .stripMargin
-    },
-
-    // t16: the t15 iteration chain, then symbol frequencies of the
-    // FINAL state s_k weighted by word frequency — the corpus token
-    // frequency table under the learned tokenizer, identical in both
-    // engines because the state strings are.
-    // t18: the t15 iteration chain over the CJK-mapped corpus — the
-    // oracle trains with a COMPLETE pair table, the Spark gate with
-    // maxPairs = 8, so the hash proves the truncation machinery picks
-    // the same merges a complete table does. DuckDB's substr/len are
-    // character-based (UTF-8-aware) like Spark's, and the alphabet is
-    // BMP-only, so both the character split and the tie-break order
-    // agree byte-for-byte.
-    "t18_bpe_cjk" -> {
-      val k = 6
-      def ch(salt: Int): String =
-        s"substr('$cjkAlpha', CAST(1 + ${hash32Sql(salt, "t")} % 96 AS INT), 1)"
-      def iter(i: Int): String = {
-        val prev = if (i == 1) "s0" else s"s${i - 1}"
-        s"""sy$i AS (SELECT freq,
-           |  list_filter(string_split(s, chr(31)), x -> x <> '') AS sy FROM $prev),
-           |p$i AS (SELECT sy[j+1] AS l, sy[j+2] AS r, CAST(SUM(freq) AS BIGINT) AS cnt
-           |        FROM (SELECT sy, freq, unnest(range(len(sy) - 1)) AS j FROM sy$i)
-           |        GROUP BY 1, 2),
-           |b$i AS MATERIALIZED (SELECT CAST($i AS INTEGER) AS mrank, l AS lhs, r AS rhs, cnt
-           |        FROM p$i ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-           |s$i AS MATERIALIZED (SELECT w, freq, replace(s,
-           |          chr(31) || (SELECT lhs FROM b$i) || chr(31) || chr(31) ||
-           |            (SELECT rhs FROM b$i) || chr(31),
-           |          chr(31) || (SELECT lhs FROM b$i) ||
-           |            (SELECT rhs FROM b$i) || chr(31)) AS s FROM $prev)"""
-          .stripMargin
-      }
-      s"""WITH tk AS (SELECT $toksSql AS toks FROM documents),
-         |ti AS (SELECT unnest(toks) AS t FROM tk),
-         |cw AS (SELECT ${ch(0)} || ${ch(1)} || ${ch(2)} AS w FROM ti),
-         |words AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM cw GROUP BY 1),
-         |s0 AS MATERIALIZED (SELECT w, freq, chr(31) || array_to_string(
-         |          list_transform(range(1, len(w) + 1), i -> substr(w, i, 1)),
-         |          chr(31) || chr(31)) || chr(31) AS s FROM words),
-         |${(1 to k).map(iter).mkString(",\n")}
-         |${(1 to k).map(i => s"SELECT * FROM b$i").mkString(" UNION ALL ")}"""
-        .stripMargin
-    },
-
-    "t16_bpe_encode" -> {
-      val k = 6
-      def iter(i: Int): String = {
-        val prev = if (i == 1) "s0" else s"s${i - 1}"
-        s"""sy$i AS (SELECT freq,
-           |  list_filter(string_split(s, chr(31)), x -> x <> '') AS sy FROM $prev),
-           |p$i AS (SELECT sy[j+1] AS l, sy[j+2] AS r, CAST(SUM(freq) AS BIGINT) AS cnt
-           |        FROM (SELECT sy, freq, unnest(range(len(sy) - 1)) AS j FROM sy$i)
-           |        GROUP BY 1, 2),
-           |b$i AS MATERIALIZED (SELECT l AS lhs, r AS rhs
-           |        FROM p$i ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-           |s$i AS MATERIALIZED (SELECT w, freq, replace(s,
-           |          chr(31) || (SELECT lhs FROM b$i) || chr(31) || chr(31) ||
-           |            (SELECT rhs FROM b$i) || chr(31),
-           |          chr(31) || (SELECT lhs FROM b$i) ||
-           |            (SELECT rhs FROM b$i) || chr(31)) AS s FROM $prev)"""
-          .stripMargin
-      }
-      s"""WITH tk AS (SELECT $toksSql AS toks FROM documents),
-         |words AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq
-         |          FROM (SELECT unnest(toks) AS w FROM tk) GROUP BY 1),
-         |s0 AS MATERIALIZED (SELECT w, freq, chr(31) || array_to_string(
-         |          list_transform(range(1, len(w) + 1), i -> substr(w, i, 1)),
-         |          chr(31) || chr(31)) || chr(31) AS s FROM words),
-         |${(1 to k).map(iter).mkString(",\n")}
-         |SELECT token, CAST(SUM(freq) AS BIGINT) AS cnt
-         |FROM (SELECT freq, unnest(list_filter(string_split(s, chr(31)),
-         |        x -> x <> '')) AS token FROM s$k)
-         |GROUP BY 1"""
-        .stripMargin
-    },
-
-    "c3_training_corpus" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text, source FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text, source FROM documents WHERE doc_id % 5 = 0),
-         |t AS (SELECT doc_id, text, source, $toksSql AS toks FROM corpus),
-         |c AS (SELECT doc_id, text, source, len(toks) AS ntok,
-         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS c_en,
-         |  len(list_filter(toks, x -> x IN ('el','la','de','y','que','en','un','una','los','por'))) AS c_es,
-         |  len(list_filter(toks, x -> x IN ('der','die','das','und','ist','von','mit','den','ein','zu'))) AS c_de,
-         |  len(list_filter(toks, x -> x IN ('le','la','les','de','et','un','une','est','que','pour'))) AS c_fr
-         |  FROM t),
-         |scored AS (SELECT doc_id, text, source, ntok,
-         |  (CAST(LEAST(ntok, 200) AS DOUBLE) / 200.0
-         |   + LEAST(CASE WHEN ntok > 0 THEN CAST(c_en AS DOUBLE) / CAST(ntok AS DOUBLE)
-         |                ELSE 0.0 END, 0.5) * 2.0) / 2.0 AS q,
-         |  CASE WHEN greatest(c_en,c_es,c_de,c_fr) = 0 THEN 'und'
-         |       WHEN c_en = greatest(c_en,c_es,c_de,c_fr) THEN 'en'
-         |       WHEN c_es = greatest(c_en,c_es,c_de,c_fr) THEN 'es'
-         |       WHEN c_de = greatest(c_en,c_es,c_de,c_fr) THEN 'de'
-         |       ELSE 'fr' END AS lang
-         |  FROM c),
-         |rep AS (SELECT doc_id, CAST(MAX(cnt) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE) AS top_frac
-         |        FROM (SELECT doc_id, tok, COUNT(*) AS cnt
-         |              FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
-         |              GROUP BY 1, 2) GROUP BY 1),
-         |kept AS (SELECT s.*, r.top_frac FROM scored s JOIN rep r USING (doc_id)
-         |         WHERE s.lang = 'en' AND s.q >= 0.2 AND r.top_frac <= 0.3),
-         |dd AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text)
-         |                   ORDER BY doc_id ASC) AS rn FROM kept),
-         |dom AS (SELECT *,
-         |    CASE WHEN source IS NULL OR source = '' THEN '(no_domain)'
-         |         ELSE lower(split_part(replace(replace(source,'https://',''),'http://',''),'/',1))
-         |    END AS domain
-         |  FROM dd WHERE rn = 1),
-         |cap AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY domain
-         |          ORDER BY ${hash32Sql(7, "CAST(doc_id AS VARCHAR)")} ASC, doc_id ASC) AS rn2
-         |        FROM dom)
-         |SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |       CAST(SUM(ntok) AS BIGINT) AS n_tokens,
-         |       CAST(SUM(CAST(floor(q * 100000000) AS BIGINT)) AS DOUBLE)
-         |         / CAST(COUNT(*) AS DOUBLE) / 100000000.0 AS avg_quality,
-         |       MIN(doc_id) AS min_doc
-         |FROM cap WHERE rn2 <= 50 GROUP BY 1""".stripMargin,
-
-    // t17: within-doc line repetition over the d11 corpus with the
-    // first line re-appended to every 7th doc. Counts and fractions
-    // are integer-sum + one double division — bit-portable.
-    "t17_line_repetition" ->
-      s"""WITH $corpusParaSql,
-         |rep AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 7 = 0
-         |       THEN text || chr(10) || string_split(text, chr(10))[1]
-         |       ELSE text END AS text FROM corpus),
-         |l AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line
-         |      FROM rep),
-         |lc AS (SELECT doc_id, line, COUNT(*) AS c FROM l GROUP BY 1, 2),
-         |d AS (SELECT doc_id, SUM(c) AS n,
-         |        SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup,
-         |        SUM(len(line) * c) AS chars,
-         |        SUM(CASE WHEN c > 1 THEN len(line) * c ELSE 0 END) AS dupchars
-         |      FROM lc GROUP BY 1)
-         |SELECT doc_id, CAST(n AS BIGINT) AS n_lines,
-         |  CASE WHEN n = 0 THEN 0.0
-         |       ELSE CAST(dup AS DOUBLE) / CAST(n AS DOUBLE) END AS dup_line_frac,
-         |  CASE WHEN chars = 0 THEN 0.0
-         |       ELSE CAST(dupchars AS DOUBLE) / CAST(chars AS DOUBLE)
-         |       END AS dup_char_frac
-         |FROM d""".stripMargin,
-
-    // c4: cross-doc boilerplate removal — common-line dictionary
-    // (≥10 distinct docs) mark-joined back, survivors re-joined in
-    // position order (the d25 ordered-FILTERed-string_agg pattern).
-    "c4_boilerplate_lines" ->
-      s"""WITH $corpusParaSql,
-         |t AS (SELECT doc_id, string_split(text, chr(10)) AS parts FROM corpus),
-         |p AS (SELECT doc_id, unnest(range(len(parts))) AS pos FROM t),
-         |l AS (SELECT p.doc_id, p.pos, t.parts[p.pos + 1] AS line
-         |      FROM p JOIN t USING (doc_id)),
-         |cm AS (SELECT line FROM (SELECT line, COUNT(DISTINCT doc_id) AS nd
-         |                         FROM l GROUP BY 1) WHERE nd >= 10),
-         |m AS (SELECT l.doc_id, l.pos, l.line, cm.line IS NOT NULL AS is_common
-         |      FROM l LEFT JOIN cm ON l.line = cm.line)
-         |SELECT doc_id,
-         |  coalesce(string_agg(line, chr(10) ORDER BY pos)
-         |             FILTER (WHERE NOT is_common), '') AS clean_text,
-         |  CAST(COUNT(*) FILTER (WHERE is_common) AS BIGINT) AS n_removed
-         |FROM m GROUP BY 1""".stripMargin,
-
-    // c5: the full recompute over the ticker corpus with
-    // minDocs = nDocs/25 — the incremental store's latest-wins
-    // changelog must equal this bit-exactly (including re-emitted
-    // docs whose lines crossed the threshold after they shipped).
-    "c5_boilerplate_ingest" ->
-      s"""WITH $corpusParaSql,
-         |tick AS (SELECT doc_id,
-         |  CASE WHEN doc_id % 20 = 0
-         |       THEN text || chr(10) ||
-         |            'breaking news ticker updates every minute'
-         |       ELSE text END AS text FROM corpus),
-         |t AS (SELECT doc_id, string_split(text, chr(10)) AS parts FROM tick),
-         |p AS (SELECT doc_id, unnest(range(len(parts))) AS pos FROM t),
-         |l AS (SELECT p.doc_id, p.pos, t.parts[p.pos + 1] AS line
-         |      FROM p JOIN t USING (doc_id)),
-         |cm AS (SELECT line FROM (SELECT line, COUNT(DISTINCT doc_id) AS nd
-         |                         FROM l GROUP BY 1)
-         |       WHERE nd >= (SELECT COUNT(*) // 25 FROM documents)),
-         |m AS (SELECT l.doc_id, l.pos, l.line, cm.line IS NOT NULL AS is_common
-         |      FROM l LEFT JOIN cm ON l.line = cm.line)
-         |SELECT doc_id,
-         |  coalesce(string_agg(line, chr(10) ORDER BY pos)
-         |             FILTER (WHERE NOT is_common), '') AS clean_text,
-         |  CAST(COUNT(*) FILTER (WHERE is_common) AS BIGINT) AS n_removed
-         |FROM m GROUP BY 1""".stripMargin,
-
-    "t11_novelty" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |shl AS (SELECT doc_id, list_distinct(list_transform($shinglesSql,
-         |          s -> ${hash32Sql(0, "s")})) AS hs FROM tk),
-         |sh AS (SELECT doc_id, unnest(hs) AS h FROM shl),
-         |fst AS (SELECT h, MIN(doc_id) AS first_doc FROM sh GROUP BY 1)
-         |SELECT sh.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles,
-         |       CAST(SUM(CASE WHEN fst.first_doc = sh.doc_id
-         |                     THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-         |       CAST(SUM(CASE WHEN fst.first_doc = sh.doc_id
-         |                     THEN 1 ELSE 0 END) AS DOUBLE)
-         |         / CAST(COUNT(*) AS DOUBLE) AS novelty_frac
-         |FROM sh JOIN fst USING (h) GROUP BY sh.doc_id""".stripMargin,
-
-    "s3_stream_dedup" ->
-      "SELECT DISTINCT user_id, event_type FROM events",
-
-    // s7: batch simulation of dropDuplicatesWithinWatermark over the
-    // ordered 3-batch staging, with the engine's pinned semantics (see
-    // the s7 entry notes): batch-b lookups see state as of end of
-    // batch b-1; eviction at end of batch b uses the watermark that
-    // ENTERED b (max ts of batches < b, minus the 2h horizon); a
-    // deduped re-arrival does not refresh the stored expiry. With
-    // three batches that reduces to: e0 = keys of b0; e1 = keys of b1
-    // not stored in b0 (no eviction has run on b0's state yet); e2 =
-    // keys of b2 whose first-stored entry (b0 or b1) was evicted at
-    // end of b1 by wm0, or never stored.
-    "s7_stream_dedup_watermark" ->
-      """WITH base AS (SELECT DISTINCT
-        |         COALESCE(user_id, 0) % 40 AS k, event_id % 3 AS b
-        |       FROM events),
-        |r AS (SELECT k, b,
-        |        TIMESTAMP '2024-01-01'
-        |          + (b * 24 + k % 12) * INTERVAL 1 HOUR AS ts
-        |      FROM base),
-        |wm0 AS (SELECT MAX(ts) - INTERVAL 2 HOUR AS w FROM r WHERE b = 0),
-        |e0 AS (SELECT k, ts FROM r WHERE b = 0),
-        |e1 AS (SELECT k, ts FROM r
-        |       WHERE b = 1 AND k NOT IN (SELECT k FROM e0)),
-        |st2 AS (SELECT k FROM e0
-        |        WHERE ts + INTERVAL 2 HOUR > (SELECT w FROM wm0)
-        |        UNION
-        |        SELECT k FROM e1
-        |        WHERE ts + INTERVAL 2 HOUR > (SELECT w FROM wm0)),
-        |e2 AS (SELECT k, ts FROM r
-        |       WHERE b = 2 AND k NOT IN (SELECT k FROM st2)),
-        |em AS (SELECT * FROM e0 UNION ALL SELECT * FROM e1
-        |       UNION ALL SELECT * FROM e2)
-        |SELECT k, epoch_us(ts) AS ts_us FROM em""".stripMargin,
-
-    // s8: same naive full-shuffle plan as q76 — the streaming sketch +
-    // batch exact-recheck must reproduce it exactly (the MG candidate
-    // union is a superset of the HAVING set in every run; the final
-    // threshold is integer arithmetic on both sides).
-    "s8_stream_heavy_hitters" ->
-      """WITH keyed AS (
-        |  SELECT CASE WHEN user_id % 10 < 7
-        |              THEN 'hot_' || CAST(user_id % 3 AS VARCHAR)
-        |              ELSE 'u' || CAST(user_id AS VARCHAR) END AS k
-        |  FROM events),
-        |nn AS (SELECT k FROM keyed WHERE k IS NOT NULL),
-        |c AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS cnt
-        |      FROM nn GROUP BY 1)
-        |SELECT k, cnt FROM c
-        |WHERE cnt * 64 > (SELECT COUNT(*) FROM nn)""".stripMargin,
-
-    // s9: the roundtrip identity apply(old, diff(old,new)) == new, so
-    // the oracle is the NEW snapshot computed directly from the
-    // fixture's definition — no diff, no apply on the oracle side.
-    "s9_stream_cdc_apply" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 11 = 0 THEN text || ' v2' ELSE text END AS text
-        |FROM documents WHERE doc_id % 7 != 3""".stripMargin,
-
-    // q84: the merged-schema read must equal the union reconstructed
-    // from the raw fixture (v1 = even ids with lang/n_chars nulled).
-    "q84_schema_evolution" ->
-      """WITH g AS (SELECT
-        |    CASE WHEN doc_id % 2 = 0 THEN 'v1' ELSE 'v2' END AS gen,
-        |    CASE WHEN doc_id % 2 = 0 THEN NULL ELSE lang END AS lang,
-        |    CASE WHEN doc_id % 2 = 0 THEN NULL ELSE n_chars END AS n_chars,
-        |    text
-        |  FROM documents)
-        |SELECT gen, COALESCE(lang, '(pre_schema)') AS lang_bucket,
-        |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(SUM(COALESCE(n_chars, 0)) AS BIGINT) AS chars_known,
-        |       CAST(SUM(length(text)) AS BIGINT) AS text_chars
-        |FROM g GROUP BY 1, 2""".stripMargin,
-
-    // s10: the streamed broadcast-enriched rollup must equal the batch
-    // join + GROUP BY computed directly on the fixture. The key is the
-    // NON-NEGATIVE modulo ((x%25)+25)%25 so both engines agree even if
-    // a future fixture ships negative user_id (Spark's pmod is always
-    // non-negative; DuckDB's % takes the dividend's sign).
-    "s10_stream_enrich" ->
-      """WITH e AS (SELECT ((user_id % 25) + 25) % 25 AS nk, event_type, value
-        |           FROM events WHERE user_id IS NOT NULL),
-        |j AS (SELECT n.n_name, e.event_type, e.value
-        |      FROM e JOIN nation n ON e.nk = n.n_nationkey)
-        |SELECT n_name, event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM j GROUP BY 1, 2""".stripMargin,
-
-    "t12_vocab" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |t AS (SELECT unnest(toks) AS token FROM tk),
-         |c AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS n FROM t GROUP BY 1),
-         |tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM c),
-         |top AS (SELECT token, n FROM c ORDER BY n DESC, token ASC LIMIT 20),
-         |r AS (SELECT token, n,
-         |        CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS INT) AS rank,
-         |        CAST(SUM(n) OVER (ORDER BY n DESC, token ASC
-         |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_n
-         |      FROM top)
-         |SELECT token, n, rank, cum_n,
-         |       CAST(cum_n AS DOUBLE) / CAST(total AS DOUBLE) AS coverage
-         |FROM r CROSS JOIN tot""".stripMargin,
-
-    "d16_span_coverage" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 5 = 0),
-         |tk AS (SELECT doc_id, $toksSql AS toks FROM corpus),
-         |sh AS (SELECT doc_id,
-         |         unnest(range(len(toks) - 4)) AS p,
-         |         unnest(list_transform(list_transform(range(len(toks) - 4),
-         |           i -> array_to_string(toks[i+1:i+5], ' ')),
-         |           s -> ${hash32Sql(0, "s")})) AS h
-         |       FROM tk WHERE len(toks) >= 5),
-         |dup AS (SELECT h FROM sh GROUP BY h HAVING COUNT(*) > 1),
-         |c AS (SELECT sh.doc_id, sh.p,
-         |        lag(sh.p) OVER (PARTITION BY sh.doc_id ORDER BY sh.p ASC) AS prev
-         |      FROM sh JOIN dup USING (h)),
-         |a AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_starts,
-         |        CAST(SUM(CASE WHEN prev IS NULL THEN 5
-         |                      ELSE LEAST(5, p - prev) END) AS BIGINT) AS n_covered
-         |      FROM c GROUP BY 1),
-         |b AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens FROM tk)
-         |SELECT b.doc_id, b.n_tokens,
-         |       CAST(COALESCE(a.n_dup_starts, 0) AS BIGINT) AS n_dup_starts,
-         |       CAST(COALESCE(a.n_covered, 0) AS BIGINT) AS n_covered,
-         |       CASE WHEN b.n_tokens > 0
-         |            THEN CAST(COALESCE(a.n_covered, 0) AS DOUBLE) / CAST(b.n_tokens AS DOUBLE)
-         |            ELSE 0.0 END AS dup_span_frac
-         |FROM b LEFT JOIN a USING (doc_id)""".stripMargin,
-
-    // d25: the same window/keep-first/coverage pipeline in SQL.
-    // keep-first via ROW_NUMBER(rn=1) == Spark's min(struct)+count>=2
-    // (both select all occurrences except the lexicographic minimum
-    // of keys occurring at least twice); covered-token test is a
-    // RANGE window over contiguous positions; cleaned text rebuilt
-    // with an ordered FILTERed string_agg.
-    "d25_exact_substr" ->
-      s"""WITH src AS (SELECT doc_id,
-         |         CASE WHEN doc_id % 7 = 0
-         |              THEN text || '$exactSubstrBoiler'
-         |              ELSE text END AS text
-         |       FROM documents),
-         |tk AS (SELECT doc_id, $toksSql AS toks FROM src),
-         |occ AS (SELECT doc_id, unnest(range(len(toks) - 7)) AS wpos, toks
-         |        FROM tk WHERE len(toks) >= 8),
-         |k AS (SELECT doc_id, wpos,
-         |        array_to_string(toks[wpos+1:wpos+8], ' ') AS wkey FROM occ),
-         |r AS (SELECT doc_id, wpos,
-         |        ROW_NUMBER() OVER (PARTITION BY wkey
-         |          ORDER BY doc_id ASC, wpos ASC) AS rn FROM k),
-         |m AS (SELECT doc_id, wpos FROM r WHERE rn > 1),
-         |t AS (SELECT doc_id, unnest(range(len(toks))) AS p, toks FROM tk),
-         |tok AS (SELECT doc_id, p, toks[p+1] AS tok FROM t),
-         |f AS (SELECT tok.doc_id, tok.p, tok.tok,
-         |        CASE WHEN m.wpos IS NOT NULL THEN 1 ELSE 0 END AS flag
-         |      FROM tok LEFT JOIN m
-         |        ON tok.doc_id = m.doc_id AND tok.p = m.wpos),
-         |c AS (SELECT doc_id, p, tok,
-         |        MAX(flag) OVER (PARTITION BY doc_id ORDER BY p ASC
-         |          RANGE BETWEEN 7 PRECEDING AND CURRENT ROW) AS cov
-         |      FROM f)
-         |SELECT doc_id,
-         |       COALESCE(string_agg(tok, ' ' ORDER BY p ASC)
-         |         FILTER (WHERE cov = 0), '') AS clean_text,
-         |       CAST(SUM(cov) AS BIGINT) AS n_removed
-         |FROM c GROUP BY doc_id""".stripMargin,
-
-    // Naive all-pairs form over the same bounded doc slice — the
-    // prefix-filtered Spark plan must reproduce it exactly (the
-    // filters only prune candidates that provably cannot reach τ; the
-    // threshold test is pure BIGINT arithmetic on both engines).
-    "d17_apss_cosine" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, tok AS term, CAST(COUNT(*) AS BIGINT) AS tf
-         |  FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents
-         |        WHERE doc_id % 3 = 0 AND doc_id < 2500)
-         |  GROUP BY 1, 2),
-         |nrm AS (SELECT doc_id, CAST(SUM(tf*tf) AS BIGINT) AS n2 FROM tf GROUP BY 1),
-         |dp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |         CAST(SUM(a.tf * b.tf) AS BIGINT) AS dot
-         |       FROM tf a JOIN tf b ON a.term = b.term AND a.doc_id < b.doc_id
-         |       GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, dot, x.n2 AS na, y.n2 AS nb
-         |FROM dp JOIN nrm x ON doc_a = x.doc_id JOIN nrm y ON doc_b = y.doc_id
-         |WHERE CAST(100 AS HUGEINT) * dot * dot
-         |      >= CAST(81 AS HUGEINT) * x.n2 * y.n2""".stripMargin,
-
-    // Naive corpus × batch join over the same planted ingest fixture
-    // — the index-probe plan must reproduce it exactly (the
-    // open-world prefix filter only prunes candidates that provably
-    // cannot reach τ against ANY partner).
-    "d18_incremental_apss" ->
-      s"""WITH sl AS (SELECT doc_id, text FROM documents
-         |            WHERE doc_id % 3 = 0 AND doc_id < 2500),
-         |corpus AS (SELECT doc_id, text FROM sl WHERE doc_id % 2 = 0),
-         |batch AS (SELECT doc_id, text FROM sl WHERE doc_id % 2 = 1
-         |          UNION ALL
-         |          SELECT doc_id + 1000000, text || ' v2'
-         |          FROM corpus WHERE doc_id % 4 = 0),
-         |tfa AS (SELECT doc_id, tok AS term, CAST(COUNT(*) AS BIGINT) AS tf
-         |        FROM (SELECT doc_id, unnest($toksSql) AS tok FROM corpus)
-         |        GROUP BY 1, 2),
-         |tfb AS (SELECT doc_id, tok AS term, CAST(COUNT(*) AS BIGINT) AS tf
-         |        FROM (SELECT doc_id, unnest($toksSql) AS tok FROM batch)
-         |        GROUP BY 1, 2),
-         |nra AS (SELECT doc_id, CAST(SUM(tf*tf) AS BIGINT) AS n2 FROM tfa GROUP BY 1),
-         |nrb AS (SELECT doc_id, CAST(SUM(tf*tf) AS BIGINT) AS n2 FROM tfb GROUP BY 1),
-         |dp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |         CAST(SUM(a.tf * b.tf) AS BIGINT) AS dot
-         |       FROM tfa a JOIN tfb b ON a.term = b.term
-         |       GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, dot, x.n2 AS na, y.n2 AS nb
-         |FROM dp JOIN nra x ON doc_a = x.doc_id JOIN nrb y ON doc_b = y.doc_id
-         |WHERE CAST(100 AS HUGEINT) * dot * dot
-         |      >= CAST(81 AS HUGEINT) * x.n2 * y.n2""".stripMargin,
-    "d13_incremental_ingest" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |batch AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        |          UNION ALL
-        |          SELECT doc_id + 1000000, text FROM base WHERE doc_id % 4 = 0),
-        |fresh AS (SELECT * FROM batch
-        |          WHERE md5(text) NOT IN (SELECT md5(text) FROM base))
-        |SELECT MIN(doc_id) AS doc_id, md5(text) AS content_hash,
-        |       CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM fresh GROUP BY md5(text)""".stripMargin,
-
-    // Identical semantics to d13 BY DESIGN: the bloom filter is a
-    // physical-plan optimization whose exactness the oracle verifies
-    // (same discipline as d8/d9 and q21/q25/q53 — one oracle, two
-    // execution paths).
-    "d14_bloom_prefilter" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
-        |batch AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
-        |          UNION ALL
-        |          SELECT doc_id + 1000000, text FROM base WHERE doc_id % 4 = 0),
-        |fresh AS (SELECT * FROM batch
-        |          WHERE md5(text) NOT IN (SELECT md5(text) FROM base))
-        |SELECT MIN(doc_id) AS doc_id, md5(text) AS content_hash,
-        |       CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM fresh GROUP BY md5(text)""".stripMargin,
-
-    "t10_rare_tokens" ->
-      s"""WITH d AS (SELECT doc_id,
-         |    text || CASE WHEN doc_id % 11 = 0
-         |                 THEN ' zq' || CAST(doc_id AS VARCHAR) ELSE '' END AS text
-         |  FROM documents),
-         |tk AS (SELECT doc_id, $toksSql AS toks FROM d),
-         |term AS (SELECT doc_id, unnest(toks) AS term FROM tk),
-         |df AS (SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
-         |       FROM term GROUP BY 1),
-         |rare AS (SELECT term FROM df WHERE df < 3),
-         |m AS (SELECT t.doc_id,
-         |        CASE WHEN r.term IS NULL THEN 0 ELSE 1 END AS isr
-         |      FROM term t LEFT JOIN rare r ON t.term = r.term)
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
-         |       CAST(SUM(isr) AS BIGINT) AS n_rare,
-         |       CAST(SUM(isr) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS rare_frac
-         |FROM m GROUP BY doc_id""".stripMargin,
-
-    "t13_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |  (CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'https' END) || '://' ||
-        |  (CASE WHEN doc_id % 3 = 0 THEN 'WWW.' || upper(source) || '.Example.COM:443'
-        |        ELSE 'www.' || source || '.example.com' END) ||
-        |  '/articles/' || CAST(doc_id % 40 AS VARCHAR) ||
-        |  (CASE WHEN doc_id % 4 = 0 THEN '/' ELSE '' END) ||
-        |  (CASE WHEN doc_id % 2 = 0
-        |        THEN '?utm_source=feed&utm_campaign=fall&ref=' || CAST(doc_id % 5 AS VARCHAR) || '&b=2&a=1'
-        |        ELSE '?a=1&b=2&ref=' || CAST(doc_id % 5 AS VARCHAR) END) ||
-        |  (CASE WHEN doc_id % 6 = 0 THEN '#section-2' ELSE '' END) AS url
-        |  FROM documents),
-        |p AS (SELECT doc_id, url,
-        |        list_sort(list_filter(
-        |          string_split(regexp_extract(regexp_replace(url, '#.*$', ''), '\?(.*)$', 1), '&'),
-        |          q -> q <> '' AND NOT starts_with(q, 'utm_')
-        |               AND NOT starts_with(q, 'fbclid=')
-        |               AND NOT starts_with(q, 'gclid='))) AS plist
-        |      FROM u),
-        |c AS (SELECT doc_id, url,
-        |        lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) || '://' ||
-        |        regexp_replace(regexp_replace(
-        |          lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
-        |          '^www\.', ''), ':(443|80)$', '') ||
-        |        regexp_replace(regexp_extract(url,
-        |          '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)', 1), '/+$', '') ||
-        |        CASE WHEN len(plist) > 0 THEN '?' || array_to_string(plist, '&')
-        |             ELSE '' END AS canonical_url
-        |      FROM p)
-        |SELECT canonical_url, CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(COUNT(DISTINCT url) AS BIGINT) AS n_variants,
-        |       MIN(doc_id) AS first_doc
-        |FROM c GROUP BY 1""".stripMargin,
-
-    "q55_map_ops" ->
-      """WITH daily AS (
-        |  SELECT CAST(ts AS DATE) AS d, event_type, CAST(COUNT(*) AS BIGINT) AS n
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2)
-        |SELECT d,
-        |       CAST(COUNT(*) AS INT) AS n_types,
-        |       string_agg(event_type, ',' ORDER BY event_type) AS types_csv,
-        |       CAST(COALESCE(SUM(n) FILTER (WHERE event_type = 'purchase'), 0) AS BIGINT) AS n_purchase,
-        |       COALESCE(string_agg(event_type, ',' ORDER BY event_type)
-        |                FILTER (WHERE n >= 50), '') AS hot_types,
-        |       CAST(SUM(n) AS BIGINT) AS n_total
-        |FROM daily GROUP BY d""".stripMargin,
-
-    "q56_unpivot" ->
-      """WITH wide AS (
-        |  SELECT CAST(ts AS DATE) AS d,
-        |         COUNT(*) FILTER (WHERE event_type = 'view') AS "view",
-        |         COUNT(*) FILTER (WHERE event_type = 'click') AS click,
-        |         COUNT(*) FILTER (WHERE event_type = 'purchase') AS purchase
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1)
-        |SELECT d, metric, CAST(n AS BIGINT) AS n
-        |FROM wide UNPIVOT (n FOR metric IN ("view", click, purchase))""".stripMargin,
-
-    "q57_lateral_topn" ->
-      """SELECT n.n_nationkey AS nationkey, t.custkey, t.bal
-        |FROM nation n JOIN LATERAL (
-        |  SELECT c_custkey AS custkey,
-        |         CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
-        |  FROM customer
-        |  WHERE c_nationkey = n.n_nationkey
-        |  ORDER BY CAST(c_acctbal AS DECIMAL(18,2)) DESC, c_custkey ASC
-        |  LIMIT 2) t ON TRUE""".stripMargin,
-
-    "q58_regr_stats" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
-        |         event_id % 97 AS y
-        |  FROM events WHERE value IS NOT NULL),
-        |m AS (
-        |  SELECT event_type,
-        |         CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-        |         SUM(CAST(x AS DECIMAL(38,0))) AS sx,
-        |         SUM(CAST(y AS DECIMAL(38,0))) AS sy,
-        |         SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy,
-        |         SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-        |         SUM(CAST(y * y AS DECIMAL(38,0))) AS syy
-        |  FROM e GROUP BY event_type),
-        |d AS (
-        |  SELECT event_type, n,
-        |         CAST(n AS DOUBLE) AS nd, CAST(sx AS DOUBLE) AS sxd,
-        |         CAST(sy AS DOUBLE) AS syd, CAST(sxy AS DOUBLE) AS sxyd,
-        |         CAST(sxx AS DOUBLE) AS sxxd, CAST(syy AS DOUBLE) AS syyd
-        |  FROM m)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |       (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd) AS slope,
-        |       syd / nd - ((nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)) * (sxd / nd) AS intercept,
-        |       (nd * sxyd - sxd * syd)
-        |         / (sqrt(nd * sxxd - sxd * sxd) * sqrt(nd * syyd - syd * syd)) AS corr,
-        |       ((nd * sxyd - sxd * syd)
-        |         / (sqrt(nd * sxxd - sxd * sxd) * sqrt(nd * syyd - syd * syd)))
-        |       * ((nd * sxyd - sxd * syd)
-        |         / (sqrt(nd * sxxd - sxd * sxd) * sqrt(nd * syyd - syd * syd))) AS r2
-        |FROM d""".stripMargin,
-
-    "q59_bitwise_agg" ->
-      """SELECT event_type,
-        |       bit_and(event_id) AS band,
-        |       bit_or(event_id & 255) AS bor,
-        |       bit_xor(xor(event_id, user_id)) AS bxor,
-        |       CAST(MAX(event_id >> 4) AS BIGINT) AS hi_max
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "q60_hof_suite" ->
-      """WITH b AS (
-        |  SELECT vec_id, range(1, CAST(vec_id % 7 + 4 AS INT)) AS base
-        |  FROM embeddings)
-        |SELECT vec_id,
-        |       len(list_filter(base, x -> x * x > 20)) > 0 AS any_big,
-        |       len(list_filter(base, x -> x > 8)) = 0 AS all_small,
-        |       CAST(list_reduce(list_prepend(0, base), (a, x) -> a + x) AS BIGINT) AS total,
-        |       CAST(list_reduce(list_prepend(0,
-        |         list_transform(list_zip(base, list_reverse(base)),
-        |           p -> p[1] * p[2])), (a, x) -> a + x) AS BIGINT) AS dot_rev,
-        |       CAST(len(list_filter(base, x -> x % 3 = 0)) AS INT) AS n_div3
-        |FROM b""".stripMargin,
-
-    "q61_range_frame" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS n,
-        |         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS total,
-        |         datediff('day', DATE '2000-01-01', CAST(ts AS DATE)) AS day_n
-        |  FROM events WHERE ts IS NOT NULL GROUP BY event_type, CAST(ts AS DATE))
-        |SELECT event_type, d,
-        |       CAST(SUM(n) OVER w AS BIGINT) AS roll7_n,
-        |       CAST(CAST(SUM(total) OVER w AS DECIMAL(18,2)) AS DOUBLE) AS roll7_total
-        |FROM daily
-        |WINDOW w AS (PARTITION BY event_type ORDER BY day_n
-        |             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q62_regex_extract_all" ->
-      """WITH x AS (
-        |  SELECT doc_id,
-        |         regexp_extract_all(text, '[0-9]+') AS nums,
-        |         regexp_extract_all(text, '[A-Z][a-z]+') AS caps
-        |  FROM documents)
-        |SELECT doc_id,
-        |       CAST(len(nums) AS INT) AS n_nums,
-        |       CAST(len(list_distinct(nums)) AS INT) AS n_uniq_nums,
-        |       COALESCE(nums[1], '') AS first_num,
-        |       CAST(len(caps) AS INT) AS n_caps,
-        |       CAST(COALESCE(list_reduce(list_prepend(0,
-        |         list_transform(caps, c -> len(c))),
-        |         (a, x) -> greatest(a, x)), 0) AS INT) AS max_cap_len
-        |FROM x""".stripMargin,
-
-    "q63_calendar_fill" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type
-        |            FROM events WHERE ts IS NOT NULL),
-        |b AS (SELECT min(CAST(ts AS DATE)) AS mn, max(CAST(ts AS DATE)) AS mx FROM ev),
-        |cal AS (SELECT CAST(unnest(generate_series(mn, mx, INTERVAL 1 DAY)) AS DATE) AS d FROM b),
-        |errs AS (SELECT CAST(ts AS DATE) AS d, COUNT(*) AS n
-        |         FROM ev WHERE event_type = 'error' GROUP BY 1)
-        |SELECT cal.d, CAST(COALESCE(errs.n, 0) AS BIGINT) AS n_errors
-        |FROM cal LEFT JOIN errs ON cal.d = errs.d""".stripMargin,
-
-    "q64_median_mode" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS d,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xl
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL),
-        |med AS (SELECT event_type, median(xl) / 100.0 AS med_value
-        |        FROM e GROUP BY event_type),
-        |cnt AS (SELECT event_type, d, COUNT(*) AS n FROM e GROUP BY 1, 2),
-        |mode AS (SELECT event_type, d AS mode_day, CAST(n AS BIGINT) AS mode_n
-        |         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-        |                 ORDER BY n DESC, d ASC) AS rn FROM cnt)
-        |         WHERE rn = 1)
-        |SELECT med.event_type, med.med_value, mode.mode_day, mode.mode_n
-        |FROM med JOIN mode ON med.event_type = mode.event_type""".stripMargin,
-
-    "q65_try_ops" ->
-      """SELECT event_id,
-        |       event_id / (user_id % 5) AS div_or_null,
-        |       TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_json,
-        |       TRY_CAST(event_type AS BIGINT) AS bad_int,
-        |       TRY_CAST(CAST(event_id AS VARCHAR) || '9999999999999999999' AS BIGINT) AS overflow_null
-        |FROM events""".stripMargin,
-
-    "s2_stream_sliding" ->
-      """WITH e AS (
-        |  SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS us, event_type,
-        |         CAST(value AS DECIMAL(18,2)) AS v
-        |  FROM events WHERE ts IS NOT NULL),
-        |x AS (SELECT (us // 1800000000) * 1800000000 AS b, event_type, v FROM e),
-        |u AS (SELECT b AS win_start_us, event_type, v FROM x
-        |      UNION ALL
-        |      SELECT b - 1800000000, event_type, v FROM x)
-        |SELECT win_start_us, event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(v) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM u GROUP BY 1, 2""".stripMargin,
-
-    "d2_minhash_pairs" -> d2OracleSql,
-    "d5_minhash_portable" -> d5OracleSql,
-    "d19_incremental_minhash" -> d19OracleSql,
-    "s11_stream_near_dup" -> s11OracleSql,
-
-    // s12 = e9's ADC pipeline over the staged 24-query stream set
-    "s12_stream_ann_serve" ->
-      s"""WITH ${pqCodeCtes("e.vec_id < 24")},
-         |sc AS (SELECT qt.query_id, codes.neighbor_id,
-         |         CAST(SUM(qt.qd) AS BIGINT) AS adist
-         |       FROM codes JOIN qt ON codes.j = qt.j AND codes.code = qt.cid
-         |       WHERE qt.query_id <> codes.neighbor_id
-         |       GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |          ORDER BY adist ASC, neighbor_id ASC) AS INT) AS rnk FROM sc)
-         |SELECT query_id, neighbor_id, adist, rnk FROM r WHERE rnk <= 5""".stripMargin,
-    "d7_canonical_near_dup" -> d7OracleSql,
-    "d8_components" -> d8OracleSql,
-    "d9_components_distributed" -> d8OracleSql,
-
-    // d22: full recursive-closure CC over the d8 pair list ∪ the
-    // arithmetic batch bridges — the incremental fold must reproduce
-    // this recompute bit-exactly (min-id labels are canonical).
-    "d22_incremental_components" ->
-      s"""${minhashPairsPrefixSql(corpusD5Ctes).replaceFirst("^WITH ", "WITH RECURSIVE ")},
-         |pr AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.5
-         |       UNION ALL
-         |       SELECT doc_id AS id_a, doc_id + 3 AS id_b
-         |       FROM documents WHERE doc_id < 200 AND doc_id % 6 = 0),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-         |          UNION SELECT id_b, id_a FROM pr),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component
-         |         FROM reach GROUP BY src)
-         |SELECT doc_id AS id, component FROM comp""".stripMargin,
-
-    // SemDeDup: same planted corpus as the Spark side, deterministic
-    // lowest-id centroid seed (the e3/e5 discipline), assignment and
-    // pair cosines in the identical left-fold double order, drop rule
-    // keep-lowest-id within cluster.
-    "d20_semdedup" ->
-      s"""WITH planted AS (SELECT vec_id, embedding FROM embeddings
-         |                 UNION ALL
-         |                 SELECT vec_id + 1000000, embedding
-         |                 FROM embeddings WHERE vec_id % 10 = 0),
-         |cent AS (SELECT vec_id AS centroid_id, embedding AS cvec
-         |         FROM planted ORDER BY vec_id ASC LIMIT 16),
-         |assign AS (SELECT p.vec_id, p.embedding AS v, c.centroid_id,
-         |             ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |               ORDER BY ${dotSql("p.embedding", "c.cvec")}
-         |                 / (sqrt(${dotSql("p.embedding", "p.embedding")})
-         |                    * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-         |               c.centroid_id ASC) AS rn
-         |           FROM planted p CROSS JOIN cent c),
-         |members AS (SELECT vec_id, v, centroid_id FROM assign WHERE rn = 1),
-         |dropped AS (SELECT DISTINCT b.vec_id AS id_b
-         |            FROM members a JOIN members b
-         |              ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-         |            WHERE ${dotSql("a.v", "b.v")}
-         |                / (sqrt(${dotSql("a.v", "a.v")})
-         |                   * sqrt(${dotSql("b.v", "b.v")})) >= 0.98)
-         |SELECT m.vec_id, m.centroid_id FROM members m
-         |WHERE m.vec_id NOT IN (SELECT id_b FROM dropped)""".stripMargin,
-
-    // d21: the keep-farthest-from-centroid rule over PERTURBED clones
-    // (first component +0.125 — the float add rounds identically in
-    // both engines); members carry their centroid-cosine and the pair
-    // filter orders by (csim, id) instead of id.
-    "d21_semdedup_farthest" ->
-      s"""WITH planted AS (SELECT vec_id, embedding FROM embeddings
-         |                 UNION ALL
-         |                 SELECT vec_id + 1000000,
-         |                   list_concat(
-         |                     [CAST(embedding[1] + 0.125 AS FLOAT)],
-         |                     embedding[2:64])
-         |                 FROM embeddings WHERE vec_id % 10 = 0),
-         |cent AS (SELECT vec_id AS centroid_id, embedding AS cvec
-         |         FROM planted ORDER BY vec_id ASC LIMIT 16),
-         |assign AS (SELECT p.vec_id, p.embedding AS v, c.centroid_id,
-         |             ${dotSql("p.embedding", "c.cvec")}
-         |               / (sqrt(${dotSql("p.embedding", "p.embedding")})
-         |                  * sqrt(${dotSql("c.cvec", "c.cvec")})) AS csim,
-         |             ROW_NUMBER() OVER (PARTITION BY p.vec_id
-         |               ORDER BY ${dotSql("p.embedding", "c.cvec")}
-         |                 / (sqrt(${dotSql("p.embedding", "p.embedding")})
-         |                    * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-         |               c.centroid_id ASC) AS rn
-         |           FROM planted p CROSS JOIN cent c),
-         |members AS (SELECT vec_id, v, centroid_id, csim
-         |            FROM assign WHERE rn = 1),
-         |dropped AS (SELECT DISTINCT b.vec_id AS id_b
-         |            FROM members a JOIN members b
-         |              ON a.centroid_id = b.centroid_id
-         |             AND a.vec_id <> b.vec_id
-         |             AND (a.csim < b.csim
-         |                  OR (a.csim = b.csim AND a.vec_id < b.vec_id))
-         |            WHERE ${dotSql("a.v", "b.v")}
-         |                / (sqrt(${dotSql("a.v", "a.v")})
-         |                   * sqrt(${dotSql("b.v", "b.v")})) >= 0.98)
-         |SELECT m.vec_id, m.centroid_id FROM members m
-         |WHERE m.vec_id NOT IN (SELECT id_b FROM dropped)""".stripMargin,
-
-    // e7's graph + transitive closure over its MUTUAL edges (the
-    // closure CTE mirrors componentsCtesSql, keyed on vec ids)
-    "d15_embedding_clusters" ->
-      s"""WITH RECURSIVE v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
-         |s AS (SELECT a.vec_id AS src_id, b.vec_id AS dst_id,
-         |        a.embedding AS av, b.embedding AS bv
-         |      FROM v a CROSS JOIN v b WHERE a.vec_id <> b.vec_id),
-         |sc AS (SELECT src_id, dst_id,
-         |        ${dotSql("av", "bv")} / (sqrt(${dotSql("av", "av")}) * sqrt(${dotSql("bv", "bv")})) AS simd
-         |       FROM s),
-         |r AS (SELECT src_id, dst_id,
-         |        ROW_NUMBER() OVER (PARTITION BY src_id
-         |             ORDER BY simd DESC, dst_id ASC) AS rnk
-         |      FROM sc),
-         |e AS (SELECT src_id, dst_id FROM r WHERE rnk <= 4),
-         |me AS (SELECT e.src_id AS src, e.dst_id AS dst
-         |       FROM e JOIN e m ON e.src_id = m.dst_id AND e.dst_id = m.src_id),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM me
-         |  UNION
-         |  SELECT r2.src, e2.dst FROM reach r2 JOIN me e2 ON r2.dst = e2.src),
-         |comp AS (SELECT src AS vec_id, LEAST(src, MIN(dst)) AS component
-         |         FROM reach GROUP BY src),
-         |lab AS (SELECT v.vec_id, COALESCE(c.component, v.vec_id) AS cluster
-         |        FROM v LEFT JOIN comp c USING (vec_id))
-         |SELECT cluster, CAST(COUNT(*) AS BIGINT) AS n_members,
-         |       MAX(vec_id) AS max_member
-         |FROM lab GROUP BY 1""".stripMargin,
-
-    "q54_null_semantics" ->
-      """SELECT event_id,
-        |       CAST(COALESCE(CAST(value AS DECIMAL(18,2)), CAST(-1 AS DECIMAL(18,2))) AS DOUBLE) AS v_or_neg1,
-        |       nullif(event_type, 'view') AS type_nonview,
-        |       value IS NULL AS v_missing,
-        |       value IS NOT DISTINCT FROM NULL AS v_null_safe_eq_null,
-        |       CASE WHEN ts IS NULL THEN 'no' ELSE 'yes' END AS has_ts
-        |FROM events""".stripMargin,
-
-    "q53_bucketed_sessions" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |         lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-        |           (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_us
-        |  FROM events WHERE ts IS NOT NULL),
-        |f AS (SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000
-        |                     THEN 1 ELSE 0 END AS new_sess FROM t),
-        |s AS (SELECT user_id, ts_us,
-        |        SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us ASC, event_id ASC
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |      FROM f)
-        |SELECT user_id, MIN(ts_us) AS start_us, MAX(ts_us) AS end_us,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events
-        |FROM s GROUP BY user_id, session_id""".stripMargin,
-
-    "q52_relative_rank" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS metric_date, event_type,
-        |                  CAST(COUNT(*) AS BIGINT) AS n
-        |           FROM events GROUP BY 1, 2)
-        |SELECT event_type, metric_date, n,
-        |       percent_rank() OVER w AS pct_rank,
-        |       cume_dist() OVER w AS cume
-        |FROM d
-        |WINDOW w AS (PARTITION BY event_type ORDER BY n ASC, metric_date ASC)""".stripMargin,
-    "e2_ann_lsh" -> e2OracleSql,
-    "d6_embedding_dedup" -> d6OracleSql,
-    "e3_ann_ivf" -> e3OracleSql,
-    "e5_recall" -> e5OracleSql,
-
-    // e10: the full IVF pipeline over the planted union corpus —
-    // centroid seed from the union's 16 lowest ids, which EQUALS the
-    // base corpus's (clone ids sit at +1e6), so the oracle reproduces
-    // the frozen-centroid append exactly.
-    "e10_incremental_ivf" ->
-      s"""WITH planted AS (SELECT vec_id, embedding FROM embeddings
-         |                 UNION ALL
-         |                 SELECT vec_id + 1000000, embedding
-         |                 FROM embeddings WHERE vec_id % 10 = 0),
-         |${ivfCtes("planted")}
-         |SELECT query_id, neighbor_id, sim, rnk
-         |FROM r WHERE rnk <= 5""".stripMargin,
-
-    // PQ/ADC: identical subspace slicing, fixed-point BIGINT
-    // distances (l2Fixed's 10-bit quantization), argmin tiebreak cid
-    // asc, and the same top-k order — every number is integer-exact.
-    "e9_pq" ->
-      s"""WITH $pqCodeCtes,
-         |sc AS (SELECT qt.query_id, codes.neighbor_id,
-         |         CAST(SUM(qt.qd) AS BIGINT) AS adist
-         |       FROM codes JOIN qt ON codes.j = qt.j AND codes.code = qt.cid
-         |       WHERE qt.query_id <> codes.neighbor_id
-         |       GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |          ORDER BY adist ASC, neighbor_id ASC) AS INT) AS rnk FROM sc)
-         |SELECT query_id, neighbor_id, adist, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    // e12: residual IVFADC — corpus and query residuals are
-    // float-minus-float in DOUBLE (exact in both engines), the shared
-    // residual codebook comes from the 16 lowest-id residuals, and
-    // all code/ADC arithmetic is the same fixed-point BIGINT as e9.
-    "e12_ivfpq_residual" ->
-      s"""WITH js AS (SELECT unnest(range(8)) AS j),
-         |coarse AS (SELECT vec_id AS centroid_id, embedding AS cvec
-         |           FROM embeddings ORDER BY vec_id ASC LIMIT 16),
-         |lassign AS (SELECT e.vec_id AS neighbor_id, e.embedding AS cv,
-         |              c.centroid_id,
-         |              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |                ORDER BY ${dotSql("e.embedding", "c.cvec")}
-         |                  / (sqrt(${dotSql("e.embedding", "e.embedding")})
-         |                     * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-         |                c.centroid_id ASC) AS rn
-         |            FROM embeddings e CROSS JOIN coarse c),
-         |lists AS (SELECT neighbor_id, centroid_id, cv FROM lassign WHERE rn = 1),
-         |res AS (SELECT l.neighbor_id, l.centroid_id,
-         |          list_transform(list_zip(l.cv, c.cvec),
-         |            z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS r
-         |        FROM lists l JOIN coarse c USING (centroid_id)),
-         |cb AS (SELECT s.neighbor_id AS cid, js.j,
-         |         list_slice(s.r, js.j*8+1, js.j*8+8) AS csub
-         |       FROM (SELECT neighbor_id, r FROM res
-         |             WHERE neighbor_id NOT IN (SELECT centroid_id FROM coarse)
-         |             ORDER BY neighbor_id ASC LIMIT 16) s CROSS JOIN js),
-         |cd AS (SELECT res.neighbor_id, res.centroid_id, cb.j, cb.cid,
-         |         ${l2FixSql("list_slice(res.r, cb.j*8+1, cb.j*8+8)", "cb.csub")} AS d
-         |       FROM res CROSS JOIN cb),
-         |codes AS (SELECT neighbor_id, centroid_id, j, cid AS code FROM (
-         |            SELECT neighbor_id, centroid_id, j, cid,
-         |              ROW_NUMBER() OVER (PARTITION BY neighbor_id, j
-         |                ORDER BY d ASC, cid ASC) AS rn FROM cd) WHERE rn = 1),
-         |qprobe AS (SELECT query_id, centroid_id, qv FROM (
-         |             SELECT q.vec_id AS query_id, q.embedding AS qv,
-         |               c.centroid_id,
-         |               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |                 ORDER BY ${dotSql("q.embedding", "c.cvec")}
-         |                   / (sqrt(${dotSql("q.embedding", "q.embedding")})
-         |                      * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-         |                 c.centroid_id ASC) AS rn
-         |             FROM embeddings q CROSS JOIN coarse c WHERE q.vec_id < 8)
-         |           WHERE rn <= 4),
-         |qres AS (SELECT p.query_id, p.centroid_id,
-         |           list_transform(list_zip(p.qv, c.cvec),
-         |             z -> CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) AS qr
-         |         FROM qprobe p JOIN coarse c USING (centroid_id)),
-         |qt AS (SELECT qres.query_id, qres.centroid_id, cb.j, cb.cid,
-         |         ${l2FixSql("list_slice(qres.qr, cb.j*8+1, cb.j*8+8)", "cb.csub")} AS qd
-         |       FROM qres CROSS JOIN cb),
-         |sc AS (SELECT qt.query_id, codes.neighbor_id,
-         |         CAST(SUM(qt.qd) AS BIGINT) AS adist
-         |       FROM codes JOIN qt ON qt.centroid_id = codes.centroid_id
-         |                         AND qt.j = codes.j AND qt.cid = codes.code
-         |       WHERE qt.query_id <> codes.neighbor_id
-         |       GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |          ORDER BY adist ASC, neighbor_id ASC) AS INT) AS rnk FROM sc)
-         |SELECT query_id, neighbor_id, adist, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    // e11: coarse IVF probe layer (cosine, the e3 discipline) over
-    // the SAME PQ code/lookup-table CTEs as e9 — candidates are the
-    // probed lists only, ADC arithmetic unchanged.
-    "e11_ivfpq" ->
-      s"""WITH $pqCodeCtes,
-         |coarse AS (SELECT vec_id AS centroid_id, embedding AS cvec
-         |           FROM embeddings ORDER BY vec_id ASC LIMIT 16),
-         |lassign AS (SELECT e.vec_id AS neighbor_id, c.centroid_id,
-         |              ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |                ORDER BY ${dotSql("e.embedding", "c.cvec")}
-         |                  / (sqrt(${dotSql("e.embedding", "e.embedding")})
-         |                     * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-         |                c.centroid_id ASC) AS rn
-         |            FROM embeddings e CROSS JOIN coarse c),
-         |lists AS (SELECT neighbor_id, centroid_id FROM lassign WHERE rn = 1),
-         |qprobe AS (SELECT query_id, centroid_id FROM (
-         |             SELECT q.vec_id AS query_id, c.centroid_id,
-         |               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-         |                 ORDER BY ${dotSql("q.embedding", "c.cvec")}
-         |                   / (sqrt(${dotSql("q.embedding", "q.embedding")})
-         |                      * sqrt(${dotSql("c.cvec", "c.cvec")})) DESC,
-         |                 c.centroid_id ASC) AS rn
-         |             FROM embeddings q CROSS JOIN coarse c WHERE q.vec_id < 8)
-         |           WHERE rn <= 4),
-         |cand AS (SELECT p.query_id, l.neighbor_id
-         |         FROM lists l JOIN qprobe p USING (centroid_id)
-         |         WHERE p.query_id <> l.neighbor_id),
-         |sc AS (SELECT cand.query_id, cand.neighbor_id,
-         |         CAST(SUM(qt.qd) AS BIGINT) AS adist
-         |       FROM cand
-         |       JOIN codes ON cand.neighbor_id = codes.neighbor_id
-         |       JOIN qt ON qt.query_id = cand.query_id
-         |              AND qt.j = codes.j AND qt.cid = codes.code
-         |       GROUP BY 1, 2),
-         |r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |          ORDER BY adist ASC, neighbor_id ASC) AS INT) AS rnk FROM sc)
-         |SELECT query_id, neighbor_id, adist, rnk FROM r WHERE rnk <= 5""".stripMargin,
-
-    "e6_quantize" ->
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS x FROM embeddings),
-        |s AS (SELECT vec_id, MIN(x) AS mn, MAX(x) AS mx,
-        |             CAST(COUNT(*) AS INT) AS n_dims FROM e GROUP BY 1),
-        |q AS (SELECT e.vec_id, s.n_dims,
-        |        CAST(s.mn AS DOUBLE) AS mn, CAST(s.mx AS DOUBLE) AS mx,
-        |        CASE WHEN s.mx > s.mn THEN
-        |          CAST(floor((CAST(e.x AS DOUBLE) - CAST(s.mn AS DOUBLE))
-        |            / ((CAST(s.mx AS DOUBLE) - CAST(s.mn AS DOUBLE)) / 255.0)
-        |            + 0.5) AS BIGINT)
-        |        ELSE 0 END AS qi
-        |      FROM e JOIN s USING (vec_id))
-        |SELECT vec_id, n_dims, mn, mx, CAST(SUM(qi) AS BIGINT) AS checksum
-        |FROM q GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    "q51_token_positions" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |p AS (SELECT doc_id, unnest(range(len(toks))) AS pos FROM tk),
-         |hits AS (SELECT p.doc_id, p.pos FROM p JOIN tk USING (doc_id)
-         |         WHERE tk.toks[p.pos + 1] = 'the')
-         |SELECT doc_id, CAST(MIN(pos) AS INT) AS first_the_pos,
-         |       CAST(COUNT(*) AS BIGINT) AS n_the
-         |FROM hits GROUP BY 1""".stripMargin,
-
-    "q49_filtered_agg" ->
-      """SELECT CAST(ts AS DATE) AS metric_date,
-        |       CAST(COUNT(*) AS BIGINT) AS n_all,
-        |       CAST(COUNT(*) FILTER (WHERE event_type = 'purchase') AS BIGINT) AS n_purchase,
-        |       CAST(COUNT(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS n_error,
-        |       CAST(COUNT(DISTINCT user_id) FILTER (WHERE event_type = 'signup') AS BIGINT) AS n_signup_users
-        |FROM events WHERE ts IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    "q50_outer_join" ->
-      """WITH co AS (SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders
-        |            FROM orders GROUP BY 1)
-        |SELECT COALESCE(c_custkey, -1) AS custkey,
-        |       CASE WHEN c_custkey IS NULL THEN 'order_only'
-        |            WHEN o_custkey IS NULL THEN 'customer_only'
-        |            ELSE 'matched' END AS side,
-        |       COALESCE(n_orders, 0) AS n_orders
-        |FROM customer FULL OUTER JOIN co ON c_custkey = o_custkey""".stripMargin,
-
-    "m3_media_plan" ->
-      s"""WITH m AS (SELECT doc_id,
-         |    CAST(1 + ${hash32Sql(0, "text")} % 1024 AS INT) AS w,
-         |    CAST(1 + ${hash32Sql(1, "text")} % 1024 AS INT) AS h,
-         |    CAST(1 + ${hash32Sql(2, "text")} % 240 AS INT) AS frames
-         |  FROM documents),
-         |r AS (SELECT *, greatest(w, h) AS longest FROM m)
-         |SELECT doc_id, w, h, frames,
-         |  CASE WHEN longest <= 256 THEN w
-         |       ELSE greatest(CAST(floor(w * 256.0 / longest) AS INT), 1) END AS new_w,
-         |  CASE WHEN longest <= 256 THEN h
-         |       ELSE greatest(CAST(floor(h * 256.0 / longest) AS INT), 1) END AS new_h,
-         |  array_to_string(list_sort(list_distinct(list_transform(range(8),
-         |    i -> CAST(floor(i * frames / 8.0) AS INT)))), ',') AS idx
-         |FROM r""".stripMargin,
-
-    "q48_profile" ->
-      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-        |       CAST(COUNT(value) AS BIGINT) AS value_nonnull,
-        |       CAST(COUNT(ts) AS BIGINT) AS ts_nonnull,
-        |       CAST(COUNT(DISTINCT event_type) AS BIGINT) AS type_card,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS user_card,
-        |       CAST(MIN(event_id) AS BIGINT) AS min_id,
-        |       CAST(MAX(event_id) AS BIGINT) AS max_id,
-        |       MIN(value) AS min_value,
-        |       MAX(value) AS max_value
-        |FROM events""".stripMargin,
-
-    "t6_len_histogram" ->
-      """SELECT CAST(floor(length(text) / 500) AS INT) AS bucket,
-        |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |       CAST(MIN(length(text)) AS INT) AS min_len,
-        |       CAST(MAX(length(text)) AS INT) AS max_len
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "q46_typed_udaf" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total,
-        |       MIN(value) AS min_v, MAX(value) AS max_v
-        |FROM events WHERE value IS NOT NULL GROUP BY 1""".stripMargin,
-
-    "q47_correlated" ->
-      """SELECT c1.c_nationkey AS nationkey,
-        |       CAST(COUNT(*) AS BIGINT) AS n_above_avg
-        |FROM customer c1
-        |WHERE c1.c_acctbal > (SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) / COUNT(*) AS DECIMAL(18,2))
-        |                      FROM customer c2
-        |                      WHERE c2.c_nationkey = c1.c_nationkey)
-        |GROUP BY c1.c_nationkey""".stripMargin,
-
-    "q44_array_ops" ->
-      """WITH b AS (SELECT vec_id, range(1, CAST(vec_id % 5 + 3 AS INT)) AS base
-        |           FROM embeddings),
-        |a AS (SELECT vec_id, base,
-        |             list_transform(base, x -> x * (vec_id % 3 + 1)) AS arr
-        |      FROM b)
-        |SELECT vec_id,
-        |       array_to_string(list_reverse_sort(arr), ',') AS sorted_desc,
-        |       array_to_string(arr[2:3], ',') AS mid2,
-        |       CAST(list_position(arr, vec_id % 3 + 1) AS INT) AS pos_first,
-        |       list_contains(arr, 2) AS has_two,
-        |       array_to_string(arr, ',') AS joined,
-        |       array_to_string(list_sort(list_distinct(list_concat(base, base))), ',') AS dedup,
-        |       array_to_string(flatten([base, arr]), ',') AS flat
-        |FROM a""".stripMargin,
-
-    "q45_json_ops" ->
-      """WITH j AS (
-        |  SELECT event_id,
-        |         '{"id":' || event_id || ',"tags":["' || event_type ||
-        |         '","x"],"meta":{"k":' ||
-        |         COALESCE(json_extract_string(props, '$.k'), '0') || '}}' AS j
-        |  FROM events)
-        |SELECT event_id,
-        |       CAST(json_extract_string(j, '$.id') AS BIGINT) AS id_back,
-        |       json_extract_string(j, '$.tags[0]') AS tag0,
-        |       CAST(json_array_length(j, '$.tags') AS INT) AS n_tags,
-        |       CAST(json_extract_string(j, '$.meta.k') AS BIGINT) AS k_meta,
-        |       array_to_string(list_sort(json_keys(j)), ',') AS keys_sorted
-        |FROM j""".stripMargin,
-
-    "q42_string_ops" ->
-      """SELECT doc_id,
-        |       upper(substr(text, 1, 20)) AS head_upper,
-        |       lpad(CAST(doc_id AS VARCHAR), 8, '0') AS id_pad,
-        |       reverse(lower(substr(text, 1, 10))) AS head_rev,
-        |       translate(lower(substr(text, 1, 30)), 'aeiou', '01234') AS head_tr,
-        |       COALESCE(regexp_extract(COALESCE(source, ''), '//([^/]+)', 1), '') AS host,
-        |       CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS INT) AS n_digits,
-        |       CAST(instr(lower(text), 'the') AS INT) AS first_the,
-        |       split_part(COALESCE(source, '-'), '/', -1) AS last_seg
-        |FROM documents""".stripMargin,
-
-    "q43_date_ops" ->
-      """WITH d AS (SELECT DISTINCT CAST(ts AS DATE) AS d
-        |           FROM events WHERE ts IS NOT NULL)
-        |SELECT d,
-        |       CAST(d + 7 AS DATE) AS plus7,
-        |       CAST(d - 1 AS DATE) AS minus1,
-        |       CAST(datediff('day', DATE '2000-01-01', d) AS INT) AS since_y2k,
-        |       last_day(d) AS month_end,
-        |       CAST(dayofweek(d) AS INT) AS dow_sun0,
-        |       CAST(weekofyear(d) AS INT) AS iso_week,
-        |       CAST(quarter(d) AS INT) AS qtr,
-        |       CAST(dayofyear(d) AS INT) AS doy,
-        |       CAST(date_trunc('week', d) AS DATE) AS week_start
-        |FROM d""".stripMargin,
-
-    "q41_exact_stats" ->
-      """WITH m AS (
-        |  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |         CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sx,
-        |         CAST(SUM(CAST(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DECIMAL(38,0))
-        |                       * CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DECIMAL(38,0)) AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS sx2
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1)
-        |SELECT event_type, n,
-        |       CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 AS mean,
-        |       sqrt(CAST(CAST(CAST(n AS DECIMAL(38,0)) * sx2 - sx * sx AS DECIMAL(38,0)) AS DOUBLE)
-        |            / CAST(n * (n - 1) AS DOUBLE) / 10000.0) AS stddev
-        |FROM m""".stripMargin,
-
-    "t5_bigrams" ->
-      s"""WITH tk AS (SELECT $toksSql AS toks FROM documents),
-         |b AS (SELECT unnest(list_transform(range(len(toks) - 1),
-         |               i -> array_to_string(toks[i+1:i+2], ' '))) AS bigram
-         |      FROM tk WHERE len(toks) >= 2)
-         |SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
-         |FROM b GROUP BY 1
-         |ORDER BY n DESC, bigram ASC LIMIT 20""".stripMargin,
-
-    "q39_window_suite" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS metric_date, event_type,
-        |                  CAST(COUNT(*) AS BIGINT) AS n
-        |           FROM events GROUP BY 1, 2)
-        |SELECT event_type, metric_date, n,
-        |       COALESCE(lag(n) OVER w_ord, -1) AS prev_n,
-        |       COALESCE(lead(n) OVER w_ord, -1) AS next_n,
-        |       CAST(dense_rank() OVER w_rank AS INT) AS rk,
-        |       CAST(ntile(4) OVER w_rank AS INT) AS quartile,
-        |       first_value(n) OVER w_ord AS first_n
-        |FROM d
-        |WINDOW w_ord AS (PARTITION BY event_type ORDER BY metric_date ASC),
-        |       w_rank AS (PARTITION BY event_type ORDER BY n DESC, metric_date ASC)""".stripMargin,
-
-    "q40_grouping_sets" ->
-      """WITH b AS (SELECT event_type,
-        |                  CAST(date_trunc('month', CAST(ts AS TIMESTAMP)) AS DATE) AS metric_month,
-        |                  value
-        |           FROM events)
-        |SELECT COALESCE(event_type, '(all)') AS event_type,
-        |       COALESCE(metric_month, DATE '1970-01-01') AS metric_month,
-        |       CAST(GROUPING(event_type) AS INT) AS g_type,
-        |       CAST(GROUPING(metric_month) AS INT) AS g_month,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM b
-        |GROUP BY GROUPING SETS ((event_type), (metric_month), ())""".stripMargin,
-
-    "e4_vector_stats" ->
-      s"""WITH n AS (SELECT label, len(embedding) AS dim,
-         |                  sqrt(${dotSql("embedding", "embedding")}) AS norm
-         |           FROM embeddings)
-         |SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-         |       CAST(MAX(dim) AS INT) AS dim,
-         |       MIN(norm) AS min_norm, MAX(norm) AS max_norm,
-         |       CAST(SUM(CAST(norm AS DECIMAL(20,8))) AS DOUBLE)
-         |         / CAST(COUNT(*) AS DOUBLE) AS avg_norm
-         |FROM n GROUP BY 1""".stripMargin,
-
-    "m2_binary_features" ->
-      """WITH b AS (SELECT doc_id, encode(text) AS bin FROM documents),
-        |h AS (SELECT doc_id, CAST(octet_length(bin) AS INT) AS byte_len,
-        |             hex(bin) AS hx FROM b)
-        |SELECT doc_id, byte_len,
-        |       substr(hx, 1, 16) AS head_hex,
-        |       right(hx, 16) AS tail_hex,
-        |       md5(hx) AS hex_md5,
-        |       CAST(byte_len % 3 + 1 AS INT) AS fake_channels
-        |FROM h""".stripMargin,
-
-    "q36_hash_sample" ->
-      s"""SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_sampled
-         |FROM events
-         |WHERE ${hash32Sql(0, "CAST(event_id AS VARCHAR)")} % 100
-         |      < CASE WHEN event_type = 'purchase' THEN 50 ELSE 5 END
-         |GROUP BY 1""".stripMargin,
-
-    "q37_leakage_safe_split" ->
-      s"""SELECT CASE WHEN ${hash32Sql(1, "CAST(user_id AS VARCHAR)")} % 10 < 8
-         |            THEN 'train' ELSE 'test' END AS split,
-         |       CAST(COUNT(*) AS BIGINT) AS n_events,
-         |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-         |FROM events GROUP BY 1""".stripMargin,
-
-    "q38_interval_join" ->
-      """WITH s AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS s_us
-        |           FROM events WHERE event_type = 'signup'),
-        |p AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS p_us
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT s.user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs
-        |FROM s JOIN p ON s.user_id = p.user_id
-        |WHERE p.p_us > s.s_us AND p.p_us <= s.s_us + 3600000000
-        |GROUP BY 1""".stripMargin,
-
-    // q88's contract IS the naive inequality join — binning must be
-    // result-invisible (each event meets each matching range once)
-    "q88_binned_range_join" ->
-      """WITH e AS (SELECT epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, value
-        |           FROM events WHERE ts IS NOT NULL),
-        |t0 AS (SELECT MIN(ts_us) AS t0 FROM e),
-        |r AS (SELECT CAST(n_nationkey AS BIGINT) AS range_id,
-        |        t0.t0 + CAST(n_nationkey AS BIGINT) * 7200000000 AS start_us,
-        |        t0.t0 + CAST(n_nationkey AS BIGINT) * 7200000000
-        |          + 10800000000 AS end_us
-        |      FROM nation CROSS JOIN t0)
-        |SELECT r.range_id, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(e.value AS DECIMAL(18,2)))
-        |         AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM e JOIN r ON e.ts_us >= r.start_us AND e.ts_us < r.end_us
-        |GROUP BY 1""".stripMargin,
-
-    // streaming twin gated by the SAME batch semantics (s4/s5 pattern)
-    "s6_stream_interval_join" ->
-      """WITH s AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS s_us
-        |           FROM events WHERE event_type = 'signup'),
-        |p AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS p_us
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT s.user_id, CAST(COUNT(*) AS BIGINT) AS n_pairs
-        |FROM s JOIN p ON s.user_id = p.user_id
-        |WHERE p.p_us > s.s_us AND p.p_us <= s.s_us + 3600000000
-        |GROUP BY 1""".stripMargin,
-
-    "q34_funnel" ->
-      """WITH s AS (SELECT user_id, MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_signup_us
-        |           FROM events WHERE event_type = 'signup' GROUP BY 1)
-        |SELECT e.user_id, s.first_signup_us, CAST(COUNT(*) AS BIGINT) AS n_purchases_after
-        |FROM events e JOIN s ON e.user_id = s.user_id
-        |WHERE e.event_type = 'purchase'
-        |  AND epoch_us(CAST(e.ts AS TIMESTAMP)) > s.first_signup_us
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q35_retention" ->
-      """WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-        |cohort AS (SELECT user_id, MIN(d) AS cohort_date FROM ev GROUP BY 1)
-        |SELECT c.cohort_date,
-        |       CAST(COUNT(DISTINCT c.user_id) AS BIGINT) AS cohort_size,
-        |       CAST(COUNT(DISTINCT CASE WHEN ev.d = c.cohort_date + 7
-        |                                THEN ev.user_id END) AS BIGINT) AS retained_d7
-        |FROM cohort c JOIN ev ON ev.user_id = c.user_id
-        |GROUP BY 1""".stripMargin,
-
-    "q32_setops" ->
-      """WITH a AS (SELECT event_id FROM events WHERE event_id % 2 = 0),
-        |b AS (SELECT event_id FROM events WHERE event_id % 3 = 0)
-        |SELECT event_id, 'both' AS op FROM (SELECT event_id FROM a INTERSECT SELECT event_id FROM b)
-        |UNION ALL
-        |SELECT event_id, 'only_even' AS op FROM (SELECT event_id FROM a EXCEPT ALL SELECT event_id FROM b)""".stripMargin,
-
-    "q33_edit_distance" ->
-      """SELECT event_type, CAST(levenshtein(event_type, 'purchase') AS INT) AS dist
-        |FROM (SELECT DISTINCT event_type FROM events)""".stripMargin,
-
-    "q30_zorder_key" -> {
-      val interleave = (0 until 10).map { i =>
-        s"(((p_size >> $i) & 1) * ${1L << (2 * i)} + (((p_partkey % 1024) >> $i) & 1) * ${1L << (2 * i + 1)})"
-      }.mkString(" + ")
-      s"""SELECT p_partkey, CAST($interleave AS BIGINT) AS zkey FROM part"""
-    },
-
-    "q31_table_checksum" ->
-      s"""SELECT CAST(SUM(${hash32Sql(0,
-        "COALESCE(CAST(n_nationkey AS VARCHAR),'(null)') || '|' || COALESCE(n_name,'(null)') || '|' || COALESCE(CAST(n_regionkey AS VARCHAR),'(null)')")}) AS BIGINT) AS checksum,
-         |       CAST(COUNT(*) AS BIGINT) AS n_rows
-         |FROM nation""".stripMargin,
-
-    "q27_cube" ->
-      """SELECT COALESCE(event_type, '(all)') AS event_type,
-        |       COALESCE(CAST(date_trunc('month', CAST(ts AS TIMESTAMP)) AS DATE),
-        |                DATE '1970-01-01') AS metric_month,
-        |       CAST(COUNT(*) AS BIGINT) AS n
-        |FROM events
-        |GROUP BY CUBE(event_type, CAST(date_trunc('month', CAST(ts AS TIMESTAMP)) AS DATE))""".stripMargin,
-
-    "q28_pivot" ->
-      """SELECT CAST(ts AS DATE) AS metric_date,
-        |  CAST(COALESCE(CAST(SUM(CASE WHEN event_type = 'click' THEN CAST(value AS DECIMAL(18,2)) END) AS DECIMAL(18,2)), 0) AS DOUBLE) AS click,
-        |  CAST(COALESCE(CAST(SUM(CASE WHEN event_type = 'error' THEN CAST(value AS DECIMAL(18,2)) END) AS DECIMAL(18,2)), 0) AS DOUBLE) AS error,
-        |  CAST(COALESCE(CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) END) AS DECIMAL(18,2)), 0) AS DOUBLE) AS purchase,
-        |  CAST(COALESCE(CAST(SUM(CASE WHEN event_type = 'signup' THEN CAST(value AS DECIMAL(18,2)) END) AS DECIMAL(18,2)), 0) AS DOUBLE) AS signup,
-        |  CAST(COALESCE(CAST(SUM(CASE WHEN event_type = 'view' THEN CAST(value AS DECIMAL(18,2)) END) AS DECIMAL(18,2)), 0) AS DOUBLE) AS view
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "q29_wordcount" ->
-      s"""WITH t AS (SELECT unnest($toksSql) AS token FROM documents)
-         |SELECT token, CAST(COUNT(*) AS BIGINT) AS n
-         |FROM t GROUP BY 1
-         |ORDER BY n DESC, token ASC LIMIT 20""".stripMargin,
-
-    "q26_percentiles" ->
-      """SELECT event_type,
-        |       CAST(CAST(quantile_cont(value, 0.25) AS DECIMAL(18,6)) AS DOUBLE) AS p25,
-        |       CAST(CAST(quantile_cont(value, 0.5) AS DECIMAL(18,6)) AS DOUBLE) AS p50,
-        |       CAST(CAST(quantile_cont(value, 0.9) AS DECIMAL(18,6)) AS DOUBLE) AS p90
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // gates the EXACT twins; the sketches themselves are asserted
-    // in-plan (see the query's comment — DuckDB has no HLL++/t-digest
-    // twin to compare against)
-    "q67_sketch_gate" ->
-      s"""SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-         |       CAST(CAST(quantile_cont(value, 0.5)
-         |           FILTER (WHERE ${hash32Sql(3, "CAST(event_id AS VARCHAR)")} % 8 = 0)
-         |         AS DECIMAL(18,6)) AS DOUBLE) AS p50
-         |FROM events GROUP BY 1""".stripMargin,
-
-    "q25_session_window" -> sessionWindowOracle,
-
-    // batch/stream parity: the streaming session_window run is gated
-    // by the SAME oracle as batch q25
-    "s4_stream_sessions" -> sessionWindowOracle,
-
-    "q24_incremental_mart" -> incrementalMartOracle,
-
-    // stream parity: the 3-micro-batch incremental mart must finalize
-    // to exactly the full batch recompute
-    "s5_stream_mart" -> incrementalMartOracle,
-
-    "q23_typed_agg" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       MIN(event_id) AS min_event_id,
-        |       CAST(LEAST(COUNT(DISTINCT user_id), 64) AS BIGINT) AS n_users_capped
-        |FROM events GROUP BY 1""".stripMargin,
-    "t1_token_stats" ->
-      s"""SELECT doc_id,
-         |  CAST(len($toksSql) AS INT) AS n_tokens,
-         |  CAST(len(regexp_extract_all(lower(text), ' ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+')) AS INT) AS n_bpe
-         |FROM documents""".stripMargin,
-
-    "t2_quality" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |c AS (SELECT doc_id, len(toks) AS n,
-         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS stop_hits
-         |  FROM t)
-         |SELECT doc_id, CAST(n AS INT) AS n_tokens, CAST(stop_hits AS INT) AS stop_hits,
-         |  (CAST(LEAST(n, 200) AS DOUBLE) / 200.0
-         |   + LEAST(CASE WHEN n > 0 THEN CAST(stop_hits AS DOUBLE) / CAST(n AS DOUBLE)
-         |                ELSE 0.0 END, 0.5) * 2.0) / 2.0 AS quality
-         |FROM c""".stripMargin,
-
-    "t3_langid" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |c AS (SELECT doc_id,
-         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS c_en,
-         |  len(list_filter(toks, x -> x IN ('el','la','de','y','que','en','un','una','los','por'))) AS c_es,
-         |  len(list_filter(toks, x -> x IN ('der','die','das','und','ist','von','mit','den','ein','zu'))) AS c_de,
-         |  len(list_filter(toks, x -> x IN ('le','la','les','de','et','un','une','est','que','pour'))) AS c_fr
-         |  FROM t)
-         |SELECT doc_id,
-         |  CASE WHEN greatest(c_en,c_es,c_de,c_fr) = 0 THEN 'und'
-         |       WHEN c_en = greatest(c_en,c_es,c_de,c_fr) THEN 'en'
-         |       WHEN c_es = greatest(c_en,c_es,c_de,c_fr) THEN 'es'
-         |       WHEN c_de = greatest(c_en,c_es,c_de,c_fr) THEN 'de'
-         |       ELSE 'fr' END AS lang_pred
-         |FROM c""".stripMargin,
-
-    "t4_fingerprint" ->
-      s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents)
-         |SELECT doc_id,
-         |  CAST(list_reduce(list_prepend(0, list_transform(toks, tk -> ${hash32Sql(0, "tk")})),
-         |       (a, b) -> (a * 31 + b) % 1000000007) AS BIGINT) AS fp
-         |FROM t""".stripMargin,
-
-    "d1_exact_dedup" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 5 = 0)
-        |SELECT MIN(doc_id) AS doc_id, md5(text) AS content_hash,
-        |       CAST(COUNT(*) AS BIGINT) AS n_copies
-        |FROM corpus GROUP BY md5(text)""".stripMargin,
-
-    "d3_simhash" ->
-      s"""WITH t AS (SELECT doc_id,
-         |  list_transform($toksSql, tk -> CAST(('0x' || substr(md5(tk), 1, 15)) AS BIGINT)) AS hs
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(list_sum(list_transform(range(60), i ->
-         |    CASE WHEN list_sum(list_transform(hs, h ->
-         |           CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END)) > 0
-         |         THEN (CAST(1 AS BIGINT) << i) ELSE 0 END)) AS BIGINT) AS simhash
-         |FROM t""".stripMargin,
-
-    "d4_ngram_jaccard" ->
-      s"""WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-         |s AS (SELECT doc_id, $shinglesSql AS sh FROM tk)
-         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |  CASE WHEN len(list_distinct(list_concat(a.sh, b.sh))) > 0
-         |       THEN CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-         |            / CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS DOUBLE)
-         |       ELSE 0.0 END AS jaccard
-         |FROM s a JOIN s b ON b.doc_id = a.doc_id + 1""".stripMargin,
-
-    "e1_cosine_topk" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-         |c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         |s AS (SELECT query_id, neighbor_id,
-         |        ${dotSql("qv", "cv")} / (sqrt(${dotSql("qv", "qv")}) * sqrt(${dotSql("cv", "cv")})) AS simd
-         |      FROM c CROSS JOIN q
-         |      WHERE query_id <> neighbor_id),
-         |r AS (SELECT query_id, neighbor_id, simd AS sim,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-         |             ORDER BY simd DESC, neighbor_id ASC) AS INT) AS rnk
-         |      FROM s)
-         |SELECT query_id, neighbor_id, sim, rnk
-         |FROM r WHERE rnk <= 5""".stripMargin,
-
-    "e7_knn_graph" ->
-      s"""WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 10 = 0),
-         |s AS (SELECT a.vec_id AS src_id, b.vec_id AS dst_id,
-         |        a.embedding AS av, b.embedding AS bv
-         |      FROM v a CROSS JOIN v b WHERE a.vec_id <> b.vec_id),
-         |sc AS (SELECT src_id, dst_id,
-         |        ${dotSql("av", "bv")} / (sqrt(${dotSql("av", "av")}) * sqrt(${dotSql("bv", "bv")})) AS simd
-         |       FROM s),
-         |r AS (SELECT src_id, dst_id, simd AS sim,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY src_id
-         |             ORDER BY simd DESC, dst_id ASC) AS INT) AS rnk
-         |      FROM sc),
-         |e AS (SELECT * FROM r WHERE rnk <= 4)
-         |SELECT e.src_id, e.dst_id, e.sim, e.rnk,
-         |       (m.src_id IS NOT NULL) AS mutual
-         |FROM e LEFT JOIN e m ON e.src_id = m.dst_id AND e.dst_id = m.src_id""".stripMargin,
-
-    "e8_bucketed_recall" -> e8OracleSql,
-
-    "c2_corpus_prep" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 5 = 0),
-         |t AS (SELECT doc_id, text, $toksSql AS toks FROM corpus),
-         |c AS (SELECT doc_id, text, len(toks) AS ntok,
-         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS c_en,
-         |  len(list_filter(toks, x -> x IN ('el','la','de','y','que','en','un','una','los','por'))) AS c_es,
-         |  len(list_filter(toks, x -> x IN ('der','die','das','und','ist','von','mit','den','ein','zu'))) AS c_de,
-         |  len(list_filter(toks, x -> x IN ('le','la','les','de','et','un','une','est','que','pour'))) AS c_fr
-         |  FROM t),
-         |scored AS (SELECT doc_id, text, ntok,
-         |  (CAST(LEAST(ntok, 200) AS DOUBLE) / 200.0
-         |   + LEAST(CASE WHEN ntok > 0 THEN CAST(c_en AS DOUBLE) / CAST(ntok AS DOUBLE)
-         |                ELSE 0.0 END, 0.5) * 2.0) / 2.0 AS q,
-         |  CASE WHEN greatest(c_en,c_es,c_de,c_fr) = 0 THEN 'und'
-         |       WHEN c_en = greatest(c_en,c_es,c_de,c_fr) THEN 'en'
-         |       WHEN c_es = greatest(c_en,c_es,c_de,c_fr) THEN 'es'
-         |       WHEN c_de = greatest(c_en,c_es,c_de,c_fr) THEN 'de'
-         |       ELSE 'fr' END AS lang
-         |  FROM c),
-         |kept AS (SELECT * FROM scored WHERE q >= 0.2 AND lang = 'en'),
-         |canon AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(text)
-         |                    ORDER BY doc_id ASC) AS rn FROM kept)
-         |SELECT CASE WHEN ${hash32Sql(2, "CAST(doc_id AS VARCHAR)")} % 10 < 9
-         |            THEN 'train' ELSE 'holdout' END AS split,
-         |       CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |       CAST(SUM(ntok) AS BIGINT) AS n_tokens,
-         |       CAST(SUM(CAST(floor(q * 100000000) AS BIGINT)) AS DOUBLE)
-         |         / CAST(COUNT(*) AS DOUBLE) / 100000000.0 AS avg_quality
-         |FROM canon WHERE rn = 1
-         |GROUP BY 1""".stripMargin,
-
-    "c1_clean_corpus" ->
-      s"""WITH corpus AS (
-         |  SELECT doc_id, text FROM documents
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 5 = 0),
-         |t AS (SELECT doc_id, text, $toksSql AS toks FROM corpus),
-         |c AS (SELECT doc_id, text, len(toks) AS n,
-         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to','in','is','that','it','for'))) AS stop_hits,
-         |  len(list_filter(toks, x -> x IN ('el','la','de','y','que','en','un','una','los','por'))) AS c_es,
-         |  len(list_filter(toks, x -> x IN ('der','die','das','und','ist','von','mit','den','ein','zu'))) AS c_de,
-         |  len(list_filter(toks, x -> x IN ('le','la','les','de','et','un','une','est','que','pour'))) AS c_fr
-         |  FROM t),
-         |scored AS (SELECT doc_id, text,
-         |  (CAST(LEAST(n, 200) AS DOUBLE) / 200.0
-         |   + LEAST(CASE WHEN n > 0 THEN CAST(stop_hits AS DOUBLE) / CAST(n AS DOUBLE)
-         |                ELSE 0.0 END, 0.5) * 2.0) / 2.0 AS quality,
-         |  CASE WHEN greatest(stop_hits,c_es,c_de,c_fr) = 0 THEN 'und'
-         |       WHEN stop_hits = greatest(stop_hits,c_es,c_de,c_fr) THEN 'en'
-         |       WHEN c_es = greatest(stop_hits,c_es,c_de,c_fr) THEN 'es'
-         |       WHEN c_de = greatest(stop_hits,c_es,c_de,c_fr) THEN 'de'
-         |       ELSE 'fr' END AS lang_pred
-         |  FROM c),
-         |kept AS (SELECT * FROM scored WHERE quality >= 0.2 AND lang_pred = 'en'),
-         |dedup AS (SELECT MIN(doc_id) AS doc_id, md5(text) AS content_hash,
-         |                 CAST(COUNT(*) AS BIGINT) AS n_copies
-         |          FROM kept GROUP BY md5(text))
-         |SELECT d.doc_id, d.content_hash, d.n_copies,
-         |       k.quality AS quality
-         |FROM dedup d JOIN kept k ON d.doc_id = k.doc_id""".stripMargin,
-
-    "q22_salted_agg" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total,
-        |       MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS first_us,
-        |       MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS last_us
-        |FROM events GROUP BY 1""".stripMargin,
-
-    // q87's contract IS the plain join: salting must be invisible in
-    // the result (dim rows replicate once per salt, each fact row
-    // matches exactly its one salt copy).
-    "q87_salted_join" ->
-      """SELECT c.c_mktsegment, e.event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |WHERE e.user_id IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    "s1_stream_tumbling" ->
-      """SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS win_start_us,
-        |       event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY 1, 2""".stripMargin,
-
-    "m1_media_features" ->
-      s"""SELECT doc_id,
-         |  CAST(octet_length(encode(text)) AS INT) AS byte_len,
-         |  md5(text) AS content_md5,
-         |  CAST(1 + ${hash32Sql(0, "text")} % 1024 AS INT) AS fake_width,
-         |  CAST(1 + ${hash32Sql(1, "text")} % 30 AS INT) AS fake_frames
-         |FROM documents""".stripMargin,
-
-    // m4: closed-form inverse of Multimodal.synthWavPcm — every value
-    // the REAL WavPcmDecoder must recover from the byte stream, derived
-    // from doc_id by pure integer arithmetic plus one float-exact
-    // division (amp/32768: power-of-two denominator, amp < 2^15, so
-    // DOUBLE-divide → REAL-round is bit-identical to the decoder's
-    // float math; zcr is exactly 1, dc exactly 0 by construction).
-    "m4_wav_features" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |         1 + doc_id % 2 AS ch,
-        |         64 + 2 * (doc_id % 96) AS nf,
-        |         256 + (doc_id % 1024) * 16 AS amp
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(44 + nf * 2 * ch AS INT) AS byte_len,
-        |  CAST(8000 + (doc_id % 8) * 1000 AS INT) AS sr,
-        |  CAST(ch AS INT) AS channels,
-        |  CAST(nf AS INT) AS n_frames,
-        |  CAST(CAST(CAST(amp AS DOUBLE) / 32768 AS REAL) AS DOUBLE) AS rms,
-        |  CAST(CAST(CAST(amp AS DOUBLE) / 32768 AS REAL) AS DOUBLE) AS peak,
-        |  CAST(1.0 AS DOUBLE) AS zcr,
-        |  CAST(0.0 AS DOUBLE) AS dc,
-        |  CAST(CAST(CAST(amp AS DOUBLE) / 32768 AS REAL) AS DOUBLE) AS q2_rms
-        |FROM p""".stripMargin,
-
-    // m5: closed-form BMP features. Per-row constant colors make every
-    // channel sum a range() fold over the row recurrence; per-pixel
-    // and per-row means are the same rational number (w cancels), and
-    // IEEE division rounds by VALUE, so the oracle's S/(255·h) equals
-    // the decoder's (w·S)/(255·w·h) bit-for-bit; each feature then
-    // takes the decoder's double→float→double rounding path via
-    // CAST(... AS REAL).
-    "m5_bmp_features" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |         3 + doc_id % 5 AS w,
-        |         4 + doc_id % 11 AS h,
-        |         CASE doc_id % 3 WHEN 0 THEN 40 WHEN 1 THEN 108
-        |           ELSE 124 END AS dib,
-        |         (doc_id % 4) * 4 AS gap,
-        |         doc_id % 256 AS dr,
-        |         (doc_id + 85) % 256 AS dg,
-        |         (doc_id + 170) % 256 AS db
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, w, h, dib, gap, dr, dg, db,
-        |    list_sum(list_transform(range(h), y -> (dr + 7*y) % 256)) AS sr,
-        |    list_sum(list_transform(range(h), y -> (dg + 5*y) % 256)) AS sg,
-        |    list_sum(list_transform(range(h), y -> (db + 3*y) % 256)) AS sb,
-        |    list_max(list_transform(range(h), y ->
-        |      greatest((dr + 7*y) % 256, (dg + 5*y) % 256,
-        |               (db + 3*y) % 256))) AS mx,
-        |    list_min(list_transform(range(h), y ->
-        |      least((dr + 7*y) % 256, (dg + 5*y) % 256,
-        |            (db + 3*y) % 256))) AS mn
-        |  FROM p)
-        |SELECT doc_id,
-        |  CAST(14 + dib + gap + ((24*w + 31) // 32) * 4 * h AS INT) AS byte_len,
-        |  CAST(w AS INT) AS width,
-        |  CAST(h AS INT) AS height,
-        |  CAST(CAST(CAST(sr AS DOUBLE) / (255.0 * h) AS REAL) AS DOUBLE) AS mean_r,
-        |  CAST(CAST(CAST(sg AS DOUBLE) / (255.0 * h) AS REAL) AS DOUBLE) AS mean_g,
-        |  CAST(CAST(CAST(sb AS DOUBLE) / (255.0 * h) AS REAL) AS DOUBLE) AS mean_b,
-        |  CAST(CAST(CAST(sr + sg + sb AS DOUBLE) / (765.0 * h) AS REAL) AS DOUBLE) AS luma,
-        |  CAST(CAST(CAST(dr + dg + db AS DOUBLE) / 765.0 AS REAL) AS DOUBLE) AS top_luma,
-        |  CAST(CAST(CAST((dr + 7*(h-1)) % 256 + (dg + 5*(h-1)) % 256
-        |      + (db + 3*(h-1)) % 256 AS DOUBLE) / 765.0 AS REAL) AS DOUBLE) AS bot_luma,
-        |  CAST(CAST(CAST(mx AS DOUBLE) / 255.0 AS REAL) AS DOUBLE) AS max_c,
-        |  CAST(CAST(CAST(mn AS DOUBLE) / 255.0 AS REAL) AS DOUBLE) AS min_c
-        |FROM s""".stripMargin
-  )
-
-  def parityOracles: Map[String, String] = Map(
-    "q1_daily_metrics" ->
-      """SELECT CAST(ts AS DATE) AS metric_date,
-        |       CAST(COUNT(*) AS INT) AS events_count,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_value
-        |FROM events
-        |WHERE event_type = 'purchase' AND ts IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-
-    "q2_domain_daily" ->
-      """SELECT lang,
-        |       CASE WHEN source IS NULL OR source = '' THEN '(no_domain)'
-        |            ELSE lower(split_part(replace(replace(source,'https://',''),'http://',''),'/',1))
-        |       END AS domain,
-        |       CAST(COUNT(*) AS INT) AS events_count,
-        |       CAST(SUM(CAST(n_chars AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_value
-        |FROM documents
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q3_user_activity" ->
-      """SELECT CAST(ts AS DATE) AS metric_date,
-        |       COALESCE(CAST(user_id AS VARCHAR), '(unknown)') AS author,
-        |       CAST(COUNT(*) AS INT) AS events_count,
-        |       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avg_value
-        |FROM events
-        |WHERE event_type = 'purchase' AND ts IS NOT NULL
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q4_merge_upsert" ->
-      s"""WITH $mergeFixtureSql,
-         |u AS (SELECT *, 0 AS src FROM target UNION ALL SELECT *, 1 AS src FROM batch),
-         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id
-         |                 ORDER BY extracted_at DESC, src ASC) AS rn FROM u)
-         |SELECT event_id, event_type, CAST(val AS DOUBLE) AS val,
-         |       epoch_us(extracted_at) AS extracted_at_us
-         |FROM r WHERE rn = 1""".stripMargin,
-
-    "q5_merge_counts" ->
-      s"""WITH $mergeFixtureSql
-         |SELECT CAST(COUNT(CASE WHEN t.event_id IS NULL THEN 1 END) AS BIGINT) AS inserted,
-         |       CAST(COUNT(CASE WHEN t.event_id IS NOT NULL
-         |                        AND b.extracted_at > t.extracted_at THEN 1 END) AS BIGINT) AS updated
-         |FROM batch b LEFT JOIN target t USING (event_id)""".stripMargin,
-
-    "q6_dedup_keep_last" ->
-      """WITH b AS (
-        |  SELECT event_id, CAST(value AS DECIMAL(18,2)) AS val, 1 AS ord
-        |  FROM events WHERE event_id % 5 = 0
-        |  UNION ALL
-        |  SELECT event_id, CAST(CAST(value AS DECIMAL(18,2)) + 1 AS DECIMAL(18,2)), 2
-        |  FROM events WHERE event_id % 10 = 0),
-        |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_id ORDER BY ord DESC) rn FROM b)
-        |SELECT event_id, CAST(val AS DOUBLE) AS val FROM r WHERE rn = 1""".stripMargin,
-
-    "q7_dup_check" ->
-      """SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM lineitem GROUP BY 1 HAVING COUNT(*) > 1""".stripMargin,
-
-    "q8_summary_union" ->
-      """SELECT 'orders' AS tbl, CAST(MIN(o_orderdate) AS DATE) AS min_date,
-        |       CAST(MAX(o_orderdate) AS DATE) AS max_date, CAST(COUNT(*) AS BIGINT) AS n
-        |FROM orders
-        |UNION ALL
-        |SELECT 'lineitem', CAST(MIN(l_shipdate) AS DATE), CAST(MAX(l_shipdate) AS DATE), CAST(COUNT(*) AS BIGINT)
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'events', CAST(MIN(ts) AS DATE), CAST(MAX(ts) AS DATE), CAST(COUNT(*) AS BIGINT)
-        |FROM events""".stripMargin,
-
-    "q9_last_day_count" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS dd FROM events),
-        |last_day AS (SELECT MAX(dd) AS maxd FROM d)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n
-        |FROM d JOIN last_day ON d.dd = last_day.maxd""".stripMargin,
-
-    "q10_topk_per_group" ->
-      """WITH c AS (SELECT CAST(ts AS DATE) AS metric_date, event_type,
-        |                  CAST(COUNT(*) AS BIGINT) AS n
-        |           FROM events GROUP BY 1, 2),
-        |r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY metric_date
-        |                ORDER BY n DESC, event_type ASC) AS INT) AS rnk FROM c)
-        |SELECT metric_date, event_type, n, rnk FROM r WHERE rnk <= 3""".stripMargin,
-
-    "q11_order_limit" ->
-      """SELECT metric_date, CAST(total AS DOUBLE) AS total FROM (
-        |  SELECT CAST(ts AS DATE) AS metric_date,
-        |         CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS total
-        |  FROM events GROUP BY 1)
-        |ORDER BY total DESC, metric_date ASC LIMIT 5""".stripMargin,
-
-    "q12_anti_join_new" ->
-      """SELECT event_id, event_type FROM events
-        |WHERE event_id % 3 = 0 AND event_id % 2 <> 0""".stripMargin,
-
-    "q13_enrich_contract" ->
-      """SELECT event_id,
-        |       epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |       CAST(ts AS DATE) AS event_date,
-        |       CAST(COALESCE(CAST(value AS DECIMAL(18,2)), CAST(0 AS DECIMAL(18,2))) AS DOUBLE) AS val,
-        |       COALESCE(TRY_CAST(json_extract_string(props, '$.k') AS BIGINT), 0) AS prop_k,
-        |       substr(event_type, 1, 3) AS type3
-        |FROM events""".stripMargin,
-
-    "q14_array_len" ->
-      """SELECT vec_id, CAST(COALESCE(len(embedding), 0) AS INT) AS dim, label
-        |FROM embeddings""".stripMargin,
-
-    "q15_join_agg_nation" ->
-      """SELECT n_name, CAST(COUNT(*) AS BIGINT) AS n_orders,
-        |       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY 1""".stripMargin,
-
-    "q16_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin,
-
-    "q17_running_total" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS metric_date, event_type,
-        |                  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS daily
-        |           FROM events GROUP BY 1, 2)
-        |SELECT metric_date, event_type, CAST(daily AS DOUBLE) AS daily,
-        |       CAST(CAST(SUM(daily) OVER (PARTITION BY event_type ORDER BY metric_date
-        |            ROWS UNBOUNDED PRECEDING) AS DECIMAL(18,2)) AS DOUBLE) AS running
-        |FROM d""".stripMargin,
-
-    "q18_tumbling_hour" ->
-      """SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS win_start_us,
-        |       event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
-        |FROM events
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q19_rollup" ->
-      """SELECT COALESCE(event_type, '(all)') AS event_type,
-        |       CAST(COUNT(*) AS BIGINT) AS n,
-        |       CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total,
-        |       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-        |FROM events
-        |GROUP BY ROLLUP(event_type)""".stripMargin,
-
-    "q20_asof_join" ->
-      """WITH c AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |         last_value(CASE WHEN event_type = 'signup'
-        |                         THEN epoch_us(CAST(ts AS TIMESTAMP)) END IGNORE NULLS)
-        |           OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_signup_us
-        |  FROM events)
-        |SELECT event_id, user_id, ts_us,
-        |       COALESCE(last_signup_us, -1) AS last_signup_us
-        |FROM c WHERE event_type = 'purchase'""".stripMargin,
-
-    "q21_sessionize" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |         lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-        |           (PARTITION BY user_id ORDER BY ts ASC, event_id ASC) AS prev_us
-        |  FROM events),
-        |f AS (SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 1800000000
-        |                     THEN 1 ELSE 0 END AS new_sess FROM t),
-        |s AS (SELECT user_id, event_id, ts_us,
-        |        SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us ASC, event_id ASC
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |      FROM f)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |       CAST(COUNT(*) AS BIGINT) AS n_events,
-        |       MIN(ts_us) AS start_us, MAX(ts_us) AS end_us
-        |FROM s GROUP BY 1, 2""".stripMargin
-  )
 }

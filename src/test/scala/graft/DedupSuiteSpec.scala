@@ -221,7 +221,7 @@ class DedupSuiteSpec extends SparkSpec {
 
   test("d7 fixture plants 3-chains and d7 clusters them transitively") {
     val pairs = DedupSuite.minhashNearDupsPortable(
-        SparkEntry.corpusD7(spark, sf), "doc_id", "text",
+        catalog.DedupGates.corpusD7(spark, sf), "doc_id", "text",
         n = 3, k = 16, bands = 4, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // true chain: (A,B) and (B,C) found, no (A,C) shortcut — the case
