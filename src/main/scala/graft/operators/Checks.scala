@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks — SURVEY §2.B B5, §2.F G4-G7, §2.G S1, §2.E J3.
@@ -17,6 +18,41 @@ object Checks {
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).cast("bigint").as("n"))
       .filter(col("n") > 1)
+
+  /** An [[observedUnique]] check, readable once the action consuming its
+    * frame has returned. */
+  final class UniqueCheck private[Checks] (obs: Observation, messages: Seq[String]) {
+    /** Per case, the rows whose key occurs more than once. */
+    def duplicateRows: Seq[Long] =
+      messages.indices.map(i => obs.get(s"dup$i").asInstanceOf[Long])
+
+    /** Throws IllegalArgumentException with the first failing case's
+      * message. */
+    def verify(): Unit = messages.zip(duplicateRows).foreach { case (m, n) =>
+      require(n == 0, s"$m ($n rows share a key)")
+    }
+  }
+
+  /** B5/G7 riding an action the caller already runs: the returned frame
+    * is `df` unchanged, and the action that consumes it observes, per
+    * case (failure message, rows it covers), how many rows share their
+    * key with another row. [[UniqueCheck.verify]] then fails on any.
+    * The count is `count(1) over (partition by keys)`: on a frame
+    * already hash-partitioned on `keys` (a window's or an aggregate's
+    * output) it adds no Exchange, and on one also sorted on them (a
+    * window's output) no Sort either. One Observation per call. */
+  def observedUnique(df: DataFrame, keys: Seq[String],
+                     cases: Seq[(String, Column)]): (DataFrame, UniqueCheck) = {
+    val obs = Observation()
+    val n = count(lit(1)).over(Window.partitionBy(keys.map(col): _*))
+    val dups = cases.zipWithIndex.map { case ((_, rows), i) =>
+      count(when(rows && col("__dup_n") > 1, 1)).as(s"dup$i")
+    }
+    val checked = df.withColumn("__dup_n", n)
+      .observe(obs, dups.head, dups.tail: _*)
+      .drop("__dup_n")
+    (checked, new UniqueCheck(obs, cases.map(_._1)))
+  }
 
   /** G4/G5/S1 — per-table summary row (name, min, max, count) stacked
     * with UNION ALL (`/root/reference/sql/mart/03_checks.sql:8-15`).

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 
 /** The versioned-staging protocol shared by the batch pipeline and the
   * streaming merge sink: each merge writes a NEW `v%06d` directory
@@ -151,11 +152,16 @@ object VersionedStaging {
     * version as target, keep-newest merge, publish the next version.
     * Returns the new version path, or None on batch-id replay.
     *
-    * One Spark action, the merged write: the counts ride it as observed
-    * metrics ([[Merge.observedMerged]]), and `guard` sees them before
-    * the rename, so a guard that throws publishes nothing. The target
-    * is read with the batch's schema (it must union with the batch), so
-    * opening it infers no schema either. */
+    * One Spark action, the merged write. Two checks ride it as observed
+    * metrics and run before the rename, so a failing one publishes
+    * nothing and the prior version stays the latest complete one:
+    *   - key uniqueness of the merged relation ([[Checks.observedUnique]],
+    *     B5/G7 "duplicate ids in staging"), a window over the merge's own
+    *     key partitioning, so it adds no Exchange or Sort;
+    *   - `guard`, the caller's, over the merge counts
+    *     ([[Merge.observedMerged]]).
+    * The target is read with the batch's schema (it must union with the
+    * batch), so opening it infers no schema either. */
   def mergeInto(spark: SparkSession, root: String, batch: DataFrame,
                 keys: Seq[String], versionCol: String,
                 batchId: Option[Long] = None,
@@ -165,8 +171,15 @@ object VersionedStaging {
     val target = current.map(spark.read.schema(batch.schema).parquet(_))
       .getOrElse(batch.limit(0))
     val (merged, obs) = Merge.observedMerged(target, batch, keys, versionCol)
+    val (checked, unique) = checkStagingKeys(merged, keys, root)
     lazy val counts = Merge.countsOf(obs) // filled once the write returns
-    publishFrom(spark, root, current, merged, batchId, () => guard(counts))
+    publishFrom(spark, root, current, checked, batchId,
+      () => { unique.verify(); guard(counts) })
       .map(dest => (dest, Merge.MergeResult(merged, counts.inserted, counts.updated)))
   }
+
+  /** The staging check (`04_checks.sql`): no key occurs twice. */
+  private[graft] def checkStagingKeys(df: DataFrame, keys: Seq[String],
+                                      root: String): (DataFrame, Checks.UniqueCheck) =
+    Checks.observedUnique(df, keys, Seq(s"duplicate ids in staging $root" -> lit(true)))
 }

@@ -1,15 +1,16 @@
 package graft.pipeline
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.Enrich
 import graft.operators.{Checks, Dedup, Marts, Merge, VersionedStaging}
 
 /** The reference pipeline itself, re-expressed Spark-first: RAW
-  * (multiLine JSON) → typed staging → keyed merge → daily marts →
-  * checks, with an append-only audit log. Mirrors
+  * (multiLine JSON) → typed staging → keyed merge → daily marts, with
+  * an append-only audit log; the check phase rides the merge and mart
+  * actions as observed metrics. Mirrors
   * `/root/reference/src/pipeline.py` end-to-end minus the HTTP extract
   * (a driver-side fetch in the reference; out of scope per SURVEY §2.A).
   */
@@ -79,9 +80,10 @@ object HnPipeline {
     * shared versioned-staging protocol (newest COMPLETE version as
     * target, keep-newest merge, new version dir — never
     * overwrite-while-reading, SURVEY §7.4). See
-    * [[graft.operators.VersionedStaging]]. The K5 non-empty guard reads
-    * the batch row count the merged write observed, before the new
-    * version is renamed into place: an empty batch publishes nothing. */
+    * [[graft.operators.VersionedStaging]]. The staging check
+    * (`04_checks.sql`, no duplicate id) and the K5 non-empty guard read
+    * what the merged write observed, before the new version is renamed
+    * into place: a failing check or an empty batch publishes nothing. */
   def mergeIntoStaging(spark: SparkSession, stagingRoot: String,
                        batch: DataFrame): (String, Merge.MergeResult) =
     VersionedStaging.mergeInto(spark, stagingRoot, batch,
@@ -89,47 +91,67 @@ object HnPipeline {
       guard = c => require(c.batchRows > 0, "empty transform result") // K5
     ).get // no batchId -> never skips
 
-  /** Mart phase (`02_marts.sql`): shared filtered base (the reference's
-    * repeated CTE), three grouped marts, full-refresh semantics =
-    * overwrite write by the caller. The base is not cached: the caller
-    * writes the marts after the checks, so its writes rescan staging
-    * either way, and a cache measured as a wash that cost one job. */
+  /** The three marts: each one's name and its key after `metric_date`,
+    * as (column name, value); the daily mart has none. */
+  private val martKeys: Seq[(String, Option[(String, Column)])] = Seq(
+    "daily_story_metrics" -> None,
+    "top_domains_daily" -> Some("domain" -> Enrich.domainOf(col("url"))), // C8+C9
+    "user_activity_daily" -> Some("author" -> coalesce(col("by"), lit("(unknown)")))) // C7
+
+  /** Mart and check phases (`02_marts.sql` + `03_checks.sql`): one
+    * action, one scan of `staging`, one aggregate for all three marts.
+    * The shared filtered base is the reference's repeated CTE; each
+    * story row is tagged once per mart, `(mart, key)`, and grouped by
+    * `(mart, metric_date, key)`. Each mart's PK check rides that
+    * aggregate as an observed count (a window on the aggregate's own
+    * partitioning: a Sort, no Exchange) and is verified once the
+    * aggregate is materialised by `localCheckpoint`, so a duplicate PK
+    * fails the run before anything is returned. The three marts are
+    * projections of the checkpoint: the caller's overwrite writes
+    * (full-refresh semantics) each run one job with no shuffle. */
   def marts(staging: DataFrame): Map[String, DataFrame] = {
+    val (checked, pk) = fusedMarts(staging)
+    val materialised = checked.localCheckpoint(eager = true)
+    pk.verify()
+    martKeys.map { case (mart, key) =>
+      val cols = key match {
+        case Some((k, _)) => Seq(col("key").as(k), col("stories_count"), col("avg_score"))
+        case None => Seq(col("stories_count"), col("total_score"), col("avg_score"),
+          col("total_comments"), col("avg_comments"))
+      }
+      mart -> materialised.filter(col("mart") === mart)
+        .select(col("metric_date") +: cols :+ col("last_batch_extracted_at"): _*)
+    }.toMap
+  }
+
+  /** The three marts as one lazy aggregate keyed `(mart, metric_date,
+    * key)`, with their PK checks observed on it. */
+  private[graft] def fusedMarts(staging: DataFrame): (DataFrame, Checks.UniqueCheck) = {
     val base = staging
       .filter(col("type") === "story" && col("time_utc").isNotNull) // B3
       .select(
         to_date(col("time_utc")).as("metric_date"), // C6
-        Enrich.domainOf(col("url")).as("domain"), // C8+C9
-        coalesce(col("by"), lit("(unknown)")).as("author"), // C7
         coalesce(col("score"), lit(0L)).as("score"),
         coalesce(col("descendants"), lit(0L)).as("comments"),
-        col("extracted_at"))
-    val daily = base.groupBy("metric_date").agg(
+        col("extracted_at"),
+        inline(array(martKeys.map { case (mart, key) =>
+          struct(lit(mart).as("mart"), key.fold(lit(""))(_._2).as("key"))
+        }: _*)))
+    val all = base.groupBy("mart", "metric_date", "key").agg(
       count(lit(1)).cast("int").as("stories_count"),
       sum(col("score")).cast("bigint").as("total_score"),
       Marts.avgDec2(col("score")).as("avg_score"), // C10
       sum(col("comments")).cast("bigint").as("total_comments"),
       Marts.avgDec2(col("comments")).as("avg_comments"),
       max(col("extracted_at")).as("last_batch_extracted_at"))
-    def grouped(key: String) = base.groupBy(col("metric_date"), col(key)).agg(
-      count(lit(1)).cast("int").as("stories_count"),
-      Marts.avgDec2(col("score")).as("avg_score"),
-      max(col("extracted_at")).as("last_batch_extracted_at"))
-    Map(
-      "daily_story_metrics" -> daily,
-      "top_domains_daily" -> grouped("domain"),
-      "user_activity_daily" -> grouped("author"))
+    checkMartKeys(all)
   }
 
-  /** Check phase (`04_checks.sql` + `03_checks.sql` as assertions). */
-  def runChecks(staging: DataFrame, marts: Map[String, DataFrame]): Unit = {
-    require(Checks.duplicateKeys(staging, Seq("id")).isEmpty,
-      "duplicate ids in staging")
-    marts.foreach { case (name, m) =>
-      val keys = m.columns.toIndexedSeq.takeWhile(c => c == "metric_date" || c == "domain" || c == "author")
-      require(Checks.duplicateKeys(m, keys).isEmpty, s"duplicate PK in $name")
-    }
-  }
+  /** Each mart's PK check (`03_checks.sql`) on the fused aggregate,
+    * keyed `(mart, metric_date, key)`. */
+  private[graft] def checkMartKeys(all: DataFrame): (DataFrame, Checks.UniqueCheck) =
+    Checks.observedUnique(all, Seq("mart", "metric_date", "key"),
+      martKeys.map { case (mart, _) => s"duplicate PK in $mart" -> (col("mart") === mart) })
 
   /** K3 — audit row appended per batch (`01_audit.sql`). */
   def auditRow(spark: SparkSession, auditDir: String, phase: String,
@@ -144,8 +166,9 @@ object HnPipeline {
       .write.mode("append").parquet(auditDir)
   }
 
-  /** K1 — full run: latest raw file → transform → merge → marts →
-    * checks → audit. Returns mart DataFrames for inspection. */
+  /** K1 — full run: latest raw file → transform → merge (+ staging
+    * check) → marts (+ PK checks) → audit, three Spark actions. Returns
+    * the mart DataFrames for the caller to write. */
   def run(spark: SparkSession, rawGlob: String, stagingRoot: String,
           auditDir: String): Map[String, DataFrame] = {
     val file = latestFile(spark, rawGlob)
@@ -165,7 +188,6 @@ object HnPipeline {
       // read back with the merged schema: no schema-inference job
       val staging = spark.read.schema(res.merged.schema).parquet(newPath)
       val m = marts(staging)
-      runChecks(staging, m)
       auditRow(spark, auditDir, "load", file, "success", res.inserted, res.updated, None)
       m
     } catch {

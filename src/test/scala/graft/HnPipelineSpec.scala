@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftColumnBridge, Row}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.VersionedStaging
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.functions.Enrich
+import graft.operators.{Marts, Merge, VersionedStaging}
 import graft.pipeline.HnPipeline
 
 class HnPipelineSpec extends SparkSpec {
@@ -112,15 +115,24 @@ class HnPipelineSpec extends SparkSpec {
   }
 
   /** Spark jobs that `body` starts from this thread (tagged by a local
-    * property, so other threads' jobs are not counted). */
-  private def jobsOf(body: => Unit): Int = {
+    * property, so other threads' jobs are not counted), and the shuffle
+    * bytes their stages wrote. */
+  private def jobsOf(body: => Unit): (Int, Long) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID.toString
     val n = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.jobsOf") == tag))
+        if (Option(e.properties).exists(_.getProperty("graft.jobsOf") == tag)) {
           n.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          Option(e.stageInfo.taskMetrics).foreach(m =>
+            shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten))
     }
     sc.addSparkListener(l)
     sc.setLocalProperty("graft.jobsOf", tag)
@@ -130,23 +142,68 @@ class HnPipelineSpec extends SparkSpec {
       GraftColumnBridge.drainListenerBus(spark)
       sc.removeSparkListener(l)
     }
-    n.get
+    (n.get, shuffled.get)
   }
 
-  // Job budget of one non-first batch, measured in this suite's session:
-  // 12 jobs. The merge counts and the K5 guard ride the merged write,
-  // and neither the target nor the read-back infers a schema; with a
-  // cached batch and mart base, a count guard and a counts join, it
-  // was 21.
-  test("one non-first batch runs at most 12 Spark jobs") {
-    val root = Files.createTempDirectory("hnpipe_jobs").toString
+  /** Runs a first and then a second batch into a fresh root; returns the
+    * root, the second run's Spark job count and the marts it returned. */
+  private def secondBatch(prefix: String): (String, Int, Map[String, DataFrame]) = {
+    val root = Files.createTempDirectory(prefix).toString
     val rawDir = s"$root/raw"; Files.createDirectories(Paths.get(rawDir))
     val staging = s"$root/staging"; val audit = s"$root/audit"
     writeRaw(rawDir, "hn_raw_20240102_000000.json", batch1)
     HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit)
     writeRaw(rawDir, "hn_raw_20240103_000000.json", batch2)
-    val jobs = jobsOf(HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit))
+    var marts = Map.empty[String, DataFrame]
+    val (jobs, _) = jobsOf { marts = HnPipeline.run(spark, s"$rawDir/hn_raw_*.json", staging, audit) }
+    (root, jobs, marts)
+  }
+
+  // The budget before the checks rode the run's own actions: 12 jobs.
+  test("one non-first batch runs at most 12 Spark jobs") {
+    val (_, jobs, _) = secondBatch("hnpipe_jobs")
     assert(jobs <= 12, s"$jobs Spark jobs")
+  }
+
+  // Job budget of one non-first batch, measured in this suite's session:
+  // 6 jobs, three actions. The merged write (3 jobs) carries the merge
+  // counts, the K5 guard and the staging check; the fused mart
+  // aggregate (2 jobs) carries the three mart PK checks; the audit
+  // append is 1. With each check an action of its own, it was 12. The
+  // caller's three mart writes read the materialised aggregate: one job
+  // each, no shuffle (with the marts as lazy aggregates, 6 jobs).
+  test("one non-first batch runs at most 6 Spark jobs and its mart writes 3 with no shuffle") {
+    val (root, jobs, marts) = secondBatch("hnpipe_jobs")
+    assert(jobs <= 6, s"$jobs Spark jobs")
+    val (writeJobs, writeShuffle) = jobsOf(marts.foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$root/marts/$name")
+    })
+    assert(writeJobs <= 3, s"$writeJobs Spark jobs writing the marts")
+    assert(writeShuffle == 0L, s"mart writes shuffled $writeShuffle bytes")
+  }
+
+  // the staging check and each mart's PK check ride an action the run
+  // needs anyway; the checks' windows add no Exchange to either plan
+  test("plan shape: the staging check adds no Exchange or Sort; the fused marts shuffle once") {
+    def nodes(p: String, node: String) = p.linesIterator.count(_.contains(node))
+    val batch = HnPipeline.transform(spark.read.schema(HnPipeline.rawSchema)
+      .json(spark.createDataset(Seq(
+        """{"id": 1, "type": "story", "by": "a", "time": 1704153600}"""))(
+        org.apache.spark.sql.Encoders.STRING)), new java.sql.Timestamp(0))
+    val (merged, _) = Merge.observedMerged(batch.limit(0), batch, Seq("id"), "extracted_at")
+    val (checked, _) = VersionedStaging.checkStagingKeys(merged, Seq("id"), "staging")
+    val before = merged.queryExecution.executedPlan.toString
+    val after = checked.queryExecution.executedPlan.toString
+    assert(nodes(after, "Window ") == nodes(before, "Window ") + 1, after)
+    Seq("Exchange", "Sort ").foreach(node =>
+      assert(nodes(after, node) == nodes(before, node), s"$node:\n$before\nvs\n$after"))
+    // the marts read a published version, as `run` does
+    val version = Files.createTempDirectory("hnpipe_plan").resolve("v000001").toString
+    batch.write.parquet(version)
+    val (fused, _) = HnPipeline.fusedMarts(spark.read.schema(batch.schema).parquet(version))
+    val fusedPlan = fused.queryExecution.executedPlan.toString
+    assert(nodes(fusedPlan, "Exchange") == 1, fusedPlan)
+    assert(nodes(fusedPlan, "Window ") == 1, fusedPlan)
   }
 
   test("pipeline ingests a 10k-record JSON batch (moderate-scale smoke)") {
@@ -171,23 +228,112 @@ class HnPipelineSpec extends SparkSpec {
   }
 
   test("duplicate-key checks fail on a planted duplicate in staging or a mart") {
+    def consume(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
     val root = Files.createTempDirectory("hnpipe_dup").toString
     writeRaw(root, "hn_raw_20240102_000000.json", batch1)
     val staging = HnPipeline.transform(
       HnPipeline.readRaw(spark, s"$root/hn_raw_20240102_000000.json"),
       new java.sql.Timestamp(0))
-    val marts = HnPipeline.marts(staging)
-    HnPipeline.runChecks(staging, marts) // clean
-    val dupStaging = intercept[IllegalArgumentException] {
-      HnPipeline.runChecks(staging.unionByName(staging.filter(col("id") === 2)), marts)
-    }
+    val (clean, cleanCheck) = VersionedStaging.checkStagingKeys(staging, Seq("id"), root)
+    consume(clean)
+    cleanCheck.verify()
+    val (dup, dupCheck) = VersionedStaging.checkStagingKeys(
+      staging.unionByName(staging.filter(col("id") === 2)), Seq("id"), root)
+    consume(dup)
+    assert(dupCheck.duplicateRows == Seq(2L))
+    val dupStaging = intercept[IllegalArgumentException](dupCheck.verify())
     assert(dupStaging.getMessage.contains("duplicate ids in staging"))
-    val domains = marts("top_domains_daily")
-    val dupMart = intercept[IllegalArgumentException] {
-      HnPipeline.runChecks(staging,
-        marts.updated("top_domains_daily", domains.unionByName(domains)))
-    }
+
+    // fused-aggregate rows: one planted duplicate domain key, and a
+    // domain and an author that share (metric_date, key) across marts,
+    // which is no duplicate
+    import spark.implicits._
+    val d = java.sql.Date.valueOf("2024-01-02")
+    val fused = Seq(("daily_story_metrics", d, ""), ("top_domains_daily", d, "x.com"),
+      ("top_domains_daily", d, "x.com"), ("top_domains_daily", d, "bob"),
+      ("user_activity_daily", d, "bob")).toDF("mart", "metric_date", "key")
+    val (marts, pk) = HnPipeline.checkMartKeys(fused)
+    consume(marts)
+    assert(pk.duplicateRows == Seq(0L, 2L, 0L))
+    val dupMart = intercept[IllegalArgumentException](pk.verify())
     assert(dupMart.getMessage.contains("duplicate PK in top_domains_daily"))
+  }
+
+  /** The marts as three independent aggregates over one filtered base:
+    * the formulation `HnPipeline.marts` fuses into one. */
+  private def separateMarts(staging: DataFrame): Map[String, DataFrame] = {
+    val base = staging
+      .filter(col("type") === "story" && col("time_utc").isNotNull)
+      .select(
+        to_date(col("time_utc")).as("metric_date"),
+        Enrich.domainOf(col("url")).as("domain"),
+        coalesce(col("by"), lit("(unknown)")).as("author"),
+        coalesce(col("score"), lit(0L)).as("score"),
+        coalesce(col("descendants"), lit(0L)).as("comments"),
+        col("extracted_at"))
+    val daily = base.groupBy("metric_date").agg(
+      count(lit(1)).cast("int").as("stories_count"),
+      sum(col("score")).cast("bigint").as("total_score"),
+      Marts.avgDec2(col("score")).as("avg_score"),
+      sum(col("comments")).cast("bigint").as("total_comments"),
+      Marts.avgDec2(col("comments")).as("avg_comments"),
+      max(col("extracted_at")).as("last_batch_extracted_at"))
+    def grouped(key: String) = base.groupBy(col("metric_date"), col(key)).agg(
+      count(lit(1)).cast("int").as("stories_count"),
+      Marts.avgDec2(col("score")).as("avg_score"),
+      max(col("extracted_at")).as("last_batch_extracted_at"))
+    Map("daily_story_metrics" -> daily, "top_domains_daily" -> grouped("domain"),
+      "user_activity_daily" -> grouped("author"))
+  }
+
+  // Raw items over few days, domains and authors, so a domain or an
+  // author spans several days; null url/by/score/descendants/time and
+  // non-story rows in every case.
+  private val itemGen = for {
+    id <- Gen.chooseNum(1L, 40L)
+    tpe <- Gen.frequency(6 -> "story", 1 -> "job", 1 -> "comment")
+    by <- Gen.option(Gen.oneOf("alice", "bob", "carol"))
+    day <- Gen.option(Gen.chooseNum(0L, 3L))
+    url <- Gen.frequency(1 -> None, 1 -> Some(""),
+      4 -> Gen.oneOf("https://a.example/x", "http://A.example/y", "https://b.example").map(Some(_)))
+    score <- Gen.option(Gen.chooseNum(0L, 500L))
+    descendants <- Gen.option(Gen.chooseNum(0L, 40L))
+  } yield Row(id, tpe, by.orNull, day.map(d => 1704153600L + d * 86400 + id * 61).getOrElse(null),
+    s"t$id", url.orNull, score.getOrElse(null), descendants.getOrElse(null), null, null)
+
+  test("fused marts equal three separate aggregates (spec batches + 16 generated stagings)") {
+    def staged(raw: DataFrame) = HnPipeline.transform(raw, new java.sql.Timestamp(0))
+      // several extraction times, as a merged staging version holds
+      .withColumn("extracted_at", timestamp_seconds(lit(1704153600L) + col("id") % 3 * 3600))
+    val root = Files.createTempDirectory("hnpipe_fused").toString
+    val specBatches = Seq(batch1, batch2).zipWithIndex.map { case (b, i) =>
+      writeRaw(root, s"hn_raw_2024010${i}_000000.json", b)
+      staged(HnPipeline.readRaw(spark, s"$root/hn_raw_2024010${i}_000000.json"))
+    }
+    val generated = (0 until 16).map { i =>
+      val rows = Gen.listOfN(30, itemGen).apply(Gen.Parameters.default, Seed(900L + i)).get
+      staged(spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), HnPipeline.rawSchema))
+    }
+    val nullability = (specBatches ++ generated).zipWithIndex.flatMap { case (staging, i) =>
+      val got = HnPipeline.marts(staging)
+      val want = separateMarts(staging)
+      assert(got.keys.toSeq == want.keys.toSeq, s"case $i")
+      want.toSeq.flatMap { case (name, w) =>
+        val g = got(name)
+        assert(g.columns.toSeq == w.columns.toSeq, s"case $i $name columns")
+        assert(g.schema.map(_.dataType) == w.schema.map(_.dataType), s"case $i $name types")
+        def rows(df: DataFrame) = df.collect().map(_.toSeq.toString).sorted.toSeq
+        assert(rows(g) == rows(w), s"case $i $name rows")
+        g.schema.zip(w.schema).collect {
+          case (gf, wf) if gf.nullable != wf.nullable => s"$name.${gf.name}: ${wf.nullable} -> ${gf.nullable}"
+        }
+      }
+    }.distinct
+    // the fused key is one column for both key marts, so its
+    // nullability is the union of theirs: `author` (a coalesce with a
+    // literal) turns nullable like `domain`; no other column changes
+    assert(nullability == Seq("user_activity_daily.author: false -> true"), nullability)
   }
 
   test("missing required column fails fast") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.operators.Merge
+import graft.operators.{Merge, VersionedStaging}
 
 /** Property tests for the merge operator — the invariants the reference
   * enforces via SQL checks and its idempotency protocol
@@ -94,7 +94,10 @@ class MergePropertySpec extends SparkSpec {
       val batch = df(b)
       val target = if (t.isEmpty) batch.limit(0) else df(t)
       val (observed, obs) = Merge.observedMerged(target, batch, Seq("id"), "extracted_at")
-      val got = observed.as[(Long, Long, String)].collect().sorted.toSeq
+      // the staging check rides the same action, as in mergeInto
+      val (checked, unique) = VersionedStaging.checkStagingKeys(observed, Seq("id"), "staging")
+      val got = checked.as[(Long, Long, String)].collect().sorted.toSeq
+      assert(unique.duplicateRows == Seq(0L), s"case $i: duplicate keys")
       val c = Merge.countsOf(obs)
       val want = Merge.countsPlan(target, batch, Seq("id"), "extracted_at").head()
       assert((c.inserted, c.updated) == ((want.getLong(0), want.getLong(1))), s"case $i: counts")
