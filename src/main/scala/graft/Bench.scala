@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -116,6 +117,11 @@ object Bench {
     // A query that throws is reported in "failed", NOT timed — folding
     // the exception path's elapsed time into the total made a broken
     // query look like a fast one (round-1 ADVICE.md).
+    // Janino compiles across the timed attempts, read off Spark's own
+    // codegen counter (no job): on a warm JVM whose codegen cache holds
+    // the suite's working set (Sessions.tune) this stays near 0, and a
+    // rise means the timed numbers carry compile time again.
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val timings = selected.map { case (name, fn) =>
       val attempts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
@@ -126,6 +132,7 @@ object Bench {
       val good = attempts.filter(_._1).map(_._2)
       name -> (if (good.nonEmpty) Some(good.min) else None)
     }
+    val codegenCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     val ok = timings.collect { case (k, Some(v)) => k -> v }
     val failed = timings.collect { case (k, None) => k }.toSeq.sorted
     val qs = ok.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -167,12 +174,12 @@ object Bench {
         s""""${k.substring(sfDir.length + 1)}":${"%.3f".format(v)}""" }
       .sorted.mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","value_norm":$valueNorm,"queries":$qs,"failed":$failedJson,"sf":"$sfDir","stream_shared_pass_sec":$streamPass,"stream_pass_phases":$streamPhases,"calib_sec":$calibSec,"calib_pre_sec":$calibPre,"calib_post_sec":$calibPost,"calib_job_sec":$calibJob,"calib_mem_sec":$calibMem,"loadavg":"$loadavg","loadavg_start":"$loadavgStart","loadavg_launcher":"$loadavgLauncher"$subsetField}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","value_norm":$valueNorm,"queries":$qs,"failed":$failedJson,"codegen_compiles":$codegenCompiles,"sf":"$sfDir","stream_shared_pass_sec":$streamPass,"stream_pass_phases":$streamPhases,"calib_sec":$calibSec,"calib_pre_sec":$calibPre,"calib_post_sec":$calibPost,"calib_job_sec":$calibJob,"calib_mem_sec":$calibMem,"loadavg":"$loadavg","loadavg_start":"$loadavgStart","loadavg_launcher":"$loadavgLauncher"$subsetField}"""
     // Short summary line with NO per-query map, printed LAST (r16
     // verdict cosmetic note): a driver that tails the output and
     // truncates the long line still captures the totals + probes.
     val summary =
-      s"""{"metric":"total_summary","value":$total,"unit":"sec","value_norm":$valueNorm,"n_queries":${ok.size},"n_failed":${failed.size},"sf":"$sfDir","stream_shared_pass_sec":$streamPass,"calib_sec":$calibSec,"calib_job_sec":$calibJob,"calib_mem_sec":$calibMem,"loadavg":"$loadavg","loadavg_start":"$loadavgStart","loadavg_launcher":"$loadavgLauncher"$subsetField}"""
+      s"""{"metric":"total_summary","value":$total,"unit":"sec","value_norm":$valueNorm,"n_queries":${ok.size},"n_failed":${failed.size},"codegen_compiles":$codegenCompiles,"sf":"$sfDir","stream_shared_pass_sec":$streamPass,"calib_sec":$calibSec,"calib_job_sec":$calibJob,"calib_mem_sec":$calibMem,"loadavg":"$loadavg","loadavg_start":"$loadavgStart","loadavg_launcher":"$loadavgLauncher"$subsetField}"""
     // stdout goes through sbt's "[info] " prefix, which broke the
     // driver's JSON extraction in round 1 — also land the raw lines in
     // a well-known file (full line first, summary LAST in both).

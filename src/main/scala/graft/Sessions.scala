@@ -14,6 +14,9 @@ import org.apache.spark.sql.SparkSession
   * - AQE on: runtime coalescing of shuffle partitions + skew-join
   *   handling — the local stand-in for what we'd rely on at cluster
   *   scale.
+  * - Fixed per-query costs pinned down: driver-side file listing, and
+  *   a generated-code cache that holds a gate pass's working set, so a
+  *   repeated query compiles nothing.
   */
 object Sessions {
   def tune(b: SparkSession.Builder): SparkSession.Builder = b
@@ -41,6 +44,17 @@ object Sessions {
     // targets; a deployment with object-store latencies and
     // thousands-of-partition tables should lower it back.
     .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+    // Spark's cache of compiled generated classes holds 100 by default,
+    // and one pass over perfbench's 20 gate_suite entries at sf0.01
+    // needs 336-360 classes: at 100 every pass recompiled ~340 of them
+    // with Janino, on the critical path of its single-task stages. 512
+    // holds that working set (0-10 compiles per pass, ~45% off the
+    // pass). Memory cost, measured after a full GC on a 4 GB heap: live
+    // heap 173 MB at 354-360 entries against 161-203 MB at 100, with
+    // Metaspace and the JIT code cache unmoved. The cache is JVM-wide
+    // and sized when Spark first generates code, so this takes effect
+    // only if this session is the JVM's first.
+    .config("spark.sql.codegen.cache.maxEntries", "512")
     .config("spark.ui.enabled", "false")
 
   def local(cores: Int = 32): SparkSession = {

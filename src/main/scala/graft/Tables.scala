@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided parquet tables (see TESTDATA.md).
   *
@@ -10,10 +11,59 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * files. At cluster scale these would be partitioned table roots; the
   * API is identical (`spark.read.parquet(root)`), and every downstream
   * operator is written so filters/projections push into the scan.
+  *
+  * Every read goes through [[parquet]], which infers a table's schema
+  * once per session and file version: a schema-less read starts one
+  * Spark job to infer it, and a gate pass reads the same tables dozens
+  * of times.
   */
 object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)`, with the schema Spark infers for it
+    * memoized per session and per version of the files under `path`.
+    *
+    * - The first read of a version is Spark's own inference (one job);
+    *   later reads pass its result to `.schema(...)` and start none.
+    * - A version is the (path, length, mtime) of every leaf file under
+    *   `path`: a rewrite at the same path is a new version. That is one
+    *   more listing per read, beside the file index's own: nothing on
+    *   a fixture, but a wide table root would want a table version.
+    * - Entries belong to one session, held weakly: the session's conf
+    *   decides the inferred types (`nanosAsLong`, `inferTimestampNTZ`),
+    *   so the key also carries its parquet settings.
+    * - Inference is Spark's default, without `mergeSchema`: a read that
+    *   must merge differing file schemas (q84's) reads directly. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val version = Version(parquetConf(spark), leafFiles(spark, path))
+    val memo = schemas.synchronized(schemas.computeIfAbsent(spark,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]()))
+    val schema = Option(memo.get(path)).collect { case (`version`, s) => s }
+      .getOrElse {
+        val inferred = spark.read.parquet(path).schema
+        memo.put(path, (version, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private final case class Version(conf: Map[String, String], files: Seq[(String, Long, Long)])
+
+  private val schemas = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]]()
+
+  private def parquetConf(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+
+  private def leafFiles(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sorted
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")
@@ -77,7 +127,9 @@ object Tables {
     * a long-lived corpus is guaranteed to hit (q84's whole premise).
     * Hard failure is reserved for missing or mistyped contract columns,
     * which DO cascade into downstream AnalysisExceptions.
-    * Cost: 10 parquet footer reads. */
+    * Cost: one schema-inference job per table whose version the
+    * session has not read yet, so 10 on a fresh session and 0 once the
+    * gates have loaded the same files ([[parquet]]). */
   def assertContract(spark: SparkSession, dir: String): Unit = {
     import org.apache.spark.sql.types._
     val intLike: DataType => Boolean =

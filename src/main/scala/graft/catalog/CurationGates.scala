@@ -1060,9 +1060,10 @@ object CurationGates {
     // 5 directories (PLANS.md evidence) — at 100 TB this is the
     // difference between reading 40% and 100% of the table before
     // the first filter runs. The fixture is partitioned once per JVM
-    // by partitionedEventsDir.
+    // by partitionedEventsDir and, immutable from then on, read with
+    // its schema memoized like any fixture table.
     Gate("q74_partition_prune", (s, dir) =>
-      s.read.parquet(partitionedEventsDir(s, dir))
+      Tables.parquet(s, partitionedEventsDir(s, dir))
         .filter(col("event_type").isin("signup", "purchase"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).cast("bigint").as("n"),

@@ -31,6 +31,17 @@ class PlanShapeSpec extends SparkSpec {
       s"ts upper bound not pushed to the scan:\n$scanLine")
   }
 
+  test("q74: the staged copy's partition filter reaches the scan, which reads only value") {
+    // q74 reads its staged copy through Tables.parquet, with a memoized
+    // schema: the user-specified schema must keep event_type a
+    // partition column, or pruning silently turns into a data filter
+    val scanLine = plan("q74_partition_prune").linesIterator
+      .find(_.contains("FileScan")).get
+    assert(scanLine.contains("PartitionFilters: [event_type") &&
+      scanLine.contains("IN (signup,purchase)]"), scanLine)
+    assert(scanLine.contains("ReadSchema: struct<value:double>"), scanLine)
+  }
+
   test("q2: column pruning excludes the document text from the scan") {
     val p = plan("q2_domain_daily")
     val scanLine = p.linesIterator.find(_.contains("FileScan")).get
