@@ -73,7 +73,7 @@ object AutoMaintenanceSoak {
         s"fold $i: exactly the boiler-carrying half must be cut, got $cut")
       t
     }
-    val fileCounts = StoreCompaction.partitionFileCounts(store)
+    val fileCounts = StoreCompaction.partitionFileCounts(spark, store)
     require(fileCounts.values.max <= trigger + 1,
       s"auto policy must keep buckets at/under the trigger: $fileCounts")
     val early = median(foldSec.slice(5, 20))
@@ -95,7 +95,7 @@ object AutoMaintenanceSoak {
           autoVacuumTrigger = 0).count()
       }._2
     }
-    val ctrlFiles = StoreCompaction.partitionFileCounts(ctrl)
+    val ctrlFiles = StoreCompaction.partitionFileCounts(spark, ctrl)
     require(ctrlFiles.values.max >= nFolds,
       s"control must show unbounded delta growth: $ctrlFiles")
 
@@ -112,7 +112,7 @@ object AutoMaintenanceSoak {
           autoVacuumTrigger = 8)
       }
     }
-    val kFiles = StoreCompaction.partitionFileCounts(kStore)
+    val kFiles = StoreCompaction.partitionFileCounts(spark, kStore)
     require(kFiles.values.max <= 9,
       s"key-store auto policy must bound bucket files: $kFiles")
     val kServed = spark.read.parquet(kStore)

@@ -12,7 +12,7 @@ import graft.operators.{DedupSuite, Multimodal, StoreCompaction}
   * broadcast semi-join — never re-decodes or re-bands the corpus — so
   * fold k costs the same as fold 1 regardless of how many folds
   * preceded it (the d19/d23/d26 ingest economics, now for the
-  * multimodal family). A fused compaction runs mid-soak to show
+  * multimodal family). A one-job compaction runs mid-soak to show
   * maintenance is row-invariant and does not bend the curve.
   *
   * Exactness gate: the accumulated fold outputs must equal the full
@@ -75,12 +75,12 @@ object PhashStoreSoak {
       }
       accumulated = if (first) pairs else accumulated.unionByName(pairs)
       first = false
-      // mid-soak maintenance: fused per-bucket file collapse —
+      // mid-soak maintenance: one-job per-bucket file collapse —
       // row-invariant, so the equality gate below still holds and the
       // later folds' costs stay on the same line
       if (k == nBatches / 2 - 1) {
         val (_, tc) = time {
-          StoreCompaction.compactStoreFused(spark, store, "bucket") }
+          StoreCompaction.compactStore(spark, store) }
         println(f"  compaction after fold $k%d: $tc%.2f s")
       }
       println(f"fold $k%d: $n%d images, $tFold%6.2f s")

@@ -104,8 +104,8 @@ object PlanDump {
       val oneBuckets = (0 until 4).map(b =>
         b.toLong * 16 + java.lang.Math.floorMod((oneSim >> (b * 15)) & 0x7fffL, 16L))
         .distinct.sorted
-      val selected = DedupSuite.hammingStoreFiles(tmp, oneBuckets)
-      val allFiles = DedupSuite.hammingStoreFiles(tmp, 0L until 64L)
+      val selected = DedupSuite.hammingStoreFiles(spark, tmp, oneBuckets)
+      val allFiles = DedupSuite.hammingStoreFiles(spark, tmp, 0L until 64L)
       val batch = spark.range(1).select(org.apache.spark.sql.functions
         .lit(4001L).as("doc_id"),
         org.apache.spark.sql.functions.lit(oneSim).as("ph"))
@@ -235,7 +235,7 @@ object PlanDump {
       graft.operators.DedupSuite.exactSubstrBuildStore(
         docs, "doc_id", "text", 8, tmp)
       val files = graft.operators.DedupSuite.substrStoreFiles(
-        tmp, Seq(3L, 17L))
+        spark, tmp, Seq(3L, 17L))
       val pruned = spark.read.parquet(files: _*)
       pruned.collect()
       sb.append("\n## d26_incremental_substr — pinned fold store read\n\n")
@@ -267,7 +267,7 @@ object PlanDump {
       import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit}
       import spark.implicits._
       val qtmp = Files.createTempDirectory("plandump_q95")
-      sys.addShutdownHook(graft.operators.StoreFiles.deleteRecursively(qtmp))
+      sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(qtmp.toFile))
       spark.range(100000).select(
           (col("id") % 7).cast("string").as("g"), col("id").as("x"))
         .write.parquet(s"$qtmp/rows")

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicReference
-import graft.operators.StoreFiles
+import org.apache.hadoop.fs.FileUtil
 
 /** The one lifecycle of every per-JVM fixture, staging tree and stream
   * pass: built once per key, kept under one temp root, removed by one
@@ -38,7 +38,7 @@ private[graft] object PerJvm {
 
   private lazy val root: Path = {
     val r = Files.createTempDirectory("graft_jvm")
-    sys.addShutdownHook(StoreFiles.deleteRecursively(r))
+    sys.addShutdownHook(FileUtil.fullyDelete(r.toFile))
     r
   }
 
@@ -60,7 +60,7 @@ private[graft] object PerJvm {
   def fresh(key: String): String = {
     val dir = tempDir(key.replaceAll("[^\\w.-]+", "_"))
     Option(once(s"fresh|$key")(new AtomicReference[Path]()).getAndSet(dir))
-      .foreach(StoreFiles.deleteRecursively)
+      .foreach(d => FileUtil.fullyDelete(d.toFile))
     dir.toString
   }
 }

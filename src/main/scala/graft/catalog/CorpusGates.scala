@@ -60,11 +60,7 @@ object CorpusGates {
     // phase descriptions: `QueryProfile c5_boilerplate_ingest`
     // attributes per-job cost to build / fold / maintenance
     // (thread-local, queries here run sequentially)
-    def desc[A](d: String)(body: => A): A = {
-      val prev = s.sparkContext.getLocalProperty("spark.job.description")
-      s.sparkContext.setJobDescription(s"c5: $d")
-      try body finally s.sparkContext.setJobDescription(prev)
-    }
+    def desc[A](d: String)(body: => A): A = graft.Phase(s, s"c5: $d")(body)
     val e0 = desc("build") { Boilerplate.buildStore(
       all.filter(col("doc_id") <= cut1), "doc_id", "text", m, store,
       nBuckets = 16, nDocBuckets = 16) }
@@ -80,12 +76,9 @@ object CorpusGates {
     // left pairs/counts at one file per partition, so those two
     // are listing-only)
     desc("compact") { graft.operators.Par.run(Seq(
-      () => { StoreCompaction.compactStoreFused(s, s"$store/pairs",
-        "bucket"); () },
-      () => { StoreCompaction.compactStoreFused(s, s"$store/counts",
-        "bucket"); () },
-      () => { StoreCompaction.compactStoreFused(s, s"$store/docs",
-        "dbucket"); () })) }
+      () => { StoreCompaction.compactStore(s, s"$store/pairs"); () },
+      () => { StoreCompaction.compactStore(s, s"$store/counts"); () },
+      () => { StoreCompaction.compactStore(s, s"$store/docs"); () })) }
     val e2 = desc("fold2") { Boilerplate.fold(s, store,
       all.filter(col("doc_id") > cut2), "doc_id", "text", m,
       nBuckets = 16, nDocBuckets = 16) }

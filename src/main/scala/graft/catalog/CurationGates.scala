@@ -140,7 +140,7 @@ object CurationGates {
       // maintenance pass: squash the append's file accumulation; the
       // q91 gate then serves ranks from the COMPACTED store — the
       // row-identity contract is oracle-checked, not assumed
-      StoreCompaction.compactStoreFused(s, store, "bucket")
+      StoreCompaction.compactStore(s, store)
     } + "/contrib"
 
   /** Planted-skew heavy-hitter key shared by q76 / q79 / s8: the

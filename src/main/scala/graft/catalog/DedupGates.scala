@@ -1006,8 +1006,7 @@ object DedupGates {
       // PROVES fold 3 reads the vacuumed+compacted store identically
       // (post-maintenance output still oracle-exact)
       DedupSuite.vacuumSubstrStore(s, store)
-      graft.operators.StoreCompaction.compactStoreFused(s, store,
-        "bucket")
+      graft.operators.StoreCompaction.compactStore(s, store)
       val out3 = DedupSuite.exactSubstrFold(s, store,
         docs.filter(col("doc_id") >= t2), "doc_id", "text", 8)
       out1.unionByName(out2).unionByName(out3)

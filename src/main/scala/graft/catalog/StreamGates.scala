@@ -44,14 +44,13 @@ object StreamGates {
       val slice = tmp.resolve(s"slice$i")
       df.filter(pmod(key, lit(3)) === i)
         .coalesce(1).write.parquet(slice.toString)
-      val part = StoreFiles.listDir(slice).find(p =>
-        p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet")).get
+      val part = slice.toFile.listFiles().find(f =>
+        f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
       val dst = tmp.resolve(s"batch$i.parquet")
-      java.nio.file.Files.move(part, dst)
+      java.nio.file.Files.move(part.toPath, dst)
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(mtBase + i * 2000L))
-      StoreFiles.deleteRecursively(slice)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(slice.toFile)
     }
   }
 
@@ -686,7 +685,7 @@ object StreamGates {
         // the index is COMPACTED first (each streamed batch appended its
         // own file set per centroid partition): the gate proves
         // post-compaction serving is hash-identical
-        StoreCompaction.compactStoreFused(c.s, s"${c.root}/index", "centroid_id")
+        StoreCompaction.compactStore(c.s, s"${c.root}/index")
         Similarity.queryIvfIndex(c.s, s"${c.root}/index",
           c.s.read.parquet(s"${c.root}/centroids"),
           Tables.embeddings(c.s, c.dir).filter(col("vec_id") < 8),

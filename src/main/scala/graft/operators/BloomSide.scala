@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -88,14 +89,13 @@ object BloomSide {
       .toDF("bucket", "items", "bloom")
   }
 
-  private def root(path: String): java.nio.file.Path =
-    java.nio.file.Paths.get(path, DirName)
+  private def root(path: String): Path = new Path(path, DirName)
 
   /** Whether `path` maintains a bloom sidecar (listing-only). Folds
     * key their append on this so a store built without the sidecar
     * never gains partial coverage. */
-  def maintained(path: String): Boolean =
-    java.nio.file.Files.isDirectory(root(path))
+  def maintained(spark: SparkSession, path: String): Boolean =
+    StoreFiles.fs(spark, path).isDirectory(root(path))
 
   /** Append one bloom row per bucket of `keyed` (a fold's delta,
     * already bucket-clustered — one small job the fold runs
@@ -132,49 +132,51 @@ object BloomSide {
   def seedFreshStaged(keyed: DataFrame, path: String, bucketCol: String,
                       keyCol: String): Unit = {
     val staged = seedStagingDir(path)
-    StoreFiles.deleteRecursively(staged)
+    StoreFiles.delete(StoreFiles.fs(keyed.sparkSession, path), staged)
     bloomRows(keyed, bucketCol, keyCol)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(staged.toString)
   }
 
-  private def seedStagingDir(path: String): java.nio.file.Path =
-    java.nio.file.Paths.get(s"${path}$DirName.seed")
+  private def seedStagingDir(path: String): Path = new Path(s"$path$DirName.seed")
 
-  /** Install a [[seedFreshStaged]] staging as the live sidecar (one
-    * directory rename into the freshly-written store). Call strictly
-    * after the store write commits — sequencing, not concurrency, is
-    * what closes the overwrite-erases-sidecar race. */
-  def installSeed(path: String): Unit = {
-    import java.nio.file.Files
-    val staged = seedStagingDir(path)
-    require(Files.isDirectory(staged),
-      s"no staged bloom seed at $staged — seedFreshStaged must complete first")
-    val live = root(path)
-    StoreFiles.deleteRecursively(live)
-    Files.move(staged, live)
+  /** Publish the committed sidecar `staged` as the live one through
+    * [[StoreFiles.swap]]. Its crash residue is at worst an absent
+    * sidecar (readers stop pruning until the next rebuild), never
+    * stale coverage — so the residue of a crashed swap is DROPPED
+    * before the next one, never finished or restored: folds that ran
+    * meanwhile found no sidecar and appended no bloom rows, so
+    * either leftover copy would miss their keys. */
+  private def publish(fs: FileSystem, path: String, staged: Path): Unit = {
+    val trash = new Path(path, s"$DirName.trash")
+    StoreFiles.delete(fs, trash)
+    StoreFiles.swap(fs, staged, root(path), trash)
   }
 
-  /** (Re)build the sidecar from the live store's keys and swap it in
-    * atomically: stage to `_bloomside.staged`, two renames. Crash
-    * residue is at worst an absent sidecar (readers stop pruning
-    * until the next rebuild) — never stale coverage. */
+  /** Install a [[seedFreshStaged]] staging as the live sidecar. Call
+    * strictly after the store write commits — sequencing, not
+    * concurrency, is what closes the overwrite-erases-sidecar race. */
+  def installSeed(spark: SparkSession, path: String): Unit = {
+    val fs = StoreFiles.fs(spark, path)
+    val staged = seedStagingDir(path)
+    require(fs.isDirectory(staged),
+      s"no staged bloom seed at $staged — seedFreshStaged must complete first")
+    publish(fs, path, staged)
+  }
+
+  /** (Re)build the sidecar from the live store's keys under
+    * `_bloomside.staged` and publish it. */
   def rebuildFromStore(spark: SparkSession, path: String,
                        bucketCol: String, keyCol: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val live = root(path)
-    val staged = Paths.get(path, s"$DirName.staged")
-    val trash = Paths.get(path, s"$DirName.trash")
-    StoreFiles.deleteRecursively(staged)
-    StoreFiles.deleteRecursively(trash)
+    val fs = StoreFiles.fs(spark, path)
+    val staged = new Path(path, s"$DirName.staged")
+    StoreFiles.delete(fs, staged)
     bloomRows(
         spark.read.parquet(path).select(col(bucketCol), col(keyCol)),
         bucketCol, keyCol)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(staged.toString)
-    if (Files.isDirectory(live)) Files.move(live, trash)
-    Files.move(staged, live)
-    StoreFiles.deleteRecursively(trash)
+    publish(fs, path, staged)
   }
 
   /** Driver-side prune: the subset of `buckets` that might contain
@@ -190,11 +192,10 @@ object BloomSide {
   def pruneBuckets(spark: SparkSession, path: String, buckets: Seq[Long],
                    hashesByBucket: Map[Long, Array[Long]],
                    maxBytes: Long = 64L << 20): Seq[Long] = {
-    val files = StoreFiles.bucketFiles(root(path), buckets)
+    val fs = StoreFiles.fs(spark, path)
+    val files = StoreFiles.bucketFiles(fs, root(path), buckets)
     if (files.isEmpty) return buckets
-    val bytes = files.iterator.flatMap(_._2).map(p =>
-      try java.nio.file.Files.size(p) catch { case _: Throwable => 0L }).sum
-    if (bytes > maxBytes) return buckets
+    if (files.iterator.flatMap(_._2).map(_.getLen).sum > maxBytes) return buckets
     // (items, bloom) rows per bucket, read driver-direct. Reader
     // setup dominates (tens of ms per file open), so the per-file
     // reads fan out on a small pool and land in a memo cache —
@@ -204,21 +205,21 @@ object BloomSide {
     val distinctFiles = files.flatMap(_._2).distinct
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(16, distinctFiles.size)))
-    val read: Map[java.nio.file.Path, Option[Seq[(Long, Array[Byte])]]] =
+    val read: Map[FileStatus, Option[Seq[(Long, Array[Byte])]]] =
       try {
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(distinctFiles.map(p =>
-            scala.concurrent.Future(p -> cachedBloomRows(p)))),
+            scala.concurrent.Future(p -> cachedBloomRows(fs, p)))),
           scala.concurrent.duration.Duration.Inf).toMap
       } finally pool.shutdown()
     // A bucket is prunable only when EVERY one of its sidecar files
     // read cleanly: a failed file may hold the only coverage for some
     // stored keys, so partial rows must not license a skip.
     val byBucket: Map[Long, Option[Seq[(Long, Array[Byte])]]] =
-      files.map { case (b, fs) =>
-        val perFile = fs.map(read.getOrElse(_, None))
+      files.map { case (b, sts) =>
+        val perFile = sts.map(read.getOrElse(_, None))
         b -> (if (perFile.exists(_.isEmpty)) None
               else Some(perFile.flatMap(_.get)))
       }.toMap
@@ -239,7 +240,7 @@ object BloomSide {
     }
   }
 
-  /** Memo cache over [[readBloomRows]], keyed by (path, size) —
+  /** Memo cache over [[readBloomRows]], keyed by (path, length) —
     * sound because sidecar parquet files are immutable. FAILED reads
     * are never cached (the hole would persist across folds); only
     * clean row sets memoize. Bounded crudely: past [[CacheMaxBytes]]
@@ -249,13 +250,13 @@ object BloomSide {
   private val cacheBytes = new java.util.concurrent.atomic.AtomicLong()
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (String, Long), Seq[(Long, Array[Byte])]]()
-  private def cachedBloomRows(p: java.nio.file.Path): Option[Seq[(Long, Array[Byte])]] = {
-    val size = try java.nio.file.Files.size(p) catch { case _: Throwable => -1L }
-    if (size < 0) return readBloomRows(p)
-    val key = (p.toString, size)
+  private def cachedBloomRows(fs: FileSystem,
+                              st: FileStatus): Option[Seq[(Long, Array[Byte])]] = {
+    val size = st.getLen
+    val key = (st.getPath.toString, size)
     val hit = cache.get(key)
     if (hit != null) return Some(hit)
-    val rows = readBloomRows(p)
+    val rows = readBloomRows(fs, st.getPath)
     rows.foreach { rs =>
       if (cacheBytes.addAndGet(size) > CacheMaxBytes) {
         cache.clear(); cacheBytes.set(size)
@@ -269,11 +270,12 @@ object BloomSide {
     * the calling thread. Any read failure → None, distinct from a
     * clean zero-row file (callers must treat None as "this file's
     * coverage is unknown" and keep its bucket unprunable). */
-  private def readBloomRows(p: java.nio.file.Path): Option[Seq[(Long, Array[Byte])]] =
+  private def readBloomRows(fs: FileSystem,
+                            p: Path): Option[Seq[(Long, Array[Byte])]] =
     try {
       val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(p.toString))
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), p)
+        .withConf(fs.getConf)
         .build()
       try {
         val out = scala.collection.mutable.ListBuffer.empty[(Long, Array[Byte])]

@@ -405,15 +405,9 @@ object Boilerplate {
     (b, org.apache.spark.sql.Row(m("mn"), m("mx")))
   }
 
-  /** Per-step job description for profiling, RESTORING the caller's
-    * description afterwards (a plain null-reset would clobber an
-    * outer gate-level label — the c5 profile's phases). */
-  private def desc[A](spark: SparkSession, s: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"boiler-fold: $s")
-    try body finally sc.setJobDescription(prev)
-  }
+  /** A fold step's [[graft.Phase]] (the c5 profile's phases). */
+  private def desc[A](spark: SparkSession, s: String)(body: => A): A =
+    graft.Phase(spark, s"boiler-fold: $s")(body)
 
   private[graft] def computeFold(spark: SparkSession, path: String,
                                  batch: DataFrame, idCol: String,
@@ -496,7 +490,7 @@ object Boilerplate {
     // broadcast" part of the fold contract (batches are ingest-sized
     // by definition; a corpus-sized "batch" belongs in buildStore,
     // not here).
-    StoreCompaction.repairFlatStore(s"$path/sidecar")
+    StoreCompaction.repairFlatStore(spark, s"$path/sidecar")
     val sc = spark.read.parquet(s"$path/sidecar")
     // every sidecar row carries the refresh's as_of, so parquet footer
     // stats resolve it driver-side — no job (agg fallback if any file
@@ -682,15 +676,15 @@ object Boilerplate {
     * Single-maintainer contract — do not run concurrently with
     * folds. */
   def vacuumStore(spark0: SparkSession, path: String): Unit = {
-    import java.nio.file.Files
     val spark = StoreCompaction.quietSession(spark0)
-    val root = java.nio.file.Paths.get(path)
+    val fs = StoreFiles.fs(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
     // the batch fold's staging AND the streaming twin's (s16) — a
     // replay of either re-promotes delta files a vacuum would have
     // collapsed into the store already
-    val pendingStaging = StoreFiles.listDir(root).filter(isFoldStaging)
+    val pendingStaging = foldStagings(spark, path)
     require(pendingStaging.isEmpty,
-      s"crashed fold staging ${pendingStaging.headOption.map(_.getFileName).getOrElse("")} " +
+      s"crashed fold staging ${pendingStaging.headOption.getOrElse("")} " +
         "survives under the store — replay that fold (re-call fold with " +
         "its batch) before vacuuming; a vacuum now would collapse the " +
         "delta files its replay re-promotes, double-applying them")
@@ -725,29 +719,25 @@ object Boilerplate {
       () => {
         StoreCompaction.rewriteFlatStore(spark, s"$path/sidecar",
           _ => newSidecar)
-        // fused ONE-JOB collapse (line determines bucket, so
-        // (bucket, line) grouping is the per-partition collapse
-        // exactly) — the per-partition form paid one fixed job
-        // latency per bucket, ~2×16 jobs per vacuum
-        StoreCompaction.rewriteStoreFused(spark, s"$path/counts",
-          "bucket", df =>
-            df.join(broadcast(dict), Seq("line"), "left_anti")
-              .groupBy(col("bucket"), col("line"))
-              .agg(sum(col("nd_delta")).as("nd_delta"))
-              .withColumn("fseq", lit(s)))
+        // one-job collapse (line determines bucket, so (bucket, line)
+        // grouping is the per-partition collapse exactly)
+        StoreCompaction.rewriteStore(spark, s"$path/counts", df =>
+          df.join(broadcast(dict), Seq("line"), "left_anti")
+            .groupBy(col("bucket"), col("line"))
+            .agg(sum(col("nd_delta")).as("nd_delta"))
+            .withColumn("fseq", lit(s)))
         ()
       },
       () => {
-        StoreCompaction.rewriteStoreFused(spark, s"$path/pairs",
-          "bucket", df =>
-            df.join(broadcast(dict), Seq("line"), "left_anti"))
+        StoreCompaction.rewriteStore(spark, s"$path/pairs", df =>
+          df.join(broadcast(dict), Seq("line"), "left_anti"))
         ()
       }))
     // replay markers of cleanly completed folds (no staging survives —
     // checked above): the monotonic guard subsumes them
-    StoreFiles.listDir(root)
-      .filter(_.getFileName.toString.startsWith(FoldNames.marker))
-      .foreach(p => Files.deleteIfExists(p))
+    StoreFiles.list(fs, root).map(_.getPath)
+      .filter(_.getName.startsWith(FoldNames.marker))
+      .foreach(StoreFiles.delete(fs, _))
   }
 
   /** The batch [[fold]]'s on-disk names; keyed by the batch's doc
@@ -758,18 +748,21 @@ object Boilerplate {
   private[graft] val StreamNames =
     StoreFiles.CommitNames("_boiler_batch_", ".boiler_staging_", "bbatch")
 
-  private def isFoldStaging(p: java.nio.file.Path): Boolean =
-    Seq(FoldNames, StreamNames)
-      .exists(n => p.getFileName.toString.startsWith(n.staging))
+  /** The surviving fold stagings (batch or streaming) under `path`. */
+  private def foldStagings(spark: SparkSession, path: String): Seq[String] =
+    StoreFiles.list(StoreFiles.fs(spark, path), new org.apache.hadoop.fs.Path(path))
+      .map(_.getPath.getName)
+      .filter(n => Seq(FoldNames, StreamNames).exists(c => n.startsWith(c.staging)))
 
   /** One fold's declaration: the pair/counts/docs deltas, the
     * dictionary append, the `_meta` high-water row, and the changelog
     * — promoted into `outPath`, or, with `outPath` None, staged only
     * (the batch [[fold]] returns it instead). */
-  private[graft] def foldCommit(names: StoreFiles.CommitNames, path: String,
+  private[graft] def foldCommit(spark: SparkSession,
+                                names: StoreFiles.CommitNames, path: String,
                                 id: Long,
                                 outPath: Option[String]): StoreFiles.StagedCommit =
-    names.at(path, id, Seq("pairs", "counts", "docs", "dict")
+    names.at(spark, path, id, Seq("pairs", "counts", "docs", "dict")
       .map(sub => StoreFiles.Artifact(sub, Some(s"$path/$sub"))) ++ Seq(
         StoreFiles.Artifact("meta", Some(s"${path}_meta")),
         StoreFiles.Artifact("out", outPath)))
@@ -865,7 +858,7 @@ object Boilerplate {
     require(!mm.isNullAt(1),
       "monotonic-ingest contract: batch is empty")
     val foldId = mm.getLong(1)
-    val commit = foldCommit(FoldNames, path, foldId, None)
+    val commit = foldCommit(qs, FoldNames, path, foldId, None)
     // a crash-replay has no in-memory frame, so it secures the frozen
     // staged copy BEFORE the staging is swept
     def stagedChangelog(): DataFrame =
@@ -894,10 +887,9 @@ object Boilerplate {
       // survives: vacuuming then would double-apply its replay, and
       // maintenance deferral is always safe. ≤ 0 disables.
       if (autoVacuumTrigger > 0 &&
-          StoreCompaction.needsMaintenance(s"$path/counts",
+          StoreCompaction.needsMaintenance(qs, s"$path/counts",
             autoVacuumTrigger) &&
-          !StoreFiles.listDir(java.nio.file.Paths.get(path))
-            .exists(isFoldStaging))
+          foldStagings(qs, path).isEmpty)
         vacuumStore(spark, path)
       changelog
     }

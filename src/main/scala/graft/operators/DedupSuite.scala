@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 
@@ -114,11 +114,6 @@ object DedupSuite {
         array_min(transform(hashCol, x => (x * a + b) % MinhashP))
       }: _*))
       .otherwise(lit(null))
-
-  /** MinHash signature straight from shingles (convenience; prefer the
-    * two-step form in pipelines — see [[minhashSignatureFromHashes]]). */
-  def minhashSignature(shingleCol: Column, k: Int): Column =
-    minhashSignatureFromHashes(transform(shingleCol, s => hash32(s)), k)
 
   /** [[minhashSignatureFromHashes]] via the codegen'd native expression
     * [[graft.plans.MinhashSignature]] — ONE fused pass over the hash
@@ -467,8 +462,8 @@ object DedupSuite {
   // duplicate a shared id). Folds are single-maintainer crash-redo —
   // a replayed fold double-appends its delta; the streaming twin
   // (s18) wraps the fold in the committed-staging exactly-once
-  // protocol. Compaction ([[StoreCompaction.compactStoreFused]] on
-  // "bucket") is row-invariant and self-scheduled by the fold.
+  // protocol. Compaction ([[StoreCompaction.compactStore]]) is
+  // row-invariant and self-scheduled by the fold.
   // ---------------------------------------------------------------
 
   private def hammingMetaFields(bands: Int, nBuckets: Int): Seq[(String, Any)] =
@@ -515,9 +510,9 @@ object DedupSuite {
     * listed) and the pinned list structurally isolates the fold's
     * output from its own delta append. `private[graft]` so the spec
     * asserts the inventory on exactly the production selection. */
-  private[graft] def hammingStoreFiles(path: String,
+  private[graft] def hammingStoreFiles(spark: SparkSession, path: String,
                                        buckets: Seq[Long]): Seq[String] =
-    StoreFiles.bucketFilePaths(path, buckets)
+    StoreFiles.bucketFilePaths(spark, path, buckets)
 
   /** The Hamming fold's pure computation — everything
     * [[hammingIndexFold]] does except touching the store: reads the
@@ -561,7 +556,7 @@ object DedupSuite {
       .localCheckpoint()
     val buckets = bObs.get("bset")
       .asInstanceOf[scala.collection.Seq[Long]].sorted
-    val storeFiles = hammingStoreFiles(path, buckets.toIndexedSeq)
+    val storeFiles = hammingStoreFiles(spark, path, buckets.toIndexedSeq)
     val touched = bRows.select(col("band"), col("band_hash")).distinct()
     // the restricted index side is candidate-bounded (only rows whose
     // exact key the batch touches) — checkpoint it so the pair set's
@@ -632,8 +627,8 @@ object DedupSuite {
       () => delta.write.mode("append").partitionBy("bucket").parquet(path),
       () => outCp = pairs.localCheckpoint()))
     if (autoCompactTrigger > 0 &&
-        StoreCompaction.needsMaintenance(path, autoCompactTrigger)) {
-      StoreCompaction.compactStoreFused(spark, path, "bucket")
+        StoreCompaction.needsMaintenance(spark, path, autoCompactTrigger)) {
+      StoreCompaction.compactStore(spark, path)
       ()
     }
     outCp
@@ -989,9 +984,9 @@ object DedupSuite {
     *    canonicalize equal (their file lists differ by the earlier
     *    fold's delta), which closes the exchange-reuse duplicate-keep
     *    regression the previous checkpoint existed to prevent. */
-  private[graft] def substrStoreFiles(path: String,
+  private[graft] def substrStoreFiles(spark: SparkSession, path: String,
                                       buckets: Seq[Long]): Seq[String] =
-    StoreFiles.bucketFilePaths(path, buckets)
+    StoreFiles.bucketFilePaths(spark, path, buckets)
 
   /** Initialize a persisted window-key store for incremental
     * ExactSubstr ingest AND return the corpus's cleaned output (the
@@ -1091,7 +1086,7 @@ object DedupSuite {
               substrWithBucket(agg, nBuckets), path, "bucket", "wkey"))
           else Nil)
       ++ outWrite.map(write => () => write(cleaned)).toSeq)
-    if (bloomSide) BloomSide.installSeed(path)
+    if (bloomSide) BloomSide.installSeed(spark, path)
     writeSubstrMeta(spark, path, maxDoc, l, nBuckets, hashKeys, "overwrite")
     cleaned
   }
@@ -1100,22 +1095,22 @@ object DedupSuite {
     * fold appends one (wkey, keep, cnt) delta row per batch key, so a
     * window key hot across many folds accumulates one row per fold.
     * Collapse each key to its merged row (min keep — the global keep
-    * under the monotone-id contract; summed cnt), under the fused
-    * ONE-JOB crash-convergent swap
-    * ([[StoreCompaction.rewriteStoreFused]]; wkey determines bucket,
-    * so (bucket, wkey) grouping is the per-partition collapse exactly).
+    * under the monotone-id contract; summed cnt), in one job under
+    * the crash-convergent swap ([[StoreCompaction.rewriteStore]]; wkey
+    * determines bucket, so (bucket, wkey) grouping is the
+    * per-partition collapse exactly).
     * Read-invariant: every store reader merges with exactly this
     * min/sum. Single-maintainer contract — do not run concurrently
     * with folds. */
   def vacuumSubstrStore(spark: org.apache.spark.sql.SparkSession,
                         path: String): Unit = {
-    StoreCompaction.rewriteStoreFused(spark, path, "bucket", df =>
+    StoreCompaction.rewriteStore(spark, path, df =>
       df.groupBy(col("bucket"), col("wkey"))
         .agg(min(col("keep")).as("keep"),
           sum(col("cnt")).cast("bigint").as("cnt")))
     // collapse the fold-accumulated bloom rows to one per bucket
     // (atomic swap; key set is vacuum-invariant so coverage holds)
-    if (BloomSide.maintained(path))
+    if (BloomSide.maintained(spark, path))
       BloomSide.rebuildFromStore(spark, path, "bucket", "wkey")
     ()
   }
@@ -1165,11 +1160,8 @@ object DedupSuite {
     // serialized fixed latencies
     var outCp: DataFrame = null
     Par.run(Seq(
-      () => {
-        val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-        spark.sparkContext.setJobDescription("substr-fold: delta append")
-        try delta.write.mode("append").partitionBy("bucket").parquet(path)
-        finally spark.sparkContext.setJobDescription(prev)
+      () => graft.Phase(spark, "substr-fold: delta append") {
+        delta.write.mode("append").partitionBy("bucket").parquet(path)
       },
       () => outCp = out.localCheckpoint())
       // stores that maintain a bloom sidecar get this fold's delta
@@ -1177,15 +1169,10 @@ object DedupSuite {
       // checkpointed). Crash window = delta-without-bloom, covered by
       // the same single-maintainer replay contract as the delta
       // itself — see [[BloomSide]]'s coverage notes.
-      ++ (if (BloomSide.maintained(path))
-            Seq[() => Unit](() => {
-              val prev = spark.sparkContext
-                .getLocalProperty("spark.job.description")
-              spark.sparkContext.setJobDescription("substr-fold: bloom append")
-              try BloomSide.appendDelta(
-                delta.select(col("bucket"), col("wkey")), path,
-                "bucket", "wkey")
-              finally spark.sparkContext.setJobDescription(prev)
+      ++ (if (BloomSide.maintained(spark, path))
+            Seq[() => Unit](() => graft.Phase(spark, "substr-fold: bloom append") {
+              BloomSide.appendDelta(delta.select(col("bucket"), col("wkey")),
+                path, "bucket", "wkey")
             })
           else Nil))
     writeSubstrMeta(spark, path, newMax, l, nBuckets, hashKeys, "append")
@@ -1194,7 +1181,7 @@ object DedupSuite {
     // place — fold cost stays O(batch + matched rows) forever without
     // an operator-remembered vacuum call. ≤ 0 disables.
     if (autoVacuumTrigger > 0 &&
-        StoreCompaction.needsMaintenance(path, autoVacuumTrigger))
+        StoreCompaction.needsMaintenance(spark, path, autoVacuumTrigger))
       vacuumSubstrStore(spark, path)
     outCp
   }
@@ -1216,11 +1203,8 @@ object DedupSuite {
       textCol: String, l: Int, nBuckets: Int,
       hashKeys: Boolean): (DataFrame, DataFrame, Long) = {
     require(l >= 2, "window length must be at least 2")
-    def desc[A](s: String)(body: => A): A = {
-      val prev = spark.sparkContext.getLocalProperty("spark.job.description")
-      spark.sparkContext.setJobDescription(s"substr-fold: $s")
-      try body finally spark.sparkContext.setJobDescription(prev)
-    }
+    def desc[A](s: String)(body: => A): A =
+      graft.Phase(spark, s"substr-fold: $s")(body)
     // ONE serialized checkpoint wave per fold, not two: the batch
     // min/max RIDES the batchAgg checkpoint below as observed metrics
     // on a tokenize branch that feeds ONLY the aggregation — the
@@ -1256,7 +1240,7 @@ object DedupSuite {
     // the bloom path used to collect in its own job), saving the
     // separate collect job every fold paid
     val occForAgg = substrWindows(tkObs, l, hashKeys)
-    val bloomMaintained = BloomSide.maintained(path)
+    val bloomMaintained = BloomSide.maintained(spark, path)
     val aggObs = org.apache.spark.sql.Observation()
     // ONE shuffle, not two: bucket = crc32(wkey) % n is a FUNCTION of
     // wkey, so a bucket-keyed exchange already co-locates every wkey's
@@ -1328,7 +1312,7 @@ object DedupSuite {
     // [[substrMarked]] cuts all its batch occurrences); a batch-only
     // duplicated key keeps its batch keep. An empty snapshot degrades
     // to the batch-only set with the same schema.
-    val storeFiles = substrStoreFiles(path, buckets)
+    val storeFiles = substrStoreFiles(spark, path, buckets)
     // explicit broadcasts: both build sides are bounded by the
     // batch's distinct keys (ingest-batch-sized by the fold
     // contract); the static planner only sees the scan's size.

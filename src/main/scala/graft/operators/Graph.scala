@@ -218,7 +218,7 @@ object Graph {
     val buckets = batchOutdeg
       .select(pmod(col("src"), lit(nBuckets.toLong)).as("bucket")).distinct()
       .collect().map(_.getLong(0)).sorted
-    StoreCompaction.repairStore(path) // converge a crashed compaction
+    StoreCompaction.repairStore(spark, path) // converge a crashed compaction
     spark.read.parquet(path)
       .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
   }
@@ -239,7 +239,7 @@ object Graph {
     // compaction swap BEFORE reading, so a crash window never
     // silently serves with a partition absent until the next
     // maintenance pass happens to run (no-op on a clean store)
-    StoreCompaction.repairStore(path)
+    StoreCompaction.repairStore(spark, path)
     val contrib = spark.read.parquet(path)
       .select(col("src"), col("dst"), col("outd"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -231,21 +231,22 @@ object HeavyHitters {
       .repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(path)
     if (autoVacuumTrigger > 0 &&
-        StoreCompaction.needsMaintenance(path, autoVacuumTrigger))
+        StoreCompaction.needsMaintenance(batch.sparkSession, path,
+          autoVacuumTrigger))
       vacuumKeyStore(batch.sparkSession, path)
   }
 
   /** Maintenance vacuum for a [[buildKeyStore]] layout: a key folded
     * daily for a year carries 365 delta rows — collapse each key's
-    * deltas to one row, under the fused ONE-JOB crash-convergent swap
-    * ([[StoreCompaction.rewriteStoreFused]]; the bucket column is a
+    * deltas to one row, in one job under the crash-convergent swap
+    * ([[StoreCompaction.rewriteStore]]; the bucket column is a
     * function of k, so grouping by (bucket, k) is the per-partition
     * `groupBy(k)` exactly). Read-invariant: readers sum deltas per
     * key, and one row sums the same. Single-maintainer contract — do
     * not run concurrently with appends. */
   def vacuumKeyStore(spark: org.apache.spark.sql.SparkSession,
                      path: String): Unit = {
-    StoreCompaction.rewriteStoreFused(spark, path, "bucket", df =>
+    StoreCompaction.rewriteStore(spark, path, df =>
       df.groupBy(col("bucket"), col("k"))
         .agg(sum(col("cnt")).cast("bigint").as("cnt")))
     ()

@@ -9,8 +9,8 @@ package graft.operators
   *
   * Every action is awaited before the first failure surfaces: a
   * fail-fast return would leave sibling jobs writing while the caller
-  * proceeds to cleanup or repair — the exact race the compaction spec
-  * caught when rewritePartitions briefly failed fast. */
+  * proceeds to cleanup or repair (a repair could delete a staged dir
+  * under a live writer). */
 object Par {
   def run(actions: Seq[() => Unit]): Unit = {
     if (actions.isEmpty) return

@@ -51,17 +51,6 @@ import org.apache.spark.sql.types._
   */
 object Quantiles {
 
-  /** Run `body` under a job description, RESTORING the caller's
-    * description after (a bare setJobDescription(null) in a finally
-    * would clobber any outer gate-level label — the Boilerplate.desc
-    * discipline). */
-  private def desc[A](spark: SparkSession, s: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s)
-    try body finally sc.setJobDescription(prev)
-  }
-
   /** One requested order statistic: φ = num/den (0 ≤ num ≤ den). */
   final case class Quantile(name: String, num: Long, den: Long) {
     require(den > 0 && num >= 0 && num <= den,
@@ -369,7 +358,7 @@ object Quantiles {
             col("g") === lit(i._1) &&
               col("x") >= lit(i._2) && col("x") <= lit(i._3))
           .reduce(_ || _)
-        val countRows = desc(keyed.sparkSession,
+        val countRows = graft.Phase(keyed.sparkSession,
             s"quantile-descent: pass over ${intervals.size} interval(s)") {
           keyed.filter(livePred).join(broadcast(iv),
               col("g") === col("ig") &&
@@ -598,7 +587,7 @@ object Quantiles {
             lit(1), dec(col("hi"))).cast("long").as("hi2"),
           (col("r") - (col("cum") - col("c"))).as("r"))
         .withColumnsRenamed(Map("lo2" -> "lo", "hi2" -> "hi"))
-      val next = desc(spark, s"q100 in-plan descent: pass $pass") {
+      val next = graft.Phase(spark, s"q100 in-plan descent: pass $pass") {
         observedMaterialize(targets)
       }
       targets = next._1
@@ -688,7 +677,7 @@ object Quantiles {
     // collapse in place. Fold cost stays flat over unbounded folds
     // with no operator-remembered vacuum call. ≤ 0 disables.
     if (autoVacuumTrigger > 0 &&
-        StoreCompaction.flatNeedsMaintenance(path, autoVacuumTrigger))
+        StoreCompaction.flatNeedsMaintenance(spark, path, autoVacuumTrigger))
       vacuumQuantileStore(spark, path)
   }
 
@@ -759,14 +748,14 @@ object Quantiles {
                                   fanout: Int = 65536,
                                   maxDriverGroups: Long = 256): DataFrame = {
     require(quantiles.nonEmpty, "need at least one quantile")
-    StoreCompaction.repairFlatStore(path)
+    StoreCompaction.repairFlatStore(spark, path)
     val cellBits = readQuantileMeta(spark, path)
     val w = 1L << cellBits
     // group seeds from the store: exact n, covering [lo, hi] from
     // cell edges (lo = minCell·2^bits clears only low bits — exact in
     // Long; hi = maxCell·2^bits + 2^bits − 1 cannot overflow: the
     // maximal cell's edge is Long.MaxValue itself)
-    val (seeds, nGroups) = desc(spark,
+    val (seeds, nGroups) = graft.Phase(spark,
         "q101-store: seeds from store cells (rows never scanned)") {
       val s = spark.read.parquet(path)
         .groupBy(col("g"))
@@ -798,7 +787,7 @@ object Quantiles {
                          fanout: Int = 65536,
                          maxCellsPerGroup: Int = 1 << 20): DataFrame = {
     require(quantiles.nonEmpty, "need at least one quantile")
-    StoreCompaction.repairFlatStore(path) // converge a crashed vacuum
+    StoreCompaction.repairFlatStore(spark, path) // converge a crashed vacuum
     val cellBits = readQuantileMeta(spark, path)
     val w = 1L << cellBits
     val cells = spark.read.parquet(path)

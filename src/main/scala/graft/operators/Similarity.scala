@@ -171,9 +171,9 @@ object Similarity {
     // Row-identical (compaction regroups files, never rows), so the
     // e10 full-rebuild oracle is unaffected. ≤ 0 disables.
     if (autoCompactTrigger > 0 &&
-        StoreCompaction.needsMaintenance(path, autoCompactTrigger)) {
-      StoreCompaction.compactStoreFused(batch.sparkSession, path,
-        "centroid_id")
+        StoreCompaction.needsMaintenance(batch.sparkSession, path,
+          autoCompactTrigger)) {
+      StoreCompaction.compactStore(batch.sparkSession, path)
       ()
     }
   }
@@ -224,7 +224,7 @@ object Similarity {
     // stream-grown indexes are compaction-maintained (s13): converge
     // any crashed compaction swap before serving, so a crash window
     // never silently drops a partition's neighbors (no-op when clean)
-    StoreCompaction.repairStore(path)
+    StoreCompaction.repairStore(spark, path)
     val lists = spark.read.parquet(path)
     val scored = lists.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -713,9 +713,6 @@ object Similarity {
                 nProbe: Int = 4, m: Int = 8, dims: Int = 64,
                 nCodes: Int = 16): DataFrame = {
     require(dims % m == 0, s"dims=$dims must split into m=$m subspaces")
-    val sub = dims / m
-    def subvecs(v: Column) = array((0 until m).map(j =>
-      struct(lit(j).as("j"), slice(v, j * sub + 1, sub).as("sv"))): _*)
     // coarse layer: nearest centroid per corpus vector (broadcast).
     // nCentroids sizes THIS layer only; the PQ codebook is nCodes per
     // subspace — at scale the two move independently (coarse cells

@@ -53,9 +53,6 @@ object StoreMeta {
   private def confOf(spark: SparkSession): Configuration =
     spark.sessionState.newHadoopConf()
 
-  private def isDataFile(name: String): Boolean =
-    name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
-
   /** Spark's parquet type mapping for the supported scalar meta
     * fields — one place, so driver-written and Spark-written rows are
     * byte-compatible. */
@@ -186,12 +183,7 @@ object StoreMeta {
     val conf = confOf(spark)
     val dir = new HPath(metaPath(store))
     val fs = dir.getFileSystem(conf)
-    val files =
-      if (fs.exists(dir))
-        fs.listStatus(dir).toSeq
-          .filter(st => st.isFile && isDataFile(st.getPath.getName))
-          .sortBy(_.getPath.getName)
-      else Nil
+    val files = StoreFiles.dataFiles(fs, dir).sortBy(_.getPath.getName)
     val rows = files.flatMap(f => readGroups(conf, f.getPath)).toArray
     require(rows.nonEmpty, s"no _meta at ${metaPath(store)}")
     rows.foreach { row =>
@@ -238,9 +230,7 @@ object StoreMeta {
     val conf = confOf(spark)
     val p = new HPath(dir)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val files = fs.listStatus(p).toSeq
-      .filter(st => st.isFile && isDataFile(st.getPath.getName))
+    val files = StoreFiles.dataFiles(fs, p)
     if (files.isEmpty) return None
     var best = Option.empty[Long]
     var trusted = true

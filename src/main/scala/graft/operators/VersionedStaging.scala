@@ -80,24 +80,20 @@ object VersionedStaging {
     val dest = f"$root/v$next%06d"
     val tmp = f"$root/.tmp-v$next%06d"
     df.write.mode("overwrite").parquet(tmp)
+    val f = fs(spark, root)
     try beforeRename()
     catch {
       case e: Throwable =>
-        if (!fs(spark, tmp).delete(new Path(tmp), true))
-          e.addSuppressed(new java.io.IOException(s"failed to delete $tmp"))
+        try StoreFiles.delete(f, new Path(tmp))
+        catch { case d: java.io.IOException => e.addSuppressed(d) }
         throw e
     }
-    batchId.foreach { id =>
-      fs(spark, tmp).create(new Path(tmp, s"_BATCH-$id"), true).close()
-    }
-    // Hadoop FS signals failure by RETURNING false, not throwing; a
-    // swallowed failure here would let a streaming checkpoint commit a
-    // batch whose version was never created (silent data loss)
-    val f = fs(spark, dest)
-    if (f.exists(new Path(dest)) && !f.delete(new Path(dest), true))
-      throw new java.io.IOException(s"failed to delete stale partial $dest")
-    if (!f.rename(new Path(tmp), new Path(dest)))
-      throw new java.io.IOException(s"failed to rename $tmp to $dest")
+    batchId.foreach(id => StoreFiles.createMarker(f, new Path(tmp, s"_BATCH-$id")))
+    // checked: a swallowed failure here would let a streaming
+    // checkpoint commit a batch whose version was never created
+    // (silent data loss). A stale partial `dest` is dropped first.
+    StoreFiles.delete(f, new Path(dest))
+    StoreFiles.rename(f, new Path(tmp), new Path(dest))
     Some(dest)
   }
 
@@ -126,11 +122,7 @@ object VersionedStaging {
       .filter(p => versionOf(p.replace(".tmp-", ""))
         .exists(v => complete.lastOption.flatMap(versionOf).exists(_ >= v)))
     val doomed = doomedVersions ++ orphans
-    doomed.foreach { p =>
-      // Hadoop FS signals failure by RETURNING false, not throwing
-      if (!f.delete(new Path(p), true))
-        throw new java.io.IOException(s"vacuum failed to delete $p")
-    }
+    doomed.foreach(p => StoreFiles.delete(f, new Path(p)))
     doomed.toSeq
   }
 

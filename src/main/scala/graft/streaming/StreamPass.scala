@@ -7,7 +7,6 @@ import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.PerJvm
-import graft.operators.StoreFiles
 
 /** One stream of the shared pass, declared once: `entry` is its graded
   * query name, `label` its drain label (`drain_at_<label>`; a memory
@@ -178,7 +177,7 @@ object StreamPass {
       // sink doesn't pin every result in the driver heap
       streams.filter(_.memorySink).foreach(st =>
         try s.catalog.dropTempView(st.label) catch { case _: Throwable => () })
-      StoreFiles.deleteRecursively(ckRoot)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(ckRoot.toFile)
     }
     passSecsMap.put(dir, (System.nanoTime() - t0) / 1e9)
     results

@@ -212,8 +212,9 @@ object StreamingJobs {
   /** s13's declaration: the assigned batch is the staging root itself
     * (one centroid-partitioned write, whose own `_SUCCESS` commits
     * it), promoted into the live index's centroid partitions. */
-  private[graft] def ivfCommit(indexPath: String, batchId: Long): StagedCommit =
-    IvfNames.at(indexPath, batchId, Seq(Artifact("", Some(indexPath))))
+  private[graft] def ivfCommit(spark: SparkSession, indexPath: String,
+                               batchId: Long): StagedCommit =
+    IvfNames.at(spark, indexPath, batchId, Seq(Artifact("", Some(indexPath))))
 
   private[graft] def ivfWriters(centroids: DataFrame,
                                 batch: DataFrame): Map[String, String => Unit] =
@@ -229,19 +230,18 @@ object StreamingJobs {
                                batch: DataFrame,
                                batchId: Long,
                                autoCompactTrigger: Int = 24): Boolean = {
-    val applied = ivfCommit(indexPath, batchId)
+    val applied = ivfCommit(batch.sparkSession, indexPath, batchId)
       .applyIdempotent(ivfWriters(centroids, batch))
     // self-scheduled maintenance AFTER the batch's marker is durable:
     // a compaction can then never interleave a promoted-but-markerless
     // replay window (batch N replays before N+1 ever runs, and the
-    // fused compaction ignores dot-dirs, so a crashed sibling's
+    // compaction ignores dot-dirs, so a crashed sibling's
     // staging is untouched). Row-identical — the e10 rebuild oracle
     // and s13 gate serve from compacted stores already. ≤ 0 disables.
     if (applied && autoCompactTrigger > 0 &&
-        graft.operators.StoreCompaction.needsMaintenance(indexPath,
-          autoCompactTrigger)) {
-      graft.operators.StoreCompaction.compactStoreFused(
-        batch.sparkSession, indexPath, "centroid_id")
+        graft.operators.StoreCompaction.needsMaintenance(batch.sparkSession,
+          indexPath, autoCompactTrigger)) {
+      graft.operators.StoreCompaction.compactStore(batch.sparkSession, indexPath)
       ()
     }
     applied
@@ -259,13 +259,13 @@ object StreamingJobs {
     * the delta and its blooms, and the stream replays the batch
     * (single-maintainer) before any later fold could consult the
     * sidecar against the new keys. */
-  private[graft] def substrCommit(storePath: String, outPath: String,
-                                  batchId: Long): StagedCommit =
-    SubstrNames.at(storePath, batchId, Seq(
+  private[graft] def substrCommit(spark: SparkSession, storePath: String,
+                                  outPath: String, batchId: Long): StagedCommit =
+    SubstrNames.at(spark, storePath, batchId, Seq(
         Artifact("delta", Some(storePath)),
         Artifact("meta", Some(s"${storePath}_meta")),
         Artifact("out", Some(outPath)))
-      ++ (if (graft.operators.BloomSide.maintained(storePath))
+      ++ (if (graft.operators.BloomSide.maintained(spark, storePath))
             Seq(Artifact("bloom",
               Some(s"$storePath/${graft.operators.BloomSide.DirName}")))
           else Nil))
@@ -306,7 +306,7 @@ object StreamingJobs {
                                 outPath: String, batch: DataFrame,
                                 batchId: Long, l: Int, nBuckets: Int,
                                 hashKeys: Boolean): Boolean =
-    substrCommit(storePath, outPath, batchId).applyIdempotent(
+    substrCommit(spark, storePath, outPath, batchId).applyIdempotent(
       substrWriters(spark, storePath, batch, l, nBuckets, hashKeys))
 
   /** Streaming incremental ExactSubstr ingest (s14): a stream of
@@ -338,9 +338,9 @@ object StreamingJobs {
     * (accumulated under `outPath`; pairs are final on emission — a
     * pair's hamming distance never changes, so segments are disjoint
     * and need no latest-wins resolution). */
-  private[graft] def hammingCommit(storePath: String, outPath: String,
-                                   batchId: Long): StagedCommit =
-    HammingNames.at(storePath, batchId, Seq(
+  private[graft] def hammingCommit(spark: SparkSession, storePath: String,
+                                   outPath: String, batchId: Long): StagedCommit =
+    HammingNames.at(spark, storePath, batchId, Seq(
       Artifact("delta", Some(storePath)), Artifact("out", Some(outPath))))
 
   /** s18's fold, on the AQE-off clone (see [[substrWriters]]). The
@@ -372,7 +372,7 @@ object StreamingJobs {
                                  batchId: Long, idCol: String,
                                  hashCol: String, maxHamming: Int,
                                  maxBucket: Int = 1000): Boolean =
-    hammingCommit(storePath, outPath, batchId).applyIdempotent(
+    hammingCommit(spark, storePath, outPath, batchId).applyIdempotent(
       hammingWriters(spark, storePath, batchHashes, idCol, hashCol,
         maxHamming, maxBucket))
 
@@ -407,9 +407,9 @@ object StreamingJobs {
 
   /** s15's declaration: one delta of additive cell counts, promoted
     * into the store root. */
-  private[graft] def quantileCommit(storePath: String,
+  private[graft] def quantileCommit(spark: SparkSession, storePath: String,
                                     batchId: Long): StagedCommit =
-    QuantileNames.at(storePath, batchId,
+    QuantileNames.at(spark, storePath, batchId,
       Seq(Artifact("delta", Some(storePath))))
 
   private[graft] def quantileWriters(spark: SparkSession, storePath: String,
@@ -431,7 +431,7 @@ object StreamingJobs {
                                   grp: org.apache.spark.sql.Column,
                                   value: org.apache.spark.sql.Column,
                                   batchId: Long): Boolean =
-    quantileCommit(storePath, batchId).applyIdempotent(
+    quantileCommit(spark, storePath, batchId).applyIdempotent(
       quantileWriters(spark, storePath, batch, grp, value))
 
   /** Streaming incremental quantile-store ingest (s15): a stream of
@@ -454,9 +454,9 @@ object StreamingJobs {
   /** s16's declaration ([[graft.operators.Boilerplate.foldCommit]]
     * under the streaming names), with the changelog promoted into
     * `outPath`. */
-  private[graft] def boilerplateCommit(storePath: String, outPath: String,
-                                       batchId: Long): StagedCommit =
-    graft.operators.Boilerplate.foldCommit(
+  private[graft] def boilerplateCommit(spark: SparkSession, storePath: String,
+                                       outPath: String, batchId: Long): StagedCommit =
+    graft.operators.Boilerplate.foldCommit(spark,
       graft.operators.Boilerplate.StreamNames, storePath, batchId,
       Some(outPath))
 
@@ -486,7 +486,7 @@ object StreamingJobs {
                                      batchId: Long, minDocs: Long,
                                      nBuckets: Int,
                                      nDocBuckets: Int): Boolean =
-    boilerplateCommit(storePath, outPath, batchId).applyIdempotent(
+    boilerplateCommit(spark, storePath, outPath, batchId).applyIdempotent(
       boilerplateWriters(spark, storePath, batch, batchId, minDocs,
         nBuckets, nDocBuckets))
 
@@ -517,9 +517,9 @@ object StreamingJobs {
     * `outPath`; spans are final on emission — the stream only grows
     * at the end, so segments are disjoint and no latest-wins
     * resolution is needed) and the additive `_meta` high-water row. */
-  private[graft] def packCommit(storePath: String, outPath: String,
-                                batchId: Long): StagedCommit =
-    PackNames.at(storePath, batchId, Seq(
+  private[graft] def packCommit(spark: SparkSession, storePath: String,
+                                outPath: String, batchId: Long): StagedCommit =
+    PackNames.at(spark, storePath, batchId, Seq(
       Artifact("out", Some(outPath)),
       Artifact("meta", Some(s"${storePath}_meta"))))
 
@@ -542,7 +542,7 @@ object StreamingJobs {
                               batch: DataFrame,
                               batchId: Long, seqLen: Long,
                               docsPerShard: Long): Boolean =
-    packCommit(storePath, outPath, batchId).applyIdempotent(
+    packCommit(spark, storePath, outPath, batchId).applyIdempotent(
       packWriters(spark, storePath, batch, seqLen, docsPerShard))
 
   /** Streaming incremental sequence packing (s17): a stream of

@@ -167,7 +167,7 @@ class AnnSkewSpec extends SparkSpec {
       Similarity.appendToIvfIndex(b, root, cent, "vec_id", "embedding",
         autoCompactTrigger = 3)
     }
-    val counts = graft.operators.StoreCompaction.partitionFileCounts(root)
+    val counts = graft.operators.StoreCompaction.partitionFileCounts(spark, root)
     assert(counts.values.max < 3,
       s"auto policy must keep partitions under the trigger: $counts")
     // rows survive maintenance exactly: base + all six batches

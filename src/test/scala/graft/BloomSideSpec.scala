@@ -28,7 +28,7 @@ class BloomSideSpec extends SparkSpec {
     val out1 = DedupSuite.exactSubstrBuildStore(
       docs.filter(col("doc_id") < 14), "doc_id", "text", 8, store,
       nBuckets = 16, hashKeys = true, bloomSide = true)
-    assert(BloomSide.maintained(store), "build must seed the sidecar")
+    assert(BloomSide.maintained(spark, store), "build must seed the sidecar")
     val out2 = DedupSuite.exactSubstrFold(spark, store,
       docs.filter(col("doc_id") >= 14 && col("doc_id") < 27),
       "doc_id", "text", 8, nBuckets = 16, hashKeys = true)

@@ -222,7 +222,7 @@ class BoilerplateStoreSpec extends SparkSpec {
     // but the staging never swept and the changelog never delivered
     val foldId = 6L // batch1's doc high-water
     val staging = Paths.get(store, s".boiler_fold_staging_$foldId")
-    val commit = Boilerplate.foldCommit(Boilerplate.FoldNames, store,
+    val commit = Boilerplate.foldCommit(spark, Boilerplate.FoldNames, store,
       foldId, None)
     commit.stage(Boilerplate.foldWriters(spark, store, batch1, "doc_id",
       "text", m, nB, 8, seq = foldId))
@@ -269,10 +269,10 @@ class BoilerplateStoreSpec extends SparkSpec {
       Boilerplate.vacuumStore(spark, store)
     }
     assert(eV.getMessage.contains("replay"))
-    graft.operators.StoreFiles.deleteRecursively(pending)
+    Files.delete(pending)
     Boilerplate.vacuumStore(spark, store)
-    assert(graft.operators.StoreFiles.listDir(Paths.get(store))
-      .forall(!_.getFileName.toString.startsWith("_boiler_fold_")),
+    assert(new java.io.File(store).list()
+      .forall(!_.startsWith("_boiler_fold_")),
       "completed-fold markers are swept by the vacuum")
     // a swept marker cannot enable a silent replay: the monotonic
     // guard still rejects it

@@ -419,8 +419,8 @@ class DedupSuiteSpec extends SparkSpec {
     // pruned-read inventory on the production selection: every file
     // the fold would read for a bucket subset lies under exactly those
     // bucket dirs, and a strict subset is a strict file subset
-    val allFiles = DedupSuite.hammingStoreFiles(store, 0L until 32L)
-    val someFiles = DedupSuite.hammingStoreFiles(store, Seq(0L, 1L))
+    val allFiles = DedupSuite.hammingStoreFiles(spark, store, 0L until 32L)
+    val someFiles = DedupSuite.hammingStoreFiles(spark, store, Seq(0L, 1L))
     assert(allFiles.nonEmpty && someFiles.size < allFiles.size)
     assert(someFiles.forall(f =>
       f.contains("bucket=0/") || f.contains("bucket=1/")))
@@ -440,7 +440,7 @@ class DedupSuiteSpec extends SparkSpec {
     assert(p1 == want1,
       s"store fold 1 diverged: ${want1.diff(p1)} / ${p1.diff(want1)}")
     // row-invariant maintenance between folds (the d26 mid-gate move)
-    graft.operators.StoreCompaction.compactStoreFused(spark, store, "bucket")
+    graft.operators.StoreCompaction.compactStore(spark, store)
     val p2 = DedupSuite.hammingIndexFold(spark, store, b2, "doc_id", "ph",
         maxHamming = 3, autoCompactTrigger = 0)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Long)]
@@ -464,8 +464,8 @@ class DedupSuiteSpec extends SparkSpec {
       b.toLong * 8 + java.lang.Math.floorMod((oneSim >> (b * 15)) & 0x7fffL, 8L))
       .distinct.sorted
     assert(oneBuckets.size <= 4 &&
-      DedupSuite.hammingStoreFiles(store, oneBuckets).size < allFiles.size)
-    graft.operators.StoreFiles.deleteRecursively(tmp)
+      DedupSuite.hammingStoreFiles(spark, store, oneBuckets).size < allFiles.size)
+    org.apache.hadoop.fs.FileUtil.fullyDelete(tmp.toFile)
   }
 
   test("simhashHammingPairs rejects band counts that break pigeonhole exactness") {
@@ -645,7 +645,7 @@ class DedupSuiteSpec extends SparkSpec {
     val c = new java.util.zip.CRC32
     c.update(wkey.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val b = c.getValue % 16
-    val files = DedupSuite.substrStoreFiles(store, Seq(b))
+    val files = DedupSuite.substrStoreFiles(spark, store, Seq(b))
     assert(files.nonEmpty, "requested bucket must hold files")
     assert(files.forall(_.contains(s"bucket=$b/")),
       s"snapshot must list only bucket $b, saw:\n${files.mkString("\n")}")

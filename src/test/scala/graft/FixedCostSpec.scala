@@ -7,7 +7,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.types.{LongType, StringType, TimestampNTZType, TimestampType}
-import graft.operators.StoreFiles
+import org.apache.hadoop.fs.FileUtil
 
 /** A repeated query pays neither of two fixed costs again: Janino
   * compiles of its generated classes ([[Sessions.tune]] sizes Spark's
@@ -113,7 +113,7 @@ class FixedCostSpec extends SparkSpec {
       assert(reread.schema.fieldNames.toSeq == Seq("b"))
       assert(reread.schema("b").dataType == StringType)
       assert(reread.as[String].collect().toSeq == Seq("x"))
-    } finally StoreFiles.deleteRecursively(dir)
+    } finally FileUtil.fullyDelete(dir.toFile)
   }
 
   test("two sessions never share a schema entry, and a conf change re-infers") {

@@ -219,7 +219,7 @@ class HeavyHittersSpec extends SparkSpec {
       HeavyHitters.appendToKeyStore(batch, col("k"), store, nBuckets,
         autoVacuumTrigger = 4)
     }
-    val counts = graft.operators.StoreCompaction.partitionFileCounts(store)
+    val counts = graft.operators.StoreCompaction.partitionFileCounts(spark, store)
     assert(counts.values.max < 4,
       s"auto policy must keep every bucket under the trigger: $counts")
     // served reads equal the naive union aggregation — maintenance
@@ -241,7 +241,7 @@ class HeavyHittersSpec extends SparkSpec {
       HeavyHitters.appendToKeyStore(batch, col("k"), store2, nBuckets,
         autoVacuumTrigger = 0)
     }
-    val counts2 = graft.operators.StoreCompaction.partitionFileCounts(store2)
+    val counts2 = graft.operators.StoreCompaction.partitionFileCounts(spark, store2)
     assert(counts2.values.max >= 5,
       s"disabled trigger must leave deltas untouched: $counts2")
   }

@@ -30,12 +30,12 @@ class StoreCompactionSpec extends SparkSpec {
   test("compaction drops file counts, keeps every row, is idempotent") {
     val store = buildStore(4)
     val expect = rows(store)
-    val before = StoreCompaction.partitionFileCounts(store)
+    val before = StoreCompaction.partitionFileCounts(spark, store)
     assert(before.values.forall(_ >= 4), s"fixture too small: $before")
     val rep = StoreCompaction.compactStore(spark, store)
     assert(rep.partitionsCompacted == 4)
     assert(rep.filesAfter < rep.filesBefore)
-    val after = StoreCompaction.partitionFileCounts(store)
+    val after = StoreCompaction.partitionFileCounts(spark, store)
     assert(after.values.forall(_ == 1), s"expected 1 file/partition: $after")
     assert(rows(store) === expect, "compaction must not change rows")
     // idempotent: a second run finds nothing at threshold
@@ -71,7 +71,7 @@ class StoreCompactionSpec extends SparkSpec {
     Files.move(part, trash, StandardCopyOption.ATOMIC_MOVE)
     assert(!Files.exists(part), "simulated crash: partition absent")
     // any maintenance entry converges the store (repair runs first)
-    StoreCompaction.repairStore(store)
+    StoreCompaction.repairStore(spark, store)
     assert(Files.exists(part), "repair must publish the committed stage")
     assert(!Files.exists(Paths.get(store, ".compact_trash")),
       "superseded trash must be dropped")
@@ -92,7 +92,7 @@ class StoreCompactionSpec extends SparkSpec {
     Files.createDirectories(trash.getParent)
     Files.move(part, trash, StandardCopyOption.ATOMIC_MOVE)
     assert(!Files.exists(part), "simulated crash: partition absent")
-    StoreCompaction.repairStore(store)
+    StoreCompaction.repairStore(spark, store)
     assert(Files.exists(part), "repair must restore the trashed original")
     assert(!Files.exists(Paths.get(store, ".compact_trash")))
     assert(!Files.exists(Paths.get(store, ".compact_stage")))
@@ -116,7 +116,7 @@ class StoreCompactionSpec extends SparkSpec {
     }
     // the live store was never touched; repair converges the aborted
     // stage away and every row is still served
-    StoreCompaction.repairStore(store)
+    StoreCompaction.repairStore(spark, store)
     assert(rows(store) === expect)
     assert(!Files.exists(Paths.get(store, ".compact_stage")))
   }
@@ -128,7 +128,7 @@ class StoreCompactionSpec extends SparkSpec {
     val staged = Paths.get(store, ".compact_stage", "bucket=2")
     Files.createDirectories(staged)
     Files.write(staged.resolve("part-junk.parquet"), Array[Byte](9, 9))
-    StoreCompaction.repairStore(store)
+    StoreCompaction.repairStore(spark, store)
     assert(!Files.exists(staged), "uncommitted stage must be discarded")
     assert(rows(store) === expect)
   }
@@ -155,19 +155,19 @@ class StoreCompactionSpec extends SparkSpec {
   test("fused rewrite collapses all partitions in one pass, summed reads invariant, idempotent") {
     val store = deltaStore(5)
     val expect = summed(store)
-    val before = StoreCompaction.partitionFileCounts(store)
+    val before = StoreCompaction.partitionFileCounts(spark, store)
     assert(before.values.forall(_ >= 5), s"fixture too small: $before")
-    val rep = StoreCompaction.rewriteStoreFused(spark, store, "bucket",
+    val rep = StoreCompaction.rewriteStore(spark, store,
       df => df.groupBy($"bucket", $"k")
         .agg(sum($"cnt").cast("bigint").as("cnt")))
     assert(rep.partitionsCompacted == 4 && rep.filesAfter < rep.filesBefore)
-    val after = StoreCompaction.partitionFileCounts(store)
+    val after = StoreCompaction.partitionFileCounts(spark, store)
     assert(after.values.forall(_ == 1), s"expected 1 file/partition: $after")
     assert(summed(store) === expect, "summed reads must be invariant")
     // one collapsed row per key
     assert(spark.read.parquet(store).groupBy($"k").count()
       .agg(max($"count")).head().getLong(0) == 1L)
-    StoreCompaction.rewriteStoreFused(spark, store, "bucket",
+    StoreCompaction.rewriteStore(spark, store,
       df => df.groupBy($"bucket", $"k")
         .agg(sum($"cnt").cast("bigint").as("cnt")))
     assert(summed(store) === expect)
@@ -181,9 +181,9 @@ class StoreCompactionSpec extends SparkSpec {
     val store = deltaStore(3)
     val keep = summed(store).filter(_._1 != "k0") // k0 → bucket 0? no: j%10 / j%4
     // drop EVERY row of bucket=2 (dead-partition case)
-    StoreCompaction.rewriteStoreFused(spark, store, "bucket",
+    StoreCompaction.rewriteStore(spark, store,
       df => df.filter($"bucket" =!= 2))
-    val counts = StoreCompaction.partitionFileCounts(store)
+    val counts = StoreCompaction.partitionFileCounts(spark, store)
     assert(counts("bucket=2") == 0,
       s"emptied partition must have its files retired: $counts")
     assert(spark.read.parquet(store)
@@ -196,7 +196,7 @@ class StoreCompactionSpec extends SparkSpec {
     val store = deltaStore(3)
     val expect = summed(store)
     // stage a fused replacement (root-level _SUCCESS, no per-dir
-    // markers) exactly as rewriteStoreFused writes it
+    // markers) exactly as rewriteStore writes it
     val stage = Paths.get(store, ".compact_stage")
     spark.read.option("basePath", store).parquet(store)
       .groupBy($"bucket", $"k").agg(sum($"cnt").cast("bigint").as("cnt"))
@@ -210,7 +210,7 @@ class StoreCompactionSpec extends SparkSpec {
     Files.createDirectories(trash.getParent)
     Files.move(Paths.get(store, "bucket=1"), trash,
       StandardCopyOption.ATOMIC_MOVE)
-    StoreCompaction.repairStore(store)
+    StoreCompaction.repairStore(spark, store)
     assert(Files.exists(Paths.get(store, "bucket=1")),
       "repair must publish the root-committed staged partition")
     assert(!Files.exists(Paths.get(store, ".compact_stage")))
@@ -229,13 +229,13 @@ class StoreCompactionSpec extends SparkSpec {
         .write.mode("append").partitionBy("bucket").parquet(store)
     }
     val expect = summed(store)
-    val rep = StoreCompaction.rewriteStoreFused(spark, store, "bucket",
+    val rep = StoreCompaction.rewrite(spark, store,
       df => df.groupBy($"bucket", $"k")
         .agg(sum($"cnt").cast("bigint").as("cnt")),
-      targetBytes = 32 * 1024)
+      minFiles = 1, targetBytes = 32 * 1024)
     assert(rep.partitionsCompacted == 4)
     assert(summed(store) === expect, "summed reads must be invariant")
-    val counts = StoreCompaction.partitionFileCounts(store)
+    val counts = StoreCompaction.partitionFileCounts(spark, store)
     assert(counts("bucket=1") > 1,
       s"the skewed bucket must be SIZED into multiple files: $counts")
     assert(Seq("bucket=0", "bucket=2", "bucket=3")
@@ -248,12 +248,12 @@ class StoreCompactionSpec extends SparkSpec {
 
   test("maintenance triggers fire on file counts, listing-only") {
     val store = deltaStore(3) // 3 files per partition
-    assert(StoreCompaction.needsMaintenance(store, 3))
-    assert(!StoreCompaction.needsMaintenance(store, 4))
-    assert(!StoreCompaction.needsMaintenance(store + "/absent", 2))
+    assert(StoreCompaction.needsMaintenance(spark, store, 3))
+    assert(!StoreCompaction.needsMaintenance(spark, store, 4))
+    assert(!StoreCompaction.needsMaintenance(spark, store + "/absent", 2))
     val flat = buildFlatStore(4) // 4 root data files
-    assert(StoreCompaction.flatNeedsMaintenance(flat, 4))
-    assert(!StoreCompaction.flatNeedsMaintenance(flat, 5))
+    assert(StoreCompaction.flatNeedsMaintenance(spark, flat, 4))
+    assert(!StoreCompaction.flatNeedsMaintenance(spark, flat, 5))
   }
 
   // ----- flat (unpartitioned) store rewrite -----------------------
@@ -311,7 +311,7 @@ class StoreCompactionSpec extends SparkSpec {
     val expect1 = flatTotals(s1)
     collapse(spark.read.parquet(s1)).coalesce(1)
       .write.parquet(Paths.get(s1, ".flat_stage").toString)
-    StoreCompaction.repairFlatStore(s1)
+    StoreCompaction.repairFlatStore(spark, s1)
     assert(flatTotals(s1) === expect1, "repair must finish a committed swap")
     assert(!Files.exists(Paths.get(s1, ".flat_stage")) &&
       !Files.exists(Paths.get(s1, ".flat_trash")))
@@ -329,7 +329,7 @@ class StoreCompactionSpec extends SparkSpec {
       Files.move(Paths.get(s2, n), trash2.resolve(n),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    StoreCompaction.repairFlatStore(s2)
+    StoreCompaction.repairFlatStore(spark, s2)
     assert(flatTotals(s2) === expect2,
       "repair must promote the staged copy after a mid-swap crash")
 
@@ -339,7 +339,7 @@ class StoreCompactionSpec extends SparkSpec {
     val stage3 = Paths.get(s3, ".flat_stage")
     Files.createDirectories(stage3)
     Files.write(stage3.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
-    StoreCompaction.repairFlatStore(s3)
+    StoreCompaction.repairFlatStore(spark, s3)
     assert(!Files.exists(stage3) && flatTotals(s3) === expect3)
 
     // (d) trash with no stage (crash after stage cleanup): dropped
@@ -348,7 +348,7 @@ class StoreCompactionSpec extends SparkSpec {
     val trash4 = Paths.get(s4, ".flat_trash")
     Files.createDirectories(trash4)
     Files.write(trash4.resolve("stale.parquet"), Array[Byte](1))
-    StoreCompaction.repairFlatStore(s4)
+    StoreCompaction.repairFlatStore(spark, s4)
     assert(!Files.exists(trash4) && flatTotals(s4) === expect4)
   }
 }

@@ -311,7 +311,8 @@ class StreamingSpec extends SparkSpec {
     }
     // two promoted artifacts (one with top-level AND k=v files) and
     // one staged-only artifact
-    def commitAt(root: Path) = StagedCommit(root.toString, "_m_1", ".st_1",
+    def commitAt(root: Path) = StagedCommit(
+      graft.operators.StoreFiles.fs(spark, root.toString), root.toString, "_m_1", ".st_1",
       "b1", Seq(Artifact("delta", Some(root.resolve("live").toString)),
         Artifact("out", Some(root.resolve("out").toString)),
         Artifact("log", None)))
@@ -328,6 +329,7 @@ class StreamingSpec extends SparkSpec {
     def live(root: Path): Map[String, Seq[Byte]] = {
       val w = Files.walk(root)
       try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .filterNot(_.getFileName.toString.startsWith(".")) // .crc sidecars
         .map(p => root.relativize(p).toString)
         .filterNot(_.startsWith("."))
         .map(n => n -> Files.readAllBytes(root.resolve(n)).toSeq).toMap
@@ -420,7 +422,7 @@ class StreamingSpec extends SparkSpec {
     val batch3 = emb.filter($"vec_id" % 10 === 7)
       .select(($"vec_id" + 3000000L).as("vec_id"), $"embedding")
     val b3n = batch3.count()
-    val commit9 = StreamingJobs.ivfCommit(root, 9L)
+    val commit9 = StreamingJobs.ivfCommit(spark, root, 9L)
     commit9.stage(StreamingJobs.ivfWriters(cent, batch3))
     commit9.promote()
     assert(Files.exists(
@@ -485,7 +487,7 @@ class StreamingSpec extends SparkSpec {
     // file names, write the marker, and sweep
     val b1 = mkDocs(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".substr_staging_1")
-    val commit1 = StreamingJobs.substrCommit(store, out, 1L)
+    val commit1 = StreamingJobs.substrCommit(spark, store, out, 1L)
     commit1.stage(StreamingJobs.substrWriters(spark, store, b1, 8, 8,
       hashKeys = true))
     commit1.promote()
@@ -558,7 +560,7 @@ class StreamingSpec extends SparkSpec {
     // deterministic file names
     val b1 = df.filter($"doc_id" % 3 === 2 && $"doc_id" % 2 === 0)
     val staging1 = java.nio.file.Paths.get(store, ".ham_staging_1")
-    val commit1 = StreamingJobs.hammingCommit(store, out, 1L)
+    val commit1 = StreamingJobs.hammingCommit(spark, store, out, 1L)
     commit1.stage(StreamingJobs.hammingWriters(spark, store, b1,
       "doc_id", "ph", maxHamming = 3, maxBucket = 1000))
     commit1.promote()
@@ -633,7 +635,7 @@ class StreamingSpec extends SparkSpec {
     // crash window: staged + promoted, marker missing — replay
     // converges to the same deterministic file names
     val staging = java.nio.file.Paths.get(store, ".qstore_staging_1")
-    val commit1 = StreamingJobs.quantileCommit(store, 1L)
+    val commit1 = StreamingJobs.quantileCommit(spark, store, 1L)
     commit1.stage(StreamingJobs.quantileWriters(spark, store, b2,
       col("g"), col("x")))
     commit1.promote()
@@ -706,7 +708,7 @@ class StreamingSpec extends SparkSpec {
     // the half-promoted store
     val b1 = mkDocs(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".boiler_staging_1")
-    val commit1 = StreamingJobs.boilerplateCommit(store, out, 1L)
+    val commit1 = StreamingJobs.boilerplateCommit(spark, store, out, 1L)
     commit1.stage(StreamingJobs.boilerplateWriters(spark, store, b1, 1L,
       m, 8, 4))
     commit1.promote()
@@ -779,7 +781,7 @@ class StreamingSpec extends SparkSpec {
     // promoted meta would shift the stream and fail the guard)
     val b1 = mkCounts(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".pack_staging_1")
-    val commit1 = StreamingJobs.packCommit(store, out, 1L)
+    val commit1 = StreamingJobs.packCommit(spark, store, out, 1L)
     commit1.stage(StreamingJobs.packWriters(spark, store, b1, 64, 7))
     commit1.promote()
     assert(Files.exists(staging1.resolve("_SUCCESS")))
