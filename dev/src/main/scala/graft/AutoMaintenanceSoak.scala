@@ -61,14 +61,16 @@ object AutoMaintenanceSoak {
     val store = s"$base/substr_store"
     DedupSuite.exactSubstrBuildStore(docs(0L, nCorpus), "doc_id", "text",
       8, store, nBuckets = 16, hashKeys = true).count()
+    val out = s"$base/substr_out"
     val foldSec = (0 until nFolds).map { i =>
-      val batch = docs(nCorpus + i * batchN, batchN)
-      val (cut, t) = time {
-        val f = DedupSuite.exactSubstrFold(spark, store, batch,
-          "doc_id", "text", 8, nBuckets = 16, hashKeys = true,
+      val from = nCorpus + i * batchN
+      val (_, t) = time {
+        DedupSuite.exactSubstrFold(spark, store, out, docs(from, batchN),
+          i.toLong, "doc_id", "text", 8, nBuckets = 16, hashKeys = true,
           autoVacuumTrigger = trigger)
-        f.filter(col("n_removed") > 0).count()
       }
+      val cut = spark.read.parquet(out)
+        .filter(col("doc_id") >= from && col("n_removed") > 0).count()
       require(cut == batchN / 2,
         s"fold $i: exactly the boiler-carrying half must be cut, got $cut")
       t
@@ -90,9 +92,9 @@ object AutoMaintenanceSoak {
     val ctrlSec = (0 until nFolds).map { i =>
       val batch = docs(nCorpus + i * batchN, batchN)
       time {
-        DedupSuite.exactSubstrFold(spark, ctrl, batch,
-          "doc_id", "text", 8, nBuckets = 16, hashKeys = true,
-          autoVacuumTrigger = 0).count()
+        DedupSuite.exactSubstrFold(spark, ctrl, s"$base/ctrl_out", batch,
+          i.toLong, "doc_id", "text", 8, nBuckets = 16, hashKeys = true,
+          autoVacuumTrigger = 0)
       }._2
     }
     val ctrlFiles = StoreCompaction.partitionFileCounts(spark, ctrl)
@@ -130,7 +132,7 @@ object AutoMaintenanceSoak {
       Quantiles.foldQuantileStore(spark, qStore,
         spark.range(1000L).select(lit("g").as("g"),
           (col("id") + i * 1000L).cast("double").as("v")),
-        col("g"), col("v"), autoVacuumTrigger = 12)
+        i.toLong, col("g"), col("v"), autoVacuumTrigger = 12)
     }
     val qFiles = {
       val l = java.nio.file.Files.list(java.nio.file.Paths.get(qStore))

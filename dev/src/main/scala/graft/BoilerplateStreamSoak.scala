@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 /** Volume soak for the s16 RETROACTIVE streaming boilerplate ingest
   * (dev tool): 100 generations (override via args(0)) fold through
   * the committed-staging exactly-once protocol
-  * ([[graft.streaming.StreamingJobs.foldBoilerplateBatchIdempotent]]),
+  * ([[graft.operators.Boilerplate.fold]]),
   * with vacuums (sidecar refresh + counts/pairs compaction) run
   * MID-STREAM and idempotent replays injected every 25 generations.
   *
@@ -94,12 +94,12 @@ object BoilerplateStreamSoak {
         .withColumn("seq", lit(0L))
         .write.mode("append").parquet(outPath)
       (1 until gens).foreach { g =>
-        val applied = streaming.StreamingJobs.foldBoilerplateBatchIdempotent(
-          spark, store, outPath, gen(g), g.toLong, minDocs, 64, 64)
+        val applied = operators.Boilerplate.fold(spark, store, outPath,
+          gen(g), g.toLong, "doc_id", "text", minDocs)
         require(applied, s"generation $g must apply (fresh batch)")
         if (g % 25 == 0) {
-          val again = streaming.StreamingJobs.foldBoilerplateBatchIdempotent(
-            spark, store, outPath, gen(g), g.toLong, minDocs, 64, 64)
+          val again = operators.Boilerplate.fold(spark, store, outPath,
+            gen(g), g.toLong, "doc_id", "text", minDocs)
           require(!again, s"replayed generation $g must be skipped")
           replaysSkipped += 1
         }

@@ -62,19 +62,16 @@ object PhashStoreSoak {
     }
     println(f"corpus $nCorpus%d images: decode $tDecode%.2f s, build $tBuild%.2f s")
 
-    var accumulated = corpusHashes.sparkSession.emptyDataFrame
-    var first = true
+    val out = s"$base/pairs"
+    // the folds add to their output dir: start it empty
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
     val foldRows = (0 until nBatches).map { k =>
       val bh = hashesOf(batchIds(k)).localCheckpoint()
       val n = bh.count()
-      val (pairs, tFold) = time {
-        val p = DedupSuite.hammingIndexFold(spark, store, bh,
+      val (_, tFold) = time {
+        DedupSuite.hammingIndexFold(spark, store, out, bh, k.toLong,
           "doc_id", "ph", maxHamming = 3)
-        p.count() // materialized (the fold checkpoints it)
-        p
       }
-      accumulated = if (first) pairs else accumulated.unionByName(pairs)
-      first = false
       // mid-soak maintenance: one-job per-bucket file collapse —
       // row-invariant, so the equality gate below still holds and the
       // later folds' costs stay on the same line
@@ -87,36 +84,6 @@ object PhashStoreSoak {
       s"""{"fold":$k,"images":$n,"sec":$tFold}"""
     }
 
-    // STREAMED section: the same-size batches through the
-    // committed-staging exactly-once twin (foldHammingBatchIdempotent
-    // — stage delta+pairs, _SUCCESS, promote, marker) against a fresh
-    // store, quantifying the protocol's overhead over the crash-redo
-    // batch fold at the same scale: the difference is the staged
-    // artifact writes + promote, which is the stream pass's per-fold
-    // floor component (NOTES_r19 §4). Batches use fresh ids ABOVE the
-    // universe (variant structure preserved: ids ≡ 6,7 mod 8 pair
-    // with their family's corpus variants only if the family exists —
-    // these new families are batch-internal, which is fine: the
-    // measurement is fold COST, and the equality gate for streamed
-    // folds lives in StreamingSpec).
-    val sStore = s"$base/stream_index"
-    val sOut = s"$base/stream_out"
-    DedupSuite.hammingIndexBuild(corpusHashes, "doc_id", "ph", sStore,
-      bands = 4, nBuckets = 64)
-    val streamRows = (0 until 4).map { k =>
-      val ids = spark.range(nTotal + k.toLong * 50000L,
-        nTotal + (k + 1).toLong * 50000L).select(col("id").as("doc_id"))
-      val bh = hashesOf(ids).localCheckpoint()
-      val n = bh.count()
-      val (_, tFold) = time {
-        graft.streaming.StreamingJobs.foldHammingBatchIdempotent(
-          spark, sStore, sOut, bh, k.toLong, "doc_id", "ph",
-          maxHamming = 3)
-      }
-      println(f"stream fold $k%d: $n%d images, $tFold%6.2f s")
-      s"""{"fold":$k,"images":$n,"sec":$tFold}"""
-    }
-
     // exactness: accumulated fold pairs == full banded run over
     // corpus ∪ batches restricted to batch-touching pairs
     val allHashes = corpusHashes.unionByName(
@@ -125,14 +92,15 @@ object PhashStoreSoak {
         maxHamming = 3, bands = 4)
       .filter(col("id_a") % 8 >= 6 || col("id_b") % 8 >= 6)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    val acc = accumulated.select(col("id_a"), col("id_b"), col("hamming"))
+    val acc = spark.read.parquet(out)
+      .select(col("id_a"), col("id_b"), col("hamming"))
     val (nPairs, tGate) = time {
       require(acc.exceptAll(full).isEmpty && full.exceptAll(acc).isEmpty,
         "accumulated fold pairs must equal the full-run restriction")
       acc.count()
     }
     println(f"equality gate: $nPairs%d pairs, $tGate%.2f s")
-    println(s"""{"images":$nCorpus,"decode_sec":$tDecode,"build_sec":$tBuild,"folds":[${foldRows.mkString(",")}],"stream_folds":[${streamRows.mkString(",")}],"pairs":$nPairs,"gate_sec":$tGate}""")
+    println(s"""{"images":$nCorpus,"decode_sec":$tDecode,"build_sec":$tBuild,"folds":[${foldRows.mkString(",")}],"pairs":$nPairs,"gate_sec":$tGate}""")
     spark.stop()
   }
 }

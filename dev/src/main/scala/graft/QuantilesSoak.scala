@@ -96,10 +96,10 @@ object QuantilesSoak {
     }
     val (_, tFold) = time {
       Quantiles.foldQuantileStore(spark, store,
-        rows.filter(pmod(hash(col("x")), lit(3)) === 1),
+        rows.filter(pmod(hash(col("x")), lit(3)) === 1), 1L,
         col("g"), col("x"))
       Quantiles.foldQuantileStore(spark, store,
-        rows.filter(pmod(hash(col("x")), lit(3)) === 2),
+        rows.filter(pmod(hash(col("x")), lit(3)) === 2), 2L,
         col("g"), col("x"))
     }
     val (servedQ, tServe) = time {

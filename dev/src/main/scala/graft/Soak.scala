@@ -698,14 +698,13 @@ object BoilerplateSoak {
     val ((e0, nTickBuild), tBuild) = time {
       val out = operators.Boilerplate.buildStore(
           docs.filter(col("doc_id") < cut1), "doc_id", "text", m, store)
-        .withColumn("seq", lit(0)).persist()
+        .withColumn("seq", lit(0L)).persist()
       (out, out.filter(col("doc_id") % 20 === 0).count())
     }
-    val (e1, tFold1) = time {
-      val out = operators.Boilerplate.fold(spark, store,
-        spark.read.parquet(s"$staged/b1"),
-        "doc_id", "text", m).withColumn("seq", lit(1)).persist()
-      out.count(); out
+    val changelog = s"$store-out"
+    val (_, tFold1) = time {
+      operators.Boilerplate.fold(spark, store, changelog,
+        spark.read.parquet(s"$staged/b1"), 1L, "doc_id", "text", m)
     }
     // maintenance between folds (the production cadence): compacts
     // the counts/pairs deltas AND refreshes the near-threshold
@@ -716,12 +715,13 @@ object BoilerplateSoak {
     val (_, tVacuum) = time {
       operators.Boilerplate.vacuumStore(spark, store)
     }
-    val (e2, tFold2) = time {
-      val out = operators.Boilerplate.fold(spark, store,
-          spark.read.parquet(s"$staged/b2"), "doc_id", "text", m)
-        .withColumn("seq", lit(2)).persist()
-      out.count(); out
+    val (_, tFold2) = time {
+      operators.Boilerplate.fold(spark, store, changelog,
+        spark.read.parquet(s"$staged/b2"), 2L, "doc_id", "text", m)
     }
+    val folds = spark.read.parquet(changelog)
+    val (e1, e2) = (folds.filter(col("seq") === 1L),
+      folds.filter(col("seq") === 2L))
     // fold 1 re-emits exactly the build's ticker docs (ids < cut1,
     // emitted a second time under the crossed dictionary)
     val reemitted = e1.filter(col("doc_id") < cut1).count()
@@ -732,7 +732,7 @@ object BoilerplateSoak {
       "fold 2 must not re-emit (its ticker lines are already dictionary)")
 
     val w = Window.partitionBy(col("doc_id")).orderBy(col("seq").desc)
-    val latest = e0.unionByName(e1).unionByName(e2)
+    val latest = e0.unionByName(folds)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_id"), col("clean_text"), col("n_removed"))
     val (full, tFull) = time {
@@ -828,12 +828,11 @@ object PackSoak {
         col("n"), L, store, 1L << 20).persist()
       b.count(); b
     }
-    val (e1, tFold) = time {
-      val f = operators.Pack.foldSpans(spark, store, counts(cut, n),
-        "doc_id", col("n"), L, 1L << 20).persist()
-      f.count(); f
+    val (_, tFold) = time {
+      operators.Pack.foldSpans(spark, store, s"$store-out", counts(cut, n),
+        1L, "doc_id", col("n"), L, 1L << 20)
     }
-    val merged = e0.unionByName(e1)
+    val merged = e0.unionByName(spark.read.parquet(s"$store-out"))
     val foldDiff = merged.exceptAll(full).count() +
       full.exceptAll(merged).count()
     require(foldDiff == 0L, s"build ∪ fold != recompute: $foldDiff diffs")

@@ -59,6 +59,17 @@ object SubstrBloomSoak {
     // cuts something
     val sizes = Seq(10000L, 3000L, 1000L, 300L, 100L)
     var hw = nSub
+    val (bloomOut, ctrlOut) = (s"$base/out_bloom", s"$base/out_ctrl")
+    // folds add to their output dirs: start them empty
+    Seq(bloomOut, ctrlOut).foreach(d =>
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
+    def fold(st: String, out: String, batch: org.apache.spark.sql.DataFrame,
+             id: Long): Unit =
+      DedupSuite.exactSubstrFold(spark, st, out, batch, id, "doc_id", "text",
+        8, nBuckets = nb, hashKeys = true, autoVacuumTrigger = 0)
+    // the batch's cut docs, from a fold's accumulated output
+    def cut(out: String, from: Long): Long = spark.read.parquet(out)
+      .filter(col("doc_id") >= from && col("n_removed") > 0).count()
     // unreported warmup fold: populates BloomSide's driver-side memo
     // cache so the reported folds measure the steady state (cold
     // sidecar read is a once-per-store cost, not a per-fold one)
@@ -66,88 +77,33 @@ object SubstrBloomSoak {
       val warm = spark.range(10L).select((col("id") + hw).as("doc_id"),
         subDoc(col("id") + hw).as("text")).localCheckpoint()
       hw += 10
-      Seq(bloomStore, ctrlStore).foreach { st =>
-        DedupSuite.exactSubstrFold(spark, st, warm, "doc_id", "text", 8,
-          nBuckets = nb, hashKeys = true, autoVacuumTrigger = 0).count()
-      }
+      fold(bloomStore, bloomOut, warm, 0L)
+      fold(ctrlStore, ctrlOut, warm, 0L)
     }
-    val rows = sizes.map { n =>
+    val rows = sizes.zipWithIndex.map { case (n, i) =>
       val batch = spark.range(n).select(
         (col("id") + hw).as("doc_id"),
         when(col("id") % 2 === 0,
             concat(subDoc(col("id") + hw), lit(" "), lit(boiler)))
           .otherwise(subDoc(col("id") + hw)).as("text"))
         .localCheckpoint()
+      val from = hw
       hw += n
-      val (cutB, tFoldB) = time {
-        DedupSuite.exactSubstrFold(spark, bloomStore, batch,
-            "doc_id", "text", 8, nBuckets = nb, hashKeys = true,
-            autoVacuumTrigger = 0)
-          .filter(col("n_removed") > 0).count()
-      }
-      val (cutC, tFoldC) = time {
-        DedupSuite.exactSubstrFold(spark, ctrlStore, batch,
-            "doc_id", "text", 8, nBuckets = nb, hashKeys = true,
-            autoVacuumTrigger = 0)
-          .filter(col("n_removed") > 0).count()
-      }
+      val (_, tFoldB) = time(fold(bloomStore, bloomOut, batch, i + 1L))
+      val (_, tFoldC) = time(fold(ctrlStore, ctrlOut, batch, i + 1L))
+      val (cutB, cutC) = (cut(bloomOut, from), cut(ctrlOut, from))
       require(cutB == cutC && cutB == n / 2,
         s"bloom fold must match control: $cutB vs $cutC (expect ${n / 2})")
       println(f"batch $n%6d: bloom $tFoldB%6.2f s, control $tFoldC%6.2f s")
       s"""{"batch":$n,"bloom_sec":$tFoldB,"ctrl_sec":$tFoldC}"""
     }
-    // STREAMING section: the same decreasing-batch shape through the
-    // committed-staging twin (foldSubstrBatchIdempotent), bloom store
-    // vs control — the staged fold pays extra fixed write latencies
-    // (stage + promote + bloom delta), but the store-scan component
-    // should show the same drops-with-batch-size curve, because the
-    // fold inside is the same pruned computeSubstrFold
-    val sBloomStore = s"$base/stream_store_bloom"
-    val sCtrlStore = s"$base/stream_store_ctrl"
-    val sBloomOut = s"$base/stream_out_bloom"
-    val sCtrlOut = s"$base/stream_out_ctrl"
-    DedupSuite.exactSubstrBuildStore(subDocs, "doc_id", "text", 8,
-      sBloomStore, nBuckets = nb, hashKeys = true, bloomSide = true)
-    DedupSuite.exactSubstrBuildStore(subDocs, "doc_id", "text", 8,
-      sCtrlStore, nBuckets = nb, hashKeys = true)
-    // warmup batch per store (memo cache + JIT on the staging path)
-    locally {
-      val warm = spark.range(10L).select((col("id") + hw).as("doc_id"),
-        subDoc(col("id") + hw).as("text")).localCheckpoint()
-      hw += 10
-      graft.streaming.StreamingJobs.foldSubstrBatchIdempotent(spark,
-        sBloomStore, sBloomOut, warm, 0L, 8, nb, hashKeys = true)
-      graft.streaming.StreamingJobs.foldSubstrBatchIdempotent(spark,
-        sCtrlStore, sCtrlOut, warm, 0L, 8, nb, hashKeys = true)
-    }
-    val sRows = sizes.zipWithIndex.map { case (n, i) =>
-      val batch = spark.range(n).select(
-        (col("id") + hw).as("doc_id"),
-        when(col("id") % 2 === 0,
-            concat(subDoc(col("id") + hw), lit(" "), lit(boiler)))
-          .otherwise(subDoc(col("id") + hw)).as("text"))
-        .localCheckpoint()
-      hw += n
-      val (_, tB) = time {
-        graft.streaming.StreamingJobs.foldSubstrBatchIdempotent(spark,
-          sBloomStore, sBloomOut, batch, (i + 1).toLong, 8, nb,
-          hashKeys = true)
-      }
-      val (_, tC) = time {
-        graft.streaming.StreamingJobs.foldSubstrBatchIdempotent(spark,
-          sCtrlStore, sCtrlOut, batch, (i + 1).toLong, 8, nb,
-          hashKeys = true)
-      }
-      println(f"stream batch $n%6d: bloom $tB%6.2f s, control $tC%6.2f s")
-      s"""{"batch":$n,"bloom_sec":$tB,"ctrl_sec":$tC}"""
-    }
-    // the two streams' accumulated outputs must agree (same batches,
+    // the two stores' accumulated outputs must agree (same batches,
     // same corpus — pruning must not change a single emission)
-    val outB = spark.read.parquet(sBloomOut)
-    val outC = spark.read.parquet(sCtrlOut)
+    val outB = spark.read.parquet(bloomOut)
+    val outC = spark.read.parquet(ctrlOut)
     require(outB.exceptAll(outC).isEmpty && outC.exceptAll(outB).isEmpty,
-      "bloom-store streamed outputs must equal the control's")
-    println(s"""{"substr_docs":$nSub,"build_bloom_sec":$tBuildB,"build_ctrl_sec":$tBuildC,"folds":[${rows.mkString(",")}],"stream_folds":[${sRows.mkString(",")}]}""")
+      "bloom-store outputs must equal the control's")
+    println(s"""{"substr_docs":$nSub,"build_bloom_sec":$tBuildB,"build_ctrl_sec":$tBuildC,"folds":[${rows.mkString(",")}]}""")
     spark.stop()
   }
 }

@@ -78,11 +78,12 @@ object SubstrProfile {
       .localCheckpoint()
     drainJobs("batchprep")
 
+    // the fold adds to its output dir: start it empty
+    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(s"$base/substr_out"))
     val (subCut, tFold) = time {
-      val f = DedupSuite.exactSubstrFold(spark, subStore, subBatch,
-        "doc_id", "text", 8, nBuckets = subNB, hashKeys = true).persist()
-      spark.sparkContext.setJobDescription("caller: out count")
-      f.count()
+      DedupSuite.exactSubstrFold(spark, subStore, s"$base/substr_out",
+        subBatch, 1L, "doc_id", "text", 8, nBuckets = subNB, hashKeys = true)
+      val f = spark.read.parquet(s"$base/substr_out")
       spark.sparkContext.setJobDescription("caller: cut count")
       val c = f.filter(col("n_removed") > 0).count()
       spark.sparkContext.setJobDescription(null)

@@ -54,7 +54,7 @@ object CorpusGates {
     val maxBase = baseStats.getLong(1)
     val (cut1, cut2) = (maxBase / 2, maxBase * 9 / 10)
     val tmp = PerJvm.tempDir("c5_boiler")
-    val store = s"$tmp/state"
+    val (store, out) = (s"$tmp/state", s"$tmp/out")
     // 16 buckets: fixture-scale (the default 64 is a corpus-scale
     // layout; maintenance cost is per-partition jobs)
     // phase descriptions: `QueryProfile c5_boilerplate_ingest`
@@ -64,8 +64,8 @@ object CorpusGates {
     val e0 = desc("build") { Boilerplate.buildStore(
       all.filter(col("doc_id") <= cut1), "doc_id", "text", m, store,
       nBuckets = 16, nDocBuckets = 16) }
-    val e1 = desc("fold1") { Boilerplate.fold(s, store,
-      all.filter(col("doc_id") > cut1 && col("doc_id") <= cut2),
+    desc("fold1") { Boilerplate.fold(s, store, out,
+      all.filter(col("doc_id") > cut1 && col("doc_id") <= cut2), 1L,
       "doc_id", "text", m, nBuckets = 16, nDocBuckets = 16) }
     // maintenance mid-gate: vacuum (drop the fold-1 crossing's
     // dead rows, collapse count deltas) + compact — fold 2 then
@@ -79,13 +79,15 @@ object CorpusGates {
       () => { StoreCompaction.compactStore(s, s"$store/pairs"); () },
       () => { StoreCompaction.compactStore(s, s"$store/counts"); () },
       () => { StoreCompaction.compactStore(s, s"$store/docs"); () })) }
-    val e2 = desc("fold2") { Boilerplate.fold(s, store,
-      all.filter(col("doc_id") > cut2), "doc_id", "text", m,
+    desc("fold2") { Boilerplate.fold(s, store, out,
+      all.filter(col("doc_id") > cut2), 2L, "doc_id", "text", m,
       nBuckets = 16, nDocBuckets = 16) }
+    // the build's emission is seq 0, each fold's changelog carries its
+    // batch id; latest-seq-per-doc resolves them as s16 does. The
+    // changelog is read back with the build's schema (no inference job)
+    val seeded = e0.withColumn("seq", lit(0L))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("seq").desc)
-    e0.withColumn("seq", lit(0))
-      .unionByName(e1.withColumn("seq", lit(1)))
-      .unionByName(e2.withColumn("seq", lit(2)))
+    seeded.unionByName(s.read.schema(seeded.schema).parquet(out))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_id"), col("clean_text"), col("n_removed"))
   },

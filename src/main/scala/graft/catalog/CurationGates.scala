@@ -410,14 +410,17 @@ object CurationGates {
         .head().getLong(0)
       val (c1, c2) = (maxId / 2, maxId * 9 / 10)
       val tmp = PerJvm.tempDir("q98_pack")
-      val store = s"$tmp/state"
-      Pack.buildSpanStore(docs.filter(col("doc_id") <= c1),
+      val (store, out) = (s"$tmp/state", s"$tmp/out")
+      val spans0 = Pack.buildSpanStore(docs.filter(col("doc_id") <= c1),
           "doc_id", nTok, 128, store, 100)
-        .unionByName(Pack.foldSpans(s, store,
-          docs.filter(col("doc_id") > c1 && col("doc_id") <= c2),
-          "doc_id", nTok, 128, 100))
-        .unionByName(Pack.foldSpans(s, store,
-          docs.filter(col("doc_id") > c2), "doc_id", nTok, 128, 100))
+      Pack.foldSpans(s, store, out,
+        docs.filter(col("doc_id") > c1 && col("doc_id") <= c2), 1L,
+        "doc_id", nTok, 128, 100)
+      Pack.foldSpans(s, store, out, docs.filter(col("doc_id") > c2), 2L,
+        "doc_id", nTok, 128, 100)
+      // the folds' spans, read back with the build's schema (no
+      // inference job)
+      spans0.unionByName(s.read.schema(spans0.schema).parquet(out))
     },
       // q98 folds monotone batches through the span store (state =
       // two high-water numbers); spans are a pure function of order,
@@ -1287,9 +1290,9 @@ object CurationGates {
         e.filter(col("event_id") % 3 === 0), col("event_type"),
         col("xl"), store, cellBits = 8)
       Quantiles.foldQuantileStore(s, store,
-        e.filter(col("event_id") % 3 === 1), col("event_type"), col("xl"))
+        e.filter(col("event_id") % 3 === 1), 1L, col("event_type"), col("xl"))
       Quantiles.foldQuantileStore(s, store,
-        e.filter(col("event_id") % 3 === 2), col("event_type"), col("xl"))
+        e.filter(col("event_id") % 3 === 2), 2L, col("event_type"), col("xl"))
       // maintenance: collapse the build+fold delta files/rows into
       // one summed file set — the serve below then PROVES the
       // vacuumed store ranks identically (oracle-exact)

@@ -14,6 +14,10 @@ import Fixtures._
   * bench-only x1 twin. */
 object DedupGates {
 
+  /** The d30/d31 folds' emitted pair columns, declared so the read-back
+    * infers nothing. */
+  private val FoldPairsSchema = "id_a BIGINT, id_b BIGINT"
+
   /** The d5/d7 corpus: doc_id < 200 (fixed size at every sf) plus
     * near-copies of every 7th doc at id+1e6. */
   private def corpusD5(s: SparkSession, dir: String): DataFrame = {
@@ -811,8 +815,8 @@ object DedupGates {
       // its edge frames several times (count probe + collect / the
       // fold's node and edge derivations), and without the
       // checkpoint each evaluation would re-synthesize and re-decode
-      // every image. The fold's pairs come back already checkpointed
-      // (hammingIndexFold), stable against the store's own append.
+      // every image. The fold writes its new pairs beside the store;
+      // they are read back with a declared schema (no inference job).
       val tmp = PerJvm.tempDir("d30_phash")
       val store = s"$tmp/index"
       val allHashes = Multimodal.bmpDHashes(
@@ -840,9 +844,9 @@ object DedupGates {
             .select(col("id_a"), col("id_b")).localCheckpoint()
           labels0 = Dedup.connectedComponents(basePairs)
         }))
-      val newPairs = DedupSuite.hammingIndexFold(s, store,
-        batchHashes, "doc_id", "ph", maxHamming = 3)
-        .select(col("id_a"), col("id_b"))
+      DedupSuite.hammingIndexFold(s, store, s"$tmp/pairs", batchHashes, 1L,
+        "doc_id", "ph", maxHamming = 3)
+      val newPairs = s.read.schema(FoldPairsSchema).parquet(s"$tmp/pairs")
       val labels = Dedup.foldComponents(labels0, newPairs)
       idsDf // ids only — never re-synthesizes pixels for the output
         .join(labels, col("doc_id") === col("id"), "left")
@@ -891,9 +895,9 @@ object DedupGates {
             .select(col("id_a"), col("id_b")).localCheckpoint()
           labels0 = Dedup.connectedComponents(basePairs)
         }))
-      val newPairs = DedupSuite.hammingIndexFold(s, store,
-        batchHashes, "doc_id", "ph", maxHamming = 3)
-        .select(col("id_a"), col("id_b"))
+      DedupSuite.hammingIndexFold(s, store, s"$tmp/pairs", batchHashes, 1L,
+        "doc_id", "ph", maxHamming = 3)
+      val newPairs = s.read.schema(FoldPairsSchema).parquet(s"$tmp/pairs")
       val labels = Dedup.foldComponents(labels0, newPairs)
       idsDf
         .join(labels, col("doc_id") === col("id"), "left")
@@ -994,11 +998,11 @@ object DedupGates {
       val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
       val (t1, t2) = (maxId / 3, 2 * maxId / 3)
       val tmp = PerJvm.tempDir("d26_substr")
-      val store = s"$tmp/state"
+      val (store, out) = (s"$tmp/state", s"$tmp/out")
       val out1 = DedupSuite.exactSubstrBuildStore(
         docs.filter(col("doc_id") < t1), "doc_id", "text", 8, store)
-      val out2 = DedupSuite.exactSubstrFold(s, store,
-        docs.filter(col("doc_id") >= t1 && col("doc_id") < t2),
+      DedupSuite.exactSubstrFold(s, store, out,
+        docs.filter(col("doc_id") >= t1 && col("doc_id") < t2), 1L,
         "doc_id", "text", 8)
       // maintenance between folds (the q91/s13 discipline): collapse
       // each key's build+delta rows to its merged row, then squash
@@ -1007,9 +1011,11 @@ object DedupGates {
       // (post-maintenance output still oracle-exact)
       DedupSuite.vacuumSubstrStore(s, store)
       graft.operators.StoreCompaction.compactStore(s, store)
-      val out3 = DedupSuite.exactSubstrFold(s, store,
-        docs.filter(col("doc_id") >= t2), "doc_id", "text", 8)
-      out1.unionByName(out2).unionByName(out3)
+      DedupSuite.exactSubstrFold(s, store, out,
+        docs.filter(col("doc_id") >= t2), 2L, "doc_id", "text", 8)
+      // both folds' emissions, read back with the build's schema (no
+      // inference job)
+      out1.unionByName(s.read.schema(out1.schema).parquet(out))
     },
       // d26 folds the d25 corpus through the persisted window-key
       // store in monotonic batches; per-batch emission ∪-equals the

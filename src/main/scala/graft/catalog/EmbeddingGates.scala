@@ -15,7 +15,7 @@ object EmbeddingGates {
     * split (an inline build left one full index copy per invocation
     * and re-paid the build on every bench run). Layout under the root:
     * `index/` = the centroid-partitioned inverted lists over corpus ∪
-    * clone batch (appendToIvfIndex against FROZEN centroids — the
+    * clone batch (foldIvfIndex against FROZEN centroids — the
     * corpus is never re-read on ingest), `centroids/` = the frozen
     * centroid set (float arrays roundtrip parquet bit-exactly). The
     * gated query serves from this persisted state, which is exactly
@@ -27,7 +27,7 @@ object EmbeddingGates {
         .select(cloneId(col("vec_id")).as("vec_id"), col("embedding"))
       val cent = Similarity.buildIvfIndex(
         emb, s"$tmp/index", "vec_id", "embedding", 16)
-      Similarity.appendToIvfIndex(batch, s"$tmp/index", cent,
+      Similarity.foldIvfIndex(s, s"$tmp/index", batch, 1L, cent,
         "vec_id", "embedding")
       cent.write.mode("overwrite").parquet(s"$tmp/centroids")
     }

@@ -267,18 +267,22 @@ object TextGates {
     // occurrences a vocab prefix explains — the BPE/vocab-size
     // planning curve). Scale: the corpus-sized work is the hash
     // groupBy; top-K is TakeOrderedAndProject (no global sort of the
-    // dictionary), and the rank/cumsum window runs over K rows only.
+    // dictionary), and rank and cumsum come from ONE row holding the K
+    // kept rows in order — no window without a partition.
     Gate("t12_vocab", (s, dir) => {
       val counts = Tables.documents(s, dir)
         .select(explode(tokens(col("text"))).as("token"))
         .groupBy(col("token")).agg(count(lit(1)).cast("bigint").as("n"))
       val total = counts.agg(sum(col("n")).cast("bigint").as("total"))
-      val ord = Window.orderBy(col("n").desc, col("token").asc)
+      // sorted by (-n, token): count desc, then token asc
       counts.orderBy(col("n").desc, col("token").asc).limit(20)
-        .withColumn("rank", row_number().over(ord).cast("int"))
-        .withColumn("cum_n", sum(col("n"))
-          .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("bigint"))
+        .agg(sort_array(collect_list(struct((-col("n")).as("key"),
+          col("token"), col("n")))).as("top"))
+        .select(col("top"), posexplode(col("top")).as(Seq("i", "t")))
+        .select(col("t.token").as("token"), col("t.n").as("n"),
+          (col("i") + 1).cast("int").as("rank"),
+          aggregate(slice(col("top"), lit(1), col("i") + 1), lit(0L),
+            (acc, t) => acc + t("n")).cast("bigint").as("cum_n"))
         .crossJoin(broadcast(total))
         .select(col("token"), col("n"), col("rank"), col("cum_n"),
           (col("cum_n").cast("double") / col("total").cast("double"))

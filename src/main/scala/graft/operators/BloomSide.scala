@@ -27,18 +27,17 @@ import org.apache.spark.sql.functions._
   * Coverage contract (what makes a skip sound): every key in a
   * bucket's store files is covered by some bloom row in that bucket's
   * sidecar dir. Maintainers uphold it by construction — the build
-  * writes one pass over the full store, every subsequent fold appends
-  * a row per touched bucket (riding the fold's existing concurrent
-  * fan-out), and the vacuum REBUILDS the sidecar from the collapsed
+  * writes one pass over the full store, every subsequent fold stages
+  * a row per touched bucket beside its delta and promotes both in one
+  * staged commit, and the vacuum REBUILDS the sidecar from the collapsed
   * store under an atomic two-rename swap whose only crash residue is
   * an ABSENT sidecar. Readers are conservative at every hole: store
   * without a `_bloomside` dir → no pruning; bucket dir missing or
   * empty → that bucket is scanned; sidecar bytes over the read cap →
-  * no pruning. A crashed fold can leave delta files without their
-  * bloom row — the same uncommitted-delta window the store's
-  * single-maintainer crash-redo contract already mandates replaying
-  * before any further fold or serve, so a committed store never has
-  * uncovered keys.
+  * no pruning. A fold crashed mid-promote can leave delta files
+  * without their bloom row, but it is not marked applied, and a
+  * single maintainer replays it before any further fold or serve, so
+  * a committed store never has uncovered keys.
   *
   * 100 TB: bloom bytes ≈ 1.2 B/key (fpp 0.01) — ~80× less than the
   * 16-byte digest column the fold would otherwise scan; the driver
@@ -92,25 +91,16 @@ object BloomSide {
   private def root(path: String): Path = new Path(path, DirName)
 
   /** Whether `path` maintains a bloom sidecar (listing-only). Folds
-    * key their append on this so a store built without the sidecar
-    * never gains partial coverage. */
+    * key their bloom artifact on this so a store built without the
+    * sidecar never gains partial coverage. */
   def maintained(spark: SparkSession, path: String): Boolean =
     StoreFiles.fs(spark, path).isDirectory(root(path))
 
-  /** Append one bloom row per bucket of `keyed` (a fold's delta,
-    * already bucket-clustered — one small job the fold runs
-    * concurrently with its delta append). */
-  def appendDelta(keyed: DataFrame, path: String, bucketCol: String,
-                  keyCol: String): Unit =
-    bloomRows(keyed, bucketCol, keyCol)
-      .write.mode("append").partitionBy("bucket")
-      .parquet(root(path).toString)
-
-  /** Stage one fold's bloom rows under an arbitrary dir (the live
-    * sidecar's layout) WITHOUT touching the store — the bloom artifact
-    * of the streaming substr fold's staged commit
-    * ([[graft.streaming.StreamingJobs.substrCommit]]), which promotes
-    * it into the live sidecar. */
+  /** Stage one bloom row per bucket of `keyed` (a fold's delta, already
+    * bucket-clustered) under an arbitrary dir in the live sidecar's
+    * layout, WITHOUT touching the store — the bloom artifact of the
+    * substr fold's staged commit ([[DedupSuite.substrCommit]]), which
+    * promotes it into the live sidecar. */
   def stageDelta(keyed: DataFrame, stagedDir: String, bucketCol: String,
                  keyCol: String): Unit =
     bloomRows(keyed, bucketCol, keyCol)

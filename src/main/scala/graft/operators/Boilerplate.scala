@@ -183,9 +183,9 @@ object Boilerplate {
       eps
     } else math.max(0L, math.min(4L, minDocs - 1))
 
-  /** The boilerplate store's meta row shape — shared with the
-    * streaming twin's staged meta artifact (identical schema; promote
-    * copies its files into the live meta dir). */
+  /** The boilerplate store's meta row shape — the build writes it and
+    * each fold stages it (identical schema; promote copies the staged
+    * file into the live meta dir). */
   private def boilerMetaFields(maxDoc: Long, minDocs: Long, nBuckets: Int,
                                nDocBuckets: Int,
                                eps: Long): Seq[(String, Any)] =
@@ -370,9 +370,9 @@ object Boilerplate {
     spark.read.parquet(s"$path/counts").filter(col("fseq") > asOf)
 
   /** One fold's full computation against the LIVE store WITHOUT
-    * mutating it — factored out of [[fold]] so the streaming twin can
-    * stage every artifact under the committed-staging exactly-once
-    * protocol before anything touches the live layout.
+    * mutating it — [[foldWriters]] stages every artifact from it under
+    * the committed-staging exactly-once protocol before anything
+    * touches the live layout.
     *
     * Crossing detection is SIDECAR-FIRST: candidates join the
     * near-threshold sidecar (tiny, batch-semi-filtered) plus the
@@ -384,27 +384,6 @@ object Boilerplate {
     * lines. The full corpus-distinct-lines scan the pre-sidecar fold
     * paid EVERY fold is now paid only by escalations and by the
     * vacuum's refresh. */
-  /** The fold's one batch materialization: the batch feeds FOUR
-    * consumers (min/max guard, line pairs, the doc-store append, the
-    * changelog clean) — checkpoint it once so a batch defined as a
-    * filter over a large source is scanned once, not four times
-    * (batch-sized memory, the fold's working set either way). Returns
-    * the checkpoint and its (min, max) id row; [[fold]] calls this
-    * FIRST (the max is its replay key) and passes the result through,
-    * so the batch [[fold]] path never scans the batch twice. */
-  private[graft] def prepBatch(batch: DataFrame, idCol: String,
-                               textCol: String): (DataFrame, org.apache.spark.sql.Row) = {
-    // the batch min/max RIDES the checkpoint job as observed metrics
-    // — one fixed job latency per fold saved vs a separate agg
-    val obs = org.apache.spark.sql.Observation()
-    val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .observe(obs, min(col("doc_id").cast("long")).as("mn"),
-        max(col("doc_id").cast("long")).as("mx"))
-      .localCheckpoint()
-    val m = obs.get
-    (b, org.apache.spark.sql.Row(m("mn"), m("mx")))
-  }
-
   /** A fold step's [[graft.Phase]] (the c5 profile's phases). */
   private def desc[A](spark: SparkSession, s: String)(body: => A): A =
     graft.Phase(spark, s"boiler-fold: $s")(body)
@@ -413,30 +392,20 @@ object Boilerplate {
                                  batch: DataFrame, idCol: String,
                                  textCol: String, minDocs: Long,
                                  nBuckets: Int,
-                                 nDocBuckets: Int,
-                                 prepped: Option[(DataFrame, org.apache.spark.sql.Row)] = None): FoldArtifacts = {
+                                 nDocBuckets: Int): FoldArtifacts = {
     val (prevMax, eps) = readMeta(spark, path, minDocs, nBuckets, nDocBuckets)
-    // Batch materialization strategy (one serialized wave saved on the
-    // streaming path — the s16 drain chain's unit of cost):
-    //  - prepped = Some (the batch [[fold]]): `b` is the prepBatch
-    //    checkpoint (fold needed the batch max BEFORE staging — it
-    //    names the staging dir), min/max already observed.
-    //  - prepped = None (the streaming twin, whose staging is named by
-    //    the micro-batch id): NO separate batch checkpoint — the
-    //    min/max observation RIDES the bpairs checkpoint job below (an
-    //    observe node under the explode sees every batch row, null
-    //    text included), and the docsApp/changelog consumers re-scan
-    //    the file-backed micro-batch inside their own CONCURRENT
-    //    staged writes: batch-bounded work in a parallel wave, bought
-    //    with a whole serialized fixed job latency per fold.
-    val fusedObs =
-      if (prepped.isEmpty) Some(org.apache.spark.sql.Observation()) else None
-    val b = prepped.map(_._1).getOrElse(
-      batch.select(col(idCol).as("doc_id"), col(textCol).as("text")))
-    val bForPairs = fusedObs.map(o =>
-      batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-        .observe(o, min(col("doc_id").cast("long")).as("mn"),
-          max(col("doc_id").cast("long")).as("mx"))).getOrElse(b)
+    // Batch materialization: NO separate batch checkpoint — the
+    // min/max observation RIDES the bpairs checkpoint job below (an
+    // observe node under the explode sees every batch row, null text
+    // included), and the docsApp/changelog consumers re-scan the batch
+    // inside their own CONCURRENT staged writes: batch-bounded work in
+    // a parallel wave, bought with a whole serialized fixed job
+    // latency per fold.
+    val fusedObs = org.apache.spark.sql.Observation()
+    val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val bForPairs = b.observe(fusedObs,
+      min(col("doc_id").cast("long")).as("mn"),
+      max(col("doc_id").cast("long")).as("mx"))
     // snapshot the dictionary BEFORE any mutation (eager — the
     // returned frames must not re-list the dict path after the
     // crossed-lines append below). Independent of the batch's line
@@ -463,11 +432,8 @@ object Boilerplate {
           .distinct()
           .localCheckpoint() } // feeds candidate agg + delta write
     ))
-    val mm = prepped.map(_._2).getOrElse {
-      // the bpairs checkpoint job materialized the observed node
-      val m = fusedObs.get.get
-      org.apache.spark.sql.Row(m("mn"), m("mx"))
-    }
+    // the bpairs checkpoint job materialized the observed node
+    val mm = org.apache.spark.sql.Row(fusedObs.get("mn"), fusedObs.get("mx"))
     require(!mm.isNullAt(0) && mm.getLong(0) > prevMax,
       s"monotonic-ingest contract: batch min doc id " +
         s"${if (mm.isNullAt(0)) "(empty)" else mm.getLong(0)} must exceed " +
@@ -663,11 +629,12 @@ object Boilerplate {
     *     by the new sidecar, so post-refresh slices skip it).
     *  3. Pairs: drop dead lines.
     *
-    * Also sweeps the `_boiler_fold_<id>` replay markers of cleanly
-    * completed folds (they otherwise accumulate one file per fold
-    * forever) — safe because the monotonic-ingest guard already
-    * rejects a replay of any fold at or below the meta high-water,
-    * which every marker is. A marker whose committed staging
+    * Also sweeps the `_boiler_batch_<id>` replay markers of cleanly
+    * completed folds but the newest (they otherwise accumulate one
+    * file per fold forever) — safe because the monotonic-ingest guard
+    * already rejects a replay of any fold at or below the meta
+    * high-water, which every marker is; the newest stays so that a
+    * replay of the last batch still skips. A fold whose staging
     * SURVIVES is a crashed fold awaiting replay; vacuum REFUSES to
     * run then, because its rewrites collapse the very delta files
     * that replay would re-promote (a silent double-apply) — replay
@@ -679,9 +646,8 @@ object Boilerplate {
     val spark = StoreCompaction.quietSession(spark0)
     val fs = StoreFiles.fs(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
-    // the batch fold's staging AND the streaming twin's (s16) — a
-    // replay of either re-promotes delta files a vacuum would have
-    // collapsed into the store already
+    // a replay of a crashed fold re-promotes delta files a vacuum
+    // would have collapsed into the store already
     val pendingStaging = foldStagings(spark, path)
     require(pendingStaging.isEmpty,
       s"crashed fold staging ${pendingStaging.headOption.getOrElse("")} " +
@@ -734,61 +700,44 @@ object Boilerplate {
         ()
       }))
     // replay markers of cleanly completed folds (no staging survives —
-    // checked above): the monotonic guard subsumes them
+    // checked above): the monotonic guard subsumes all but the newest,
+    // which a replay of the last batch (a stream's crash between the
+    // fold and its checkpoint commit) must still find to skip
     StoreFiles.list(fs, root).map(_.getPath)
       .filter(_.getName.startsWith(FoldNames.marker))
+      .sortBy(_.getName.stripPrefix(FoldNames.marker).toLong).dropRight(1)
       .foreach(StoreFiles.delete(fs, _))
   }
 
-  /** The batch [[fold]]'s on-disk names; keyed by the batch's doc
-    * high-water (monotone, so unique per fold). */
-  private[graft] val FoldNames =
-    StoreFiles.CommitNames("_boiler_fold_", ".boiler_fold_staging_", "bfold")
-  /** The streaming twin's (s16) names, keyed by micro-batch id. */
-  private[graft] val StreamNames =
+  private val FoldNames =
     StoreFiles.CommitNames("_boiler_batch_", ".boiler_staging_", "bbatch")
 
-  /** The surviving fold stagings (batch or streaming) under `path`. */
+  /** The surviving fold stagings under `path`. */
   private def foldStagings(spark: SparkSession, path: String): Seq[String] =
     StoreFiles.list(StoreFiles.fs(spark, path), new org.apache.hadoop.fs.Path(path))
-      .map(_.getPath.getName)
-      .filter(n => Seq(FoldNames, StreamNames).exists(c => n.startsWith(c.staging)))
+      .map(_.getPath.getName).filter(_.startsWith(FoldNames.staging))
 
   /** One fold's declaration: the pair/counts/docs deltas, the
-    * dictionary append, the `_meta` high-water row, and the changelog
-    * — promoted into `outPath`, or, with `outPath` None, staged only
-    * (the batch [[fold]] returns it instead). */
-  private[graft] def foldCommit(spark: SparkSession,
-                                names: StoreFiles.CommitNames, path: String,
-                                id: Long,
-                                outPath: Option[String]): StoreFiles.StagedCommit =
-    names.at(spark, path, id, Seq("pairs", "counts", "docs", "dict")
-      .map(sub => StoreFiles.Artifact(sub, Some(s"$path/$sub"))) ++ Seq(
-        StoreFiles.Artifact("meta", Some(s"${path}_meta")),
+    * dictionary append, the `_meta` high-water row, and the changelog,
+    * promoted into `outPath`. */
+  private[graft] def foldCommit(spark: SparkSession, path: String,
+                                outPath: String,
+                                batchId: Long): StoreFiles.StagedCommit =
+    FoldNames.at(spark, path, batchId, Seq("pairs", "counts", "docs", "dict")
+      .map(sub => StoreFiles.Artifact(sub, s"$path/$sub")) ++ Seq(
+        StoreFiles.Artifact("meta", StoreMeta.metaPath(path)),
         StoreFiles.Artifact("out", outPath)))
 
   /** One fold's writers, computed against the LIVE store
     * ([[computeFold]] reads nothing from the store after it returns),
-    * the changelog stamped `seq`. With `changelogTo`, the changelog
-    * writer checkpoints the changelog first and hands the checkpoint
-    * over: the batch [[fold]]'s caller MATERIALIZES the returned
-    * changelog later (the gate's resolution), and without the
-    * checkpoint that second execution would re-run the whole
-    * cleanWithDict chain (line explode + digest mark join + per-doc
-    * reassembly) SERIALIZED behind the fold. Inside the staged-write
-    * wave it runs on cores the other writes don't saturate, and the
-    * staged copy is written from it. The checkpoint derives only from
-    * checkpointed inputs, so it stays valid after the staging is
-    * swept. */
+    * the changelog stamped `seq`. */
   private[graft] def foldWriters(spark: SparkSession, path: String,
                                  batch: DataFrame, idCol: String,
                                  textCol: String, minDocs: Long,
                                  nBuckets: Int, nDocBuckets: Int,
-                                 seq: Long,
-                                 prepped: Option[(DataFrame, org.apache.spark.sql.Row)] = None,
-                                 changelogTo: Option[DataFrame => Unit] = None): Map[String, String => Unit] = {
+                                 seq: Long): Map[String, String => Unit] = {
     val a = computeFold(spark, path, batch, idCol, textCol, minDocs,
-      nBuckets, nDocBuckets, prepped)
+      nBuckets, nDocBuckets)
     Map(
       // pairs/counts deltas arrive CLUSTERED by bucket (the fold's one
       // bucket-keyed exchange) — partitionBy writes directly
@@ -803,95 +752,53 @@ object Boilerplate {
         a.dictApp.write.parquet(dir) }),
       "meta" -> (dir => StoreMeta.writeFile(spark, dir,
         boilerMetaFields(a.newMax, minDocs, nBuckets, nDocBuckets, a.eps))),
-      "out" -> (dir => {
-        val changelog = changelogTo.fold(a.changelog) { to =>
-          val cp = desc(spark, "changelog checkpoint") {
-            a.changelog.localCheckpoint() }
-          to(cp)
-          cp
-        }
-        desc(spark, "staged changelog write") {
-          changelog.withColumn("seq", lit(seq)).write.parquet(dir) }
-      }))
+      "out" -> (dir => desc(spark, "staged changelog write") {
+        a.changelog.withColumn("seq", lit(seq)).write.parquet(dir) }))
   }
 
-  /** Fold a monotonic document batch into a [[buildStore]] layout and
-    * return the changelog emission: the batch cleaned under the
-    * updated dictionary, PLUS re-emissions of every stored document a
-    * threshold crossing invalidated. Latest emission per doc across
-    * build + folds equals the full [[removeCommonLines]] recompute
-    * bit-exactly — the c5 gate. The corpus text is never rescanned:
-    * crossing detection reads the sidecar + the post-refresh counts
-    * slice (full counts only for rare escalations), the wide pair
-    * store is read bucket-pruned for the crossed lines only
-    * (< minDocs rows per line by the store invariant), and the doc
-    * store only for the bounded invalidated-id set.
-    *
-    * The fold publishes its store artifacts exactly once through
-    * [[foldCommit]] under [[FoldNames]]. A fold whose marker exists
-    * was FULLY applied; if its committed staging survives, the crash
-    * hit the window between the marker and the sweep — the staged
-    * changelog was never delivered, so the replay returns it (then
-    * sweeps) instead of stranding the only copy behind an error. With
-    * no surviving staging the changelog WAS returned, and replaying is
-    * the same caller error the monotonic-ingest guard rejects — as
-    * loud. */
-  def fold(spark: SparkSession, path: String, batch: DataFrame,
-           idCol: String, textCol: String, minDocs: Long,
-           nBuckets: Int = 64, nDocBuckets: Int = 64,
-           autoVacuumTrigger: Int = 24): DataFrame = {
+  /** Fold a monotonic document batch into a [[buildStore]] layout,
+    * exactly once per `batchId` through [[foldCommit]] (protocol in
+    * [[StoreFiles]]), adding its changelog to `outPath`: the batch
+    * cleaned under the updated dictionary, PLUS re-emissions of every
+    * stored document a threshold crossing invalidated, each row
+    * stamped `seq = batchId`. Boilerplate cleaning is RETROACTIVE, so
+    * the accumulated changelog overlaps and readers resolve
+    * latest-seq-per-doc: over build + folds that resolution equals the
+    * full [[removeCommonLines]] recompute bit-exactly — the c5 and s16
+    * gates. The corpus text is never rescanned: crossing detection
+    * reads the sidecar + the post-refresh counts slice (full counts
+    * only for rare escalations), the wide pair store is read
+    * bucket-pruned for the crossed lines only (< minDocs rows per line
+    * by the store invariant), and the doc store only for the bounded
+    * invalidated-id set. Returns whether the batch was applied (false
+    * = replay skip). */
+  def fold(spark: SparkSession, path: String, outPath: String,
+           batch: DataFrame, batchId: Long, idCol: String, textCol: String,
+           minDocs: Long, nBuckets: Int = 64, nDocBuckets: Int = 64,
+           autoVacuumTrigger: Int = 24): Boolean = {
     // the fold's ~15 tiny actions run on an AQE-off session clone:
     // under AQE each action's 1-3 exchanges schedule as separate
     // stage-jobs (~40 jobs per fold measured — pure fixed-latency tax
     // at ingest-batch scale, where runtime re-planning has nothing to
     // buy). Clone-local, so the caller's session conf is untouched.
     val qs = StoreCompaction.quietSession(spark)
-    val qBatch = org.apache.spark.sql.GraftColumnBridge
-      .onSession(qs, batch)
-    // the replay key (batch max) RIDES prepBatch's checkpoint as an
-    // observed metric — one batch scan and one job, where a separate
-    // raw-frame agg plus prepBatch paid two of each. The trade: a
-    // crash-replay that merely re-serves the staged changelog now
-    // materializes the batch it won't use — a rare-recovery cost,
-    // bought back on every normal fold.
-    val prep @ (_, mm) = prepBatch(qBatch, idCol, textCol)
-    require(!mm.isNullAt(1),
-      "monotonic-ingest contract: batch is empty")
-    val foldId = mm.getLong(1)
-    val commit = foldCommit(qs, FoldNames, path, foldId, None)
-    // a crash-replay has no in-memory frame, so it secures the frozen
-    // staged copy BEFORE the staging is swept
-    def stagedChangelog(): DataFrame =
-      qs.read.parquet(commit.stagedDir("out"))
-        .select(col(idCol), col("clean_text"), col("n_removed"))
-        .localCheckpoint()
-    if (commit.applied) {
-      require(commit.committed,
-        s"fold $foldId was already applied (its changelog was returned " +
-          "then) — replaying a completed fold violates the " +
-          "monotonic-ingest contract")
-      val changelog = stagedChangelog()
-      commit.sweep()
-      changelog
-    } else {
-      var changelog = if (commit.committed) stagedChangelog() else null
-      commit.applyIdempotent(foldWriters(qs, path, qBatch, idCol, textCol,
-        minDocs, nBuckets, nDocBuckets, seq = foldId, prepped = Some(prep),
-        changelogTo = Some((cp: DataFrame) => changelog = cp)))
-      // self-scheduled maintenance: each fold appends one delta file
-      // set per touched counts bucket, so bucket file count IS the
-      // uncollapsed-fold count. When it reaches the trigger
-      // (listing-only check, no job) run the vacuum — fold cost stays
-      // flat over unbounded folds with no operator-remembered vacuum
-      // call. Skipped (not failed) if another fold's crashed staging
-      // survives: vacuuming then would double-apply its replay, and
-      // maintenance deferral is always safe. ≤ 0 disables.
-      if (autoVacuumTrigger > 0 &&
-          StoreCompaction.needsMaintenance(qs, s"$path/counts",
-            autoVacuumTrigger) &&
-          foldStagings(qs, path).isEmpty)
-        vacuumStore(spark, path)
-      changelog
-    }
+    val applied = foldCommit(qs, path, outPath, batchId).applyIdempotent(
+      foldWriters(qs, path, org.apache.spark.sql.GraftColumnBridge
+        .onSession(qs, batch), idCol, textCol, minDocs, nBuckets,
+        nDocBuckets, seq = batchId))
+    // self-scheduled maintenance once the batch's marker is durable:
+    // each fold adds one delta file set per touched counts bucket, so
+    // bucket file count IS the uncollapsed-fold count. When it reaches
+    // the trigger (listing-only check, no job) run the vacuum — fold
+    // cost stays flat over unbounded folds with no operator-remembered
+    // vacuum call. Skipped (not failed) if another fold's crashed
+    // staging survives: vacuuming then would double-apply its replay,
+    // and maintenance deferral is always safe. ≤ 0 disables.
+    if (applied && autoVacuumTrigger > 0 &&
+        StoreCompaction.needsMaintenance(qs, s"$path/counts",
+          autoVacuumTrigger) &&
+        foldStagings(qs, path).isEmpty)
+      vacuumStore(spark, path)
+    applied
   }
 }

@@ -459,10 +459,9 @@ object DedupSuite {
   //
   // Contracts: batch ids must be DISJOINT from stored ids (ingest
   // batches are new images by definition; the verify join would
-  // duplicate a shared id). Folds are single-maintainer crash-redo —
-  // a replayed fold double-appends its delta; the streaming twin
-  // (s18) wraps the fold in the committed-staging exactly-once
-  // protocol. Compaction ([[StoreCompaction.compactStore]]) is
+  // duplicate a shared id). A fold publishes exactly once per batch
+  // id through its staged commit (d30, d31 and s18 alike).
+  // Compaction ([[StoreCompaction.compactStore]]) is
   // row-invariant and self-scheduled by the fold.
   // ---------------------------------------------------------------
 
@@ -521,7 +520,7 @@ object DedupSuite {
     * set rides the checkpoint as an observed metric), reads the LIVE
     * store bucket-pruned + semi-join-restricted, and returns (delta
     * rows WITH their bucket column, the new batch-touching pair set).
-    * Exposed for the streaming twin's committed-staging protocol.
+    * [[hammingWriters]] stages both frames.
     *
     * Exactness vs [[incrementalHammingPairs]] over the full index
     * frame: a stored row dropped by bucket pruning has
@@ -597,41 +596,67 @@ object DedupSuite {
     (delta, verified)
   }
 
+  private val HammingNames =
+    StoreFiles.CommitNames("_ham_batch_", ".ham_staging_", "hbatch")
+
+  /** The Hamming fold's declaration: the store delta (bucket
+    * partitions — the batch's band rows, so later batches dedupe
+    * against corpus ∪ every earlier batch) and the batch's NEW-PAIR
+    * emission (accumulated under `outPath`; pairs are final on
+    * emission — a pair's hamming distance never changes, so segments
+    * are disjoint and need no latest-wins resolution). */
+  private[graft] def hammingCommit(spark: SparkSession, path: String,
+                                   outPath: String,
+                                   batchId: Long): StoreFiles.StagedCommit =
+    HammingNames.at(spark, path, batchId, Seq(
+      StoreFiles.Artifact("delta", path),
+      StoreFiles.Artifact("out", outPath)))
+
+  /** The Hamming fold's writers over [[computeHammingFold]]; the delta
+    * arrives CLUSTERED by bucket (the fold's one checkpoint), so its
+    * write is mapper-only. */
+  private[graft] def hammingWriters(spark: SparkSession, path: String,
+                                    batch: DataFrame, idCol: String,
+                                    hashCol: String, maxHamming: Int,
+                                    maxBucket: Int): Map[String, String => Unit] = {
+    val (delta, pairs) = computeHammingFold(spark, path, batch, idCol,
+      hashCol, maxHamming, maxBucket)
+    Map("delta" -> (dir => delta.write.partitionBy("bucket").parquet(dir)),
+      "out" -> (dir => pairs.write.parquet(dir)))
+  }
+
   /** Fold a batch of (id, 60-bit hash) rows into a persisted
-    * [[hammingIndexBuild]] layout and return the NEW batch-touching
-    * pair set — exactly what a full [[hammingPairs]] run over
-    * index ∪ batch emits that touches the batch (the
-    * [[incrementalHammingPairs]] contract, served from disk): the
-    * store is read bucket-pruned + broadcast-semi-restricted, the
-    * corpus is never re-decoded or re-banded into a shuffle, and the
-    * batch's band rows are appended so later folds dedupe against
-    * corpus ∪ every earlier batch. Returned pairs feed
-    * [[Dedup.foldComponents]] (the d30 composition). Crash-redo,
-    * single-maintainer — the streaming twin (s18) is the exactly-once
-    * variant. Self-scheduled compaction keeps per-bucket file counts
-    * bounded over unbounded folds (row-invariant; ≤ 0 disables). */
-  def hammingIndexFold(spark0: org.apache.spark.sql.SparkSession,
-                       path: String, batch: DataFrame, idCol: String,
+    * [[hammingIndexBuild]] layout, exactly once per `batchId` through
+    * [[hammingCommit]] (protocol in [[StoreFiles]]), adding the NEW
+    * batch-touching pair set (id_a, id_b, hamming) to `outPath` —
+    * exactly what a full [[hammingPairs]] run over index ∪ batch
+    * emits that touches the batch (the [[incrementalHammingPairs]]
+    * contract, served from disk): the store is read bucket-pruned +
+    * broadcast-semi-restricted, the corpus is never re-decoded or
+    * re-banded into a shuffle, and the batch's band rows join the
+    * store so later folds dedupe against corpus ∪ every earlier
+    * batch. The emitted pairs feed [[Dedup.foldComponents]] (the d30
+    * composition). Self-scheduled compaction, after the batch's
+    * marker is durable, keeps per-bucket file counts bounded over
+    * unbounded folds (row-invariant; ≤ 0 disables). Returns whether
+    * the batch was applied (false = replay skip). */
+  def hammingIndexFold(spark0: SparkSession, path: String, outPath: String,
+                       batch: DataFrame, batchId: Long, idCol: String,
                        hashCol: String, maxHamming: Int = 3,
                        maxBucket: Int = 1000,
-                       autoCompactTrigger: Int = 24): DataFrame = {
+                       autoCompactTrigger: Int = 24): Boolean = {
     // AQE-off clone: batch-sized actions, fixed-latency tax otherwise
     val spark = StoreCompaction.quietSession(spark0)
-    val (delta, pairs) = computeHammingFold(spark, path,
-      GraftColumnBridge.onSession(spark, batch),
-      idCol, hashCol, maxHamming, maxBucket)
-    // delta append (mapper-only — clustered by bucket) ∥ pair-set
-    // materialization (reads the pinned pre-append file snapshot)
-    var outCp: DataFrame = null
-    Par.run(Seq(
-      () => delta.write.mode("append").partitionBy("bucket").parquet(path),
-      () => outCp = pairs.localCheckpoint()))
-    if (autoCompactTrigger > 0 &&
+    val applied = hammingCommit(spark, path, outPath, batchId)
+      .applyIdempotent(hammingWriters(spark, path,
+        GraftColumnBridge.onSession(spark, batch), idCol, hashCol,
+        maxHamming, maxBucket))
+    if (applied && autoCompactTrigger > 0 &&
         StoreCompaction.needsMaintenance(spark, path, autoCompactTrigger)) {
       StoreCompaction.compactStore(spark, path)
       ()
     }
-    outCp
+    applied
   }
 
   /** C4-style paragraph-level exact dedup: split every document on
@@ -938,16 +963,8 @@ object DedupSuite {
     * build (one row per ingest; readers take the max high-water mark
     * and validate every row's layout): an append promotes
     * idempotently under a deterministic file name, which is what lets
-    * the streaming twin replay a crashed batch without a
-    * read-modify-write window. [[substrMetaFields]] is the row shape,
-    * shared with the streaming twin's staged meta artifact. */
-  private def writeSubstrMeta(spark: org.apache.spark.sql.SparkSession,
-                              path: String, maxDoc: Long, l: Int,
-                              nBuckets: Int, hashKeys: Boolean,
-                              mode: String): Unit =
-    StoreMeta.write(spark, path, mode,
-      substrMetaFields(maxDoc, l, nBuckets, hashKeys))
-
+    * a fold replay a crashed batch without a read-modify-write window.
+    * This is the row shape the build writes and each fold stages. */
   private[graft] def substrMetaFields(maxDoc: Long, l: Int, nBuckets: Int,
                                       hashKeys: Boolean): Seq[(String, Any)] =
     Seq("max_doc" -> maxDoc, "l" -> l, "n_buckets" -> nBuckets,
@@ -955,7 +972,7 @@ object DedupSuite {
 
   /** Validate the store's layout against the caller's parameters and
     * return the ingest high-water mark (max over the append-only meta
-    * rows). Loud on any mismatch — see [[writeSubstrMeta]]. */
+    * rows). Loud on any mismatch — see [[substrMetaFields]]. */
   private[graft] def readSubstrMeta(
       spark: org.apache.spark.sql.SparkSession, path: String,
       l: Int, nBuckets: Int, hashKeys: Boolean): Long =
@@ -1087,7 +1104,8 @@ object DedupSuite {
           else Nil)
       ++ outWrite.map(write => () => write(cleaned)).toSeq)
     if (bloomSide) BloomSide.installSeed(spark, path)
-    writeSubstrMeta(spark, path, maxDoc, l, nBuckets, hashKeys, "overwrite")
+    StoreMeta.write(spark, path, "overwrite",
+      substrMetaFields(maxDoc, l, nBuckets, hashKeys))
     cleaned
   }
 
@@ -1115,13 +1133,60 @@ object DedupSuite {
     ()
   }
 
-  /** Fold a document batch into an [[exactSubstrBuildStore]] layout
-    * and return the BATCH's cleaned output — bit-identical to what a
-    * full [[exactSubstrDedup]] over corpus ∪ batch emits for these
-    * docs (the d26 gate), WITHOUT rescanning the corpus: the batch's
-    * window keys join only their own bucket partitions of the store
-    * (static `PartitionFilters: [bucket IN (…)]`, spec-proved unread
-    * elsewhere), so fold cost is O(batch + matched store rows).
+  private val SubstrNames =
+    StoreFiles.CommitNames("_substr_batch_", ".substr_staging_", "sbatch")
+
+  /** The substr fold's declaration: the store delta (bucket
+    * partitions), the append-only `_meta` high-water row (readers max
+    * over rows), the batch's cleaned output (accumulated under
+    * `outPath`) — and, on a bloom-maintained store, the delta's
+    * bloom-sidecar rows. The sidecar's coverage contract survives
+    * every crash window because the batch is not marked applied until
+    * the promote copied BOTH the delta and its blooms, and a crashed
+    * batch replays (single-maintainer) before any later fold could
+    * consult the sidecar against the new keys. */
+  private[graft] def substrCommit(spark: SparkSession, path: String,
+                                  outPath: String,
+                                  batchId: Long): StoreFiles.StagedCommit =
+    SubstrNames.at(spark, path, batchId, Seq(
+        StoreFiles.Artifact("delta", path),
+        StoreFiles.Artifact("meta", StoreMeta.metaPath(path)),
+        StoreFiles.Artifact("out", outPath))
+      ++ (if (BloomSide.maintained(spark, path))
+            Seq(StoreFiles.Artifact("bloom", s"$path/${BloomSide.DirName}"))
+          else Nil))
+
+  /** The substr fold's writers over [[computeSubstrFold]]: delta, out
+    * and bloom derive from the fold's checkpointed join. */
+  private[graft] def substrWriters(spark: SparkSession, path: String,
+                                   batch: DataFrame, idCol: String,
+                                   textCol: String, l: Int, nBuckets: Int,
+                                   hashKeys: Boolean): Map[String, String => Unit] = {
+    val (delta, out, newMax) = computeSubstrFold(spark, path, batch,
+      idCol, textCol, l, nBuckets, hashKeys)
+    def desc(s: String)(body: => Unit): Unit =
+      graft.Phase(spark, s"substr-fold: $s")(body)
+    Map(
+      // pre-clustered by bucket
+      "delta" -> (dir => desc("delta write") {
+        delta.write.partitionBy("bucket").parquet(dir) }),
+      "out" -> (dir => out.write.parquet(dir)),
+      "meta" -> (dir => StoreMeta.writeFile(spark, dir,
+        substrMetaFields(newMax, l, nBuckets, hashKeys))),
+      "bloom" -> (dir => desc("bloom write") {
+        BloomSide.stageDelta(delta.select(col("bucket"), col("wkey")), dir,
+          "bucket", "wkey") }))
+  }
+
+  /** Fold a document batch into an [[exactSubstrBuildStore]] layout,
+    * exactly once per `batchId` through [[substrCommit]] (protocol in
+    * [[StoreFiles]]), adding the BATCH's cleaned output to `outPath`
+    * — bit-identical to what a full [[exactSubstrDedup]] over corpus
+    * ∪ batch emits for these docs (the d26 gate), WITHOUT rescanning
+    * the corpus: the batch's window keys join only their own bucket
+    * partitions of the store (static `PartitionFilters: [bucket IN
+    * (…)]`, spec-proved unread elsewhere), so fold cost is O(batch +
+    * matched store rows).
     *
     * Correctness rests on the monotonic-ingest contract (enforced
     * loudly against the store's meta): batch doc ids strictly exceed
@@ -1134,56 +1199,29 @@ object DedupSuite {
     * particular one PRIOR occurrence suffices to cut every batch
     * occurrence of the key.
     *
-    * The store's parquet file index is snapshotted when the fold
-    * starts, so the returned frame is stable against the delta this
-    * fold appends. Replaying a crashed fold double-appends its delta
-    * (counts are NOT idempotent) — the same single-maintainer,
-    * crash-redo-from-clean contract as [[HeavyHitters.appendToKeyStore]];
-    * the streaming twin's committed-staging protocol is the
-    * exactly-once variant. */
-  def exactSubstrFold(spark0: org.apache.spark.sql.SparkSession,
-                      path: String, batch: DataFrame, idCol: String,
+    * Self-scheduled maintenance runs after the batch's marker is
+    * durable: once a bucket's delta-file count reaches the trigger
+    * (listing-only check), the store collapses in place — fold cost
+    * stays O(batch + matched rows) forever without an
+    * operator-remembered vacuum call. ≤ 0 disables. Returns whether
+    * the batch was applied (false = replay skip). */
+  def exactSubstrFold(spark0: SparkSession, path: String, outPath: String,
+                      batch: DataFrame, batchId: Long, idCol: String,
                       textCol: String, l: Int, nBuckets: Int = 64,
                       hashKeys: Boolean = false,
-                      autoVacuumTrigger: Int = 24): DataFrame = {
+                      autoVacuumTrigger: Int = 24): Boolean = {
     // AQE-off clone: the fold is a handful of batch-sized actions
     // whose per-exchange stage-jobs are fixed-latency tax (see
     // StoreCompaction.quietSession)
     val spark = StoreCompaction.quietSession(spark0)
-    val (delta, out, newMax) = computeSubstrFold(spark, path,
-      GraftColumnBridge.onSession(spark, batch),
-      idCol, textCol, l, nBuckets, hashKeys)
-    // the delta append (mapper-only — delta is already clustered by
-    // bucket) and the output materialization are independent: the
-    // output's store read is pinned to the pre-append file snapshot,
-    // so the two run as CONCURRENT jobs instead of paying two
-    // serialized fixed latencies
-    var outCp: DataFrame = null
-    Par.run(Seq(
-      () => graft.Phase(spark, "substr-fold: delta append") {
-        delta.write.mode("append").partitionBy("bucket").parquet(path)
-      },
-      () => outCp = out.localCheckpoint())
-      // stores that maintain a bloom sidecar get this fold's delta
-      // blooms as a third concurrent action (batch-sized; delta is
-      // checkpointed). Crash window = delta-without-bloom, covered by
-      // the same single-maintainer replay contract as the delta
-      // itself — see [[BloomSide]]'s coverage notes.
-      ++ (if (BloomSide.maintained(spark, path))
-            Seq[() => Unit](() => graft.Phase(spark, "substr-fold: bloom append") {
-              BloomSide.appendDelta(delta.select(col("bucket"), col("wkey")),
-                path, "bucket", "wkey")
-            })
-          else Nil))
-    writeSubstrMeta(spark, path, newMax, l, nBuckets, hashKeys, "append")
-    // self-scheduled maintenance: once a bucket's delta-file count
-    // reaches the trigger (listing-only check), collapse the store in
-    // place — fold cost stays O(batch + matched rows) forever without
-    // an operator-remembered vacuum call. ≤ 0 disables.
-    if (autoVacuumTrigger > 0 &&
+    val applied = substrCommit(spark, path, outPath, batchId)
+      .applyIdempotent(substrWriters(spark, path,
+        GraftColumnBridge.onSession(spark, batch), idCol, textCol, l,
+        nBuckets, hashKeys))
+    if (applied && autoVacuumTrigger > 0 &&
         StoreCompaction.needsMaintenance(spark, path, autoVacuumTrigger))
       vacuumSubstrStore(spark, path)
-    outCp
+    applied
   }
 
   /** The fold's pure computation — everything [[exactSubstrFold]]
@@ -1194,9 +1232,8 @@ object DedupSuite {
     * the batch's cleaned output, the new high-water mark). The store
     * joins inside are
     * eagerly checkpointed, so neither returned frame re-reads the
-    * store when materialized later. Exposed for the streaming twin's
-    * committed-staging protocol, which must stage both frames BEFORE
-    * any live mutation. */
+    * store when materialized later. [[substrWriters]] stages both
+    * frames BEFORE any live mutation. */
   private[graft] def computeSubstrFold(
       spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, idCol: String,
@@ -1231,9 +1268,8 @@ object DedupSuite {
     // no unpersist would accumulate cached blocks across folds, while
     // checkpoint blocks are context-cleaned once the frame is
     // unreferenced. The bucket column rides along and the checkpoint
-    // is CLUSTERED by it, so the delta append (and the streaming
-    // twin's staged delta write) is a mapper-only pass with no
-    // further shuffle.
+    // is CLUSTERED by it, so the staged delta write is a mapper-only
+    // pass with no further shuffle.
     // the batch's bucket set — and, for bloom-maintained stores, the
     // (bucket, key-hash) prune rows — RIDE this checkpoint as observed
     // metrics (both batch-bounded: ≤ nBuckets longs / the same rows

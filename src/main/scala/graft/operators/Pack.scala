@@ -41,9 +41,9 @@ object Pack {
     * docs shard by `doc_id div docsPerShard` (arithmetic, so the
     * shard respects global order and is reproducible in any engine),
     * each shard cumsums locally under a bounded-size window, and the
-    * per-shard totals — one row per shard — cumsum on a single
-    * partition and broadcast back. Nothing corpus-sized is ever
-    * sorted globally or moved to one task; the big side pays exactly
+    * per-shard totals — one row per shard — are collected into ONE
+    * row, prefix-summed there and broadcast back. Nothing corpus-sized
+    * is ever sorted globally or moved to one task; the big side pays exactly
     * one exchange (the shard key). Span extraction is a per-row
     * `sequence()` explode: ~n/seqLen + 1 rows per doc.
     *
@@ -85,13 +85,15 @@ object Pack {
     val within = base
       .withColumn("local_start",
         coalesce(sum(col("n")).over(wIn), lit(0L)) + dupGuard)
-    // one row per shard; the only unpartitioned window in the plan
-    // runs over this bounded frame, never the corpus
-    val wSh = Window.orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    // one row per shard, gathered in shard order into a single row
+    // (bounded: shards, never docs); a shard's offset is the sum of
+    // the totals before it
     val offsets = base.groupBy(col("shard")).agg(sum(col("n")).as("stot"))
-      .withColumn("offset", coalesce(sum(col("stot")).over(wSh), lit(0L)))
-      .select(col("shard"), col("offset"))
+      .agg(sort_array(collect_list(struct(col("shard"), col("stot")))).as("ts"))
+      .select(col("ts"), posexplode(col("ts")).as(Seq("i", "t")))
+      .select(col("t.shard").as("shard"),
+        aggregate(slice(col("ts"), lit(1), col("i")), lit(0L),
+          (acc, t) => acc + t.getField("stot")).as("offset"))
     within.join(broadcast(offsets), Seq("shard"))
       .withColumn("start", lit(baseOffset) + col("offset") + col("local_start"))
       .withColumn("fin", col("start") + col("n"))
@@ -120,15 +122,9 @@ object Pack {
   // over the full corpus bit-exactly — the q98/s17 gate.
   // ---------------------------------------------------------------
 
-  private def writeSpanMeta(spark: org.apache.spark.sql.SparkSession,
-                            path: String, maxDoc: Long, tokenDelta: Long,
-                            seqLen: Long, mode: String): Unit =
-    StoreMeta.write(spark, path, mode, spanMetaFields(maxDoc, tokenDelta,
-      seqLen))
-
-  /** The span store's meta row shape — shared with the streaming
-    * twin's STAGED meta artifact, which must write the identical
-    * schema (promote copies its files into the live meta dir). */
+  /** The span store's meta row shape — the build writes it and each
+    * fold stages it, so both share one schema (promote copies the
+    * staged file into the live meta dir). */
   private[graft] def spanMetaFields(maxDoc: Long, tokenDelta: Long,
                                     seqLen: Long): Seq[(String, Any)] =
     Seq("max_doc" -> maxDoc, "token_delta" -> tokenDelta,
@@ -150,18 +146,30 @@ object Pack {
   def buildSpanStore(docs: DataFrame, idCol: String, nTokens: Column,
                      seqLen: Long, path: String,
                      docsPerShard: Long = 1L << 20): DataFrame = {
-    val spark = docs.sparkSession
-    val b = docs.select(col(idCol).as("doc_id"), nTokens.cast("long").as("n"))
-      .localCheckpoint()
-    val mm = b.agg(max(col("doc_id")).cast("long"), sum(col("n"))).head()
-    require(!mm.isNullAt(0), "cannot build a span store from an empty corpus")
-    writeSpanMeta(spark, path, mm.getLong(0),
-      if (mm.isNullAt(1)) 0L else mm.getLong(1), seqLen, "overwrite")
+    val (b, _, mx, tot) = observedCounts(docs, idCol, nTokens)
+    require(mx != null, "cannot build a span store from an empty corpus")
+    StoreMeta.write(docs.sparkSession, path, "overwrite",
+      spanMetaFields(mx.asInstanceOf[Long], tot, seqLen))
     packSpans(b, "doc_id", col("n"), seqLen, docsPerShard)
   }
 
+  /** `docs` as checkpointed (doc_id, n) rows, evaluated once: the id
+    * min and max and the token sum ride the checkpoint job as observed
+    * metrics. Returns (rows, min id, max id, token sum); the ids are
+    * null on an empty frame. */
+  private def observedCounts(docs: DataFrame, idCol: String,
+                             nTokens: Column): (DataFrame, Any, Any, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val b = docs.select(col(idCol).as("doc_id"), nTokens.cast("long").as("n"))
+      .observe(obs, min(col("doc_id").cast("long")).as("mn"),
+        max(col("doc_id").cast("long")).as("mx"), sum(col("n")).as("tot"))
+      .localCheckpoint()
+    val m = obs.get
+    (b, m("mn"), m("mx"), Option(m("tot")).fold(0L)(_.asInstanceOf[Long]))
+  }
+
   /** One fold's computation WITHOUT mutating the store meta — the
-    * streaming twin stages on this. Returns
+    * fold's writers stage on this. Returns
     * (spans, newDocHighWater, tokenDelta). */
   private[graft] def computeSpanFold(spark: org.apache.spark.sql.SparkSession,
                                      path: String, batch: DataFrame,
@@ -169,34 +177,56 @@ object Pack {
                                      seqLen: Long,
                                      docsPerShard: Long): (DataFrame, Long, Long) = {
     val (prevMax, prevTotal) = readSpanMeta(spark, path, seqLen)
-    val b = batch.select(col(idCol).as("doc_id"), nTokens.cast("long").as("n"))
-      .localCheckpoint() // one batch evaluation: guard agg + spans
-    val mm = b.agg(min(col("doc_id")).cast("long"),
-      max(col("doc_id")).cast("long"), sum(col("n"))).head()
-    require(!mm.isNullAt(0) && mm.getLong(0) > prevMax,
+    val (b, mn, mx, tot) = observedCounts(batch, idCol, nTokens)
+    require(mn != null && mn.asInstanceOf[Long] > prevMax,
       s"monotonic-ingest contract: batch min doc id " +
-        s"${if (mm.isNullAt(0)) "(empty)" else mm.getLong(0)} must exceed " +
+        s"${if (mn == null) "(empty)" else mn} must exceed " +
         s"stored max $prevMax")
     (packSpans(b, "doc_id", col("n"), seqLen, docsPerShard,
         baseOffset = prevTotal),
-      mm.getLong(1), if (mm.isNullAt(2)) 0L else mm.getLong(2))
+      mx.asInstanceOf[Long], tot)
   }
 
-  /** Fold a monotonic document batch into a [[buildSpanStore]] layout
-    * and return ITS spans — the batch's token stream appended at the
-    * stored high-water, so the union of build + fold emissions equals
-    * the one-shot [[packSpans]] over the whole corpus bit-exactly.
-    * Crash-redo contract (a re-run double-appends meta); the
-    * streaming twin (s17) wraps [[computeSpanFold]] in the
-    * committed-staging exactly-once protocol instead. */
-  def foldSpans(spark: org.apache.spark.sql.SparkSession, path: String,
-                batch: DataFrame, idCol: String, nTokens: Column,
-                seqLen: Long, docsPerShard: Long = 1L << 20): DataFrame = {
+  private val PackNames =
+    StoreFiles.CommitNames("_pack_batch_", ".pack_staging_", "pbatch")
+
+  /** The pack fold's declaration: the batch's span emission
+    * (accumulated under `outPath`; spans are final on emission — the
+    * stream only grows at the end, so segments are disjoint and no
+    * latest-wins resolution is needed) and the additive `_meta`
+    * high-water row. */
+  private[graft] def packCommit(spark: org.apache.spark.sql.SparkSession,
+                                path: String, outPath: String,
+                                batchId: Long): StoreFiles.StagedCommit =
+    PackNames.at(spark, path, batchId, Seq(
+      StoreFiles.Artifact("out", outPath),
+      StoreFiles.Artifact("meta", StoreMeta.metaPath(path))))
+
+  private[graft] def packWriters(spark: org.apache.spark.sql.SparkSession,
+                                 path: String, batch: DataFrame,
+                                 idCol: String, nTokens: Column,
+                                 seqLen: Long,
+                                 docsPerShard: Long): Map[String, String => Unit] = {
     val (spans, newMax, delta) = computeSpanFold(spark, path, batch,
       idCol, nTokens, seqLen, docsPerShard)
-    writeSpanMeta(spark, path, newMax, delta, seqLen, "append")
-    spans
+    Map("out" -> (dir => spans.write.parquet(dir)),
+      "meta" -> (dir => StoreMeta.writeFile(spark, dir,
+        spanMetaFields(newMax, delta, seqLen))))
   }
+
+  /** Fold a monotonic document batch into a [[buildSpanStore]] layout,
+    * exactly once per `batchId` through [[packCommit]] (protocol in
+    * [[StoreFiles]]), adding ITS spans to `outPath` — the batch's
+    * token stream appended at the stored high-water, so the union of
+    * build + fold emissions equals the one-shot [[packSpans]] over the
+    * whole corpus bit-exactly. Returns whether the batch was applied
+    * (false = replay skip). */
+  def foldSpans(spark: org.apache.spark.sql.SparkSession, path: String,
+                outPath: String, batch: DataFrame, batchId: Long,
+                idCol: String, nTokens: Column, seqLen: Long,
+                docsPerShard: Long = 1L << 20): Boolean =
+    packCommit(spark, path, outPath, batchId).applyIdempotent(
+      packWriters(spark, path, batch, idCol, nTokens, seqLen, docsPerShard))
 
   /** Length-bucketed inference batching: sort documents by token
     * count within a shard, group each consecutive `batchSize` into a

@@ -658,39 +658,48 @@ object Quantiles {
     StoreMeta.write(spark, path, "overwrite", Seq("cell_bits" -> cellBits))
   }
 
-  /** Fold a batch into the store: append its per-cell counts — counts
-    * are associative and order-independent, so folds need no
-    * monotonicity contract and nothing is ever rewritten; readers sum
-    * per (g, cell) across deltas. Crash contract: single-maintainer
-    * redo-from-clean (a replayed fold double-appends), the
-    * [[HeavyHitters.appendToKeyStore]] economics. */
+  private val QuantileNames =
+    StoreFiles.CommitNames("_qbatch_", ".qstore_staging_", "qbatch")
+
+  /** The quantile fold's declaration: one delta of additive cell
+    * counts, promoted into the store root. */
+  private[graft] def quantileCommit(spark: SparkSession, path: String,
+                                    batchId: Long): StoreFiles.StagedCommit =
+    QuantileNames.at(spark, path, batchId,
+      Seq(StoreFiles.Artifact("delta", path)))
+
+  /** The fold's one writer: the batch's per-cell counts at the store's
+    * pinned resolution. */
+  private[graft] def quantileWriters(spark: SparkSession, path: String,
+                                     batch: DataFrame, grp: Column,
+                                     value: Column): Map[String, String => Unit] =
+    Map("delta" -> (dir => cellCounts(keyedOf(batch, grp, value),
+      readQuantileMeta(spark, path)).coalesce(1).write.parquet(dir)))
+
+  /** Fold a batch into the store: add its per-cell counts, exactly once
+    * per `batchId` through [[quantileCommit]] (protocol in
+    * [[StoreFiles]]). Counts are associative and order-independent, so
+    * folds need no monotonicity contract and nothing is ever
+    * rewritten; readers sum per (g, cell) across deltas. What the
+    * protocol buys is REPLAY safety: a re-run batch must not
+    * double-count. Returns whether the batch was applied (false =
+    * replay skip). */
   def foldQuantileStore(spark: SparkSession, path: String,
-                        batch: DataFrame, grp: Column,
+                        batch: DataFrame, batchId: Long, grp: Column,
                         value: Column,
-                        autoVacuumTrigger: Int = 24): Unit = {
-    val cellBits = readQuantileMeta(spark, path)
-    cellCounts(keyedOf(batch, grp, value), cellBits)
-      .coalesce(1).write.mode("append").parquet(path)
-    // self-scheduled maintenance: each fold appends one delta file,
-    // so the root's data-file count IS the uncollapsed-delta count —
-    // when it reaches the trigger (listing-only check, no job),
-    // collapse in place. Fold cost stays flat over unbounded folds
-    // with no operator-remembered vacuum call. ≤ 0 disables.
-    if (autoVacuumTrigger > 0 &&
+                        autoVacuumTrigger: Int = 24): Boolean = {
+    val applied = quantileCommit(spark, path, batchId)
+      .applyIdempotent(quantileWriters(spark, path, batch, grp, value))
+    // self-scheduled maintenance once the batch's marker is durable:
+    // each fold adds one delta file, so the root's data-file count IS
+    // the uncollapsed-delta count — when it reaches the trigger
+    // (listing-only check, no job), collapse in place. Fold cost stays
+    // flat over unbounded folds with no operator-remembered vacuum
+    // call. ≤ 0 disables.
+    if (applied && autoVacuumTrigger > 0 &&
         StoreCompaction.flatNeedsMaintenance(spark, path, autoVacuumTrigger))
       vacuumQuantileStore(spark, path)
-  }
-
-  /** Stage one fold's delta (the batch's per-cell counts at the
-    * store's pinned resolution) under `dir` WITHOUT touching the
-    * store — the streaming twin's staging step; [[foldQuantileStore]]
-    * is stage+append collapsed for the batch (crash-redo) caller. */
-  private[graft] def stageQuantileDelta(spark: SparkSession, path: String,
-                                        batch: DataFrame, grp: Column,
-                                        value: Column, dir: String): Unit = {
-    val cellBits = readQuantileMeta(spark, path)
-    cellCounts(keyedOf(batch, grp, value), cellBits)
-      .coalesce(1).write.parquet(dir)
+    applied
   }
 
   /** Maintenance vacuum for a [[buildQuantileStore]] layout: each

@@ -229,10 +229,10 @@ object Sampling {
   /** Score `docs` against a given stats frame and keep the top `k` —
     * the query half of [[dsirSelect]] (same integer-exact surrogate,
     * same plan shape: broadcast weights, partial-aggregable per-doc
-    * sum, TakeOrderedAndProject). Corpus totals ride a GLOBAL window
-    * over the `nBuckets`-row stats frame — bounded, and it keeps the
-    * end-to-end plan at two corpus scans (a separate `stats.agg`
-    * would add a third).
+    * sum, TakeOrderedAndProject). Corpus totals and max|w| come from
+    * ONE aggregate row holding the `nBuckets`-row stats frame —
+    * bounded, and it keeps the end-to-end plan at two corpus scans (a
+    * separate `stats.agg` would add a third).
     *
     * Candidate-set contract (ADVICE r10): scoring is an INNER join on
     * bucket, so a doc with zero tokens — or whose tokens all hash to
@@ -256,11 +256,14 @@ object Sampling {
   def dsirSelectWithStats(docs: DataFrame, idCol: String, textCol: Column,
                           stats: DataFrame, k: Int, nBuckets: Int = 64,
                           salt: Int = 0): DataFrame = {
-    val allRows = Window.partitionBy()
-    val w = stats.select(col("b"),
-        (col("tc") * sum(col("rc")).over(allRows)
-          - col("rc") * sum(col("tc")).over(allRows)).as("w"))
-      .withColumn("maxw", max(abs(col("w"))).over(allRows))
+    val w = stats
+      .agg(collect_list(struct(col("b"), col("rc"), col("tc"))).as("s"),
+        sum(col("rc")).as("rt"), sum(col("tc")).as("tt"))
+      .select(transform(col("s"), x => struct(x("b").as("b"),
+        (x("tc") * col("rt") - x("rc") * col("tt")).as("w"))).as("ws"))
+      .select(explode(col("ws")).as("x"),
+        array_max(transform(col("ws"), x => abs(x("w")))).as("maxw"))
+      .select(col("x.b").as("b"), col("x.w").as("w"), col("maxw"))
     val scored = docs
       .select(col(idCol).as("doc_id"),
         explode(graft.functions.TextFunctions.tokens(textCol)).as("tok"))

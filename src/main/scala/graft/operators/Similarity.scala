@@ -147,47 +147,57 @@ object Similarity {
     cent
   }
 
+  private val IvfNames =
+    StoreFiles.CommitNames("_batch_", ".staging_batch_", "batch")
+
+  /** The IVF fold's declaration: the assigned batch is the staging root
+    * itself (one centroid-partitioned write, whose own `_SUCCESS`
+    * commits it), promoted into the live index's centroid partitions. */
+  private[graft] def ivfCommit(spark: org.apache.spark.sql.SparkSession,
+                               path: String, batchId: Long): StoreFiles.StagedCommit =
+    IvfNames.at(spark, path, batchId, Seq(StoreFiles.Artifact("", path)))
+
+  private[graft] def ivfWriters(batch: DataFrame, centroids: DataFrame,
+                                idCol: String,
+                                vecCol: String): Map[String, String => Unit] =
+    Map("" -> (dir => assignToCentroids(batch, centroids, idCol, vecCol)
+      .write.partitionBy("centroid_id").parquet(dir)))
+
   /** Incremental ingest for a [[buildIvfIndex]] layout: assign ONLY
-    * the new batch against the FROZEN centroid set and APPEND its
-    * rows into the partitioned index. The existing corpus is never
-    * re-read, re-assigned, or re-shuffled — the d13/d19 incremental
-    * discipline applied to ANN serving, and the only ingest shape
-    * that holds when the index is 100 TB and the daily batch is
-    * 0.1% of it. Because the centroids are frozen, the grown index
-    * is bit-identical to a full rebuild over corpus ∪ batch with the
-    * same seed (e10's gate); production would periodically re-refine
-    * centroids ([[refineCentroids]]) and rebuild — the classic
-    * merge-policy tradeoff, orthogonal to this append path. */
-  def appendToIvfIndex(batch: DataFrame, path: String, centroids: DataFrame,
-                       idCol: String, vecCol: String,
-                       autoCompactTrigger: Int = 24): Unit = {
-    assignToCentroids(batch, centroids, idCol, vecCol)
-      .write.mode("append").partitionBy("centroid_id").parquet(path)
-    // self-scheduled maintenance: each append lands one file set per
-    // touched centroid partition, so partition file count IS the
-    // uncompacted-append count. At the trigger (listing-only check,
-    // no job) squash files in place — serving stays fast over
-    // unbounded appends with no operator-remembered compaction.
-    // Row-identical (compaction regroups files, never rows), so the
-    // e10 full-rebuild oracle is unaffected. ≤ 0 disables.
-    if (autoCompactTrigger > 0 &&
-        StoreCompaction.needsMaintenance(batch.sparkSession, path,
-          autoCompactTrigger)) {
-      StoreCompaction.compactStore(batch.sparkSession, path)
+    * the new batch against the FROZEN centroid set and add its rows
+    * to the partitioned index, exactly once per `batchId` through
+    * [[ivfCommit]] (protocol in [[StoreFiles]]). The existing corpus
+    * is never re-read, re-assigned, or re-shuffled — the d13/d19
+    * incremental discipline applied to ANN serving, and the only
+    * ingest shape that holds when the index is 100 TB and the daily
+    * batch is 0.1% of it. Because the centroids are frozen, the grown
+    * index is bit-identical to a full rebuild over corpus ∪ batch
+    * with the same seed (e10's gate); production would periodically
+    * re-refine centroids ([[refineCentroids]]) and rebuild — the
+    * classic merge-policy tradeoff, orthogonal to this path. Returns
+    * whether the batch was applied (false = replay skip). */
+  def foldIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                   batch: DataFrame, batchId: Long, centroids: DataFrame,
+                   idCol: String, vecCol: String,
+                   autoCompactTrigger: Int = 24): Boolean = {
+    val applied = ivfCommit(spark, path, batchId)
+      .applyIdempotent(ivfWriters(batch, centroids, idCol, vecCol))
+    // self-scheduled maintenance AFTER the batch's marker is durable:
+    // a compaction can then never interleave a promoted-but-markerless
+    // replay window (batch N replays before N+1 ever runs, and the
+    // compaction ignores dot-dirs, so a crashed sibling's staging is
+    // untouched). Each fold lands one file set per touched centroid
+    // partition, so partition file count IS the uncompacted-fold
+    // count; the check is listing-only. Row-identical (compaction
+    // regroups files, never rows), so the e10 full-rebuild oracle is
+    // unaffected. ≤ 0 disables.
+    if (applied && autoCompactTrigger > 0 &&
+        StoreCompaction.needsMaintenance(spark, path, autoCompactTrigger)) {
+      StoreCompaction.compactStore(spark, path)
       ()
     }
+    applied
   }
-
-  /** The crash-safe half of the streaming ingest protocol
-    * ([[graft.streaming.StreamingJobs.appendIvfBatchIdempotent]]):
-    * the same centroid assignment as [[appendToIvfIndex]], written to
-    * a STAGING path with mode=overwrite — idempotent to restage, and
-    * Spark's `_SUCCESS` (committed last) marks the staging frozen. */
-  def stageIvfBatch(batch: DataFrame, stagingPath: String,
-                    centroids: DataFrame, idCol: String,
-                    vecCol: String): Unit =
-    assignToCentroids(batch, centroids, idCol, vecCol)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(stagingPath)
 
   private def assignToCentroids(batch: DataFrame, centroids: DataFrame,
                                 idCol: String, vecCol: String): DataFrame = {
@@ -612,7 +622,7 @@ object Similarity {
     * folded state is bit-identical to a fresh
     * [[buildSemDedupState]] over corpus ∪ batch (the d23 gate),
     * for BOTH keep rules. Batch ids must be disjoint from stored ids
-    * (the [[appendToIvfIndex]] pre-deduplicated contract). */
+    * (the [[foldIvfIndex]] pre-deduplicated contract). */
   def foldSemDedupState(spark: org.apache.spark.sql.SparkSession,
                         path: String, batch: DataFrame, idCol: String,
                         vecCol: String, tau: Double, centroids: DataFrame,

@@ -25,10 +25,20 @@ import org.apache.spark.sql.SparkSession
   * file it writes and hides them from its listings; [[isDataFile]]
   * skips dot-files regardless.
   *
-  * On top of these sits the committed-staging exactly-once protocol
-  * that every store fold (IVF s13, substr s14, quantile s15,
-  * boilerplate s16 and c5, pack s17, hamming s18) runs through ONE
-  * [[StagedCommit]] declaration.
+  * On top of these sits the committed-staging exactly-once protocol.
+  * Each store family has one fold, declared once beside it in
+  * `operators/` as a [[CommitNames]] with its artifacts and writers,
+  * and every caller goes through it with a batch id: IVF
+  * (`Similarity.foldIvfIndex`, e10 and s13), substr
+  * (`DedupSuite.exactSubstrFold`, d26 and s14), quantile
+  * (`Quantiles.foldQuantileStore`, q96 and s15), boilerplate
+  * (`Boilerplate.fold`, c5 and s16), pack (`Pack.foldSpans`, q98 and
+  * s17) and hamming (`DedupSuite.hammingIndexFold`, d30, d31 and
+  * s18). A fold runs its family's self-scheduled maintenance only
+  * after its marker is durable. Three stores still append directly
+  * and are crash-redo by contract, with no exactly-once fold: the
+  * HeavyHitters key store, the Graph contribution store and the
+  * SemDedup state.
   *
   * The protocol. Parquet append has no natural idempotency, and a bare
   * marker-after-append leaves a window (append committed, marker not
@@ -174,10 +184,8 @@ object StoreFiles {
 
   /** One staged artifact: the staging sub-directory `name` (`""` = the
     * staging root itself, for a family whose single writer commits
-    * the root) and the live directory its files promote into. `dest`
-    * None = staged but never promoted (the batch boilerplate fold's
-    * changelog, which the fold returns instead). */
-  final case class Artifact(name: String, dest: Option[String])
+    * the root) and the live directory its files promote into. */
+  final case class Artifact(name: String, dest: String)
 
   /** A store family's on-disk names, keyed by batch id: marker
     * `<marker><id>`, staging `<staging><id>`, stamp `<stamp><id>`. */
@@ -195,8 +203,7 @@ object StoreFiles {
   final case class StagedCommit(fs: FileSystem, root: String, marker: String,
                                 staging: String, stamp: String,
                                 artifacts: Seq[Artifact]) {
-    require(artifacts.exists(_.dest.isDefined),
-      s"staged commit $staging promotes no artifact")
+    require(artifacts.nonEmpty, s"staged commit $staging promotes no artifact")
     // the root artifact's own writer commits `_SUCCESS` — no sibling
     // may still be writing then
     require(artifacts.size == 1 || !artifacts.exists(_.name.isEmpty),
@@ -232,8 +239,7 @@ object StoreFiles {
       * store untouched and no marker written. */
     def promote(): Unit = {
       require(committed, s"staging $stagingPath is not committed")
-      val live = artifacts.flatMap(a =>
-        a.dest.map(d => stagedPath(a.name) -> new Path(d)))
+      val live = artifacts.map(a => stagedPath(a.name) -> new Path(a.dest))
       live.foreach { case (src, _) =>
         if (!fs.isDirectory(src))
           throw new IllegalStateException(

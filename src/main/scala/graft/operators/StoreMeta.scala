@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
   * work that is microseconds of footer parsing. The files stay plain
   * parquet with Spark's exact type mapping (optional INT64/INT32/
   * BOOLEAN/DOUBLE/UTF8), so Spark-written rows from older stores (and
-  * the streaming twins' promote-copied staged artifacts) read back
+  * the folds' promote-copied staged artifacts) read back
   * identically, and anything Spark writes here stays readable —
   * StoreMetaSpec pins both directions.
   *
@@ -69,7 +69,7 @@ object StoreMeta {
 
   /** Write ONE meta row as a single parquet file under `dir` — no
     * Spark job. Used both for live `_meta` rows ([[write]]) and for
-    * the streaming twins' STAGED meta artifacts (promote copies the
+    * the folds' STAGED meta artifacts (promote copies the
     * file into the live meta dir verbatim, so the schema is the live
     * schema by construction). */
   def writeFile(spark: SparkSession, dir: String,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
 
@@ -22,27 +22,24 @@ import org.apache.spark.sql.functions.lit
   */
 object VersionedStaging {
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def versionOf(path: String): Option[Int] =
     path.split("/").last.stripPrefix("v").toIntOption
 
-  /** Newest COMPLETE (_SUCCESS-marked) version dir, by numeric order. */
-  def latestComplete(spark: SparkSession, root: String): Option[String] = {
-    val f = fs(spark, root)
-    val matches = Option(f.globStatus(new Path(s"$root/v*")))
-      .getOrElse(Array.empty)
-    matches.map(_.getPath.toString)
-      .filter(p => versionOf(p).isDefined &&
-        f.exists(new Path(p, "_SUCCESS")))
+  /** The COMPLETE (_SUCCESS-marked) version dirs, oldest first by
+    * numeric order. */
+  private def completeVersions(f: FileSystem, root: String): Seq[String] =
+    Option(f.globStatus(new Path(s"$root/v*"))).getOrElse(Array.empty).toSeq
+      .map(_.getPath.toString)
+      .filter(p => versionOf(p).isDefined && f.exists(new Path(p, "_SUCCESS")))
       .sortBy(versionOf(_).get)
-      .lastOption
-  }
+
+  /** Newest COMPLETE (_SUCCESS-marked) version dir, by numeric order. */
+  def latestComplete(spark: SparkSession, root: String): Option[String] =
+    completeVersions(StoreFiles.fs(spark, root), root).lastOption
 
   /** Batch id recorded for a version, if any. */
   def batchIdOf(spark: SparkSession, versionDir: String): Option[Long] = {
-    val f = fs(spark, versionDir)
+    val f = StoreFiles.fs(spark, versionDir)
     Option(f.globStatus(new Path(s"$versionDir/_BATCH-*")))
       .getOrElse(Array.empty)
       .headOption
@@ -80,7 +77,7 @@ object VersionedStaging {
     val dest = f"$root/v$next%06d"
     val tmp = f"$root/.tmp-v$next%06d"
     df.write.mode("overwrite").parquet(tmp)
-    val f = fs(spark, root)
+    val f = StoreFiles.fs(spark, root)
     try beforeRename()
     catch {
       case e: Throwable =>
@@ -106,12 +103,8 @@ object VersionedStaging {
     * storage, the same reason table formats ship VACUUM. */
   def vacuum(spark: SparkSession, root: String, keep: Int = 2): Seq[String] = {
     require(keep >= 1, s"keep must be >= 1, got $keep")
-    val f = fs(spark, root)
-    val complete = Option(f.globStatus(new Path(s"$root/v*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.toString)
-      .filter(p => versionOf(p).isDefined && f.exists(new Path(p, "_SUCCESS")))
-      .sortBy(versionOf(_).get)
+    val f = StoreFiles.fs(spark, root)
+    val complete = completeVersions(f, root)
     val doomedVersions = complete.dropRight(keep)
     val orphans = Option(f.globStatus(new Path(s"$root/.tmp-v*")))
       .getOrElse(Array.empty)
@@ -123,7 +116,7 @@ object VersionedStaging {
         .exists(v => complete.lastOption.flatMap(versionOf).exists(_ >= v)))
     val doomed = doomedVersions ++ orphans
     doomed.foreach(p => StoreFiles.delete(f, new Path(p)))
-    doomed.toSeq
+    doomed
   }
 
   /** Compaction: rewrite the newest complete version into

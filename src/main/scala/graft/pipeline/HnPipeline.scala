@@ -30,9 +30,8 @@ object HnPipeline {
   /** A6 — latest batch file by lexicographic name (deliberately
     * filename-ordered, not mtime: `/root/reference/src/common/files.py:6-17`). */
   def latestFile(spark: SparkSession, globPattern: String): Option[String] = {
-    val path = new Path(globPattern)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = Option(fs.globStatus(path)).getOrElse(Array.empty)
+    val fs = graft.operators.StoreFiles.fs(spark, globPattern)
+    val matches = Option(fs.globStatus(new Path(globPattern))).getOrElse(Array.empty)
     matches.map(_.getPath.toString).sorted.lastOption
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
-import graft.operators.StoreFiles.{Artifact, CommitNames, StagedCommit}
+import graft.operators.{Boilerplate, DedupSuite, Pack, Quantiles, Similarity}
 
 /** Structured Streaming forms of the engine's batch operators.
   *
@@ -19,11 +19,9 @@ import graft.operators.StoreFiles.{Artifact, CommitNames, StagedCommit}
   * reference gets from its PK merge; watermarks bound the window state
   * so the aggregation state store stays O(open windows), not O(stream).
   *
-  * The persisted-store ingest twins (s13–s18) each fold a micro-batch
-  * exactly once through a declared
-  * [[graft.operators.StoreFiles.StagedCommit]]: a family is its
-  * on-disk names, its artifact list, and the writers that compute the
-  * fold (protocol in [[graft.operators.StoreFiles]]).
+  * The persisted-store ingests (s13–s18) hand each micro-batch, with
+  * its batch id, to the store family's one fold in `operators/`, which
+  * applies it exactly once (protocol in [[graft.operators.StoreFiles]]).
   */
 object StreamingJobs {
 
@@ -207,366 +205,11 @@ object StreamingJobs {
       ()
     }
 
-  private val IvfNames = CommitNames("_batch_", ".staging_batch_", "batch")
-
-  /** s13's declaration: the assigned batch is the staging root itself
-    * (one centroid-partitioned write, whose own `_SUCCESS` commits
-    * it), promoted into the live index's centroid partitions. */
-  private[graft] def ivfCommit(spark: SparkSession, indexPath: String,
-                               batchId: Long): StagedCommit =
-    IvfNames.at(spark, indexPath, batchId, Seq(Artifact("", Some(indexPath))))
-
-  private[graft] def ivfWriters(centroids: DataFrame,
-                                batch: DataFrame): Map[String, String => Unit] =
-    Map("" -> (dir => graft.operators.Similarity.stageIvfBatch(
-      batch, dir, centroids, "vec_id", "embedding")))
-
-  /** Apply one vector micro-batch to a persisted IVF index (the
-    * [[graft.operators.Similarity.buildIvfIndex]] layout) exactly
-    * once through [[ivfCommit]]. Returns whether the batch was
-    * applied (false = replay skip). */
-  def appendIvfBatchIdempotent(indexPath: String,
-                               centroids: DataFrame,
-                               batch: DataFrame,
-                               batchId: Long,
-                               autoCompactTrigger: Int = 24): Boolean = {
-    val applied = ivfCommit(batch.sparkSession, indexPath, batchId)
-      .applyIdempotent(ivfWriters(centroids, batch))
-    // self-scheduled maintenance AFTER the batch's marker is durable:
-    // a compaction can then never interleave a promoted-but-markerless
-    // replay window (batch N replays before N+1 ever runs, and the
-    // compaction ignores dot-dirs, so a crashed sibling's
-    // staging is untouched). Row-identical — the e10 rebuild oracle
-    // and s13 gate serve from compacted stores already. ≤ 0 disables.
-    if (applied && autoCompactTrigger > 0 &&
-        graft.operators.StoreCompaction.needsMaintenance(batch.sparkSession,
-          indexPath, autoCompactTrigger)) {
-      graft.operators.StoreCompaction.compactStore(batch.sparkSession, indexPath)
-      ()
-    }
-    applied
-  }
-
-  private val SubstrNames =
-    CommitNames("_substr_batch_", ".substr_staging_", "sbatch")
-
-  /** s14's declaration: the store delta (bucket partitions), the
-    * append-only `_meta` high-water row (readers max over rows), the
-    * batch's cleaned output (accumulated under `outPath`) — and, on a
-    * bloom-maintained store, the delta's bloom-sidecar rows. The
-    * sidecar's coverage contract survives every crash window because
-    * the batch is not marked applied until the promote copied BOTH
-    * the delta and its blooms, and the stream replays the batch
-    * (single-maintainer) before any later fold could consult the
-    * sidecar against the new keys. */
-  private[graft] def substrCommit(spark: SparkSession, storePath: String,
-                                  outPath: String, batchId: Long): StagedCommit =
-    SubstrNames.at(spark, storePath, batchId, Seq(
-        Artifact("delta", Some(storePath)),
-        Artifact("meta", Some(s"${storePath}_meta")),
-        Artifact("out", Some(outPath)))
-      ++ (if (graft.operators.BloomSide.maintained(spark, storePath))
-            Seq(Artifact("bloom",
-              Some(s"$storePath/${graft.operators.BloomSide.DirName}")))
-          else Nil))
-
-  /** s14's fold, computed against the LIVE store on an AQE-off clone:
-    * the staged fold is a handful of batch-sized actions whose
-    * per-exchange stage-jobs are fixed-latency tax
-    * (StoreCompaction.quietSession); clone-local, so concurrent
-    * streams on the caller's session are untouched. Delta, out and
-    * bloom derive from the fold's checkpointed join. */
-  private[graft] def substrWriters(spark: SparkSession, storePath: String,
-                                   batch: DataFrame, l: Int, nBuckets: Int,
-                                   hashKeys: Boolean): Map[String, String => Unit] = {
-    val qs = graft.operators.StoreCompaction.quietSession(spark)
-    val (delta, out, newMax) = graft.operators.DedupSuite
-      .computeSubstrFold(qs, storePath,
-        org.apache.spark.sql.GraftColumnBridge.onSession(qs, batch),
-        "doc_id", "text", l, nBuckets, hashKeys)
-    Map(
-      // pre-clustered by bucket
-      "delta" -> (dir => delta.write.partitionBy("bucket").parquet(dir)),
-      "out" -> (dir => out.write.parquet(dir)),
-      "meta" -> (dir => graft.operators.StoreMeta.writeFile(spark, dir,
-        graft.operators.DedupSuite.substrMetaFields(newMax, l, nBuckets,
-          hashKeys))),
-      "bloom" -> (dir => graft.operators.BloomSide.stageDelta(
-        delta.select(col("bucket"), col("wkey")), dir, "bucket", "wkey")))
-  }
-
-  /** Fold one document micro-batch into a persisted ExactSubstr
-    * window-key store (the [[graft.operators.DedupSuite.exactSubstrBuildStore]]
-    * layout) exactly once through [[substrCommit]]. The plain
-    * [[graft.operators.DedupSuite.exactSubstrFold]] is crash-redo — a
-    * replayed fold double-appends its delta (counts are not
-    * idempotent). Returns whether the batch was applied (false =
-    * replay skip). */
-  def foldSubstrBatchIdempotent(spark: SparkSession, storePath: String,
-                                outPath: String, batch: DataFrame,
-                                batchId: Long, l: Int, nBuckets: Int,
-                                hashKeys: Boolean): Boolean =
-    substrCommit(spark, storePath, outPath, batchId).applyIdempotent(
-      substrWriters(spark, storePath, batch, l, nBuckets, hashKeys))
-
-  /** Streaming incremental ExactSubstr ingest (s14): a stream of
-    * MONOTONICALLY-ID'd document batches folds into the persisted
-    * window-key store, each micro-batch emitting its own cleaned
-    * output — the d26 fold made exactly-once by
-    * [[foldSubstrBatchIdempotent]]. The corpus is never re-windowed:
-    * per batch the store join touches only the batch's own crc32
-    * buckets, and because ids are monotone the accumulated outputs
-    * ∪-equal a full ExactSubstr recompute over corpus ∪ batches —
-    * the s14 gate reads the accumulated `outPath` against d25's
-    * full-pipeline oracle. */
-  def streamingSubstrIngest(spark: SparkSession, srcDir: String,
-                            schema: StructType, storePath: String,
-                            outPath: String, checkpoint: String,
-                            l: Int, nBuckets: Int,
-                            hashKeys: Boolean): StreamingQuery =
-    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
-      foldSubstrBatchIdempotent(spark, storePath, outPath,
-        batch, batchId, l, nBuckets, hashKeys)
-      ()
-    }
-
-  private val HammingNames = CommitNames("_ham_batch_", ".ham_staging_", "hbatch")
-
-  /** s18's declaration: the store delta (bucket partitions — the
-    * batch's band rows, so later batches dedupe against corpus ∪
-    * every earlier batch) and the batch's NEW-PAIR emission
-    * (accumulated under `outPath`; pairs are final on emission — a
-    * pair's hamming distance never changes, so segments are disjoint
-    * and need no latest-wins resolution). */
-  private[graft] def hammingCommit(spark: SparkSession, storePath: String,
-                                   outPath: String, batchId: Long): StagedCommit =
-    HammingNames.at(spark, storePath, batchId, Seq(
-      Artifact("delta", Some(storePath)), Artifact("out", Some(outPath))))
-
-  /** s18's fold, on the AQE-off clone (see [[substrWriters]]). The
-    * store read is bucket-pruned
-    * ([[graft.operators.DedupSuite.computeHammingFold]]); the corpus
-    * is never re-decoded or re-banded. */
-  private[graft] def hammingWriters(spark: SparkSession, storePath: String,
-                                    batchHashes: DataFrame, idCol: String,
-                                    hashCol: String, maxHamming: Int,
-                                    maxBucket: Int): Map[String, String => Unit] = {
-    val qs = graft.operators.StoreCompaction.quietSession(spark)
-    val (delta, pairs) = graft.operators.DedupSuite.computeHammingFold(
-      qs, storePath,
-      org.apache.spark.sql.GraftColumnBridge.onSession(qs, batchHashes),
-      idCol, hashCol, maxHamming, maxBucket)
-    // delta arrives CLUSTERED by bucket (the fold's one checkpoint)
-    Map("delta" -> (dir => delta.write.partitionBy("bucket").parquet(dir)),
-      "out" -> (dir => pairs.write.parquet(dir)))
-  }
-
-  /** Fold one micro-batch of (id, 60-bit perceptual hash) rows into a
-    * persisted Hamming band index
-    * ([[graft.operators.DedupSuite.hammingIndexBuild]] layout) exactly
-    * once through [[hammingCommit]]. Returns whether the batch was
-    * applied (false = replay skip). */
-  def foldHammingBatchIdempotent(spark: SparkSession, storePath: String,
-                                 outPath: String,
-                                 batchHashes: DataFrame,
-                                 batchId: Long, idCol: String,
-                                 hashCol: String, maxHamming: Int,
-                                 maxBucket: Int = 1000): Boolean =
-    hammingCommit(spark, storePath, outPath, batchId).applyIdempotent(
-      hammingWriters(spark, storePath, batchHashes, idCol, hashCol,
-        maxHamming, maxBucket))
-
-  /** Streaming multimodal ingest (s18): a stream of media batches
-    * folds into the persisted Hamming band index, each micro-batch
-    * decoding ONCE (`hashesOf` maps the raw micro-batch to its (id,
-    * 60-bit hash) frame — e.g. a BMP/WAV decode over a binary
-    * column), emitting its new batch-touching pairs exactly once via
-    * [[foldHammingBatchIdempotent]]. Because a pair's distance never
-    * changes and each batch's ids are fresh, the accumulated pair
-    * output ∪-equals the full [[graft.operators.DedupSuite.hammingPairs]]
-    * run over corpus ∪ batches restricted to batch-touching pairs
-    * (no hot-bucket cap trips ⇒ sequential cap decisions are
-    * vacuously the full run's — gate corpora stay far under the cap,
-    * and trips are observe-accounted, never silent); folding them
-    * into the corpus's component labels reproduces the full d29
-    * recompute — the s18 gate. */
-  def streamingHammingIngest(spark: SparkSession, srcDir: String,
-                             schema: StructType, storePath: String,
-                             outPath: String, checkpoint: String,
-                             hashesOf: DataFrame => DataFrame,
-                             idCol: String, hashCol: String,
-                             maxHamming: Int = 3,
-                             maxBucket: Int = 1000): StreamingQuery =
-    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
-      foldHammingBatchIdempotent(spark, storePath, outPath,
-        hashesOf(batch), batchId, idCol, hashCol, maxHamming, maxBucket)
-      ()
-    }
-
-  private val QuantileNames = CommitNames("_qbatch_", ".qstore_staging_", "qbatch")
-
-  /** s15's declaration: one delta of additive cell counts, promoted
-    * into the store root. */
-  private[graft] def quantileCommit(spark: SparkSession, storePath: String,
-                                    batchId: Long): StagedCommit =
-    QuantileNames.at(spark, storePath, batchId,
-      Seq(Artifact("delta", Some(storePath))))
-
-  private[graft] def quantileWriters(spark: SparkSession, storePath: String,
-                                     batch: DataFrame,
-                                     grp: org.apache.spark.sql.Column,
-                                     value: org.apache.spark.sql.Column): Map[String, String => Unit] =
-    Map("delta" -> (dir => graft.operators.Quantiles.stageQuantileDelta(
-      spark, storePath, batch, grp, value, dir)))
-
-  /** Fold one micro-batch's cell counts into a persisted quantile
-    * store ([[graft.operators.Quantiles.buildQuantileStore]] layout)
-    * exactly once through [[quantileCommit]]. Counts are associative
-    * and order-independent, so batches commute and need no ordering
-    * contract; what the protocol buys is REPLAY safety (a re-run
-    * batch must not double-count). Returns whether the batch was
-    * applied. */
-  def foldQuantileBatchIdempotent(spark: SparkSession, storePath: String,
-                                  batch: DataFrame,
-                                  grp: org.apache.spark.sql.Column,
-                                  value: org.apache.spark.sql.Column,
-                                  batchId: Long): Boolean =
-    quantileCommit(spark, storePath, batchId).applyIdempotent(
-      quantileWriters(spark, storePath, batch, grp, value))
-
-  /** Streaming incremental quantile-store ingest (s15): a stream of
-    * (group, value) batches folds additive cell-count deltas into the
-    * persisted store — each micro-batch exactly once via
-    * [[foldQuantileBatchIdempotent]]. The corpus is never rescanned;
-    * after the stream drains, [[graft.operators.Quantiles.quantilesFromStore]]
-    * serves exact quantiles whose global ranks come from the
-    * stream-grown store alone. */
-  def streamingQuantileIngest(spark: SparkSession, srcDir: String,
-                              schema: StructType, storePath: String,
-                              checkpoint: String, grpCol: String,
-                              valueCol: String): StreamingQuery =
-    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
-      foldQuantileBatchIdempotent(spark, storePath, batch,
-        col(grpCol), col(valueCol), batchId)
-      ()
-    }
-
-  /** s16's declaration ([[graft.operators.Boilerplate.foldCommit]]
-    * under the streaming names), with the changelog promoted into
-    * `outPath`. */
-  private[graft] def boilerplateCommit(spark: SparkSession, storePath: String,
-                                       outPath: String, batchId: Long): StagedCommit =
-    graft.operators.Boilerplate.foldCommit(spark,
-      graft.operators.Boilerplate.StreamNames, storePath, batchId,
-      Some(outPath))
-
-  /** s16's fold on the AQE-off clone (see [[substrWriters]]), its
-    * changelog stamped `seq = batchId`. */
-  private[graft] def boilerplateWriters(spark: SparkSession, storePath: String,
-                                        batch: DataFrame, batchId: Long,
-                                        minDocs: Long, nBuckets: Int,
-                                        nDocBuckets: Int): Map[String, String => Unit] = {
-    val qs = graft.operators.StoreCompaction.quietSession(spark)
-    graft.operators.Boilerplate.foldWriters(qs, storePath,
-      org.apache.spark.sql.GraftColumnBridge.onSession(qs, batch),
-      "doc_id", "text", minDocs, nBuckets, nDocBuckets, seq = batchId)
-  }
-
-  /** Fold one document micro-batch into a persisted boilerplate store
-    * ([[graft.operators.Boilerplate.buildStore]] layout) exactly once
-    * through [[boilerplateCommit]]. The batch's CHANGELOG (cleaned
-    * batch + re-emissions of stored docs a threshold crossing
-    * invalidated) accumulates under `outPath` with `seq = batchId` —
-    * boilerplate cleaning is RETROACTIVE, so unlike s14's disjoint
-    * outputs the accumulated changelog overlaps and readers resolve
-    * latest-seq-per-doc. Returns whether the batch was applied. */
-  def foldBoilerplateBatchIdempotent(spark: SparkSession, storePath: String,
-                                     outPath: String,
-                                     batch: DataFrame,
-                                     batchId: Long, minDocs: Long,
-                                     nBuckets: Int,
-                                     nDocBuckets: Int): Boolean =
-    boilerplateCommit(spark, storePath, outPath, batchId).applyIdempotent(
-      boilerplateWriters(spark, storePath, batch, batchId, minDocs,
-        nBuckets, nDocBuckets))
-
-  /** Streaming incremental boilerplate ingest (s16): a stream of
-    * MONOTONICALLY-ID'd document batches folds into the persisted
-    * boilerplate store, each micro-batch emitting a changelog segment
-    * (its own cleaned docs + re-emissions of invalidated stored docs)
-    * exactly once. Because the common-line predicate is RETROACTIVE,
-    * the accumulated output is resolved latest-seq-per-doc — and that
-    * resolution equals the full [[graft.operators.Boilerplate.removeCommonLines]]
-    * recompute over corpus ∪ batches (c5's oracle). Per batch the
-    * pair store is read bucket-pruned and the doc store only for the
-    * bounded invalidated-id set — the corpus is never rescanned. */
-  def streamingBoilerplateIngest(spark: SparkSession, srcDir: String,
-                                 schema: StructType, storePath: String,
-                                 outPath: String, checkpoint: String,
-                                 minDocs: Long, nBuckets: Int,
-                                 nDocBuckets: Int): StreamingQuery =
-    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
-      foldBoilerplateBatchIdempotent(spark, storePath, outPath,
-        batch, batchId, minDocs, nBuckets, nDocBuckets)
-      ()
-    }
-
-  private val PackNames = CommitNames("_pack_batch_", ".pack_staging_", "pbatch")
-
-  /** s17's declaration: the batch's span emission (accumulated under
-    * `outPath`; spans are final on emission — the stream only grows
-    * at the end, so segments are disjoint and no latest-wins
-    * resolution is needed) and the additive `_meta` high-water row. */
-  private[graft] def packCommit(spark: SparkSession, storePath: String,
-                                outPath: String, batchId: Long): StagedCommit =
-    PackNames.at(spark, storePath, batchId, Seq(
-      Artifact("out", Some(outPath)),
-      Artifact("meta", Some(s"${storePath}_meta"))))
-
-  private[graft] def packWriters(spark: SparkSession, storePath: String,
-                                 batch: DataFrame, seqLen: Long,
-                                 docsPerShard: Long): Map[String, String => Unit] = {
-    val (spans, newMax, delta) = graft.operators.Pack.computeSpanFold(
-      spark, storePath, batch, "doc_id", col("n"), seqLen, docsPerShard)
-    Map("out" -> (dir => spans.write.parquet(dir)),
-      "meta" -> (dir => graft.operators.StoreMeta.writeFile(spark, dir,
-        graft.operators.Pack.spanMetaFields(newMax, delta, seqLen))))
-  }
-
-  /** Fold one (doc_id, n) token-count micro-batch into a persisted
-    * sequence-packing span store
-    * ([[graft.operators.Pack.buildSpanStore]] layout) exactly once
-    * through [[packCommit]]. Returns whether the batch was applied. */
-  def foldPackBatchIdempotent(spark: SparkSession, storePath: String,
-                              outPath: String,
-                              batch: DataFrame,
-                              batchId: Long, seqLen: Long,
-                              docsPerShard: Long): Boolean =
-    packCommit(spark, storePath, outPath, batchId).applyIdempotent(
-      packWriters(spark, storePath, batch, seqLen, docsPerShard))
-
-  /** Streaming incremental sequence packing (s17): a stream of
-    * MONOTONICALLY-ID'd (doc_id, n_tokens) batches extends the global
-    * token stream at its high-water mark, each micro-batch emitting
-    * its final spans exactly once. The accumulated output ∪-equals a
-    * one-shot [[graft.operators.Pack.packSpans]] over corpus ∪
-    * batches — q97's oracle — because spans are a pure function of
-    * (doc order, counts, seqLen) and emitted segments never change. */
-  def streamingPackIngest(spark: SparkSession, srcDir: String,
-                          schema: StructType, storePath: String,
-                          outPath: String, checkpoint: String,
-                          seqLen: Long, docsPerShard: Long): StreamingQuery =
-    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
-      foldPackBatchIdempotent(spark, storePath, outPath, batch,
-        batchId, seqLen, docsPerShard)
-      ()
-    }
-
   /** Streaming incremental IVF ingest (s13): a stream of vector
     * batches grows a persisted, centroid-partitioned IVF index —
     * each micro-batch is assigned against the FROZEN centroid set and
-    * appended into the partition layout
-    * ([[graft.operators.Similarity.appendToIvfIndex]]); the existing
+    * folded into the partition layout exactly once
+    * ([[graft.operators.Similarity.foldIvfIndex]]); the existing
     * corpus is never re-read, re-assigned, or re-shuffled. This is
     * the s11 move (stream grows persisted state batch by batch)
     * pointed at ANN serving: at 100 TB the index is the big side and
@@ -579,7 +222,115 @@ object StreamingJobs {
                          centroids: DataFrame,
                          checkpoint: String): StreamingQuery =
     eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
-      appendIvfBatchIdempotent(indexPath, centroids, batch, batchId)
+      Similarity.foldIvfIndex(batch.sparkSession, indexPath, batch,
+        batchId, centroids, "vec_id", "embedding")
+      ()
+    }
+
+  /** Streaming incremental ExactSubstr ingest (s14): a stream of
+    * MONOTONICALLY-ID'd document batches folds into the persisted
+    * window-key store, each micro-batch emitting its own cleaned
+    * output exactly once — the d26 fold
+    * ([[graft.operators.DedupSuite.exactSubstrFold]]). The corpus is
+    * never re-windowed: per batch the store join touches only the
+    * batch's own crc32 buckets, and because ids are monotone the
+    * accumulated outputs ∪-equal a full ExactSubstr recompute over
+    * corpus ∪ batches — the s14 gate reads the accumulated `outPath`
+    * against d25's full-pipeline oracle. */
+  def streamingSubstrIngest(spark: SparkSession, srcDir: String,
+                            schema: StructType, storePath: String,
+                            outPath: String, checkpoint: String,
+                            l: Int, nBuckets: Int,
+                            hashKeys: Boolean): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      DedupSuite.exactSubstrFold(spark, storePath, outPath, batch,
+        batchId, "doc_id", "text", l, nBuckets, hashKeys)
+      ()
+    }
+
+  /** Streaming multimodal ingest (s18): a stream of media batches
+    * folds into the persisted Hamming band index, each micro-batch
+    * decoding ONCE (`hashesOf` maps the raw micro-batch to its (id,
+    * 60-bit hash) frame — e.g. a BMP/WAV decode over a binary
+    * column), emitting its new batch-touching pairs exactly once via
+    * the d30 fold ([[graft.operators.DedupSuite.hammingIndexFold]]).
+    * Because a pair's distance never changes and each batch's ids are
+    * fresh, the accumulated pair output ∪-equals the full
+    * [[graft.operators.DedupSuite.hammingPairs]] run over corpus ∪
+    * batches restricted to batch-touching pairs (no hot-bucket cap
+    * trips ⇒ sequential cap decisions are vacuously the full run's —
+    * gate corpora stay far under the cap, and trips are
+    * observe-accounted, never silent); folding them into the corpus's
+    * component labels reproduces the full d29 recompute — the s18
+    * gate. */
+  def streamingHammingIngest(spark: SparkSession, srcDir: String,
+                             schema: StructType, storePath: String,
+                             outPath: String, checkpoint: String,
+                             hashesOf: DataFrame => DataFrame,
+                             idCol: String, hashCol: String,
+                             maxHamming: Int): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      DedupSuite.hammingIndexFold(spark, storePath, outPath,
+        hashesOf(batch), batchId, idCol, hashCol, maxHamming)
+      ()
+    }
+
+  /** Streaming incremental quantile-store ingest (s15): a stream of
+    * (group, value) batches folds additive cell-count deltas into the
+    * persisted store — each micro-batch exactly once via the q96 fold
+    * ([[graft.operators.Quantiles.foldQuantileStore]]). The corpus is
+    * never rescanned; after the stream drains,
+    * [[graft.operators.Quantiles.quantilesFromStore]] serves exact
+    * quantiles whose global ranks come from the stream-grown store
+    * alone. */
+  def streamingQuantileIngest(spark: SparkSession, srcDir: String,
+                              schema: StructType, storePath: String,
+                              checkpoint: String, grpCol: String,
+                              valueCol: String): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      Quantiles.foldQuantileStore(spark, storePath, batch, batchId,
+        col(grpCol), col(valueCol))
+      ()
+    }
+
+  /** Streaming incremental boilerplate ingest (s16): a stream of
+    * MONOTONICALLY-ID'd document batches folds into the persisted
+    * boilerplate store through the c5 fold
+    * ([[graft.operators.Boilerplate.fold]]), each micro-batch emitting
+    * a changelog segment (its own cleaned docs + re-emissions of
+    * invalidated stored docs, `seq` = the batch id) exactly once.
+    * Because the common-line predicate is RETROACTIVE, the accumulated
+    * output is resolved latest-seq-per-doc — and that resolution
+    * equals the full [[graft.operators.Boilerplate.removeCommonLines]]
+    * recompute over corpus ∪ batches (c5's oracle). Per batch the
+    * pair store is read bucket-pruned and the doc store only for the
+    * bounded invalidated-id set — the corpus is never rescanned. */
+  def streamingBoilerplateIngest(spark: SparkSession, srcDir: String,
+                                 schema: StructType, storePath: String,
+                                 outPath: String, checkpoint: String,
+                                 minDocs: Long, nBuckets: Int,
+                                 nDocBuckets: Int): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      Boilerplate.fold(spark, storePath, outPath, batch, batchId,
+        "doc_id", "text", minDocs, nBuckets, nDocBuckets)
+      ()
+    }
+
+  /** Streaming incremental sequence packing (s17): a stream of
+    * MONOTONICALLY-ID'd (doc_id, n_tokens) batches extends the global
+    * token stream at its high-water mark through the q98 fold
+    * ([[graft.operators.Pack.foldSpans]]), each micro-batch emitting
+    * its final spans exactly once. The accumulated output ∪-equals a
+    * one-shot [[graft.operators.Pack.packSpans]] over corpus ∪
+    * batches — q97's oracle — because spans are a pure function of
+    * (doc order, counts, seqLen) and emitted segments never change. */
+  def streamingPackIngest(spark: SparkSession, srcDir: String,
+                          schema: StructType, storePath: String,
+                          outPath: String, checkpoint: String,
+                          seqLen: Long, docsPerShard: Long): StreamingQuery =
+    eachFile(spark, srcDir, schema, checkpoint) { (batch, batchId) =>
+      Pack.foldSpans(spark, storePath, outPath, batch, batchId, "doc_id",
+        col("n"), seqLen, docsPerShard)
       ()
     }
 

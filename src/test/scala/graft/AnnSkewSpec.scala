@@ -132,7 +132,8 @@ class AnnSkewSpec extends SparkSpec {
     // grown index: base build + frozen-centroid append
     val grown = java.nio.file.Files.createTempDirectory("ivf_inc").toString + "/index"
     val cent = Similarity.buildIvfIndex(emb, grown, "vec_id", "embedding", 16)
-    Similarity.appendToIvfIndex(batch, grown, cent, "vec_id", "embedding")
+    assert(Similarity.foldIvfIndex(spark, grown, batch, 1L, cent,
+      "vec_id", "embedding"))
     val served = Similarity.queryIvfIndex(spark, grown, cent, queries,
       "vec_id", "embedding", k = 5, nProbe = 4)
     // rebuild: one index over corpus ∪ batch (same centroid seed —
@@ -164,8 +165,8 @@ class AnnSkewSpec extends SparkSpec {
     (1 to 6).foreach { i =>
       val b = emb.filter($"vec_id" % 5 === i % 5)
         .select(($"vec_id" + i * 100000L).as("vec_id"), $"embedding")
-      Similarity.appendToIvfIndex(b, root, cent, "vec_id", "embedding",
-        autoCompactTrigger = 3)
+      Similarity.foldIvfIndex(spark, root, b, i.toLong, cent, "vec_id",
+        "embedding", autoCompactTrigger = 3)
     }
     val counts = graft.operators.StoreCompaction.partitionFileCounts(spark, root)
     assert(counts.values.max < 3,

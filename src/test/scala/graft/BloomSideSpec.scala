@@ -23,14 +23,14 @@ class BloomSideSpec extends SparkSpec {
     val docs = substrFixture
     val full = DedupSuite.exactSubstrDedup(docs, "doc_id", "text", 8,
       hashKeys = true)
-    val store = java.nio.file.Files
-      .createTempDirectory("substr_bloom").toString + "/state"
+    val root = java.nio.file.Files.createTempDirectory("substr_bloom").toString
+    val (store, out) = (s"$root/state", s"$root/out")
     val out1 = DedupSuite.exactSubstrBuildStore(
       docs.filter(col("doc_id") < 14), "doc_id", "text", 8, store,
       nBuckets = 16, hashKeys = true, bloomSide = true)
     assert(BloomSide.maintained(spark, store), "build must seed the sidecar")
-    val out2 = DedupSuite.exactSubstrFold(spark, store,
-      docs.filter(col("doc_id") >= 14 && col("doc_id") < 27),
+    DedupSuite.exactSubstrFold(spark, store, out,
+      docs.filter(col("doc_id") >= 14 && col("doc_id") < 27), 1L,
       "doc_id", "text", 8, nBuckets = 16, hashKeys = true)
     // the fold appended delta blooms: some bucket dir now has > 1 row
     val preVacRows = spark.read.parquet(s"$store/${BloomSide.DirName}")
@@ -43,10 +43,11 @@ class BloomSideSpec extends SparkSpec {
       .agg(max(col("count"))).head().getLong(0)
     assert(perBucket == 1L,
       "vacuum must rebuild the sidecar to one bloom row per bucket")
-    val out3 = DedupSuite.exactSubstrFold(spark, store,
-      docs.filter(col("doc_id") >= 27), "doc_id", "text", 8,
+    DedupSuite.exactSubstrFold(spark, store, out,
+      docs.filter(col("doc_id") >= 27), 2L, "doc_id", "text", 8,
       nBuckets = 16, hashKeys = true)
-    val folded = out1.unionByName(out2).unionByName(out3)
+    val folded = out1.unionByName(spark.read.parquet(out)
+      .select(col("doc_id"), col("clean_text"), col("n_removed")))
     assert(full.exceptAll(folded).isEmpty &&
       folded.exceptAll(full).isEmpty,
       "fold over a bloom-maintained store must reproduce the full recompute")
@@ -56,15 +57,17 @@ class BloomSideSpec extends SparkSpec {
     // the bloom must HIT for the stored run's bucket or the fold would
     // skip the bucket and wrongly keep the batch copy
     val run = "s1 s2 s3 s4 s5 s6 s7 s8"
-    val store = java.nio.file.Files
-      .createTempDirectory("substr_bloom_single").toString + "/state"
+    val root = java.nio.file.Files
+      .createTempDirectory("substr_bloom_single").toString
+    val (store, out) = (s"$root/state", s"$root/out")
     DedupSuite.exactSubstrBuildStore(
       Seq((1L, s"$run alpha beta")).toDF("doc_id", "text"),
       "doc_id", "text", 8, store, bloomSide = true)
-    val out2 = DedupSuite.exactSubstrFold(spark, store,
-      Seq((2L, s"pre0 pre1 $run post0")).toDF("doc_id", "text"),
+    DedupSuite.exactSubstrFold(spark, store, out,
+      Seq((2L, s"pre0 pre1 $run post0")).toDF("doc_id", "text"), 1L,
       "doc_id", "text", 8)
-      .collect().map(r => (r.getString(1), r.getLong(2))).head
+    val out2 = spark.read.parquet(out).select("clean_text", "n_removed")
+      .collect().map(r => (r.getString(0), r.getLong(1))).head
     assert(out2 == (("pre0 pre1 post0", 8L)), s"got $out2")
   }
 
@@ -158,10 +161,9 @@ class BloomSideSpec extends SparkSpec {
     val out1 = DedupSuite.exactSubstrBuildStore(
       docs.filter(col("doc_id") < 14), "doc_id", "text", 8, store,
       nBuckets = 16, hashKeys = true, bloomSide = true)
-    val applied = graft.streaming.StreamingJobs.foldSubstrBatchIdempotent(
-      spark, store, outDir,
-      docs.filter(col("doc_id") >= 14 && col("doc_id") < 27),
-      batchId = 0L, l = 8, nBuckets = 16, hashKeys = true)
+    val applied = DedupSuite.exactSubstrFold(spark, store, outDir,
+      docs.filter(col("doc_id") >= 14 && col("doc_id") < 27), 0L,
+      "doc_id", "text", 8, nBuckets = 16, hashKeys = true)
     assert(applied, "first application of the batch must fold")
     // coverage: every stored key's hash hits a bloom row in its bucket
     val stored = spark.read.parquet(store)
@@ -176,20 +178,19 @@ class BloomSideSpec extends SparkSpec {
         s"bucket $b lost coverage for a stored key after the streamed fold")
     }
     // and a replay of the same batch must be a no-op skip
-    assert(!graft.streaming.StreamingJobs.foldSubstrBatchIdempotent(
-      spark, store, outDir,
-      docs.filter(col("doc_id") >= 14 && col("doc_id") < 27),
-      batchId = 0L, l = 8, nBuckets = 16, hashKeys = true))
-    // end-to-end exactness over the grown store: batch fold on top of
-    // the streamed fold still reproduces the full recompute
-    val out3 = DedupSuite.exactSubstrFold(spark, store,
-      docs.filter(col("doc_id") >= 27), "doc_id", "text", 8,
+    assert(!DedupSuite.exactSubstrFold(spark, store, outDir,
+      docs.filter(col("doc_id") >= 14 && col("doc_id") < 27), 0L,
+      "doc_id", "text", 8, nBuckets = 16, hashKeys = true))
+    // end-to-end exactness over the grown store: a second fold on top
+    // of the first still reproduces the full recompute
+    DedupSuite.exactSubstrFold(spark, store, outDir,
+      docs.filter(col("doc_id") >= 27), 1L, "doc_id", "text", 8,
       nBuckets = 16, hashKeys = true)
-    val out2 = spark.read.parquet(outDir)
+    val folds = spark.read.parquet(outDir)
       .select(col("doc_id"), col("clean_text"), col("n_removed"))
     val full = DedupSuite.exactSubstrDedup(docs, "doc_id", "text", 8,
       hashKeys = true)
-    val folded = out1.unionByName(out2).unionByName(out3)
+    val folded = out1.unionByName(folds)
     assert(full.exceptAll(folded).isEmpty &&
       folded.exceptAll(full).isEmpty,
       "streamed + batch folds over a bloom store must equal the full recompute")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Boilerplate
 
@@ -17,6 +18,28 @@ class BoilerplateStoreSpec extends SparkSpec {
   private val nB = 16
 
   private def docsDf(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+
+  /** The changelog rows batch `id` emitted into `<store>-out`. */
+  private def emitted(store: String, id: Long): DataFrame =
+    spark.read.parquet(s"$store-out").filter(col("seq") === id)
+      .select(col("doc_id"), col("clean_text"), col("n_removed"))
+
+  private def asMap(df: DataFrame): Map[Long, (String, Long)] =
+    df.collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+
+  /** Fold `batch` into `store` as batch `id`, its changelog into
+    * `<store>-out`; returns whether it applied. */
+  private def fold(store: String, batch: DataFrame, id: Long,
+                   minDocs: Long = m): Boolean =
+    Boilerplate.fold(spark, store, s"$store-out", batch, id, "doc_id",
+      "text", minDocs, nB, 8)
+
+  /** [[fold]], then the changelog that fold emitted. */
+  private def foldEmits(store: String, batch: DataFrame, id: Long,
+                        minDocs: Long = m): Map[Long, (String, Long)] = {
+    fold(store, batch, id, minDocs)
+    asMap(emitted(store, id))
+  }
 
   // promo line reaches nd=2 in the build, crosses (nd=3) in fold 1,
   // and is already dictionary boilerplate by fold 2
@@ -40,8 +63,7 @@ class BoilerplateStoreSpec extends SparkSpec {
     // build: promo nd=2 < 3 — docs 1,2 ship with promo still present
     assert(e0(1L)._1 == "promo line\nalpha one" && e0(1L)._2 == 0L)
 
-    val e1 = Boilerplate.fold(spark, store, batch1, "doc_id", "text", m, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val e1 = foldEmits(store, batch1, 1L)
     // fold 1: promo crosses (2 stored + 1 batch = 3) → batch doc 5 is
     // cleaned AND stored docs 1,2 are re-emitted cleaned
     assert(e1.keySet === Set(1L, 2L, 5L, 6L))
@@ -49,8 +71,7 @@ class BoilerplateStoreSpec extends SparkSpec {
     assert(e1(1L) === (("alpha one", 1L)), "invalidated build doc re-emitted")
     assert(e1(2L) === (("beta two", 1L)))
 
-    val e2 = Boilerplate.fold(spark, store, batch2, "doc_id", "text", m, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val e2 = foldEmits(store, batch2, 2L)
     // fold 2: promo already in the dictionary — no re-emission
     assert(e2.keySet === Set(7L, 8L))
     assert(e2(7L) === (("theta eight", 1L)))
@@ -92,7 +113,7 @@ class BoilerplateStoreSpec extends SparkSpec {
     // a dictionary line's pairs and count deltas are NOT appended
     // (sub-threshold invariant: crossed lines never rejoin the
     // candidate path)
-    Boilerplate.fold(spark, store, batch1, "doc_id", "text", m, nB, 8).count()
+    fold(store, batch1, 1L)
     val promoBucket = Boilerplate.bucketOf("promo line", nB)
     val promoRows = Boilerplate.pairStoreRows(spark, store, Seq(promoBucket))
       .filter(col("line") === "promo line").count()
@@ -106,11 +127,11 @@ class BoilerplateStoreSpec extends SparkSpec {
 
     // monotonicity and layout mismatches fail loudly
     val eMono = intercept[IllegalArgumentException] {
-      Boilerplate.fold(spark, store, build, "doc_id", "text", m, nB, 8)
+      fold(store, build, 2L)
     }
     assert(eMono.getMessage.contains("monotonic"))
     val eLayout = intercept[IllegalArgumentException] {
-      Boilerplate.fold(spark, store, batch2, "doc_id", "text", m + 1, nB, 8)
+      fold(store, batch2, 3L, m + 1)
     }
     assert(eLayout.getMessage.contains("layout mismatch"))
   }
@@ -153,9 +174,7 @@ class BoilerplateStoreSpec extends SparkSpec {
 
     // end-to-end through the public fold: the escalated crossing
     // re-emits its stored carriers and latest-wins equals the recompute
-    val e1 = Boilerplate.fold(spark, store, ghostBatch, "doc_id", "text",
-        m5, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val e1 = foldEmits(store, ghostBatch, 1L, m5)
     assert(e1.keySet === Set(1L, 2L, 7L, 8L, 9L))
     assert(e1(1L) === (("a one", 1L)) && e1(2L) === (("b two", 1L)),
       "stored carriers of the escalated crossing are re-emitted cleaned")
@@ -183,16 +202,14 @@ class BoilerplateStoreSpec extends SparkSpec {
     assert(!Boilerplate.computeFold(spark, store, batch1, "doc_id", "text",
         m5, nB, 8).escalatedFull,
       "pnd + ndb below the gap must not escalate")
-    val e1 = Boilerplate.fold(spark, store, batch1, "doc_id", "text", m5, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val e1 = foldEmits(store, batch1, 1L, m5)
     assert(e1.keySet === Set(3L), "no crossing at nd=2")
     val batch2 = docsDf((4L, "ghost line\nd four"),
       (5L, "ghost line\ne five"), (6L, "ghost line\nf six"))
     assert(Boilerplate.computeFold(spark, store, batch2, "doc_id", "text",
         m5, nB, 8).escalatedFull,
       "post-refresh deltas must count toward the escalation gap")
-    val e2 = Boilerplate.fold(spark, store, batch2, "doc_id", "text", m5, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val e2 = foldEmits(store, batch2, 2L, m5)
     assert(e2.keySet === Set(1L, 3L, 4L, 5L, 6L),
       "carriers from the build AND the earlier fold are re-emitted")
     val full = Boilerplate.removeCommonLines(
@@ -213,43 +230,32 @@ class BoilerplateStoreSpec extends SparkSpec {
         planStr.take(2000))
   }
 
-  test("crash window between marker and sweep: replay returns the staged changelog, then sweeps") {
+  test("crash window between marker and sweep: the replay skips and sweeps; the changelog lands once") {
     import java.nio.file.{Files, Paths}
     val tmp = java.nio.file.Files.createTempDirectory("boiler_crash")
     val store = s"$tmp/state"
-    Boilerplate.buildStore(build, "doc_id", "text", m, store, nB, 8).count()
+    val e0 = asMap(Boilerplate.buildStore(build, "doc_id", "text", m, store, nB, 8))
     // reproduce the exact window: staged + promoted + marker created,
-    // but the staging never swept and the changelog never delivered
-    val foldId = 6L // batch1's doc high-water
-    val staging = Paths.get(store, s".boiler_fold_staging_$foldId")
-    val commit = Boilerplate.foldCommit(spark, Boilerplate.FoldNames, store,
-      foldId, None)
+    // but the staging never swept
+    val staging = Paths.get(store, ".boiler_staging_1")
+    val commit = Boilerplate.foldCommit(spark, store, s"$store-out", 1L)
     commit.stage(Boilerplate.foldWriters(spark, store, batch1, "doc_id",
-      "text", m, nB, 8, seq = foldId))
+      "text", m, nB, 8, seq = 1L))
     commit.promote()
     assert(Files.exists(staging.resolve("_SUCCESS")))
-    Files.createFile(Paths.get(store, s"_boiler_fold_$foldId"))
-    // the replay must recover the staged changelog instead of
-    // stranding it behind an 'already applied' error
-    val e1 = Boilerplate.fold(spark, store, batch1, "doc_id", "text", m, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    Files.createFile(Paths.get(store, "_boiler_batch_1"))
+    // the changelog was promoted with the store artifacts, so the
+    // replay has nothing to deliver: it skips and sweeps
+    assert(!fold(store, batch1, 1L), "a marked batch must be skipped")
+    assert(!Files.exists(staging), "the replay sweeps the staging")
+    assert(emitted(store, 1L).count() == 4L, "the changelog landed once")
+    val e1 = asMap(emitted(store, 1L))
     assert(e1.keySet === Set(1L, 2L, 5L, 6L))
     assert(e1(5L) === (("zeta six", 1L)) && e1(1L) === (("alpha one", 1L)))
-    assert(!Files.exists(staging), "recovery sweeps the staging")
-    // with the changelog delivered and the staging gone, a THIRD run
-    // is a genuine caller replay and fails loudly
-    val e = intercept[IllegalArgumentException] {
-      Boilerplate.fold(spark, store, batch1, "doc_id", "text", m, nB, 8)
-    }
-    assert(e.getMessage.contains("already applied"))
     // the store was promoted exactly once: a later fold stays exact
-    val e2 = Boilerplate.fold(spark, store, batch2, "doc_id", "text", m, nB, 8)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-    val full = Boilerplate.removeCommonLines(
-        build.unionByName(batch1).unionByName(batch2), "doc_id", "text", m)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
-    val e0 = Boilerplate.removeCommonLines(build, "doc_id", "text", m)
-      .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
+    val e2 = foldEmits(store, batch2, 2L)
+    val full = asMap(Boilerplate.removeCommonLines(
+        build.unionByName(batch1).unionByName(batch2), "doc_id", "text", m))
     assert((e0 ++ e1 ++ e2) === full)
   }
 
@@ -258,12 +264,13 @@ class BoilerplateStoreSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("boiler_sweep")
     val store = s"$tmp/state"
     Boilerplate.buildStore(build, "doc_id", "text", m, store, nB, 8).count()
-    Boilerplate.fold(spark, store, batch1, "doc_id", "text", m, nB, 8).count()
-    assert(Files.exists(Paths.get(store, "_boiler_fold_6")))
+    fold(store, batch1, 1L)
+    fold(store, batch2, 2L)
+    assert(Files.exists(Paths.get(store, "_boiler_batch_1")))
     // a surviving fold staging = a crashed fold awaiting replay; the
     // vacuum's rewrites would collapse the delta files its replay
     // re-promotes — refuse loudly
-    val pending = Paths.get(store, ".boiler_fold_staging_99")
+    val pending = Paths.get(store, ".boiler_staging_99")
     Files.createDirectories(pending)
     val eV = intercept[IllegalArgumentException] {
       Boilerplate.vacuumStore(spark, store)
@@ -271,13 +278,17 @@ class BoilerplateStoreSpec extends SparkSpec {
     assert(eV.getMessage.contains("replay"))
     Files.delete(pending)
     Boilerplate.vacuumStore(spark, store)
-    assert(new java.io.File(store).list()
-      .forall(!_.startsWith("_boiler_fold_")),
-      "completed-fold markers are swept by the vacuum")
+    assert(new java.io.File(store).list().filter(_.startsWith("_boiler_batch_"))
+      .toSet == Set("_boiler_batch_2"),
+      "completed-fold markers but the newest are swept by the vacuum")
+    // the newest batch still replays as a skip
+    val before = spark.read.parquet(s"$store-out").count()
+    assert(!fold(store, batch2, 2L), "the newest batch's replay skips")
+    assert(spark.read.parquet(s"$store-out").count() == before)
     // a swept marker cannot enable a silent replay: the monotonic
     // guard still rejects it
     val eM = intercept[IllegalArgumentException] {
-      Boilerplate.fold(spark, store, batch1, "doc_id", "text", m, nB, 8)
+      fold(store, batch1, 1L)
     }
     assert(eM.getMessage.contains("monotonic"))
   }
@@ -294,9 +305,10 @@ class BoilerplateStoreSpec extends SparkSpec {
     val bB = docsDf((7L, "footer line\ng seven"), (8L, "h eight"))
     def runTo(store: String, vacuum: Boolean) = {
       Boilerplate.buildStore(vb, "doc_id", "text", m, store, nB, 8).count()
-      Boilerplate.fold(spark, store, bA, "doc_id", "text", m, nB, 8).count()
+      fold(store, bA, 1L)
       if (vacuum) Boilerplate.vacuumStore(spark, store)
-      Boilerplate.fold(spark, store, bB, "doc_id", "text", m, nB, 8)
+      fold(store, bB, 2L)
+      emitted(store, 2L)
     }
     val tmp = java.nio.file.Files.createTempDirectory("boiler_vac")
     val (sv, sp) = (s"$tmp/vac", s"$tmp/plain")

@@ -429,10 +429,15 @@ class DedupSuiteSpec extends SparkSpec {
       if ids(ia) || ids(ib)
       h = java.lang.Long.bitCount(ha ^ hb) if h <= 3
     } yield (ia, ib, h.toLong)).toSet
-    val p1 = DedupSuite.hammingIndexFold(spark, store, b1, "doc_id", "ph",
-        maxHamming = 3, autoCompactTrigger = 0)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Long)]
-      .collect().toSet
+    // each fold's emission, from its own output dir
+    def fold(batch: org.apache.spark.sql.DataFrame, id: Long): Set[(Long, Long, Long)] = {
+      DedupSuite.hammingIndexFold(spark, store, s"$tmp/out$id", batch, id,
+        "doc_id", "ph", maxHamming = 3, autoCompactTrigger = 0)
+      spark.read.parquet(s"$tmp/out$id")
+        .select("id_a", "id_b", "hamming").as[(Long, Long, Long)]
+        .collect().toSet
+    }
+    val p1 = fold(b1, 1L)
     val want1 = DedupSuite.incrementalHammingPairs(index, b1,
         "doc_id", "ph", maxHamming = 3, bands = 4)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Long)]
@@ -441,10 +446,7 @@ class DedupSuiteSpec extends SparkSpec {
       s"store fold 1 diverged: ${want1.diff(p1)} / ${p1.diff(want1)}")
     // row-invariant maintenance between folds (the d26 mid-gate move)
     graft.operators.StoreCompaction.compactStore(spark, store)
-    val p2 = DedupSuite.hammingIndexFold(spark, store, b2, "doc_id", "ph",
-        maxHamming = 3, autoCompactTrigger = 0)
-      .select("id_a", "id_b", "hamming").as[(Long, Long, Long)]
-      .collect().toSet
+    val p2 = fold(b2, 2L)
     val want2 = DedupSuite.incrementalHammingPairs(
         index.unionByName(b1), b2, "doc_id", "ph",
         maxHamming = 3, bands = 4)
@@ -532,6 +534,17 @@ class DedupSuiteSpec extends SparkSpec {
       "hashed-key plan must reproduce the text-keyed result")
   }
 
+  /** Fold `batch` into `store` as batch `id`; returns the rows that
+    * fold emitted (its own output dir). */
+  private def substrFold(store: String, batch: DataFrame, id: Long,
+                         l: Int = 8, nBuckets: Int = 64,
+                         hashKeys: Boolean = false): DataFrame = {
+    val out = s"$store-out$id"
+    DedupSuite.exactSubstrFold(spark, store, out, batch, id, "doc_id",
+      "text", l, nBuckets, hashKeys)
+    spark.read.parquet(out).select("doc_id", "clean_text", "n_removed")
+  }
+
   private def substrFixture: DataFrame = {
     val run = "one two three four five six seven eight nine ten"
     (0L until 40L).map { i =>
@@ -549,20 +562,18 @@ class DedupSuiteSpec extends SparkSpec {
       val out1 = DedupSuite.exactSubstrBuildStore(
         docs.filter(col("doc_id") < 14), "doc_id", "text", 8, store,
         nBuckets = 16, hashKeys = hashed)
-      val out2 = DedupSuite.exactSubstrFold(spark, store,
-        docs.filter(col("doc_id") >= 14 && col("doc_id") < 27),
-        "doc_id", "text", 8, nBuckets = 16, hashKeys = hashed)
+      val out2 = substrFold(store,
+        docs.filter(col("doc_id") >= 14 && col("doc_id") < 27), 1L,
+        nBuckets = 16, hashKeys = hashed)
       // maintenance mid-run: collapse each key's build+delta rows —
       // fold 3 must read the vacuumed store identically, and every
-      // key holds exactly one row afterwards (out2 stays valid: the
-      // fold's store join is eagerly checkpointed, never re-scanned)
+      // key holds exactly one row afterwards
       DedupSuite.vacuumSubstrStore(spark, store)
       val maxRows = spark.read.parquet(store).groupBy(col("wkey"))
         .count().agg(max(col("count"))).head().getLong(0)
       assert(maxRows == 1L,
         "vacuum must collapse deltas to one row per window key")
-      val out3 = DedupSuite.exactSubstrFold(spark, store,
-        docs.filter(col("doc_id") >= 27), "doc_id", "text", 8,
+      val out3 = substrFold(store, docs.filter(col("doc_id") >= 27), 2L,
         nBuckets = 16, hashKeys = hashed)
       val folded = out1.unionByName(out2).unionByName(out3)
       assert(full.exceptAll(folded).isEmpty &&
@@ -584,9 +595,8 @@ class DedupSuiteSpec extends SparkSpec {
       "doc_id", "text", 8, store)
     assert(out1.collect().head.getLong(2) == 0L,
       "initial singleton occurrence is kept intact")
-    val out2 = DedupSuite.exactSubstrFold(spark, store,
-      Seq((2L, s"pre0 pre1 $run post0")).toDF("doc_id", "text"),
-      "doc_id", "text", 8)
+    val out2 = substrFold(store,
+      Seq((2L, s"pre0 pre1 $run post0")).toDF("doc_id", "text"), 1L)
       .collect().map(r => (r.getString(1), r.getLong(2))).head
     assert(out2 == (("pre0 pre1 post0", 8L)), s"got $out2")
   }
@@ -597,8 +607,7 @@ class DedupSuiteSpec extends SparkSpec {
     DedupSuite.exactSubstrBuildStore(
       substrFixture.filter(col("doc_id") < 20), "doc_id", "text", 8, store)
     val e = intercept[IllegalArgumentException] {
-      DedupSuite.exactSubstrFold(spark, store,
-        substrFixture.filter(col("doc_id") >= 15), "doc_id", "text", 8)
+      substrFold(store, substrFixture.filter(col("doc_id") >= 15), 1L)
     }
     assert(e.getMessage.contains("monotonic-ingest"))
   }
@@ -615,15 +624,13 @@ class DedupSuiteSpec extends SparkSpec {
     val batch = substrFixture.filter(col("doc_id") >= 20)
     for ((l2, nb2, hk2) <- Seq((9, 16, false), (8, 32, false), (8, 16, true))) {
       val e = intercept[IllegalArgumentException] {
-        DedupSuite.exactSubstrFold(spark, store, batch, "doc_id", "text",
-          l2, nBuckets = nb2, hashKeys = hk2)
+        substrFold(store, batch, 1L, l2, nBuckets = nb2, hashKeys = hk2)
       }
       assert(e.getMessage.contains("store layout mismatch"),
         s"(l=$l2, nBuckets=$nb2, hashKeys=$hk2) must be rejected")
     }
     // matched parameters still fold
-    assert(DedupSuite.exactSubstrFold(spark, store, batch, "doc_id",
-      "text", 8, nBuckets = 16, hashKeys = false).count() > 0)
+    assert(substrFold(store, batch, 1L, nBuckets = 16).count() > 0)
   }
 
   test("exactSubstr fold reads only the batch's bucket partitions") {
@@ -667,9 +674,8 @@ class DedupSuiteSpec extends SparkSpec {
     // and the fold built on this read still cuts a stored duplicate
     val batchText = substrFixture.filter(col("doc_id") === 1L)
       .select("text").as[String].head()
-    val out = DedupSuite.exactSubstrFold(spark, store,
-      Seq((99L, batchText)).toDF("doc_id", "text"),
-      "doc_id", "text", 8, nBuckets = 16)
+    val out = substrFold(store, Seq((99L, batchText)).toDF("doc_id", "text"),
+      1L, nBuckets = 16)
     assert(out.collect().head.getLong(2) > 0L,
       "duplicated batch text must be cut against the stored original")
   }
@@ -680,9 +686,9 @@ class DedupSuiteSpec extends SparkSpec {
     // fold's delta. With identical store-scan canonical forms (same
     // path; nBuckets=1 forces the same `bucket IN (0)` filter on
     // every fold), exchange reuse would serve fold B's scan from
-    // fold A's materialization — listed BEFORE A's append — and the
-    // cross-batch duplicate would silently survive. The fold now
-    // checkpoints its store join eagerly, so the union carries no
+    // fold A's materialization — listed BEFORE A's delta landed — and
+    // the cross-batch duplicate would silently survive. Each fold
+    // writes its emission before it returns, so the union carries no
     // store scan at all.
     val run = "cb1 cb2 cb3 cb4 cb5 cb6 cb7 cb8"
     val build = Seq((0L, "z1 z2 z3 z4 z5 z6 z7 z8 z9")).toDF("doc_id", "text")
@@ -692,10 +698,8 @@ class DedupSuiteSpec extends SparkSpec {
       .createTempDirectory("substr_union").toString + "/state"
     val o1 = DedupSuite.exactSubstrBuildStore(build, "doc_id", "text", 8,
       store, nBuckets = 1)
-    val o2 = DedupSuite.exactSubstrFold(spark, store, bA,
-      "doc_id", "text", 8, nBuckets = 1)
-    val o3 = DedupSuite.exactSubstrFold(spark, store, bB,
-      "doc_id", "text", 8, nBuckets = 1)
+    val o2 = substrFold(store, bA, 1L, nBuckets = 1)
+    val o3 = substrFold(store, bB, 2L, nBuckets = 1)
     // materialize the three AS ONE PLAN — the failing shape
     val got = o1.unionByName(o2).unionByName(o3)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet

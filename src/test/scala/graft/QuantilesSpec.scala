@@ -189,9 +189,9 @@ class QuantilesSpec extends SparkSpec {
       .toString + "/store"
     Quantiles.buildQuantileStore(seed.toDF("g", "x"), col("g"), col("x"),
       store, cellBits = 6)
-    Quantiles.foldQuantileStore(spark, store, b1.toDF("g", "x"),
+    Quantiles.foldQuantileStore(spark, store, b1.toDF("g", "x"), 1L,
       col("g"), col("x"))
-    Quantiles.foldQuantileStore(spark, store, b2.toDF("g", "x"),
+    Quantiles.foldQuantileStore(spark, store, b2.toDF("g", "x"), 2L,
       col("g"), col("x"))
     assert(served(store, corpus) === brute(corpus, qs))
     assert(served(store, corpus) === run(corpus))
@@ -208,7 +208,7 @@ class QuantilesSpec extends SparkSpec {
     Quantiles.buildQuantileStore(rows.take(1000).toDF("g", "x"),
       col("g"), col("x"), store, cellBits = 4)
     Quantiles.foldQuantileStore(spark, store, rows.drop(1000).toDF("g", "x"),
-      col("g"), col("x"))
+      1L, col("g"), col("x"))
     assert(served(store, rows, all) === brute(rows, all))
   }
 

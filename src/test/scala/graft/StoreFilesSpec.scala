@@ -5,8 +5,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{BloomSide, Quantiles, StoreCompaction, StoreFiles, VersionedStaging}
-import graft.streaming.StreamingJobs
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import graft.operators.{BloomSide, Boilerplate, DedupSuite, Quantiles, StoreCompaction, StoreFiles, VersionedStaging}
 
 /** The store publish primitives on the Hadoop FileSystem API, and a
   * crash matrix over every operation that publishes through them: on
@@ -27,6 +30,57 @@ class StoreFilesSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  /** The rows of the parquet data files under `dir`, each prefixed
+    * with its partition dirs, sorted — read on the driver, so a crash
+    * matrix's state check runs no Spark job. Entries named `_*` or
+    * `.*` below `dir` are skipped, as Spark's reader skips them. */
+  private def rowsOf(dir: String): Seq[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = StoreFiles.fs(spark, dir)
+    def render(g: Group): String = {
+      val t = g.getType
+      (0 until t.getFieldCount).map { i =>
+        val f = t.getType(i)
+        (0 until g.getFieldRepetitionCount(i)).map { j =>
+          if (!f.isPrimitive) render(g.getGroup(i, j))
+          else if (f.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.BINARY)
+            g.getBinary(i, j).getBytes.map("%02x".format(_)).mkString
+          else g.getValueToString(i, j)
+        }.mkString(s"${f.getName}=", "|", "")
+      }.mkString("{", ",", "}")
+    }
+    def walk(d: Path, parts: String): Seq[String] =
+      StoreFiles.list(fs, d).filterNot(st =>
+          Seq("_", ".").exists(st.getPath.getName.startsWith)).flatMap { st =>
+        if (st.isDirectory) walk(st.getPath, s"$parts${st.getPath.getName}/")
+        else if (!StoreFiles.isDataFile(st.getPath.getName)) Nil
+        else {
+          val r = ParquetReader.builder(new GroupReadSupport(), st.getPath)
+            .withConf(conf).build()
+          try Iterator.continually(r.read()).takeWhile(_ != null)
+            .map(g => parts + render(g)).toList
+          finally r.close()
+        }
+      }
+    walk(new Path(dir), "").sorted
+  }
+
+  /** `body` with every shuffle in one partition and no generated code,
+    * so a small fold commits the fewest files and compiles nothing: its
+    * crash matrix runs it twice per injection point. */
+  private def smallFold[A](body: => A): A = {
+    val confs = Map("spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Build a store once under a `faultfs:` root; then, for every
     * injection point N of `op` over a copy of it, crash at N, replay
     * `op` unarmed and compare `state` with a clean run's. Returns the
@@ -42,6 +96,7 @@ class StoreFilesSpec extends SparkSpec {
     }
     val (cleanDir, clean) = copy()
     val n = FaultFs.count(op(clean))
+    info(s"$name: $n injection points")
     val want = state(clean)
     (1L to n).foreach { k =>
       val (local, dir) = copy()
@@ -82,11 +137,54 @@ class StoreFilesSpec extends SparkSpec {
       Quantiles.buildQuantileStore(rows.filter($"x" % 2 === 0), col("g"),
         col("x"), s"$root/store", cellBits = 6)
     } { root =>
-      StreamingJobs.foldQuantileBatchIdempotent(spark, s"$root/store",
-        rows.filter($"x" % 2 =!= 0), col("g"), col("x"), 0L)
+      Quantiles.foldQuantileStore(spark, s"$root/store",
+        rows.filter($"x" % 2 =!= 0), 0L, col("g"), col("x"))
       ()
     } { root => sortedRows(spark.read.parquet(s"$root/store")) }
     assert(n >= 5)
+  }
+
+  test("crash matrix: the substr fold on a bloom-maintained store converges from every crash point") {
+    def docs(ids: Range) = ids.map(i => (i.toLong,
+        s"body $i words here" + (if (i % 3 == 0) " shared tail a b c d e f" else "")))
+      .toDF("doc_id", "text").coalesce(1)
+    val n = smallFold(crashMatrix("substr") { root =>
+      DedupSuite.exactSubstrBuildStore(docs(0 until 6), "doc_id", "text", 4,
+        s"$root/store", nBuckets = 1, hashKeys = true, bloomSide = true)
+      ()
+    } { root =>
+      DedupSuite.exactSubstrFold(spark, s"$root/store", s"$root/out",
+        docs(6 until 12), 1L, "doc_id", "text", 4, nBuckets = 1,
+        hashKeys = true)
+      ()
+    } { root =>
+      val store = s"$root/store"
+      (rowsOf(store), rowsOf(s"${store}_meta"),
+        rowsOf(s"$store/${BloomSide.DirName}"), rowsOf(s"$root/out"))
+    })
+    assert(n >= 10)
+  }
+
+  test("crash matrix: a c5-shaped boilerplate fold converges from every crash point") {
+    // "promo" reaches the threshold in the batch, so the fold also
+    // re-emits the stored docs that carry it
+    def docs(ids: Range) = ids.map(i => (i.toLong,
+        (if (i % 2 == 0) "promo line\n" else "") + s"body $i"))
+      .toDF("doc_id", "text").coalesce(1)
+    val n = smallFold(crashMatrix("boiler") { root =>
+      Boilerplate.buildStore(docs(0 until 4), "doc_id", "text", 3,
+        s"$root/store", nBuckets = 1, nDocBuckets = 1).count()
+      ()
+    } { root =>
+      Boilerplate.fold(spark, s"$root/store", s"$root/out", docs(4 until 7),
+        1L, "doc_id", "text", 3, nBuckets = 1, nDocBuckets = 1)
+      ()
+    } { root =>
+      val store = s"$root/store"
+      (Seq("pairs", "counts", "docs", "dict").map(t => rowsOf(s"$store/$t")),
+        rowsOf(s"${store}_meta"), rowsOf(s"$root/out"))
+    })
+    assert(n >= 10)
   }
 
   test("crash matrix: compaction, with a partition over the size split, converges from every crash point") {
@@ -128,7 +226,7 @@ class StoreFilesSpec extends SparkSpec {
     def keys = (0L until 400L).map(i => (i % 2, s"k$i")).toDF("bucket", "wkey")
     crashMatrix("bloom") { root =>
       keys.repartition(2).write.partitionBy("bucket").parquet(s"$root/store")
-      BloomSide.appendDelta(keys, s"$root/store", "bucket", "wkey")
+      BloomSide.stageDelta(keys, s"$root/store/${BloomSide.DirName}", "bucket", "wkey")
     } { root =>
       BloomSide.rebuildFromStore(spark, s"$root/store", "bucket", "wkey")
     } { root =>

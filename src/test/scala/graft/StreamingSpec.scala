@@ -309,13 +309,11 @@ class StreamingSpec extends SparkSpec {
       Files.createDirectories(p.getParent)
       Files.write(p, body.getBytes("UTF-8"))
     }
-    // two promoted artifacts (one with top-level AND k=v files) and
-    // one staged-only artifact
+    // two promoted artifacts, one with top-level AND k=v files
     def commitAt(root: Path) = StagedCommit(
       graft.operators.StoreFiles.fs(spark, root.toString), root.toString, "_m_1", ".st_1",
-      "b1", Seq(Artifact("delta", Some(root.resolve("live").toString)),
-        Artifact("out", Some(root.resolve("out").toString)),
-        Artifact("log", None)))
+      "b1", Seq(Artifact("delta", root.resolve("live").toString),
+        Artifact("out", root.resolve("out").toString)))
     val writers: Map[String, String => Unit] = Map(
       "delta" -> { d =>
         put(Paths.get(d), "part-0.parquet", "d0")
@@ -323,8 +321,7 @@ class StreamingSpec extends SparkSpec {
         put(Paths.get(d), "k=2/part-2.parquet", "d2")
         put(Paths.get(d), "k=2/_SUCCESS", "")
       },
-      "out" -> (d => put(Paths.get(d), "part-0.parquet", "o0")),
-      "log" -> (d => put(Paths.get(d), "part-0.parquet", "l0")))
+      "out" -> (d => put(Paths.get(d), "part-0.parquet", "o0")))
     // the live tree (marker included, staging excluded): name -> bytes
     def live(root: Path): Map[String, Seq[Byte]] = {
       val w = Files.walk(root)
@@ -400,16 +397,16 @@ class StreamingSpec extends SparkSpec {
       .select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
     val bn = batch.count()
     // first delivery applies, replay of the SAME batch id is skipped
-    assert(StreamingJobs.appendIvfBatchIdempotent(root, cent, batch, 7L))
+    assert(Similarity.foldIvfIndex(spark, root, batch, 7L, cent, "vec_id", "embedding"))
     assert(spark.read.parquet(root).count() == base + bn)
-    assert(!StreamingJobs.appendIvfBatchIdempotent(root, cent, batch, 7L),
+    assert(!Similarity.foldIvfIndex(spark, root, batch, 7L, cent, "vec_id", "embedding"),
       "replayed batch must be skipped")
     assert(spark.read.parquet(root).count() == base + bn,
       "replay must not double-append")
     // a NEW batch id still applies
     val batch2 = emb.filter($"vec_id" % 10 === 5)
       .select(($"vec_id" + 2000000L).as("vec_id"), $"embedding")
-    assert(StreamingJobs.appendIvfBatchIdempotent(root, cent, batch2, 8L))
+    assert(Similarity.foldIvfIndex(spark, root, batch2, 8L, cent, "vec_id", "embedding"))
     assert(spark.read.parquet(root).count() == base + bn + batch2.count())
 
     // crash window (c): staging committed AND promoted, but the crash
@@ -422,14 +419,14 @@ class StreamingSpec extends SparkSpec {
     val batch3 = emb.filter($"vec_id" % 10 === 7)
       .select(($"vec_id" + 3000000L).as("vec_id"), $"embedding")
     val b3n = batch3.count()
-    val commit9 = StreamingJobs.ivfCommit(spark, root, 9L)
-    commit9.stage(StreamingJobs.ivfWriters(cent, batch3))
+    val commit9 = Similarity.ivfCommit(spark, root, 9L)
+    commit9.stage(Similarity.ivfWriters(batch3, cent, "vec_id", "embedding"))
     commit9.promote()
     assert(Files.exists(
       java.nio.file.Paths.get(s"$root/.staging_batch_9", "_SUCCESS")))
     assert(spark.read.parquet(root).count() == preCrash + b3n,
       "the crashed attempt had already applied the batch")
-    assert(StreamingJobs.appendIvfBatchIdempotent(root, cent, batch3, 9L))
+    assert(Similarity.foldIvfIndex(spark, root, batch3, 9L, cent, "vec_id", "embedding"))
     assert(spark.read.parquet(root).count() == preCrash + b3n,
       "replay over the crashed apply must not duplicate rows")
     assert(Files.exists(java.nio.file.Paths.get(root, "_batch_9")))
@@ -443,7 +440,7 @@ class StreamingSpec extends SparkSpec {
     Files.write(staleDir.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
     val batch4 = emb.filter($"vec_id" % 10 === 3)
       .select(($"vec_id" + 4000000L).as("vec_id"), $"embedding")
-    assert(StreamingJobs.appendIvfBatchIdempotent(root, cent, batch4, 10L))
+    assert(Similarity.foldIvfIndex(spark, root, batch4, 10L, cent, "vec_id", "embedding"))
     assert(spark.read.parquet(root).count() == preCrash + b3n + batch4.count())
   }
 
@@ -471,12 +468,12 @@ class StreamingSpec extends SparkSpec {
 
     // batch 0 applies once; replay of the same id is a no-op everywhere
     val b0 = mkDocs(10L until 20L)
-    assert(StreamingJobs.foldSubstrBatchIdempotent(
-      spark, store, out, b0, 0L, 8, 8, hashKeys = true))
+    assert(DedupSuite.exactSubstrFold(
+      spark, store, out, b0, 0L, "doc_id", "text", 8, 8, hashKeys = true))
     val (sr0, or0, mr0) = (storeRows, outRows, metaRows)
     assert(or0 == 20 && mr0 == 2)
-    assert(!StreamingJobs.foldSubstrBatchIdempotent(
-      spark, store, out, b0, 0L, 8, 8, hashKeys = true),
+    assert(!DedupSuite.exactSubstrFold(
+      spark, store, out, b0, 0L, "doc_id", "text", 8, 8, hashKeys = true),
       "replayed batch must be skipped")
     assert((storeRows, outRows, metaRows) == ((sr0, or0, mr0)),
       "replay must not double-append store, output, or meta")
@@ -487,14 +484,14 @@ class StreamingSpec extends SparkSpec {
     // file names, write the marker, and sweep
     val b1 = mkDocs(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".substr_staging_1")
-    val commit1 = StreamingJobs.substrCommit(spark, store, out, 1L)
-    commit1.stage(StreamingJobs.substrWriters(spark, store, b1, 8, 8,
+    val commit1 = DedupSuite.substrCommit(spark, store, out, 1L)
+    commit1.stage(DedupSuite.substrWriters(spark, store, b1, "doc_id", "text", 8, 8,
       hashKeys = true))
     commit1.promote()
     assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (sr1, or1, mr1) = (storeRows, outRows, metaRows)
-    assert(StreamingJobs.foldSubstrBatchIdempotent(
-      spark, store, out, b1, 1L, 8, 8, hashKeys = true))
+    assert(DedupSuite.exactSubstrFold(
+      spark, store, out, b1, 1L, "doc_id", "text", 8, 8, hashKeys = true))
     assert((storeRows, outRows, metaRows) == ((sr1, or1, mr1)),
       "replay over the crashed promote must not duplicate rows")
     assert(Files.exists(java.nio.file.Paths.get(store, "_substr_batch_1")))
@@ -505,8 +502,8 @@ class StreamingSpec extends SparkSpec {
     val staging2 = java.nio.file.Paths.get(store, ".substr_staging_2")
     Files.createDirectories(staging2)
     Files.write(staging2.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
-    assert(StreamingJobs.foldSubstrBatchIdempotent(
-      spark, store, out, mkDocs(25L until 30L), 2L, 8, 8, hashKeys = true))
+    assert(DedupSuite.exactSubstrFold(
+      spark, store, out, mkDocs(25L until 30L), 2L, "doc_id", "text", 8, 8, hashKeys = true))
     assert(outRows == 30)
 
     // semantics: the accumulated streamed output equals the one-shot
@@ -546,10 +543,10 @@ class StreamingSpec extends SparkSpec {
 
     // batch 0 applies once; replay of the same id is a no-op everywhere
     val b0 = df.filter($"doc_id" % 3 === 1)
-    assert(StreamingJobs.foldHammingBatchIdempotent(
+    assert(DedupSuite.hammingIndexFold(
       spark, store, out, b0, 0L, "doc_id", "ph", maxHamming = 3))
     val (sr0, or0) = (storeRows, outRows)
-    assert(!StreamingJobs.foldHammingBatchIdempotent(
+    assert(!DedupSuite.hammingIndexFold(
       spark, store, out, b0, 0L, "doc_id", "ph", maxHamming = 3),
       "replayed batch must be skipped")
     assert((storeRows, outRows) == ((sr0, or0)),
@@ -560,13 +557,13 @@ class StreamingSpec extends SparkSpec {
     // deterministic file names
     val b1 = df.filter($"doc_id" % 3 === 2 && $"doc_id" % 2 === 0)
     val staging1 = java.nio.file.Paths.get(store, ".ham_staging_1")
-    val commit1 = StreamingJobs.hammingCommit(spark, store, out, 1L)
-    commit1.stage(StreamingJobs.hammingWriters(spark, store, b1,
+    val commit1 = DedupSuite.hammingCommit(spark, store, out, 1L)
+    commit1.stage(DedupSuite.hammingWriters(spark, store, b1,
       "doc_id", "ph", maxHamming = 3, maxBucket = 1000))
     commit1.promote()
     assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (sr1, or1) = (storeRows, outRows)
-    assert(StreamingJobs.foldHammingBatchIdempotent(
+    assert(DedupSuite.hammingIndexFold(
       spark, store, out, b1, 1L, "doc_id", "ph", maxHamming = 3))
     assert((storeRows, outRows) == ((sr1, or1)),
       "replay over the crashed promote must not duplicate rows")
@@ -579,7 +576,7 @@ class StreamingSpec extends SparkSpec {
     Files.createDirectories(staging2)
     Files.write(staging2.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
     val b2 = df.filter($"doc_id" % 3 === 2 && $"doc_id" % 2 === 1)
-    assert(StreamingJobs.foldHammingBatchIdempotent(
+    assert(DedupSuite.hammingIndexFold(
       spark, store, out, b2, 2L, "doc_id", "ph", maxHamming = 3))
 
     // semantics: accumulated pairs == the full banded run over ALL
@@ -625,24 +622,24 @@ class StreamingSpec extends SparkSpec {
       all.filter($"x" % 3 === 0), col("g"), col("x"), store, cellBits = 6)
     val (b1, b2) = (all.filter($"x" % 3 === 1), all.filter($"x" % 3 =!= 0 && $"x" % 3 =!= 1))
     def storeRows = spark.read.parquet(store).count()
-    assert(StreamingJobs.foldQuantileBatchIdempotent(
-      spark, store, b1, col("g"), col("x"), 0L))
+    assert(Quantiles.foldQuantileStore(
+      spark, store, b1, 0L, col("g"), col("x")))
     val sr0 = storeRows
-    assert(!StreamingJobs.foldQuantileBatchIdempotent(
-      spark, store, b1, col("g"), col("x"), 0L),
+    assert(!Quantiles.foldQuantileStore(
+      spark, store, b1, 0L, col("g"), col("x")),
       "replayed batch must be skipped")
     assert(storeRows == sr0, "replay must not double-count")
     // crash window: staged + promoted, marker missing — replay
     // converges to the same deterministic file names
     val staging = java.nio.file.Paths.get(store, ".qstore_staging_1")
-    val commit1 = StreamingJobs.quantileCommit(spark, store, 1L)
-    commit1.stage(StreamingJobs.quantileWriters(spark, store, b2,
+    val commit1 = Quantiles.quantileCommit(spark, store, 1L)
+    commit1.stage(Quantiles.quantileWriters(spark, store, b2,
       col("g"), col("x")))
     commit1.promote()
     assert(Files.exists(staging.resolve("_SUCCESS")))
     val sr1 = storeRows
-    assert(StreamingJobs.foldQuantileBatchIdempotent(
-      spark, store, b2, col("g"), col("x"), 1L))
+    assert(Quantiles.foldQuantileStore(
+      spark, store, b2, 1L, col("g"), col("x")))
     assert(storeRows == sr1,
       "replay over the crashed promote must not duplicate rows")
     assert(!Files.exists(staging), "staging must be swept after commit")
@@ -688,8 +685,8 @@ class StreamingSpec extends SparkSpec {
 
     // batch 0 applies once; promo crosses → re-emissions carry seq 0
     val b0 = mkDocs(10L until 20L)
-    assert(StreamingJobs.foldBoilerplateBatchIdempotent(
-      spark, store, out, b0, 0L, m, 8, 4))
+    assert(Boilerplate.fold(
+      spark, store, out, b0, 0L, "doc_id", "text", m, 8, 4))
     val (or0, mr0) = (outRows, metaRows)
     assert(or0 == 10 + 10 + 2 && mr0 == 2,
       "batch 0 must emit its 10 docs plus re-emissions of seed docs 1,6")
@@ -698,8 +695,8 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id").collect().map(_.getLong(0)).toSet
     assert(reemitted == Set(1L, 6L),
       "the promo crossing must re-emit exactly its stored carriers")
-    assert(!StreamingJobs.foldBoilerplateBatchIdempotent(
-      spark, store, out, b0, 0L, m, 8, 4), "replayed batch must be skipped")
+    assert(!Boilerplate.fold(
+      spark, store, out, b0, 0L, "doc_id", "text", m, 8, 4), "replayed batch must be skipped")
     assert((outRows, metaRows) == ((or0, mr0)),
       "replay must not double-append output or meta")
 
@@ -708,14 +705,14 @@ class StreamingSpec extends SparkSpec {
     // the half-promoted store
     val b1 = mkDocs(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".boiler_staging_1")
-    val commit1 = StreamingJobs.boilerplateCommit(spark, store, out, 1L)
-    commit1.stage(StreamingJobs.boilerplateWriters(spark, store, b1, 1L,
-      m, 8, 4))
+    val commit1 = Boilerplate.foldCommit(spark, store, out, 1L)
+    commit1.stage(Boilerplate.foldWriters(spark, store, b1, "doc_id",
+      "text", m, 8, 4, seq = 1L))
     commit1.promote()
     assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (or1, mr1) = (outRows, metaRows)
-    assert(StreamingJobs.foldBoilerplateBatchIdempotent(
-      spark, store, out, b1, 1L, m, 8, 4))
+    assert(Boilerplate.fold(
+      spark, store, out, b1, 1L, "doc_id", "text", m, 8, 4))
     assert((outRows, metaRows) == ((or1, mr1)),
       "replay over the crashed promote must not duplicate rows")
     assert(Files.exists(java.nio.file.Paths.get(store, "_boiler_batch_1")))
@@ -733,8 +730,8 @@ class StreamingSpec extends SparkSpec {
     val staging2 = java.nio.file.Paths.get(store, ".boiler_staging_2")
     Files.createDirectories(staging2)
     Files.write(staging2.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
-    assert(StreamingJobs.foldBoilerplateBatchIdempotent(
-      spark, store, out, mkDocs(25L until 30L), 2L, m, 8, 4))
+    assert(Boilerplate.fold(
+      spark, store, out, mkDocs(25L until 30L), 2L, "doc_id", "text", m, 8, 4))
 
     // semantics: latest-seq-per-doc over the accumulated changelog
     // equals the one-shot recompute over the full corpus, bit-for-bit
@@ -767,12 +764,12 @@ class StreamingSpec extends SparkSpec {
     def metaRows = spark.read.parquet(s"${store}_meta").count()
 
     val b0 = mkCounts(10L until 20L)
-    assert(StreamingJobs.foldPackBatchIdempotent(
-      spark, store, out, b0, 0L, 64, 7))
+    assert(Pack.foldSpans(
+      spark, store, out, b0, 0L, "doc_id", $"n", 64, 7))
     val (or0, mr0) = (outRows, metaRows)
     assert(mr0 == 2)
-    assert(!StreamingJobs.foldPackBatchIdempotent(
-      spark, store, out, b0, 0L, 64, 7), "replayed batch must be skipped")
+    assert(!Pack.foldSpans(
+      spark, store, out, b0, 0L, "doc_id", $"n", 64, 7), "replayed batch must be skipped")
     assert((outRows, metaRows) == ((or0, mr0)),
       "replay must not double-append output or meta")
 
@@ -781,13 +778,13 @@ class StreamingSpec extends SparkSpec {
     // promoted meta would shift the stream and fail the guard)
     val b1 = mkCounts(20L until 25L)
     val staging1 = java.nio.file.Paths.get(store, ".pack_staging_1")
-    val commit1 = StreamingJobs.packCommit(spark, store, out, 1L)
-    commit1.stage(StreamingJobs.packWriters(spark, store, b1, 64, 7))
+    val commit1 = Pack.packCommit(spark, store, out, 1L)
+    commit1.stage(Pack.packWriters(spark, store, b1, "doc_id", $"n", 64, 7))
     commit1.promote()
     assert(Files.exists(staging1.resolve("_SUCCESS")))
     val (or1, mr1) = (outRows, metaRows)
-    assert(StreamingJobs.foldPackBatchIdempotent(
-      spark, store, out, b1, 1L, 64, 7))
+    assert(Pack.foldSpans(
+      spark, store, out, b1, 1L, "doc_id", $"n", 64, 7))
     assert((outRows, metaRows) == ((or1, mr1)),
       "replay over the crashed promote must not duplicate rows")
     assert(!Files.exists(staging1), "staging must be swept after commit")
@@ -796,8 +793,8 @@ class StreamingSpec extends SparkSpec {
     val staging2 = java.nio.file.Paths.get(store, ".pack_staging_2")
     Files.createDirectories(staging2)
     Files.write(staging2.resolve("garbage.parquet"), Array[Byte](1, 2, 3))
-    assert(StreamingJobs.foldPackBatchIdempotent(
-      spark, store, out, mkCounts(25L until 30L), 2L, 64, 7))
+    assert(Pack.foldSpans(
+      spark, store, out, mkCounts(25L until 30L), 2L, "doc_id", $"n", 64, 7))
 
     // accumulated segments == one-shot recompute, bit-for-bit
     val got = spark.read.parquet(out)
